@@ -405,10 +405,7 @@ object GraftSession {
     * a plan never leaks into a different session's analyzer.
     */
   def readTable(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // the spread decision is part of the cached plan, so it is part of
-    // the key — a runtime conf flip must not serve the other mode's plan
-    val key = (System.identityHashCode(spark), dir, name,
-      spark.conf.get(ReadSpreadKey, "false"))
+    val key = (System.identityHashCode(spark), dir, name)
     val cached = tableCache.get(key)
     // identity re-check guards the (astronomically unlikely) hash collision
     if (cached != null && (cached._1 eq spark)) cached._2
@@ -418,78 +415,61 @@ object GraftSession {
       // heap. A wholesale clear past the cap is fine — rebuilding is one
       // footer re-read.
       if (tableCache.size >= 256) tableCache.clear()
-      val df = maybeSpread(spark, readTableUncached(spark, dir, name))
+      val df = readTableUncached(spark, dir, name)
       tableCache.put(key, (spark, df))
       df
     }
   }
 
-  /** Conf key: `true` enables [[maybeSpread]]'s read-level
-    * scan-parallelism floor. OFF by default since round 16: a
-    * table-level spread cannot see the consuming query's shape, and the
-    * r16 interleaved A/B showed it taxing every shuffle-heavy consumer
-    * of the same table 1.45–2.9× (x_perplexity 2.03×, x_mkn_nll 2.04×,
-    * x_ivf_append 2.05×, x_novelty 2.85× faster with it off) while the
-    * map-only kernels it was built for are now spread INSIDE the
-    * operators that need it ([[spreadKernelInput]]) — the right
-    * altitude for the decision, and one the sf0.001 oracle gate
-    * actually exercises.
+  /** Scan-parallelism floor for expensive per-row operators (guide §2.5
+    * input skew — "one huge unsplittable file... repartition immediately
+    * after the read"): a table written as one parquet row group cannot
+    * split below the row-group boundary, so a map-only kernel over it
+    * serializes on ONE task regardless of cores. When `df`'s physical
+    * plan is exchange-free and its leaf scans yield fewer partitions than
+    * `defaultParallelism`, returns `df.repartition(par, keys: _*)`
+    * (round-robin without keys); otherwise `df` unchanged.
+    *
+    * Decided from the plan, never by running it: under AQE any plan that
+    * needs a shuffle or a subquery is wrapped in AdaptiveSparkPlanExec,
+    * and asking it for `rdd` partitions would execute every upstream
+    * stage at construction time. Such inputs keep the partitioning AQE
+    * gives them. Leaf split counts come from the scans' input RDDs
+    * (file listing, checkpoint or local rows — no job); a leaf that
+    * cannot report one (a cached relation) leaves the input untouched.
+    * At real scale scans arrive with ≫ cores partitions and the branch
+    * is self-disabling.
     */
-  val ReadSpreadKey = "spark.graft.read.spread"
-
-  /** Conf key: `false` disables [[spreadKernelInput]]'s operator-level
-    * scan-parallelism floor (A/B lever).
-    */
-  val KernelSpreadKey = "spark.graft.kernel.spread"
-
-  /** Scan-parallelism floor for expensive per-row KERNEL operators
-    * (guide §2.5 input skew — "one huge unsplittable file... repartition
-    * immediately after the read"): a fixture table written as one
-    * parquet row group cannot split below the row-group boundary, so a
-    * map-only operator over it (fastText scoring, readability regex
-    * census, the mojibake replace-chain, stopword-profile langid, the
-    * gopher token census) serializes on ONE task regardless of cores —
-    * measured 2–3× per query at sf0.1 (x_fasttext 0.37×, x_readability
-    * 0.33× with the spread). Called by those operators on their own
-    * input, where the cost shape is KNOWN to be per-row compute — not
-    * at the table read, where a blanket spread taxed every
-    * shuffle-dominated consumer of the same table (see [[ReadSpreadKey]]).
-    * No size window: the trigger is purely scan partitions < cores, so
-    * the sf0.001 oracle gate exercises the spread plan, and at real
-    * scale scans arrive with ≫ cores partitions and the branch is
-    * self-disabling — the knnJoinBlocked spread contract.
-    */
-  private[graft] def spreadKernelInput(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    if (!spark.conf.get(KernelSpreadKey, "true").toBoolean) df
-    else {
-      val par = spark.sparkContext.defaultParallelism
-      if (df.rdd.getNumPartitions < par) df.repartition(par) else df
+  private[graft] def spreadScan(df: DataFrame, keys: Column*): DataFrame = {
+    import org.apache.spark.sql.execution.{CodegenSupport, FileSourceScanExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanExecBase
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val plan = df.queryExecution.executedPlan
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    val exchangeFree = !plan.exists {
+      case _: Exchange | _: AdaptiveSparkPlanExec => true
+      case p => p.subqueries.nonEmpty
     }
+    val splits = if (!exchangeFree) Nil else plan.collectLeaves().map {
+      case s: FileSourceScanExec => Some(s.inputRDD.getNumPartitions)
+      case s: DataSourceV2ScanExecBase => Some(s.inputRDD.getNumPartitions)
+      case s: CodegenSupport => Some(s.inputRDDs().map(_.getNumPartitions).sum)
+      case _ => None
+    }
+    val leafParts = Option.when(exchangeFree && splits.forall(_.isDefined))(
+      splits.flatten.sum)
+    val fire = leafParts.exists(_ < par)
+    if (log.isDebugEnabled)
+      log.debug(s"spreadScan fired=$fire exchangeFree=$exchangeFree " +
+        s"leafPartitions=${leafParts.getOrElse("unknown")} par=$par " +
+        s"keys=${keys.mkString(",")}")
+    if (!fire) df
+    else if (keys.isEmpty) df.repartition(par)
+    else df.repartition(par, keys: _*)
   }
 
-  /** Read-level scan-parallelism floor, opt-in via [[ReadSpreadKey]]
-    * (default off — see there; the operator-level
-    * [[spreadKernelInput]] replaced it as the default mechanism).
-    * The size window bounds the spread to tables worth spreading when
-    * a deployment opts in: below minBytes the extra stage is pure tax
-    * on dimension-table joins, above maxBytes consumers tend to be
-    * shuffle-dominated.
-    */
-  private def maybeSpread(spark: SparkSession, df: DataFrame): DataFrame = {
-    if (!spark.conf.get(ReadSpreadKey, "false").toBoolean) df
-    else {
-      val par = spark.sparkContext.defaultParallelism
-      val minB = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.graft.read.spread.minBytes", "64k"))
-      val maxB = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.graft.read.spread.maxBytes", "1500k"))
-      lazy val sz = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (df.rdd.getNumPartitions < par &&
-          sz >= minB && sz <= maxB) df.repartition(par)
-      else df
-    }
-  }
+  private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.GraftSession")
 
   /** Drop all cached table plans — needed if files under a cached dir are
     * rewritten mid-session (the cached plan pins its file listing).
@@ -497,7 +477,7 @@ object GraftSession {
   def clearTableCache(): Unit = tableCache.clear()
 
   private val tableCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String, String, String),
+    new java.util.concurrent.ConcurrentHashMap[(Int, String, String),
       (SparkSession, DataFrame)]()
 
   private def readTableUncached(spark: SparkSession, dir: String, name: String): DataFrame =

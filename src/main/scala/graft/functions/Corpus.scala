@@ -1646,7 +1646,7 @@ object Corpus {
       .otherwise(round((nHash + nEllipsis).cast("double") / n.cast("double"), 9))
     val alphaFrac = when(n === 0, lit(0.0))
       .otherwise(round(nAlpha.cast("double") / n.cast("double"), 9))
-    graft.GraftSession.spreadKernelInput(df)
+    graft.GraftSession.spreadScan(df)
       .select(col(idCol) +: carryCols.map(col) :+
         n.as("n_words") :+ meanLen.as("mean_word_len") :+
         symRatio.as("symbol_ratio") :+ alphaFrac.as("alpha_frac") :+
@@ -4252,7 +4252,7 @@ object Corpus {
         lit(dim)) + 1)
     val sumDec = aggregate(feats, lit(BigDecimal(0)).cast(dec),
       (acc, f) => (acc + wOf(f).cast(dec)).cast(dec))
-    graft.GraftSession.spreadKernelInput(df)
+    graft.GraftSession.spreadScan(df)
       .select(col(idCol), size(feats).as("__n"), sumDec.as("__s"))
       .select(col(idCol), col("__n"),
         when(col("__n") > 0,
@@ -4357,7 +4357,7 @@ object Corpus {
     val (three, two) = mojibakePairs.partition(_._1.length == 3)
     def chain(c: Column, pairs: Seq[(String, String)]): Column =
       pairs.foldLeft(c) { case (e, (a, r)) => replace(e, lit(a), lit(r)) }
-    graft.GraftSession.spreadKernelInput(df)
+    graft.GraftSession.spreadScan(df)
       .select(col(idCol), coalesce(col(textCol), lit("")).as("__t0"))
       .withColumn("__t3", chain(col("__t0"), three))
       .withColumn("__t2", chain(col("__t3"), two))
@@ -4827,7 +4827,7 @@ object Corpus {
       lit("[^\\s]*[aeiouy][^\\s]*"), lit(0)))
     val y = runs + (w - vowelToks)
     def d(c: Column) = c.cast("double")
-    graft.GraftSession.spreadKernelInput(df).select(col(idCol),
+    graft.GraftSession.spreadScan(df).select(col(idCol),
       w.cast("long").as("n_words"),
       when(w === 0, lit(0L)).otherwise(s.cast("long")).as("n_sentences"),
       y.cast("long").as("n_syllables"),

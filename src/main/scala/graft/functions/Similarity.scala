@@ -614,7 +614,6 @@ object Similarity {
       nCentroids, kmeansIters)
     val nC = cents.length
     val np = math.min(nProbe, nC)
-    val defaultPar = spark.sparkContext.defaultParallelism
     val cBase = assignedC.select(col(cIdCol).cast("long").as("__cid"),
       col(cVecCol).as("__cv"), col("ivf_bucket").as("__b"))
     // Spread BOTH join inputs when their planned parallelism is below the
@@ -625,9 +624,7 @@ object Similarity {
     // robin spreading either side is value-neutral (candidate top-k' is
     // by value); at real scale both scans have ≫ cores partitions and
     // neither branch fires.
-    val c =
-      if (cBase.rdd.getNumPartitions < defaultPar) cBase.repartition(defaultPar)
-      else cBase
+    val c = graft.GraftSession.spreadScan(cBase)
     // per-query top-np probe buckets: nC native dots + one nC-length
     // struct sort per row, all inside codegen — corpus-size independent
     def centF(i: Int): Column = array(cents(i).map(v => lit(v.toFloat)): _*)
@@ -644,10 +641,7 @@ object Similarity {
     // query's scored pairs then co-locate, so the partial top-k' heap
     // reduces to k' rows per query total (not per input partition) and
     // the candidate window's exchange is already satisfied
-    val qSpread =
-      if (qBase.rdd.getNumPartitions < defaultPar)
-        qBase.repartition(defaultPar, col("__qid"))
-      else qBase
+    val qSpread = graft.GraftSession.spreadScan(qBase, col("__qid"))
     // Pruning score with per-VECTOR squared norms hoisted into each
     // side's projection: the per-pair work is ONE native dot, not three
     // (the two norms are per corpus/query row). Identical doubles —

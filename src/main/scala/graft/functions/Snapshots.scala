@@ -46,21 +46,12 @@ object Snapshots {
     * outlives the second job. Measured at sf0.1: x_pagerank's edge+setup
     * snapshots compute once instead of twice (see OPTIMIZATION_r15.md).
     */
-  /** Session conf key: `false` disables the persist-around-checkpoint
-    * pin (the pre-fix two-compute behavior) — an A/B lever and an
-    * escape hatch for deployments whose snapshots are cheaper to
-    * recompute than to spill.
-    */
-  val PinSnapshotKey = "spark.graft.snapshot.pin"
-
   def snapshot(df: DataFrame): DataFrame =
     if (hasDir(df)) {
-      if (df.sparkSession.conf.get(PinSnapshotKey, "true").toBoolean) {
-        val cached = df.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try cached.checkpoint()
-        finally cached.unpersist(blocking = false)
-      } else df.checkpoint()
+      val cached = df.persist(
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try cached.checkpoint()
+      finally cached.unpersist(blocking = false)
     }
     else if (requireReliable(df))
       throw new IllegalStateException(

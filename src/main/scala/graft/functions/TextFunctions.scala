@@ -132,7 +132,7 @@ object TextFunctions {
     }
     // foldRight keeps the FIRST profile-order winner: later whens wrap
     // earlier ones as the otherwise branch, so en beats de on a tie
-    graft.GraftSession.spreadKernelInput(df)
+    graft.GraftSession.spreadScan(df)
       .select(col(idCol), lang.as("lang"),
         when(top > 0L, top).otherwise(0L).as("n_hits"),
         when(top > 0L, top - second).otherwise(0L).as("margin"))

@@ -10,11 +10,15 @@ package graft.tools
   */
 object AB {
   def main(args: Array[String]): Unit = {
-    val Array(dir, key, valA, valB, repsS, qcsv) = args.take(6)
-    val reps = repsS.toInt
+    val usage = "AB <sfDir> <confKey> <valA> <valB> <reps> <query>[,query...]"
+    val (dir, key, valA, valB, reps, qcsv) = args match {
+      case Array(d, k, a, b, r, q) if r.toIntOption.exists(_ > 0) =>
+        (d, k, a, b, r.toInt, q)
+      case _ => DevArgs.usage(usage)
+    }
     val names = qcsv.split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
+    val cpus = DevArgs.cpus(usage)
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     graft.GraftSession.registerFunctions(spark)

@@ -10,11 +10,15 @@ package graft.tools
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val Array(outDir, suffix, qcsv) = args.take(3)
+    val usage = "PlanDump <outDir> <suffix> <query>[,query...]"
+    val (outDir, suffix, qcsv) = args match {
+      case Array(o, s, q) => (o, s, q)
+      case _ => DevArgs.usage(usage)
+    }
     val names = qcsv.split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = DevArgs.cpus(usage)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus)
       .config("spark.ui.enabled", "false").getOrCreate()
     graft.GraftSession.registerFunctions(spark)
     graft.GraftSession.registerOptimizations(spark)

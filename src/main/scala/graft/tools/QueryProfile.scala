@@ -13,11 +13,15 @@ import org.apache.spark.scheduler._
   */
 object QueryProfile {
   def main(args: Array[String]): Unit = {
-    val dir = args(0)
-    val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
-    val reps = args.drop(2).headOption.map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
+    val usage = "QueryProfile <sfDir> <queryName>[,query2,...] [reps=3]"
+    val (dir, qcsv, reps) = args match {
+      case Array(d, q) => (d, q, 3)
+      case Array(d, q, r) if r.toIntOption.exists(_ > 0) => (d, q, r.toInt)
+      case _ => DevArgs.usage(usage)
+    }
+    val names = qcsv.split(",").map(_.trim).filter(_.nonEmpty)
+    val cpus = DevArgs.cpus(usage)
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     graft.GraftSession.registerFunctions(spark)

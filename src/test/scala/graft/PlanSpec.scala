@@ -393,6 +393,22 @@ class PlanSpec extends SparkSpec {
       s"candidate top-k' not a partial+final WindowGroupLimit:\n$p")
   }
 
+  // The per-row kernels spread their exchange-free, single-split scan
+  // input with exactly one round-robin exchange (GraftSession.spreadScan,
+  // decided from the plan); the blocked kNN spreads its query side by
+  // __qid so each query's scored pairs co-locate.
+  test("spread callers: one round-robin kernel spread, __qid-hash kNN spread") {
+    Seq("x_fasttext", "x_readability", "x_gopher_gate", "x_mojibake",
+        "x_langid_scored").foreach { q =>
+      val p = plan(q)
+      assert(p.linesIterator.count(_.contains("Exchange RoundRobinPartitioning")) == 1,
+        s"$q: expected exactly one round-robin spread:\n$p")
+    }
+    val knn = plan("x_knn_blocked")
+    assert("Exchange hashpartitioning\\(__qid#\\d+L?, \\d+\\), REPARTITION_BY_NUM".r
+      .findFirstIn(knn).nonEmpty, s"blocked kNN lost its __qid spread:\n$knn")
+  }
+
   test("x_ivf_probe: DPP prunes the cluster-partitioned postings, query side broadcasts") {
     val p = plan("x_ivf_probe")
     // the persisted-index claim made executable: probing a cluster-

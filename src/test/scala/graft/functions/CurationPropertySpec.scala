@@ -2,6 +2,7 @@ package graft.functions
 
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -814,5 +815,93 @@ class CurationPropertySpec extends SparkSpec {
       assert(got(i.toLong) == refExtract(h, 30, 10),
         s"doc $i: ${h.take(200)}")
     }
+  }
+
+  // --- spread callers: same answer however the input arrives ------------
+  // The per-row kernels and knnJoinBlocked spread an exchange-free input
+  // with fewer partitions than cores (GraftSession.spreadScan); shuffled
+  // inputs keep AQE's partitioning. Neither choice may change a value,
+  // and neither may run a job while the operator is being built. Every
+  // fifth document's text is null, so the null path rides along.
+  private lazy val docs = spark.read.parquet(s"${sf()}/documents.parquet")
+    .select(col("doc_id"),
+      when(col("doc_id") % 5 =!= 0, col("text")).as("text"), col("lang"))
+  private lazy val embs = spark.read.parquet(s"${sf()}/embeddings.parquet")
+
+  private def knn(queries: DataFrame, corpus: DataFrame): DataFrame =
+    Similarity.knnJoinBlocked(queries.where(col("vec_id") % 10 === 0), corpus,
+      "vec_id", "embedding", "vec_id", "embedding",
+      k = 5, nCentroids = 16, nProbe = 4, margin = 10, saltBuckets = 2)
+
+  // each kernel applies the input shape to its own inputs
+  private val spreadCallers: Seq[(String, (DataFrame => DataFrame) => DataFrame)] = Seq(
+    "gopherGate" -> (f => Corpus.gopherGate(f(docs), "doc_id", "text")),
+    "fastTextScore" -> (f => Corpus.fastTextScore(f(docs), "doc_id", "text",
+      (0 until 32).map(b => (((b * 37) % 13) - 6) / 8.0))),
+    "mojibakeRepair" -> (f => Corpus.mojibakeRepair(f(docs), "doc_id", "text")),
+    "readabilityCensus" -> (f => Corpus.readabilityCensus(f(docs), "doc_id", "text")),
+    "langIdScored" -> (f => TextFunctions.langIdScored(f(docs), "doc_id", "text")),
+    "knnJoinBlocked" -> (f => knn(f(embs), f(embs))))
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("spread callers: identical rows over 1 / 7 partitions, a joined+aggregated upstream, empty") {
+    // joined + aggregated on the row key keeps every row exactly once
+    def upstream(df: DataFrame): DataFrame = {
+      val key = df.columns.head
+      df.join(df.groupBy(key).agg(count(lit(1)).as("__n")), key).drop("__n")
+        .select(df.columns.map(col): _*)
+    }
+    spreadCallers.foreach { case (name, run) =>
+      val base = rows(run(identity))
+      assert(base.nonEmpty, name)
+      Seq[(String, DataFrame => DataFrame)](
+        "repartition(1)" -> (_.repartition(1)),
+        "repartition(7)" -> (_.repartition(7)),
+        "joined+aggregated" -> upstream
+      ).foreach { case (shape, f) =>
+        assert(rows(run(f)) == base, s"$name over $shape")
+      }
+    }
+    // empty input, empty answer (knnJoinBlocked: no queries over the
+    // full corpus — an empty corpus has no centroids to sample)
+    spreadCallers.init.foreach { case (name, run) =>
+      assert(run(_.where(lit(false))).isEmpty, s"$name over an empty frame")
+    }
+    assert(knn(embs.where(lit(false)), embs).isEmpty)
+  }
+
+  test("spread callers: building over a shuffled input runs no job") {
+    def jobsDuring(build: => Any): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        build
+        // job-start events reach listeners asynchronously
+        Thread.sleep(1000)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      jobs.get
+    }
+    // documents ⋈ documents.groupBy(lang): an AQE-wrapped input
+    def shuffled(df: DataFrame): DataFrame = {
+      val key = df.columns.last
+      df.join(df.groupBy(key).count(), key).drop("count")
+    }
+    docs.schema; embs.schema // file listing and footers belong to the read
+    spreadCallers.init.foreach { case (name, run) =>
+      assert(jobsDuring(run(shuffled)) == 0, s"$name ran jobs while being built")
+    }
+    // knnJoinBlocked samples its centroids with one action by design
+    // (ivfAssign); the spread decisions must add no job to it
+    val corpus = shuffled(embs)
+    val sample = jobsDuring(Similarity.ivfAssign(
+      corpus.select(col("vec_id"), col("embedding")), "vec_id", "embedding", 16))
+    assert(jobsDuring(knn(corpus, corpus)) == sample)
   }
 }
