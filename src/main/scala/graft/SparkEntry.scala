@@ -1,269 +1,38 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.{Corpus, Dedup, Similarity, TextFunctions => TF}
+import graft.board._
 
 /** Driver contract — the operator inventory of SURVEY.md §2 (names with
   * t- and a- prefixes), the relational parity-plus surface (r-), and the
-  * training-data-pipeline extensions (x-), each as a
-  * (SparkSession, sfDir) => DataFrame with a DuckDB oracle in [[oracleSql]].
-  *
-  * Oracle-reproducibility rules used throughout:
-  *  - Aggregate sums of doubles accumulate in DECIMAL then cast to double —
-  *    float addition is order-sensitive, decimal addition is not, so
-  *    Spark's shuffle order vs DuckDB's scan order cannot flip bits.
-  *  - Every query output carries a deterministic total ORDER BY on a
-  *    unique key, mirrored in the oracle SQL.
-  *  - Explicit casts keep result schemas identical (e.g. Spark `size()`
-  *    is INT while DuckDB `len()` is BIGINT).
+  * training-data-pipeline extensions (x-), each a [[BoardQuery]] declared
+  * in its family's file under `graft.board`.
   */
 object SparkEntry {
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    GraftSession.readTable(spark, dir, name)
-
-  /** Scratch dir for the index/stat append rituals (x_tfidf_append,
-    * x_ivf_probe, x_ivf_append, x_moments_append): the persisted
-    * artifact must outlive the query's LAZY plan (the returned
-    * DataFrame reads it at action time), so deletion can't be eager —
-    * one JVM shutdown hook recursively removes every scratch root, so
-    * repeated bench passes don't accrete parquet artifacts in /tmp.
-    */
-  private val scratchRoots =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      scratchRoots.forEach { root =>
-        try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(root).iterator().asScala.toSeq
-            .sortBy(-_.getNameCount)
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        } catch { case _: java.io.IOException => () } // exit-path: best effort
-      }))
-  }
-  private def scratchDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    scratchRoots.add(p)
-    p.toString
+  /** Name → record; a name declared twice is an error naming it. */
+  private[graft] def index(records: Seq[BoardQuery]): Map[String, BoardQuery] = {
+    val dups = records.groupBy(_.name).collect { case (n, rs) if rs.size > 1 => n }
+    if (dups.nonEmpty)
+      throw new IllegalArgumentException(
+        s"board query declared more than once: ${dups.toSeq.sorted.mkString(", ")}")
+    records.map(r => r.name -> r).toMap
   }
 
-  /** Exact sum of a double column: decimal accumulation, double result. */
-  private def dsum(c: Column, scale: Int = 4): Column =
-    sum(c.cast(DecimalType(28, scale))).cast("double")
+  /** Every board query, family by family. */
+  private[graft] lazy val records: Seq[BoardQuery] =
+    CoreQueries.queries ++ RelationalQueries.queries ++ CurationQueries.queries ++
+      LanguageQueries.queries ++ DedupQueries.queries ++ GraphQueries.queries ++
+      StatsQueries.queries ++ EventsQueries.queries ++ PhysicalQueries.queries
 
-  /** UTF-8 bytes mis-decoded as windows-1252 — plants deterministic
-    * mojibake for x_mojibake (clean originals in source, artifacts
-    * derived, never hand-typed). Uses the WHATWG table, NOT the JDK
-    * charset (whose decoder U+FFFDs the five undefined bytes). */
-  private def moji(s: String): String =
-    Corpus.decodeAsCp1252(s.getBytes("UTF-8"))
-  private val mojiS1 = moji(" Café — naïve ½")
-  private val mojiS2 = moji(" “quoted” cost €99 ™")
+  private[graft] lazy val board: Map[String, BoardQuery] = index(records)
 
-  /** The [[Corpus.mojibakePairs]] replace chain as DuckDB SQL — the
-    * oracle is generated from the SAME table the engine folds, so the
-    * two sides cannot drift. Artifacts/targets never contain ASCII
-    * quotes (all chars ≥ U+0080), so no literal escaping is needed. */
-  private def mojiSqlChain(e: String, pairs: Seq[(String, String)]): String =
-    pairs.foldLeft(e) { case (x, (a, r)) => s"replace($x, '$a', '$r')" }
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    board.map { case (n, q) => n -> q.run }
 
-  /** DuckDB mirror of Corpus.pctNormalize (RFC 3986 §6.2.2): split on
-    * '%', per tail part uppercase-or-decode the hex triplet, rejoin.
-    * `e` must be a bare column name (it is spliced several times). */
-  private def pctNormSql(e: String): String = {
-    val h1 = s"(strpos('0123456789abcdef', lower(substring(p, 1, 1))) - 1)"
-    val h2 = s"(strpos('0123456789abcdef', lower(substring(p, 2, 1))) - 1)"
-    val v = s"($h1 * 16 + $h2)"
-    s"""str_split($e, '%')[1] || COALESCE(array_to_string(
-       |  list_transform(str_split($e, '%')[2:], p ->
-       |   CASE WHEN length(p) >= 2 AND $h1 >= 0 AND $h2 >= 0
-       |    THEN CASE WHEN ($v BETWEEN 48 AND 57) OR ($v BETWEEN 65 AND 90)
-       |           OR ($v BETWEEN 97 AND 122) OR $v IN (45, 46, 95, 126)
-       |      THEN chr(CAST($v AS INTEGER)) || substring(p, 3)
-       |      ELSE '%' || upper(substring(p, 1, 2)) || substring(p, 3) END
-       |    ELSE '%' || p END), ''), '')""".stripMargin
-  }
-
-  /** Driver-gate convention (round-10 verdict): NO int128-class type —
-    * Spark DECIMAL(38,*) or DuckDB HUGEINT — may appear in an oracled
-    * output; the gate's hasher can't canonicalize int128 values and
-    * reads value-equal results as mismatched. Library functions keep
-    * their overflow-safe DECIMAL(38,0) API; the oracled query narrows
-    * at the edge with this guard: a non-null value outside int64 range
-    * raises in-plan (visible) instead of the non-ANSI cast's silent
-    * null. Every oracle mirrors with CAST(... AS BIGINT).
-    */
-  private def big(c: Column, name: String): Column =
-    when(c.isNotNull && c.cast("long").isNull,
-      raise_error(concat(lit(s"int64 overflow narrowing '$name': "),
-        c.cast("string"))).cast("long"))
-      .otherwise(c.cast("long")).as(name)
-
-  /** Deterministic per-doc URL for the x_url_canon / x_domain_stats
-    * fixtures: five shapes exercising every canonicalization rule
-    * (mirrored verbatim in both oracles).
-    */
-  private def plantedUrl: Column = expr(
-    """CASE CAST(doc_id % 5 AS INT)
-      | WHEN 0 THEN 'HTTP://WWW.Example.COM:80/Path/Page?utm_source=x&b=2&a=1#frag'
-      | WHEN 1 THEN concat('https://news.example.co.uk/a/', doc_id,
-      |   '?id=', doc_id, '&utm_campaign=z')
-      | WHEN 2 THEN concat('https://cdn.static.example.org:8080/lib.js?v=',
-      |   doc_id % 7, '&utm_medium=y&fbclid=f')
-      | WHEN 3 THEN 'http://example.net'
-      | ELSE concat('https://Sub.Domain.Example.com/x%20y/', lang,
-      |   '?gclid=abc')
-      |END""".stripMargin)
-
-  /** Four planted robots-body shapes for x_crawl_delay (chr(10)
-    * newlines — the one spelling both engines agree on): exact-beats-
-    * star, star-only with max-merge + malformed, exact group WITHOUT
-    * the directive (star must not leak in), negative dropped + UA-run
-    * sharing.
-    */
-  private def plantedRobotsBody: Column = expr(
-    """CASE CAST(doc_id % 4 AS INT)
-      | WHEN 0 THEN concat('User-agent: *', chr(10),
-      |   'Crawl-delay: 10', chr(10),
-      |   'User-agent: graftbot', chr(10),
-      |   'Disallow: /tmp', chr(10),
-      |   'Crawl-delay: 2.5')
-      | WHEN 1 THEN concat('User-agent: *', chr(10),
-      |   'Crawl-delay: 1', chr(10),
-      |   'Crawl-delay: fast', chr(10),
-      |   'Crawl-delay: 4')
-      | WHEN 2 THEN concat('User-agent: graftbot', chr(10),
-      |   'Disallow: /a', chr(10),
-      |   'User-agent: *', chr(10),
-      |   'Crawl-delay: 7')
-      | ELSE concat('User-agent: other', chr(10),
-      |   'User-agent: graftbot', chr(10),
-      |   'Crawl-delay: -3', chr(10),
-      |   'Crawl-delay: 0.5')
-      |END""".stripMargin)
-
-  /** Deterministic per-doc sitemap body for x_sitemap: three shapes
-    * (pretty-printed urlset, sitemapindex, compact urlset with entity
-    * soup and a malformed priority), mirrored verbatim in the oracle.
-    * chr(10), never '\n' — DuckDB string literals don't process
-    * backslash escapes while Spark's do, so a literal newline spelled
-    * '\n' would build DIFFERENT documents on the two engines.
-    */
-  private def plantedSitemap: Column = expr(
-    """CASE CAST(doc_id % 3 AS INT)
-      | WHEN 0 THEN concat(
-      |  '<?xml version="1.0" encoding="UTF-8"?>', chr(10),
-      |  '<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">',
-      |  chr(10), '  <url>', chr(10),
-      |  '    <loc> https://www.example.com/p?id=', doc_id,
-      |  '&amp;ref=home </loc>', chr(10),
-      |  '    <lastmod>2026-0', 1 + doc_id % 9, '-15</lastmod>', chr(10),
-      |  '    <changefreq>Daily</changefreq>', chr(10),
-      |  '    <priority>0.', doc_id % 10, '</priority>', chr(10),
-      |  '  </url>', chr(10),
-      |  '  <url><loc>https://www.example.com/', doc_id, '</loc></url>',
-      |  chr(10), '</urlset>')
-      | WHEN 1 THEN concat(
-      |  '<sitemapindex xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">',
-      |  '<sitemap><loc>https://maps.example.org/s', doc_id % 50,
-      |  '.xml.gz</loc><lastmod>2026-07-0', 1 + doc_id % 9,
-      |  '</lastmod></sitemap>',
-      |  '<sitemap><loc>https://maps.example.org/news.xml</loc></sitemap>',
-      |  '</sitemapindex>')
-      | ELSE concat('<urlset><url><loc>http://h', doc_id % 7,
-      |  '.example.net/a&amp;b&apos;c</loc>',
-      |  '<changefreq>WEEKLY</changefreq>',
-      |  '<priority>high</priority></url></urlset>')
-      |END""".stripMargin)
-
-  /** Deterministic line structure planted over the single-line fixture
-    * text (10-token lines, every 3rd line unpunctuated) — the
-    * x_c4_gate / x_curation_funnel input, mirrored in both oracles.
-    */
-  private def plantedLines: Column = {
-    val toks = when(length(trim(col("text"))) === 0,
-        array().cast("array<string>"))
-      .otherwise(split(trim(col("text")), "\\s+"))
-    val nChunks = ((size(toks) + 9) / 10).cast("int")
-    val lines = when(size(toks) === 0, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(0), nChunks - 1), i =>
-        concat(array_join(slice(toks, i * 10 + 1, lit(10)), " "),
-          when(i % 3 === 2, "").otherwise("."))))
-    array_join(lines, "\n")
-  }
-
-  /** The DuckDB mirror of [[plantedUrl]] + the staged canonicalization
-    * chain (CTEs d, p1..p8), shared by the x_url_canon and
-    * x_domain_stats oracles; `selectCols` carries extra columns through
-    * the `SELECT *` stages. Plain concatenation, not interpolation —
-    * the regexes contain `$` anchors.
-    */
-  private def urlCanonOracleChain(selectCols: String): String =
-    "WITH d AS (SELECT " + selectCols + "\n" +
-      """ CASE CAST(doc_id % 5 AS INT)
-        |  WHEN 0 THEN 'HTTP://WWW.Example.COM:80/Path/Page?utm_source=x&b=2&a=1#frag'
-        |  WHEN 1 THEN 'https://news.example.co.uk/a/' || doc_id ||
-        |    '?id=' || doc_id || '&utm_campaign=z'
-        |  WHEN 2 THEN 'https://cdn.static.example.org:8080/lib.js?v=' ||
-        |    (doc_id % 7) || '&utm_medium=y&fbclid=f'
-        |  WHEN 3 THEN 'http://example.net'
-        |  ELSE 'https://Sub.Domain.Example.com/x%20y/' || lang || '?gclid=abc'
-        | END AS url
-        | FROM documents),
-        |p1 AS (SELECT *, TRIM(url) AS u FROM d),
-        |p2 AS (SELECT *,
-        |  regexp_matches(u, '^[A-Za-z][A-Za-z0-9+.-]*://') AS hs,
-        |  regexp_replace(u, '#.*$', '') AS nf FROM p1),
-        |p3 AS (SELECT *,
-        |  lower(regexp_extract(nf, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-        |  regexp_replace(nf, '^[A-Za-z][A-Za-z0-9+.-]*://', '') AS rest FROM p2),
-        |p4 AS (SELECT *,
-        |  lower(regexp_extract(rest, '^([^/?]+)', 1)) AS hostport,
-        |  regexp_replace(rest, '^[^/?]*', '') AS pathq FROM p3),
-        |p5 AS (SELECT *,
-        |  CASE WHEN scheme = 'http' THEN regexp_replace(hostport, ':80$', '')
-        |       WHEN scheme = 'https' THEN regexp_replace(hostport, ':443$', '')
-        |       ELSE hostport END AS host FROM p4),
-        |p6 AS (SELECT *,
-        |  CASE WHEN regexp_extract(pathq, '^([^?]*)', 1) = '' THEN '/'
-        |       ELSE regexp_extract(pathq, '^([^?]*)', 1) END AS path,
-        |  list_filter(string_split(regexp_extract(pathq, '\?(.*)$', 1), '&'),
-        |    x -> x <> '') AS ap FROM p5),
-        |p7 AS (SELECT *,
-        |  list_sort(list_filter(ap, x -> NOT (
-        |    starts_with(regexp_extract(x, '^([^=]*)', 1), 'utm_')
-        |    OR regexp_extract(x, '^([^=]*)', 1) IN ('gclid','fbclid','msclkid'))))
-        |    AS kp FROM p6),
-        |p8 AS (SELECT *,
-        |  regexp_replace(regexp_replace(host, ':[0-9]+$', ''),
-        |    '^www\.', '') AS bare,
-        |  string_split(regexp_replace(regexp_replace(host, ':[0-9]+$', ''),
-        |    '^www\.', ''), '.') AS lbl FROM p7)
-        |""".stripMargin
-
-  /** One DuckDB fixpoint step of RFC 3986 dot-segment removal — the
-    * SAME six ordered rules as Corpus.dotStep (replace-all where the
-    * engine replaces all, anchored where anchored), spliced around the
-    * argument expression. The x_resolve_links oracle iterates it to
-    * fixpoint in a recursive CTE. Plain concatenation — the patterns
-    * contain `$` anchors.
-    */
-  private def dotStepSql(x: String): String = {
-    // "anything but . or ..", empty included — RE2 has no lookahead,
-    // so the exclusion is spelled as an alternation (mirrors
-    // Corpus.PoppableSeg exactly)
-    val seg = "(?:|[^/.][^/]*|\\.[^/.][^/]*|\\.\\.[^/]+)"
-    "regexp_replace(regexp_replace(regexp_replace(regexp_replace(" +
-      "regexp_replace(regexp_replace(" + x +
-      ", '/\\./', '/', 'g'), '/\\.$', '/'), '^/\\.\\./', '/'), " +
-      "'^/\\.\\.$', '/'), '/" + seg + "/\\.\\./', '/', 'g'), " +
-      "'/" + seg + "/\\.\\.$', '/')"
-  }
+  lazy val oracleSql: Map[String, String] =
+    board.map { case (n, q) => n -> q.oracle }
 
   /** Optional comma-separated query-name subset from SPARK_GRAFT_QUERIES —
     * the shared Bench/Verify local-iteration filter (driver leaves it
@@ -276,10965 +45,4 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("t7_reduce")(spark, "/root/testdata/sf0.001")
-
-  // ---------------------------------------------------------------------
-  // Queries
-  // ---------------------------------------------------------------------
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ----- sif core transforms (SURVEY §2.1) -----
-
-    // T1 Map: per-row computation, expressed declaratively (codegen'd).
-    "t1_map" -> ((s, dir) => {
-      t(s, dir, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-        (col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"),
-        (col("l_extendedprice") * (lit(1.0) - col("l_discount")) * (lit(1.0) + col("l_tax"))).as("charge"))
-        .orderBy("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    }),
-
-    // T2 FlatMap: 1 row → n rows (explode).
-    "t2_flatmap" -> ((s, dir) => {
-      t(s, dir, "part").select(
-        col("p_partkey"), explode(split(col("p_type"), " ")).as("word"))
-        .orderBy("p_partkey", "word")
-    }),
-
-    // T3 Filter: predicate pushed to the parquet scan.
-    "t3_filter" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .where(col("l_quantity") > 45 &&
-          col("l_shipdate") >= lit("2000-01-01").cast("timestamp"))
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-          col("l_quantity"), col("l_shipdate"))
-        .orderBy("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    }),
-
-    // T4 AddColumn: declare a new empty (all-null) typed column.
-    "t4_add_column" -> ((s, dir) => {
-      t(s, dir, "region")
-        .withColumn("note", lit(null).cast("string"))
-        .orderBy("r_regionkey")
-    }),
-
-    // T5 RemoveColumn: physical column pruning (reaches the scan).
-    "t5_remove_column" -> ((s, dir) => {
-      t(s, dir, "customer").drop("c_acctbal", "c_mktsegment")
-        .orderBy("c_custkey")
-    }),
-
-    // T6 RenameColumn.
-    "t6_rename_column" -> ((s, dir) => {
-      t(s, dir, "nation")
-        .withColumnRenamed("n_nationkey", "nation_key")
-        .withColumnRenamed("n_name", "nation_name")
-        .withColumnRenamed("n_regionkey", "region_key")
-        .orderBy("nation_key")
-    }),
-
-    // T7 Reduce: the aggregation primitive (TPC-H Q1 shape). Partial
-    // aggregation (map-side combine) is Catalyst-automatic here.
-    "t7_reduce" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          dsum(col("l_quantity")).as("sum_qty"),
-          dsum(col("l_extendedprice")).as("sum_base_price"),
-          sum((col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast(DecimalType(28, 6))).cast("double").as("sum_disc_price"),
-          count(lit(1)).as("cnt"),
-          (sum(col("l_quantity").cast(DecimalType(28, 4))).cast("double") / count(lit(1))).as("avg_qty"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    // T8 Group: co-locate rows by key (shuffle, no aggregation).
-    "t8_group" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .repartition(col("l_returnflag"))
-        .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"), col("l_partkey"))
-        .orderBy("l_returnflag", "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    }),
-
-    // T9/T10 Repartition: explicit partition-count + key control.
-    "t9_repartition" -> ((s, dir) => {
-      t(s, dir, "events")
-        .repartition(8, col("user_id"))
-        .select(col("user_id"), col("event_id"))
-        .orderBy("user_id", "event_id")
-    }),
-
-    // T11 KeyColumns: compound-key grouping.
-    "t11_key_columns" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    // ----- sif actions / accumulators (SURVEY §2.2) -----
-
-    // A1 Collect(limit): bounded deterministic top-k retrieval.
-    "a1_collect" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(10)
-    }),
-
-    // A3 Counter accumulator.
-    "a3_count" -> ((s, dir) =>
-      t(s, dir, "lineitem").agg(count(lit(1)).as("cnt"))),
-
-    // A4 Adder accumulator (exact sum of a double column).
-    "a4_sum" -> ((s, dir) =>
-      t(s, dir, "lineitem").agg(dsum(col("l_extendedprice")).as("total"))),
-
-    // A5 Compose: several accumulators over one pass.
-    "a5_compose" -> ((s, dir) =>
-      t(s, dir, "lineitem").agg(
-        count(lit(1)).as("cnt"),
-        dsum(col("l_extendedprice")).as("total"),
-        min(col("l_extendedprice")).as("min_price"),
-        max(col("l_extendedprice")).as("max_price"))),
-
-    // ----- relational parity-plus (SURVEY §2.5 gaps, Spark-native) -----
-
-    // Multi-way join with broadcast dimension (nation) + exact agg.
-    "r_join" -> ((s, dir) => {
-      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
-      val l = t(s, dir, "lineitem"); val n = t(s, dir, "nation")
-      l.join(o, l("l_orderkey") === o("o_orderkey"))
-        .join(c, o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(
-          sum((col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast(DecimalType(28, 6))).cast("double").as("revenue"),
-          count(lit(1)).as("cnt"))
-        .orderBy("n_name")
-    }),
-
-    "r_semi_join" -> ((s, dir) => {
-      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
-        .select(col("c_custkey"), col("c_name"))
-        .orderBy("c_custkey")
-    }),
-
-    "r_anti_join" -> ((s, dir) => {
-      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_name"))
-        .orderBy("c_custkey")
-    }),
-
-    "r_outer_join" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val oc = t(s, dir, "orders").groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("cnt"))
-      c.join(oc, c("c_custkey") === oc("o_custkey"), "left")
-        .select(col("c_custkey"), coalesce(col("cnt"), lit(0L)).as("n_orders"))
-        .orderBy("c_custkey")
-    }),
-
-    // Correlated EXISTS subquery — planned as a left-semi join (Catalyst
-    // RewritePredicateSubquery), not a per-row probe.
-    "r_exists" -> ((s, dir) => {
-      t(s, dir, "customer").createOrReplaceTempView("customer")
-      t(s, dir, "orders").createOrReplaceTempView("orders")
-      s.sql(
-        """SELECT c.c_custkey, c.c_name FROM customer c
-          |WHERE EXISTS (SELECT 1 FROM orders o
-          |              WHERE o.o_custkey = c.c_custkey
-          |                AND o.o_totalprice > 300000)
-          |ORDER BY c.c_custkey""".stripMargin)
-    }),
-
-    // LATERAL correlated subquery join — each customer's single most
-    // expensive order. Catalyst decorrelates this into a window/top-1 per
-    // key rather than executing the subquery per row.
-    "r_lateral" -> ((s, dir) => {
-      t(s, dir, "customer").createOrReplaceTempView("customer")
-      t(s, dir, "orders").createOrReplaceTempView("orders")
-      s.sql(
-        """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
-          |FROM customer c,
-          |LATERAL (SELECT o_orderkey, o_totalprice FROM orders
-          |         WHERE o_custkey = c.c_custkey
-          |         ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) o
-          |ORDER BY c.c_custkey""".stripMargin)
-    }),
-
-    // Cartesian product — legitimate only when one side is tiny (here
-    // region×nation); Spark plans a broadcast nested loop, never a
-    // shuffled cartesian, because the small side is broadcast-sized.
-    "r_cross_join" -> ((s, dir) => {
-      t(s, dir, "region").crossJoin(t(s, dir, "nation"))
-        .select(col("r_name"), col("n_name"))
-        .orderBy("r_name", "n_name")
-    }),
-
-    // Null-safe equality join (<=> / IS NOT DISTINCT FROM): null keys
-    // match each other, unlike plain = where they match nothing. Nulls
-    // are injected deterministically since the testdata keys are all
-    // non-null.
-    "r_nullsafe_join" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select(col("c_custkey"),
-        when(col("c_custkey") % 10 === 0, lit(null)).otherwise(col("c_nationkey"))
-          .as("k"))
-      val n = t(s, dir, "nation").select(
-        when(col("n_nationkey") === 0, lit(null)).otherwise(col("n_nationkey"))
-          .as("nk"),
-        col("n_name"))
-      c.join(n, col("k") <=> col("nk"))
-        .select(col("c_custkey"), col("n_name"))
-        .orderBy("c_custkey", "n_name")
-    }),
-
-    // Array aggregation + higher-order transform: per-customer sorted
-    // order lists, lambda applied per element — no explode round-trip.
-    // Output serializes the arrays (array_join) so the comparison layer
-    // only ever sees scalar columns; the plan still exercises
-    // collect_list / sort_array / transform.
-    "r_array_funcs" -> ((s, dir) =>
-      t(s, dir, "orders").groupBy(col("o_custkey"))
-        .agg(sort_array(collect_list(col("o_orderkey"))).as("o"),
-          count(lit(1)).as("n"))
-        .select(col("o_custkey"),
-          array_join(col("o"), ",").as("orders"),
-          array_join(transform(col("o"), x => x * 2), ",").as("doubled"),
-          col("n"))
-        .orderBy("o_custkey")),
-
-    // Window functions: ranking + running aggregate (frame-ordered, so
-    // double accumulation order is pinned on both engines).
-    "r_window_rank" -> ((s, dir) => {
-      val w = Window.partitionBy(col("l_orderkey"))
-        .orderBy(col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
-      t(s, dir, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-        row_number().over(w).cast("long").as("rn"),
-        sum(col("l_quantity").cast(DecimalType(28, 4))).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-          .cast("double").as("running_qty"))
-        .orderBy("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    }),
-
-    "r_window_running" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      t(s, dir, "orders").select(
-        col("o_custkey"), col("o_orderkey"),
-        sum(col("o_totalprice").cast(DecimalType(28, 4))).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-          .cast("double").as("cum_spend"))
-        .orderBy("o_custkey", "o_orderkey")
-    }),
-
-    "r_distinct" -> ((s, dir) =>
-      t(s, dir, "lineitem").select("l_returnflag", "l_linestatus")
-        .distinct().orderBy("l_returnflag", "l_linestatus")),
-
-    "r_union" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
-      val sup = t(s, dir, "supplier").select(col("s_nationkey").as("nationkey"))
-      c.union(sup).distinct().orderBy("nationkey")
-    }),
-
-    "r_intersect" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
-      val sup = t(s, dir, "supplier").select(col("s_nationkey").as("nationkey"))
-      c.intersect(sup).orderBy("nationkey")
-    }),
-
-    "r_except" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
-      val sup = t(s, dir, "supplier").select(col("s_nationkey").as("nationkey"))
-      c.except(sup).orderBy("nationkey")
-    }),
-
-    "r_rollup" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("cnt"), dsum(col("l_quantity")).as("sum_qty"))
-        .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))),
-
-    "r_cube" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .cube(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy(asc_nulls_first("o_orderstatus"), asc_nulls_first("o_orderpriority"))),
-
-    "r_union_all" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
-      val sup = t(s, dir, "supplier").select(col("s_nationkey").as("nationkey"))
-      c.unionAll(sup).orderBy("nationkey")
-    }),
-
-    // Column-name-resolved union: sides declare columns in different
-    // orders; unionByName aligns by name (plain union is positional).
-    "r_union_by_name" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select(
-        col("c_custkey").as("id"), col("c_name").as("name"), lit("c").as("src"))
-      val sup = t(s, dir, "supplier").select(
-        lit("s").as("src"), col("s_name").as("name"), col("s_suppkey").as("id"))
-      c.unionByName(sup).orderBy("src", "id")
-    }),
-
-    // LIMIT/OFFSET paging over a total order.
-    "r_offset" -> ((s, dir) =>
-      t(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice"))
-        .orderBy("o_orderkey").offset(100).limit(50)),
-
-    "r_full_outer" -> ((s, dir) => {
-      val big = t(s, dir, "customer").where(col("c_acctbal") > 0)
-        .groupBy(col("c_nationkey")).agg(count(lit(1)).as("n_cust"))
-      val sup = t(s, dir, "supplier")
-        .groupBy(col("s_nationkey")).agg(count(lit(1)).as("n_supp"))
-      big.join(sup, big("c_nationkey") === sup("s_nationkey"), "full_outer")
-        .select(
-          coalesce(col("c_nationkey"), col("s_nationkey")).as("nationkey"),
-          coalesce(col("n_cust"), lit(0L)).as("n_cust"),
-          coalesce(col("n_supp"), lit(0L)).as("n_supp"))
-        .orderBy("nationkey")
-    }),
-
-    "r_grouping_sets" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupingSets(
-          Seq(Seq(col("l_returnflag")), Seq(col("l_linestatus"))),
-          col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))),
-
-    "r_pivot" -> ((s, dir) => {
-      val p = t(s, dir, "orders")
-        .groupBy(col("o_orderpriority"))
-        .pivot(col("o_orderstatus"), Seq("F", "O", "P"))
-        .agg(count(lit(1)))
-      p.select(col("o_orderpriority"),
-        coalesce(col("F"), lit(0L)).as("f_cnt"),
-        coalesce(col("O"), lit(0L)).as("o_cnt"),
-        coalesce(col("P"), lit(0L)).as("p_cnt"))
-        .orderBy("o_orderpriority")
-    }),
-
-    "r_count_distinct" -> ((s, dir) =>
-      t(s, dir, "lineitem").agg(
-        countDistinct(col("l_partkey")).as("d_parts"),
-        countDistinct(col("l_suppkey")).as("d_supps"),
-        countDistinct(col("l_returnflag"), col("l_linestatus")).as("d_flags"))),
-
-    // NOT IN subquery — null-aware anti semantics (NOT IN is not a plain
-    // left-anti join when nulls can appear; expressed in SQL so Catalyst
-    // plans the null-aware variant).
-    "r_not_in" -> ((s, dir) => {
-      // register only the two tables this query touches — registerTables
-      // re-reads every table's footer, a fixed tax per invocation
-      t(s, dir, "customer").createOrReplaceTempView("customer")
-      t(s, dir, "nation").createOrReplaceTempView("nation")
-      s.sql(
-        """SELECT c_custkey, c_nationkey FROM customer
-          |WHERE c_nationkey NOT IN
-          |  (SELECT n_nationkey FROM nation WHERE n_name LIKE 'A%')
-          |ORDER BY c_custkey""".stripMargin)
-    }),
-
-    // RANGE window frame: per customer, total spend over orders priced
-    // within 1000.0 below the current order — value-range frames, the
-    // complement of the ROWS frames in r_window_running. RANGE includes
-    // all value-peers of the current row, so the result is deterministic
-    // under order ties; decimal accumulation keeps it order-independent.
-    "r_window_range" -> ((s, dir) => {
-      t(s, dir, "orders").createOrReplaceTempView("orders")
-      s.sql(
-        """SELECT o_custkey, o_orderkey, o_totalprice,
-          | CAST(SUM(CAST(o_totalprice AS DECIMAL(28,4))) OVER (
-          |   PARTITION BY o_custkey ORDER BY o_totalprice
-          |   RANGE BETWEEN 1000.0 PRECEDING AND CURRENT ROW) AS DOUBLE) AS near_spend
-          |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin)
-    }),
-
-    // Exact percentiles (sort-based interpolation; l_quantity is
-    // integral-valued so quartile interpolation is exact in double).
-    "r_percentile" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          percentile(col("l_quantity"), lit(0.25)).as("p25"),
-          percentile(col("l_quantity"), lit(0.5)).as("p50"),
-          percentile(col("l_quantity"), lit(0.75)).as("p75"))
-        .orderBy("l_returnflag")),
-
-    // Post-aggregation filter (HAVING).
-    "r_having" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("n_orders"),
-          dsum(col("o_totalprice")).as("spend"))
-        .where(col("n_orders") >= 12)
-        .orderBy("o_custkey")),
-
-    // Top-k per group (QUALIFY shape): rank inside the partition, keep
-    // the head — the windowed filter pattern, one shuffle on the key.
-    "r_topk_per_group" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      t(s, dir, "orders")
-        .withColumn("rk", row_number().over(w))
-        .where(col("rk") <= 2)
-        .select(col("o_custkey"), col("o_orderkey"),
-          col("o_totalprice"), col("rk").cast("long").as("rk"))
-        .orderBy("o_custkey", "rk")
-    }),
-
-    "r_window_lag" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      t(s, dir, "orders").select(
-        col("o_custkey"), col("o_orderkey"),
-        lag(col("o_totalprice"), 1).over(w).as("prev_price"),
-        lead(col("o_totalprice"), 1).over(w).as("next_price"),
-        ntile(4).over(w).cast("long").as("quartile"))
-        .orderBy("o_custkey", "o_orderkey")
-    }),
-
-    // SQL surface: the engine's spark.sql passthrough with a scalar
-    // subquery — identical SQL text runs on both engines.
-    "r_sql_subquery" -> ((s, dir) => {
-      t(s, dir, "orders").createOrReplaceTempView("orders")
-      s.sql(
-        """SELECT o_orderkey,
-          | o_totalprice - (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(28,4))) AS DOUBLE)
-          |                        / COUNT(*) FROM orders) AS delta
-          |FROM orders ORDER BY o_orderkey""".stripMargin)
-    }),
-
-    // Scalar function library passthrough (string / date / math / json /
-    // conditional) — sif has none of these (closures only).
-    "r_string_funcs" -> ((s, dir) =>
-      t(s, dir, "part").select(
-        col("p_partkey"),
-        upper(col("p_name")).as("uname"),
-        substring(col("p_name"), 1, 5).as("pfx"),
-        length(col("p_name")).cast("long").as("len"),
-        concat(col("p_brand"), lit("#"), col("p_type")).as("tag"),
-        regexp_replace(col("p_type"), " ", "_").as("slug"))
-        .orderBy("p_partkey")),
-
-    "r_date_funcs" -> ((s, dir) =>
-      t(s, dir, "orders").select(
-        col("o_orderkey"),
-        year(col("o_orderdate")).cast("long").as("yr"),
-        month(col("o_orderdate")).cast("long").as("mon"),
-        dayofmonth(col("o_orderdate")).cast("long").as("dom"),
-        date_trunc("month", col("o_orderdate")).as("month_start"))
-        .orderBy("o_orderkey")),
-
-    "r_math_funcs" -> ((s, dir) =>
-      t(s, dir, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-        abs(col("l_discount") - lit(0.05)).as("a"),
-        floor(col("l_quantity") / lit(7.0)).as("f"),
-        ceil(col("l_extendedprice") / lit(1000.0)).as("c"),
-        sqrt(col("l_quantity")).as("s"))
-        .orderBy("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")),
-
-    "r_case_expr" -> ((s, dir) =>
-      t(s, dir, "orders").select(
-        col("o_orderkey"),
-        when(col("o_totalprice") > 300000, "big")
-          .when(col("o_totalprice") > 150000, "mid")
-          .otherwise("small").as("bucket"))
-        .orderBy("o_orderkey")),
-
-    "r_json_extract" -> ((s, dir) =>
-      t(s, dir, "events").select(
-        col("event_id"),
-        get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .orderBy("event_id")),
-
-    // Event-time tumbling window aggregation (batch form; the streaming
-    // form with watermarks lives in graft.streaming + its spec).
-    "r_events_window" -> ((s, dir) =>
-      t(s, dir, "events")
-        .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"), dsum(col("value"), 6).as("sum_value"))
-        .orderBy("hour", "event_type")),
-
-    // Sliding (hopping) event-time windows — the tumbling twin above
-    // generalized: 6 h windows every 2 h, each event counted into
-    // width/slide = 3 overlapping windows via Spark's native window()
-    // explode (codegen'd; exact epoch-µs alignment arithmetic both
-    // engines reproduce bit-for-bit).
-    "r_hopping_window" -> ((s, dir) =>
-      t(s, dir, "events").where(col("ts").isNotNull)
-        .groupBy(window(col("ts"), "6 hours", "2 hours").as("w"),
-          col("event_type"))
-        .agg(count(lit(1)).as("cnt"), dsum(col("value"), 6).as("sum_value"))
-        .select(col("w.start").as("win_start"), col("w.end").as("win_end"),
-          col("event_type"), col("cnt"), col("sum_value"))
-        .orderBy("win_start", "event_type")),
-
-    // ----- training-data pipeline extensions (x*) -----
-
-    // Token counting: whitespace tokens + BPE-ish subword proxy.
-    "x_token_count" -> ((s, dir) =>
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        TF.tokenCount(col("text")).cast("long").as("n_tokens"),
-        TF.subwordCount(col("text")).cast("long").as("n_subwords"))
-        .orderBy("doc_id")),
-
-    // Quality scoring: length/punctuation/stopword signals.
-    "x_quality" -> ((s, dir) =>
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        TF.tokenCount(col("text")).cast("long").as("n_tokens"),
-        TF.punctRatio(col("text")).as("punct_ratio"),
-        TF.stopwordRatio(col("text")).as("stopword_ratio"),
-        TF.qualityScore(col("text")).as("quality"))
-        .orderBy("doc_id")),
-
-    // Language ID: stopword-profile argmax heuristic.
-    // Scored language ID over planted multilingual suffixes: German /
-    // French / Spanish stopword runs flip the verdict on their docs, a
-    // planted 1-1 en/de tie reads margin 0 with en winning by profile
-    // order. All-integer outputs; map-only.
-    "x_langid_scored" -> ((s, dir) => {
-      val txt = when(col("doc_id") % 5 === 1,
-          concat(col("text"), lit(" der die das und ist nicht")))
-        .when(col("doc_id") % 5 === 2,
-          concat(col("text"), lit(" le la et les des est")))
-        .when(col("doc_id") % 5 === 3,
-          concat(col("text"), lit(" el los las y que")))
-        .when(col("doc_id") % 5 === 4, lit("the und"))
-        .otherwise(col("text"))
-      TF.langIdScored(
-          t(s, dir, "documents").select(col("doc_id"), txt.as("text")),
-          "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    "x_langid" -> ((s, dir) =>
-      t(s, dir, "documents").select(
-        col("doc_id"), col("lang"),
-        TF.langId(col("text")).as("predicted"))
-        .orderBy("doc_id")),
-
-    // End-to-end curation pipeline: language filter → quality floor →
-    // exact-dedup (keep min id per text) → token accounting. The
-    // composition a training-data pipeline runs before tokenization;
-    // one declarative plan, fully oracle-checked.
-    "x_pipeline_curate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val scored = docs.select(col("doc_id"), col("text"),
-        TF.langId(col("text")).as("pred_lang"),
-        TF.qualityScore(col("text")).as("quality"),
-        TF.tokenCount(col("text")).cast("long").as("n_tokens"))
-      scored
-        .where(col("pred_lang") === "en" && col("quality") > 0.2)
-        .groupBy(col("text"))
-        .agg(min(col("doc_id")).as("doc_id"),
-          max(col("n_tokens")).as("n_tokens"),
-          max(col("quality")).as("quality"))
-        .select(col("doc_id"), col("n_tokens"), col("quality"))
-        .orderBy("doc_id")
-    }),
-
-    // The COMPLETE curation chain as ONE declarative plan — what a
-    // pretraining-data user actually runs: language/quality gate →
-    // exact dedup (text key, min-id survivor) → n-gram-Jaccard near-dup
-    // drop (inverted-index pairs + transitive clustering) → deterministic
-    // train/val/test assignment. Every stage is the already-oracled
-    // operator; chaining them keeps one plan (Catalyst pipelines the
-    // gates into the scan, the only shuffles are the dedup groupBy, the
-    // pair join, and the CC rounds — no driver round-trips between
-    // stages).
-    "x_pipeline_full" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val scored = docs.select(col("doc_id"), col("text"),
-        TF.langId(col("text")).as("pred_lang"),
-        TF.qualityScore(col("text")).as("quality"),
-        TF.tokenCount(col("text")).cast("long").as("n_tokens"))
-      val kept = scored
-        .where(col("pred_lang") === "en" && col("quality") > 0.2)
-        .groupBy(col("text"))
-        .agg(min(col("doc_id")).as("doc_id"), max(col("n_tokens")).as("n_tokens"))
-      val pairs = Dedup.ngramJaccardPairs(kept, "doc_id", "text", 5, 0.5)
-      val surv = Dedup.dropNearDuplicates(kept, "doc_id", pairs)
-      Corpus.hashSplit(surv, "doc_id",
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .select(col("doc_id"), col("n_tokens"), col("split"))
-        .orderBy("doc_id")
-    }),
-
-    // Corpus vocabulary: token frequency table (the first step of any
-    // tokenizer/quality pipeline). Deterministic top-100.
-    "x_vocab" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(explode(TF.tokens(col("text"))).as("token"))
-        .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("token"))
-        .limit(100)),
-
-    // Zipf rank-frequency fit over the top-500 vocabulary: OLS of
-    // ln cnt on ln rank (slope ~ -1 on natural text; template/spam
-    // bends it) — the one-number corpus-health dual of x_vocab. Both
-    // ln inputs are integral doubles, OLS sums ride DECIMAL(30,15),
-    // the closing scalar arithmetic is pinned-order doubles.
-    "x_zipf" -> ((s, dir) =>
-      Corpus.zipfFit(t(s, dir, "documents"), "text", maxRank = 500)),
-
-    // Heaps'-law vocabulary growth: cumulative distinct types vs
-    // cumulative tokens at 1000-doc checkpoints (types charged to
-    // their min-doc_id bucket = exact prefix semantics). Dataset-sizing
-    // instrument: a flattening curve is the saturation/duplication
-    // signal. Exact integers end-to-end; the only ordered window runs
-    // over the config-sized bucket table. Width 50 reads 10 checkpoints
-    // from the 500-doc fixture (100 at sf0.1) — a real curve, not one
-    // degenerate point.
-    "x_heaps" -> ((s, dir) =>
-      Corpus.vocabGrowth(t(s, dir, "documents"), "doc_id", "text",
-          bucketWidth = 50L)
-        .orderBy("bucket")),
-
-    // Mergeable-sketch rollup (Datasketches HLL): per-nation sketches of
-    // distinct customers, UNIONED up to region level without rescanning
-    // the fact table — the pattern that makes multi-granularity distinct
-    // counts affordable at 100 TB (sketch bytes roll up; raw keys don't
-    // have to). Self-verifying like x_approx_distinct: output is the
-    // exact count (nations partition customers, so regional distinct =
-    // sum of per-nation distincts) plus a within-tolerance flag on the
-    // merged estimate; the sketch never needs cross-engine agreement.
-    "x_hll_rollup" -> ((s, dir) => {
-      val c = t(s, dir, "customer"); val n = t(s, dir, "nation")
-      val perNation = c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .groupBy(col("n_regionkey"), col("n_nationkey"))
-        .agg(expr("hll_sketch_agg(c_custkey)").as("sk"),
-          countDistinct(col("c_custkey")).as("exact_n"))
-      perNation.groupBy(col("n_regionkey"))
-        .agg(expr("hll_sketch_estimate(hll_union_agg(sk))").as("est"),
-          sum(col("exact_n")).as("exact_customers"))
-        .select(col("n_regionkey"), col("exact_customers"),
-          (abs(col("est") - col("exact_customers")).cast("double") /
-            col("exact_customers") <= lit(0.05)).as("within_tol"))
-        .orderBy("n_regionkey")
-    }),
-
-    // Heavy hitters, exactly, via the two-pass Misra–Gries pattern: a
-    // bounded-state mergeable sketch nominates candidates (certain
-    // superset), an exact recount of only those candidates decides — the
-    // corpus-sized token shuffle of x_vocab never happens, yet the output
-    // is exact (oracle = plain HAVING over the full count).
-    "x_heavy_hitters" -> ((s, dir) =>
-      Corpus.heavyHitters(t(s, dir, "documents"), "text", 200)
-        .orderBy(col("cnt").desc, col("token"))),
-
-    // Time-series resample: per-user hourly grid (gap-fill via sequence +
-    // explode — no driver-side time loop) with forward-filled values
-    // (last ignoreNulls over an ordered frame). Grid generation and fill
-    // both shuffle only on user_id; no step is corpus-quadratic.
-    "x_resample" -> ((s, dir) => {
-      val hourly = t(s, dir, "events")
-        .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("h"))
-        .agg(dsum(col("value"), 6).as("v"))
-      val grid = hourly.groupBy(col("user_id"))
-        .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-        .select(col("user_id"),
-          explode(sequence(col("h0"), col("h1"), expr("interval 1 hour"))).as("h"))
-      grid.join(hourly, Seq("user_id", "h"), "left")
-        .select(col("user_id"), col("h"),
-          last(col("v"), ignoreNulls = true).over(
-            Window.partitionBy(col("user_id")).orderBy(col("h"))
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .as("v_filled"))
-        .orderBy("user_id", "h")
-    }),
-
-    // Distribution drift between two corpus slices over a fixed
-    // reference binning: exact per-bin counts, |p_a−p_b| as an exact
-    // rational numerator over the common denominator — no float ratio,
-    // no log; nBins-sized exchanges only.
-    "x_drift" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.functions.Stats.histogramDrift(
-          d.where(pmod(col("doc_id"), lit(3)) =!= 0),
-          d.where(pmod(col("doc_id"), lit(2)) === 0),
-          "n_chars", nBins = 24, lo = 0.0, hi = 600.0)
-        .select(col("bin").cast("long").as("bin"), col("lo_edge"),
-          col("n_a"), col("n_b"), big(col("l1_num"), "l1_num"),
-          col("n_a_tot"), col("n_b_tot"))
-        .orderBy("bin")
-    }),
-
-    // Per-language drift over the same fixed binning: a global
-    // histogram can read flat while one language's distribution walks
-    // away — the grid is (observed langs) x (all 12 bins), empty bins
-    // at zero, per-group exact totals and l1 numerators.
-    "x_drift_by_group" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.functions.Stats.histogramDriftByGroup(
-          d.where(pmod(col("doc_id"), lit(3)) =!= 0),
-          d.where(pmod(col("doc_id"), lit(2)) === 0),
-          "n_chars", "lang", nBins = 12, lo = 0.0, hi = 600.0)
-        .select(col("lang"), col("bin").cast("long").as("bin"),
-          col("lo_edge"), col("n_a"), col("n_b"),
-          big(col("l1_num"), "l1_num"), col("n_a_tot"), col("n_b_tot"))
-        .orderBy("lang", "bin")
-    }),
-
-    // Pre-flight join audit: exact inner-join cardinality + hottest
-    // key from the two key-count tables — the join itself never runs,
-    // fact bodies never shuffle.
-    "x_join_card" -> ((s, dir) =>
-      graft.functions.Stats.joinCardinality(
-          t(s, dir, "lineitem"), t(s, dir, "orders"),
-          "l_orderkey", "o_orderkey")
-        .select(big(col("n_pairs"), "n_pairs"), col("n_keys_matched"),
-          big(col("max_key_pairs"), "max_key_pairs"), col("hottest_key"))),
-
-    // Winsorize the event values at the exact discrete 2nd/98th
-    // percentile cuts: order statistics found by histogram bisection
-    // (never a global sort), map-only clamp with literal cuts; output
-    // doubles are element selections, so cross-engine bit-exact.
-    "x_winsorize" -> ((s, dir) =>
-      graft.functions.Stats.winsorize(
-          t(s, dir, "events").select(col("event_id"), col("value")),
-          "value", 0.02, 0.98, "v_w")
-        .orderBy("event_id")),
-
-    // Per-language winsorization: cuts computed independently per
-    // group from ONE group-keyed window pass (values sort within their
-    // group, never globally), #groups-sized cut table joined back.
-    "x_winsorize_lang" -> ((s, dir) =>
-      graft.functions.Stats.winsorizeByGroup(
-          t(s, dir, "documents").select(col("doc_id"), col("lang"),
-            col("n_chars")),
-          "n_chars", "lang", 0.05, 0.95, "v_w")
-        .orderBy("doc_id")),
-
-    // Linear gap interpolation on the hourly grid — the fill rule
-    // forward-fill can't express; exact integer buckets, IEEE-only
-    // formula (no transcendentals), observed values pass through.
-    "x_interpolate" -> ((s, dir) => {
-      // pmod-then-div floors for any sign (the Events.floorBucket
-      // discipline). DuckDB `//` truncates toward zero (NOT floor), so
-      // the oracle mirrors the same subtract-positive-mod-then-divide
-      // form — the numerator is exactly divisible, where trunc = floor
-      val hourly = t(s, dir, "events")
-        .groupBy(col("user_id"),
-          expr("(unix_micros(ts) - pmod(unix_micros(ts), 3600000000L))" +
-            " div 3600000000L").as("t"))
-        .agg(dsum(col("value"), 6).as("v"))
-      graft.functions.Events.interpolate(hourly, "user_id", "t", "v")
-        .orderBy("user_id", "t")
-    }),
-
-    // Per-language heavy hitters: one bounded-state MG aggregate per
-    // group, exact recount against each group's own threshold.
-    "x_heavy_by_lang" -> ((s, dir) =>
-      Corpus.heavyHittersByGroup(t(s, dir, "documents"), "lang", "text", 150)
-        .orderBy(col("lang"), col("cnt").desc, col("token"))),
-
-    // Runtime Bloom-filter join pruning: sketch the filtered dim keys,
-    // drop non-matching fact rows inside the scan stage BEFORE the join
-    // shuffle. False positives die in the exact join ⇒ bit-identical to
-    // the plain join the oracle runs.
-    "x_bloom_join" -> ((s, dir) => {
-      val l = t(s, dir, "lineitem")
-      val hot = t(s, dir, "orders").where(col("o_totalprice") > 400000)
-        .select(col("o_orderkey"), col("o_totalprice"))
-      graft.operators.Bloom.prunedJoin(l, hot, "l_orderkey", "o_orderkey",
-          expectedKeys = 100000, fpp = 0.01)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-          col("o_totalprice"))
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-
-    // Salted join under known key skew: fact side scattered across
-    // saltN sub-keys, small side replicated saltN× — identical output to
-    // the plain join (the oracle), hot keys spread over saltN reducers.
-    "x_skew_join" -> ((s, dir) => {
-      val l = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_partkey").as("p_partkey"), col("l_quantity"))
-      val p = t(s, dir, "part").select(col("p_partkey"), col("p_brand"))
-      graft.operators.Skew.saltedJoin(l, p, "p_partkey",
-          scatterBy = col("l_orderkey") * lit(7L) + col("l_linenumber"), saltN = 4)
-        .select(col("l_orderkey"), col("l_linenumber"), col("p_partkey"),
-          col("l_quantity"), col("p_brand"))
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-
-    // Edit-distance fuzzy self-join (record linkage): exact Levenshtein
-    // pairs via q-gram prefix filtering — candidates key on each string's
-    // globally-rarest grams (boilerplate prefixes like "Supplier#00" are
-    // stop-grams and never join), then exact verify. Output = the
-    // quadratic join's, which is precisely what the oracle computes.
-    "x_fuzzy_join" -> ((s, dir) =>
-      graft.functions.Dedup.editDistancePairs(
-          t(s, dir, "supplier"), "s_suppkey", "s_name", maxDist = 1, q = 2)
-        .orderBy("id_a", "id_b")),
-
-    // Scored record linkage: customers vs a deterministically-corrupted
-    // copy (every 3rd name reversed, every 7th typo'd, every 5th
-    // balance shifted), blocked on (nation, segment) — the composite
-    // blocking key bounds each block's quadratic term — with integer
-    // agreement weights (name 40 w/ edit-tol 1, acctbal 30 exact),
-    // keep-best per left record with smallest-id ties. Exercises true
-    // matches through typos, dropped below-threshold pairs, and
-    // deterministic false positives from near-identical names — all
-    // exact-integer scored.
-    "x_linkage" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-        .withColumn("c_blk", concat_ws("|", col("c_nationkey"), col("c_mktsegment")))
-      val dirty = c.select((col("c_custkey") + 1000000L).as("d_id"),
-        col("c_blk").as("d_blk"),
-        when(col("c_custkey") % 3 === 0, reverse(col("c_name")))
-          .when(col("c_custkey") % 7 === 0, concat(col("c_name"), lit("x")))
-          .otherwise(col("c_name")).as("d_name"),
-        when(col("c_custkey") % 5 === 0, col("c_acctbal") + 1.0)
-          .otherwise(col("c_acctbal")).as("d_bal"))
-      graft.functions.Dedup.recordLinkage(c, dirty, "c_custkey", "d_id",
-          "c_blk", "d_blk",
-          Seq(graft.functions.Dedup.LinkField("c_name", "d_name", 40L, 1),
-            graft.functions.Dedup.LinkField("c_acctbal", "d_bal", 30L)),
-          minScore = 40L, keepBest = true)
-        .orderBy("id_a")
-    }),
-
-    // Repetition signals (Gopher-style quality gates): token/bigram
-    // concentration per document. Bigram counting shuffles 8-byte gram
-    // hashes, never gram strings.
-    "x_repetition" -> ((s, dir) =>
-      Corpus.repetitionSignals(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-
-    // BM25 relevance against a fixed query-term bag (rational idf —
-    // bit-deterministic, no transcendental log). Term filter runs
-    // map-side before any shuffle; df/corpus stats broadcast.
-    "x_bm25" -> ((s, dir) =>
-      Corpus.bm25(t(s, dir, "documents"), "doc_id", "text",
-        Seq("hash", "join", "scan", "window"))
-        .orderBy(col("bm25").desc, col("doc_id"))
-        .limit(100)),
-
-    // Sparse lexical retrieval: TF-IDF cosine top-k through an inverted
-    // index on bigram-shingle hashes (unigrams are non-selective on this
-    // fixture's 31-word vocabulary); df-pruning bounds every posting
-    // list, and the query-side postings broadcast into the index join.
-    "x_tfidf_topk" -> ((s, dir) =>
-      Corpus.tfidfTopK(t(s, dir, "documents"), "doc_id", "text",
-        col("doc_id") % 101 === 0, k = 10, ngram = 2, maxDfRatio = 0.5)
-        .orderBy("query_id", "rank")),
-
-    // Ordered conversion funnel view→click→purchase within 24h of the
-    // first view — per-step user counts; exact integer micros throughout
-    // (the r_sessionize discipline), one user-keyed agg per step.
-    "x_funnel" -> ((s, dir) =>
-      graft.functions.Events.funnel(t(s, dir, "events"),
-        "user_id", "ts", "event_type",
-        Seq("view", "click", "purchase"), windowUs = 86400000000L)
-        .orderBy("step")),
-
-    // Time-to-convert: one row per user completing the whole funnel in
-    // the window, with exact integer-µs latency — feed to
-    // exactQuantiles/quantileBucket for the percentile view.
-    "x_funnel_latency" -> ((s, dir) =>
-      graft.functions.Events.funnelLatency(t(s, dir, "events"),
-        "user_id", "ts", "event_type",
-        Seq("view", "click", "purchase"), windowUs = 86400000000L)
-        .orderBy("user_id")),
-
-    // The ONE-shuffle deep-funnel form of the same query: events shuffle
-    // once into per-user groups, the whole step recurrence runs as a
-    // native kernel per user (FunnelReach), and per-step counts come off
-    // a ≤|steps|-row reach histogram — identical semantics (same oracle
-    // as x_funnel), the form that wins at 10+ steps where the k-join
-    // re-scans the event table per step.
-    "x_funnel_deep" -> ((s, dir) =>
-      graft.functions.Events.funnelDeep(t(s, dir, "events"),
-        "user_id", "ts", "event_type",
-        Seq("view", "click", "purchase"), windowUs = 86400000000L)
-        .orderBy("step")),
-
-    // Hourly rate-spike flags per event type vs the trailing-6-bucket
-    // mean; integer cross-multiplication decides — no float in the
-    // predicate, the window table is bucket-grained metadata.
-    "x_event_spikes" -> ((s, dir) =>
-      graft.functions.Events.rateSpikes(t(s, dir, "events"),
-        "ts", "event_type", bucketUs = 3600000000L, trailing = 6, factor = 2L)
-        .orderBy("event_type", "bucket")),
-
-    // Cohort retention: users cohort by the UTC day of their first event;
-    // (cohort_day, day_offset) counts distinct active users. All integer
-    // day arithmetic (epoch micros DIV us-per-day).
-    "x_retention" -> ((s, dir) =>
-      graft.functions.Events.retention(t(s, dir, "events"), "user_id", "ts")
-        .orderBy("cohort_day", "day_offset")),
-
-    // Video scene-level near-dup: blobs split into 64-byte "frames",
-    // each frame gets its perceptual bit-grid, and videos pair on ≥ 2
-    // shared DISTINCT frame signatures (the inverted-index shape —
-    // signature equi-join, never frames × frames). Planted copies damage
-    // exactly one frame (first char swapped), so every planted pair with
-    // ≥ 3 frames must surface with shared_frames = frames − 1.
-    "x_video_neardup" -> ((s, dir) => {
-      val base = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .where(col("text").isNotNull)
-      val planted = base
-        .where(col("doc_id") % 13 === 0 && length(col("text")) >= 129)
-        .select((col("doc_id") + 50000000L).as("doc_id"),
-          concat(lit("#"), expr("substring(text, 2)")).as("text"))
-      val media = graft.multimodal.Multimodal.asMediaTable(
-        base.unionByName(planted)
-          .select(col("doc_id"), encode(col("text"), "UTF-8").as("blob")),
-        "doc_id", "blob", "video", "mp4")
-      graft.multimodal.Multimodal.videoNearDupByFrames(media,
-          window = 64, minShared = 2)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // Leakage-safe split: near-dup clusters (5-gram Jaccard ≥ 0.5,
-    // transitive) split by their min-id representative so no pair
-    // straddles train/test — hashSplit's determinism, cluster-level.
-    "x_leak_split" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 5, 0.5)
-      Corpus.leakSafeSplit(docs, "doc_id", pairs,
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .select(col("doc_id"), col("split")).orderBy("doc_id")
-    }),
-
-    // Unicode-script census — the pre-tokenizer multilingual router
-    // (stopword langid assumes you already know which scripts to try);
-    // planted non-Latin suffixes on every 11th doc exercise the
-    // Cyrillic/CJK/Arabic ranges on this ASCII fixture. Map-only.
-    "x_script_profile" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"),
-          when(col("doc_id") % 11 === 0,
-            concat(col("text"), lit(" тест 漢字 ٣٤")))
-            .otherwise(col("text")).as("text"))
-      TF.scriptProfile(docs, "doc_id", "text").orderBy("doc_id")
-    }),
-
-    // Mixed-script confusable census: every 9th doc gains a planted
-    // suffix with a Cyrillic-a "paypal", a Greek-Eta "Hello", a pure-
-    // Cyrillic word (NOT mixed) and Han+Latin "Tokyo" (legit bilingual,
-    // NOT mixed) — codepoints spelled via \u escapes here and chr() in
-    // the oracle so no invisible character can drift. Map-only.
-    "x_mixed_script" -> ((s, dir) => {
-      val mixSuffix = " p\u0430ypal \u0397ello " +
-        "\u0442\u0435\u0441\u0442 \u6771\u4eacTokyo"
-      val docs = t(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 9 === 0, concat(col("text"), lit(mixSuffix)))
-          .otherwise(col("text")).as("text"))
-      TF.mixedScriptCensus(docs, "doc_id", "text").orderBy("doc_id")
-    }),
-
-    // Perceptual-hash image near-dup over the stub decode: planted
-    // byte-local perturbations (2 leading chars swapped) move at most 2
-    // grid cells, so every planted pair sits within Hamming 2 and the
-    // 4-band pigeonhole must surface it; the ORACLE recomputes the whole
-    // chain byte-for-byte (stripe-sum grid, fixed-threshold bits, banded
-    // candidates, exact Hamming) — a full-chain oracle, not pinned recall.
-    "x_phash_neardup" -> ((s, dir) => {
-      val base = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .where(col("text").isNotNull)
-      val planted = base
-        .where(col("doc_id") % 7 === 0 && length(col("text")) >= 2)
-        .select((col("doc_id") + 40000000L).as("doc_id"),
-          concat(lit("~!"), expr("substring(text, 3)")).as("text"))
-      val media = graft.multimodal.Multimodal.asMediaTable(
-        base.unionByName(planted)
-          .select(col("doc_id"), encode(col("text"), "UTF-8").as("blob")),
-        "doc_id", "blob", "image", "png")
-      graft.multimodal.Multimodal.phashNearDupPairs(media, maxHamming = 3)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // Audio near-dup by banded PCM fingerprint — the phash discipline on
-    // the audio modality: text bytes stand in for a PCM16 stream (stub
-    // framing; the band math is byte-local, so the planted re-encodes —
-    // first two bytes = sample 0 = band 0 perturbed — are pigeonhole-
-    // guaranteed candidates and land within the Hamming budget). Full
-    // chain (16-bit LE samples → odd-weighted floor-mod-65536 bands →
-    // ×131 spread → threshold bits → banding → exact Hamming) mirrored
-    // in DuckDB, bit-exact.
-    "x_audio_neardup" -> ((s, dir) => {
-      val base = t(s, dir, "documents").where(col("text").isNotNull)
-      val planted = base
-        .where(col("doc_id") % 7 === 0 && length(col("text")) >= 2)
-        .select((col("doc_id") + 40000000L).as("doc_id"),
-          concat(lit("~!"), expr("substring(text, 3)")).as("text"))
-      val media = graft.multimodal.Multimodal.asMediaTable(
-        base.select(col("doc_id"), col("text")).unionByName(planted)
-          .select(col("doc_id"), encode(col("text"), "UTF-8").as("blob")),
-        "doc_id", "blob", "audio", "pcm16")
-      graft.multimodal.Multimodal.audioNearDupPairs(media, maxHamming = 3)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // Window-level audio containment near-dup — the video shared-scene
-    // discipline on the sample stream: planted re-encodes perturb only
-    // sample 0 (first two bytes), so every other window's fingerprint
-    // survives byte-identically and the signature equi-join recalls the
-    // pair; whole chain mirrored in DuckDB.
-    "x_audio_windows" -> ((s, dir) => {
-      val base = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .where(col("text").isNotNull)
-      val planted = base
-        .where(col("doc_id") % 13 === 0 && length(col("text")) >= 200)
-        .select((col("doc_id") + 70000000L).as("doc_id"),
-          concat(lit("~!"), expr("substring(text, 3)")).as("text"))
-      val media = graft.multimodal.Multimodal.asMediaTable(
-        base.unionByName(planted)
-          .select(col("doc_id"), encode(col("text"), "UTF-8").as("blob")),
-        "doc_id", "blob", "audio", "pcm16")
-      graft.multimodal.Multimodal.audioNearDupByWindows(media,
-          windowSamples = 32, minShared = 2)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // Snapshot delta audit: the %3==0 slice vs a derived "today" with
-    // removals (%30), edits (%21, ' v2' appended) and arrivals (%33,
-    // shifted ids) — only the delta comes back, fingerprint-compared.
-    "x_snapshot_diff" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val oldSnap = docs.where(col("doc_id") % 3 === 0)
-        .select(col("doc_id"), col("text"))
-      val newSnap = oldSnap.where(col("doc_id") % 30 =!= 0)
-        .select(col("doc_id"),
-          when(col("doc_id") % 21 === 0, concat(col("text"), lit(" v2")))
-            .otherwise(col("text")).as("text"))
-        .unionByName(oldSnap.where(col("doc_id") % 33 === 0)
-          .select((col("doc_id") + 60000000L).as("doc_id"), col("text")))
-      Corpus.snapshotDiff(oldSnap, newSnap, "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // Persisted-index probe: the inverted index freezes the snapshot's
-    // idf/norms; later arrivals score against it without re-reading the
-    // indexed bodies — build-once/probe-incrementally, the incremental-
-    // dedup convention applied to retrieval.
-    "x_tfidf_probe" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val (postings, dict) = Corpus.tfidfIndex(
-        docs.where(col("doc_id") % 3 === 0), "doc_id", "text")
-      val queries = docs.where(
-        col("doc_id") % 3 =!= 0 && col("doc_id") % 97 === 1)
-      Corpus.tfidfProbeIndex(queries, "doc_id", "text", postings, dict, k = 10)
-        .orderBy("query_id", "rank")
-    }),
-
-    // Incremental retrieval-index maintenance (the ivfIndexAppend ritual
-    // on the sparse side): the dict's idf freezes at build time over the
-    // OLD snapshot, the arrival batch files into it with one map pass +
-    // broadcast dict join (tfidfIndexAppend — the stored postings never
-    // read), the new postings APPEND onto the stored parquet, and the
-    // probe retrieves old and appended docs against one consistent
-    // statistic. The oracle replays the frozen-idf weighting of the
-    // arrival batch exactly — appended docs weight by the SNAPSHOT's
-    // idf, not a recount.
-    "x_tfidf_append" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val old = docs.where(col("doc_id") % 3 === 0)
-      val fresh = docs.where(col("doc_id") % 3 =!= 0 && col("doc_id") % 7 === 2)
-      val (params, post, dict) = Corpus.tfidfIndexBuild(old, "doc_id", "text")
-      val tmp = scratchDir("graft-tfidfapp")
-      params.write.parquet(s"$tmp/params")
-      dict.write.parquet(s"$tmp/dict")
-      post.write.parquet(s"$tmp/postings")
-      Corpus.tfidfIndexAppend(s.read.parquet(s"$tmp/params"),
-          s.read.parquet(s"$tmp/dict"), fresh, "doc_id", "text")
-        .write.mode("append").parquet(s"$tmp/postings")
-      val queries = docs.where(
-        col("doc_id") % 3 =!= 0 && col("doc_id") % 7 =!= 2 &&
-          col("doc_id") % 97 === 1)
-      Corpus.tfidfProbeIndex(queries, "doc_id", "text",
-          s.read.parquet(s"$tmp/params"), s.read.parquet(s"$tmp/postings"),
-          s.read.parquet(s"$tmp/dict"), k = 10)
-        .orderBy("query_id", "rank")
-    }),
-
-    // Hybrid-retrieval fusion: RRF over two shingle widths of the sparse
-    // ranker — rank-based, so incomparable score scales fuse without
-    // calibration, and the fusion stage itself moves only top-k-sized
-    // lists (the cost lives in the upstream rankers).
-    "x_rrf_fuse" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val isQ = col("doc_id") % 101 === 0
-      Corpus.rrfFuse(Seq(
-        Corpus.tfidfTopK(docs, "doc_id", "text", isQ, k = 10, ngram = 2),
-        Corpus.tfidfTopK(docs, "doc_id", "text", isQ, k = 10, ngram = 3)),
-        k = 10)
-        .orderBy("query_id", "rank")
-    }),
-
-    // Unigram LM perplexity signal: the corpus trains its own token
-    // distribution and every doc scores its per-token −ln p under it —
-    // one query, two hash-keyed shuffles, corpus total broadcast.
-    "x_perplexity" -> ((s, dir) =>
-      Corpus.unigramNll(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_id"))),
-
-    // CCNet head/middle/tail: per-LANGUAGE perplexity terciles (bucket
-    // 0 = most fluent third under the corpus's own unigram LM). The
-    // x_perplexity scoring plus one group-keyed window pass over the
-    // #docs-sized score table; zero-token docs keep null score+bucket.
-    "x_ppl_buckets" -> ((s, dir) =>
-      Corpus.perplexityBuckets(t(s, dir, "documents"), "doc_id", "text",
-          "lang", nBuckets = 3)
-        .orderBy(col("doc_id"))),
-
-    // Stupid-Backoff bigram LM (Brants et al. 2007): LM trained on the
-    // deterministic 80% doc_id-modulo slice, every doc scored — the
-    // next-order CCNet quality signal above x_perplexity. Count-ratio
-    // scores mean training is two hash-keyed aggregations; scoring is
-    // three 8-byte-hash joins; the held-out 20% genuinely exercises the
-    // backoff and OOV branches.
-    "x_bigram_nll" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Corpus.bigramNll(docs, docs.where(col("doc_id") % 10 < 8),
-          "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    // Trigram Stupid-Backoff (the context rung above x_bigram_nll):
-    // seen-trigram ratio, else 0.4 x bigram ratio, else 0.4^2 x unigram,
-    // else 0.4^2/N — count ratios only, the two -ln(0.4) terms the same
-    // baked literal on both engines.
-    "x_trigram_nll" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Corpus.trigramNll(docs, docs.where(col("doc_id") % 10 < 8),
-          "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    // Jelinek-Mercer interpolated bigram LM on the same 80/20 split:
-    // p = 3/4 c12/c1 + 1/4 (c2+1)/(N+V) as the exact integer ratio A/B
-    // (lambda a pinned rational, Laplace unigram floor), nll =
-    // ln B - ln A on integral doubles — the lambda-mixture rung of the
-    // smoothing ladder next to backoff (x_bigram_nll) and KN/MKN.
-    "x_jm_nll" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Corpus.jmNll(docs, docs.where(col("doc_id") % 10 < 8),
-          "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    // Interpolated trigram Kneser-Ney (Chen & Goodman 1999) on the same
-    // 80/20 split as x_trigram_nll: D = 3/4 exactly, continuation
-    // counts for the lower orders, uniform 1/V floor at the unigram
-    // level. Each level's probability is the exact rational A/B, so
-    // nll = ln B - ln A keeps every ln input an integral-valued double
-    // -- the DuckDB oracle unrolls the same three-level CASE with the
-    // identical expression tree.
-    "x_kn_nll" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Corpus.knNll(docs, docs.where(col("doc_id") % 10 < 8),
-          "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    // Modified Kneser-Ney (Chen & Goodman 1999 section 3 — KenLM's
-    // default smoothing) on the same split: three discounts per level
-    // estimated from that level's count-of-counts, KenLM's
-    // --discount_fallback (0.5/1.0/1.5) where a level is degenerate.
-    // On this corpus the trigram level estimates (healthy n1..n4), the
-    // continuation-count levels fall back — both branches of the
-    // in-plan CASE are live. The oracle re-derives the integer d/Q
-    // discount algebra and unrolls the identical three-level ladder.
-    "x_mkn_nll" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Corpus.mknNll(docs, docs.where(col("doc_id") % 10 < 8),
-          "doc_id", "text", discountFallback = true)
-        .orderBy(col("doc_id"))
-    }),
-
-    // DSIR importance weights (Xie et al. 2023): every doc in the raw
-    // pool scores ln(p_target/p_raw) under hashed unigram+bigram bucket
-    // models of a 2-source "quality" target vs the whole pool — the
-    // select-web-data-that-looks-like-the-target gate as one plan.
-    // Bucket counts are tiny broadcasts; the only data-sized exchange is
-    // the per-doc (id, bucket, f) collapse.
-    "x_dsir" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Corpus.dsirLogWeights(docs,
-          docs.where(col("source").isin("src1", "src2")), "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    // Johnson–Lindenstrauss random projection 64→16: the map-only shrink
-    // run before ANN indexing / pairwise sweeps. Sign matrix is baked
-    // literals (no broadcast, no shuffle); outDim=16 makes the 1/√outDim
-    // scale exactly 0.25 so the output is bit-reproducible.
-    "x_rand_project" -> ((s, dir) =>
-      Similarity.randomProject(t(s, dir, "embeddings"), "vec_id", "embedding",
-          inDim = 64, outDim = 16)
-        .orderBy(col("vec_id"), col("dim"))),
-
-    // Distributed PCA: top principal component by 2 power-iteration
-    // rounds — covariance never materializes; per round one data-sized
-    // per-dim aggregation, dim-sized vectors to the driver, iterates
-    // rounded in-engine so both engines step from identical literals.
-    "x_pca_power" -> ((s, dir) =>
-      Similarity.principalComponent(t(s, dir, "embeddings"), "embedding",
-          dim = 64, rounds = 2)
-        .orderBy(col("dim"))),
-
-    // PCA scores: centered projection of every vector onto the top
-    // component — map-only after the dim-sized basis is in hand.
-    "x_pca_scores" -> ((s, dir) =>
-      Similarity.pcaScores(t(s, dir, "embeddings"), "vec_id", "embedding",
-          dim = 64, rounds = 2)
-        .orderBy(col("vec_id"))),
-
-    // PCA top-2 basis: power iteration with per-round Gram–Schmidt
-    // deflation (ratio of exact dots — no √); the whitening /
-    // embedding-diagnostic basis, still covariance-free.
-    "x_pca_top2" -> ((s, dir) =>
-      Similarity.principalComponents(t(s, dir, "embeddings"), "embedding",
-          dim = 64, nComponents = 2, rounds = 2)
-        .orderBy(col("component"), col("dim"))),
-
-    // Contrastive hard-negative mining: each labeled vector's 3 nearest
-    // DIFFERENT-label neighbors — the mismatch predicate applies before
-    // the bounded top-k' aggregation, so a same-label-dense region
-    // cannot starve the output.
-    "x_hard_negatives" -> ((s, dir) =>
-      Similarity.hardNegatives(t(s, dir, "embeddings"), "vec_id",
-          "embedding", "label", k = 3)
-        .orderBy(col("query_id"), col("rank"))),
-
-    // Asymmetric containment pairs (excerpt/quote detection): the
-    // short-inside-long relation Jaccard misses — decontamination's
-    // "benchmark text embedded in a crawl page" case.
-    "x_containment" -> ((s, dir) =>
-      Dedup.ngramContainmentPairs(t(s, dir, "documents"), "doc_id", "text",
-          shingleN = 5, minContainment = 0.5)
-        .withColumn("containment", round(col("containment"), 9))
-        .withColumn("jaccard", round(col("jaccard"), 9))
-        .orderBy("id_small", "id_big")),
-
-    // Keep-BEST near-dup drop: each Jaccard cluster keeps its longest
-    // copy (n_chars DESC, id ASC) instead of the min id — the real
-    // curation keep policy; winner = one min-of-struct aggregation.
-    "x_dedup_keepbest" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.dropNearDuplicatesKeepBest(docs, "doc_id", "n_chars",
-          Dedup.ngramJaccardPairs(docs, "doc_id", "text", 5, 0.5))
-        .select(col("doc_id"), col("n_chars")).orderBy("doc_id")
-    }),
-
-    // Hybrid text ∪ semantic near-dup drop: n-gram Jaccard pairs UNION
-    // language-blocked cosine pairs feed one transitive clustering —
-    // catches paraphrases (cosine-only) AND template swaps
-    // (Jaccard-only). Pure composition of existing scale shapes.
-    "x_hybrid_dedup" -> ((s, dir) =>
-      Dedup.hybridNearDupDrop(
-          t(s, dir, "documents"), t(s, dir, "embeddings"),
-          "doc_id", "text", "vec_id", "embedding", "lang",
-          saltBuckets = 4)
-        .select(col("doc_id"), col("lang")).orderBy("doc_id")),
-
-    // Multilingual temperature sampling (α = 0.5): per-language resample
-    // plan q ∝ p^α — one count aggregation, everything downstream on the
-    // #strata-row broadcast-sized table.
-    "x_temperature" -> ((s, dir) =>
-      Corpus.temperatureMixture(t(s, dir, "documents"), "lang", alpha = 0.5)
-        .orderBy(col("lang"))),
-
-    // Memorization-risk scoring: fraction of each doc's distinct 5-grams
-    // that appear in ≥2 documents — the per-span signal behind
-    // boilerplate pruning, computed over 8-byte gram hashes (bodies
-    // never shuffle).
-    "x_dup_coverage" -> ((s, dir) =>
-      Corpus.duplicateCoverage(t(s, dir, "documents"), "doc_id", "text",
-          n = 5, minDf = 2L)
-        .orderBy(col("doc_id"))),
-
-    // Deterministic map-only stratified sampling: md5-bucket filter with
-    // per-language rates (en 8/16, others 1/16). No RNG state, no
-    // shuffle — reproducible on 1 executor or 1000.
-    "x_sample" -> ((s, dir) =>
-      Corpus.hashStratifiedSample(t(s, dir, "documents"), "lang", "doc_id",
-        Map("en" -> 8), defaultPer16 = 1)
-        .select(col("doc_id"), col("lang"))
-        .orderBy("doc_id")),
-
-    // Deterministic train/val/test split assignment (80/10/10): 16-bit
-    // md5-bucket cutoffs, map-only, no RNG — the same rows land in the
-    // same split on any cluster size, re-run, or engine, which is what
-    // keeps eval sets stable across pipeline reruns. Oracle mirrors the
-    // literal hex cutoffs (0.8 → 'cccd', 0.9 → 'e666').
-    "x_split" -> ((s, dir) =>
-      Corpus.hashSplit(t(s, dir, "documents"), "doc_id",
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .select(col("doc_id"), col("lang"), col("split"))
-        .orderBy("doc_id")),
-
-    // Rendezvous sharding under today's 32 nodes AND tomorrow's 33:
-    // the moved set is exactly the keys the new shard wins (every
-    // moved row's shard_next = 32 — visible in the result), ~1/33 of
-    // the corpus instead of modulo-remapping's near-total rewrite.
-    // Map-only; the oracle re-derives both argmaxes from one shared
-    // md5 weight table.
-    "x_shard" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      Corpus.rendezvousShard(
-          Corpus.rendezvousShard(d, "doc_id", 32, "shard"),
-          "doc_id", 33, "shard_next")
-        .select(col("doc_id"), col("shard").cast("long").as("shard"),
-          col("shard_next").cast("long").as("shard_next"),
-          (col("shard") =!= col("shard_next")).as("moved"))
-        .orderBy("doc_id")
-    }),
-
-    // Cross-document boilerplate removal (C4/MassiveText line dedup):
-    // any 10-word span occurring in ≥2 distinct documents is deleted
-    // from every document containing it. Unit doc-frequency aggregates
-    // on 8-byte span hashes (strings never shuffle in the count);
-    // bodies shuffle once to rebuild.
-    "x_line_dedup" -> ((s, dir) =>
-      Corpus.removeFrequentUnits(
-          t(s, dir, "documents").select(col("doc_id"), col("text")),
-          "doc_id", TF.wordSpans(col("text"), 10), minDf = 2L)
-        .orderBy("doc_id")),
-
-    // Substring-granular exact dedup (Lee et al. ExactSubstr): content-
-    // defined anchors (md5-prefix cutoff — the portable selection both
-    // engines compute identically) mark every k-gram occurring ≥2 times
-    // corpus-wide; anchors ≤100 apart merge into spans, spans cut from
-    // clean_text. Occurrence counts aggregate 8-byte hashes with an
-    // exact-string confirm; bodies never shuffle.
-    "x_substring_dedup" -> ((s, dir) =>
-      Corpus.dedupSubstringsPortable(
-          t(s, dir, "documents").select(col("doc_id"), col("text")),
-          "doc_id", "text", k = 20, cutoffHex = "10", maxGap = 100)
-        .select(col("doc_id"), col("n_spans"), col("n_dup_anchors"),
-          col("dup_chars"), col("clean_len"), col("clean_text"))
-        .orderBy("doc_id")),
-
-    // Span-level benchmark decontamination: regions of training docs
-    // (doc_id % 10 != 0) that appear verbatim in the benchmark slice
-    // (doc_id % 10 == 0) are marked and cut — surgical removal of the
-    // leak, not whole-document discard. Content-defined anchors both
-    // sides; benchmark anchor vocabulary broadcasts into the mark join.
-    "x_decontam_spans" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Corpus.contaminationSpansPortable(
-          d.where(col("doc_id") % 10 =!= 0).select(col("doc_id"), col("text")),
-          "doc_id", "text",
-          d.where(col("doc_id") % 10 === 0), "text",
-          k = 20, cutoffHex = "10", maxGap = 100)
-        .select(col("doc_id"), col("n_spans"), col("n_contam_anchors"),
-          col("contam_chars"), col("clean_len"), col("clean_text"))
-        .orderBy("doc_id")
-    }),
-
-    // Greedy data selection under a global token budget: best-quality
-    // documents first until 600 tokens are spent. The running sum is the
-    // two-level bucketed cumsum (no single-reducer global window).
-    "x_budget_select" -> ((s, dir) =>
-      Corpus.budgetSelect(
-          t(s, dir, "documents").select(col("doc_id"),
-            TF.qualityScore(col("text")).as("quality"),
-            TF.tokenCount(col("text")).cast("long").as("n_tokens")),
-          "doc_id", col("quality"), col("n_tokens"), budget = 600L)
-        .orderBy("doc_id")),
-
-    // Per-language percentile calibration: raw quality scores rank
-    // within their language ((score, id) total order), pct = SQL
-    // PERCENT_RANK. The rank is the two-level monotone-bucket
-    // decomposition — the data-sized window keys on (lang, bucket),
-    // never on the bare language.
-    "x_score_calibrate" -> ((s, dir) =>
-      Corpus.calibrateScores(
-          t(s, dir, "documents").select(col("doc_id"), col("lang"),
-            TF.qualityScore(col("text")).as("quality")),
-          "doc_id", "lang", col("quality"))
-        .orderBy("doc_id")),
-
-    // Per-group budget selection (per-source/language caps — how mixture
-    // targets become selections): same two-level monotone-bucket cumsum,
-    // every partitioning carries the group key, groups select
-    // independently in one pass. en gets 2000 tokens, zh 800, others 500.
-    "x_budget_by_lang" -> ((s, dir) =>
-      Corpus.budgetSelectPerGroup(
-          t(s, dir, "documents").select(col("doc_id"), col("lang"),
-            TF.qualityScore(col("text")).as("quality"),
-            TF.tokenCount(col("text")).cast("long").as("n_tokens")),
-          "doc_id", "lang", col("quality"), col("n_tokens"),
-          budgets = Map("en" -> 2000L, "zh" -> 800L), defaultBudget = 500L)
-        .orderBy("doc_id")),
-
-    // In-engine linear quality-probe training: 3 full-batch GD rounds on
-    // square loss over md5-hashed bag-of-words features (dim=64), label =
-    // is-English. Per-round numerics follow the pagerank discipline
-    // (double products, decimal-exact sums), so DuckDB unrolling the same
-    // rounds reproduces the weights bit-for-bit.
-    "x_train_probe" -> ((s, dir) =>
-      Corpus.trainLinearProbe(t(s, dir, "documents"), "doc_id", "text",
-          when(col("lang") === "en", 1.0).otherwise(0.0),
-          dim = 64, rounds = 3, lr = 1e-4)
-        .orderBy("bucket")),
-
-    // Probe inference over the trained weights: w·x per document
-    // (map-side broadcast join + one per-doc aggregation) — the gate that
-    // turns the trained probe into a corpus filter.
-    "x_probe_score" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val wts = Corpus.trainLinearProbe(d, "doc_id", "text",
-        when(col("lang") === "en", 1.0).otherwise(0.0),
-        dim = 64, rounds = 3, lr = 1e-4)
-      Corpus.scoreLinearProbe(d, "doc_id", "text", wts, dim = 64)
-        .orderBy("doc_id")
-    }),
-
-    // fastText-style hashed-n-gram classifier inference with planted
-    // dyadic weights (w_b = (((b*37) % 13) - 6)/8, bias -0.25): unigram
-    // + bigram features, md5-16-bit buckets mod 64, decimal-exact mean
-    // pooling — map-only, zero shuffles beyond the presentation sort.
-    // prob (the true sigmoid) stays out of the oracle: JVM and C libm
-    // exp() diverge by 1 ulp on ~0.4% of inputs (see the scaladoc).
-    "x_fasttext" -> ((s, dir) =>
-      Corpus.fastTextScore(t(s, dir, "documents"), "doc_id", "text",
-          weights = (0 until 64).map(b => (((b * 37) % 13) - 6) / 8.0),
-          bias = -0.25)
-        .drop("prob")
-        .orderBy("doc_id")),
-
-    // Symmetric int8 quantization of embeddings (map-only, inside the
-    // scan projection); exploded to scalar rows for the oracle compare.
-    "x_quantize" -> ((s, dir) => {
-      val q = Similarity.quantizeInt8(t(s, dir, "embeddings"), "vec_id", "embedding")
-      q.select(col("vec_id"), col("scale"),
-          posexplode(col("q")).as(Seq("pos", "qv")))
-        .select(col("vec_id"), (col("pos") + 1).cast("long").as("dim"),
-          col("qv").as("q"), col("scale"))
-        .orderBy("vec_id", "dim")
-    }),
-
-    // Per-label mean embeddings (class centroids / k-means M-step):
-    // shuffles (label, dim, value) triples with map-side partials —
-    // reducer state is O(labels × dim) regardless of corpus size.
-    "x_centroid" -> ((s, dir) =>
-      Similarity.labelCentroids(t(s, dir, "embeddings"), "label", "embedding")
-        .orderBy("label", "dim")),
-
-    // Embedding-space outlier gate: every vector's exact cosine to its
-    // OWN label centroid; below 0 ⇒ flagged (mislabeled/garbage). The
-    // centroid table is #labels × dim (broadcast); products accumulate
-    // in DECIMAL so the score hash-matches cross-engine.
-    "x_centroid_outlier" -> ((s, dir) =>
-      Similarity.centroidOutlierScores(t(s, dir, "embeddings"),
-          "vec_id", "embedding", "label", threshold = 0.0)
-        .orderBy("vec_id")),
-
-    // First-class k-means: deterministic spherical Lloyd with cross-
-    // engine-exact arithmetic (decimal-exact dots and sums, round-9
-    // centroids each round) — cluster ids as data, not just the internal
-    // IVF quantizer. Per round: one map-only assignment pass + one
-    // (k × dim)-grid aggregation with map-side partials. The DuckDB
-    // oracle unrolls both Lloyd rounds and hash-matches cluster ids AND
-    // cosines bit-for-bit.
-    "x_kmeans" -> ((s, dir) =>
-      Similarity.kmeansAssign(t(s, dir, "embeddings"), "vec_id", "embedding",
-          k = 8, rounds = 2)
-        .orderBy("vec_id")),
-
-    // Cluster-balanced selection (the SemDeDup/DataComp curation move:
-    // sample evenly across embedding-space clusters so no topic mode
-    // dominates): k-means clusters → exact deterministic k-per-cluster
-    // by md5 order — repartition/rerun-invariant, like x_sample_k.
-    "x_cluster_sample" -> ((s, dir) => {
-      val assigned = Similarity.kmeansAssign(t(s, dir, "embeddings"),
-        "vec_id", "embedding", k = 8, rounds = 2)
-      Corpus.exactKPerStratum(
-          assigned.select(col("cluster"), col("vec_id")),
-          "cluster", "vec_id", k = 20)
-        .orderBy("cluster", "vec_id")
-    }),
-
-    // Cluster-quality diagnostics: size + cohesion (mean/min/max cosine
-    // to own centroid) per cluster — the go/no-go report before using a
-    // clustering for topic balancing. #clusters-sized aggregation.
-    "x_cluster_report" -> ((s, dir) =>
-      Similarity.clusterReport(
-        Similarity.kmeansAssign(t(s, dir, "embeddings"),
-          "vec_id", "embedding", k = 8, rounds = 2))
-        .orderBy("cluster")),
-
-    // Context-window chunking: 64-token chunks with stride 48 (16-token
-    // overlap), exploded to rows. The lambda runs per CHUNK; slice +
-    // array_join do the token work natively.
-    "x_chunk" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        inline(TF.chunkTokens(col("text"), chunkLen = 64, stride = 48)))
-        .orderBy("doc_id", "chunk_idx")),
-
-    // PageRank authority over the customer->supplier purchase graph
-    // (ids disambiguated into one space: cust*2, supp*2+1). 5 damped
-    // rounds, decimal-summed contributions — bit-reproducible, so the
-    // unrolled-SQL oracle hash-matches. interval 3, NOT 5: the round-10
-    // full-suite bench recorded 9.99 s at interval 5 vs 6.12 s at 3
-    // (the isolated 6.7-vs-7.0 reading that motivated 5 didn't survive
-    // in-suite; PPR's own measurement, 6.0 vs 10.7 s, predicted this).
-    // Loop-constant decisions trust full-suite numbers only.
-    "x_pagerank" -> ((s, dir) => {
-      val e = t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-      graft.functions.Graph.pageRank(e, iterations = 5, checkpointInterval = 3)
-        .select(col("id"), round(col("rank"), 9).as("rank"))
-        .orderBy("id")
-    }),
-
-    // Weighted shortest paths from the anchor customers (custkey % 50
-    // == 0) over the undirected purchase graph, edge weight = cheapest
-    // line quantity ever shipped between the pair: Bellman–Ford with
-    // delta-set relaxation, 4 bounded rounds, exact integers end-to-end
-    // — the unrolled oracle hash-matches, converged flag in-plan.
-    "x_sssp" -> ((s, dir) => {
-      val base = t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"),
-          col("l_quantity").cast("long").as("w"))
-      val und = base.union(
-        base.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      graft.functions.Graph
-        .shortestPathsInt(und, col("id") % 100 === 0, rounds = 4)
-        .orderBy("id")
-    }),
-
-    // HITS hubs/authorities over the same purchase graph — the other
-    // classic link fixpoint (customers = hubs, suppliers = authorities):
-    // 2 mutual-reinforcement rounds, DECIMAL contribution sums, L2
-    // normalizers as 1-row broadcasts, round-9 scores between
-    // half-rounds so the unrolled oracle matches bit-for-bit.
-    "x_hits" -> ((s, dir) => {
-      val e = t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-      graft.functions.Graph.hits(e, rounds = 2).orderBy("id")
-    }),
-
-    // Z-order (Morton) codes — the clustering key behind
-    // Sinks.zorderedParquet's multi-dimensional data skipping.
-    "x_zorder" -> ((s, dir) =>
-      t(s, dir, "events").select(
-        col("event_id"), col("user_id"),
-        graft.functions.Layout.zValue16(col("user_id"), col("event_id")).as("z"))
-        .orderBy("event_id")),
-
-    // Sequence-packing offsets: exclusive cumsum of token counts in
-    // doc_id order via the two-level bucket scan (no single-reducer
-    // global window), plus the 2048-token chunk each doc starts in.
-    "x_pack" -> ((s, dir) =>
-      Corpus.packOffsets(t(s, dir, "documents"), "doc_id", "text",
-        seqLen = 2048L, bucketWidth = 64L)
-        .orderBy("doc_id")),
-
-    // Full sequence-packing spans: every doc explodes into the spans it
-    // contributes to each 128-token training sequence it crosses —
-    // packOffsets' two-level cumsum plus a bounded map-only explode.
-    "x_pack_spans" -> ((s, dir) =>
-      Corpus.packSpans(t(s, dir, "documents"), "doc_id", "text",
-        seqLen = 128L, bucketWidth = 64L)
-        .orderBy("doc_id", "seq_id")),
-
-    // Incremental dedup — tomorrow's crawl against yesterday's corpus:
-    // the index side is the distinct 8-byte fingerprints of the "old"
-    // corpus (doc_id % 3 = 0), the "new" batch is the rest PLUS planted
-    // re-crawls (old docs under fresh ids) that the anti-join must drop.
-    // New bodies never shuffle; the index is hash-sized and broadcast.
-    // Oracle mirrors with exact text matching (hash engine-side, same
-    // contract as the fingerprint dedup family).
-    "x_dedup_incremental" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val old = docs.where(col("doc_id") % 3 === 0)
-      val fresh = docs.where(col("doc_id") % 3 =!= 0)
-        .select(col("doc_id"), col("text"))
-        .unionByName(old.where(col("doc_id") % 6 === 0)
-          .select((col("doc_id") + 20000000L).as("doc_id"), col("text")))
-      Dedup.dedupAgainstIndex(fresh, "text",
-          Dedup.fingerprintIndex(old, "text"))
-        .select(col("doc_id")).orderBy("doc_id")
-    }),
-
-    // C4 rule-based cleaning gate over line structure derived in-query
-    // (the fixture is single-line): tokens chunk into 10-token lines,
-    // every third line left WITHOUT terminal punctuation — the gate must
-    // keep exactly the punctuated ≥3-token lines and flag docs on the
-    // published heuristics (≥3 surviving lines, no braces, no lorem
-    // ipsum). Map-only: the whole derivation + gate runs inside the scan
-    // projection, zero exchanges before the presentation sort.
-    "x_c4_gate" -> ((s, dir) => {
-      val derived = t(s, dir, "documents")
-        .select(col("doc_id"), plantedLines.as("ltext"))
-      Corpus.c4Gate(derived, "doc_id", "ltext").orderBy("doc_id")
-    }),
-
-    // Stage-by-stage curation funnel over the planted line structure:
-    // input → C4 survivors → Gopher survivors, each stage reporting
-    // docs + token volume — the retention table a 100 TB curation run
-    // publishes ("which gate costs how much corpus"). Three 1-row
-    // map-only aggregates unioned.
-    "x_curation_funnel" -> ((s, dir) => {
-      val derived = t(s, dir, "documents")
-        .select(col("doc_id"), plantedLines.as("ltext"))
-      Corpus.curationFunnel(derived, "doc_id", "ltext",
-        minWords = 30, minStop = 1).orderBy("stage")
-    }),
-
-    // Incremental NEAR-dup dedup — the near-dup analogue of
-    // x_dedup_incremental: yesterday's corpus persists a MinHash band
-    // index; today's batch plants mutated re-crawls (one token dropped
-    // from each eligible old doc) that MUST collide with the index in
-    // some band and drop. 16 bands × 2 rows — the recall-heavy regime an
-    // index you dedup AGAINST wants: detection ≥ 0.999 down to Jaccard
-    // 0.55 (short docs with repeated shingles land well below the naive
-    // ≈ 0.86 estimate — measured, 8×4 missed 3 of 553 at sf0.1), and
-    // signatures are xxhash-seeded, so the outcome is deterministic —
-    // the oracle pins dropped TRUE.
-    "x_neardedup_incremental" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val toks = split(trim(col("text")), "\\s+")
-      val old = docs.where(col("doc_id") % 3 === 0)
-      val index = Dedup.minhashBandIndex(old, "text",
-        shingleN = 5, numHashes = 32, rowsPerBand = 2)
-      val planted = old
-        .where(col("doc_id") % 6 === 0 && size(toks) >= 40)
-        .select((col("doc_id") + 30000000L).as("doc_id"),
-          array_join(filter(toks, (_, i) => i =!= 16), " ").as("text"))
-      val fresh = docs.where(col("doc_id") % 3 =!= 0)
-        .select(col("doc_id"), col("text"))
-        .unionByName(planted)
-      val survived = Dedup.nearDedupAgainstIndex(fresh, "doc_id", "text",
-          index, shingleN = 5, numHashes = 32, rowsPerBand = 2)
-        .select(col("doc_id").as("copy_id"), lit(true).as("s"))
-      planted.select((col("doc_id") - 30000000L).as("doc_id"),
-          col("doc_id").as("copy_id"))
-        .join(survived, Seq("copy_id"), "left")
-        .select(col("doc_id"), col("copy_id"),
-          coalesce(!col("s"), lit(true)).as("dropped_by_index"))
-        .orderBy("doc_id")
-    }),
-
-    // Gopher document-quality gate (Rae et al. 2021 App. A): word-count
-    // band, mean word length, symbol ratio, alphabetic-word fraction,
-    // stop-word presence — document statistics complementing x_c4_gate's
-    // line rules. Map-only; every metric from substring/size primitives
-    // ("has a letter" = lower(w) != upper(w), locale-free).
-    "x_gopher_gate" -> ((s, dir) =>
-      Corpus.gopherGate(t(s, dir, "documents"), "doc_id", "text",
-          minWords = 30L,
-          // the synthetic vocabulary carries only "the" of the 8 canonical
-          // stop words — minStop=1 keeps the flag informative here (the
-          // operator default stays at the published 2)
-          minStop = 1)
-        .orderBy("doc_id")),
-
-    // Per-language curation funnel report: doc/token volume, decimal-
-    // exact mean quality, gopher-kept counts — one map-only gate pass +
-    // one group aggregation, the observability a curation run publishes.
-    "x_curation_report" -> ((s, dir) =>
-      Corpus.curationReport(t(s, dir, "documents"), "doc_id", "lang",
-          "text", minWords = 30L, minStop = 1)
-        .orderBy("lang")),
-
-    // BPE trainer statistics round: adjacent character-pair counts
-    // weighted by word frequency, computed vocab-first (the corpus
-    // shuffles once into its vocabulary; the pair explode is
-    // vocabulary-sized). Top 30 pairs = the trainer's next 30 merge
-    // candidates.
-    "x_bpe_pairs" -> ((s, dir) =>
-      Corpus.bpePairCounts(t(s, dir, "documents"), "text")
-        .orderBy(col("cnt").desc, col("pair"))
-        .limit(30)),
-
-    // Character-distribution entropy (compression-proxy gibberish
-    // detector): ln n − Σ k·ln k / n over per-doc code-point counts;
-    // every ln input is an integral double and the sum is decimal-
-    // accumulated, so the signal hash-matches cross-engine.
-    "x_char_entropy" -> ((s, dir) =>
-      Corpus.charEntropy(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-
-    // Order-1 entropy rate: corpus char-bigram conditional entropy
-    // H(Y|X) beside the order-0 marginal — the gap is how much one
-    // char of context compresses the next (templated text collapses
-    // it). Alphabet^2-sized aggregation, integral-ln ladder.
-    "x_entropy_rate" -> ((s, dir) =>
-      Corpus.charBigramEntropy(t(s, dir, "documents"), "text")),
-
-    // Burrows' Delta provenance distance between the 20 sources over
-    // the top-30 words: z-standardized relative frequencies, mean
-    // |z| gap per pair — near-zero pairs are mirrored feeds, lone
-    // outliers are provenance anomalies. 190 pairs, all K x S sized
-    // after one (source, word) aggregation.
-    "x_burrows_delta" -> ((s, dir) =>
-      Corpus.burrowsDelta(t(s, dir, "documents"), "text", "source",
-        kWords = 30)),
-
-    // Simpson repeat-rate of the vocabulary: P(two tokens are the
-    // same type) as an exact integer rational — the corpus-level
-    // lexical-concentration dial (rising = boilerplate convergence).
-    "x_simpson" -> ((s, dir) =>
-      Corpus.simpsonRepeatRate(t(s, dir, "documents"), "text")),
-
-    // Jensen-Shannon divergence between the en and zh token mixes:
-    // the bounded symmetric corpus-distance scalar, mixture algebra
-    // multiplied through so ln only sees exact integer products.
-    "x_js_div" -> ((s, dir) =>
-      Corpus.jsDivergence(t(s, dir, "documents"), "text", "lang",
-        "en", "zh")),
-
-    // Dunning G2 keyness: WHICH tokens drive the en-vs-zh mix apart
-    // (the drill-down under x_js_div), four pinned ln-exact cell
-    // terms, enrichment by exact cross-product, top-30.
-    "x_keyness" -> ((s, dir) =>
-      Corpus.keyness(t(s, dir, "documents"), "text", "lang",
-        "en", "zh", k = 30, minCount = 5L)),
-
-    // Trigram novelty vs everything earlier in doc_id order: distinct
-    // grams charged to their min-id doc (vocabGrowth's prefix
-    // semantics per doc) — the re-crawl triage / curriculum signal.
-    "x_novelty" -> ((s, dir) =>
-      Corpus.ngramNovelty(t(s, dir, "documents"), "doc_id", "text", n = 3)
-        .orderBy("doc_id")),
-
-    // Train-to-encode round trip: the 6 learned merges applied to every
-    // document (map-only after training; tokens joined for the compare).
-    "x_bpe_encode" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val merges = Corpus.bpeTrain(docs.select(col("text")), "text", nMerges = 6)
-        .orderBy("merge_rank").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      Corpus.bpeEncode(docs.select(col("doc_id"), col("text")),
-          "doc_id", "text", merges)
-        .select(col("doc_id"), col("n_tokens"),
-          array_join(col("bpe_tokens"), " ").as("tokens_joined"))
-        .orderBy("doc_id")
-    }),
-
-    // Byte-level (total) BPE seeding + round trip: every 7th doc gets a
-    // planted accented/CJK/emoji suffix, every word decomposes to
-    // 2-hex-char byte tokens (no [UNK] possible), and `lossless`
-    // witnesses that concat-hex → bytes → UTF-8 reassembles the
-    // whitespace-normalized text exactly. Merge application over byte
-    // tokens shares x_bpe_encode's already-oracled kernel; this query
-    // oracles the byte alphabet itself, so merges stay empty here.
-    "x_bpe_bytes" -> ((s, dir) => {
-      val planted = t(s, dir, "documents")
-        .select(col("doc_id"),
-          when(pmod(col("doc_id"), lit(7)) === 0,
-            concat(col("text"), lit(" héllo 漢字🦉")))
-            .otherwise(col("text")).as("text"))
-        .withColumn("__norm", array_join(TF.tokens(col("text")), " "))
-      Corpus.bpeByteEncode(planted, "doc_id", "text", merges = Nil,
-          carryCols = Seq("__norm"))
-        .select(col("doc_id"), col("n_tokens"),
-          array_join(col("bpe_tokens"), " ").as("tokens_joined"),
-          col("decoded"),
-          (col("decoded") === col("__norm")).as("lossless"))
-        .orderBy("doc_id")
-    }),
-
-    // Full in-engine BPE training: 6 merge rules learned iteratively
-    // from the corpus (pair argmax per round, deterministic (cnt DESC,
-    // l, r) tiebreak; greedy left-to-right re-tokenize via the native
-    // BpeMergePair pass). Every round touches only vocabulary-sized
-    // data; one row per round reaches the driver.
-    "x_bpe_train" -> ((s, dir) =>
-      Corpus.bpeTrain(t(s, dir, "documents").select(col("text")),
-          "text", nMerges = 6)
-        .orderBy("merge_rank")),
-
-    // Unigram-LM (SentencePiece-style) tokenizer training — the other
-    // mainstream subword family next to BPE: substring seed vocabulary,
-    // 2 Viterbi-EM rounds (exact-decimal DP under round-9 log probs,
-    // deterministic (score, piece-count, length) tiebreaks), char-floor
-    // coverage, prune to 40 + chars. The oracle unrolls BOTH EM rounds —
-    // the 12-position DP and its backtrack included — in DuckDB and
-    // hash-matches counts AND log probs bit-for-bit.
-    "x_unigram_train" -> ((s, dir) =>
-      Corpus.unigramTrain(t(s, dir, "documents"), "text",
-          vocabSize = 40, rounds = 2)
-        .orderBy("piece")),
-
-    // Viterbi encode under the trained unigram vocabulary: map-only over
-    // docs (vocab rides as plan state), per-word max-log-prob
-    // segmentations concatenated in document order. Same unrolled-DP
-    // oracle chain, extended with the per-doc backtrack ordering.
-    "x_unigram_encode" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .where(col("text").isNotNull && length(trim(col("text"))) > 0)
-      val vocab = Corpus.unigramTrain(docs, "text", vocabSize = 40, rounds = 2)
-        .collect().map(r => r.getString(0) -> r.getDouble(2)).toSeq
-      Corpus.unigramEncode(docs, "doc_id", "text", vocab)
-        .select(col("doc_id"), array_join(col("pieces"), " ").as("encoded"),
-          col("n_pieces"))
-        .orderBy("doc_id")
-    }),
-
-    // Greedy WordPiece encode (the BERT tokenizer) against a vocabulary
-    // derived deterministically from the unigram trainer (pieces + their
-    // ##-continuation forms): longest-match-first per position, map-only.
-    // The oracle replays the vocabulary chain AND the forward walk.
-    "x_wordpiece" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .where(col("text").isNotNull && length(trim(col("text"))) > 0)
-      val pieces = Corpus.unigramTrain(docs, "text", vocabSize = 40, rounds = 2)
-        .collect().map(_.getString(0)).toSeq
-      Corpus.wordpieceEncode(docs, "doc_id", "text",
-          pieces ++ pieces.map("##" + _))
-        .select(col("doc_id"), array_join(col("pieces"), " ").as("encoded"),
-          col("n_pieces"))
-        .orderBy("doc_id")
-    }),
-
-    // Weighted sampling WITHOUT replacement + unbiased subset-sum
-    // estimators — priority sampling (Duffield–Lund–Thorup, JACM '07)
-    // with weights = n_chars: top-k by the fixed-point integer priority
-    // ⌊w·10^12/u⌋ (u = 48-bit md5 draw, ties → doc_id), τ = (k+1)-th
-    // priority, estimator max(w, τ) in the same 10^-12 units. Selection
-    // runs as per-partition heaps merged on the driver; no corpus-wide
-    // sort and no float anywhere in the decision path.
-    "x_weighted_sample" -> ((s, dir) =>
-      Corpus.prioritySample(t(s, dir, "documents"), "doc_id",
-          col("n_chars"), k = 50, seed = "ps")
-        .orderBy("doc_id")),
-
-    // Stratified priority sampling: an independent weighted top-20 per
-    // language, each with its own τ and unbiased estimators — ONE
-    // group-keyed exchange, WindowGroupLimit heap-truncated before the
-    // shuffle. Same fixed-point discipline as x_weighted_sample.
-    "x_weighted_sample_lang" -> ((s, dir) =>
-      Corpus.prioritySampleByGroup(t(s, dir, "documents"), "doc_id",
-          col("n_chars"), "lang", k = 20, seed = "ps")
-        .orderBy("lang", "doc_id")),
-
-    // Last-touch attribution: every purchase credits the latest
-    // click/view/signup by the same user in the prior 7 days — one
-    // user-keyed window pass (running struct-max, integer microsecond
-    // arithmetic), no per-conversion joins, 'none' when nothing
-    // in-window precedes it.
-    "x_attribution" -> ((s, dir) =>
-      graft.functions.Events.lastTouchAttribution(t(s, dir, "events"),
-          "user_id", "ts", "event_type", Seq("click", "view", "signup"),
-          "purchase", 7L * 86400L * 1000000L)
-        .orderBy("event_id")),
-
-    // Compaction planning: pack (lang/source, total chars) segments
-    // into 10k-char bins by cumulative-quota packing — (size desc,
-    // name) order, bin = exclusive-prefix div target; the two-level
-    // band decomposition keeps the prefix sum single-reducer-free.
-    // (The file-listing path over _metadata is CompactionSpec's.)
-    "x_compaction" -> ((s, dir) => {
-      val seg = t(s, dir, "documents")
-        .groupBy(concat_ws("/", col("lang"), col("source")).as("seg"))
-        .agg(sum(col("n_chars")).as("sz"))
-      graft.sources.Compaction.plan(seg, "seg", "sz", targetBytes = 10000L)
-        .orderBy("name")
-    }),
-
-    // Multi-touch attribution: per-user range join executed as the
-    // (user, window-bin) equi-join — conversions explode over ≤ 2 bins,
-    // exact time gate prunes; credit = 1/n_touches exact rational.
-    "x_multitouch" -> ((s, dir) =>
-      graft.functions.Events.linearAttribution(t(s, dir, "events"),
-          "user_id", "ts", "event_type", Seq("click", "view", "signup"),
-          "purchase", 7L * 86400L * 1000000L)
-        .orderBy("event_id", "touch_event")),
-
-    // Per-session table (30-min gap): lag + running sum in one user-
-    // keyed window pass, (user, session)-keyed agg — exact micros.
-    "x_sessions" -> ((s, dir) =>
-      graft.functions.Events.sessionize(t(s, dir, "events"),
-          "user_id", "ts", gapUs = 1800000000L)
-        .orderBy("user", "session_seq")),
-
-    // 3-step journey census: one user-keyed k-lag window pass, path-
-    // keyed agg with map-side partials, minCount tail guard.
-    "x_paths" -> ((s, dir) =>
-      graft.functions.Events.pathCounts(t(s, dir, "events"),
-          "user_id", "ts", "event_type", k = 3, minCount = 5L)
-        .orderBy(col("n").desc, col("path"))),
-
-    // First-order Markov transition census: one user-keyed lag pass,
-    // pair-keyed agg with map-side partials (≤ #types² rows per
-    // partition), exact integer counts — MLE probability = n/n_from
-    // left to the consumer.
-    "x_transitions" -> ((s, dir) =>
-      graft.functions.Events.transitionCounts(t(s, dir, "events"),
-          "user_id", "ts", "event_type")
-        .orderBy("from_type", "to_type")),
-
-    // Gaps-and-islands streak census: longest consecutive same-type
-    // run per (user, type), ties pinned on (ts, event_id) — the
-    // adjacency signal (outage/bot runs) a plain count can't see.
-    "x_streaks" -> ((s, dir) =>
-      graft.functions.Events.streaks(t(s, dir, "events"),
-          "user_id", "ts", "event_type", "event_id")
-        .orderBy("user_id", "event_type")),
-
-    // Per-user CUSUM changepoint scan: running sum of deviations from
-    // the user's own mean peaks at the level shift; pinned-order float
-    // sequence (the r_window_running discipline), DECIMAL(28,9) mean.
-    "x_cusum" -> ((s, dir) =>
-      graft.functions.Events.cusumScan(t(s, dir, "events"),
-          "user_id", "ts", "value", "event_id")
-        .orderBy("user_id")),
-
-    // Lexical diversity census: type-token + distinct-bigram ratios as
-    // floor-ppm ints, computed entirely inside one scan projection —
-    // zero shuffles, nothing leaves its map task.
-    "x_diversity" -> ((s, dir) =>
-      Corpus.diversitySignals(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-
-    // DAU/MAU stickiness per observed day, trailing 30 days, exact
-    // floor-ppm ratio — the deduped activity table explodes to the
-    // days it supports instead of a 30× sliding re-scan of the stream.
-    "x_stickiness" -> ((s, dir) =>
-      graft.functions.Events.stickiness(t(s, dir, "events"),
-          "user_id", "ts", windowDays = 30)
-        .orderBy("day")),
-
-    // Cohort LTV curves: per (cohort day, day offset) active users,
-    // day value and the cohort's cumulative value — decimal-summed,
-    // cumsum over the aggregated grid only.
-    "x_cohort_value" -> ((s, dir) =>
-      graft.functions.Events.cohortValue(t(s, dir, "events"),
-          "user_id", "ts", "value")
-        .orderBy("cohort_day", "day_offset")),
-
-    // Purged temporal split: train before 2024-01-20, per-user 12 h
-    // embargo anchored at each user's last training row, exact µs.
-    "x_temporal_split" -> ((s, dir) =>
-      Corpus.temporalSplit(
-          t(s, dir, "events").select(
-            col("event_id"), col("user_id"), col("ts")),
-          "user_id", "ts",
-          cutoffUs = 1705708800000000L, embargoUs = 43200000000L)
-        .orderBy("event_id")),
-
-    // Co-missingness census: nulls planted on two independent cadences
-    // (event_id % 7 and % 5), pattern = null-mask string per row — the
-    // "are these columns missing TOGETHER" audit in one aggregation.
-    "x_missingness" -> ((s, dir) =>
-      graft.functions.Stats.missingness(
-          t(s, dir, "events").select(
-            when(pmod(col("event_id"), lit(7)) === 0,
-              lit(null).cast("double")).otherwise(col("value")).as("value"),
-            when(pmod(col("event_id"), lit(5)) === 0,
-              lit(null).cast("string"))
-              .otherwise(col("event_type")).as("event_type"),
-            col("user_id")),
-          Seq("value", "event_type", "user_id"))
-        .orderBy("pattern")),
-
-    // Monotone-drift audit: exact Spearman rank-correlation pieces of
-    // value against event time — ranks assigned WITHOUT a global sort
-    // (two-level bucket decomposition), doubled through ties, rho as an
-    // exact integer rational.
-    "x_spearman" -> ((s, dir) =>
-      graft.functions.Stats.spearmanPieces(
-          t(s, dir, "events").select(
-            expr("unix_micros(ts)").as("t_us"), col("value")),
-          "t_us", "value")
-        .select(col("n"), big(col("sum_d2_4x"), "sum_d2_4x"),
-          big(col("rho_num"), "rho_num"), big(col("rho_den"), "rho_den"))),
-
-    // One-number calibration close over the same inputs as
-    // x_reliability: ECE = sum n_b|acc-conf|/N with the per-bin term
-    // pinned-order doubles over exact pieces, bin sum in
-    // DECIMAL(30,15).
-    "x_ece" -> ((s, dir) =>
-      graft.functions.Stats.expectedCalibrationError(
-        t(s, dir, "documents").select(
-          (pmod(col("n_chars"), lit(100)).cast("double") / lit(100.0))
-            .as("score"),
-          (col("lang") === "en").as("label")),
-        "score", "label", nBins = 10, lo = 0.0, hi = 1.0)),
-
-    // Exact two-sample Kolmogorov-Smirnov D between the click and
-    // purchase value distributions — shape-shift detection at equal
-    // moments, as the exact integer rational max|n_b cumA - n_a cumB|
-    // over n_a n_b. Two-level bucketed cumsums, no global sort.
-    "x_ks_test" -> ((s, dir) =>
-      graft.functions.Stats.ksStatistic(
-        t(s, dir, "events"), "value", "event_type", "click", "purchase")),
-
-    // Cramer's V close of the priority x status contingency: sparse
-    // chi2 via the unobserved-cells-contribute-e identity, exact
-    // integer pieces, DECIMAL(30,15) term sum, IEEE sqrt.
-    "x_cramers_v" -> ((s, dir) =>
-      graft.functions.Stats.cramersV(
-        t(s, dir, "orders"), "o_orderpriority", "o_orderstatus")),
-
-    // Mutual information between document language and source (nats),
-    // marginal entropies and geometric-mean NMI: every ln input an
-    // integral double (o*n, r*c), cell terms in DECIMAL(30,15).
-    "x_mutual_info" -> ((s, dir) =>
-      graft.functions.Stats.categoricalMI(
-        t(s, dir, "documents"), "lang", "source")),
-
-    // One-way ANOVA of event value across hour-of-day: eta-squared +
-    // F — "is the time-of-day profile real structure?" before anyone
-    // fits a seasonal model. One group-keyed aggregation; decimal
-    // sums, pinned closes, nullif degeneracy guards.
-    "x_anova" -> ((s, dir) =>
-      graft.functions.Stats.anovaOneWay(
-        t(s, dir, "events").select(hour(col("ts")).as("hod"), col("value")),
-        "value", "hod")),
-
-    // Hill tail-index of order totals over the top-101 order stats:
-    // exact-cent values so ln only sees integral doubles, k log-ratios
-    // in DECIMAL(30,15) — alpha <= 2 means the tail has no variance
-    // and mean-based planning is fiction. Pairs with x_gini.
-    "x_hill" -> ((s, dir) =>
-      graft.functions.Stats.hillTailIndex(
-        t(s, dir, "orders"), "o_totalprice", "o_orderkey",
-        k = 100, scale = 2)),
-
-    // Benford first-digit audit of order totals: exact-cent leading
-    // digits (integer string, never double formatting) vs the baked
-    // log10(1+1/d) expectations, per-digit chi2 terms — the
-    // fabricated-data/unit-mixing tripwire.
-    "x_benford" -> ((s, dir) =>
-      graft.functions.Stats.benfordCensus(
-        t(s, dir, "orders"), "o_totalprice", scale = 2)),
-
-    // Revenue-concentration audit: Gini + top-1/top-10 shares of
-    // customer spend — the skew report that decides salting and
-    // per-stratum sampling caps. Spend sums in DECIMAL(18,2), Gini
-    // blocks are exact integer cents, the close is pinned-order
-    // doubles.
-    "x_gini" -> ((s, dir) =>
-      graft.functions.Stats.giniConcentration(
-        t(s, dir, "orders"), "o_custkey", "o_totalprice",
-        scale = 2, topN = 10)),
-
-    // Column-dependence audit: the orders priority×status contingency
-    // table with the exact cross-product dependence score per cell —
-    // the "is this feature leaking into that label/split" census.
-    "x_contingency" -> ((s, dir) =>
-      graft.functions.Stats.contingency(
-          t(s, dir, "orders"), "o_orderpriority", "o_orderstatus")
-        .withColumn("dep", big(col("dep"), "dep"))
-        .orderBy("o_orderpriority", "o_orderstatus")),
-
-    // Exact ROC-AUC of a score against a label via the Mann–Whitney
-    // rank-sum identity — doubled average ranks (ties count ½), no
-    // global sort, the AUC as an exact integer rational; finals
-    // narrowed to BIGINT per the §2.7 gate convention.
-    "x_auc" -> ((s, dir) =>
-      graft.functions.Stats.aucPieces(
-          t(s, dir, "documents").select(
-            col("n_chars").cast("double").as("score"),
-            (col("lang") === "en").as("label")),
-          "score", "label")
-        .select(col("n_pos"), col("n_neg"),
-          big(col("sum_r2_pos"), "sum_r2_pos"),
-          big(col("auc_num"), "auc_num"),
-          big(col("auc_den"), "auc_den"))),
-
-    // Confusion report of a shipped gate (pred = long doc, label = en):
-    // exact tp/fp/tn/fn, precision/recall/F1/accuracy as floor ppm,
-    // degenerate denominators NULL (never a fabricated 0 or 1).
-    "x_confusion" -> ((s, dir) =>
-      graft.functions.Stats.confusionStats(
-        t(s, dir, "documents").select(
-          (col("n_chars") >= 200).as("pred"),
-          (col("lang") === "en").as("label")),
-        "pred", "label")),
-
-    // Calibration reliability table: fixed-width score bins, exact
-    // per-bin positives (floor-ppm rate), decimal-summed mean score —
-    // "does a 0.7 mean 70%". Empty bins emitted, never silently holed.
-    "x_reliability" -> ((s, dir) =>
-      graft.functions.Stats.reliabilityDiagram(
-          t(s, dir, "documents").select(
-            (pmod(col("n_chars"), lit(100)).cast("double") / lit(100.0))
-              .as("score"),
-            (col("lang") === "en").as("label")),
-          "score", "label", nBins = 10, lo = 0.0, hi = 1.0)
-        .orderBy("bin")),
-
-    // Per-language AUC: one Mann–Whitney row per slice (ranks within
-    // group via the grouped two-level decomposition — no global or
-    // per-group sort), because a global 0.9 can hide a coin-flip score
-    // on one language; finals narrowed to BIGINT per the §2.7 gate.
-    "x_auc_by_group" -> ((s, dir) =>
-      graft.functions.Stats.aucPiecesByGroup(
-          t(s, dir, "documents").select(col("lang"),
-            col("n_chars").cast("double").as("score"),
-            (pmod(col("doc_id"), lit(2)) === 0).as("label")),
-          "score", "label", "lang")
-        .select(col("lang"), col("n_pos"), col("n_neg"),
-          big(col("sum_r2_pos"), "sum_r2_pos"),
-          big(col("auc_num"), "auc_num"),
-          big(col("auc_den"), "auc_den"))
-        .orderBy("lang")),
-
-    // Per-language confusion report of the shipped gate — the form a
-    // per-slice quality gate is monitored in; one group-keyed
-    // aggregation with map-side partials.
-    "x_confusion_by_group" -> ((s, dir) =>
-      graft.functions.Stats.confusionStatsByGroup(
-          t(s, dir, "documents").select(col("lang"),
-            (col("n_chars") >= 200).as("pred"),
-            (pmod(col("doc_id"), lit(2)) === 0).as("label")),
-          "pred", "label", "lang")
-        .orderBy("lang")),
-
-    // Per-language calibration table: "0.7 means 70%" must hold per
-    // slice; full (group × bin) grid emitted for every group with
-    // eligible rows.
-    "x_reliability_by_group" -> ((s, dir) =>
-      graft.functions.Stats.reliabilityDiagramByGroup(
-          t(s, dir, "documents").select(col("lang"),
-            (pmod(col("n_chars"), lit(100)).cast("double") / lit(100.0))
-              .as("score"),
-            (pmod(col("doc_id"), lit(2)) === 0).as("label")),
-          "score", "label", "lang", nBins = 10, lo = 0.0, hi = 1.0)
-        .orderBy("lang", "bin")),
-
-    // Equal-frequency decile feature: bucket index from 9 exact
-    // order-statistic cuts resolved by bisection (no global sort —
-    // the scale-honest ntile), assignment a map-only projection.
-    "x_qbucket" -> ((s, dir) =>
-      graft.functions.Stats.quantileBucket(
-          t(s, dir, "events").select(col("event_id"), col("value")),
-          "value", nBuckets = 10)
-        .orderBy("event_id")),
-
-    // Per-language decile feature — the cuts computed independently
-    // per group (one global grid is wrong across languages with
-    // different length scales); one group-keyed window pass reduced to
-    // a #langs-sized cut-array table, assignment map-only.
-    "x_qbucket_by_lang" -> ((s, dir) =>
-      graft.functions.Stats.quantileBucketByGroup(
-          t(s, dir, "documents").select(col("doc_id"), col("lang"),
-            col("n_chars")),
-          "n_chars", "lang", nBuckets = 10)
-        .orderBy("doc_id")),
-
-    // Group-median imputation: nulls planted deterministically
-    // (event_id % 7), filled with the type's exact lower-median value;
-    // the was_filled flag marks rows a consumer must still handle.
-    "x_impute" -> ((s, dir) =>
-      graft.functions.Stats.imputeByGroup(
-          t(s, dir, "events").select(col("event_id"), col("event_type"),
-            when(pmod(col("event_id"), lit(7)) === 0,
-              lit(null).cast("double"))
-              .otherwise(col("value")).as("value")),
-          "value", "event_type", strategy = "median")
-        .orderBy("event_id")),
-
-    // Token-level corpus drift: the 100 tokens whose rates differ most
-    // between two slices, ranked by the exact cross-product statistic
-    // |c_a·N_b − c_b·N_a| (integer — no float ratio in a ranking key).
-    "x_token_shift" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Corpus.tokenShiftTopK(
-          d.where(pmod(col("doc_id"), lit(3)) === 0),
-          d.where(pmod(col("doc_id"), lit(3)) =!= 0),
-          "text", k = 100)
-        .withColumn("shift", big(col("shift"), "shift"))
-    }),
-
-    // Retrieval evaluation: per-language top-10 ranking (longest docs
-    // first — a deterministic stand-in ranker) scored against the
-    // src0-membership relevance set: hits@k, first relevant rank,
-    // precision/recall as exact floor-ppm.
-    "x_retrieval_eval" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("lang"))
-        .orderBy(col("n_chars").desc, col("doc_id").asc)
-      val ranked = d.select(col("lang"), col("doc_id"), col("n_chars"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .where(col("rank") <= 10)
-      val qrels = d.where(col("source") === "src0")
-        .select(col("lang"), col("doc_id"))
-      Corpus.retrievalEval(ranked, qrels, "lang", "doc_id", "rank", k = 10)
-        .orderBy("lang")
-    }),
-
-    // Robust per-type outlier flags: Hampel rule |v − med| > 3·mad with
-    // both medians as exact lower-median order statistics — one wild
-    // value can't drag the fences the way a z-score's mean/stddev can.
-    "x_outliers" -> ((s, dir) =>
-      graft.functions.Stats.madOutliers(
-          t(s, dir, "events").select(
-            col("event_id"), col("event_type"), col("value")),
-          "value", "event_type", k = 3.0)
-        .orderBy("event_id")),
-
-    // Per-user exact spending trend: least-squares slope of value
-    // against the hour index since 2024-01-01 (fixture epoch; offsets
-    // non-negative so div == floor in both engines), emitted as the
-    // exact rational slope_num/slope_den in value-micro-units per hour.
-    "x_trend" -> ((s, dir) =>
-      graft.functions.Events.trendStats(
-          t(s, dir, "events").where(col("ts").isNotNull)
-            .withColumn("hour_idx", expr(
-              "(unix_micros(ts) - 1704067200000000L) div 3600000000L")),
-          "user_id", "hour_idx", "value")
-        .select(col("user_id"), col("n"),
-          big(col("sum_x"), "sum_x"),
-          big(col("sum_y_micro"), "sum_y_micro"),
-          big(col("sum_xy_micro"), "sum_xy_micro"),
-          big(col("sum_xx"), "sum_xx"),
-          big(col("slope_num"), "slope_num"),
-          big(col("slope_den"), "slope_den"))
-        .orderBy("user_id")),
-
-    // k-anonymity audit on customer quasi-identifiers: every
-    // (nation, segment) combination shared by fewer than 10 customers
-    // is a linkable group; the dataset-level verdict (row/group census,
-    // achieved anonymity k) rides every row as constant columns.
-    "x_kanon" -> ((s, dir) =>
-      graft.functions.Stats.kAnonymity(
-          t(s, dir, "customer").select(col("c_nationkey"), col("c_mktsegment")),
-          Seq("c_nationkey", "c_mktsegment"), k = 10)
-        .orderBy("c_nationkey", "c_mktsegment")),
-
-    // Market-basket association pairs over orders: parts co-occurring
-    // in ≥ 2 orders, with exact support counts and floor-ppm
-    // confidences — pair generation is the order-keyed self-equi-join
-    // (never an item cross product), oversized baskets guarded out.
-    "x_basket_pairs" -> ((s, dir) =>
-      graft.functions.Events.associationPairs(
-          t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey")),
-          "l_orderkey", "l_partkey", minSupport = 2)
-        .orderBy("item_a", "item_b")),
-
-    // Corpus-overlap estimation from two k-row KMV sketches: two
-    // overlapping corpus slices (membership overlap ⇒ shared distinct
-    // texts), Jaccard estimated from the bottom-k md5 union sample.
-    // Each sketch costs one hash-only distinct; everything after joins
-    // ≤ k-row frames — the "how much of yesterday's crawl is in
-    // today's?" answer without a corpus×corpus join.
-    "x_corpus_overlap" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.functions.Stats.kmvOverlap(
-        d.where(pmod(col("doc_id"), lit(3)) =!= 0),
-        d.where(pmod(col("doc_id"), lit(2)) === 0),
-        "text", k = 128)
-    }),
-
-    // CDC merge: apply a deterministic change batch (two update waves,
-    // deletes, inserts — all derived from the corpus itself, so the
-    // last-writer-wins, delete-beats-stale-update and insert paths are
-    // all exercised) onto the documents snapshot. One batch-sized
-    // window + one id-keyed full-outer join — the maintenance
-    // counterpart of x_snapshot_diff.
-    "x_merge_apply" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val nul = lit(null).cast("string")
-      val upd1 = d.where(pmod(col("doc_id"), lit(7)) === 0).select(
-        col("doc_id"), lit(1L).as("seq"), lit("upsert").as("op"),
-        concat(lit("u1:"), substring(col("text"), 1, 40)).as("text"),
-        lit("xx").as("lang"), col("source"),
-        (col("n_chars") + 3).as("n_chars"))
-      val upd2 = d.where(pmod(col("doc_id"), lit(14)) === 0).select(
-        col("doc_id"), lit(2L).as("seq"), lit("upsert").as("op"),
-        concat(lit("u2:"), substring(col("text"), 1, 20)).as("text"),
-        lit("yy").as("lang"), col("source"),
-        (col("n_chars") + 5).as("n_chars"))
-      val dels = d.where(pmod(col("doc_id"), lit(11)) === 3).select(
-        col("doc_id"), lit(3L).as("seq"), lit("delete").as("op"),
-        nul.as("text"), nul.as("lang"), nul.as("source"),
-        lit(null).cast("long").as("n_chars"))
-      val ins = d.where(pmod(col("doc_id"), lit(13)) === 1).select(
-        (col("doc_id") + 1000000L).as("doc_id"), lit(1L).as("seq"),
-        lit("upsert").as("op"),
-        concat(lit("ins:"), substring(col("text"), 1, 10)).as("text"),
-        lit("zz").as("lang"), lit("synthetic").as("source"),
-        lit(14L).as("n_chars"))
-      Corpus.applyChanges(d,
-          upd1.unionByName(upd2).unionByName(dels).unionByName(ins),
-          "doc_id", "seq", "op")
-        .orderBy("doc_id")
-    }),
-
-    // Index-accelerated batch lookup: build the per-file min/max + Bloom
-    // skipping index over the documents files, probe three ids (one
-    // absent), read only candidate files — the scan-avoidance tier for
-    // point lookups on an 800k-file table. At fixture scale the table is
-    // one file; multi-file pruning itself is pinned by FileSkipIndexSpec.
-    "x_file_skip" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val idx = graft.sources.FileSkipIndex.build(d, "doc_id")
-      graft.sources.FileSkipIndex.probe(s, idx, d, "doc_id",
-          Seq(3L, 77L, 123456789L))
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .orderBy("doc_id")
-    }),
-
-    // Blocklist census: one Aho–Corasick pass per doc (native
-    // MultiMatchCounts, codegen'd) + a phrase-keyed rollup whose
-    // exchange carries ≤ #partitions × #phrases rows. replace()-count
-    // semantics, so the oracle needs nothing but string builtins.
-    "x_blocklist" -> ((s, dir) =>
-      Corpus.blocklistCensus(t(s, dir, "documents"), "text",
-          Seq("table scan", "hash join", "scan merge", "merge part", "slow"))
-        .orderBy("phrase")),
-
-    // Blocklist gate: keep docs with ≤ 2 total hits, roll up survivors
-    // per language — the C4-badwords-style destructive filter, sized
-    // first by x_blocklist's census. Map-only filter + tiny agg.
-    "x_blocklist_gate" -> ((s, dir) =>
-      Corpus.blocklistFilter(t(s, dir, "documents"), "text",
-          Seq("table scan", "hash join", "scan merge", "merge part", "slow"),
-          maxHits = 2L)
-        .groupBy("lang").agg(count(lit(1)).as("n_docs"))
-        .orderBy("lang")),
-
-    // Count–min sketch over the token stream (depth 4 × width 512,
-    // md5-position convention) probed for five words: est ≥ true count
-    // always (flagged in-row), and both engines derive the IDENTICAL
-    // sketch, so est itself hash-matches. The sketch is the mergeable
-    // per-shard frequency artifact; the probe joins a ≤ 2048-row frame.
-    "x_cms_words" -> ((s, dir) => {
-      val toks = t(s, dir, "documents")
-        .select(explode(graft.functions.TextFunctions.tokens(col("text")))
-          .as("word"))
-      val sk = graft.functions.Stats.cmsBuild(toks, "word", 4, 512, "cms")
-      val probes = Seq("data", "join", "window", "sort", "nosuchword")
-      val truth = toks.where(col("word").isin(probes: _*))
-        .groupBy(col("word").as("key"))
-        .agg(count(lit(1)).as("true_cnt"))
-      graft.functions.Stats.cmsEstimate(sk, probes, 4, 512, "cms")
-        .join(truth, Seq("key"), "left")
-        .select(col("key"), col("est"),
-          coalesce(col("true_cnt"), lit(0L)).as("true_cnt"),
-          (col("est") >= coalesce(col("true_cnt"), lit(0L))).as("never_under"))
-        .orderBy("key")
-    }),
-
-    // Deterministic epoch shuffle: md5(shuf:epoch:id) permutation via
-    // the two-level bucket decomposition (one bucket-keyed exchange, no
-    // global sort, offsets from a 64-row cumsum). Emitted positions are
-    // the permutation inverse-mapped onto doc order; epoch 2 ≠ epoch 1
-    // by construction. Spot-check shape: every position in [0, n) once.
-    "x_epoch_shuffle" -> ((s, dir) =>
-      Corpus.epochShuffle(t(s, dir, "documents"), "doc_id", epoch = 1,
-          nBuckets = 64)
-        .select(col("doc_id"), col("epoch_pos"))
-        .orderBy("doc_id")),
-
-    // Declarative data-quality audit: five expectations over documents
-    // (incl. a cross-column consistency rule and key uniqueness) in one
-    // aggregate pass, pivoted to rows engine-side.
-    "x_expect" -> ((s, dir) =>
-      graft.functions.Stats.expectations(t(s, dir, "documents"),
-        Seq(
-          "doc_id_not_null" -> col("doc_id").isNotNull,
-          "lang_known" -> col("lang").isin("en", "de", "es", "fr", "zh"),
-          "n_chars_consistent" -> (col("n_chars") === length(col("text"))),
-          "text_nonempty" -> (length(col("text")) > 0)),
-        uniqueCols = Seq("doc_id_unique" -> "doc_id"))),
-
-    // Unicode NFC normalization (native codegen'd expression): the
-    // fixture text is ASCII, so the query MANUFACTURES the decomposed
-    // form (every 'e' → 'e' + combining acute U+0301), normalizes it,
-    // and pins (a) the combining pairs composed away (length math) and
-    // (b) bytewise equality with the precomposed é replacement — the
-    // exact property that makes hash-dedup safe on mixed-encoder crawls.
-    // NFC is frozen by Unicode's stability policy, so the JDK and
-    // DuckDB's utf8proc agree on every assigned character.
-    "x_nfc" -> ((s, dir) => {
-      val dec = replace(col("text"), lit("e"), lit("e\u0301"))
-      val nfc = graft.functions.TextFunctions.unicodeNormalize(dec, "NFC")
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          // long, not Spark length()'s INT: DuckDB length() is BIGINT
-          length(dec).cast("long").as("n_dec"),
-          length(nfc).cast("long").as("n_nfc"),
-          (nfc === replace(col("text"), lit("e"), lit("\u00e9")))
-            .as("composed_ok"))
-        .orderBy("doc_id")
-    }),
-
-    // HTML → text extraction (curation rung 0): fixture text planted
-    // inside a deterministic page — script/style/comment machinery,
-    // a link-saturated nav and footer (die by link density), a
-    // too-short block, and an entity-bearing prose div. Map-only; the
-    // extraction rules mirror in DuckDB replace/regexp primitives.
-    "x_html_extract" -> ((s, dir) => {
-      val html = concat(
-        lit("<html><head><title>t</title><style>p{color:red}</style>" +
-          "<script type=\"text/javascript\">var x = \"</p>\";</script>" +
-          "</head><body><div class=\"nav\"><a href=\"/\">Home</a> " +
-          "<a href=\"/a\">A</a> <a href=\"/b\">B</a></div>" +
-          "<!-- boilerplate --><p>"),
-        col("text"),
-        lit("</p><p>Too short.</p><div>Read the fine &amp; friendly " +
-          "manual &lt;here&gt; with <a href=\"/more\">one link</a> and " +
-          "plenty of surrounding prose to stay under the density rule." +
-          "</div><footer><a href=\"/x\">x</a><a href=\"/y\">y</a>" +
-          "</footer></body></html>"))
-      Corpus.htmlExtract(
-          t(s, dir, "documents").select(col("doc_id"), html.as("html")),
-          "doc_id", "html")
-        .orderBy("doc_id")
-    }),
-
-    // Vocabulary coverage audit: the corpus's own top-100 word vocab
-    // (the x_vocab table) scored back over every document — per-doc
-    // OOV counts and floor-ppm rate, the measurement in front of any
-    // tokenizer/UNK decision. Explode + broadcast vocab join + one
-    // doc-keyed agg.
-    "x_vocab_coverage" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val vocab = d.select(explode(TF.tokens(col("text"))).as("token"))
-        .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("token"))
-        .limit(100)
-      Corpus.vocabCoverage(d, "doc_id", "text", vocab)
-        .orderBy("doc_id")
-    }),
-
-    // Crawl-URL canonicalization: five planted URL shapes per doc
-    // exercise every rule — case folding, default-port strip, fragment
-    // drop, tracking-param removal, param sorting, bare-root path,
-    // non-default port retained, co.uk registered-domain heuristic.
-    // Map-only; every stage mirrors in DuckDB regex/list primitives.
-    "x_url_canon" -> ((s, dir) =>
-      // urlCanonicalize pins internally (round-12 lesson made
-      // structural in round 13): the orderBy reads plain attributes
-      Corpus.urlCanonicalize(
-          t(s, dir, "documents").select(col("doc_id"),
-            plantedUrl.as("url")),
-          "doc_id", "url")
-        .orderBy("doc_id")),
-
-    // Crawl-frontier URL features over the five planted URL shapes:
-    // default-port strip vs kept 8080, depth/params/ext extraction,
-    // the no-path host, schemeless never occurs here (all five carry
-    // schemes — the null branch is spec territory). Map-only.
-    "x_url_features" -> ((s, dir) =>
-      Corpus.urlFeatures(
-          t(s, dir, "documents").select(col("doc_id"),
-            plantedUrl.as("url")),
-          "doc_id", "url")
-        .orderBy("doc_id")),
-
-    // RFC 9309 robots gate over the planted crawl URLs: per-host rule
-    // table (broadcast), wildcard patterns compiled to anchored
-    // regexes over the shared Java/RE2 subset, longest-pattern wins
-    // with allow on ties. The five URL shapes cover longest-allow
-    // beats shorter-disallow, wildcard-through-query, a $-anchor that
-    // must NOT fire plus a mid-wildcard that does, a no-rules host,
-    // and allow-"/$" losing to disallow-"/" off the root. The three
-    // added sub.domain rules exercise percent normalization against
-    // the /x%20y/ path: %78 decodes to the unreserved x and matches
-    // with the NORMALIZED octet length ranking it above the literal
-    // spelling, %20 (reserved: space) stays encoded and matches
-    // literally, %2F stays distinct from / and never matches
-    // (hex-case normalization is spec-pinned — no planted path
-    // carries a lettered reserved triplet to witness it here).
-    "x_robots_gate" -> ((s, dir) => {
-      import s.implicits._
-      val rules = Seq(
-        ("www.example.com", "disallow", "/Path/*"),
-        ("www.example.com", "allow", "/Path/Page"),
-        ("news.example.co.uk", "disallow", "/a/*?id=*"),
-        ("cdn.static.example.org:8080", "disallow", "*.js$"),
-        ("cdn.static.example.org:8080", "disallow", "*fbclid*"),
-        ("sub.domain.example.com", "allow", "/$"),
-        ("sub.domain.example.com", "disallow", "/"),
-        ("sub.domain.example.com", "allow", "/x%20y/*"),
-        ("sub.domain.example.com", "disallow", "/%78%20y/e*"),
-        ("sub.domain.example.com", "disallow", "/x%2Fy/*"))
-        .toDF("host", "directive", "pattern")
-      Corpus.robotsGate(
-          t(s, dir, "documents").select(col("doc_id"),
-            plantedUrl.as("url")),
-          "doc_id", "url", rules)
-        .orderBy("doc_id")
-    }),
-
-    // Sitemap document parsing — the robotsSitemaps → frontier chain's
-    // second half: three planted body shapes per doc cover a
-    // pretty-printed urlset (multi-line <loc> with surrounding
-    // whitespace, &amp; in the URL, enum-case changefreq, numeric
-    // priority, a minimal second entry), a sitemapindex (child
-    // sitemap URLs + partial lastmod), and a compact urlset with two
-    // entities in loc and a malformed priority (→ null). chr(10)
-    // builds the newlines on BOTH engines (DuckDB string literals
-    // don't process backslash escapes; Spark's do — chr(10) is the
-    // one spelling with a single meaning). Map-only parse, mirrored
-    // regex-for-regex in the oracle.
-    "x_sitemap" -> ((s, dir) =>
-      Corpus.sitemapParse(
-          t(s, dir, "documents").select(col("doc_id"),
-            plantedSitemap.as("xml")),
-          "doc_id", "xml")
-        .orderBy("doc_id", "entry_idx")),
-
-    // Oracle witness for the WARC source (Sources.warc): a bounded
-    // document slice (doc_id % 97 — ≤ N/97+1 rows, the documented
-    // fixture bound) serializes to a deterministic two-shard archive
-    // ON THE EXECUTORS (foreachPartition — the fixture writer runs
-    // where the docs are; a production archiver would target the
-    // cluster DFS through the same per-partition shape), then reads
-    // BACK through the real Content-Length-framed parser. The oracle
-    // never sees WARC bytes: it replays the framing formulas straight
-    // off documents — shard = doc_id % 2, per-shard record index,
-    // octet (not char) Content-Length, byte-exact payload roundtrip —
-    // so a framing bug on either the write or the read side breaks
-    // the hash.
-    "x_warc" -> ((s, dir) => {
-      import s.implicits._
-      val tmp = scratchDir("graft-warcfix")
-      val slice = t(s, dir, "documents")
-        .where(col("doc_id") % 97 === 0)
-        .select(pmod(col("doc_id"), lit(2)).cast("int").as("shard"),
-          col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      // shard rows sort contiguously inside each task, so the writer
-      // emits one whole file per shard run regardless of how the
-      // hash placement packs the two shards into tasks
-      slice.repartition(2, col("shard"))
-        .sortWithinPartitions("shard", "doc_id")
-        .as[(Int, Long, String)]
-        .foreachPartition { (it: Iterator[(Int, Long, String)]) =>
-          val crlf = "\r\n"
-          var out: java.io.OutputStream = null
-          var cur = -1
-          for ((shard, docId, text) <- it) {
-            if (shard != cur) {
-              if (out != null) out.close()
-              out = new java.io.BufferedOutputStream(
-                new java.io.FileOutputStream(
-                  s"$tmp/part-$shard.warc"))
-              cur = shard
-            }
-            val payload = text.getBytes(
-              java.nio.charset.StandardCharsets.UTF_8)
-            out.write((s"WARC/1.0${crlf}WARC-Type: response$crlf" +
-              s"WARC-Target-URI: https://ex.com/$docId$crlf" +
-              s"WARC-Date: 2026-08-16T00:00:00Z$crlf" +
-              s"Content-Type: text/plain$crlf" +
-              s"Content-Length: ${payload.length}$crlf$crlf")
-              .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-            out.write(payload)
-            out.write((crlf + crlf).getBytes(
-              java.nio.charset.StandardCharsets.ISO_8859_1))
-          }
-          if (out != null) out.close()
-        }
-      graft.sources.Sources.warc(s, tmp).df
-        .select(
-          regexp_extract(col("target_uri"), "/(\\d+)\\z", 1)
-            .cast("long").as("doc_id"),
-          regexp_extract(col("path"), "part-(\\d+)\\.warc\\z", 1)
-            .cast("int").as("shard"),
-          col("record_idx"), col("warc_type"), col("target_uri"),
-          col("warc_date"), col("content_type"), col("content_length"),
-          decode(col("payload"), "UTF-8").as("payload_text"))
-        .orderBy("doc_id")
-    }),
-
-    // Crawl → links → canonical domains → edge census: hrefs extracted
-    // from planted pages (both quote styles + a relative link that
-    // canonicalizes to nothing), destinations canonicalized, sources =
-    // each doc's own planted URL domain — the domain link graph
-    // pageRank/HITS run on, built entirely from this library's rungs.
-    "x_link_graph" -> ((s, dir) => {
-      // planted page now includes the RELATIVE / protocol-relative /
-      // `..` links a real crawl is mostly made of — resolved against
-      // each doc's own canonical URL before canonicalization, they
-      // become self-domain (intra-site) edges instead of being dropped
-      val page = concat(lit("<p>"), col("text"), lit("</p>" +
-          "<a href=\"https://www.example.com/a?utm_source=z&x=1\">one</a>" +
-          "<a href='http://news.example.co.uk:80/b'>two</a>" +
-          "<a href=\"/relative/path\">rel</a>" +
-          "<a href=\"../up/one\">up</a>" +
-          "<a href=\"//proto.example.io/p\">pr</a>"),
-        when(pmod(col("doc_id"), lit(3)) === 0,
-          lit("<a href=\"https://other.site.io/c\">x</a>"))
-          .otherwise(lit("")))
-      val docs = t(s, dir, "documents")
-      // both canonicalize projections pin internally, so the
-      // null-filters and the final aggregate read plain attributes
-      val src = Corpus.urlCanonicalize(
-          docs.select(col("doc_id"), col("lang"), plantedUrl.as("url")),
-          "doc_id", "url",
-          outputs = Seq("url_canon", "registered_domain"))
-        .select(col("doc_id"), col("url_canon"),
-          col("registered_domain").as("src_domain"))
-        // a null src (unparseable base URL) has no place in the edge
-        // list, and NULL ordering differs between engines (Spark
-        // NULLS FIRST vs DuckDB NULLS LAST)
-        .where(col("src_domain").isNotNull)
-      val links = Corpus.htmlLinks(
-        docs.select(col("doc_id"), page.as("html")), "doc_id", "html")
-      // one doc_id equi-join hands every link its base URL; resolution
-      // + canonicalization stay map-only after it
-      val dst = Corpus.urlCanonicalize(
-          Corpus.resolveLinks(links.join(src, "doc_id"),
-              "href", "url_canon")
-            .select(col("doc_id"), col("src_domain"), col("href_resolved")),
-          "doc_id", "href_resolved", carryCols = Seq("src_domain"),
-          outputs = Seq("registered_domain"))
-        .select(col("src_domain"), col("registered_domain").as("dst_domain"))
-        .where(col("dst_domain").isNotNull)
-      dst.groupBy(col("src_domain"), col("dst_domain"))
-        .agg(count(lit(1)).as("n_links"))
-        .orderBy("src_domain", "dst_domain")
-    }),
-
-    // RFC 3986 §5 reference resolution pinned end-to-end: ten href
-    // shapes (relative, ./, ../ chains, rooted, protocol-relative,
-    // absolute-with-dots, query-only, fragment-only, opaque scheme)
-    // against each doc's planted base URL; the DuckDB oracle runs the
-    // SAME six-rule dot-segment fixpoint via a recursive CTE — one
-    // algorithm, two engines, bit-for-bit.
-    "x_resolve_links" -> ((s, dir) => {
-      val hrefs = Seq("g", "./g?y#s", "../../x", "/rooted/../x",
-        "//proto.example.io/a/./b",
-        "https://abs.example.com/a/b/../c?z",
-        "?q=2", "#frag", "g/../h/./", "mailto:x@example.com",
-        // the fuzz-found pop-rule regressions, pinned CROSS-ENGINE: a
-        // `..` never consumes an uncleared dot segment, `..` never
-        // pops `..`, and empty segments pop like any stack entry
-        "cc/./././..", "cc/a/../../..", "x//../y")
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), plantedUrl.as("base"))
-      val links = docs.select(col("doc_id"), col("base"),
-        posexplode(array(hrefs.map(lit): _*)).as(Seq("link_idx", "href")))
-      Corpus.resolveLinks(links, "href", "base")
-        .select(col("doc_id"), col("link_idx").cast("long").as("link_idx"),
-          col("href"), col("href_resolved"))
-        .orderBy("doc_id", "link_idx")
-    }),
-
-    // Per-domain curation rollup over the canonical key: dup pressure
-    // (n_docs − n_urls), volume, stripped-tracker census — one
-    // domain-keyed aggregation after the map-only canonicalizer.
-    "x_domain_stats" -> ((s, dir) =>
-      Corpus.domainStats(
-          Corpus.urlCanonicalize(
-            t(s, dir, "documents").select(col("doc_id"), col("n_chars"),
-              plantedUrl.as("url")),
-            "doc_id", "url", carryCols = Seq("n_chars"),
-            outputs = Seq("url_canon", "registered_domain",
-              "n_params_stripped")),
-          "n_chars")
-        .orderBy("registered_domain")),
-
-    // PSL-backed registered domains: longest-match against a real
-    // Public-Suffix-List grammar (plain/wildcard/exception rules,
-    // default rule fallback) over a planted host mix — the distinct-
-    // host mapping join the heuristic's github.io-class failures
-    // upgrade through.
-    "x_psl_domains" -> ((s, dir) => {
-      import s.implicits._
-      val psl = Seq("com", "net", "org", "uk", "co.uk", "io",
-        "github.io", "au", "com.au", "*.play", "!www.play").toDF("suffix")
-      val hosts = t(s, dir, "documents").select(col("doc_id"),
-        expr("""CASE CAST(doc_id % 7 AS INT)
-          | WHEN 0 THEN 'www.example.com'
-          | WHEN 1 THEN 'news.example.co.uk'
-          | WHEN 2 THEN 'a.b.github.io'
-          | WHEN 3 THEN 'Foo.Bar.PLAY'
-          | WHEN 4 THEN 'x.www.play'
-          | WHEN 5 THEN 'shop.com.au'
-          | ELSE 'cdn.static.example.org:8080'
-          |END""".stripMargin).as("host"))
-      hosts.select(col("doc_id"), lower(col("host")).as("host"))
-        .join(Corpus.pslRegisteredDomains(hosts, "host", psl),
-          Seq("host"), "left")
-        .select(col("doc_id"), col("host"), col("public_suffix"),
-          col("registered_domain_psl"))
-        .orderBy("doc_id")
-    }),
-
-    // Top-30 collocations by PMI (token-stream marginals, min pair
-    // count 5): bigram-keyed agg + two broadcast vocab joins + top-k
-    // heaps. Output is exact integer counts; the rank key is the exact
-    // rational c_ab·N/(c_a·c_b) (same order as PMI — ln is monotone)
-    // via correctly-rounded double ops only, so no libm ln can flake.
-    "x_pmi" -> ((s, dir) =>
-      Corpus.pmiTopK(t(s, dir, "documents"), "text", k = 30, minCount = 5L)),
-
-    // Top-30 collocations by Pearson chi-square — the hypothesis-test
-    // counterpart of x_pmi (PMI over-rewards rare pairs; chi2 weighs
-    // evidence). All O's are exact longs cast to double; the chi2
-    // expression is pinned-order correctly-rounded double arithmetic.
-    "x_chi2_colloc" -> ((s, dir) =>
-      Corpus.chi2Collocations(t(s, dir, "documents"), "text", k = 30,
-        minCount = 5L)),
-
-    // Phonetic spelling-variant census: soundex-bucketed vocabulary
-    // (official American Soundex incl. H/W transparency, built as a
-    // translate+regex chain over the shared Java/RE2 subset), buckets
-    // with >= 2 distinct spellings, top-40 by occurrences — the
-    // record-linkage blocking-key audit. The fixture's 31-word vocab
-    // has zero phonetic collisions, so three name-variant docs are
-    // PLANTED (mirrored in the oracle) to witness the bucketing: the
-    // variants must land together, the rest must stay out.
-    "x_soundex" -> ((s, dir) => {
-      import s.implicits._
-      val planted = Seq(
-        (90000001L, "Robert Rupert robert Ashcraft Ashcroft"),
-        (90000002L, "Smith Smyth Smithe Honeyman Honeymann"),
-        (90000003L, "Tymczak Tomczak Pfister Phister"))
-        .toDF("doc_id", "text")
-      Corpus.phoneticVariants(
-        t(s, dir, "documents").select(col("doc_id"), col("text"))
-          .unionByName(planted),
-        "text", k = 40)
-    }),
-
-    // Code-vs-prose routing census: indentation/brace/keyword/camel
-    // features + verdict, map-only. Two code docs are PLANTED
-    // (mirrored with chr(10) in the oracle) so both verdict branches
-    // are witnessed — the fixture itself is all prose.
-    "x_code_prose" -> ((s, dir) => {
-      import s.implicits._
-      val planted = Seq(
-        (90000001L, "def main():\n    return compute(x);\n    let y = 1"),
-        (90000002L, "public static void run() { camelCase = fooBar(1); }"))
-        .toDF("doc_id", "text")
-      Corpus.codeProseCensus(
-        t(s, dir, "documents").select(col("doc_id"), col("text"))
-          .unionByName(planted),
-        "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // Corpus-level RAKE keywords: stopword/punct-broken candidate
-    // phrases, deg/freq word scores (one double divide each), phrase
-    // score = DECIMAL(30,15) sum of word scores, top-30.
-    "x_rake" -> ((s, dir) =>
-      Corpus.rakeKeywords(t(s, dir, "documents"), "text",
-        stopwords = Seq("the", "a", "of", "and", "to", "in", "is",
-          "for", "on", "with"),
-        k = 30)),
-
-    // Church-Gale term burstiness: cf/df + variance-to-mean of per-doc
-    // counts (zeros in) per token with df >= 5, top-30 by burst — the
-    // topicality/keyword signal TF-IDF approximates. Exact integers +
-    // two pinned-order double ratios.
-    "x_burstiness" -> ((s, dir) =>
-      Corpus.burstiness(t(s, dir, "documents"), "doc_id", "text", k = 30,
-        minDf = 5L)),
-
-    // Within-document repetition removal (MassiveText intra-doc dedup):
-    // every repeat of a unit after its first occurrence in the SAME doc
-    // is deleted, order preserved. Exercised at word granularity — the
-    // fixture's docs repeat tokens heavily — entirely map-only.
-    "x_dedup_within" -> ((s, dir) =>
-      Corpus.dedupWithinDoc(t(s, dir, "documents"), "doc_id",
-          graft.functions.TextFunctions.tokens(col("text")))
-        .orderBy("doc_id")),
-
-    // Exact-k deterministic stratified sample: 5 docs per language,
-    // chosen by md5 rank — reproducible on any cluster size.
-    "x_sample_k" -> ((s, dir) =>
-      Corpus.exactKPerStratum(t(s, dir, "documents"), "lang", "doc_id", k = 5)
-        .select(col("doc_id"), col("lang"))
-        .orderBy("doc_id")),
-
-    // Benchmark decontamination: distinct-trigram overlap between the
-    // training split and a held-out benchmark split, joined on 8-byte
-    // gram hashes (inverted index — never gram strings, never all-pairs).
-    "x_decontam" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Corpus.decontaminate(
-        docs.where(pmod(col("doc_id"), lit(40)) =!= 0),
-        docs.where(pmod(col("doc_id"), lit(40)) === 0),
-        "doc_id", "text", n = 3, minShared = 2)
-        .orderBy("train_id", "bench_id")
-    }),
-
-    // Binned range join: tag each lineitem shipment with how many sampled
-    // 14-day order windows cover it. The bin equi-join replaces the
-    // BroadcastNestedLoopJoin Spark would otherwise plan for a pure
-    // BETWEEN predicate — linear, shuffle-parallel, AQE-eligible.
-    "x_range_join" -> ((s, dir) => {
-      val epoch = lit("1970-01-01").cast("date")
-      val windows = t(s, dir, "orders")
-        .where(pmod(col("o_orderkey"), lit(97)) === 0)
-        .select(col("o_orderkey").as("w_id"),
-          datediff(col("o_orderdate"), epoch).cast("long").as("w_start"))
-        .withColumn("w_end", col("w_start") + 14)
-      val points = t(s, dir, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"),
-        datediff(col("l_shipdate"), epoch).cast("long").as("p_day"))
-      graft.operators.RangeJoin
-        .pointInInterval(points, windows, "p_day", "w_start", "w_end",
-          Seq("w_id"), binWidth = 16L)
-        .groupBy(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
-        .agg(count(lit(1)).as("n_windows"))
-        .orderBy("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    }),
-
-    // Text normalization + PII scrub over doc text with deterministic
-    // synthetic contact info appended (the corpus itself is clean), so
-    // the masking is actually exercised. Map-only, codegen'd regexes.
-    "x_scrub" -> ((s, dir) => {
-      val dirty = concat(col("text"),
-        lit(" Contact user"), col("doc_id").cast("string"),
-        lit("@example.com or 555-867-5309 ref 9400110200881234567890"))
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        TF.normalize(col("text")).as("norm"),
-        TF.scrubPii(dirty).as("scrubbed"))
-        .orderBy("doc_id")
-    }),
-
-    // Typed PII census over doc text with deterministic synthetic PII
-    // appended: an email, a dotted quad whose octet validity flips with
-    // doc_id (doc_id % 300 crosses 255), a phone, and a card that is
-    // Luhn-valid on even ids only — every precision gate (octet range,
-    // size window, mod-10) exercises BOTH branches across the fixture.
-    // Map-only; the oracle replays the shared-subset regexes and the
-    // Luhn fold with DuckDB list lambdas.
-    // Crawl-delay politeness extraction over 12 planted robots bodies
-    // (one per host), agent graftbot: exact-agent group beats *, a
-    // host whose exact group lacks the directive stays absent (the *
-    // delay must NOT leak in), max-merge over repeated lines,
-    // malformed and negative values drop, UA runs share the delay.
-    "x_crawl_delay" -> ((s, dir) => {
-      val bodies = t(s, dir, "documents").where(col("doc_id") < 12)
-        .select(concat(lit("h"), col("doc_id").cast("string"),
-            lit(".example.com")).as("host"),
-          plantedRobotsBody.as("robots"))
-      Corpus.robotsCrawlDelay(bodies, "host", "robots", "graftbot")
-        .orderBy("host")
-    }),
-
-    // Mojibake census + repair over planted double-encoding damage:
-    // two artifact suffixes (derived from clean text via the real
-    // UTF-8→cp1252 mis-decode, never hand-typed) land on 2/3 of docs;
-    // the deterministic replace chain repairs them and the length
-    // arithmetic counts 3-char vs 2-char fixes. Map-only.
-    "x_mojibake" -> ((s, dir) => {
-      val planted = t(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 3 === 1, concat(col("text"), lit(mojiS1)))
-          .when(col("doc_id") % 3 === 2, concat(col("text"), lit(mojiS2)))
-          .otherwise(col("text")).as("text"))
-      Corpus.mojibakeRepair(planted, "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    "x_pii_census" -> ((s, dir) => {
-      val planted = concat(coalesce(col("text"), lit("")),
-        lit(" Contact: user"), col("doc_id").cast("string"),
-        lit("@mail.example.com ip=10."),
-        (col("doc_id") % 300).cast("string"),
-        lit(".0.1 tel=+1 (555) 01"), (col("doc_id") % 10).cast("string"),
-        lit("-2345 card="),
-        when(col("doc_id") % 2 === 0, lit("4111 1111 1111 1111"))
-          .otherwise(lit("4111 1111 1111 1112")))
-      Corpus.piiCensus(
-          t(s, dir, "documents").select(col("doc_id"), planted.as("text")),
-          "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // Cohen's kappa per language over planted double-annotation: rater 2
-    // disagrees on every 4th doc (one class up, mod 3), each rater skips
-    // its own stripe (nulls excluded, not a class). Exact integer core
-    // (n·o − e)/(n² − e), one double division LAST.
-    "x_kappa" -> ((s, dir) => {
-      val r1 = when(col("doc_id") % 13 === 0, lit(null).cast("long"))
-        .otherwise((col("doc_id") * 7) % 3)
-      val r2 = when(col("doc_id") % 17 === 0, lit(null).cast("long"))
-        .otherwise(when(col("doc_id") % 4 === 0, (r1 + 1) % 3)
-          .otherwise(r1))
-      graft.functions.Stats.cohenKappaByGroup(
-          t(s, dir, "documents").select(col("lang"), r1.as("r1"),
-            r2.as("r2")),
-          "lang", "r1", "r2")
-        .orderBy("lang")
-    }),
-
-    // Readability census over the planted line structure (10-token
-    // sentences, every 3rd unpunctuated — so the sentence count is a
-    // real signal, not the clamp): Flesch ease + FK grade from
-    // deterministic vowel-group syllables. Map-only.
-    "x_readability" -> ((s, dir) =>
-      Corpus.readabilityCensus(
-          t(s, dir, "documents").select(col("doc_id"),
-            plantedLines.as("text")),
-          "doc_id", "text")
-        .orderBy("doc_id")),
-
-    // Fleiss' kappa per language over a planted 3-rater panel in long
-    // format: raters 2 and 3 defect on their own doc_id stripes (one
-    // and two classes up, mod 4). The exact integer core runs in
-    // DECIMAL(38,0) / HUGEINT with the single double division last.
-    "x_fleiss" -> ((s, dir) => {
-      val r1 = (col("doc_id") * 3) % 4
-      val r2 = when(col("doc_id") % 5 === 0, (r1 + 1) % 4).otherwise(r1)
-      val r3 = when(col("doc_id") % 7 === 0, (r1 + 2) % 4).otherwise(r1)
-      val longFmt = t(s, dir, "documents").select(col("lang"),
-        col("doc_id"), explode(array(r1, r2, r3)).as("label"))
-      graft.functions.Stats.fleissKappaByGroup(longFmt, "lang", "doc_id",
-          "label")
-        .orderBy("lang")
-    }),
-
-    // Partition-scoped compaction planning over a planted inventory
-    // (the dir-isolated complement of x_compaction's global packer):
-    // five partition dirs, file sizes sweeping 1 KB..1.4 MB so both
-    // actions and multi-file bins occur; first-fit-with-overflow cumsum
-    // bins, never across dirs. Metadata-sized; one dir-keyed window.
-    "x_compaction_dirs" -> ((s, dir) => {
-      val files = t(s, dir, "documents").select(
-        concat(lit("dt="), (col("doc_id") % 5).cast("string")).as("dir"),
-        concat(lit("part-"), lpad(col("doc_id").cast("string"), 8, "0"))
-          .as("path"),
-        ((col("doc_id") * 37) % 1400000 + 1000).as("bytes"))
-      graft.functions.Layout.compactionPlan(files, "dir", "path", "bytes",
-          targetBytes = 1000000L)
-        .orderBy("dir", "path")
-    }),
-
-    // Crawl revisit scheduling over a planted frontier: changefreq
-    // cycles through all seven sitemaps.org values plus an unknown and
-    // a null (→ daily default), last_crawl is null on every 5th URL
-    // (tier-0 never-fetched) — so tiering, the never rule, the daily
-    // default, the due window and the per-host top-3 cutoff all
-    // exercise both branches. One filter + one WindowGroupLimit rank.
-    "x_revisit" -> ((s, dir) => {
-      val cf = element_at(array(lit("always"), lit("hourly"), lit("daily"),
-        lit("weekly"), lit("monthly"), lit("yearly"), lit("never"),
-        lit("Sometimes")), (col("doc_id") % 8).cast("int") + 1)
-      val frontier = t(s, dir, "documents").select(
-        concat(lit("h"), (col("doc_id") % 37).cast("string")).as("host"),
-        concat(lit("https://h"), (col("doc_id") % 37).cast("string"),
-          lit(".example.com/p"), col("doc_id").cast("string")).as("url"),
-        when(col("doc_id") % 11 === 0, lit(null).cast("string"))
-          .otherwise(cf).as("changefreq"),
-        when(col("doc_id") % 5 === 0, lit(null).cast("long"))
-          .otherwise(lit(1700000000L) + (col("doc_id") * 7919) % 30000000L)
-          .as("last_crawl"))
-      Corpus.revisitSchedule(frontier, "host", "url", "changefreq",
-          "last_crawl", nowSec = 1730000000L, perHostK = 3)
-        .orderBy("host", "wave")
-    }),
-
-    // Anchor-text aggregation over planted HTML: every doc links two
-    // targets (entity + nested-tag anchors, single- and double-quoted
-    // hrefs, an empty image-only anchor every 6th doc), then the
-    // per-target top-2 terms roll up — what the web "calls" each URL.
-    // Extraction is map-only; the rollup is one count aggregation and
-    // a WindowGroupLimit rank.
-    "x_anchor_text" -> ((s, dir) => {
-      val html = concat(
-        lit("<p>intro</p><a href=\"https://t"),
-        (col("doc_id") % 23).cast("string"),
-        lit(".example.com/\">Read &amp; learn <b>more</b></a> <a class='x' href='/local/p"),
-        (col("doc_id") % 7).cast("string"), lit("'>page "),
-        (col("doc_id") % 7).cast("string"), lit(" notes</a>"),
-        when(col("doc_id") % 6 === 0,
-          concat(lit("<a href=\"https://t"),
-            (col("doc_id") % 23).cast("string"),
-            lit(".example.com/\"><img src=\"i.png\"/></a>")))
-          .otherwise(lit("")))
-      val links = Corpus.htmlAnchorTexts(
-        t(s, dir, "documents").select(col("doc_id"), html.as("html")),
-        "doc_id", "html")
-      Corpus.anchorTermsTopK(links, "href", "anchor", k = 2)
-        .orderBy("target", "rank")
-    }),
-
-    // End-to-end near-dup removal: detect pairs (exact n-gram Jaccard),
-    // cluster (label propagation), keep canonical doc per cluster.
-    // Oracle-checked: the pairs are exact, so DuckDB reproduces the
-    // clustering with a recursive transitive-closure CTE.
-    "x_dedup_drop" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 5, 0.5)
-      Dedup.dropNearDuplicates(docs, "doc_id", pairs)
-        .select(col("doc_id")).orderBy("doc_id")
-    }),
-
-    // Exact dedup: group identical texts, keep min id. At scale the
-    // grouping key is the 8-byte fingerprint, not the body (see
-    // x_fingerprint); here the oracle-checkable text-key form.
-    "x_dedup_exact" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .groupBy(col("text"))
-        .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-        .select(col("keep_id"), col("n_copies"))
-        .orderBy("keep_id")),
-
-    // Fingerprint dedup: the engine groups by the 8-byte xxhash64 of the
-    // body (the 100 TB shuffle key), but the *output* keeps only the
-    // surviving ids — which, collision-free, is exactly text-key dedup,
-    // so DuckDB can oracle it without reproducing the hash.
-    "x_fingerprint" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .groupBy(TF.fingerprint(col("text")).as("fp"))
-        .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-        .select(col("keep_id"), col("n_copies"))
-        .orderBy("keep_id")),
-
-    // Winnowing fingerprint dedup: group by (winnow fingerprint set,
-    // byte length) — the native rolling-hash + window-min expression plus
-    // the cheapest possible disambiguator. The set alone is a *content*
-    // sketch: texts differing only in the multiplicity of a repeated
-    // substring ("… dup dup" vs "… dup dup dup") have identical gram
-    // sets at any window width, and length separates exactly those.
-    // Identical texts agree on both components, so — like x_fingerprint —
-    // the ids-only output is exactly text-key dedup, which DuckDB oracles
-    // without reproducing the hash. The set key additionally powers
-    // partial-overlap (containment) joins that a whole-doc hash cannot.
-    // The shuffle key is xxhash64 OF the fingerprint set (+ length), not
-    // the set itself — same keys-first discipline as x_fingerprint: the
-    // exchange moves 8 bytes per doc however long the fingerprint array
-    // is. Honest risk note: unlike the whole-text hash (2^-64), a winnow
-    // SET key is a sketch — two same-length docs differing by one
-    // substitution collide when none of the ~2k changed grams is a window
-    // minimum in either doc (≈(1−2/(w+1))^2k per such pair). That is why
-    // the fingerprint-then-verify pattern runs IN-QUERY here:
-    // Dedup.verifyGroups byte-compares every candidate group and the
-    // oracle pins `verified` TRUE — a winnow-set collision would flip it
-    // red rather than silently merging distinct docs. (The winnow set's
-    // real job is containment/overlap search; this query is its dedup
-    // discipline.)
-    // keepIdCol makes it ONE pass: the survivor pick rides the verify
-    // aggregation, so the (expensive) winnow expression evaluates once.
-    "x_winnow_dedup" -> ((s, dir) => {
-      val keyed = t(s, dir, "documents").select(
-        col("doc_id"), col("text"),
-        xxhash64(TF.winnowFingerprints(col("text")),
-          octet_length(col("text"))).as("fpkey"))
-      Dedup.verifyGroups(keyed, "fpkey", "text", keepIdCol = Some("doc_id"))
-        .select(col("keep_id"), col("n_members").as("n_copies"), col("verified"))
-        .orderBy("keep_id")
-    }),
-
-    // Mixture / source reweighting: en upsampled 2.2× (2 copies + 20%
-    // hash-decided third), zh downsampled to 0.3×, other langs 1× —
-    // deterministic repeats, map-only, DuckDB-reproducible.
-    "x_mixture" -> ((s, dir) =>
-      Corpus.mixtureWeightedSample(t(s, dir, "documents"), "lang", "doc_id",
-          Map("en" -> 2.2, "zh" -> 0.3))
-        .select(col("doc_id"), col("lang"), col("copy_id"))
-        .orderBy("doc_id", "copy_id")),
-
-    // Weight-proportional interleave order (the stage after mixture
-    // weighting): reading by interleave_pos yields each lang at its
-    // weighted rate, evenly spread — stride positions (r−0.5)/w with
-    // md5-ranked in-source order, arithmetic reproduced in DuckDB.
-    "x_interleave" -> ((s, dir) =>
-      Corpus.interleaveByWeight(t(s, dir, "documents"), "lang", "doc_id",
-          Map("en" -> 2.0, "zh" -> 0.5))
-        .select(col("doc_id"), col("lang"), col("interleave_pos"))
-        .orderBy("interleave_pos", "doc_id")),
-
-    // Exact n-gram Jaccard near-dup pairs via inverted-index self-join.
-    "x_ngram_jaccard" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(t(s, dir, "documents"), "doc_id", "text", 5, 0.2)
-        .orderBy("id_a", "id_b")),
-
-    // MinHash + LSH banding near-dup candidates, self-verifying: the
-    // banded candidates LEFT-join the EXACT n-gram Jaccard pairs at
-    // ≥ 0.8 (DuckDB-reproducible ground truth) and the oracle pins
-    // `found_by_minhash` TRUE — a banding recall miss on any
-    // high-similarity pair turns its row red. 8 bands × 4 rows puts the
-    // per-pair miss probability at s = 0.857 (the corpus minimum) at
-    // (1 − s⁴)⁸ ≈ 0.2%, and signatures are xxhash-seeded so the outcome
-    // is deterministic: green stays green.
-    "x_minhash_neardup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 5, 0.8)
-      val cand = Dedup.minhashNearDupPairs(docs, "doc_id", "text",
-          shingleN = 5, numHashes = 32, rowsPerBand = 4, minEstJaccard = 0.4)
-        .select(col("id_a"), col("id_b"), lit(true).as("f"))
-      exact.join(cand, Seq("id_a", "id_b"), "left")
-        .select(col("id_a"), col("id_b"), col("jaccard"),
-          coalesce(col("f"), lit(false)).as("found_by_minhash"))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // SimHash near-dup detection, oracled on PLANTED structure (VERDICT
-    // r6 #5): every eligible doc (id % 5 = 0, ≥ 40 tokens) gets a mutated
-    // copy — its 17th token dropped — and the query reports whether the
-    // pigeonhole-banded simhash pipeline (hash equi-joins on disjoint
-    // sketch blocks — never an all-pairs loop) found each planted pair.
-    // The oracle pins found_by_simhash TRUE: a recall miss turns the row
-    // red. A 1-of-≥40-token drop moves each sketch bit's vote tally by
-    // ±1, so only near-tied bits flip; the MEASURED planted hamming
-    // (ProbePlanted, all three fixture scales) tops out at 6, so
-    // maxHamming=7 → 8 disjoint 8-bit blocks detects every planted pair
-    // with margin, deterministically (simhash votes are xxhash-seeded):
-    // green stays green. Scale note: radius 7 means 2^8 buckets/block —
-    // fine at fixture scale, quadratic at corpus scale; the production
-    // web-dedup regime is radius ≤ 3 (2^16 buckets/block, see
-    // simhashNearDupPairs' scaladoc), radius 7 here buys the recall
-    // proof against this corpus's short-doc vote margins.
-    "x_simhash" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val toks = split(trim(col("text")), "\\s+")
-      val eligible = docs
-        .where(col("doc_id") % 5 === 0 && size(toks) >= 40)
-      val planted = eligible.select(
-        (col("doc_id") + 10000000L).as("id"),
-        array_join(filter(toks, (_, i) => i =!= 16), " ").as("text"))
-      val corpus = docs.select(col("doc_id").as("id"), col("text"))
-        .unionByName(planted)
-      val found = Dedup
-        .simhashNearDupPairs(corpus, "id", "text", maxHamming = 7)
-        .select(col("id_a").as("doc_id"), col("id_b").as("copy_id"),
-          lit(true).as("f"))
-      eligible
-        .select(col("doc_id"), (col("doc_id") + 10000000L).as("copy_id"))
-        .join(found, Seq("doc_id", "copy_id"), "left")
-        .select(col("doc_id"), col("copy_id"),
-          coalesce(col("f"), lit(false)).as("found_by_simhash"))
-        .orderBy("doc_id")
-    }),
-
-    // Brute-force cosine top-k against the vec_id=0 query vector.
-    // Two-phase scoring (the cosineNearDupBlocked pattern): the native
-    // double kernel ranks the whole corpus (~100× cheaper per pair than
-    // the interpreted exact-decimal HOF), a margin-padded top-k′ survives
-    // (k′ = 5k — double-vs-decimal divergence is ~1e-12, so the true
-    // top-10 is certainly inside the native top-50), and only survivors
-    // pay the order-independent exact-decimal rescore that makes the
-    // output bit-equal to the DuckDB oracle.
-    "x_cosine_topk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val q = e.where(col("vec_id") === 0).select(col("embedding").as("qe"))
-      val pruned = e.where(col("vec_id") =!= 0)
-        .crossJoin(broadcast(q))
-        .select(col("vec_id"), col("label"), col("embedding"), col("qe"),
-          Similarity.cosine(col("embedding"), col("qe")).as("cos_fast"))
-        .orderBy(col("cos_fast").desc, col("vec_id"))
-        .limit(50)
-      pruned.select(col("vec_id"), col("label"),
-          round(Similarity.cosineExact(col("embedding"), col("qe")), 9).as("cos"))
-        .orderBy(col("cos").desc, col("vec_id"))
-        .limit(10)
-    }),
-
-    // Hyperplane-LSH ANN, oracled on PLANTED structure (VERDICT r6 #5):
-    // every 20th vector gets a near-duplicate copy (each dim scaled by
-    // 1 + 0.005·((d%7)−3), cos ≈ 0.99995) and the query reports whether
-    // 4-table OR-amplified LSH bucketing found each planted pair, plus
-    // the exact-decimal cosine the oracle reproduces bit-for-bit. The
-    // oracle pins found_by_lsh TRUE; per-pair miss probability at this
-    // angle is ~(nBits·θ/π)^4 ≈ 1e-6, and hyperplanes are hash-derived,
-    // so the outcome is deterministic — green stays green.
-    "x_lsh_ann" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      // bucket count tracks corpus size (fixed nBits degenerates toward
-      // all-pairs as the corpus grows) — sized from the scan's CATALOG
-      // estimate (file-footer bytes ÷ approx row width: 64 float32 + id/
-      // label/encoding overhead ≈ 400 B), not a count() job: lshBitsFor
-      // is logarithmic, so an order-of-magnitude estimate lands the same
-      // nBits while removing a whole corpus pass from the query
-      val estRows = math.max(1L,
-        (e.queryExecution.optimizedPlan.stats.sizeInBytes / 400).toLong)
-      val nBits = Similarity.lshBitsFor(estRows, targetPerBucket = 8)
-      val perturbed = e.where(col("vec_id") % 20 === 0)
-        .select((col("vec_id") + 10000000L).as("id"),
-          transform(col("embedding"), (x, i) =>
-            (x * (lit(1.0) + lit(0.005) * ((i % 7) - lit(3))))
-              .cast(org.apache.spark.sql.types.FloatType)).as("v"))
-      val corpus = e.select(col("vec_id").as("id"), col("embedding").as("v"))
-        .unionByName(perturbed)
-      val found = Similarity
-        .lshCandidatePairs(corpus, "id", "v", dim = 64, nBits = nBits,
-          nTables = 4)
-        .select(col("id_a").as("vec_id"), col("id_b").as("copy_id"),
-          lit(true).as("f"))
-      e.where(col("vec_id") % 20 === 0)
-        .select(col("vec_id"), (col("vec_id") + 10000000L).as("copy_id"),
-          col("embedding"))
-        .join(perturbed.withColumnRenamed("id", "copy_id"), Seq("copy_id"))
-        .join(found, Seq("vec_id", "copy_id"), "left")
-        .select(col("vec_id"), col("copy_id"),
-          round(Similarity.cosineExact(col("embedding"), col("v")), 9).as("cos"),
-          coalesce(col("f"), lit(false)).as("found_by_lsh"))
-        .orderBy("vec_id")
-    }),
-
-    // Embedding-cosine near-dup pairs, blocked on the label column (the
-    // coarse-quantizer-bucket pattern: exact recall within a block, hash
-    // equi-join plan — the scale path for pairwise embedding dedup).
-    // Exact-decimal cosine → bit-equal to the DuckDB quadratic oracle.
-    "x_embed_neardup" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.cosineNearDupBlocked(e, "vec_id", "embedding", "label",
-          minCos = 0.35,
-          saltBuckets = 4) // 10 labels alone under-parallelize 32 cores
-        .orderBy("id_a", "id_b")
-    }),
-
-    // Semantic dedup (SemDeDup): cosine near-dup pairs within blocks →
-    // transitive clustering → keep each cluster's min-id member plus all
-    // unpaired rows. Blocked on the label column so DuckDB reproduces
-    // the WHOLE chain exactly (pairs CTE ≡ x_embed_neardup, closure ≡
-    // x_dedup_drop's recursive CTE) — the learned-cluster variant
-    // (semanticDedupClustered) is spec-pinned equal to the brute-force
-    // chain at nCentroids=1 instead.
-    "x_semdedup" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.semanticDedup(e, "vec_id", "embedding", "label",
-          minCos = 0.35, saltBuckets = 4)
-        .select(col("vec_id"), col("label")).orderBy("vec_id")
-    }),
-
-    // Density clustering with a noise verdict (DBSCAN in cosine space,
-    // label-blocked ε-pairs): core = ≥ minPts ε-neighbors incl. self,
-    // cluster = min core id of the core-core component, border takes
-    // its smallest adjacent cluster — order-free, engine-exact.
-    "x_dbscan" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.dbscan(e, "vec_id", "embedding", "label",
-          minCos = 0.25, minPts = 4, saltBuckets = 4)
-        .orderBy("id")
-    }),
-
-    // Batch kNN join: top-5 cosine neighbors for EVERY query vector in
-    // one corpus scan (bounded top-k' aggregator keeps the shuffle
-    // candidate-sized), exact-decimal rescore + rank — oracle is the full
-    // quadratic window in DuckDB.
-    "x_knn_join" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.knnJoin(
-          e.where(col("vec_id") < 20), e.where(col("vec_id") >= 20),
-          "vec_id", "embedding", "vec_id", "embedding", k = 5)
-        .orderBy("query_id", "rank")
-    }),
-
-    // kNN classification (weak supervision / label transfer): unlabeled
-    // vectors take the majority label of their 5 nearest labeled
-    // neighbors; the vote is count-based with smallest-label tiebreak —
-    // float-free, so the oracle reproduces it exactly on top of the
-    // quadratic kNN chain.
-    "x_knn_classify" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.knnClassify(
-          e.where(col("vec_id") < 20), e.where(col("vec_id") >= 20),
-          "vec_id", "embedding", "vec_id", "embedding", "label", k = 5)
-        .orderBy("query_id")
-    }),
-
-    // As-of join with a match-age tolerance (pandas merge_asof parity):
-    // most recent purchase per event, but only within the last hour —
-    // older matches resolve to null. Same single window pass; the oracle
-    // age-gates DuckDB's native ASOF match with a CASE.
-    "r_asof_tolerance" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"))
-      val purch = t(s, dir, "events")
-        .where(col("event_type") === "purchase")
-        .groupBy(col("user_id"), unix_micros(col("ts")).as("p_us"))
-        .agg(max(col("event_id")).as("p_event_id"))
-      graft.operators.AsOf.join(ev, purch, "user_id", "us", "p_us",
-          Seq("p_event_id"), tolerance = Some(3600000000L)) // 1h in micros
-        .select(col("event_id"), col("user_id"),
-          col("asof_p_event_id").as("recent_purchase_id"))
-        .orderBy("event_id")
-    }),
-
-    // As-of join (most-recent purchase per event) — composed from one
-    // union + one window pass (graft.operators.AsOf); oracle is DuckDB's
-    // native ASOF LEFT JOIN. Integer (epoch-micros) comparisons → exact.
-    "r_asof_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"))
-      val purch = t(s, dir, "events")
-        .where(col("event_type") === "purchase")
-        .groupBy(col("user_id"), unix_micros(col("ts")).as("p_us"))
-        .agg(max(col("event_id")).as("p_event_id"))
-      graft.operators.AsOf.join(ev, purch, "user_id", "us", "p_us",
-          Seq("p_event_id"))
-        .select(col("event_id"), col("user_id"),
-          col("asof_p_event_id").as("prev_purchase_id"))
-        .orderBy("event_id")
-    }),
-
-    // Same as-of semantics through the custom Catalyst operator
-    // (AsOfJoin logical node -> GraftStrategies -> BroadcastAsOfJoinExec):
-    // right side broadcast as a key->ts-sorted index, per-left-row binary
-    // search, ZERO shuffles (vs one for the union+window composition).
-    // Same DuckDB ASOF LEFT JOIN oracle as r_asof_join.
-    "r_asof_broadcast" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"))
-      val purch = t(s, dir, "events")
-        .where(col("event_type") === "purchase")
-        .groupBy(col("user_id"), unix_micros(col("ts")).as("p_us"))
-        .agg(max(col("event_id")).as("p_event_id"))
-      graft.operators.AsOf.broadcastJoin(ev, purch, "user_id", "us", "p_us",
-          Seq("p_event_id"))
-        .select(col("event_id"), col("user_id"),
-          col("asof_p_event_id").as("prev_purchase_id"))
-        .orderBy("event_id")
-    }),
-
-    // PQ ANN in its PRODUCTION regime, self-verifying: small codebooks
-    // (m=8 subspaces × k=256 codes — the driver holds k·dim doubles,
-    // never corpus-sized state), one Lloyd refinement round, ADC top-400
-    // candidates, exact-decimal rescore of survivors. The candidate
-    // budget is sized to the corpus's geometry, verified at every
-    // shipped SF: these embeddings are near-orthogonal (top-10 cos ≈
-    // 0.31 vs a bulk at 0.25–0.30), the adversarial regime for PQ —
-    // m=4/top-100 and m=8/top-100 each missed one top-10 member at 2000
-    // vectors by < 5e-4 cosine. Recall is proven in-query instead of by
-    // construction: the rescored top-10 left-joins the brute-force exact
-    // top-10 (native two-phase prune, one cheap corpus pass) and emits
-    // `in_exact_topk`, which the oracle pins TRUE — any PQ recall miss
-    // flips the flag (and the rows) red, which is exactly how the
-    // too-small budgets were caught.
-    "x_pq_ann" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val qv = e.where(col("vec_id") === 0).select(col("embedding"))
-        .collect().head.getSeq[Float](0).toArray
-      val corpus = e.where(col("vec_id") =!= 0)
-      val (encoded, books) = Similarity.productQuantize(
-        corpus, "vec_id", "embedding", m = 8, k = 256, lloydIters = 1)
-      val cand = Similarity.pqCandidates(encoded, books, qv, topN = 400)
-      val q = array(qv.map(v => lit(v)): _*)
-      val pqTop = corpus.join(cand.select(col("vec_id")), "vec_id")
-        .select(col("vec_id"), col("label"),
-          round(Similarity.cosineExact(col("embedding"), q), 9).as("cos"))
-        .orderBy(col("cos").desc, col("vec_id"))
-        .limit(10)
-      val bfTop = corpus
-        .select(col("vec_id"), col("embedding"),
-          Similarity.cosine(col("embedding"), q).as("cf"))
-        .orderBy(col("cf").desc, col("vec_id")).limit(50)
-        .select(col("vec_id"),
-          round(Similarity.cosineExact(col("embedding"), q), 9).as("bf_cos"))
-        .orderBy(col("bf_cos").desc, col("vec_id")).limit(10)
-        .select(col("vec_id"), lit(true).as("in_exact_topk"))
-      pqTop.join(bfTop, Seq("vec_id"), "left")
-        .select(col("vec_id"), col("label"), col("cos"),
-          coalesce(col("in_exact_topk"), lit(false)).as("in_exact_topk"))
-        .orderBy(col("cos").desc, col("vec_id"))
-    }),
-
-    // IVF ANN, self-verifying: probing ALL centroid buckets makes IVF
-    // exhaustive (recall = 1), so the output must equal the brute-force
-    // top-k — same oracle as x_cosine_topk. The probe-limited approximate
-    // path is spec-covered (FunctionsSpec "ivfTopK"); this query verifies
-    // the assignment + probe machinery end-to-end against the oracle.
-
-    "x_ivf_ann" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val qv = e.where(col("vec_id") === 0).select(col("embedding"))
-        .collect().head.getSeq[Float](0).toArray
-      val (assigned, centroids) = Similarity.ivfAssign(
-        e.where(col("vec_id") =!= 0), "vec_id", "embedding", nCentroids = 16,
-        kmeansIters = 2) // spherical-Lloyd-refined quantizer, still exhaustive
-      val qd = qv.map(_.toDouble)
-      val probes = centroids.zipWithIndex
-        .map { case (c, i) => (i, c.zip(qd).map { case (a, b) => a * b }.sum) }
-        .sortBy(-_._2).map(_._1) // every bucket, best-first
-      val q = array(qv.map(v => lit(v)): _*)
-      assigned.where(col("ivf_bucket").isin(probes: _*))
-        .select(col("vec_id"), col("label"),
-          round(Similarity.cosineExact(col("embedding"), q), 9).as("cos"))
-        .orderBy(col("cos").desc, col("vec_id"))
-        .limit(10)
-    }),
-
-    // Persisted dense ANN index — the tfidfIndex/tfidfProbeIndex
-    // convention applied to embeddings: ivfIndex freezes a deterministic
-    // spherical-k-means quantizer (k=8, 2 rounds — the x_kmeans chain)
-    // plus cluster-filed postings, BOTH round-tripped through parquet
-    // (the probe consumes the persisted artifact, not the live plans,
-    // and the postings are partitioned by cluster so probing prunes
-    // unread lists at the scan). The probe is SUB-exhaustive (nProbe =
-    // 3 of 8) and still hash-oracled: probe selection ranks exact-
-    // decimal dots against the round-9 centroid literals, so DuckDB
-    // replays the entire frozen chain — which lists are probed, which
-    // candidates are scored, and the final ranks — bit-for-bit. The
-    // in_exact_topk flag (vs the in-query brute-force top-5) records
-    // the recall trade IN the oracled output.
-    "x_ivf_probe" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val (cents, postings) = Similarity.ivfIndex(
-        e, "vec_id", "embedding", nCentroids = 8, rounds = 2)
-      val tmp = scratchDir("graft-ivfidx")
-      cents.write.mode("overwrite").parquet(s"$tmp/centroids")
-      postings.write.mode("overwrite").partitionBy("cluster")
-        .parquet(s"$tmp/postings")
-      val queries = e.where(col("vec_id") % 125 === 0)
-      val probed = Similarity.ivfProbeIndex(queries, "vec_id", "embedding",
-        s.read.parquet(s"$tmp/centroids"), s.read.parquet(s"$tmp/postings"),
-        k = 5, nProbe = 3, excludeSelf = true)
-      val exact = Similarity.knnJoin(queries, e,
-          "vec_id", "embedding", "vec_id", "embedding",
-          k = 5, excludeSelf = true)
-        .select(col("query_id"), col("neighbor_id"), lit(true).as("in_exact_topk"))
-      probed.join(exact, Seq("query_id", "neighbor_id"), "left")
-        .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"),
-          coalesce(col("in_exact_topk"), lit(false)).as("in_exact_topk"))
-        .orderBy("query_id", "rank")
-    }),
-
-    // Incremental index maintenance: the quantizer trains on the OLD
-    // snapshot only (vec_id % 3 ≠ 1), the arrival batch files into the
-    // FROZEN centroids with one map pass (ivfIndexAppend), and the new
-    // postings APPEND to the stored cluster-partitioned parquet — the
-    // old index never moves, the batch never trains. The probe then
-    // reads the grown index; the oracle retrains on the old slice but
-    // assigns EVERYTHING, replaying exactly what the engine persisted.
-    "x_ivf_append" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val old = e.where(col("vec_id") % 3 =!= 1)
-      val fresh = e.where(col("vec_id") % 3 === 1)
-      val (cents, post) = Similarity.ivfIndex(old, "vec_id", "embedding",
-        nCentroids = 8, rounds = 2)
-      val tmp = scratchDir("graft-ivfapp")
-      cents.write.parquet(s"$tmp/centroids")
-      post.write.partitionBy("cluster").parquet(s"$tmp/postings")
-      Similarity.ivfIndexAppend(s.read.parquet(s"$tmp/centroids"), fresh,
-          "vec_id", "embedding")
-        .write.mode("append").partitionBy("cluster").parquet(s"$tmp/postings")
-      val queries = e.where(col("vec_id") % 125 === 0)
-      Similarity.ivfProbeIndex(queries, "vec_id", "embedding",
-          s.read.parquet(s"$tmp/centroids"), s.read.parquet(s"$tmp/postings"),
-          k = 5, nProbe = 3, excludeSelf = true)
-        .orderBy("query_id", "rank")
-    }),
-
-    // Blocked batch kNN join — knnJoin when the query side does NOT
-    // broadcast (self-kNN-graph shape: queries ⊂ corpus): candidate
-    // generation is the coarse-bucket hash EQUI-join (never a broadcast
-    // nested loop of queries × corpus), candidates reduce through the
-    // bounded top-k′ aggregator, survivors exact-rescore through id
-    // joins. Budget-tested at sf0.01 AND sf0.1 (round-5 discipline):
-    // this corpus is near-orthogonal (top cosines 0.27–0.33) and
-    // IVF-adversarial — sub-exhaustive probing tops out at 94% recall
-    // (nProbe=12/16 → 189/200 exact matches at sf0.1) — so the ORACLED
-    // regime probes every bucket (recall structurally 1, the x_ivf_ann
-    // discipline) and the in-query flag pins it; probe-limited recall is
-    // spec-covered (FunctionsSpec) as the documented trade.
-    "x_knn_blocked" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val queries = e.where(pmod(col("vec_id"), lit(20)) === 0)
-      val blocked = Similarity.knnJoinBlocked(queries, e,
-        "vec_id", "embedding", "vec_id", "embedding",
-        k = 5, nCentroids = 16, nProbe = 16, kmeansIters = 1,
-        margin = 40, saltBuckets = 2, excludeSelf = true)
-      val exact = Similarity.knnJoin(queries, e,
-          "vec_id", "embedding", "vec_id", "embedding",
-          k = 5, excludeSelf = true)
-        .select(col("query_id"), col("neighbor_id"), lit(true).as("in_exact_topk"))
-      blocked.join(exact, Seq("query_id", "neighbor_id"), "left")
-        .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"),
-          coalesce(col("in_exact_topk"), lit(false)).as("in_exact_topk"))
-        .orderBy("query_id", "rank")
-    }),
-
-    // Mutual-kNN graph over the WHOLE corpus (every row is a query, no
-    // broadcast): edges where each side ranks in the other's top-5.
-    // Exhaustive probing (nProbe = nCentroids) makes the blocked path
-    // exact, so DuckDB reproduces the full graph from the quadratic
-    // rank window — rows+schema+hash, no recall flag needed.
-    "x_knn_graph" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.mutualKnnEdges(e, "vec_id", "embedding", k = 5,
-          nCentroids = 16, nProbe = 16, kmeansIters = 1,
-          margin = 40, saltBuckets = 2)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // Column profiling census over lineitem: rows/nulls/exact distinct
-    // per column, one aggregation job for all columns — DESCRIBE-class
-    // schema QA. Exact mode (approxRsd = 0); the 100 TB sketch mode is
-    // x_profile_approx below.
-    "x_profile" -> ((s, dir) =>
-      graft.functions.Stats.profile(t(s, dir, "lineitem"),
-        Seq("l_orderkey", "l_partkey", "l_suppkey", "l_returnflag",
-          "l_shipdate", "l_linestatus"))),
-
-    // Stats-maintenance append ritual (the ivf/band/tfidf shape on the
-    // profile side): yesterday's slice reduces ONCE to exactly
-    // mergeable sufficient statistics (decimal sums, counts, min/max)
-    // persisted as a #columns-row parquet artifact; today's arrivals
-    // fold in by addition — equal to a full rescan bit-for-bit, which
-    // is precisely what the oracle computes. Nulls planted on
-    // event_id % 7 exercise the completeness census.
-    "x_moments_append" -> ((s, dir) => {
-      val e = t(s, dir, "events").select(col("event_id"), col("user_id"),
-        when(pmod(col("event_id"), lit(7)) === 0,
-          lit(null).cast("double"))
-          .otherwise(col("value")).as("value"))
-      val cols = Seq("user_id", "value")
-      val old = e.where(pmod(col("event_id"), lit(10)) < 7)
-      val arr = e.where(pmod(col("event_id"), lit(10)) >= 7)
-      val tmp = scratchDir("graft-moments")
-      graft.functions.Stats.momentsBuild(old, cols)
-        .write.mode("overwrite").parquet(tmp)
-      graft.functions.Stats.momentsAppend(s.read.parquet(tmp), arr, cols)
-        .select(col("column"), col("n_rows"), col("n_nulls"), col("n"),
-          col("sum").cast("double").as("sum_v"),
-          col("sum_sq").cast("double").as("sum_sq"),
-          col("vmin"), col("vmax"))
-        .orderBy("column")
-    }),
-
-    // The profile's 100 TB mode, self-verifying (the x_approx_distinct
-    // pattern): approxRsd > 0 swaps exact count_distinct (an Expand —
-    // the scan × #columns into an exchange carrying the distinct VALUES)
-    // for HLL++ sketches (KB-bounded state, no Expand). The query emits
-    // the EXACT counts plus |approx − exact| ≤ 3·rsd·exact flags; the
-    // oracle recomputes the exact counts and asserts the flags TRUE —
-    // the estimate itself never needs cross-engine agreement.
-    "x_profile_approx" -> ((s, dir) => {
-      val cols = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_returnflag")
-      val rsd = 0.02
-      val li = t(s, dir, "lineitem")
-      val ex = graft.functions.Stats.profile(li, cols)
-      val ap = graft.functions.Stats.profile(li, cols, approxRsd = rsd)
-        .select(col("column"), col("n_distinct").as("__approx"))
-      ex.join(ap, "column")
-        .select(col("column"), col("n_rows"), col("n_nulls"), col("n_distinct"),
-          (abs(col("__approx") - col("n_distinct")).cast("double")
-            <= lit(3 * rsd) * col("n_distinct").cast("double")).as("within_tol"))
-        .orderBy("column")
-    }),
-
-    // k-core of the mutual-kNN graph (k = 3, 4 peels): dense cluster
-    // cores; the in-plan converged flag makes an unconverged run visible
-    // in the result rather than silently wrong.
-    "x_kcore" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val edges = Similarity.mutualKnnEdges(e, "vec_id", "embedding", k = 5,
-        nCentroids = 16, nProbe = 16, kmeansIters = 1,
-        margin = 40, saltBuckets = 2)
-      graft.functions.Graph.kCore(edges, "id_a", "id_b", k = 3, rounds = 4)
-        .orderBy("id")
-    }),
-
-    // Personalized PageRank: teleport restricted to a trusted seed set
-    // (customers with custkey % 25 = 0 → node id % 50 = 0) — proximity-
-    // weighted trust through the same bipartite purchase graph.
-    "x_ppr" -> ((s, dir) => {
-      val e = t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-      // interval 3 measured best HERE (10.7 s at interval 5 vs 6.0 s):
-      // unlike x_pagerank, PPR's per-round plan carries the teleport
-      // column through every join, and the 5-round unmaterialized chain
-      // recomputes it per consumer — don't copy the pagerank setting
-      graft.functions.Graph.personalizedPageRank(e,
-          col("id") % 50 === 0, iterations = 5)
-        .select(col("id"), round(col("rank"), 9).as("rank"))
-        .orderBy("id")
-    }),
-
-    // Connected components surfaced directly: (node, min-id label) over
-    // the near-dup pair graph — the operator underneath every dedup-drop
-    // and the leak-safe split; O(log d) pointer-jumping rounds.
-    "x_components" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 5, 0.5)
-      Dedup.connectedComponents(pairs)
-        .select(col("id"), col("label")).orderBy("id")
-    }),
-
-    // Per-node triangle counts on the mutual-kNN graph — the local-
-    // clustering signal; degree-ordered wedge generation keeps the
-    // self-join O(m^1.5) even with hubs, closure is a plain equi-join.
-    "x_triangles" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val edges = Similarity.mutualKnnEdges(e, "vec_id", "embedding", k = 5,
-        nCentroids = 16, nProbe = 16, kmeansIters = 1,
-        margin = 40, saltBuckets = 2)
-      graft.functions.Graph.triangleCount(edges, "id_a", "id_b")
-        .orderBy("id")
-    }),
-
-    // Local clustering coefficient: 2T/(deg·(deg−1)) per node over the
-    // same mutual graph — community-density signal; nothing new shuffles
-    // beyond the triangle pipeline.
-    "x_clustering_coef" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val edges = Similarity.mutualKnnEdges(e, "vec_id", "embedding", k = 5,
-        nCentroids = 16, nProbe = 16, kmeansIters = 1,
-        margin = 40, saltBuckets = 2)
-      graft.functions.Graph.clusteringCoefficient(edges, "id_a", "id_b")
-        .orderBy("id")
-    }),
-
-    // Newman-Girvan modularity of the embeddings' label partition over
-    // the mutual-kNN graph: Q as the exact integer rational
-    // sum(4 m e_c - d_c^2) / 4m^2 — "do the labels explain the graph
-    // beyond degree-preserving chance?"
-    "x_modularity" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val edges = Similarity.mutualKnnEdges(e, "vec_id", "embedding", k = 5,
-        nCentroids = 16, nProbe = 16, kmeansIters = 1,
-        margin = 40, saltBuckets = 2)
-      graft.functions.Graph.modularity(edges, "id_a", "id_b",
-        e.select(col("vec_id"), col("label")), "vec_id", "label")
-    }),
-
-    // Newman degree assortativity of the same mutual-kNN graph: the
-    // degree-degree Pearson over both edge orientations as exact
-    // integer sums (no sqrt — symmetric marginals), DECIMAL(38,0)
-    // close, one double divide. kNN graphs read disassortative.
-    "x_assortativity" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val edges = Similarity.mutualKnnEdges(e, "vec_id", "embedding", k = 5,
-        nCentroids = 16, nProbe = 16, kmeansIters = 1,
-        margin = 40, saltBuckets = 2)
-      graft.functions.Graph.degreeAssortativity(edges, "id_a", "id_b")
-    }),
-
-    // Semi-supervised label propagation: every 5th vector keeps its
-    // label as a seed, labels spread 3 hops along the mutual-kNN graph
-    // (same exhaustive-probe graph as x_knn_graph), majority vote per
-    // hop with smallest-label tiebreak, labels clamp once assigned.
-    // The oracle unrolls the 3 rounds over the quadratic graph chain.
-    "x_label_prop" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val edges = Similarity.mutualKnnEdges(e, "vec_id", "embedding", k = 5,
-        nCentroids = 16, nProbe = 16, kmeansIters = 1,
-        margin = 40, saltBuckets = 2)
-      val seeds = e.where(col("vec_id") % 5 === 0)
-        .select(col("vec_id"), col("label"))
-      graft.functions.Graph.propagateLabels(edges, "id_a", "id_b",
-          seeds, "vec_id", "label", rounds = 3)
-        .join(e.select(col("vec_id")), col("id") === col("vec_id"), "right")
-        .select(col("vec_id"), col("label"), col("since"))
-        .orderBy("vec_id")
-    }),
-
-    // Composed IVF→PQ cascade (probe the inverted lists, ADC-rank only
-    // within them, exact-rescore the ADC top-400) in the x_pq_ann
-    // production regime: m=8 × k=256 codebooks, one Lloyd round.
-    // Budget-tested at sf0.1 first: sub-exhaustive probing bottoms out
-    // at 40–60% recall on this near-orthogonal corpus (nProbe=8/16 →
-    // 4/10), so the oracled regime probes all lists — the ADC budget
-    // (proven at sf0.1 in round 5) does the pruning, and the recall
-    // flag pins the whole cascade; probe-limited probing is
-    // spec-covered (FunctionsSpec).
-    "x_ivfpq_ann" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val qv = e.where(col("vec_id") === 0).select(col("embedding"))
-        .collect().head.getSeq[Float](0).toArray
-      val corpus = e.where(col("vec_id") =!= 0)
-      val cascade = Similarity.ivfPqTopK(corpus, "vec_id", "embedding", qv,
-        k = 10, nCentroids = 16, nProbe = 16, kmeansIters = 1,
-        m = 8, codebookK = 256, lloydIters = 1, adcTopN = 400)
-      val q = array(qv.map(v => lit(v)): _*)
-      val bfTop = corpus
-        .select(col("vec_id"), col("embedding"),
-          Similarity.cosine(col("embedding"), q).as("cf"))
-        .orderBy(col("cf").desc, col("vec_id")).limit(50)
-        .select(col("vec_id"),
-          round(Similarity.cosineExact(col("embedding"), q), 9).as("bf_cos"))
-        .orderBy(col("bf_cos").desc, col("vec_id")).limit(10)
-        .select(col("vec_id"), lit(true).as("in_exact_topk"))
-      cascade.join(bfTop, Seq("vec_id"), "left")
-        .select(col("vec_id"), col("cos"),
-          coalesce(col("in_exact_topk"), lit(false)).as("in_exact_topk"))
-        .orderBy(col("cos").desc, col("vec_id"))
-    }),
-
-    // Multimodal plumbing: opaque binary column + typed metadata (the
-    // decode itself is stubbed in graft.multimodal; here the oracle-
-    // checkable byte-level layer).
-    "x_multimodal_bytes" -> ((s, dir) =>
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        octet_length(col("text")).cast("long").as("n_bytes"),
-        col("n_chars"))
-        .orderBy("doc_id")),
-
-    // Multimodal decode pipeline: text→binary blob→stubbed image decode →
-    // per-media stats (rows-only; the stub codec is engine-specific).
-    "x_multimodal_decode" -> ((s, dir) => {
-      val media = graft.multimodal.Multimodal.asMediaTable(
-        t(s, dir, "documents").select(col("doc_id"),
-          encode(col("text"), "UTF-8").as("blob")),
-        "doc_id", "blob", "image", "png")
-      graft.multimodal.Multimodal.decodeImages(media).orderBy("media_id")
-    }),
-
-    // Sessionization: 30-min-gap sessions per user — exact integer
-    // arithmetic on epoch micros, so the oracle matches bit-for-bit.
-    "r_sessionize" -> ((s, dir) => {
-      t(s, dir, "events")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("us"))
-        .withColumn("new_s",
-          when(col("us") - lag(col("us"), 1).over(
-            Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id")))
-            > lit(1800000000L), 1L).otherwise(0L))
-        .groupBy(col("user_id"))
-        .agg((sum(col("new_s")) + 1L).as("n_sessions"), count(lit(1)).as("n_events"))
-        .orderBy("user_id")
-    }),
-
-    // Sketch aggregation, self-verifying: the HLL++ estimate is engine-
-    // specific, but |approx − exact| / exact ≤ 3·rsd is a deterministic
-    // property of the (deterministic) sketch on this data — so the query
-    // outputs the exact counts plus the within-tolerance flags, and the
-    // oracle asserts the flags are true. The estimate itself never needs
-    // cross-engine agreement.
-    "x_approx_distinct" -> ((s, dir) =>
-      t(s, dir, "lineitem").agg(
-        countDistinct(col("l_partkey")).as("exact_parts"),
-        countDistinct(col("l_orderkey")).as("exact_orders"),
-        approx_count_distinct(col("l_partkey")).as("ap"),
-        approx_count_distinct(col("l_orderkey")).as("ao"))
-        .select(col("exact_parts"), col("exact_orders"),
-          (abs(col("ap") - col("exact_parts")).cast("double") / col("exact_parts")
-            <= lit(0.15)).as("parts_within_tol"),
-          (abs(col("ao") - col("exact_orders")).cast("double") / col("exact_orders")
-            <= lit(0.15)).as("orders_within_tol"))),
-
-    // Approximate quantiles (KLL-style mergeable sketch — the one-pass,
-    // fixed-memory path; r_percentile is the exact sort-based dual).
-    // Self-verifying like x_approx_distinct: approx_percentile's rank
-    // error is bounded by its accuracy parameter, so the query outputs
-    // exact quantiles plus within-tolerance flags the oracle asserts.
-    "x_approx_quantile" -> ((s, dir) => {
-      // Exact side runs the scale-safe distributed selection
-      // (Stats.exactQuantiles: bucket-refinement passes keeping only
-      // metadata-sized counts) rather than `percentile(...)`, whose final
-      // merge buffers every distinct value on one reducer. Values are
-      // identical bit-for-bit (StatsSpec pins this).
-      val l = t(s, dir, "lineitem")
-      val ex = graft.functions.Stats.exactQuantiles(
-        l, "l_extendedprice", Seq(0.5, 0.95, 0.99))
-      val approx = expr(
-        "approx_percentile(l_extendedprice, array(0.5D, 0.95D, 0.99D), 10000)")
-      l.agg(approx.as("ap"))
-        .select(
-          round(lit(ex(0)), 4).as("p50"),
-          round(lit(ex(1)), 4).as("p95"),
-          round(lit(ex(2)), 4).as("p99"),
-          (abs(element_at(col("ap"), 1).cast("double") - lit(ex(0))) /
-            lit(ex(0)) <= lit(0.02)).as("p50_within_tol"),
-          (abs(element_at(col("ap"), 2).cast("double") - lit(ex(1))) /
-            lit(ex(1)) <= lit(0.02)).as("p95_within_tol"),
-          (abs(element_at(col("ap"), 3).cast("double") - lit(ex(2))) /
-            lit(ex(2)) <= lit(0.02)).as("p99_within_tol"))
-    }),
-
-    // Error quarantine: closure failures routed to a side-channel with row
-    // context (the reference's multierror), good rows unaffected. The
-    // failure condition is deterministic, so the ok/err split is exactly
-    // SQL-expressible and the whole channel is oracle-checked.
-    "x_quarantine" -> ((s, dir) => {
-      val q = graft.api.GraftFrame(t(s, dir, "documents"))
-        .mapQuarantined { r =>
-          if (r.getLong("n_chars") < 200L)
-            throw new IllegalArgumentException(s"doc too short: ${r.getLong("n_chars")}")
-          r
-        }
-      q.frame.df.select(col("doc_id"), lit("ok").as("status"))
-        .unionByName(q.errors.select(col("row.doc_id").as("doc_id"),
-          lit("err").as("status")))
-        .orderBy("doc_id")
-    }),
-  )
-
-  // ---------------------------------------------------------------------
-  // DuckDB oracles — every query key has one. x_simhash and x_lsh_ann
-  // (formerly rows-only: simhash's Hamming similarity is genuinely
-  // different from n-gram Jaccard, and the corpus' nearest cosine
-  // neighbors sit at 0.27-0.33, so natural-structure recall can't be
-  // pinned) are oracled on PLANTED structure instead: the query derives
-  // deterministic near-dup copies in-plan and the oracle pins the
-  // found_by_* flag TRUE on each planted pair (VERDICT r6 #5).
-  // ---------------------------------------------------------------------
-
-  /** Exact 5-gram Jaccard pairs as a DuckDB CTE chain ending in
-    * `jpairs(id_a, id_b, jaccard)` — the shared ground truth for
-    * x_ngram_jaccard, x_minhash_neardup's recall flag, and x_dedup_drop's
-    * transitive-closure oracle. Mirrors [[Dedup.ngramJaccardPairs]]
-    * (whitespace tokens; docs shorter than one gram collapse to a single
-    * whole-text gram).
-    */
-  /** Quadratic mutual-kNN graph oracle chain (k = 5, exact decimal
-    * cosines, the x_knn_graph contract) ending with `mutual`
-    * (id_a < id_b, cos). Shared by the graph-analytics oracles. */
-  private val mutualKnnCte: String =
-    """z AS (
-      | SELECT q.vec_id AS qid, c.vec_id AS nid,
-      |  CAST(unnest(c.embedding) AS DOUBLE) AS x,
-      |  CAST(unnest(q.embedding) AS DOUBLE) AS y
-      | FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id),
-      |d AS (
-      | SELECT qid, nid,
-      |  SUM(CAST(x * y AS DECIMAL(30,15))) AS dot,
-      |  SUM(CAST(x * x AS DECIMAL(30,15))) AS nc,
-      |  SUM(CAST(y * y AS DECIMAL(30,15))) AS nq
-      | FROM z GROUP BY 1, 2),
-      |r AS (
-      | SELECT qid, nid,
-      |  ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(nc AS DOUBLE) * CAST(nq AS DOUBLE)), 9) AS cos,
-      |  ROW_NUMBER() OVER (PARTITION BY qid
-      |    ORDER BY ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(nc AS DOUBLE) * CAST(nq AS DOUBLE)), 9) DESC,
-      |      nid) AS rank
-      | FROM d),
-      |topk AS (SELECT qid, nid, cos FROM r WHERE rank <= 5),
-      |mutual AS (
-      | SELECT a.qid AS id_a, a.nid AS id_b, a.cos
-      | FROM topk a JOIN topk b ON a.qid = b.nid AND a.nid = b.qid
-      | WHERE a.qid < a.nid)""".stripMargin
-
-  /** Shared base CTEs for the TF-IDF retrieval oracles: whitespace
-    * tokens (the engine's `TextFunctions.tokens` contract) + corpus doc
-    * count. */
-  private val tfidfBaseCte: String =
-    """toks AS (
-      | SELECT doc_id, CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-      |   ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-      | FROM documents),
-      |nd AS (SELECT COUNT(*) AS n FROM documents)""".stripMargin
-
-  /** TF-IDF top-k retrieval oracle chain for one shingle width `n`,
-    * CTE-prefixed with `p` so several widths can coexist in one query
-    * (the RRF fusion oracle). Groups by the gram STRING where the engine
-    * groups by the 8-byte hash — identical tf/df absent a collision; the
-    * arithmetic mirrors `Corpus.tfidfTopK` op-for-op. Ends with `<p>rk`:
-    * (query_id, doc_id, cos, rank). */
-  private def tfidfRkCte(n: Int, p: String, maxDfRatio: Double = 0.5,
-                         qmod: Int = 101): String = {
-    val gramExpr = (0 until n).map(j => s"list_extract(tok, i + $j)")
-      .mkString(" || ' ' || ")
-    val hi = if (n == 2) "len(tok)" else s"len(tok) - ${n - 2}"
-    s"""${p}grams AS (
-       | SELECT doc_id, unnest(list_transform(range(1, $hi),
-       |   i -> $gramExpr)) AS gram
-       | FROM toks),
-       |${p}tf AS (SELECT doc_id, gram, COUNT(*) AS tf FROM ${p}grams GROUP BY 1, 2),
-       |${p}keptf AS (
-       | SELECT gram, df, n
-       | FROM (SELECT gram, COUNT(*) AS df FROM ${p}tf GROUP BY 1) CROSS JOIN nd
-       | WHERE CAST(df AS DOUBLE) <= $maxDfRatio * CAST(n AS DOUBLE)),
-       |${p}posting AS (
-       | SELECT doc_id, gram,
-       |  CAST(tf AS DOUBLE) * (LN(CAST(n AS DOUBLE)) - LN(CAST(df AS DOUBLE))) AS w
-       | FROM ${p}tf JOIN ${p}keptf USING (gram)),
-       |${p}norms AS (
-       | SELECT doc_id, SQRT(CAST(SUM(CAST(w * w AS DECIMAL(30,15))) AS DOUBLE)) AS nrm
-       | FROM ${p}posting GROUP BY 1),
-       |${p}dots AS (
-       | SELECT q.doc_id AS query_id, p.doc_id AS doc_id,
-       |  CAST(SUM(CAST(q.w * p.w AS DECIMAL(30,15))) AS DOUBLE) AS dot
-       | FROM ${p}posting p JOIN ${p}posting q USING (gram)
-       | WHERE q.doc_id % $qmod = 0 AND p.doc_id <> q.doc_id
-       | GROUP BY 1, 2),
-       |${p}rk AS (
-       | SELECT query_id, doc_id, cos,
-       |  CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY cos DESC, doc_id) AS BIGINT) AS rank
-       | FROM (SELECT query_id, d.doc_id, ROUND(dot / (qn.nrm * dn.nrm), 9) AS cos
-       |       FROM ${p}dots d
-       |       JOIN ${p}norms qn ON qn.doc_id = d.query_id
-       |       JOIN ${p}norms dn ON dn.doc_id = d.doc_id))""".stripMargin
-  }
-
-  private def ngramPairsCte(minJaccard: Double,
-                            from: String = "documents"): String =
-    raw"""toks AS (
-       | SELECT doc_id, regexp_split_to_array(TRIM(text), '\s+') AS tok
-       | FROM $from),
-       |g0 AS (
-       | SELECT doc_id, unnest(CASE WHEN len(tok) < 5 THEN [array_to_string(tok, ' ')]
-       |   ELSE list_transform(range(1, len(tok) - 3),
-       |     i -> list_extract(tok, i) || ' ' || list_extract(tok, i + 1) || ' ' || list_extract(tok, i + 2) || ' ' || list_extract(tok, i + 3) || ' ' || list_extract(tok, i + 4)) END) AS gram
-       | FROM toks),
-       |grams AS (SELECT DISTINCT doc_id, gram FROM g0),
-       |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id),
-       |inter AS (
-       | SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-       | FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-       | GROUP BY 1, 2),
-       |jpairs AS (
-       | SELECT id_a, id_b,
-       |  CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE) AS jaccard
-       | FROM inter
-       | JOIN sizes sa ON sa.doc_id = id_a
-       | JOIN sizes sb ON sb.doc_id = id_b
-       | WHERE CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE) >= $minJaccard)""".stripMargin
-
-  /** One unrolled Lloyd round for the k-means oracle: assignment by
-    * exact-decimal dot against the previous round's centroids `prev`,
-    * decimal-exact normalized-mean recenter (empty clusters keep their
-    * centroid via the grid LEFT JOIN), exact-norm re-unitization, round 9
-    * — each step the mirror of [[graft.functions.Similarity.kmeansTrain]].
-    */
-  private val unigramMaxWordLen = 12
-  private val unigramMaxPieceLen = 4
-
-  /** Word vocabulary, substring seed counts, and the single-character
-    * coverage set — the base of the unigram-LM tokenizer oracle. Same
-    * tokenization (trim + \s+ split) and the same 1..maxWordLen filter
-    * as [[graft.functions.Corpus.unigramTrain]].
-    */
-  private val unigramBaseCte: String =
-    s"""uw AS MATERIALIZED (
-       | SELECT word AS w, CAST(COUNT(*) AS BIGINT) AS wc FROM (
-       |  SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS word
-       |  FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0)
-       | WHERE length(word) BETWEEN 1 AND $unigramMaxWordLen
-       | GROUP BY 1),
-       |useed AS MATERIALIZED (
-       | SELECT piece, CAST(SUM(wc) AS BIGINT) AS cnt FROM (
-       |  SELECT w.wc,
-       |   substr(w.w, CAST(ii.i AS INTEGER), CAST(ll.l AS INTEGER)) AS piece
-       |  FROM uw w
-       |   CROSS JOIN (SELECT unnest(range(1, ${unigramMaxWordLen + 1})) AS i) ii
-       |   CROSS JOIN (SELECT unnest(range(1, ${unigramMaxPieceLen + 1})) AS l) ll
-       |  WHERE ii.i + ll.l - 1 <= length(w.w))
-       | GROUP BY 1),
-       |uchars AS MATERIALIZED (SELECT piece FROM useed WHERE length(piece) = 1)""".stripMargin
-
-  /** One unrolled Viterbi-EM round of the unigram tokenizer, reading
-    * piece counts from CTE `cin` and ending in `ucin{r}` (the round's
-    * re-counted vocabulary with the single-character floor): log probs
-    * `round₉(ln c − ln Σc)` as DECIMAL(30,15); a 12-position DP whose
-    * cell p takes the best of the ≤4 piece lengths ending there
-    * (score DESC, piece-count ASC, length ASC — the kernel's exact
-    * tiebreak; unknown single chars score exactly −10⁹); a 12-step
-    * backtrack re-materializing each word's winning pieces (step s = the
-    * s-th piece FROM THE END, kept for the encode oracle's ordering).
-    * Every table is word-vocabulary-sized.
-    */
-  private def unigramRoundCtes(r: Int, cin: String): String = {
-    val dp = (p: Int) => s"udp${r}_$p"
-    val bt = (s: Int) => s"ubt${r}_$s"
-    val dpCtes = (1 to unigramMaxWordLen).map { p =>
-      val branches = (1 to math.min(unigramMaxPieceLen, p)).map { j =>
-        s"""  SELECT d.w, d.wc,
-           |   d.sc + COALESCE(v.lp, CAST(-1000000000 AS DECIMAL(30,15))) AS sc,
-           |   d.np + 1 AS np, $j AS j
-           |  FROM ${dp(p - j)} d LEFT JOIN ulp$r v
-           |   ON v.piece = substr(d.w, ${p - j + 1}, $j)
-           |  WHERE length(d.w) >= $p AND (v.piece IS NOT NULL OR $j = 1)"""
-          .stripMargin
-      }.mkString("\n  UNION ALL\n")
-      s"""${dp(p)} AS MATERIALIZED (
-         | SELECT w, wc, sc, np, j FROM (
-         |  SELECT w, wc, sc, np, j,
-         |   ROW_NUMBER() OVER (PARTITION BY w
-         |     ORDER BY sc DESC, np ASC, j ASC) AS rk
-         |  FROM (
-         |$branches))
-         | WHERE rk = 1)""".stripMargin
-    }.mkString(",\n")
-    val dpa = (1 to unigramMaxWordLen).map(p =>
-      s"SELECT w, $p AS p, j FROM ${dp(p)}").mkString("\n UNION ALL\n ")
-    val btCtes = (1 to unigramMaxWordLen).map { s =>
-      s"""${bt(s)} AS MATERIALIZED (
-         | SELECT b.w, b.wc, b.p - d.j AS p,
-         |  substr(b.w, CAST(b.p - d.j + 1 AS INTEGER), CAST(d.j AS INTEGER)) AS piece,
-         |  $s AS s
-         | FROM ${bt(s - 1)} b JOIN udpa$r d ON d.w = b.w AND d.p = b.p
-         | WHERE b.p > 0)""".stripMargin
-    }.mkString(",\n")
-    val pieces = (1 to unigramMaxWordLen).map(s =>
-      s"SELECT w, wc, piece, s FROM ${bt(s)}").mkString("\n UNION ALL\n ")
-    s"""ulp$r AS MATERIALIZED (
-       | SELECT piece,
-       |  CAST(ROUND(ln(CAST(cnt AS DOUBLE)) -
-       |    ln((SELECT CAST(SUM(cnt) AS DOUBLE) FROM $cin)), 9)
-       |   AS DECIMAL(30,15)) AS lp
-       | FROM $cin),
-       |udp${r}_0 AS MATERIALIZED (
-       | SELECT w, wc, CAST(0 AS DECIMAL(30,15)) AS sc, 0 AS np, 0 AS j FROM uw),
-       |$dpCtes,
-       |udpa$r AS MATERIALIZED (
-       | $dpa),
-       |ubt${r}_0 AS MATERIALIZED (
-       | SELECT w, wc, length(w) AS p, CAST(NULL AS VARCHAR) AS piece, 0 AS s
-       | FROM uw),
-       |$btCtes,
-       |upc$r AS MATERIALIZED (
-       | SELECT w, wc, piece, s FROM (
-       |  $pieces)
-       | WHERE piece IS NOT NULL),
-       |ucnt$r AS MATERIALIZED (
-       | SELECT piece, CAST(SUM(wc) AS BIGINT) AS cnt FROM upc$r GROUP BY 1),
-       |ucin$r AS MATERIALIZED (
-       | SELECT piece, cnt FROM ucnt$r
-       | UNION ALL
-       | SELECT c.piece, CAST(1 AS BIGINT) AS cnt FROM uchars c
-       | WHERE c.piece NOT IN (SELECT piece FROM ucnt$r))""".stripMargin
-  }
-
-  /** The full trained-and-pruned unigram vocabulary chain: seed → two
-    * EM rounds → top-40 by (cnt DESC, piece) ∪ all single characters.
-    */
-  private val unigramKeptCte: String =
-    s"""$unigramBaseCte,
-       |${unigramRoundCtes(1, "useed")},
-       |${unigramRoundCtes(2, "ucin1")},
-       |ukept AS MATERIALIZED (
-       | SELECT piece, cnt FROM (
-       |  SELECT piece, cnt,
-       |   ROW_NUMBER() OVER (ORDER BY cnt DESC, piece ASC) AS rk
-       |  FROM ucin2) WHERE rk <= 40
-       | UNION
-       | SELECT c2.piece, c2.cnt FROM ucin2 c2
-       | JOIN uchars ch ON ch.piece = c2.piece)""".stripMargin
-
-  /** @param members CTE naming the TRAINING membership (vec_id set) the
-    *   round aggregates over — "vv" for train-on-everything; a filtered
-    *   subset for the incremental-index oracle (train on the old
-    *   snapshot, assign everything).
-    */
-  /** The WordPiece forward walk unrolled over the word vocabulary:
-    * `wvocab` doubles every trained piece as an initial and a
-    * `##`-continuation entry; each step takes the longest match at the
-    * current position (no ties — a (body, continuation) pair occurs
-    * once); a word completes iff its furthest position reaches its
-    * length, else it collapses to '[UNK]' (the BERT rule). Steps carry
-    * their index so per-doc assembly orders pieces forward.
-    */
-  private val wordpieceCtes: String = {
-    val steps = (1 to unigramMaxWordLen).map { s =>
-      s"""wps$s AS MATERIALIZED (
-         | SELECT word, pos, body, cont, len FROM (
-         |  SELECT b.word, b.pos, v.body, v.cont, v.len,
-         |   ROW_NUMBER() OVER (PARTITION BY b.word ORDER BY v.len DESC) AS rk
-         |  FROM wp${s - 1} b JOIN wvocab v
-         |   ON v.cont = (b.pos > 0)
-         |   AND v.body = substr(b.word, CAST(b.pos + 1 AS INTEGER),
-         |     CAST(v.len AS INTEGER))
-         |  WHERE b.pos < length(b.word)) WHERE rk = 1),
-         |wp$s AS MATERIALIZED (
-         | SELECT word, pos + len AS pos FROM wps$s)""".stripMargin
-    }.mkString(",\n")
-    val allSteps = (1 to unigramMaxWordLen).map(s =>
-      s"SELECT word, $s AS s, body, cont FROM wps$s").mkString("\n  UNION ALL\n  ")
-    val allPos = (0 to unigramMaxWordLen).map(s =>
-      s"SELECT word, pos FROM wp$s").mkString("\n  UNION ALL\n  ")
-    s"""wvocab AS MATERIALIZED (
-       | SELECT piece AS body, FALSE AS cont, length(piece) AS len FROM ukept
-       | UNION ALL
-       | SELECT piece AS body, TRUE AS cont, length(piece) AS len FROM ukept),
-       |wp0 AS (SELECT w AS word, 0 AS pos FROM uw),
-       |$steps,
-       |wreach AS MATERIALIZED (
-       | SELECT word, MAX(pos) AS reached FROM (
-       |  $allPos) GROUP BY 1),
-       |wok AS MATERIALIZED (
-       | SELECT r.word FROM wreach r JOIN uw ON uw.w = r.word
-       | WHERE r.reached = length(r.word)),
-       |wpieces AS MATERIALIZED (
-       | SELECT word, s,
-       |  CASE WHEN cont THEN '##' || body ELSE body END AS piece
-       | FROM (
-       |  $allSteps)
-       | WHERE word IN (SELECT word FROM wok)
-       | UNION ALL
-       | SELECT w AS word, 1 AS s, '[UNK]' AS piece FROM uw
-       | WHERE w NOT IN (SELECT word FROM wok))""".stripMargin
-  }
-
-  private def kmeansRoundCte(r: Int, prev: String,
-                             members: String = "vv"): String =
-    s"""d$r AS (
-       | SELECT e.vec_id, c.c,
-       |  CAST(SUM(CAST(e.x * c.w AS DECIMAL(30,15))) AS DOUBLE) AS dot
-       | FROM e JOIN $members USING (vec_id) JOIN $prev c ON c.pos = e.pos
-       | GROUP BY 1, 2),
-       |a$r AS (
-       | SELECT vec_id, c FROM (
-       |  SELECT vec_id, c,
-       |   ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dot DESC, c) AS rk
-       |  FROM d$r) WHERE rk = 1),
-       |m$r AS (
-       | SELECT a.c, e.pos,
-       |  ROUND(CAST(SUM(CAST(e.x / SQRT(n.n2) AS DECIMAL(30,15))) AS DOUBLE)
-       |    / CAST(COUNT(*) AS DOUBLE), 9) AS m
-       | FROM e JOIN n USING (vec_id) JOIN a$r a USING (vec_id)
-       | GROUP BY 1, 2),
-       |g$r AS (
-       | SELECT p.c, p.pos, COALESCE(m$r.m, p.w) AS m
-       | FROM $prev p LEFT JOIN m$r ON m$r.c = p.c AND m$r.pos = p.pos),
-       |u$r AS (
-       | SELECT c, CAST(SUM(CAST(m * m AS DECIMAL(30,15))) AS DOUBLE) AS n2c
-       | FROM g$r GROUP BY 1),
-       |c$r AS (
-       | SELECT g.c, g.pos, ROUND(g.m / SQRT(u.n2c), 9) AS w
-       | FROM g$r g JOIN u$r u USING (c))""".stripMargin
-
-  /** The full k-means chain (k=8, rounds=2, id-ordered seeds) ending in
-    * `kassign(vec_id, cluster, cos_to_centroid)` — shared by x_kmeans and
-    * x_cluster_sample. Every arithmetic step decimal-exact or a single
-    * IEEE double op, so cluster ids and cosines hash-match bit-for-bit.
-    */
-  private val kmeansCte: String =
-    s"""v AS (SELECT vec_id, embedding FROM embeddings
-       |      WHERE embedding IS NOT NULL),
-       |e0 AS (
-       | SELECT vec_id,
-       |  unnest(list_transform(range(1, len(embedding) + 1),
-       |    i -> {'pos': i - 1, 'x': CAST(embedding[i] AS DOUBLE)})) AS u
-       | FROM v),
-       |e AS (SELECT vec_id, CAST(u.pos AS INT) AS pos, u.x AS x FROM e0),
-       |n AS (
-       | SELECT vec_id,
-       |  CAST(SUM(CAST(x * x AS DECIMAL(30,15))) AS DOUBLE) AS n2
-       | FROM e GROUP BY 1),
-       |vv AS (SELECT vec_id FROM n WHERE n2 > 0),
-       |sid AS (
-       | SELECT vec_id, CAST(ROW_NUMBER() OVER (ORDER BY vec_id) AS INT) - 1 AS c
-       | FROM vv ORDER BY vec_id LIMIT 8),
-       |c0 AS (
-       | SELECT s.c, e.pos, ROUND(e.x / SQRT(n.n2), 9) AS w
-       | FROM sid s JOIN e ON e.vec_id = s.vec_id JOIN n ON n.vec_id = s.vec_id),
-       |${kmeansRoundCte(1, "c0")},
-       |${kmeansRoundCte(2, "c1")},
-       |dfin AS (
-       | SELECT e.vec_id, c.c,
-       |  CAST(SUM(CAST(e.x * c.w AS DECIMAL(30,15))) AS DOUBLE) AS dot
-       | FROM e JOIN vv USING (vec_id) JOIN c2 c ON c.pos = e.pos
-       | GROUP BY 1, 2),
-       |afin AS (
-       | SELECT vec_id, c, dot FROM (
-       |  SELECT vec_id, c, dot,
-       |   ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dot DESC, c) AS rk
-       |  FROM dfin) WHERE rk = 1),
-       |cn AS (
-       | SELECT c, CAST(SUM(CAST(w * w AS DECIMAL(30,15))) AS DOUBLE) AS n2c
-       | FROM c2 GROUP BY 1),
-       |kassign AS (
-       | SELECT afin.vec_id, afin.c AS cluster,
-       |  ROUND(afin.dot / SQRT(n.n2 * cn.n2c), 9) AS cos_to_centroid
-       | FROM afin JOIN n ON n.vec_id = afin.vec_id JOIN cn ON cn.c = afin.c)""".stripMargin
-
-  /** The incremental-index chain: k-means TRAINS on the old snapshot
-    * only (`vtrain` = vec_id % 3 ≠ 1) but the final assignment covers
-    * EVERY vector — exactly the state of a stored index built on the old
-    * slice and then appended to with the arrivals under the frozen
-    * centroids. Ends in kassign(vec_id, cluster) over the full corpus
-    * plus the c2/cn/n CTEs the probe tail scores with.
-    */
-  private val ivfAppendCte: String =
-    s"""v AS (SELECT vec_id, embedding FROM embeddings
-       |      WHERE embedding IS NOT NULL),
-       |e0 AS (
-       | SELECT vec_id,
-       |  unnest(list_transform(range(1, len(embedding) + 1),
-       |    i -> {'pos': i - 1, 'x': CAST(embedding[i] AS DOUBLE)})) AS u
-       | FROM v),
-       |e AS (SELECT vec_id, CAST(u.pos AS INT) AS pos, u.x AS x FROM e0),
-       |n AS (
-       | SELECT vec_id,
-       |  CAST(SUM(CAST(x * x AS DECIMAL(30,15))) AS DOUBLE) AS n2
-       | FROM e GROUP BY 1),
-       |vv AS (SELECT vec_id FROM n WHERE n2 > 0),
-       |vtrain AS (SELECT vec_id FROM vv WHERE vec_id % 3 <> 1),
-       |sid AS (
-       | SELECT vec_id, CAST(ROW_NUMBER() OVER (ORDER BY vec_id) AS INT) - 1 AS c
-       | FROM vtrain ORDER BY vec_id LIMIT 8),
-       |c0 AS (
-       | SELECT s.c, e.pos, ROUND(e.x / SQRT(n.n2), 9) AS w
-       | FROM sid s JOIN e ON e.vec_id = s.vec_id JOIN n ON n.vec_id = s.vec_id),
-       |${kmeansRoundCte(1, "c0", "vtrain")},
-       |${kmeansRoundCte(2, "c1", "vtrain")},
-       |dfin AS (
-       | SELECT e.vec_id, c.c,
-       |  CAST(SUM(CAST(e.x * c.w AS DECIMAL(30,15))) AS DOUBLE) AS dot
-       | FROM e JOIN vv USING (vec_id) JOIN c2 c ON c.pos = e.pos
-       | GROUP BY 1, 2),
-       |kassign AS (
-       | SELECT vec_id, c AS cluster FROM (
-       |  SELECT vec_id, c,
-       |   ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dot DESC, c) AS rk
-       |  FROM dfin) WHERE rk = 1)""".stripMargin
-
-  /** The view→click→purchase funnel oracle — shared by x_funnel (k-join
-    * engine form) and x_funnel_deep (one-shuffle kernel form): both
-    * compute the identical step recurrence.
-    */
-  /** The greedy step-time CTE chain x_funnel / x_funnel_deep /
-    * x_funnel_latency share (s3 carries t1 AND t3 for the window gate
-    * and the latency).
-    */
-  private val funnelStepsCte: String =
-    """e AS (
-      | SELECT user_id AS u, epoch_us(ts) AS us, event_type AS t FROM events),
-      |s1 AS (SELECT u, MIN(us) AS t1 FROM e WHERE t = 'view' GROUP BY u),
-      |s2 AS (SELECT e.u, t1, MIN(us) AS t2 FROM e JOIN s1 ON e.u = s1.u
-      |       WHERE t = 'click' AND e.us >= s1.t1 GROUP BY e.u, t1),
-      |s3 AS (SELECT e.u, s2.t1, MIN(us) AS t3 FROM e JOIN s2 ON e.u = s2.u
-      |       WHERE t = 'purchase' AND e.us >= s2.t2 GROUP BY e.u, s2.t1)""".stripMargin
-
-  private val funnelOracle: String =
-    s"""WITH $funnelStepsCte
-      |SELECT * FROM (
-      | SELECT CAST(1 AS BIGINT) AS step, 'view' AS event_type,
-      |  COUNT(*) AS n_users FROM s1 WHERE t1 - t1 <= 86400000000
-      | UNION ALL
-      | SELECT CAST(2 AS BIGINT), 'click', COUNT(*) FROM s2
-      | WHERE t2 - t1 <= 86400000000
-      | UNION ALL
-      | SELECT CAST(3 AS BIGINT), 'purchase', COUNT(*) FROM s3
-      | WHERE t3 - t1 <= 86400000000)
-      |ORDER BY step""".stripMargin
-
-  /** Brute-force exact cosine top-10 — shared by x_cosine_topk and
-    * x_ivf_ann (IVF probing every bucket is exhaustive, so its output must
-    * equal brute force).
-    */
-  private val cosineTopkOracle: String =
-    """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-      |z AS (
-      | SELECT e.vec_id, e.label,
-      |  CAST(unnest(e.embedding) AS DOUBLE) AS a,
-      |  CAST(unnest(q.qe) AS DOUBLE) AS b
-      | FROM embeddings e, q WHERE e.vec_id <> 0),
-      |d AS (
-      | SELECT vec_id, label,
-      |  SUM(CAST(a * b AS DECIMAL(30,15))) AS dot,
-      |  SUM(CAST(a * a AS DECIMAL(30,15))) AS na,
-      |  SUM(CAST(b * b AS DECIMAL(30,15))) AS nb
-      | FROM z GROUP BY vec_id, label)
-      |SELECT vec_id, label,
-      | ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)), 9) AS cos
-      |FROM d ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "x_ivf_ann" -> cosineTopkOracle,
-
-    // The persisted-IVF probe replayed END-TO-END: the frozen quantizer
-    // is the x_kmeans chain (kmeansCte — smallest-id seeds, 2 exact
-    // Lloyd rounds, round-9 unit centroids), probe selection ranks
-    // decimal-exact (query · centroid) dots with ties to the smaller
-    // cluster, candidates are EXACTLY the nProbe=3 probed lists'
-    // members, and pair scores are decimal-exact round-9 cosines — so
-    // the sub-exhaustive result (including which near-neighbors recall
-    // MISSES) hash-matches. in_exact_topk recomputes the brute-force
-    // top-5 per query; a probe/assignment bug flips rows AND flags.
-    "x_ivf_probe" ->
-      s"""WITH $kmeansCte,
-         |qs AS (
-         | SELECT vec_id AS qid FROM embeddings WHERE vec_id % 125 = 0),
-         |qd AS (
-         | SELECT q.qid, c.c,
-         |  CAST(SUM(CAST(e.x * c.w AS DECIMAL(30,15))) AS DOUBLE) AS dot
-         | FROM qs q JOIN vv ON vv.vec_id = q.qid
-         |  JOIN e ON e.vec_id = q.qid JOIN c2 c ON c.pos = e.pos
-         | GROUP BY 1, 2),
-         |pr AS (
-         | SELECT qid, c FROM (
-         |  SELECT qid, c,
-         |   ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dot DESC, c) AS rk
-         |  FROM qd) WHERE rk <= 3),
-         |cand AS (
-         | SELECT p.qid, a.vec_id
-         | FROM pr p JOIN kassign a ON a.cluster = p.c
-         | WHERE a.vec_id <> p.qid),
-         |pd AS (
-         | SELECT cd.qid, cd.vec_id,
-         |  CAST(SUM(CAST(eq.x * ec.x AS DECIMAL(30,15))) AS DOUBLE) AS dot
-         | FROM cand cd
-         |  JOIN e eq ON eq.vec_id = cd.qid
-         |  JOIN e ec ON ec.vec_id = cd.vec_id AND ec.pos = eq.pos
-         | GROUP BY 1, 2),
-         |ranked AS (
-         | SELECT qid AS query_id, vec_id AS neighbor_id, cos,
-         |  CAST(ROW_NUMBER() OVER (PARTITION BY qid
-         |    ORDER BY cos DESC, vec_id) AS BIGINT) AS rank
-         | FROM (
-         |  SELECT pd.qid, pd.vec_id,
-         |   ROUND(pd.dot / SQRT(nc.n2 * nq.n2), 9) AS cos
-         |  FROM pd JOIN n nq ON nq.vec_id = pd.qid
-         |   JOIN n nc ON nc.vec_id = pd.vec_id)),
-         |bfd AS (
-         | SELECT q.qid, ec.vec_id,
-         |  CAST(SUM(CAST(eq.x * ec.x AS DECIMAL(30,15))) AS DOUBLE) AS dot
-         | FROM qs q JOIN e eq ON eq.vec_id = q.qid
-         |  JOIN e ec ON ec.pos = eq.pos
-         |  JOIN vv ON vv.vec_id = ec.vec_id
-         | WHERE ec.vec_id <> q.qid
-         | GROUP BY 1, 2),
-         |bft AS (
-         | SELECT qid, vec_id FROM (
-         |  SELECT bfd.qid, bfd.vec_id,
-         |   ROW_NUMBER() OVER (PARTITION BY bfd.qid
-         |     ORDER BY ROUND(bfd.dot / SQRT(nc.n2 * nq.n2), 9) DESC,
-         |       bfd.vec_id) AS rk
-         |  FROM bfd JOIN n nq ON nq.vec_id = bfd.qid
-         |   JOIN n nc ON nc.vec_id = bfd.vec_id)
-         | WHERE rk <= 5)
-         |SELECT r.query_id, r.neighbor_id, r.cos, r.rank,
-         | (bft.vec_id IS NOT NULL) AS in_exact_topk
-         |FROM ranked r LEFT JOIN bft
-         | ON bft.qid = r.query_id AND bft.vec_id = r.neighbor_id
-         |WHERE r.rank <= 5
-         |ORDER BY r.query_id, r.rank""".stripMargin,
-
-    // Same exact top-10 as brute force, plus the recall flag the query
-    // computes by joining its PQ answer against the in-query brute-force
-    // top-10 — TRUE by definition on the oracle side, and only TRUE on
-    // the Spark side when PQ's ADC top-400 really contained the top-10.
-    "x_pq_ann" ->
-      s"""WITH topk AS ($cosineTopkOracle)
-         |SELECT vec_id, label, cos, TRUE AS in_exact_topk FROM topk
-         |ORDER BY cos DESC, vec_id""".stripMargin,
-
-    // IVF→PQ cascade with exhaustive probing: exact top-10 + pinned flag
-    // (any probe/ADC recall miss flips rows AND flag red).
-    "x_ivfpq_ann" ->
-      s"""WITH topk AS ($cosineTopkOracle)
-         |SELECT vec_id, cos, TRUE AS in_exact_topk FROM topk
-         |ORDER BY cos DESC, vec_id""".stripMargin,
-
-    "x_fingerprint" ->
-      """SELECT MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
-        |FROM documents GROUP BY text ORDER BY keep_id""".stripMargin,
-
-    "x_interleave" ->
-      """WITH r AS (
-        | SELECT doc_id, lang,
-        |  ROW_NUMBER() OVER (PARTITION BY lang
-        |    ORDER BY md5(lang || ':' || CAST(doc_id AS VARCHAR)), doc_id) AS rk,
-        |  CASE WHEN lang = 'en' THEN CAST(2.0 AS DOUBLE)
-        |       WHEN lang = 'zh' THEN CAST(0.5 AS DOUBLE)
-        |       ELSE CAST(1.0 AS DOUBLE) END AS w
-        | FROM documents)
-        |SELECT doc_id, lang, (CAST(rk AS DOUBLE) - 0.5) / w AS interleave_pos
-        |FROM r ORDER BY interleave_pos, doc_id""".stripMargin,
-
-    // copies = ⌊w⌋ + (first 8 md5 hex chars < frac(w) as hex cutoff):
-    // 0.2 → 0x33333333, 0.3 → 0x4ccccccc, frac 0 → '00000000' (never).
-    // Hash input mirrors the operator's length-prefixed encoding
-    // v<len>:<stratum>|v<len>:<key> (unambiguous under ':' in values).
-    "x_mixture" ->
-      """WITH w AS (
-        | SELECT doc_id, lang,
-        |  CASE WHEN lang = 'en' THEN 2 WHEN lang = 'zh' THEN 0 ELSE 1 END
-        |  + CASE WHEN substring(md5(
-        |        'v' || CAST(length(lang) AS VARCHAR) || ':' || lang
-        |        || '|' ||
-        |        'v' || CAST(length(CAST(doc_id AS VARCHAR)) AS VARCHAR)
-        |        || ':' || CAST(doc_id AS VARCHAR)), 1, 8)
-        |         < CASE WHEN lang = 'en' THEN '33333333'
-        |                WHEN lang = 'zh' THEN '4ccccccc'
-        |                ELSE '00000000' END
-        |    THEN 1 ELSE 0 END AS n
-        | FROM documents)
-        |SELECT doc_id, lang, unnest(range(0, n)) AS copy_id
-        |FROM w ORDER BY doc_id, copy_id""".stripMargin,
-
-    "x_winnow_dedup" ->
-      """SELECT MIN(doc_id) AS keep_id, COUNT(*) AS n_copies,
-        |  TRUE AS verified
-        |FROM documents GROUP BY text ORDER BY keep_id""".stripMargin,
-
-    // The stub codec derives (width, height, mean_luma) from
-    // java.util.Arrays.hashCode of the UTF-8 bytes — a 31-polynomial fold
-    // DuckDB reproduces exactly with list_reduce over ascii codes (the
-    // synthetic corpus is pure ASCII, asserted by the length guard), so
-    // even the stubbed decode path is value-checked, not just row-counted.
-    "x_multimodal_decode" ->
-      """WITH h0 AS (
-        | SELECT doc_id AS media_id,
-        |  list_reduce(
-        |    list_prepend(1::BIGINT, list_transform(range(1, length(text)+1),
-        |      i -> ascii(substr(text, i, 1))::BIGINT)),
-        |    (a, b) -> ((a * 31 + b) % 4294967296 + 4294967296) % 4294967296) AS hu
-        | FROM documents),
-        |h1 AS (
-        | SELECT media_id,
-        |  CASE WHEN hu >= 2147483648 THEN hu - 4294967296 ELSE hu END AS h
-        | FROM h0)
-        |SELECT media_id,
-        | CAST(16 + abs(h % 1024) AS INTEGER) AS width,
-        | CAST(16 + abs(CAST((h - (h % 1024)) / 1024 AS BIGINT) % 1024) AS INTEGER) AS height,
-        | CAST(abs(h % 256) AS DOUBLE) AS mean_luma
-        |FROM h1 ORDER BY media_id""".stripMargin,
-
-    "x_approx_distinct" ->
-      """SELECT COUNT(DISTINCT l_partkey) AS exact_parts,
-        | COUNT(DISTINCT l_orderkey) AS exact_orders,
-        | TRUE AS parts_within_tol, TRUE AS orders_within_tol
-        |FROM lineitem""".stripMargin,
-
-    "x_quarantine" ->
-      """SELECT doc_id, CASE WHEN n_chars >= 200 THEN 'ok' ELSE 'err' END AS status
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // Exact interpolated quantiles match Spark's `percentile`; the sketch
-    // side is asserted through the tolerance flags only.
-    "x_approx_quantile" ->
-      """WITH q AS (
-        | SELECT quantile_cont(CAST(l_extendedprice AS DOUBLE),
-        |   [0.5, 0.95, 0.99]) AS ex
-        | FROM lineitem)
-        |SELECT ROUND(ex[1], 4) AS p50, ROUND(ex[2], 4) AS p95,
-        | ROUND(ex[3], 4) AS p99,
-        | TRUE AS p50_within_tol, TRUE AS p95_within_tol, TRUE AS p99_within_tol
-        |FROM q""".stripMargin,
-    "t1_map" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey,
-        | l_extendedprice * (1.0 - l_discount) AS revenue,
-        | l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax) AS charge
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""".stripMargin,
-
-    "t2_flatmap" ->
-      """SELECT p_partkey, unnest(string_split(p_type, ' ')) AS word
-        |FROM part ORDER BY p_partkey, word""".stripMargin,
-
-    "t3_filter" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey, l_quantity, l_shipdate
-        |FROM lineitem
-        |WHERE l_quantity > 45 AND l_shipdate >= TIMESTAMP '2000-01-01'
-        |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""".stripMargin,
-
-    "t4_add_column" ->
-      """SELECT r_regionkey, r_name, CAST(NULL AS VARCHAR) AS note
-        |FROM region ORDER BY r_regionkey""".stripMargin,
-
-    "t5_remove_column" ->
-      """SELECT c_custkey, c_name, c_nationkey
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    "t6_rename_column" ->
-      """SELECT n_nationkey AS nation_key, n_name AS nation_name,
-        | n_regionkey AS region_key
-        |FROM nation ORDER BY nation_key""".stripMargin,
-
-    "t7_reduce" ->
-      """SELECT l_returnflag, l_linestatus,
-        | CAST(SUM(CAST(l_quantity AS DECIMAL(28,4))) AS DOUBLE) AS sum_qty,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,4))) AS DOUBLE) AS sum_base_price,
-        | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS sum_disc_price,
-        | COUNT(*) AS cnt,
-        | CAST(SUM(CAST(l_quantity AS DECIMAL(28,4))) AS DOUBLE) / COUNT(*) AS avg_qty
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "t8_group" ->
-      """SELECT l_returnflag, l_orderkey, l_linenumber, l_partkey FROM lineitem
-        |ORDER BY l_returnflag, l_orderkey, l_linenumber, l_partkey, l_suppkey""".stripMargin,
-
-    "t9_repartition" ->
-      """SELECT user_id, event_id FROM events
-        |ORDER BY user_id, event_id""".stripMargin,
-
-    "t11_key_columns" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "a1_collect" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "a3_count" -> "SELECT COUNT(*) AS cnt FROM lineitem",
-
-    "a4_sum" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,4))) AS DOUBLE) AS total
-        |FROM lineitem""".stripMargin,
-
-    "a5_compose" ->
-      """SELECT COUNT(*) AS cnt,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,4))) AS DOUBLE) AS total,
-        | MIN(l_extendedprice) AS min_price,
-        | MAX(l_extendedprice) AS max_price
-        |FROM lineitem""".stripMargin,
-
-    "r_join" ->
-      """SELECT n_name,
-        | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS revenue,
-        | COUNT(*) AS cnt
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-
-    "r_semi_join" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "r_anti_join" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "r_outer_join" ->
-      """SELECT c_custkey, COALESCE(cnt, 0) AS n_orders
-        |FROM customer
-        |LEFT JOIN (SELECT o_custkey, COUNT(*) AS cnt FROM orders GROUP BY o_custkey) oc
-        |  ON c_custkey = oc.o_custkey
-        |ORDER BY c_custkey""".stripMargin,
-
-    "r_exists" ->
-      """SELECT c.c_custkey, c.c_name FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |              WHERE o.o_custkey = c.c_custkey
-        |                AND o.o_totalprice > 300000)
-        |ORDER BY c.c_custkey""".stripMargin,
-
-    "r_cross_join" ->
-      """SELECT r_name, n_name FROM region CROSS JOIN nation
-        |ORDER BY r_name, n_name""".stripMargin,
-
-    "r_lateral" ->
-      """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
-        |FROM customer c,
-        |LATERAL (SELECT o_orderkey, o_totalprice FROM orders
-        |         WHERE o_custkey = c.c_custkey
-        |         ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) o
-        |ORDER BY c.c_custkey""".stripMargin,
-
-    // Bloom prefilter is invisible in the result: FPs die in the exact
-    // join, so the oracle is the plain filtered join.
-    "x_bloom_join" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey, o_totalprice
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_totalprice > 400000
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // Salting is invisible in the result: same rows as the plain join.
-    "x_skew_join" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey AS p_partkey,
-        |       l_quantity, p_brand
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "r_nullsafe_join" ->
-      """WITH c AS (SELECT c_custkey,
-        |  CASE WHEN c_custkey % 10 = 0 THEN NULL ELSE c_nationkey END AS k
-        |  FROM customer),
-        |n AS (SELECT CASE WHEN n_nationkey = 0 THEN NULL
-        |             ELSE n_nationkey END AS nk, n_name FROM nation)
-        |SELECT c_custkey, n_name FROM c JOIN n ON k IS NOT DISTINCT FROM nk
-        |ORDER BY c_custkey, n_name""".stripMargin,
-
-    "r_array_funcs" ->
-      """WITH a AS (
-        | SELECT o_custkey, list_sort(list(o_orderkey)) AS o,
-        |        COUNT(*) AS n
-        | FROM orders GROUP BY o_custkey)
-        |SELECT o_custkey, array_to_string(o, ',') AS orders,
-        |       array_to_string(list_transform(o, x -> x * 2), ',') AS doubled,
-        |       n
-        |FROM a ORDER BY o_custkey""".stripMargin,
-
-    // The sketch estimate is engine-specific; the oracle checks the exact
-    // counts and that the merged estimate stayed within tolerance (TRUE
-    // on the oracle side by construction of the flag).
-    "x_hll_rollup" ->
-      """SELECT n_regionkey, COUNT(DISTINCT c_custkey) AS exact_customers,
-        |       TRUE AS within_tol
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin,
-
-    "r_window_rank" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey,
-        | ROW_NUMBER() OVER (PARTITION BY l_orderkey
-        |   ORDER BY l_linenumber, l_partkey, l_suppkey) AS rn,
-        | CAST(SUM(CAST(l_quantity AS DECIMAL(28,4))) OVER (PARTITION BY l_orderkey
-        |   ORDER BY l_linenumber, l_partkey, l_suppkey
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_qty
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""".stripMargin,
-
-    "r_window_running" ->
-      """SELECT o_custkey, o_orderkey,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(28,4))) OVER (PARTITION BY o_custkey
-        |   ORDER BY o_orderdate, o_orderkey
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS cum_spend
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "r_distinct" ->
-      """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "r_union" ->
-      """SELECT c_nationkey AS nationkey FROM customer
-        |UNION SELECT s_nationkey FROM supplier
-        |ORDER BY nationkey""".stripMargin,
-
-    "r_intersect" ->
-      """SELECT c_nationkey AS nationkey FROM customer
-        |INTERSECT SELECT s_nationkey AS nationkey FROM supplier
-        |ORDER BY nationkey""".stripMargin,
-
-    "r_except" ->
-      """SELECT c_nationkey AS nationkey FROM customer
-        |EXCEPT SELECT s_nationkey AS nationkey FROM supplier
-        |ORDER BY nationkey""".stripMargin,
-
-    "r_rollup" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt,
-        | CAST(SUM(CAST(l_quantity AS DECIMAL(28,4))) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
-
-    "r_cube" ->
-      """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS cnt
-        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
-
-    "r_union_all" ->
-      """SELECT c_nationkey AS nationkey FROM customer
-        |UNION ALL SELECT s_nationkey FROM supplier
-        |ORDER BY nationkey""".stripMargin,
-
-    "r_union_by_name" ->
-      """SELECT * FROM (
-        | SELECT c_custkey AS id, c_name AS name, 'c' AS src FROM customer
-        | UNION ALL BY NAME
-        | SELECT 's' AS src, s_name AS name, s_suppkey AS id FROM supplier)
-        |ORDER BY src, id""".stripMargin,
-
-    "r_offset" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_orderkey LIMIT 50 OFFSET 100""".stripMargin,
-
-    "r_full_outer" ->
-      """SELECT COALESCE(c.c_nationkey, s.s_nationkey) AS nationkey,
-        | COALESCE(c.n_cust, 0) AS n_cust, COALESCE(s.n_supp, 0) AS n_supp
-        |FROM (SELECT c_nationkey, COUNT(*) AS n_cust FROM customer
-        |      WHERE c_acctbal > 0 GROUP BY c_nationkey) c
-        |FULL OUTER JOIN (SELECT s_nationkey, COUNT(*) AS n_supp FROM supplier
-        |      GROUP BY s_nationkey) s
-        |  ON c.c_nationkey = s.s_nationkey
-        |ORDER BY nationkey""".stripMargin,
-
-    "r_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-        |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
-
-    "r_pivot" ->
-      """SELECT o_orderpriority,
-        | COUNT(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS f_cnt,
-        | COUNT(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS o_cnt,
-        | COUNT(CASE WHEN o_orderstatus = 'P' THEN 1 END) AS p_cnt
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "r_not_in" ->
-      """SELECT c_custkey, c_nationkey FROM customer
-        |WHERE c_nationkey NOT IN
-        |  (SELECT n_nationkey FROM nation WHERE n_name LIKE 'A%')
-        |ORDER BY c_custkey""".stripMargin,
-
-    "r_window_range" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(28,4))) OVER (
-        |   PARTITION BY o_custkey ORDER BY o_totalprice
-        |   RANGE BETWEEN 1000.0 PRECEDING AND CURRENT ROW) AS DOUBLE) AS near_spend
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "r_percentile" ->
-      """SELECT l_returnflag,
-        | quantile_cont(l_quantity, 0.25) AS p25,
-        | quantile_cont(l_quantity, 0.5) AS p50,
-        | quantile_cont(l_quantity, 0.75) AS p75
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "r_having" ->
-      """SELECT o_custkey, COUNT(*) AS n_orders,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(28,4))) AS DOUBLE) AS spend
-        |FROM orders GROUP BY o_custkey
-        |HAVING COUNT(*) >= 12 ORDER BY o_custkey""".stripMargin,
-
-    "r_topk_per_group" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rk FROM (
-        | SELECT o_custkey, o_orderkey, o_totalprice,
-        |  ROW_NUMBER() OVER (PARTITION BY o_custkey
-        |                     ORDER BY o_totalprice DESC, o_orderkey) AS rk
-        | FROM orders)
-        |WHERE rk <= 2 ORDER BY o_custkey, rk""".stripMargin,
-
-    "r_count_distinct" ->
-      """SELECT COUNT(DISTINCT l_partkey) AS d_parts,
-        | COUNT(DISTINCT l_suppkey) AS d_supps,
-        | COUNT(DISTINCT (l_returnflag, l_linestatus)) AS d_flags
-        |FROM lineitem""".stripMargin,
-
-    "r_window_lag" ->
-      """SELECT o_custkey, o_orderkey,
-        | LAG(o_totalprice, 1) OVER w AS prev_price,
-        | LEAD(o_totalprice, 1) OVER w AS next_price,
-        | CAST(NTILE(4) OVER w AS BIGINT) AS quartile
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "r_sql_subquery" ->
-      """SELECT o_orderkey,
-        | o_totalprice - (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(28,4))) AS DOUBLE)
-        |                        / COUNT(*) FROM orders) AS delta
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "r_string_funcs" ->
-      """SELECT p_partkey, UPPER(p_name) AS uname, SUBSTR(p_name, 1, 5) AS pfx,
-        | CAST(LENGTH(p_name) AS BIGINT) AS len,
-        | p_brand || '#' || p_type AS tag,
-        | REPLACE(p_type, ' ', '_') AS slug
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "r_date_funcs" ->
-      """SELECT o_orderkey,
-        | CAST(YEAR(o_orderdate) AS BIGINT) AS yr,
-        | CAST(MONTH(o_orderdate) AS BIGINT) AS mon,
-        | CAST(DAY(o_orderdate) AS BIGINT) AS dom,
-        | CAST(DATE_TRUNC('month', o_orderdate) AS TIMESTAMP) AS month_start
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "r_math_funcs" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey,
-        | ABS(l_discount - 0.05) AS a,
-        | CAST(FLOOR(l_quantity / 7.0) AS BIGINT) AS f,
-        | CAST(CEIL(l_extendedprice / 1000.0) AS BIGINT) AS c,
-        | SQRT(l_quantity) AS s
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""".stripMargin,
-
-    "r_case_expr" ->
-      """SELECT o_orderkey,
-        | CASE WHEN o_totalprice > 300000 THEN 'big'
-        |      WHEN o_totalprice > 150000 THEN 'mid'
-        |      ELSE 'small' END AS bucket
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "r_json_extract" ->
-      """SELECT event_id,
-        | CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS BIGINT) AS k
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "r_events_window" ->
-      """SELECT DATE_TRUNC('hour', ts) AS hour, event_type, COUNT(*) AS cnt,
-        | CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // Window membership reproduced arithmetically: an event at epoch-µs
-    // t belongs to the 3 windows starting at slide·(t//slide − j),
-    // j ∈ 0..2 (start ≤ t < start+width holds unconditionally when
-    // width = 3·slide).
-    "r_hopping_window" ->
-      """WITH e AS (SELECT epoch_us(ts) AS t, event_type, value
-        |  FROM events WHERE ts IS NOT NULL),
-        |j AS (SELECT unnest(range(0, 3)) AS j)
-        |SELECT
-        | make_timestamp(7200000000 * (t // 7200000000 - j)) AS win_start,
-        | make_timestamp(7200000000 * (t // 7200000000 - j)
-        |   + 21600000000) AS win_end,
-        | event_type, COUNT(*) AS cnt,
-        | CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS sum_value
-        |FROM e, j GROUP BY 1, 2, 3 ORDER BY win_start, event_type""".stripMargin,
-
-    "x_token_count" ->
-      """SELECT doc_id,
-        | CAST(CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0
-        |   ELSE len(regexp_split_to_array(TRIM(text), '\s+')) END AS BIGINT) AS n_tokens,
-        | CAST(len(regexp_extract_all(text, '[A-Za-z]{1,4}|[0-9]|[^A-Za-z0-9\s]')) AS BIGINT) AS n_subwords
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "x_quality" ->
-      """WITH toks AS (
-        | SELECT doc_id, text,
-        |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |       ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents)
-        |SELECT doc_id,
-        | CAST(len(tok) AS BIGINT) AS n_tokens,
-        | CASE WHEN LENGTH(text) = 0 THEN 0.0
-        |   ELSE CAST(LENGTH(regexp_replace(text, '[^.,!?;:''"()-]', '', 'g')) AS DOUBLE)
-        |        / CAST(LENGTH(text) AS DOUBLE) END AS punct_ratio,
-        | CASE WHEN len(tok) = 0 THEN 0.0
-        |   ELSE CAST(len(list_filter(tok, x -> lower(x) IN ('the','a','an','of','and','to','in','is','it','that'))) AS DOUBLE)
-        |        / CAST(len(tok) AS DOUBLE) END AS stopword_ratio,
-        | LEAST(1.0, CAST(len(tok) AS DOUBLE) / 100.0) *
-        |  (1.0 - CASE WHEN LENGTH(text) = 0 THEN 0.0
-        |    ELSE CAST(LENGTH(regexp_replace(text, '[^.,!?;:''"()-]', '', 'g')) AS DOUBLE)
-        |         / CAST(LENGTH(text) AS DOUBLE) END) AS quality
-        |FROM toks ORDER BY doc_id""".stripMargin,
-    // Scored langid: the same stopword hit counts as BIGINT list
-    // filters, DESC list sort for top/second, the profile-order CASE.
-    "x_langid_scored" ->
-      """WITH d AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 5 = 1
-        |    THEN text || ' der die das und ist nicht'
-        |   WHEN doc_id % 5 = 2 THEN text || ' le la et les des est'
-        |   WHEN doc_id % 5 = 3 THEN text || ' el los las y que'
-        |   WHEN doc_id % 5 = 4 THEN 'the und'
-        |   ELSE text END AS text
-        | FROM documents),
-        |tk AS (SELECT doc_id,
-        |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |       ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM d),
-        |h AS (SELECT doc_id,
-        |  CAST(len(list_filter(tok, t -> lower(t) IN ('the','a','of','and','to','is','in'))) AS BIGINT) AS h_en,
-        |  CAST(len(list_filter(tok, t -> lower(t) IN ('der','die','das','und','ist','nicht','ein'))) AS BIGINT) AS h_de,
-        |  CAST(len(list_filter(tok, t -> lower(t) IN ('le','la','et','les','des','un','est'))) AS BIGINT) AS h_fr,
-        |  CAST(len(list_filter(tok, t -> lower(t) IN ('el','los','las','de','y','que','un'))) AS BIGINT) AS h_es,
-        |  CAST(len(list_filter(tok, t -> lower(t) IN ('的','是','了','不','在','我','有'))) AS BIGINT) AS h_zh
-        | FROM tk),
-        |s AS (SELECT *,
-        |  list_sort([h_en, h_de, h_fr, h_es, h_zh], 'DESC') AS srt
-        | FROM h)
-        |SELECT doc_id,
-        | CASE WHEN srt[1] = 0 THEN 'und'
-        |      WHEN h_en = srt[1] THEN 'en'
-        |      WHEN h_de = srt[1] THEN 'de'
-        |      WHEN h_fr = srt[1] THEN 'fr'
-        |      WHEN h_es = srt[1] THEN 'es'
-        |      ELSE 'zh' END AS lang,
-        | CASE WHEN srt[1] > 0 THEN srt[1] ELSE 0 END AS n_hits,
-        | CASE WHEN srt[1] > 0 THEN srt[1] - srt[2] ELSE 0 END AS margin
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    "x_langid" ->
-      """WITH toks AS (
-        | SELECT doc_id, lang,
-        |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |       ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |scores AS (
-        | SELECT doc_id, lang,
-        |  len(list_filter(tok, x -> lower(x) IN ('the','a','of','and','to','is','in'))) AS s_en,
-        |  len(list_filter(tok, x -> lower(x) IN ('der','die','das','und','ist','nicht','ein'))) AS s_de,
-        |  len(list_filter(tok, x -> lower(x) IN ('le','la','et','les','des','un','est'))) AS s_fr,
-        |  len(list_filter(tok, x -> lower(x) IN ('el','los','las','de','y','que','un'))) AS s_es,
-        |  len(list_filter(tok, x -> lower(x) IN ('的','是','了','不','在','我','有'))) AS s_zh
-        | FROM toks)
-        |SELECT doc_id, lang,
-        | CASE WHEN s_en = 0 AND s_de = 0 AND s_fr = 0 AND s_es = 0 AND s_zh = 0 THEN 'und'
-        |      WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en >= s_zh THEN 'en'
-        |      WHEN s_de >= s_fr AND s_de >= s_es AND s_de >= s_zh THEN 'de'
-        |      WHEN s_fr >= s_es AND s_fr >= s_zh THEN 'fr'
-        |      WHEN s_es >= s_zh THEN 'es'
-        |      ELSE 'zh' END AS predicted
-        |FROM scores ORDER BY doc_id""".stripMargin,
-
-    "x_dedup_exact" ->
-      """SELECT MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
-        |FROM documents GROUP BY text ORDER BY keep_id""".stripMargin,
-
-    "x_pipeline_curate" ->
-      """WITH toks AS (
-        | SELECT doc_id, text,
-        |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |       ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |scored AS (
-        | SELECT doc_id, text,
-        |  len(list_filter(tok, x -> lower(x) IN ('the','a','of','and','to','is','in'))) AS s_en,
-        |  len(list_filter(tok, x -> lower(x) IN ('der','die','das','und','ist','nicht','ein'))) AS s_de,
-        |  len(list_filter(tok, x -> lower(x) IN ('le','la','et','les','des','un','est'))) AS s_fr,
-        |  len(list_filter(tok, x -> lower(x) IN ('el','los','las','de','y','que','un'))) AS s_es,
-        |  len(list_filter(tok, x -> lower(x) IN ('的','是','了','不','在','我','有'))) AS s_zh,
-        |  CAST(len(tok) AS BIGINT) AS n_tokens,
-        |  LEAST(1.0, CAST(len(tok) AS DOUBLE) / 100.0) *
-        |   (1.0 - CASE WHEN LENGTH(text) = 0 THEN 0.0
-        |     ELSE CAST(LENGTH(regexp_replace(text, '[^.,!?;:''"()-]', '', 'g')) AS DOUBLE)
-        |          / CAST(LENGTH(text) AS DOUBLE) END) AS quality
-        | FROM toks),
-        |f AS (
-        | SELECT * FROM scored
-        | WHERE NOT (s_en = 0 AND s_de = 0 AND s_fr = 0 AND s_es = 0 AND s_zh = 0)
-        |   AND s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en >= s_zh
-        |   AND quality > 0.2)
-        |SELECT MIN(doc_id) AS doc_id, MAX(n_tokens) AS n_tokens,
-        | MAX(quality) AS quality
-        |FROM f GROUP BY text ORDER BY doc_id""".stripMargin,
-
-    // Chain of the already-proven stage oracles: curate CTEs (langid +
-    // quality, ≡ x_pipeline_curate) → exact-dedup group → ngramPairsCte
-    // over the KEPT subset (≡ x_ngram_jaccard) → recursive closure
-    // (≡ x_dedup_drop) → md5-cutoff split CASE (≡ x_split).
-    "x_pipeline_full" ->
-      s"""WITH RECURSIVE ptoks AS (
-        | SELECT doc_id, text,
-        |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |       ELSE regexp_split_to_array(TRIM(text), '\\s+') END AS tok
-        | FROM documents),
-        |scored AS (
-        | SELECT doc_id, text,
-        |  len(list_filter(tok, x -> lower(x) IN ('the','a','of','and','to','is','in'))) AS s_en,
-        |  len(list_filter(tok, x -> lower(x) IN ('der','die','das','und','ist','nicht','ein'))) AS s_de,
-        |  len(list_filter(tok, x -> lower(x) IN ('le','la','et','les','des','un','est'))) AS s_fr,
-        |  len(list_filter(tok, x -> lower(x) IN ('el','los','las','de','y','que','un'))) AS s_es,
-        |  len(list_filter(tok, x -> lower(x) IN ('的','是','了','不','在','我','有'))) AS s_zh,
-        |  CAST(len(tok) AS BIGINT) AS n_tokens,
-        |  LEAST(1.0, CAST(len(tok) AS DOUBLE) / 100.0) *
-        |   (1.0 - CASE WHEN LENGTH(text) = 0 THEN 0.0
-        |     ELSE CAST(LENGTH(regexp_replace(text, '[^.,!?;:''"()-]', '', 'g')) AS DOUBLE)
-        |          / CAST(LENGTH(text) AS DOUBLE) END) AS quality
-        | FROM ptoks),
-        |f AS (
-        | SELECT * FROM scored
-        | WHERE NOT (s_en = 0 AND s_de = 0 AND s_fr = 0 AND s_es = 0 AND s_zh = 0)
-        |   AND s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en >= s_zh
-        |   AND quality > 0.2),
-        |kept AS (
-        | SELECT MIN(doc_id) AS doc_id, text, MAX(n_tokens) AS n_tokens
-        | FROM f GROUP BY text),
-        |${ngramPairsCte(0.5, "kept")},
-        |edges AS (
-        | SELECT id_a AS u, id_b AS v FROM jpairs
-        | UNION
-        | SELECT id_b AS u, id_a AS v FROM jpairs),
-        |reach AS (
-        | SELECT u AS node, u AS lab FROM edges
-        | UNION
-        | SELECT e.v AS node, r.lab AS lab
-        | FROM reach r JOIN edges e ON e.u = r.node),
-        |comps AS (SELECT node, MIN(lab) AS complabel FROM reach GROUP BY node)
-        |SELECT doc_id, n_tokens,
-        | CASE WHEN substring(md5(
-        |        'v' || CAST(length(CAST(doc_id AS VARCHAR)) AS VARCHAR)
-        |        || ':' || CAST(doc_id AS VARCHAR)), 1, 4) < 'cccd'
-        |      THEN 'train'
-        |      WHEN substring(md5(
-        |        'v' || CAST(length(CAST(doc_id AS VARCHAR)) AS VARCHAR)
-        |        || ':' || CAST(doc_id AS VARCHAR)), 1, 4) < 'e666'
-        |      THEN 'val'
-        |      ELSE 'test' END AS split
-        |FROM kept
-        |WHERE doc_id NOT IN (SELECT node FROM comps WHERE complabel <> node)
-        |ORDER BY doc_id""".stripMargin,
-
-    "x_vocab" ->
-      """WITH tk AS (
-        | SELECT unnest(CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END) AS token
-        | FROM documents)
-        |SELECT token, COUNT(*) AS cnt FROM tk GROUP BY token
-        |ORDER BY cnt DESC, token LIMIT 100""".stripMargin,
-
-    // Zipf OLS mirrored term-for-term: ln only ever sees an integral
-    // double (rank, count), products are correctly-rounded double
-    // multiplies, sums accumulate in DECIMAL(30,15), and the
-    // slope/intercept/r2 expressions spell the identical pinned
-    // association order as the Spark tree.
-    "x_zipf" ->
-      raw"""WITH tk AS (
-        | SELECT unnest(CASE WHEN text IS NULL OR LENGTH(TRIM(text)) = 0
-        |   THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END) AS t
-        | FROM documents),
-        |tc AS (SELECT t, COUNT(*) AS c FROM tk GROUP BY 1),
-        |top AS (SELECT c, row_number() OVER (ORDER BY c DESC, t) AS r
-        |  FROM tc ORDER BY c DESC, t LIMIT 500),
-        |s AS (SELECT COUNT(*) AS n,
-        | CAST(SUM(CAST(ln(CAST(r AS DOUBLE)) AS DECIMAL(30,15))) AS DOUBLE) AS sx,
-        | CAST(SUM(CAST(ln(CAST(c AS DOUBLE)) AS DECIMAL(30,15))) AS DOUBLE) AS sy,
-        | CAST(SUM(CAST(ln(CAST(r AS DOUBLE)) * ln(CAST(c AS DOUBLE))
-        |   AS DECIMAL(30,15))) AS DOUBLE) AS sxy,
-        | CAST(SUM(CAST(ln(CAST(r AS DOUBLE)) * ln(CAST(r AS DOUBLE))
-        |   AS DECIMAL(30,15))) AS DOUBLE) AS sxx,
-        | CAST(SUM(CAST(ln(CAST(c AS DOUBLE)) * ln(CAST(c AS DOUBLE))
-        |   AS DECIMAL(30,15))) AS DOUBLE) AS syy
-        | FROM top)
-        |SELECT CAST(n AS BIGINT) AS n_ranks,
-        | ROUND((CAST(n AS DOUBLE) * sxy - sx * sy)
-        |   / (CAST(n AS DOUBLE) * sxx - sx * sx), 9) AS zipf_slope,
-        | ROUND((sy - ((CAST(n AS DOUBLE) * sxy - sx * sy)
-        |   / (CAST(n AS DOUBLE) * sxx - sx * sx)) * sx)
-        |   / CAST(n AS DOUBLE), 9) AS zipf_intercept,
-        | ROUND(((CAST(n AS DOUBLE) * sxy - sx * sy)
-        |     * (CAST(n AS DOUBLE) * sxy - sx * sy))
-        |   / ((CAST(n AS DOUBLE) * sxx - sx * sx)
-        |     * (CAST(n AS DOUBLE) * syy - sy * sy)), 9) AS r2
-        |FROM s""".stripMargin,
-
-    // Heaps growth mirrored with floor-div buckets and window sums
-    // (HUGEINT -> BIGINT casts per the DuckDB SUM convention); types
-    // charged to MIN(bucket) exactly as the Spark min-agg.
-    "x_heaps" ->
-      raw"""WITH d AS (SELECT doc_id // 50 AS b,
-        |  CASE WHEN text IS NULL OR LENGTH(TRIM(text)) = 0
-        |    THEN []::VARCHAR[]
-        |    ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |spine AS (SELECT b, COUNT(*) AS n_docs,
-        |  CAST(SUM(len(tok)) AS BIGINT) AS nt FROM d GROUP BY 1),
-        |ft AS (SELECT t, MIN(b) AS fb
-        | FROM (SELECT b, unnest(tok) AS t FROM d) GROUP BY 1),
-        |nw AS (SELECT fb AS b, COUNT(*) AS nn FROM ft GROUP BY 1)
-        |SELECT s.b AS bucket, CAST(s.n_docs AS BIGINT) AS n_docs,
-        | CAST(COALESCE(nw.nn, 0) AS BIGINT) AS new_types,
-        | CAST(SUM(s.nt) OVER (ORDER BY s.b ROWS UNBOUNDED PRECEDING)
-        |   AS BIGINT) AS cum_tokens,
-        | CAST(SUM(COALESCE(nw.nn, 0)) OVER (ORDER BY s.b
-        |   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_types
-        |FROM spine s LEFT JOIN nw ON nw.b = s.b
-        |ORDER BY bucket""".stripMargin,
-
-    "x_resample" ->
-      """WITH hourly AS (
-        | SELECT user_id, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS h,
-        |        CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS v
-        | FROM events GROUP BY 1, 2),
-        |b AS (SELECT user_id, MIN(h) AS h0, MAX(h) AS h1 FROM hourly GROUP BY 1),
-        |grid AS (SELECT user_id,
-        |         unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM b)
-        |SELECT g.user_id, g.h,
-        |       LAST_VALUE(v IGNORE NULLS) OVER (
-        |         PARTITION BY g.user_id ORDER BY g.h
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v_filled
-        |FROM grid g LEFT JOIN hourly USING (user_id, h)
-        |ORDER BY g.user_id, g.h""".stripMargin,
-
-    "x_heavy_by_lang" ->
-      """WITH tk AS (
-        | SELECT lang, unnest(CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END) AS token
-        | FROM documents),
-        |tot AS (SELECT lang, COUNT(*) AS total FROM tk GROUP BY lang)
-        |SELECT tk.lang AS lang, token, COUNT(*) AS cnt
-        |FROM tk JOIN tot ON tk.lang = tot.lang
-        |GROUP BY tk.lang, token, tot.total
-        |HAVING CAST(COUNT(*) AS DOUBLE) > CAST(tot.total AS DOUBLE) / 150.0
-        |ORDER BY tk.lang, cnt DESC, token""".stripMargin,
-
-    // The prefix filter is lossless and the verify exact, so the oracle is
-    // the naive quadratic join.
-    "x_fuzzy_join" ->
-      """WITH s AS (SELECT s_suppkey, s_name FROM supplier)
-        |SELECT a.s_suppkey AS id_a, b.s_suppkey AS id_b,
-        |       CAST(levenshtein(a.s_name, b.s_name) AS BIGINT) AS dist
-        |FROM s a JOIN s b ON a.s_suppkey < b.s_suppkey
-        |WHERE levenshtein(a.s_name, b.s_name) <= 1
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // Linkage mirrored: same corruption, same integer weights, same
-    // (nation, segment) blocking; keep-best = row_number over
-    // (score desc, id_b).
-    "x_linkage" ->
-      """WITH dirty AS (SELECT c_custkey + 1000000 AS d_id,
-        |  c_nationkey || '|' || c_mktsegment AS d_blk,
-        |  CASE WHEN c_custkey % 3 = 0 THEN reverse(c_name)
-        |       WHEN c_custkey % 7 = 0 THEN c_name || 'x'
-        |       ELSE c_name END AS d_name,
-        |  CASE WHEN c_custkey % 5 = 0 THEN c_acctbal + 1.0
-        |       ELSE c_acctbal END AS d_bal
-        | FROM customer),
-        |scored AS (SELECT c.c_custkey AS id_a, d.d_id AS id_b,
-        |  (CASE WHEN levenshtein(c.c_name, d.d_name) <= 1 THEN 40 ELSE 0 END
-        |   + CASE WHEN c.c_acctbal = d.d_bal THEN 30 ELSE 0 END) AS score,
-        |  (CASE WHEN levenshtein(c.c_name, d.d_name) <= 1 THEN 1 ELSE 0 END
-        |   + CASE WHEN c.c_acctbal = d.d_bal THEN 1 ELSE 0 END) AS n_agree
-        | FROM customer c JOIN dirty d
-        |  ON c.c_nationkey || '|' || c.c_mktsegment = d.d_blk),
-        |best AS (SELECT id_a, id_b, score, n_agree,
-        |  row_number() OVER (PARTITION BY id_a
-        |    ORDER BY score DESC, id_b) AS rn
-        | FROM scored WHERE score >= 40)
-        |SELECT id_a, id_b, CAST(score AS BIGINT) AS score,
-        | CAST(n_agree AS BIGINT) AS n_agree
-        |FROM best WHERE rn = 1 ORDER BY id_a""".stripMargin,
-
-    // The MG sketch never shows in the output: the threshold sits strictly
-    // above the sketch's guarantee line, so exact-HAVING is the oracle.
-    "x_heavy_hitters" ->
-      """WITH tk AS (
-        | SELECT unnest(CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END) AS token
-        | FROM documents)
-        |SELECT token, COUNT(*) AS cnt FROM tk GROUP BY token
-        |HAVING CAST(COUNT(*) AS DOUBLE) > (SELECT COUNT(*) FROM tk) / 200.0
-        |ORDER BY cnt DESC, token""".stripMargin,
-
-    // Bigram counts group on the gram STRING here vs its xxhash64 on the
-    // Spark side — multiplicities agree absent a 64-bit collision inside a
-    // single document.
-    "x_repetition" ->
-      """WITH toks AS (
-        | SELECT doc_id, CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |tc AS (
-        | SELECT doc_id, token, COUNT(*) AS cnt
-        | FROM (SELECT doc_id, unnest(tok) AS token FROM toks)
-        | GROUP BY doc_id, token),
-        |tagg AS (
-        | SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_tokens,
-        |  COUNT(*) AS n_distinct, MAX(cnt) AS top_token_cnt
-        | FROM tc GROUP BY doc_id),
-        |bg AS (
-        | SELECT doc_id, gram, COUNT(*) AS cnt
-        | FROM (SELECT doc_id, unnest(list_transform(range(1, len(tok)),
-        |         i -> tok[i] || ' ' || tok[i + 1])) AS gram
-        |       FROM toks)
-        | GROUP BY doc_id, gram),
-        |bagg AS (SELECT doc_id, MAX(cnt) AS top_bigram_cnt FROM bg GROUP BY doc_id)
-        |SELECT t.doc_id, t.n_tokens, t.n_distinct,
-        | CAST(t.top_token_cnt AS DOUBLE) / CAST(t.n_tokens AS DOUBLE) AS top_token_frac,
-        | CASE WHEN t.n_tokens < 2 THEN 0.0
-        |      ELSE CAST(b.top_bigram_cnt AS DOUBLE) / CAST(t.n_tokens - 1 AS DOUBLE)
-        | END AS top_bigram_frac
-        |FROM tagg t LEFT JOIN bagg b USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    // (1.2 + 1.0) is written as the same double ADD Scala folds for
-    // k1 + 1.0 — not the decimal literal 2.2, which is a different double.
-    "x_bm25" ->
-      """WITH toks AS (
-        | SELECT doc_id, CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |docs AS (SELECT doc_id, CAST(len(tok) AS BIGINT) AS dl, tok FROM toks),
-        |stats AS (
-        | SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS BIGINT) AS sum_dl FROM docs),
-        |tf AS (
-        | SELECT doc_id, dl, term, COUNT(*) AS tf
-        | FROM (SELECT doc_id, dl, unnest(tok) AS term FROM docs)
-        | WHERE term IN ('hash', 'join', 'scan', 'window')
-        | GROUP BY doc_id, dl, term),
-        |dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-        |scored AS (
-        | SELECT tf.doc_id,
-        |  (((CAST(s.n_docs AS DOUBLE) - CAST(d.df AS DOUBLE)) + 0.5) /
-        |    (CAST(d.df AS DOUBLE) + 0.5) *
-        |    ((CAST(tf.tf AS DOUBLE) * (1.2 + 1.0)) /
-        |      (CAST(tf.tf AS DOUBLE) + 1.2 *
-        |        ((1.0 - 0.75) + ((0.75 * CAST(tf.dl AS DOUBLE)) /
-        |          (CAST(s.sum_dl AS DOUBLE) / CAST(s.n_docs AS DOUBLE))))))) AS s
-        | FROM tf JOIN dfreq d USING (term) CROSS JOIN stats s)
-        |SELECT doc_id,
-        | ROUND(CAST(SUM(CAST(s AS DECIMAL(30,15))) AS DOUBLE), 9) AS bm25
-        |FROM scored GROUP BY doc_id
-        |ORDER BY bm25 DESC, doc_id LIMIT 100""".stripMargin,
-
-    // Groups by the bigram STRING where the engine groups by the 8-byte
-    // gram hash — identical tf/df absent a 64-bit collision (the
-    // x_perplexity convention). Every ln input is an integral double
-    // (a count); products cast to DECIMAL before summation; the final
-    // divide and ROUND(…, 9) mirror the engine expression exactly.
-    "x_tfidf_topk" ->
-      s"""WITH $tfidfBaseCte,
-        |${tfidfRkCte(2, "g2")}
-        |SELECT query_id, doc_id, cos, rank FROM g2rk WHERE rank <= 10
-        |ORDER BY query_id, rank""".stripMargin,
-
-    // Chained step CTEs: step k's MIN(us) over events of its type at or
-    // after step k−1's time; a user counts iff t_k − t_1 ≤ the window.
-    "x_funnel" -> funnelOracle,
-
-    // Same CTE chain; s3's (t1, t3) carry the gate and the latency.
-    "x_funnel_latency" ->
-      s"""WITH $funnelStepsCte
-        |SELECT u AS user_id, t1 AS t_first_us, t3 AS t_final_us,
-        | t3 - t1 AS latency_us
-        |FROM s3 WHERE t3 - t1 <= 86400000000
-        |ORDER BY user_id""".stripMargin,
-
-    // The deep-funnel form computes the SAME function — one oracle, two
-    // engine plans (k filtered joins vs one shuffle + per-user kernel).
-    "x_funnel_deep" -> funnelOracle,
-
-    // Same frame (ROWS BETWEEN 6 PRECEDING AND 1 PRECEDING over observed
-    // buckets) and the same integer cross-multiplied predicate.
-    "x_event_spikes" ->
-      """WITH b AS (
-        | SELECT event_type, epoch_us(ts) // 3600000000 AS bucket,
-        |  COUNT(*) AS n
-        | FROM events GROUP BY 1, 2),
-        |wn AS (
-        | SELECT event_type, bucket, n,
-        |  SUM(n) OVER (PARTITION BY event_type ORDER BY bucket
-        |    ROWS BETWEEN 6 PRECEDING AND 1 PRECEDING) AS ps,
-        |  COUNT(n) OVER (PARTITION BY event_type ORDER BY bucket
-        |    ROWS BETWEEN 6 PRECEDING AND 1 PRECEDING) AS pc
-        | FROM b)
-        |SELECT event_type, bucket, n,
-        | (pc = 6 AND n * 6 > 2 * ps) AS spike
-        |FROM wn ORDER BY event_type, bucket""".stripMargin,
-
-    // Integer day arithmetic: epoch_us // 86400000000; DISTINCT (user,
-    // cohort, offset) before the count, mirroring the engine.
-    "x_retention" ->
-      """WITH e AS (
-        | SELECT user_id AS u, epoch_us(ts) // 86400000000 AS d FROM events),
-        |f AS (SELECT u, MIN(d) AS d0 FROM e GROUP BY u),
-        |a AS (SELECT DISTINCT e.u, f.d0, e.d - f.d0 AS off
-        |      FROM e JOIN f ON e.u = f.u)
-        |SELECT d0 AS cohort_day, off AS day_offset, COUNT(*) AS n_users
-        |FROM a GROUP BY 1, 2 ORDER BY cohort_day, day_offset""".stripMargin,
-
-    // 64-byte frames with cells = 64 mean one byte per cell, so a frame
-    // cell is ascii·131 mod 256 directly (no stripe sum); signatures
-    // dedup per video BEFORE the pair join, mirroring the engine.
-    "x_video_neardup" ->
-      """WITH docs AS (
-        | SELECT doc_id, text FROM documents WHERE text IS NOT NULL
-        | UNION ALL
-        | SELECT doc_id + 50000000, '#' || substr(text, 2) FROM documents
-        | WHERE text IS NOT NULL AND doc_id % 13 = 0 AND length(text) >= 129),
-        |pos AS (SELECT doc_id, unnest(range(1, length(text) + 1)) AS i, text
-        |        FROM docs),
-        |gs AS (SELECT doc_id, (i - 1) // 64 AS f, (i - 1) % 64 AS c,
-        |        (ascii(substr(text, CAST(i AS INTEGER), 1)) % 256) * 131 % 256 AS s
-        |       FROM pos),
-        |fr AS (SELECT doc_id, unnest(range(0, (length(text) + 63) // 64)) AS f
-        |       FROM docs),
-        |allc AS (SELECT r.doc_id, r.f, t.c FROM fr r
-        |         CROSS JOIN (SELECT unnest(range(0, 64)) AS c) t),
-        |grid AS (SELECT a.doc_id, a.f, a.c, COALESCE(g.s, 0) AS s
-        |         FROM allc a LEFT JOIN gs g
-        |         ON g.doc_id = a.doc_id AND g.f = a.f AND g.c = a.c),
-        |bits AS (SELECT doc_id, f,
-        |  string_agg(CASE WHEN s > 127 THEN '1' ELSE '0' END, '' ORDER BY c) AS bs
-        | FROM grid GROUP BY 1, 2),
-        |sig AS (SELECT DISTINCT doc_id, bs FROM bits),
-        |pairs AS (SELECT x.doc_id AS id_a, y.doc_id AS id_b,
-        |  COUNT(*) AS shared_frames
-        | FROM sig x JOIN sig y ON x.bs = y.bs AND x.doc_id < y.doc_id
-        | GROUP BY 1, 2)
-        |SELECT id_a, id_b, shared_frames FROM pairs WHERE shared_frames >= 2
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // Same recursive closure as x_dedup_drop (transitive clusters, min-id
-    // label), then the x_split md5 cutoffs applied to the REPRESENTATIVE
-    // id — identical 'cccd'/'e666' boundaries, cluster-level key.
-    "x_leak_split" ->
-      s"""WITH RECURSIVE ${ngramPairsCte(0.5)},
-         |edges AS (
-         | SELECT id_a AS u, id_b AS v FROM jpairs
-         | UNION
-         | SELECT id_b AS u, id_a AS v FROM jpairs),
-         |reach AS (
-         | SELECT u AS node, u AS lab FROM edges
-         | UNION
-         | SELECT e.v AS node, r.lab AS lab
-         | FROM reach r JOIN edges e ON e.u = r.node),
-         |labels AS (SELECT node, MIN(lab) AS label FROM reach GROUP BY node),
-         |rep AS (SELECT doc_id, COALESCE(l.label, doc_id) AS r
-         |        FROM documents LEFT JOIN labels l ON l.node = doc_id)
-         |SELECT doc_id,
-         | CASE WHEN substring(md5(
-         |        'v' || CAST(length(CAST(r AS VARCHAR)) AS VARCHAR)
-         |        || ':' || CAST(r AS VARCHAR)), 1, 4) < 'cccd'
-         |      THEN 'train'
-         |      WHEN substring(md5(
-         |        'v' || CAST(length(CAST(r AS VARCHAR)) AS VARCHAR)
-         |        || ':' || CAST(r AS VARCHAR)), 1, 4) < 'e666'
-         |      THEN 'val'
-         |      ELSE 'test' END AS split
-         |FROM rep ORDER BY doc_id""".stripMargin,
-
-    // Same explicit code-point ranges as plans.ScriptProfile; ascii() in
-    // DuckDB returns the code point of the char, so the planted
-    // Cyrillic/CJK/Arabic suffix classifies identically. The dominant-
-    // Mixed-script census: same planted suffix via chr() codepoints,
-    // the same three explicit-range containment tests (\x{...} — the
-    // regex spelling Java and RE2 share), list min as the witness.
-    "x_mixed_script" ->
-      """WITH d AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 9 = 0 THEN text || ' p' || chr(1072) ||
-        |    'ypal ' || chr(919) || 'ello ' || chr(1090) || chr(1077) ||
-        |    chr(1089) || chr(1090) || ' ' || chr(26481) || chr(20140) ||
-        |    'Tokyo'
-        |  ELSE text END AS text FROM documents),
-        |tk AS (SELECT doc_id,
-        |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |       ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM d),
-        |fl AS (SELECT doc_id, tok, list_filter(tok, t ->
-        |   (regexp_matches(t, '[A-Za-z\x{00C0}-\x{00D6}\x{00D8}-\x{00F6}\x{00F8}-\x{024F}]')
-        |     AND regexp_matches(t, '[\x{0370}-\x{03FF}]'))
-        |   OR (regexp_matches(t, '[A-Za-z\x{00C0}-\x{00D6}\x{00D8}-\x{00F6}\x{00F8}-\x{024F}]')
-        |     AND regexp_matches(t, '[\x{0400}-\x{04FF}]'))
-        |   OR (regexp_matches(t, '[\x{0370}-\x{03FF}]')
-        |     AND regexp_matches(t, '[\x{0400}-\x{04FF}]'))) AS fx
-        | FROM tk)
-        |SELECT doc_id, CAST(len(tok) AS BIGINT) AS n_tokens,
-        | CAST(len(fx) AS BIGINT) AS n_mixed,
-        | CASE WHEN len(fx) > 0 THEN list_aggregate(fx, 'min') END
-        |   AS mixed_example
-        |FROM fl ORDER BY doc_id""".stripMargin,
-
-    // script CASE chain mirrors the engine clause-for-clause; counts
-    // CAST to BIGINT (DuckDB SUM(int) is HUGEINT — the budget_select
-    // lesson).
-    "x_script_profile" ->
-      """WITH docs AS (
-        | SELECT doc_id, CASE WHEN doc_id % 11 = 0
-        |   THEN text || ' тест 漢字 ٣٤' ELSE text END AS text
-        | FROM documents),
-        |pos AS (SELECT doc_id, unnest(range(1, length(text) + 1)) AS i, text
-        |        FROM docs),
-        |cp AS (SELECT doc_id, ascii(substr(text, CAST(i AS INTEGER), 1)) AS c
-        |       FROM pos),
-        |cnt AS (SELECT doc_id,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CASE WHEN (c BETWEEN 65 AND 90) OR (c BETWEEN 97 AND 122)
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_latin,
-        |  CAST(SUM(CASE WHEN c BETWEEN 48 AND 57 THEN 1 ELSE 0 END) AS BIGINT) AS n_digit,
-        |  CAST(SUM(CASE WHEN c BETWEEN 1024 AND 1279 THEN 1 ELSE 0 END) AS BIGINT) AS n_cyrillic,
-        |  CAST(SUM(CASE WHEN c BETWEEN 19968 AND 40959 THEN 1 ELSE 0 END) AS BIGINT) AS n_cjk,
-        |  CAST(SUM(CASE WHEN c BETWEEN 1536 AND 1791 THEN 1 ELSE 0 END) AS BIGINT) AS n_arabic,
-        |  CAST(SUM(CASE WHEN c IN (9, 10, 13, 32) THEN 1 ELSE 0 END) AS BIGINT) AS n_space,
-        |  CAST(SUM(CASE WHEN NOT ((c BETWEEN 65 AND 90) OR (c BETWEEN 97 AND 122)
-        |    OR (c BETWEEN 48 AND 57) OR (c BETWEEN 1024 AND 1279)
-        |    OR (c BETWEEN 19968 AND 40959) OR (c BETWEEN 1536 AND 1791)
-        |    OR c IN (9, 10, 13, 32)) THEN 1 ELSE 0 END) AS BIGINT) AS n_other
-        | FROM cp GROUP BY 1)
-        |SELECT d.doc_id,
-        | COALESCE(n, 0) AS n_chars,
-        | COALESCE(n_latin, 0) AS n_latin, COALESCE(n_digit, 0) AS n_digit,
-        | COALESCE(n_cyrillic, 0) AS n_cyrillic, COALESCE(n_cjk, 0) AS n_cjk,
-        | COALESCE(n_arabic, 0) AS n_arabic, COALESCE(n_space, 0) AS n_space,
-        | COALESCE(n_other, 0) AS n_other,
-        | CASE
-        |  WHEN COALESCE(n_latin, 0) >= COALESCE(n_digit, 0) AND COALESCE(n_latin, 0) >= COALESCE(n_cyrillic, 0)
-        |   AND COALESCE(n_latin, 0) >= COALESCE(n_cjk, 0) AND COALESCE(n_latin, 0) >= COALESCE(n_arabic, 0)
-        |   AND COALESCE(n_latin, 0) >= COALESCE(n_other, 0) AND COALESCE(n_latin, 0) > 0 THEN 'latin'
-        |  WHEN COALESCE(n_digit, 0) >= COALESCE(n_latin, 0) AND COALESCE(n_digit, 0) >= COALESCE(n_cyrillic, 0)
-        |   AND COALESCE(n_digit, 0) >= COALESCE(n_cjk, 0) AND COALESCE(n_digit, 0) >= COALESCE(n_arabic, 0)
-        |   AND COALESCE(n_digit, 0) >= COALESCE(n_other, 0) AND COALESCE(n_digit, 0) > 0 THEN 'digit'
-        |  WHEN COALESCE(n_cyrillic, 0) >= COALESCE(n_latin, 0) AND COALESCE(n_cyrillic, 0) >= COALESCE(n_digit, 0)
-        |   AND COALESCE(n_cyrillic, 0) >= COALESCE(n_cjk, 0) AND COALESCE(n_cyrillic, 0) >= COALESCE(n_arabic, 0)
-        |   AND COALESCE(n_cyrillic, 0) >= COALESCE(n_other, 0) AND COALESCE(n_cyrillic, 0) > 0 THEN 'cyrillic'
-        |  WHEN COALESCE(n_cjk, 0) >= COALESCE(n_latin, 0) AND COALESCE(n_cjk, 0) >= COALESCE(n_digit, 0)
-        |   AND COALESCE(n_cjk, 0) >= COALESCE(n_cyrillic, 0) AND COALESCE(n_cjk, 0) >= COALESCE(n_arabic, 0)
-        |   AND COALESCE(n_cjk, 0) >= COALESCE(n_other, 0) AND COALESCE(n_cjk, 0) > 0 THEN 'cjk'
-        |  WHEN COALESCE(n_arabic, 0) >= COALESCE(n_latin, 0) AND COALESCE(n_arabic, 0) >= COALESCE(n_digit, 0)
-        |   AND COALESCE(n_arabic, 0) >= COALESCE(n_cyrillic, 0) AND COALESCE(n_arabic, 0) >= COALESCE(n_cjk, 0)
-        |   AND COALESCE(n_arabic, 0) >= COALESCE(n_other, 0) AND COALESCE(n_arabic, 0) > 0 THEN 'arabic'
-        |  WHEN COALESCE(n_other, 0) >= COALESCE(n_latin, 0) AND COALESCE(n_other, 0) >= COALESCE(n_digit, 0)
-        |   AND COALESCE(n_other, 0) >= COALESCE(n_cyrillic, 0) AND COALESCE(n_other, 0) >= COALESCE(n_cjk, 0)
-        |   AND COALESCE(n_other, 0) >= COALESCE(n_arabic, 0) AND COALESCE(n_other, 0) > 0 THEN 'other'
-        |  ELSE 'und' END AS main_script
-        |FROM docs d LEFT JOIN cnt USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    // Recomputes the engine's whole perceptual chain on ASCII bytes (the
-    // x_multimodal_decode convention): stripe sums mod 256 over byte
-    // positions ≡ c (mod 64), fixed mid-gray threshold, 4×16-bit band
-    // candidate join (complete for Hamming ≤ 3 by pigeonhole), exact
-    // Hamming over the 64-char bit strings.
-    "x_phash_neardup" ->
-      """WITH docs AS (
-        | SELECT doc_id, text FROM documents WHERE text IS NOT NULL
-        | UNION ALL
-        | SELECT doc_id + 40000000, '~!' || substr(text, 3) FROM documents
-        | WHERE text IS NOT NULL AND doc_id % 7 = 0 AND length(text) >= 2),
-        |pos AS (SELECT doc_id, unnest(range(1, length(text) + 1)) AS i, text
-        |        FROM docs),
-        |pb AS (SELECT doc_id, (i - 1) % 64 AS c,
-        |        ascii(substr(text, CAST(i AS INTEGER), 1))::BIGINT
-        |          * (2 * ((i - 1) // 64) + 1) AS v FROM pos),
-        |gsum AS (SELECT doc_id, c, (SUM(v) % 256) * 131 % 256 AS s
-        |         FROM pb GROUP BY 1, 2),
-        |allc AS (SELECT d.doc_id, t.c FROM docs d
-        |         CROSS JOIN (SELECT unnest(range(0, 64)) AS c) t),
-        |grid AS (SELECT a.doc_id, a.c, COALESCE(g.s, 0) AS s
-        |         FROM allc a LEFT JOIN gsum g
-        |         ON g.doc_id = a.doc_id AND g.c = a.c),
-        |bits AS (SELECT doc_id,
-        |  string_agg(CASE WHEN s > 127 THEN '1' ELSE '0' END, '' ORDER BY c) AS bs
-        | FROM grid GROUP BY 1),
-        |bk AS (SELECT doc_id, bs, b, substr(bs, CAST(1 + 16 * b AS INTEGER), 16) AS key
-        |       FROM bits CROSS JOIN (SELECT unnest(range(0, 4)) AS b) t),
-        |cand AS (SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b,
-        |          x.bs AS ba, y.bs AS bb
-        |         FROM bk x JOIN bk y
-        |         ON x.b = y.b AND x.key = y.key AND x.doc_id < y.doc_id),
-        |ham AS (SELECT id_a, id_b,
-        |  CAST(list_sum(list_transform(range(1, 65),
-        |    i -> CASE WHEN substr(ba, CAST(i AS INTEGER), 1)
-        |              <> substr(bb, CAST(i AS INTEGER), 1)
-        |         THEN 1 ELSE 0 END)) AS BIGINT) AS hamming
-        | FROM cand)
-        |SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // Unigram-LM training replayed end-to-end: substring seed, TWO
-    // Viterbi-EM rounds fully unrolled (12-position exact-decimal DP +
-    // backtrack per round, kernel-identical tiebreaks), char floor,
-    // prune, renormalized round-9 log probs — counts AND logp
-    // hash-match bit-for-bit.
-    "x_unigram_train" ->
-      s"""WITH $unigramKeptCte
-         |SELECT piece, cnt,
-         | ROUND(ln(CAST(cnt AS DOUBLE)) -
-         |   ln((SELECT CAST(SUM(cnt) AS DOUBLE) FROM ukept)), 9) AS logp
-         |FROM ukept ORDER BY piece""".stripMargin,
-
-    // Encode = one more unrolled Viterbi pass (round 3) under the FINAL
-    // pruned vocabulary's log probs; per-doc piece order reconstructs
-    // from (word index ASC, backtrack step DESC — step s is the s-th
-    // piece from the word's end).
-    "x_unigram_encode" ->
-      s"""WITH $unigramKeptCte,
-         |${unigramRoundCtes(3, "ukept")},
-         |uwords AS (
-         | SELECT doc_id, wi, list_extract(arr, CAST(wi AS INTEGER)) AS word
-         | FROM (
-         |  SELECT doc_id, unnest(range(1, len(arr) + 1)) AS wi, arr FROM (
-         |   SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS arr
-         |   FROM documents
-         |   WHERE text IS NOT NULL AND length(trim(text)) > 0)))
-         |SELECT u.doc_id,
-         | string_agg(e.piece, ' ' ORDER BY u.wi ASC, e.s DESC) AS encoded,
-         | CAST(COUNT(*) AS BIGINT) AS n_pieces
-         |FROM uwords u JOIN upc3 e ON e.w = u.word
-         |GROUP BY 1 ORDER BY doc_id""".stripMargin,
-
-    // The grown index replayed: train-on-old / assign-all (ivfAppendCte),
-    // then the same sub-exhaustive probe chain as x_ivf_probe — any
-    // divergence between the appended parquet state and a from-scratch
-    // frozen-centroid assignment flips rows.
-    "x_ivf_append" ->
-      s"""WITH $ivfAppendCte,
-         |qs AS (
-         | SELECT vec_id AS qid FROM embeddings WHERE vec_id % 125 = 0),
-         |qd AS (
-         | SELECT q.qid, c.c,
-         |  CAST(SUM(CAST(e.x * c.w AS DECIMAL(30,15))) AS DOUBLE) AS dot
-         | FROM qs q JOIN vv ON vv.vec_id = q.qid
-         |  JOIN e ON e.vec_id = q.qid JOIN c2 c ON c.pos = e.pos
-         | GROUP BY 1, 2),
-         |pr AS (
-         | SELECT qid, c FROM (
-         |  SELECT qid, c,
-         |   ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dot DESC, c) AS rk
-         |  FROM qd) WHERE rk <= 3),
-         |cand AS (
-         | SELECT p.qid, a.vec_id
-         | FROM pr p JOIN kassign a ON a.cluster = p.c
-         | WHERE a.vec_id <> p.qid),
-         |pd AS (
-         | SELECT cd.qid, cd.vec_id,
-         |  CAST(SUM(CAST(eq.x * ec.x AS DECIMAL(30,15))) AS DOUBLE) AS dot
-         | FROM cand cd
-         |  JOIN e eq ON eq.vec_id = cd.qid
-         |  JOIN e ec ON ec.vec_id = cd.vec_id AND ec.pos = eq.pos
-         | GROUP BY 1, 2)
-         |SELECT qid AS query_id, vec_id AS neighbor_id, cos, rank FROM (
-         | SELECT qid, vec_id, cos,
-         |  CAST(ROW_NUMBER() OVER (PARTITION BY qid
-         |    ORDER BY cos DESC, vec_id) AS BIGINT) AS rank
-         | FROM (
-         |  SELECT pd.qid, pd.vec_id,
-         |   ROUND(pd.dot / SQRT(nc.n2 * nq.n2), 9) AS cos
-         |  FROM pd JOIN n nq ON nq.vec_id = pd.qid
-         |   JOIN n nc ON nc.vec_id = pd.vec_id))
-         |WHERE rank <= 5
-         |ORDER BY query_id, rank""".stripMargin,
-
-    // The WordPiece walk replayed on the same trained-vocabulary chain:
-    // every step's longest match, the completion test, the [UNK]
-    // collapse rule, and forward piece order per doc.
-    "x_wordpiece" ->
-      s"""WITH $unigramKeptCte,
-         |$wordpieceCtes,
-         |uwords AS (
-         | SELECT doc_id, wi, list_extract(arr, CAST(wi AS INTEGER)) AS word
-         | FROM (
-         |  SELECT doc_id, unnest(range(1, len(arr) + 1)) AS wi, arr FROM (
-         |   SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS arr
-         |   FROM documents
-         |   WHERE text IS NOT NULL AND length(trim(text)) > 0)))
-         |SELECT u.doc_id,
-         | string_agg(p.piece, ' ' ORDER BY u.wi ASC, p.s ASC) AS encoded,
-         | CAST(COUNT(*) AS BIGINT) AS n_pieces
-         |FROM uwords u JOIN wpieces p ON p.word = u.word
-         |GROUP BY 1 ORDER BY doc_id""".stripMargin,
-
-    // Priority sampling mirrored exactly: the 20-bit uniform draw is the
-    // first 5 md5 hex chars folded to an integer (strpos-over-the-hex-
-    // alphabet — DuckDB's conv), the priority is the same 2^-20 BIGINT
-    // floor-division (numerator factor 2^40 = draw range × estimator
-    // scale), τ the 51st priority, estimators greatest(w·2^20, τ).
-    "x_weighted_sample" ->
-      """WITH p AS (
-        | SELECT doc_id, n_chars AS w,
-        |  (n_chars * 1099511627776) // (1 + list_reduce(
-        |    list_transform(range(1, 6), i -> CAST(strpos('0123456789abcdef',
-        |      substr(md5('ps:' || CAST(doc_id AS VARCHAR)),
-        |        CAST(i AS INTEGER), 1)) - 1 AS BIGINT)),
-        |    (a, b) -> a * 16 + b)) AS priority
-        | FROM documents),
-        |r AS (SELECT *, row_number() OVER (ORDER BY priority DESC, doc_id)
-        |      AS rn FROM p),
-        |t AS (SELECT max(CASE WHEN rn = 51 THEN priority END) AS tau FROM r)
-        |SELECT doc_id, w, priority,
-        | greatest(w * 1048576, COALESCE(tau, 0)) AS est_fp
-        |FROM r, t WHERE rn <= 50 ORDER BY doc_id""".stripMargin,
-
-    // Per-language priority sampling: identical draw/scale math, rank
-    // and τ partitioned by lang (τ = each group's 21st priority).
-    "x_weighted_sample_lang" ->
-      """WITH p AS (
-        | SELECT lang, doc_id, n_chars AS w,
-        |  (n_chars * 1099511627776) // (1 + list_reduce(
-        |    list_transform(range(1, 6), i -> CAST(strpos('0123456789abcdef',
-        |      substr(md5('ps:' || CAST(doc_id AS VARCHAR)),
-        |        CAST(i AS INTEGER), 1)) - 1 AS BIGINT)),
-        |    (a, b) -> a * 16 + b)) AS priority
-        | FROM documents),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY lang
-        |      ORDER BY priority DESC, doc_id) AS rn FROM p),
-        |t AS (SELECT lang, max(CASE WHEN rn = 21 THEN priority END) AS tau
-        |      FROM r GROUP BY lang)
-        |SELECT r.lang, doc_id, w, priority,
-        | greatest(w * 1048576, COALESCE(tau, 0)) AS est_fp
-        |FROM r JOIN t ON r.lang = t.lang
-        |WHERE rn <= 20 ORDER BY r.lang, doc_id""".stripMargin,
-
-    // The same one-window attribution: running struct-max over the
-    // strictly-preceding RANGE frame (same-microsecond touches are
-    // excluded, and cannot shadow an earlier valid touch), 7-day
-    // microsecond gate, 'none' rows keep null touch columns.
-    "x_attribution" ->
-      """WITH w AS (SELECT event_id, user_id, event_type, ts,
-        |  max(CASE WHEN event_type IN ('click', 'view', 'signup') THEN
-        |    {'us': epoch_us(ts), 'eid': event_id, 'et': event_type} END)
-        |  OVER (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |        RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS touch
-        | FROM events)
-        |SELECT event_id, user_id,
-        | CASE WHEN touch IS NOT NULL
-        |   AND epoch_us(ts) - touch.us <= 604800000000
-        |  THEN touch.et ELSE 'none' END AS touch_type,
-        | CASE WHEN touch IS NOT NULL
-        |   AND epoch_us(ts) - touch.us <= 604800000000
-        |  THEN touch.eid END AS touch_event,
-        | CASE WHEN touch IS NOT NULL
-        |   AND epoch_us(ts) - touch.us <= 604800000000
-        |  THEN epoch_us(ts) - touch.us END AS gap_us
-        |FROM w WHERE event_type = 'purchase' ORDER BY event_id""".stripMargin,
-
-    // Same per-group rank selection: row_number + group count in one
-    // window, value at rank LEAST(n, GREATEST(1, ceil(p·n))).
-    "x_winsorize_lang" ->
-      """WITH v AS (SELECT lang AS g, CAST(n_chars AS DOUBLE) AS x
-        |  FROM documents WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
-        |r AS (SELECT g, x,
-        |  row_number() OVER (PARTITION BY g ORDER BY x) AS rn,
-        |  COUNT(*) OVER (PARTITION BY g) AS n FROM v),
-        |cuts AS (SELECT g,
-        |  MAX(CASE WHEN rn = LEAST(n, GREATEST(1,
-        |    CAST(ceil(0.05 * n) AS BIGINT))) THEN x END) AS lo,
-        |  MAX(CASE WHEN rn = LEAST(n, GREATEST(1,
-        |    CAST(ceil(0.95 * n) AS BIGINT))) THEN x END) AS hi
-        | FROM r GROUP BY g)
-        |SELECT d.doc_id, d.lang, d.n_chars,
-        | CASE WHEN d.n_chars IS NULL OR c.lo IS NULL
-        |  THEN CAST(d.n_chars AS DOUBLE)
-        |  ELSE GREATEST(c.lo, LEAST(c.hi, CAST(d.n_chars AS DOUBLE))) END AS v_w,
-        | CASE WHEN d.n_chars IS NULL OR c.lo IS NULL THEN FALSE
-        |  ELSE CAST(d.n_chars AS DOUBLE) <> GREATEST(c.lo,
-        |    LEAST(c.hi, CAST(d.n_chars AS DOUBLE))) END AS v_w_clipped
-        |FROM documents d LEFT JOIN cuts c ON d.lang IS NOT DISTINCT FROM c.g
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Same fixed binning (floor of identical double ops, edge clamp);
-    // HUGEINT cross products internally, every output column narrowed
-    // to BIGINT/DOUBLE (no int128 type survives to the gate's hasher).
-    "x_drift" ->
-      """WITH g AS (SELECT unnest(range(0, 24)) AS bin),
-        |ha AS (SELECT LEAST(23, GREATEST(0,
-        |    CAST(FLOOR((CAST(n_chars AS DOUBLE) - 0.0) / 25.0) AS INT)))
-        |    AS bin, count(*) AS n_a
-        | FROM documents WHERE doc_id % 3 <> 0 AND n_chars IS NOT NULL
-        | GROUP BY 1),
-        |hb AS (SELECT LEAST(23, GREATEST(0,
-        |    CAST(FLOOR((CAST(n_chars AS DOUBLE) - 0.0) / 25.0) AS INT)))
-        |    AS bin, count(*) AS n_b
-        | FROM documents WHERE doc_id % 2 = 0 AND n_chars IS NOT NULL
-        | GROUP BY 1),
-        |j AS (SELECT g.bin, COALESCE(n_a, 0) AS n_a, COALESCE(n_b, 0) AS n_b
-        | FROM g LEFT JOIN ha ON ha.bin = g.bin LEFT JOIN hb ON hb.bin = g.bin),
-        |tt AS (SELECT CAST(SUM(n_a) AS BIGINT) AS n_a_tot,
-        |  CAST(SUM(n_b) AS BIGINT) AS n_b_tot FROM j)
-        |SELECT bin, CAST(0.0 + bin * 25.0 AS DOUBLE) AS lo_edge, n_a, n_b,
-        | CAST(ABS(CAST(n_a AS HUGEINT) * n_b_tot
-        |   - CAST(n_b AS HUGEINT) * n_a_tot) AS BIGINT) AS l1_num,
-        | n_a_tot, n_b_tot
-        |FROM j, tt ORDER BY bin""".stripMargin,
-
-    // Per-group drift mirror: (observed langs) x (generate_series bins)
-    // grid, identical double-arithmetic binning, per-group HUGEINT
-    // cross products narrowed at the edge.
-    "x_drift_by_group" ->
-      """WITH g AS (SELECT DISTINCT lang AS lg FROM documents
-        |  WHERE lang IS NOT NULL
-        |    AND n_chars IS NOT NULL AND (doc_id % 3 <> 0 OR doc_id % 2 = 0)),
-        |grid AS (SELECT lg, CAST(b AS INT) AS bin
-        | FROM g, generate_series(0, 11) AS t(b)),
-        |ha AS (SELECT lang AS lg, LEAST(11, GREATEST(0,
-        |    CAST(FLOOR((CAST(n_chars AS DOUBLE) - 0.0) / 50.0) AS INT)))
-        |    AS bin, count(*) AS n_a
-        | FROM documents WHERE doc_id % 3 <> 0 AND lang IS NOT NULL
-        |   AND n_chars IS NOT NULL
-        | GROUP BY 1, 2),
-        |hb AS (SELECT lang AS lg, LEAST(11, GREATEST(0,
-        |    CAST(FLOOR((CAST(n_chars AS DOUBLE) - 0.0) / 50.0) AS INT)))
-        |    AS bin, count(*) AS n_b
-        | FROM documents WHERE doc_id % 2 = 0 AND lang IS NOT NULL
-        |   AND n_chars IS NOT NULL
-        | GROUP BY 1, 2),
-        |j AS (SELECT grid.lg, grid.bin, COALESCE(n_a, 0) AS n_a,
-        |  COALESCE(n_b, 0) AS n_b
-        | FROM grid LEFT JOIN ha ON ha.lg = grid.lg AND ha.bin = grid.bin
-        |   LEFT JOIN hb ON hb.lg = grid.lg AND hb.bin = grid.bin),
-        |tt AS (SELECT lg, CAST(SUM(n_a) AS BIGINT) AS n_a_tot,
-        |  CAST(SUM(n_b) AS BIGINT) AS n_b_tot FROM j GROUP BY 1)
-        |SELECT j.lg AS lang, CAST(j.bin AS BIGINT) AS bin,
-        | CAST(0.0 + j.bin * 50.0 AS DOUBLE) AS lo_edge, n_a, n_b,
-        | CAST(ABS(CAST(n_a AS HUGEINT) * n_b_tot
-        |   - CAST(n_b AS HUGEINT) * n_a_tot) AS BIGINT) AS l1_num,
-        | n_a_tot, n_b_tot
-        |FROM j JOIN tt ON j.lg = tt.lg ORDER BY lang, bin""".stripMargin,
-
-    // Count-table join mirror; hottest key ties to the largest string.
-    "x_join_card" ->
-      """WITH ca AS (SELECT l_orderkey AS k, count(*) AS na FROM lineitem
-        |  WHERE l_orderkey IS NOT NULL GROUP BY 1),
-        |cb AS (SELECT o_orderkey AS k, count(*) AS nb FROM orders
-        |  WHERE o_orderkey IS NOT NULL GROUP BY 1),
-        |p AS (SELECT ca.k, CAST(na AS HUGEINT) * nb AS pp
-        | FROM ca JOIN cb ON ca.k = cb.k),
-        |m AS (SELECT CAST(k AS VARCHAR) AS k, pp FROM p
-        | ORDER BY pp DESC, CAST(k AS VARCHAR) DESC LIMIT 1)
-        |SELECT CAST(COALESCE((SELECT SUM(pp) FROM p), 0) AS BIGINT) AS n_pairs,
-        | (SELECT COUNT(*) FROM p) AS n_keys_matched,
-        | CAST(COALESCE((SELECT pp FROM m), 0) AS BIGINT) AS max_key_pairs,
-        | (SELECT k FROM m) AS hottest_key""".stripMargin,
-
-    // Cuts mirrored as OFFSET element selection at rank ceil(p·n)−1 —
-    // the same discrete convention, no interpolation to diverge.
-    "x_winsorize" ->
-      """WITH v AS (SELECT value AS x FROM events
-        |  WHERE value IS NOT NULL AND NOT isnan(value)),
-        |n AS (SELECT COUNT(*) AS c FROM v),
-        |cl AS (SELECT x FROM v ORDER BY x LIMIT 1 OFFSET
-        |  (SELECT GREATEST(CAST(ceil(0.02 * c) AS BIGINT) - 1, 0) FROM n)),
-        |ch AS (SELECT x FROM v ORDER BY x LIMIT 1 OFFSET
-        |  (SELECT LEAST(c - 1,
-        |     GREATEST(CAST(ceil(0.98 * c) AS BIGINT) - 1, 0)) FROM n)),
-        |o AS (SELECT event_id, value,
-        |  CASE WHEN value IS NULL OR isnan(value) THEN value
-        |   ELSE GREATEST((SELECT x FROM cl),
-        |     LEAST((SELECT x FROM ch), value)) END AS v_w
-        | FROM events)
-        |SELECT event_id, value, v_w,
-        | CASE WHEN value IS NULL OR isnan(value) THEN FALSE
-        |  ELSE value <> v_w END AS v_w_clipped
-        |FROM o ORDER BY event_id""".stripMargin,
-
-    // The same grid + neighbor-carry windows; the interpolation formula
-    // is mirrored op-for-op (conversions, one divide, multiply, add).
-    // Bucketing mirrors the engine's FLOOR semantics: DuckDB `//`
-    // truncates toward zero, so a positive mod is subtracted first —
-    // the numerator becomes exactly divisible (trunc = floor there),
-    // keeping pre-1970 timestamps one bucket LOW on both engines.
-    "x_interpolate" ->
-      """WITH b0 AS (SELECT user_id,
-        |  (epoch_us(ts) - ((epoch_us(ts) % 3600000000) + 3600000000)
-        |    % 3600000000) // 3600000000 AS t,
-        |  CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS v
-        | FROM events GROUP BY 1, 2),
-        |b AS (SELECT * FROM b0 WHERE v IS NOT NULL),
-        |g AS (SELECT user_id, unnest(range(mn, mx + 1)) AS t
-        | FROM (SELECT user_id, MIN(t) AS mn, MAX(t) AS mx FROM b GROUP BY 1)),
-        |j AS (SELECT g.user_id, g.t, b.v FROM g
-        | LEFT JOIN b ON b.user_id = g.user_id AND b.t = g.t),
-        |w AS (SELECT user_id, t, v,
-        |  last_value(CASE WHEN v IS NOT NULL THEN {'t': t, 'v': v} END
-        |    IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY t
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS p,
-        |  first_value(CASE WHEN v IS NOT NULL THEN {'t': t, 'v': v} END
-        |    IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY t
-        |    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS n
-        | FROM j)
-        |SELECT user_id, t,
-        | CASE WHEN v IS NOT NULL THEN v
-        |  ELSE p.v + (n.v - p.v) *
-        |   (CAST(t - p.t AS DOUBLE) / CAST(n.t - p.t AS DOUBLE)) END AS v,
-        | CASE WHEN v IS NOT NULL THEN 'obs' ELSE 'interp' END AS kind
-        |FROM w ORDER BY user_id, t""".stripMargin,
-
-    // The plan's two-level prefix decomposition collapses to one plain
-    // exclusive cumsum over the identical (size DESC, name) total order.
-    "x_compaction" ->
-      """WITH seg AS (SELECT lang || '/' || source AS name,
-        |  CAST(SUM(n_chars) AS BIGINT) AS size
-        | FROM documents GROUP BY 1),
-        |c AS (SELECT name, size,
-        |  CAST(COALESCE(SUM(size) OVER (ORDER BY size DESC, name
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |    AS BIGINT) AS bin_start
-        | FROM seg)
-        |SELECT name, size, bin_start // 10000 AS bin, bin_start
-        |FROM c ORDER BY name""".stripMargin,
-
-    // The binned range join collapses to a plain inequality join in the
-    // oracle; zero-touch conversions kept via LEFT JOIN, n over pairs.
-    "x_multitouch" ->
-      """WITH tch AS (SELECT user_id AS u, epoch_us(ts) AS ut,
-        |  event_id AS touch_event, event_type AS touch_type
-        | FROM events
-        | WHERE event_type IN ('click', 'view', 'signup') AND ts IS NOT NULL),
-        |cv AS (SELECT user_id, epoch_us(ts) AS uc, event_id
-        | FROM events WHERE event_type = 'purchase' AND ts IS NOT NULL),
-        |p AS (SELECT cv.event_id, tch.touch_event, tch.touch_type,
-        |  cv.uc - tch.ut AS gap_us
-        | FROM cv JOIN tch ON tch.u = cv.user_id
-        |  AND tch.ut BETWEEN cv.uc - 604800000000 AND cv.uc - 1),
-        |pn AS (SELECT *, COUNT(*) OVER (PARTITION BY event_id) AS n_touches
-        | FROM p)
-        |SELECT cv.event_id, cv.user_id, pn.touch_event, pn.touch_type,
-        | pn.gap_us, COALESCE(pn.n_touches, 0) AS n_touches
-        |FROM cv LEFT JOIN pn ON pn.event_id = cv.event_id
-        |ORDER BY cv.event_id, pn.touch_event""".stripMargin,
-
-    // Same lag + running-sum session ids, per-session min/max/count.
-    "x_sessions" ->
-      """WITH m AS (SELECT user_id AS user, event_id, epoch_us(ts) AS us,
-        |  CASE WHEN epoch_us(ts) - lag(epoch_us(ts), 1) OVER w
-        |    > 1800000000 THEN 1 ELSE 0 END AS new_s
-        | FROM events WHERE ts IS NOT NULL
-        | WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)),
-        |sid AS (SELECT user, us,
-        |  CAST(1 + SUM(new_s) OVER (PARTITION BY user ORDER BY us, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    AS BIGINT) AS session_seq
-        | FROM m)
-        |SELECT user, session_seq, MIN(us) AS start_us, MAX(us) AS end_us,
-        | count(*) AS n_events, MAX(us) - MIN(us) AS duration_us
-        |FROM sid GROUP BY user, session_seq
-        |ORDER BY user, session_seq""".stripMargin,
-
-    // Same k-lag chain: two lags over the (epoch_us, event_id) order,
-    // full windows only, '>'-joined path strings.
-    "x_paths" ->
-      """WITH seq AS (SELECT
-        |  lag(event_type, 2) OVER w AS s0,
-        |  lag(event_type, 1) OVER w AS s1,
-        |  event_type AS s2
-        | FROM events WHERE ts IS NOT NULL
-        | WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id))
-        |SELECT s0 || '>' || s1 || '>' || s2 AS path, count(*) AS n
-        |FROM seq
-        |WHERE s0 IS NOT NULL AND s1 IS NOT NULL AND s2 IS NOT NULL
-        |GROUP BY 1 HAVING count(*) >= 5
-        |ORDER BY n DESC, path""".stripMargin,
-
-    // The same two-window island decomposition, pinned (ts, event_id).
-    "x_streaks" ->
-      """WITH b AS (SELECT user_id, event_type,
-        |  row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |  - row_number() OVER (PARTITION BY user_id, event_type
-        |      ORDER BY ts, event_id) AS island
-        | FROM events),
-        |i AS (SELECT user_id, event_type, island, COUNT(*) AS len
-        | FROM b GROUP BY 1, 2, 3)
-        |SELECT user_id, event_type, CAST(SUM(len) AS BIGINT) AS n_events,
-        | COUNT(*) AS n_streaks, CAST(MAX(len) AS BIGINT) AS max_streak
-        |FROM i GROUP BY 1, 2 ORDER BY user_id, event_type""".stripMargin,
-
-    // CUSUM mirrored: DECIMAL(28,9) mean, the identical pinned-order
-    // running float sum, argmax by (|S| desc, ts, event_id).
-    "x_cusum" ->
-      """WITH base AS (SELECT user_id, ts, event_id, value AS v FROM events
-        | WHERE value IS NOT NULL AND NOT isnan(value)),
-        |m AS (SELECT user_id,
-        |  CAST(SUM(CAST(v AS DECIMAL(28,9))) AS DOUBLE)
-        |    / CAST(COUNT(*) AS DOUBLE) AS mean,
-        |  COUNT(*) AS n FROM base GROUP BY 1),
-        |s AS (SELECT b.user_id, b.ts, b.event_id, m.n,
-        |  SUM(b.v - m.mean) OVER (PARTITION BY b.user_id
-        |    ORDER BY b.ts, b.event_id ROWS UNBOUNDED PRECEDING) AS cs
-        | FROM base b JOIN m USING (user_id)),
-        |x AS (SELECT user_id, n, cs, ts,
-        |  MAX(cs) OVER (PARTITION BY user_id) AS smax,
-        |  MIN(cs) OVER (PARTITION BY user_id) AS smin,
-        |  row_number() OVER (PARTITION BY user_id
-        |    ORDER BY abs(cs) DESC, ts, event_id) AS rk
-        | FROM s)
-        |SELECT user_id, n, ROUND(abs(cs), 9) AS cusum_peak,
-        | ts AS peak_ts, ROUND(smax - smin, 9) AS cusum_range
-        |FROM x WHERE rk = 1 ORDER BY user_id""".stripMargin,
-
-    // The same lag pass: per-user (epoch_us, event_id) order, pair
-    // counts, from-type rollup as a window over the aggregated table.
-    "x_transitions" ->
-      """WITH seq AS (SELECT event_type AS to_type,
-        |  lag(event_type) OVER (PARTITION BY user_id
-        |    ORDER BY epoch_us(ts), event_id) AS from_type
-        | FROM events WHERE ts IS NOT NULL),
-        |c AS (SELECT from_type, to_type, count(*) AS n FROM seq
-        | WHERE from_type IS NOT NULL GROUP BY 1, 2)
-        |SELECT from_type, to_type, n,
-        | CAST(SUM(n) OVER (PARTITION BY from_type) AS BIGINT) AS n_from
-        |FROM c ORDER BY from_type, to_type""".stripMargin,
-
-    // Same token split, 1-based list bigrams, len()/list_distinct.
-    "x_diversity" ->
-      """WITH d AS (SELECT doc_id,
-        |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |       ELSE regexp_split_to_array(TRIM(text), '\s+') END AS t
-        | FROM documents),
-        |g AS (SELECT doc_id, t,
-        |  CASE WHEN len(t) >= 2
-        |       THEN list_transform(range(1, CAST(len(t) AS INTEGER)),
-        |         i -> t[i] || ' ' || t[i + 1])
-        |       ELSE []::VARCHAR[] END AS bg
-        | FROM d)
-        |SELECT doc_id,
-        | len(t) AS n_tokens,
-        | len(list_distinct(t)) AS n_distinct_tokens,
-        | len(bg) AS n_bigrams,
-        | len(list_distinct(bg)) AS n_distinct_bigrams,
-        | CASE WHEN len(t) > 0
-        |      THEN (len(list_distinct(t)) * 1000000) // len(t) END AS ttr_ppm,
-        | CASE WHEN len(bg) > 0
-        |      THEN (len(list_distinct(bg)) * 1000000) // len(bg)
-        | END AS distinct_bigram_ppm
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    // Same dedup-then-explode decomposition in SQL.
-    "x_stickiness" ->
-      """WITH ud AS (
-        | SELECT DISTINCT user_id AS u, epoch_us(ts) // 86400000000 AS d
-        | FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL),
-        |dau AS (SELECT d AS day, COUNT(*) AS dau FROM ud GROUP BY d),
-        |sup AS (SELECT DISTINCT u, d + j AS day FROM ud,
-        | (SELECT unnest(range(0, 30)) AS j)),
-        |mau AS (SELECT day, COUNT(*) AS mau FROM sup GROUP BY day)
-        |SELECT dau.day, dau.dau, mau.mau,
-        | (dau.dau * 1000000) // mau.mau AS stickiness_ppm
-        |FROM dau JOIN mau ON dau.day = mau.day
-        |ORDER BY dau.day""".stripMargin,
-
-    // Same integer day floor, decimal day sums, grid-sized cumsum.
-    "x_cohort_value" ->
-      """WITH ev AS (
-        | SELECT user_id AS u, epoch_us(ts) // 86400000000 AS d,
-        |  COALESCE(CAST(value AS DECIMAL(28,6)), 0) AS v
-        | FROM events WHERE ts IS NOT NULL),
-        |f AS (SELECT u, MIN(d) AS d0 FROM ev GROUP BY u),
-        |g AS (SELECT f.d0 AS cohort_day, ev.d - f.d0 AS day_offset,
-        |  COUNT(DISTINCT ev.u) AS n_users, SUM(ev.v) AS dv
-        | FROM ev JOIN f ON ev.u = f.u GROUP BY 1, 2)
-        |SELECT cohort_day, day_offset, n_users,
-        | CAST(dv AS DOUBLE) AS day_value,
-        | CAST(SUM(dv) OVER (PARTITION BY cohort_day ORDER BY day_offset
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |  AS DOUBLE) AS cum_value
-        |FROM g ORDER BY cohort_day, day_offset""".stripMargin,
-
-    // Same per-key last-train anchor and strict embargo bound.
-    "x_temporal_split" ->
-      """WITH lt AS (
-        | SELECT user_id AS k, MAX(epoch_us(ts)) AS last_train FROM events
-        | WHERE ts IS NOT NULL AND epoch_us(ts) < 1705708800000000
-        | GROUP BY user_id)
-        |SELECT e.event_id, e.user_id, e.ts,
-        | CASE WHEN e.ts IS NULL THEN NULL
-        |      WHEN epoch_us(e.ts) < 1705708800000000 THEN 'train'
-        |      WHEN lt.last_train IS NOT NULL
-        |       AND epoch_us(e.ts) < lt.last_train + 43200000000
-        |      THEN 'embargoed'
-        |      ELSE 'eval' END AS split
-        |FROM events e LEFT JOIN lt ON e.user_id = lt.k
-        |ORDER BY event_id""".stripMargin,
-
-    // Same planted cadences, same mask construction.
-    "x_missingness" ->
-      """WITH base AS (SELECT
-        |  CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END AS v,
-        |  CASE WHEN event_id % 5 = 0 THEN NULL ELSE event_type END AS t,
-        |  user_id AS u FROM events),
-        |p AS (SELECT
-        |  (CASE WHEN v IS NULL OR isnan(v) THEN '1' ELSE '0' END) ||
-        |  (CASE WHEN t IS NULL THEN '1' ELSE '0' END) ||
-        |  (CASE WHEN u IS NULL THEN '1' ELSE '0' END) AS pattern
-        | FROM base)
-        |SELECT pattern, COUNT(*) AS n,
-        | CAST(length(pattern) - length(replace(pattern, '1', ''))
-        |   AS BIGINT) AS n_null_cols
-        |FROM p GROUP BY pattern ORDER BY pattern""".stripMargin,
-
-    // ECE mirrored on the x_reliability chain: same binning and
-    // DECIMAL(28,9) score sums, per-bin |acc - conf| term in the
-    // identical pinned order, DECIMAL(30,15) bin sum, one close
-    // division.
-    "x_ece" ->
-      """WITH base AS (
-        | SELECT CAST(n_chars % 100 AS DOUBLE) / 100.0 AS s,
-        |  (lang = 'en') AS y
-        | FROM documents WHERE n_chars IS NOT NULL AND lang IS NOT NULL
-        |   AND abs(CAST(n_chars % 100 AS DOUBLE) / 100.0) < 1e19),
-        |b AS (SELECT CAST(FLOOR(LEAST(CAST(9 AS DOUBLE), GREATEST(
-        |    CAST(0 AS DOUBLE),
-        |    (s - CAST(0.0 AS DOUBLE)) / CAST(0.1 AS DOUBLE)))) AS BIGINT)
-        |    AS bin, s, y
-        | FROM base),
-        |g AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-        |  SUM(CAST(s AS DECIMAL(28,9))) AS ssum
-        | FROM b GROUP BY bin),
-        |t AS (SELECT n, CAST(n AS DOUBLE) * abs(
-        |   CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE)
-        |     - CAST(ssum AS DOUBLE) / CAST(n AS DOUBLE)) AS term
-        | FROM g WHERE n > 0)
-        |SELECT CAST(SUM(n) AS BIGINT) AS n, COUNT(*) AS n_bins_used,
-        | ROUND(CAST(SUM(CAST(term AS DECIMAL(30,15))) AS DOUBLE)
-        |   / CAST(SUM(n) AS DOUBLE), 9) AS ece
-        |FROM t""".stripMargin,
-
-    // KS mirrored with naive global windows (the oracle IS the plan
-    // the operator decomposes); HUGEINT window sums and cross products
-    // cast back at the close.
-    "x_ks_test" ->
-      """WITH base AS (
-        | SELECT value AS v, event_type AS g FROM events
-        | WHERE value IS NOT NULL AND NOT isnan(value)
-        |   AND event_type IN ('click', 'purchase')),
-        |vals AS (SELECT v,
-        |  SUM(CASE WHEN g = 'click' THEN 1 ELSE 0 END) AS ca,
-        |  SUM(CASE WHEN g = 'purchase' THEN 1 ELSE 0 END) AS cb
-        | FROM base GROUP BY 1),
-        |c AS (SELECT v,
-        |  SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS fa,
-        |  SUM(cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS fb
-        | FROM vals),
-        |t AS (SELECT CAST(SUM(ca) AS BIGINT) AS n1,
-        |  CAST(SUM(cb) AS BIGINT) AS n2 FROM vals)
-        |SELECT n1 AS n_a, n2 AS n_b,
-        | CAST(MAX(abs(n2 * fa - n1 * fb)) AS BIGINT) AS d_num,
-        | n1 * n2 AS d_den,
-        | ROUND(CAST(CAST(MAX(abs(n2 * fa - n1 * fb)) AS BIGINT) AS DOUBLE)
-        |   / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)), 9) AS d
-        |FROM c, t GROUP BY n1, n2""".stripMargin,
-
-    // Cramer's V mirrored: same sparse-grid chi2 identity, the
-    // identical pinned cell term, DECIMAL(30,15) sum, nullif floor.
-    "x_cramers_v" ->
-      """WITH cells AS (SELECT o_orderpriority AS a, o_orderstatus AS b,
-        |  COUNT(*) AS o FROM orders
-        | WHERE o_orderpriority IS NOT NULL AND o_orderstatus IS NOT NULL
-        | GROUP BY 1, 2),
-        |ra AS (SELECT a, CAST(SUM(o) AS BIGINT) AS ra FROM cells GROUP BY 1),
-        |cb AS (SELECT b, CAST(SUM(o) AS BIGINT) AS cb FROM cells GROUP BY 1),
-        |tot AS (SELECT CAST(SUM(o) AS BIGINT) AS n,
-        |  COUNT(DISTINCT a) AS r, COUNT(DISTINCT b) AS c FROM cells),
-        |t AS (SELECT n, r, c, CAST(SUM(CAST(
-        |   ((CAST(o AS DOUBLE)
-        |      - (CAST(ra AS DOUBLE) * CAST(cb AS DOUBLE)) / CAST(n AS DOUBLE))
-        |    * (CAST(o AS DOUBLE)
-        |      - (CAST(ra AS DOUBLE) * CAST(cb AS DOUBLE)) / CAST(n AS DOUBLE)))
-        |   / ((CAST(ra AS DOUBLE) * CAST(cb AS DOUBLE)) / CAST(n AS DOUBLE))
-        |   - (CAST(ra AS DOUBLE) * CAST(cb AS DOUBLE)) / CAST(n AS DOUBLE)
-        |  AS DECIMAL(30,15))) AS DOUBLE) AS tt
-        | FROM cells JOIN ra USING (a) JOIN cb USING (b), tot
-        | GROUP BY 1, 2, 3)
-        |SELECT n, r, c,
-        | ROUND(tt + CAST(n AS DOUBLE), 9) AS chi2,
-        | ROUND(sqrt(((tt + CAST(n AS DOUBLE)) / CAST(n AS DOUBLE))
-        |   / nullif(CAST(LEAST(r - 1, c - 1) AS DOUBLE), 0.0)), 9)
-        |   AS cramers_v
-        |FROM t""".stripMargin,
-
-    // MI mirrored: ln only ever sees the integral products o*n and
-    // r*c, cell/marginal terms in DECIMAL(30,15), pinned closes.
-    "x_mutual_info" ->
-      """WITH cells AS (SELECT lang AS a, source AS b, COUNT(*) AS o
-        | FROM documents
-        | WHERE lang IS NOT NULL AND source IS NOT NULL GROUP BY 1, 2),
-        |ra AS (SELECT a, CAST(SUM(o) AS BIGINT) AS ra FROM cells GROUP BY 1),
-        |cb AS (SELECT b, CAST(SUM(o) AS BIGINT) AS cb FROM cells GROUP BY 1),
-        |tot AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM cells),
-        |mi AS (SELECT n, CAST(SUM(CAST(CAST(o AS DOUBLE) *
-        |   (ln(CAST(o AS DOUBLE) * CAST(n AS DOUBLE))
-        |    - ln(CAST(ra AS DOUBLE) * CAST(cb AS DOUBLE)))
-        |  AS DECIMAL(30,15))) AS DOUBLE) AS mi
-        | FROM cells JOIN ra USING (a) JOIN cb USING (b), tot GROUP BY 1),
-        |ha AS (SELECT n, CAST(SUM(CAST(CAST(ra AS DOUBLE) *
-        |   (ln(CAST(n AS DOUBLE)) - ln(CAST(ra AS DOUBLE)))
-        |  AS DECIMAL(30,15))) AS DOUBLE) AS ha FROM ra, tot GROUP BY 1),
-        |hb AS (SELECT n, CAST(SUM(CAST(CAST(cb AS DOUBLE) *
-        |   (ln(CAST(n AS DOUBLE)) - ln(CAST(cb AS DOUBLE)))
-        |  AS DECIMAL(30,15))) AS DOUBLE) AS hb FROM cb, tot GROUP BY 1)
-        |SELECT mi.n,
-        | ROUND(mi.mi / CAST(mi.n AS DOUBLE), 9) AS mi,
-        | ROUND(ha.ha / CAST(mi.n AS DOUBLE), 9) AS h_a,
-        | ROUND(hb.hb / CAST(mi.n AS DOUBLE), 9) AS h_b,
-        | ROUND((mi.mi / CAST(mi.n AS DOUBLE))
-        |   / nullif(sqrt((ha.ha / CAST(mi.n AS DOUBLE))
-        |     * (hb.hb / CAST(mi.n AS DOUBLE))), 0.0), 9) AS nmi
-        |FROM mi JOIN ha USING (n) JOIN hb USING (n)""".stripMargin,
-
-    // ANOVA mirrored: identical decimal ladders and pinned SS trees.
-    "x_anova" ->
-      """WITH base AS (SELECT hour(ts) AS g, value AS v FROM events
-        | WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(value)),
-        |g AS (SELECT g, COUNT(*) AS ng,
-        |  CAST(SUM(CAST(v AS DECIMAL(28,9))) AS DOUBLE) AS sg,
-        |  SUM(CAST(v * v AS DECIMAL(30,15))) AS sq
-        | FROM base GROUP BY 1),
-        |a AS (SELECT CAST(SUM(ng) AS BIGINT) AS n, COUNT(*) AS n_groups,
-        |  CAST(SUM(CAST(sg AS DECIMAL(28,9))) AS DOUBLE) AS s,
-        |  CAST(SUM(sq) AS DOUBLE) AS sv2,
-        |  CAST(SUM(CAST((sg * sg) / CAST(ng AS DOUBLE) AS DECIMAL(30,15)))
-        |    AS DOUBLE) AS bsum
-        | FROM g)
-        |SELECT n, n_groups,
-        | ROUND(bsum - (s * s) / CAST(n AS DOUBLE), 3) AS ss_between,
-        | ROUND(sv2 - (s * s) / CAST(n AS DOUBLE), 3) AS ss_total,
-        | ROUND((bsum - (s * s) / CAST(n AS DOUBLE))
-        |   / nullif(sv2 - (s * s) / CAST(n AS DOUBLE), 0.0), 9) AS eta_sq,
-        | ROUND(((bsum - (s * s) / CAST(n AS DOUBLE))
-        |     / nullif(CAST(n_groups AS DOUBLE) - 1.0, 0.0))
-        |   / nullif(((sv2 - (s * s) / CAST(n AS DOUBLE))
-        |       - (bsum - (s * s) / CAST(n AS DOUBLE)))
-        |     / nullif(CAST(n AS DOUBLE) - CAST(n_groups AS DOUBLE), 0.0),
-        |     0.0), 9) AS f_stat
-        |FROM a""".stripMargin,
-
-    // Hill mirrored: exact cents, the same top-101 total order,
-    // integral-double ln ladder in DECIMAL(30,15).
-    "x_hill" ->
-      """WITH u AS (SELECT o_orderkey AS id,
-        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS u
-        | FROM orders),
-        |t AS (SELECT id, u, row_number() OVER (ORDER BY u DESC, id) AS rn
-        |  FROM u WHERE u > 0 ORDER BY u DESC, id LIMIT 101),
-        |thr AS (SELECT u AS thr FROM t WHERE rn = 101)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS k,
-        | CAST(MAX(thr.thr) AS BIGINT) AS threshold_units,
-        | ROUND(CAST(SUM(CAST(ln(CAST(t.u AS DOUBLE))
-        |     - ln(CAST(thr.thr AS DOUBLE)) AS DECIMAL(30,15))) AS DOUBLE)
-        |   / CAST(COUNT(*) AS DOUBLE), 9) AS hill,
-        | ROUND(CAST(COUNT(*) AS DOUBLE)
-        |   / nullif(CAST(SUM(CAST(ln(CAST(t.u AS DOUBLE))
-        |     - ln(CAST(thr.thr AS DOUBLE)) AS DECIMAL(30,15))) AS DOUBLE),
-        |     0.0), 9) AS alpha
-        |FROM t, thr WHERE t.rn <= 100""".stripMargin,
-
-    // Benford mirrored: exact cents, INTEGER-string leading digit, the
-    // same nine baked literals, pinned-order chi2 terms.
-    "x_benford" ->
-      """WITH u AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-        |    AS BIGINT) AS u
-        |  FROM orders),
-        |d AS (SELECT CAST(substr(CAST(u AS VARCHAR), 1, 1) AS INTEGER)
-        |    AS digit
-        |  FROM u WHERE u > 0),
-        |c AS (SELECT digit, COUNT(*) AS n_obs FROM d GROUP BY 1),
-        |g AS (SELECT digit, CAST(e AS DOUBLE) AS exp_share FROM (VALUES
-        |  (1, 0.3010299956639812), (2, 0.17609125905568124),
-        |  (3, 0.12493873660829992), (4, 0.09691001300805642),
-        |  (5, 0.07918124604762482), (6, 0.06694678963061322),
-        |  (7, 0.05799194697768673), (8, 0.05115252244738129),
-        |  (9, 0.04575749056067514)) v(digit, e)),
-        |t AS (SELECT CAST(SUM(n_obs) AS BIGINT) AS n FROM c)
-        |SELECT g.digit, COALESCE(c.n_obs, 0) AS n_obs,
-        | ROUND(CAST(COALESCE(c.n_obs, 0) AS DOUBLE) / CAST(t.n AS DOUBLE),
-        |   9) AS obs_share,
-        | g.exp_share,
-        | ROUND(((CAST(COALESCE(c.n_obs, 0) AS DOUBLE)
-        |     - CAST(t.n AS DOUBLE) * g.exp_share)
-        |   * (CAST(COALESCE(c.n_obs, 0) AS DOUBLE)
-        |     - CAST(t.n AS DOUBLE) * g.exp_share))
-        |  / (CAST(t.n AS DOUBLE) * g.exp_share), 9) AS chi2_term
-        |FROM g LEFT JOIN c ON c.digit = g.digit, t
-        |ORDER BY g.digit""".stripMargin,
-
-    // Gini mirrored in exact integer cents: DECIMAL(18,2) spend sums
-    // ×100 → BIGINT units, ascending/descending row_number ranks with
-    // the complementary tie-break, rank·unit in DECIMAL(19,0)×(19,0),
-    // pinned-order double close.
-    "x_gini" ->
-      """WITH pk AS (SELECT o_custkey AS k,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
-        |    AS u
-        | FROM orders GROUP BY 1),
-        |r AS (SELECT k, u,
-        |  row_number() OVER (ORDER BY u ASC, k ASC) AS r,
-        |  row_number() OVER (ORDER BY u DESC, k DESC) AS rd FROM pk),
-        |a AS (SELECT COUNT(*) AS n_keys,
-        |  CAST(SUM(u) AS BIGINT) AS total_units,
-        |  CAST(SUM(CAST(r AS DECIMAL(19,0)) * CAST(u AS DECIMAL(19,0)))
-        |    AS DOUBLE) AS s1,
-        |  MAX(u) AS m,
-        |  CAST(SUM(CASE WHEN rd <= 10 THEN u ELSE 0 END) AS BIGINT) AS tn
-        | FROM r)
-        |SELECT n_keys, total_units,
-        | ROUND((2.0 * s1
-        |     - (CAST(n_keys AS DOUBLE) + 1.0) * CAST(total_units AS DOUBLE))
-        |   / (CAST(n_keys AS DOUBLE) * CAST(total_units AS DOUBLE)), 9)
-        |   AS gini,
-        | ROUND(CAST(m AS DOUBLE) / CAST(total_units AS DOUBLE), 9)
-        |   AS top1_share,
-        | ROUND(CAST(tn AS DOUBLE) / CAST(total_units AS DOUBLE), 9)
-        |   AS topn_share
-        |FROM a""".stripMargin,
-
-    // The oracle's global RANK() windows ARE the naive plan the
-    // operator decomposes; 2·avg-rank = 2·RANK() + tie_count − 1.
-    "x_spearman" ->
-      """WITH base AS (
-        | SELECT CAST(epoch_us(ts) AS DOUBLE) AS a, value AS b FROM events
-        | WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(value)),
-        |r AS (SELECT
-        |  2 * RANK() OVER (ORDER BY a)
-        |    + COUNT(*) OVER (PARTITION BY a) - 1 AS r2a,
-        |  2 * RANK() OVER (ORDER BY b)
-        |    + COUNT(*) OVER (PARTITION BY b) - 1 AS r2b
-        | FROM base),
-        |s AS (SELECT COUNT(*) AS n,
-        |  SUM(CAST(r2a - r2b AS HUGEINT) * (r2a - r2b)) AS d2
-        | FROM r)
-        |SELECT n, CAST(d2 AS BIGINT) AS sum_d2_4x,
-        | CAST(2 * CAST(n AS HUGEINT) * (CAST(n AS HUGEINT) * n - 1)
-        |   - 3 * d2 AS BIGINT) AS rho_num,
-        | CAST(2 * CAST(n AS HUGEINT) * (CAST(n AS HUGEINT) * n - 1)
-        |   AS BIGINT) AS rho_den
-        |FROM s""".stripMargin,
-
-    // Same census; HUGEINT cross-products internally, dep narrowed to
-    // BIGINT at the edge (mirrors the engine's big() guard).
-    "x_contingency" ->
-      """WITH cells AS (
-        | SELECT o_orderpriority AS a, o_orderstatus AS b, COUNT(*) AS n_ab
-        | FROM orders
-        | WHERE o_orderpriority IS NOT NULL AND o_orderstatus IS NOT NULL
-        | GROUP BY 1, 2),
-        |ra AS (SELECT a, CAST(SUM(n_ab) AS BIGINT) AS n_a FROM cells GROUP BY a),
-        |cb AS (SELECT b, CAST(SUM(n_ab) AS BIGINT) AS n_b FROM cells GROUP BY b),
-        |tot AS (SELECT CAST(SUM(n_ab) AS BIGINT) AS n_total FROM cells)
-        |SELECT c.a AS o_orderpriority, c.b AS o_orderstatus, c.n_ab,
-        | ra.n_a, cb.n_b, tot.n_total,
-        | CAST(abs(CAST(c.n_ab AS HUGEINT) * tot.n_total
-        |   - CAST(ra.n_a AS HUGEINT) * cb.n_b) AS BIGINT) AS dep
-        |FROM cells c JOIN ra ON c.a = ra.a JOIN cb ON c.b = cb.b, tot
-        |ORDER BY o_orderpriority, o_orderstatus""".stripMargin,
-
-    // The same doubled-rank convention as x_spearman's oracle; HUGEINT
-    // rank sums narrowed to BIGINT at the edge.
-    "x_auc" ->
-      """WITH base AS (
-        | SELECT CAST(n_chars AS DOUBLE) AS s, (lang = 'en') AS y
-        | FROM documents WHERE n_chars IS NOT NULL AND lang IS NOT NULL),
-        |r AS (SELECT y,
-        |  2 * RANK() OVER (ORDER BY s)
-        |    + COUNT(*) OVER (PARTITION BY s) - 1 AS r2
-        | FROM base),
-        |agg AS (SELECT
-        |  CAST(SUM(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-        |  CAST(SUM(CASE WHEN y THEN 0 ELSE 1 END) AS BIGINT) AS n_neg,
-        |  SUM(CASE WHEN y THEN CAST(r2 AS HUGEINT) ELSE 0 END) AS sr2
-        | FROM r)
-        |SELECT n_pos, n_neg, CAST(sr2 AS BIGINT) AS sum_r2_pos,
-        | CAST(sr2 - CAST(n_pos AS HUGEINT) * (n_pos + 1) AS BIGINT)
-        |   AS auc_num,
-        | CAST(2 * CAST(n_pos AS HUGEINT) * n_neg AS BIGINT) AS auc_den
-        |FROM agg""".stripMargin,
-
-    // Same gate, same floor-ppm rationals; NULL rows excluded + counted.
-    "x_confusion" ->
-      """WITH base AS (SELECT (n_chars >= 200) AS p, (lang = 'en') AS y
-        |  FROM documents),
-        |a AS (SELECT
-        |  CAST(SUM(CASE WHEN p IS NOT NULL AND y IS NOT NULL AND p AND y
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-        |  CAST(SUM(CASE WHEN p IS NOT NULL AND y IS NOT NULL AND p AND NOT y
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-        |  CAST(SUM(CASE WHEN p IS NOT NULL AND y IS NOT NULL
-        |    AND NOT p AND NOT y THEN 1 ELSE 0 END) AS BIGINT) AS tn,
-        |  CAST(SUM(CASE WHEN p IS NOT NULL AND y IS NOT NULL AND NOT p AND y
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-        |  CAST(SUM(CASE WHEN p IS NULL OR y IS NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_excluded
-        | FROM base)
-        |SELECT tp, fp, tn, fn, n_excluded,
-        | CASE WHEN tp + fp > 0
-        |      THEN (tp * 1000000) // (tp + fp) END AS precision_ppm,
-        | CASE WHEN tp + fn > 0
-        |      THEN (tp * 1000000) // (tp + fn) END AS recall_ppm,
-        | CASE WHEN 2 * tp + fp + fn > 0
-        |      THEN (2 * tp * 1000000) // (2 * tp + fp + fn) END AS f1_ppm,
-        | CASE WHEN tp + fp + tn + fn > 0
-        |      THEN ((tp + tn) * 1000000) // (tp + fp + tn + fn)
-        | END AS accuracy_ppm
-        |FROM a""".stripMargin,
-
-    // Same fixed binning; lo_edge/binning mirror the engine's DOUBLE
-    // arithmetic op-for-op (0.1 is inexact in binary — a decimal-typed
-    // 0.1·bin would round differently), mean via DECIMAL(28,9) sum.
-    "x_reliability" ->
-      """WITH base AS (
-        | SELECT CAST(n_chars % 100 AS DOUBLE) / 100.0 AS s,
-        |  (lang = 'en') AS y
-        | FROM documents WHERE n_chars IS NOT NULL AND lang IS NOT NULL
-        |   AND abs(CAST(n_chars % 100 AS DOUBLE) / 100.0) < 1e19),
-        |b AS (SELECT CAST(FLOOR(LEAST(CAST(9 AS DOUBLE), GREATEST(
-        |    CAST(0 AS DOUBLE),
-        |    (s - CAST(0.0 AS DOUBLE)) / CAST(0.1 AS DOUBLE)))) AS BIGINT)
-        |    AS bin, s, y
-        | FROM base),
-        |g AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-        |  SUM(CAST(s AS DECIMAL(28,9))) AS ssum
-        | FROM b GROUP BY bin),
-        |grid AS (SELECT CAST(unnest(range(0, 10)) AS BIGINT) AS bin)
-        |SELECT grid.bin,
-        | CAST(0.0 AS DOUBLE) + CAST(grid.bin AS DOUBLE) * CAST(0.1 AS DOUBLE)
-        |   AS lo_edge,
-        | COALESCE(g.n, 0) AS n,
-        | COALESCE(g.n_pos, 0) AS n_pos,
-        | CASE WHEN COALESCE(g.n, 0) > 0
-        |      THEN (COALESCE(g.n_pos, 0) * 1000000) // g.n END AS frac_pos_ppm,
-        | CAST(g.ssum AS DOUBLE) / CAST(g.n AS DOUBLE) AS mean_score
-        |FROM grid LEFT JOIN g ON g.bin = grid.bin
-        |ORDER BY grid.bin""".stripMargin,
-
-    // Per-group mirror of x_auc: the same doubled-rank algebra with
-    // RANK/COUNT windows partitioned by the slice.
-    "x_auc_by_group" ->
-      """WITH base AS (
-        | SELECT lang AS g, CAST(n_chars AS DOUBLE) AS s,
-        |  (doc_id % 2 = 0) AS y
-        | FROM documents WHERE lang IS NOT NULL AND n_chars IS NOT NULL
-        |  AND doc_id IS NOT NULL),
-        |r AS (SELECT g, y,
-        |  2 * RANK() OVER (PARTITION BY g ORDER BY s)
-        |    + COUNT(*) OVER (PARTITION BY g, s) - 1 AS r2
-        | FROM base),
-        |agg AS (SELECT g,
-        |  CAST(SUM(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-        |  CAST(SUM(CASE WHEN y THEN 0 ELSE 1 END) AS BIGINT) AS n_neg,
-        |  SUM(CASE WHEN y THEN CAST(r2 AS HUGEINT) ELSE 0 END) AS sr2
-        | FROM r GROUP BY g)
-        |SELECT g AS lang, n_pos, n_neg, CAST(sr2 AS BIGINT) AS sum_r2_pos,
-        | CAST(sr2 - CAST(n_pos AS HUGEINT) * (n_pos + 1) AS BIGINT)
-        |   AS auc_num,
-        | CAST(2 * CAST(n_pos AS HUGEINT) * n_neg AS BIGINT) AS auc_den
-        |FROM agg ORDER BY lang""".stripMargin,
-
-    // Per-group mirror of x_confusion: same exact counts and floor-ppm
-    // rationals, grouped by the slice.
-    "x_confusion_by_group" ->
-      """WITH base AS (SELECT lang AS g, (n_chars >= 200) AS p,
-        |  (doc_id % 2 = 0) AS y
-        | FROM documents WHERE lang IS NOT NULL),
-        |a AS (SELECT g,
-        |  CAST(SUM(CASE WHEN p IS NOT NULL AND y IS NOT NULL AND p AND y
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-        |  CAST(SUM(CASE WHEN p IS NOT NULL AND y IS NOT NULL AND p AND NOT y
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-        |  CAST(SUM(CASE WHEN p IS NOT NULL AND y IS NOT NULL
-        |    AND NOT p AND NOT y THEN 1 ELSE 0 END) AS BIGINT) AS tn,
-        |  CAST(SUM(CASE WHEN p IS NOT NULL AND y IS NOT NULL AND NOT p AND y
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-        |  CAST(SUM(CASE WHEN p IS NULL OR y IS NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_excluded
-        | FROM base GROUP BY g)
-        |SELECT g AS lang, tp, fp, tn, fn, n_excluded,
-        | CASE WHEN tp + fp > 0
-        |      THEN (tp * 1000000) // (tp + fp) END AS precision_ppm,
-        | CASE WHEN tp + fn > 0
-        |      THEN (tp * 1000000) // (tp + fn) END AS recall_ppm,
-        | CASE WHEN 2 * tp + fp + fn > 0
-        |      THEN (2 * tp * 1000000) // (2 * tp + fp + fn) END AS f1_ppm,
-        | CASE WHEN tp + fp + tn + fn > 0
-        |      THEN ((tp + tn) * 1000000) // (tp + fp + tn + fn)
-        | END AS accuracy_ppm
-        |FROM a ORDER BY lang""".stripMargin,
-
-    // Per-group mirror of x_reliability: same double-space clamp and
-    // floor ppm; the grid is every observed group × all ten bins.
-    "x_reliability_by_group" ->
-      """WITH base AS (
-        | SELECT lang AS g, CAST(n_chars % 100 AS DOUBLE) / 100.0 AS s,
-        |  (doc_id % 2 = 0) AS y
-        | FROM documents WHERE lang IS NOT NULL AND n_chars IS NOT NULL
-        |   AND doc_id IS NOT NULL
-        |   AND abs(CAST(n_chars % 100 AS DOUBLE) / 100.0) < 1e19),
-        |b AS (SELECT g, CAST(FLOOR(LEAST(CAST(9 AS DOUBLE), GREATEST(
-        |    CAST(0 AS DOUBLE),
-        |    (s - CAST(0.0 AS DOUBLE)) / CAST(0.1 AS DOUBLE)))) AS BIGINT)
-        |    AS bin, s, y
-        | FROM base),
-        |gr AS (SELECT g, bin, CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-        |  SUM(CAST(s AS DECIMAL(28,9))) AS ssum
-        | FROM b GROUP BY g, bin),
-        |grid AS (SELECT DISTINCT g, CAST(bb.b AS BIGINT) AS bin
-        |  FROM gr CROSS JOIN (SELECT unnest(range(0, 10)) AS b) bb)
-        |SELECT grid.g AS lang, grid.bin,
-        | CAST(0.0 AS DOUBLE) + CAST(grid.bin AS DOUBLE) * CAST(0.1 AS DOUBLE)
-        |   AS lo_edge,
-        | COALESCE(gr.n, 0) AS n,
-        | COALESCE(gr.n_pos, 0) AS n_pos,
-        | CASE WHEN COALESCE(gr.n, 0) > 0
-        |      THEN (COALESCE(gr.n_pos, 0) * 1000000) // gr.n
-        | END AS frac_pos_ppm,
-        | CAST(gr.ssum AS DOUBLE) / CAST(gr.n AS DOUBLE) AS mean_score
-        |FROM grid LEFT JOIN gr ON gr.g = grid.g AND gr.bin = grid.bin
-        |ORDER BY lang, grid.bin""".stripMargin,
-
-    // The oracle's one global window IS the naive plan the operator
-    // avoids; cuts at 1-based ranks (i·n)//10 + 1, bucket = #cuts ≤ v.
-    "x_qbucket" -> {
-      val inList = (1 to 9).map(i => s"($i * n) // 10 + 1").mkString(", ")
-      s"""WITH elig AS (SELECT value AS v FROM events
-         | WHERE value IS NOT NULL AND NOT isnan(value)),
-         |nn AS (SELECT COUNT(*) AS n FROM elig),
-         |r AS (SELECT v, row_number() OVER (ORDER BY v) AS rn FROM elig),
-         |cuts AS (SELECT r.v FROM r, nn WHERE r.rn IN ($inList))
-         |SELECT e.event_id, e.value,
-         | CASE WHEN e.value IS NOT NULL AND NOT isnan(e.value)
-         |      THEN (SELECT COUNT(*) FROM cuts c WHERE c.v <= e.value)
-         | END AS bucket
-         |FROM events e ORDER BY event_id""".stripMargin
-    },
-
-    // Grouped form of the x_qbucket convention: 1-based ranks
-    // (i·n)//10 + 1 PER GROUP (IN dedupes collapsed ranks), bucket =
-    // #cuts ≤ v within the row's group; docs of a group with no
-    // eligible values keep a NULL bucket via the correlated count
-    // guard.
-    "x_qbucket_by_lang" -> {
-      val inList = (1 to 9).map(i => s"($i * n) // 10 + 1").mkString(", ")
-      s"""WITH elig AS (SELECT lang AS g, CAST(n_chars AS DOUBLE) AS v
-         | FROM documents
-         | WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
-         |r AS (SELECT g, v,
-         |  row_number() OVER (PARTITION BY g ORDER BY v) AS rn,
-         |  COUNT(*) OVER (PARTITION BY g) AS n FROM elig),
-         |cuts AS (SELECT g, v FROM r WHERE rn IN ($inList))
-         |SELECT d.doc_id, d.lang, d.n_chars,
-         | CASE WHEN d.n_chars IS NOT NULL
-         |       AND NOT isnan(CAST(d.n_chars AS DOUBLE))
-         |       AND EXISTS (SELECT 1 FROM cuts c
-         |                   WHERE c.g IS NOT DISTINCT FROM d.lang)
-         |      THEN (SELECT COUNT(*) FROM cuts c
-         |            WHERE c.g IS NOT DISTINCT FROM d.lang
-         |              AND c.v <= CAST(d.n_chars AS DOUBLE))
-         | END AS bucket
-         |FROM documents d ORDER BY doc_id""".stripMargin
-    },
-
-    // Same planted nulls, same lower-median rank selection.
-    "x_impute" ->
-      """WITH base AS (SELECT event_id, event_type,
-        |  CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END AS value
-        | FROM events),
-        |elig AS (SELECT event_type AS g, value AS v FROM base
-        | WHERE value IS NOT NULL AND NOT isnan(value)),
-        |r AS (SELECT g, v, row_number() OVER (PARTITION BY g ORDER BY v) AS rn,
-        |  COUNT(*) OVER (PARTITION BY g) AS n FROM elig),
-        |f AS (SELECT g, v AS fill FROM r WHERE rn = (n + 1) // 2)
-        |SELECT b.event_id, b.event_type, b.value,
-        | CASE WHEN b.value IS NOT NULL AND NOT isnan(b.value) THEN b.value
-        |      ELSE f.fill END AS imputed,
-        | (NOT (b.value IS NOT NULL AND NOT isnan(b.value)))
-        |   AND f.fill IS NOT NULL AS imputed_was_filled
-        |FROM base b LEFT JOIN f ON b.event_type = f.g
-        |ORDER BY event_id""".stripMargin,
-
-    // Same slices; HUGEINT cross-products internally, shift narrowed
-    // to BIGINT at the edge (mirrors the engine's big() guard).
-    "x_token_shift" ->
-      """WITH ta AS (
-        | SELECT unnest(CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END) AS token
-        | FROM documents WHERE doc_id % 3 = 0),
-        |tb AS (
-        | SELECT unnest(CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END) AS token
-        | FROM documents WHERE doc_id % 3 <> 0),
-        |ca AS (SELECT token, COUNT(*) AS c_a FROM ta GROUP BY token),
-        |cb AS (SELECT token, COUNT(*) AS c_b FROM tb GROUP BY token),
-        |na AS (SELECT CAST(COALESCE(SUM(c_a), 0) AS BIGINT) AS n_a FROM ca),
-        |nb AS (SELECT CAST(COALESCE(SUM(c_b), 0) AS BIGINT) AS n_b FROM cb),
-        |j AS (SELECT COALESCE(ca.token, cb.token) AS token,
-        |  COALESCE(c_a, 0) AS c_a, COALESCE(c_b, 0) AS c_b
-        | FROM ca FULL OUTER JOIN cb ON ca.token = cb.token)
-        |SELECT j.token, j.c_a, j.c_b, n_a, n_b,
-        | CAST(abs(CAST(j.c_a AS HUGEINT) * n_b
-        |   - CAST(j.c_b AS HUGEINT) * n_a) AS BIGINT) AS shift
-        |FROM j, na, nb
-        |ORDER BY shift DESC, token LIMIT 100""".stripMargin,
-
-    // Same ranking and relevance universe; metrics as floor-ppm ints.
-    "x_retrieval_eval" ->
-      """WITH ranked AS (
-        | SELECT lang, doc_id,
-        |  row_number() OVER (PARTITION BY lang
-        |    ORDER BY n_chars DESC, doc_id) AS rank
-        | FROM documents),
-        |topk AS (SELECT lang, doc_id, rank FROM ranked WHERE rank <= 10),
-        |rel AS (SELECT DISTINCT lang, doc_id FROM documents
-        | WHERE source = 'src0' AND lang IS NOT NULL AND doc_id IS NOT NULL),
-        |nrel AS (SELECT lang, COUNT(*) AS n_rel FROM rel GROUP BY lang),
-        |h AS (SELECT t.lang, COUNT(*) AS h, MIN(t.rank) AS first_rel_rank
-        | FROM topk t JOIN rel r ON t.lang = r.lang AND t.doc_id = r.doc_id
-        | GROUP BY t.lang)
-        |SELECT n.lang, n.n_rel, COALESCE(h.h, 0) AS hits_at_k,
-        | h.first_rel_rank,
-        | (COALESCE(h.h, 0) * 1000000) // 10 AS precision_ppm,
-        | (COALESCE(h.h, 0) * 1000000) // n.n_rel AS recall_ppm
-        |FROM nrel n LEFT JOIN h ON n.lang = h.lang
-        |ORDER BY n.lang""".stripMargin,
-
-    // Both medians as the element at rank (n+1)//2 — value ties make
-    // the selected VALUE deterministic whatever the tie order.
-    "x_outliers" ->
-      """WITH base AS (SELECT event_id, event_type, value FROM events),
-        |elig AS (SELECT event_type AS g, value AS v FROM base
-        | WHERE value IS NOT NULL AND NOT isnan(value)),
-        |r1 AS (SELECT g, v, row_number() OVER (PARTITION BY g ORDER BY v) AS rn,
-        |  COUNT(*) OVER (PARTITION BY g) AS n FROM elig),
-        |med AS (SELECT g, v AS med FROM r1 WHERE rn = (n + 1) // 2),
-        |d AS (SELECT b.event_type AS g, ABS(b.value - m.med) AS dv
-        | FROM base b JOIN med m ON b.event_type = m.g
-        | WHERE b.value IS NOT NULL AND NOT isnan(b.value)),
-        |r2 AS (SELECT g, dv, row_number() OVER (PARTITION BY g ORDER BY dv) AS rn,
-        |  COUNT(*) OVER (PARTITION BY g) AS n FROM d),
-        |mad AS (SELECT g, dv AS mad FROM r2 WHERE rn = (n + 1) // 2)
-        |SELECT b.event_id, b.event_type, b.value, m.med, md.mad,
-        | CASE WHEN b.value IS NOT NULL AND NOT isnan(b.value)
-        |       AND m.med IS NOT NULL AND md.mad IS NOT NULL
-        |      THEN ABS(b.value - m.med) > 3.0 * md.mad END AS is_outlier
-        |FROM base b LEFT JOIN med m ON b.event_type = m.g
-        | LEFT JOIN mad md ON b.event_type = md.g
-        |ORDER BY event_id""".stripMargin,
-
-    // Same micro-unit scaling, HUGEINT products (int128 exact), finals
-    // narrowed to BIGINT (mirrors the engine's big() guard).
-    "x_trend" ->
-      """WITH p AS (
-        | SELECT user_id,
-        |  CAST((epoch_us(ts) - 1704067200000000) // 3600000000
-        |    AS HUGEINT) AS x,
-        |  CAST(floor(value * 1000000.0) AS HUGEINT) AS y
-        | FROM events
-        | WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(value)
-        |   AND abs(value) <= 9200000000000.0),
-        |a AS (
-        | SELECT user_id, COUNT(*) AS n, SUM(x) AS sx, SUM(y) AS sy,
-        |  SUM(x * y) AS sxy, SUM(x * x) AS sxx
-        | FROM p GROUP BY user_id)
-        |SELECT user_id, n,
-        | CAST(sx AS BIGINT) AS sum_x,
-        | CAST(sy AS BIGINT) AS sum_y_micro,
-        | CAST(sxy AS BIGINT) AS sum_xy_micro,
-        | CAST(sxx AS BIGINT) AS sum_xx,
-        | CAST(n * sxy - sx * sy AS BIGINT) AS slope_num,
-        | CAST(n * sxx - sx * sx AS BIGINT) AS slope_den
-        |FROM a ORDER BY user_id""".stripMargin,
-
-    // One QI census, 1-row summary joined onto the risky groups.
-    "x_kanon" ->
-      """WITH census AS (
-        | SELECT c_nationkey, c_mktsegment, COUNT(*) AS group_n
-        | FROM customer GROUP BY 1, 2),
-        |s AS (SELECT CAST(SUM(group_n) AS BIGINT) AS n_rows,
-        |  COUNT(*) AS n_groups, MIN(group_n) AS anonymity_k FROM census)
-        |SELECT c.c_nationkey, c.c_mktsegment, c.group_n,
-        | s.n_rows, s.n_groups, s.anonymity_k
-        |FROM census c, s WHERE c.group_n < 10
-        |ORDER BY c_nationkey, c_mktsegment""".stripMargin,
-
-    // Same mining universe: distinct (order, part) membership, baskets
-    // over 1000 items excluded everywhere, pair counts from the basket
-    // self-join, confidences as exact floor parts-per-million.
-    "x_basket_pairs" ->
-      """WITH m AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
-        |  FROM lineitem
-        |  WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL),
-        |sized AS (SELECT bk FROM m GROUP BY bk HAVING COUNT(*) <= 1000),
-        |kept AS (SELECT m.bk, m.it FROM m JOIN sized USING (bk)),
-        |itn AS (SELECT it, COUNT(*) AS n FROM kept GROUP BY it),
-        |tot AS (SELECT COUNT(DISTINCT bk) AS n_baskets FROM kept),
-        |p AS (SELECT l.it AS item_a, r.it AS item_b, COUNT(*) AS pair_n
-        | FROM kept l JOIN kept r ON l.bk = r.bk AND l.it < r.it
-        | GROUP BY 1, 2 HAVING COUNT(*) >= 2)
-        |SELECT item_a, item_b, pair_n, a.n AS a_n, b.n AS b_n,
-        | t.n_baskets,
-        | (pair_n * 1000000) // a.n AS conf_ab_ppm,
-        | (pair_n * 1000000) // b.n AS conf_ba_ppm
-        |FROM p JOIN itn a ON p.item_a = a.it
-        | JOIN itn b ON p.item_b = b.it, tot t
-        |ORDER BY item_a, item_b""".stripMargin,
-
-    // KMV sketches are bottom-128 distinct md5 hex values per slice;
-    // union sample = bottom-128 of their union; shared = members of both.
-    "x_corpus_overlap" ->
-      """WITH ska AS (SELECT DISTINCT md5(text) AS h FROM documents
-        |  WHERE doc_id % 3 <> 0 AND text IS NOT NULL ORDER BY h LIMIT 128),
-        |skb AS (SELECT DISTINCT md5(text) AS h FROM documents
-        |  WHERE doc_id % 2 = 0 AND text IS NOT NULL ORDER BY h LIMIT 128),
-        |sku AS (SELECT DISTINCT h FROM
-        |  (SELECT h FROM ska UNION ALL SELECT h FROM skb) u
-        |  ORDER BY h LIMIT 128),
-        |sh AS (SELECT COUNT(*) AS n_shared FROM sku
-        |  WHERE h IN (SELECT h FROM ska) AND h IN (SELECT h FROM skb)),
-        |ku AS (SELECT COUNT(*) AS k_used FROM sku)
-        |SELECT k_used, n_shared,
-        | ROUND(CAST(n_shared AS DOUBLE) / k_used, 9) AS est_jaccard
-        |FROM ku, sh""".stripMargin,
-
-    // The same deterministic change batch, last-writer-wins window and
-    // merge semantics: winning delete drops the id, winning upsert
-    // replaces/inserts the payload, untouched base rows pass through.
-    "x_merge_apply" ->
-      """WITH changes AS (
-        | SELECT doc_id, 1 AS seq, 'upsert' AS op,
-        |   'u1:' || substr(text, 1, 40) AS text, 'xx' AS lang, source,
-        |   n_chars + 3 AS n_chars
-        | FROM documents WHERE doc_id % 7 = 0
-        | UNION ALL
-        | SELECT doc_id, 2, 'upsert', 'u2:' || substr(text, 1, 20), 'yy',
-        |   source, n_chars + 5
-        | FROM documents WHERE doc_id % 14 = 0
-        | UNION ALL
-        | SELECT doc_id, 3, 'delete', NULL, NULL, NULL, NULL
-        | FROM documents WHERE doc_id % 11 = 3
-        | UNION ALL
-        | SELECT doc_id + 1000000, 1, 'upsert',
-        |   'ins:' || substr(text, 1, 10), 'zz', 'synthetic', 14
-        | FROM documents WHERE doc_id % 13 = 1),
-        |latest AS (SELECT * FROM (
-        |  SELECT c.*, row_number() OVER (PARTITION BY doc_id
-        |    ORDER BY seq DESC, op) AS rn FROM changes c) WHERE rn = 1)
-        |SELECT COALESCE(b.doc_id, l.doc_id) AS doc_id,
-        | CASE WHEN l.op IS NOT NULL THEN l.text ELSE b.text END AS text,
-        | CASE WHEN l.op IS NOT NULL THEN l.lang ELSE b.lang END AS lang,
-        | CASE WHEN l.op IS NOT NULL THEN l.source ELSE b.source END AS source,
-        | CASE WHEN l.op IS NOT NULL THEN l.n_chars ELSE b.n_chars END AS n_chars
-        |FROM documents b FULL OUTER JOIN latest l ON b.doc_id = l.doc_id
-        |WHERE l.op IS NULL OR l.op <> 'delete'
-        |ORDER BY doc_id""".stripMargin,
-
-    // The index is an access path, not a transformation: the contract is
-    // that probing through it returns exactly the plain filter's rows.
-    "x_file_skip" ->
-      """SELECT doc_id, lang, n_chars FROM documents
-        |WHERE doc_id IN (3, 77, 123456789) ORDER BY doc_id""".stripMargin,
-
-    // Aho–Corasick counts ≡ replace()-count per phrase (leftmost greedy
-    // non-overlapping, each phrase independent) — the semantics were
-    // CHOSEN so the oracle needs only string builtins.
-    "x_blocklist" ->
-      """WITH p(phrase) AS (VALUES ('table scan'), ('hash join'),
-        |  ('scan merge'), ('merge part'), ('slow')),
-        |h AS (SELECT d.doc_id, p.phrase,
-        |   (length(d.text) - length(replace(d.text, p.phrase, '')))
-        |     // length(p.phrase) AS cnt
-        | FROM documents d CROSS JOIN p WHERE d.text IS NOT NULL)
-        |SELECT phrase, count(*) AS n_docs, CAST(sum(cnt) AS BIGINT) AS n_hits
-        |FROM h WHERE cnt > 0 GROUP BY phrase ORDER BY phrase""".stripMargin,
-
-    // Same phrase counts, summed per doc, gate at ≤ 2 total hits,
-    // survivors rolled up per language. Null text has no hits (COALESCE
-    // mirrors the engine's coalesce(text, '')).
-    "x_blocklist_gate" ->
-      """WITH p(phrase) AS (VALUES ('table scan'), ('hash join'),
-        |  ('scan merge'), ('merge part'), ('slow')),
-        |h AS (SELECT d.doc_id, d.lang,
-        |   CAST(COALESCE(SUM((length(d.text) - length(replace(d.text,
-        |     p.phrase, ''))) // length(p.phrase)), 0) AS BIGINT) AS hits
-        | FROM documents d CROSS JOIN p GROUP BY 1, 2)
-        |SELECT lang, count(*) AS n_docs FROM h WHERE hits <= 2
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // The identical count–min sketch derived independently: positions =
-    // md5('cms:'||r||':'||word) first-12-hex fold mod 512, cells by
-    // group-count, estimates = min over the 4 rows (0 for empty cells).
-    "x_cms_words" ->
-      """WITH tk AS (
-        | SELECT unnest(CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END) AS word
-        | FROM documents),
-        |cells AS (
-        | SELECT CAST(r AS INTEGER) AS r,
-        |  list_reduce(list_transform(range(1, 13), i ->
-        |    CAST(strpos('0123456789abcdef', substr(
-        |      md5('cms:' || CAST(r AS VARCHAR) || ':' || word),
-        |      CAST(i AS INTEGER), 1)) - 1 AS BIGINT)),
-        |    (a, b) -> a * 16 + b) % 512 AS pos,
-        |  word
-        | FROM tk, range(0, 4) t(r)),
-        |sk AS (SELECT r, pos, count(*) AS cnt FROM cells GROUP BY 1, 2),
-        |probes(key) AS (VALUES ('data'), ('join'), ('window'), ('sort'),
-        |  ('nosuchword')),
-        |ppos AS (
-        | SELECT key, CAST(r AS INTEGER) AS r,
-        |  list_reduce(list_transform(range(1, 13), i ->
-        |    CAST(strpos('0123456789abcdef', substr(
-        |      md5('cms:' || CAST(r AS VARCHAR) || ':' || key),
-        |      CAST(i AS INTEGER), 1)) - 1 AS BIGINT)),
-        |    (a, b) -> a * 16 + b) % 512 AS pos
-        | FROM probes, range(0, 4) t(r)),
-        |est AS (SELECT key, MIN(COALESCE(sk.cnt, 0)) AS est
-        | FROM ppos LEFT JOIN sk USING (r, pos) GROUP BY key),
-        |tru AS (SELECT word AS key, count(*) AS true_cnt FROM tk
-        | WHERE word IN ('data', 'join', 'window', 'sort', 'nosuchword')
-        | GROUP BY 1)
-        |SELECT key, est, COALESCE(true_cnt, 0) AS true_cnt,
-        | est >= COALESCE(true_cnt, 0) AS never_under
-        |FROM est LEFT JOIN tru USING (key) ORDER BY key""".stripMargin,
-
-    // Epoch-1 shuffle: position = rank in the (h mod 64, h, id) order,
-    // h = first-12-hex md5 fold of 'shuf:1:'||doc_id — the bucketed
-    // two-level engine plan concatenates to exactly this global order.
-    "x_epoch_shuffle" ->
-      """WITH k AS (SELECT doc_id,
-        |  list_reduce(list_transform(range(1, 13), i ->
-        |    CAST(strpos('0123456789abcdef', substr(
-        |      md5('shuf:1:' || CAST(doc_id AS VARCHAR)),
-        |      CAST(i AS INTEGER), 1)) - 1 AS BIGINT)),
-        |    (a, b) -> a * 16 + b) AS h
-        | FROM documents)
-        |SELECT doc_id,
-        | row_number() OVER (ORDER BY h % 64, h, doc_id) - 1 AS epoch_pos
-        |FROM k ORDER BY doc_id""".stripMargin,
-
-    // The audit's five rules evaluated directly; violation = predicate
-    // false OR null (the engine's null-hostile convention), uniqueness =
-    // non-null rows beyond the first per value.
-    "x_expect" ->
-      """WITH t AS (SELECT count(*) AS n_rows,
-        |  SUM(CASE WHEN NOT COALESCE(doc_id IS NOT NULL, FALSE)
-        |    THEN 1 ELSE 0 END) AS v1,
-        |  SUM(CASE WHEN NOT COALESCE(lang IN ('en','de','es','fr','zh'),
-        |    FALSE) THEN 1 ELSE 0 END) AS v2,
-        |  SUM(CASE WHEN NOT COALESCE(n_chars = length(text), FALSE)
-        |    THEN 1 ELSE 0 END) AS v3,
-        |  SUM(CASE WHEN NOT COALESCE(length(text) > 0, FALSE)
-        |    THEN 1 ELSE 0 END) AS v4,
-        |  count(doc_id) - count(DISTINCT doc_id) AS v5
-        | FROM documents),
-        |rules AS (
-        | SELECT 'doc_id_not_null' AS rule, n_rows,
-        |   CAST(v1 AS BIGINT) AS n_violations FROM t
-        | UNION ALL SELECT 'doc_id_unique', n_rows, CAST(v5 AS BIGINT) FROM t
-        | UNION ALL SELECT 'lang_known', n_rows, CAST(v2 AS BIGINT) FROM t
-        | UNION ALL SELECT 'n_chars_consistent', n_rows,
-        |   CAST(v3 AS BIGINT) FROM t
-        | UNION ALL SELECT 'text_nonempty', n_rows, CAST(v4 AS BIGINT) FROM t)
-        |SELECT rule, n_rows, n_violations, n_violations = 0 AS pass
-        |FROM rules ORDER BY rule""".stripMargin,
-
-    // The same manufactured decomposition through utf8proc's NFC:
-    // chr(769) = U+0301 combining acute, chr(233) = precomposed é.
-    "x_nfc" ->
-      """SELECT doc_id,
-        | length(replace(text, 'e', 'e' || chr(769))) AS n_dec,
-        | length(nfc_normalize(replace(text, 'e', 'e' || chr(769)))) AS n_nfc,
-        | nfc_normalize(replace(text, 'e', 'e' || chr(769)))
-        |   = replace(text, 'e', chr(233)) AS composed_ok
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // Same planted page, same three-stage extraction: the regexes use
-    // only the shared Java/RE2 subset, the density rule is an integer
-    // cross-multiplication, entities unescape in the same fixed order
-    // (&amp; last) — so clean_text matches byte-for-byte.
-    "x_html_extract" ->
-      """WITH h AS (SELECT doc_id,
-        |  '<html><head><title>t</title><style>p{color:red}</style>' ||
-        |  '<script type="text/javascript">var x = "</p>";</script>' ||
-        |  '</head><body><div class="nav"><a href="/">Home</a> ' ||
-        |  '<a href="/a">A</a> <a href="/b">B</a></div>' ||
-        |  '<!-- boilerplate --><p>' || text ||
-        |  '</p><p>Too short.</p><div>Read the fine &amp; friendly ' ||
-        |  'manual &lt;here&gt; with <a href="/more">one link</a> and ' ||
-        |  'plenty of surrounding prose to stay under the density rule.' ||
-        |  '</div><footer><a href="/x">x</a><a href="/y">y</a>' ||
-        |  '</footer></body></html>' AS html
-        | FROM documents),
-        |s1 AS (SELECT doc_id, regexp_replace(html,
-        |  '(?is)<script[^>]*>.*?</script>', ' ', 'g') AS t FROM h),
-        |s2 AS (SELECT doc_id, regexp_replace(t,
-        |  '(?is)<style[^>]*>.*?</style>', ' ', 'g') AS t FROM s1),
-        |s3 AS (SELECT doc_id, regexp_replace(t,
-        |  '(?s)<!--.*?-->', ' ', 'g') AS t FROM s2),
-        |b AS (SELECT doc_id, string_split(regexp_replace(t,
-        |  '(?i)</?(p|div|br|li|ul|ol|h[1-6]|tr|td|th|table|section|article|header|footer|nav|blockquote|pre)[^>]*>',
-        |  chr(10), 'g'), chr(10)) AS blocks FROM s3),
-        |c AS (SELECT doc_id, list_transform(blocks, x -> {
-        |  'txt': trim(regexp_replace(regexp_replace(x, '<[^>]*>', ' ', 'g'),
-        |    '[ \t\r\n]+', ' ', 'g')),
-        |  'lc': len(x) - len(replace(x, '<a ', ''))}) AS cb FROM b),
-        |k AS (SELECT doc_id,
-        |  list_filter(cb, s -> len(s['txt']) >= 30
-        |    AND s['lc'] * 10 <= len(s['txt']) * 3) AS kb,
-        |  len(list_filter(cb, s -> len(s['txt']) > 0)) AS n_blocks
-        | FROM c)
-        |SELECT doc_id,
-        | replace(replace(replace(replace(replace(replace(
-        |   array_to_string(list_transform(kb, s -> s['txt']), chr(10)),
-        |   '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-        |   '&nbsp;', ' '), '&amp;', '&') AS clean_text,
-        | CAST(n_blocks AS BIGINT) AS n_blocks,
-        | CAST(len(kb) AS BIGINT) AS n_blocks_kept,
-        | len(kb) >= 1 AS kept
-        |FROM k ORDER BY doc_id""".stripMargin,
-
-    // PMI mirrored as exact integers: the output is only counts, and
-    // the ranking rational c_ab·N/(c_a·c_b) uses double multiply/divide
-    // (correctly rounded by IEEE-754 — identical bits on any engine,
-    // which ln from a platform libm is NOT guaranteed to be).
-    "x_pmi" ->
-      """WITH tk AS (SELECT regexp_split_to_array(TRIM(text), '\s+') AS t
-        |  FROM documents WHERE LENGTH(TRIM(text)) > 0),
-        |big AS (SELECT unnest(list_transform(range(1, len(t)), i ->
-        |   {'w1': t[CAST(i AS INTEGER)], 'w2': t[CAST(i AS INTEGER) + 1]}))
-        |   AS bg
-        | FROM tk),
-        |bp AS (SELECT bg.w1 AS w1, bg.w2 AS w2 FROM big),
-        |bc AS (SELECT w1, w2, count(*) AS c_ab FROM bp GROUP BY 1, 2
-        | HAVING count(*) >= 5),
-        |ucc AS (SELECT w, count(*) AS c FROM
-        | (SELECT unnest(t) AS w FROM tk) GROUP BY 1),
-        |nb AS (SELECT count(*) AS nbig FROM bp)
-        |SELECT w1, w2, c_ab, ca.c AS c_a, cb.c AS c_b, nbig
-        |FROM bc JOIN ucc ca ON ca.w = bc.w1 JOIN ucc cb ON cb.w = bc.w2, nb
-        |ORDER BY (CAST(c_ab AS DOUBLE) * CAST(nbig AS DOUBLE))
-        |   / (CAST(ca.c AS DOUBLE) * CAST(cb.c AS DOUBLE)) DESC, w1, w2
-        |LIMIT 30""".stripMargin,
-
-    // Chi-square mirrored with marginals from the bigram table itself;
-    // O's are exact BIGINT arithmetic cast to double, the chi2
-    // expression spells the identical pinned association order.
-    "x_chi2_colloc" ->
-      raw"""WITH tk AS (SELECT regexp_split_to_array(TRIM(text), '\s+') AS t
-        |  FROM documents WHERE LENGTH(TRIM(text)) > 0),
-        |big AS (SELECT unnest(list_transform(range(1, len(t)), i ->
-        |   {'w1': t[CAST(i AS INTEGER)], 'w2': t[CAST(i AS INTEGER) + 1]}))
-        |   AS bg
-        | FROM tk),
-        |bc AS (SELECT bg.w1 AS w1, bg.w2 AS w2, COUNT(*) AS c_ab
-        | FROM big GROUP BY 1, 2),
-        |r AS (SELECT w1, CAST(SUM(c_ab) AS BIGINT) AS r1 FROM bc GROUP BY 1),
-        |c AS (SELECT w2, CAST(SUM(c_ab) AS BIGINT) AS c1 FROM bc GROUP BY 1),
-        |n AS (SELECT CAST(SUM(c_ab) AS BIGINT) AS nbig FROM bc),
-        |j AS (SELECT bc.w1, bc.w2, bc.c_ab, r.r1, c.c1, n.nbig,
-        |  CAST(bc.c_ab AS DOUBLE)
-        |      * CAST(n.nbig - r.r1 - c.c1 + bc.c_ab AS DOUBLE)
-        |    - CAST(r.r1 - bc.c_ab AS DOUBLE)
-        |      * CAST(c.c1 - bc.c_ab AS DOUBLE) AS d
-        | FROM bc JOIN r ON r.w1 = bc.w1 JOIN c ON c.w2 = bc.w2, n
-        | WHERE bc.c_ab >= 5)
-        |SELECT w1, w2, c_ab, r1, c1, nbig,
-        | ROUND((CAST(nbig AS DOUBLE) * (d * d))
-        |   / ((CAST(r1 AS DOUBLE) * CAST(c1 AS DOUBLE))
-        |     * (CAST(nbig - r1 AS DOUBLE) * CAST(nbig - c1 AS DOUBLE))), 9)
-        |   AS chi2
-        |FROM j ORDER BY chi2 DESC, w1, w2 LIMIT 30""".stripMargin,
-
-    // Soundex mirrored step-for-step: same translate table (9 = h/w
-    // marker), the same single greedy d[d9]*d merge pass per digit,
-    // run collapse, head-code drop, then 9/0 removal — all in the
-    // shared regex subset (no backrefs), every regexp_replace with
-    // 'g'.
-    "x_soundex" -> {
-      val merged = (1 to 6).foldLeft("d0")((a, d) =>
-        s"regexp_replace($a, '$d[${d}9]*$d', '$d$d', 'g')")
-      val collapsed = (1 to 6).foldLeft(merged)((a, d) =>
-        s"regexp_replace($a, '$d{2,}', '$d', 'g')")
-      val digits = s"regexp_replace(regexp_replace(regexp_replace(" +
-        s"$collapsed, '^.', '', 'g'), '9', '', 'g'), '0', '', 'g')"
-      raw"""WITH docs AS (
-        | SELECT text FROM documents
-        | UNION ALL SELECT 'Robert Rupert robert Ashcraft Ashcroft'
-        | UNION ALL SELECT 'Smith Smyth Smithe Honeyman Honeymann'
-        | UNION ALL SELECT 'Tymczak Tomczak Pfister Phister'),
-        |tc AS (SELECT t, COUNT(*) AS c FROM (
-        | SELECT unnest(CASE WHEN text IS NULL OR LENGTH(TRIM(text)) = 0
-        |   THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END) AS t
-        | FROM docs) GROUP BY 1),
-        |s AS (SELECT t, c,
-        |  upper(regexp_replace(t, '[^A-Za-z]', '', 'g')) AS up FROM tc),
-        |d AS (SELECT t, c, up, translate(up,
-        |  'ABCDEFGHIJKLMNOPQRSTUVWXYZ',
-        |  '01230129022455012623019202') AS d0 FROM s),
-        |x AS (SELECT t, c, up, $digits AS dg FROM d),
-        |sx AS (SELECT t, c, CASE WHEN length(up) = 0 THEN NULL
-        |  ELSE substr(up, 1, 1) || substr(rpad(dg, 3, '0'), 1, 3)
-        |  END AS sdx FROM x)
-        |SELECT sdx, COUNT(*) AS n_spellings,
-        | CAST(SUM(c) AS BIGINT) AS n_tokens,
-        | MIN(t) AS spelling_min, MAX(t) AS spelling_max
-        |FROM sx WHERE sdx IS NOT NULL GROUP BY 1
-        |HAVING COUNT(*) >= 2
-        |ORDER BY n_tokens DESC, sdx LIMIT 40""".stripMargin
-    },
-
-    // Code census mirrored: same five RE2-subset patterns, chr(10)
-    // newlines in the planted docs (DuckDB literals keep backslashes).
-    "x_code_prose" ->
-      raw"""WITH docs AS (
-        | SELECT doc_id, text FROM documents
-        | UNION ALL SELECT 90000001, 'def main():' || chr(10)
-        |   || '    return compute(x);' || chr(10) || '    let y = 1'
-        | UNION ALL SELECT 90000002,
-        |   'public static void run() { camelCase = fooBar(1); }'),
-        |f AS (SELECT doc_id, COALESCE(text, '') AS t FROM docs)
-        |SELECT doc_id,
-        | CASE WHEN LENGTH(t) = 0 THEN 0
-        |   ELSE CAST(len(string_split(t, chr(10))) AS BIGINT) END AS n_lines,
-        | CAST(len(regexp_extract_all(t, '(?m)^[ \t]{2,}\S'))
-        |   AS BIGINT) AS n_indent,
-        | CAST(len(regexp_extract_all(t, '[{}();=\[\]]'))
-        |   AS BIGINT) AS n_braces,
-        | CAST(len(regexp_extract_all(t,
-        |   '\b(def|class|function|import|return|public|static|void|const|let)\b'))
-        |   AS BIGINT) AS n_kw,
-        | CAST(len(regexp_extract_all(t, '[a-z][A-Z]')) AS BIGINT) AS n_camel,
-        | CAST(3 * len(regexp_extract_all(t,
-        |    '\b(def|class|function|import|return|public|static|void|const|let)\b'))
-        |  + 2 * len(regexp_extract_all(t, '(?m)^[ \t]{2,}\S'))
-        |  + len(regexp_extract_all(t, '[{}();=\[\]]'))
-        |  + len(regexp_extract_all(t, '[a-z][A-Z]')) AS BIGINT) AS code_score,
-        | (3 * len(regexp_extract_all(t,
-        |    '\b(def|class|function|import|return|public|static|void|const|let)\b'))
-        |  + 2 * len(regexp_extract_all(t, '(?m)^[ \t]{2,}\S'))
-        |  + len(regexp_extract_all(t, '[{}();=\[\]]'))
-        |  + len(regexp_extract_all(t, '[a-z][A-Z]')) >= 8) AS is_codey
-        |FROM f ORDER BY doc_id""".stripMargin,
-
-    // RAKE mirrored list-for-list: chr(1) break markers, string_split
-    // phrase re-split, identical stoplist, deg/freq divides and the
-    // DECIMAL(30,15) phrase sum.
-    "x_rake" ->
-      raw"""WITH tk AS (SELECT CASE
-        |   WHEN text IS NULL OR LENGTH(TRIM(lower(text))) = 0
-        |   THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(lower(text)), '\s+') END AS tok
-        | FROM documents),
-        |mk AS (SELECT list_transform(tok, t -> CASE
-        |   WHEN t IN ('the','a','of','and','to','in','is','for','on','with')
-        |     OR NOT regexp_matches(t, '[a-z0-9]') THEN chr(1) ELSE t END)
-        |   AS m FROM tk),
-        |ph AS (SELECT trim(p) AS phrase FROM (
-        |  SELECT unnest(string_split(array_to_string(m, ' '), chr(1))) AS p
-        |  FROM mk)
-        | WHERE LENGTH(trim(p)) > 0),
-        |pt AS (SELECT phrase, COUNT(*) AS n_occur,
-        |  string_split(phrase, ' ') AS ws
-        | FROM ph GROUP BY 1 HAVING len(string_split(phrase, ' ')) <= 8),
-        |pw AS (SELECT phrase, n_occur, CAST(len(ws) AS BIGINT) AS l,
-        |  unnest(ws) AS w FROM pt),
-        |ws AS (SELECT w, CAST(SUM(n_occur) AS BIGINT) AS freq,
-        |  CAST(SUM(n_occur * l) AS BIGINT) AS deg FROM pw GROUP BY 1)
-        |SELECT pw.phrase, pw.n_occur, pw.l AS n_words,
-        | ROUND(CAST(SUM(CAST(CAST(ws.deg AS DOUBLE) / CAST(ws.freq AS DOUBLE)
-        |   AS DECIMAL(30,15))) AS DOUBLE), 9) AS score
-        |FROM pw JOIN ws ON ws.w = pw.w
-        |GROUP BY pw.phrase, pw.n_occur, pw.l
-        |ORDER BY score DESC, phrase LIMIT 30""".stripMargin,
-
-    // Burstiness mirrored: exact integer term stats, two pinned-order
-    // double ratios (HUGEINT sums cast back to BIGINT per convention).
-    "x_burstiness" ->
-      raw"""WITH dt AS (SELECT doc_id, t, COUNT(*) AS c FROM (
-        |  SELECT doc_id, unnest(CASE WHEN text IS NULL
-        |    OR LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |    ELSE regexp_split_to_array(TRIM(text), '\s+') END) AS t
-        |  FROM documents) GROUP BY 1, 2),
-        |nd AS (SELECT COUNT(*) AS n_docs FROM documents),
-        |term AS (SELECT t, CAST(SUM(c) AS BIGINT) AS cf, COUNT(*) AS df,
-        |  CAST(SUM(c * c) AS BIGINT) AS sum_c2 FROM dt GROUP BY 1
-        |  HAVING COUNT(*) >= 5)
-        |SELECT t AS token, cf, df, sum_c2, n_docs,
-        | ROUND(CAST(cf AS DOUBLE) / CAST(df AS DOUBLE), 9) AS burst,
-        | ROUND(((CAST(sum_c2 AS DOUBLE)
-        |     - (CAST(cf AS DOUBLE) * CAST(cf AS DOUBLE))
-        |       / CAST(n_docs AS DOUBLE))
-        |    / (CAST(n_docs AS DOUBLE) - 1.0))
-        |   / (CAST(cf AS DOUBLE) / CAST(n_docs AS DOUBLE)), 9) AS vmr
-        |FROM term, nd ORDER BY burst DESC, token LIMIT 30""".stripMargin,
-
-    // Jelinek-Mercer mirrored: the A/B integers assembled in BIGINT
-    // arithmetic (3*c12*(N+V) + 1*c1*(c2+1) over 4*c1*(N+V)), every ln
-    // input integral, per-doc sums in DECIMAL(30,15).
-    "x_jm_nll" ->
-      raw"""WITH toks AS (
-        | SELECT doc_id, CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |tr AS (SELECT * FROM toks WHERE doc_id % 10 < 8),
-        |c1 AS (SELECT t, COUNT(*) AS c1
-        |  FROM (SELECT unnest(tok) AS t FROM tr) GROUP BY 1),
-        |nv AS (SELECT CAST(SUM(c1) AS BIGINT) AS N,
-        |  COUNT(*) AS V FROM c1),
-        |c2 AS (SELECT w1, w2, COUNT(*) AS c2 FROM (
-        |  SELECT unnest(tok[1:len(tok)-1]) AS w1,
-        |         unnest(tok[2:len(tok)]) AS w2 FROM tr) GROUP BY 1, 2),
-        |tf AS (SELECT doc_id, w1, w2, COUNT(*) AS tf FROM (
-        |  SELECT doc_id, unnest(tok[1:len(tok)-1]) AS w1,
-        |         unnest(tok[2:len(tok)]) AS w2 FROM toks) GROUP BY 1, 2, 3),
-        |sc AS (
-        | SELECT tf.doc_id, tf.tf, CAST(tf.tf AS DOUBLE) * (
-        |   CASE WHEN p.c1 IS NOT NULL
-        |     THEN ln(CAST(4 * p.c1 * (nv.N + nv.V) AS DOUBLE))
-        |        - ln(CAST(3 * COALESCE(c2.c2, 0) * (nv.N + nv.V)
-        |            + 1 * p.c1 * (COALESCE(q.c1, 0) + 1) AS DOUBLE))
-        |     ELSE ln(CAST(nv.N + nv.V AS DOUBLE))
-        |        - ln(CAST(COALESCE(q.c1, 0) + 1 AS DOUBLE))
-        |   END) AS nll
-        | FROM tf LEFT JOIN c2 ON tf.w1 = c2.w1 AND tf.w2 = c2.w2
-        |   LEFT JOIN c1 p ON tf.w1 = p.t
-        |   LEFT JOIN c1 q ON tf.w2 = q.t
-        |   CROSS JOIN nv),
-        |per AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_bigrams,
-        |  CAST(SUM(CAST(nll AS DECIMAL(30,15))) AS DOUBLE) AS s
-        | FROM sc GROUP BY 1)
-        |SELECT d.doc_id, COALESCE(per.n_bigrams, 0) AS n_bigrams,
-        | ROUND(per.s / CAST(per.n_bigrams AS DOUBLE), 9) AS avg_nll
-        |FROM documents d LEFT JOIN per USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    // The audio chain mirrored end-to-end over the (ASCII) text bytes:
-    // 16-bit LE samples from byte pairs, odd-weighted stripe sums in
-    // floor-mod 65536 (DuckDB's % truncates, hence the +65536 fold),
-    // ×131 spread, mid-range threshold, 4-band pigeonhole join, exact
-    // Hamming ≤ 3.
-    "x_audio_neardup" ->
-      """WITH docs AS (
-        | SELECT doc_id, text FROM documents WHERE text IS NOT NULL
-        | UNION ALL
-        | SELECT doc_id + 40000000, '~!' || substr(text, 3) FROM documents
-        | WHERE text IS NOT NULL AND doc_id % 7 = 0 AND length(text) >= 2),
-        |sm AS (SELECT doc_id, unnest(range(0, length(text) // 2)) AS k, text
-        |       FROM docs),
-        |ss AS (SELECT doc_id, k,
-        |        CASE WHEN raw >= 32768 THEN raw - 65536 ELSE raw END AS s
-        |       FROM (SELECT doc_id, k,
-        |         ascii(substr(text, CAST(2 * k + 1 AS INTEGER), 1))
-        |         + 256 * ascii(substr(text, CAST(2 * k + 2 AS INTEGER), 1)) AS raw
-        |        FROM sm)),
-        |bv AS (SELECT doc_id, k % 64 AS c,
-        |        s * (2 * (k // 64) + 1) AS v FROM ss),
-        |gsum AS (SELECT doc_id, c, SUM(v) AS sv FROM bv GROUP BY 1, 2),
-        |dn AS (SELECT doc_id, length(text) // 2 AS ns FROM docs),
-        |allc AS (SELECT d.doc_id, t.c FROM docs d
-        |         CROSS JOIN (SELECT unnest(range(0, 64)) AS c) t),
-        |grid AS (SELECT a.doc_id, a.c,
-        |          ((((COALESCE(g.sv, 0) + d.ns * (a.c + 1)) % 65536)
-        |            + 65536) % 65536 * 131) % 65536 AS b
-        |         FROM allc a JOIN dn d ON d.doc_id = a.doc_id
-        |         LEFT JOIN gsum g
-        |         ON g.doc_id = a.doc_id AND g.c = a.c),
-        |bits AS (SELECT doc_id,
-        |  string_agg(CASE WHEN b > 32767 THEN '1' ELSE '0' END, '' ORDER BY c) AS bs
-        | FROM grid GROUP BY 1),
-        |bk AS (SELECT doc_id, bs, b, substr(bs, CAST(1 + 16 * b AS INTEGER), 16) AS key
-        |       FROM bits CROSS JOIN (SELECT unnest(range(0, 4)) AS b) t),
-        |cand AS (SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b,
-        |          x.bs AS ba, y.bs AS bb
-        |         FROM bk x JOIN bk y
-        |         ON x.b = y.b AND x.key = y.key AND x.doc_id < y.doc_id),
-        |ham AS (SELECT id_a, id_b,
-        |  CAST(list_sum(list_transform(range(1, 65),
-        |    i -> CASE WHEN substr(ba, CAST(i AS INTEGER), 1)
-        |              <> substr(bb, CAST(i AS INTEGER), 1)
-        |         THEN 1 ELSE 0 END)) AS BIGINT) AS hamming
-        | FROM cand)
-        |SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // Per-window sample chain mirrored: window w = k DIV 32, in-window
-    // band c = k MOD 32 (single-sample stripes, weight 1), the same
-    // floor-mod-65536 ×131 spread and mid-range bit, DISTINCT per-row
-    // signatures, equi-join containment count ≥ 2.
-    "x_audio_windows" ->
-      """WITH docs AS (
-        | SELECT doc_id, text FROM documents WHERE text IS NOT NULL
-        | UNION ALL
-        | SELECT doc_id + 70000000, '~!' || substr(text, 3) FROM documents
-        | WHERE text IS NOT NULL AND doc_id % 13 = 0 AND length(text) >= 200),
-        |sm AS (SELECT doc_id, unnest(range(0, length(text) // 2)) AS k, text
-        |       FROM docs),
-        |ss AS (SELECT doc_id, k,
-        |        CASE WHEN raw >= 32768 THEN raw - 65536 ELSE raw END AS s
-        |       FROM (SELECT doc_id, k,
-        |         ascii(substr(text, CAST(2 * k + 1 AS INTEGER), 1))
-        |         + 256 * ascii(substr(text, CAST(2 * k + 2 AS INTEGER), 1)) AS raw
-        |        FROM sm)),
-        |gs AS (SELECT doc_id, k // 32 AS w, k % 32 AS c, s AS sv FROM ss),
-        |wr AS (SELECT doc_id, w,
-        |        LEAST(32, (length(text) // 2) - 32 * w) AS wn
-        |       FROM (SELECT doc_id, text,
-        |         unnest(range(0, ((length(text) // 2) + 31) // 32)) AS w
-        |        FROM docs)),
-        |allc AS (SELECT r.doc_id, r.w, r.wn, t.c FROM wr r
-        |         CROSS JOIN (SELECT unnest(range(0, 64)) AS c) t),
-        |grid AS (SELECT a.doc_id, a.w, a.c,
-        |          ((((COALESCE(g.sv, 0) + a.wn * (a.c + 1)) % 65536)
-        |            + 65536) % 65536 * 131) % 65536 AS b
-        |         FROM allc a LEFT JOIN gs g
-        |         ON g.doc_id = a.doc_id AND g.w = a.w AND g.c = a.c),
-        |bits AS (SELECT doc_id, w,
-        |  string_agg(CASE WHEN b > 32767 THEN '1' ELSE '0' END, '' ORDER BY c) AS bs
-        | FROM grid GROUP BY 1, 2),
-        |sig AS (SELECT DISTINCT doc_id, bs FROM bits),
-        |pairs AS (SELECT x.doc_id AS id_a, y.doc_id AS id_b,
-        |  COUNT(*) AS shared_windows
-        | FROM sig x JOIN sig y ON x.bs = y.bs AND x.doc_id < y.doc_id
-        | GROUP BY 1, 2)
-        |SELECT id_a, id_b, shared_windows FROM pairs WHERE shared_windows >= 2
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // Text EQUALITY stands in for the engine's 128-bit fingerprint
-    // compare (identical verdicts modulo a 2^-128 md5 collision);
-    // IS DISTINCT FROM mirrors the engine's null-safe compare — a
-    // null↔non-null transition is a change on BOTH sides by contract.
-    "x_snapshot_diff" ->
-      """WITH o AS (
-        | SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
-        |nw AS (
-        | SELECT doc_id,
-        |  CASE WHEN doc_id % 21 = 0 THEN text || ' v2' ELSE text END AS text
-        | FROM documents WHERE doc_id % 3 = 0 AND doc_id % 30 <> 0
-        | UNION ALL
-        | SELECT doc_id + 60000000, text FROM documents
-        | WHERE doc_id % 3 = 0 AND doc_id % 33 = 0)
-        |SELECT COALESCE(o.doc_id, nw.doc_id) AS doc_id,
-        | CASE WHEN o.doc_id IS NULL THEN 'added'
-        |      WHEN nw.doc_id IS NULL THEN 'removed'
-        |      ELSE 'changed' END AS status
-        |FROM o FULL JOIN nw ON o.doc_id = nw.doc_id
-        |WHERE o.doc_id IS NULL OR nw.doc_id IS NULL
-        |   OR o.text IS DISTINCT FROM nw.text
-        |ORDER BY doc_id""".stripMargin,
-
-    // Index-side stats (df, N, norms) come from the %3==0 snapshot ONLY;
-    // query grams without an index idf drop (they can't match postings).
-    // The doc side is pre-normalized (wn = w/nrm) exactly as the engine
-    // stores it, so the probe's cosine is dot/qnrm alone.
-    "x_tfidf_probe" ->
-      """WITH toks AS (
-        | SELECT doc_id, CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |g AS (
-        | SELECT doc_id, unnest(list_transform(range(1, len(tok)),
-        |   i -> list_extract(tok, i) || ' ' || list_extract(tok, i + 1))) AS gram
-        | FROM toks),
-        |itf AS (SELECT doc_id, gram, COUNT(*) AS tf FROM g
-        |        WHERE doc_id % 3 = 0 GROUP BY 1, 2),
-        |inn AS (SELECT COUNT(*) AS n FROM documents WHERE doc_id % 3 = 0),
-        |dict AS (
-        | SELECT gram, LN(CAST(n AS DOUBLE)) - LN(CAST(df AS DOUBLE)) AS idf
-        | FROM (SELECT gram, COUNT(*) AS df FROM itf GROUP BY 1) CROSS JOIN inn
-        | WHERE CAST(df AS DOUBLE) <= 0.5 * CAST(n AS DOUBLE)),
-        |iw AS (SELECT doc_id, gram, CAST(tf AS DOUBLE) * idf AS w
-        |       FROM itf JOIN dict USING (gram)),
-        |inorm AS (SELECT doc_id,
-        |  SQRT(CAST(SUM(CAST(w * w AS DECIMAL(30,15))) AS DOUBLE)) AS nrm
-        | FROM iw GROUP BY 1),
-        |post AS (SELECT doc_id, gram, w / nrm AS wn
-        |         FROM iw JOIN inorm USING (doc_id)),
-        |qtf AS (SELECT doc_id AS query_id, gram, COUNT(*) AS tf FROM g
-        |        WHERE doc_id % 3 <> 0 AND doc_id % 97 = 1 GROUP BY 1, 2),
-        |qwt AS (SELECT query_id, gram, CAST(tf AS DOUBLE) * idf AS qw
-        |        FROM qtf JOIN dict USING (gram)),
-        |qn AS (SELECT query_id,
-        |  SQRT(CAST(SUM(CAST(qw * qw AS DECIMAL(30,15))) AS DOUBLE)) AS qnrm
-        | FROM qwt GROUP BY 1),
-        |dots AS (SELECT query_id, p.doc_id,
-        |  CAST(SUM(CAST(qw * wn AS DECIMAL(30,15))) AS DOUBLE) AS dot
-        | FROM post p JOIN qwt q USING (gram) GROUP BY 1, 2),
-        |rk AS (
-        | SELECT query_id, doc_id, cos,
-        |  CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        |    ORDER BY cos DESC, doc_id) AS BIGINT) AS rank
-        | FROM (SELECT d.query_id, d.doc_id, ROUND(dot / qn.qnrm, 9) AS cos
-        |       FROM dots d JOIN qn ON qn.query_id = d.query_id))
-        |SELECT query_id, doc_id, cos, rank FROM rk WHERE rank <= 10
-        |ORDER BY query_id, rank""".stripMargin,
-
-    // The frozen-idf append replayed: dict (n, df, idf) comes from the
-    // indexed slice ONLY; the arrival batch's postings weight by that
-    // snapshot idf (grams outside the dict drop), normalize by their own
-    // norm, and union onto the stored postings — exactly what the engine
-    // persisted via parquet append.
-    "x_tfidf_append" ->
-      """WITH toks AS (
-        | SELECT doc_id, CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |g AS (
-        | SELECT doc_id, unnest(list_transform(range(1, len(tok)),
-        |   i -> list_extract(tok, i) || ' ' || list_extract(tok, i + 1))) AS gram
-        | FROM toks),
-        |itf AS (SELECT doc_id, gram, COUNT(*) AS tf FROM g
-        |        WHERE doc_id % 3 = 0 GROUP BY 1, 2),
-        |inn AS (SELECT COUNT(*) AS n FROM documents WHERE doc_id % 3 = 0),
-        |dict AS (
-        | SELECT gram, LN(CAST(n AS DOUBLE)) - LN(CAST(df AS DOUBLE)) AS idf
-        | FROM (SELECT gram, COUNT(*) AS df FROM itf GROUP BY 1) CROSS JOIN inn
-        | WHERE CAST(df AS DOUBLE) <= 0.5 * CAST(n AS DOUBLE)),
-        |iw AS (SELECT doc_id, gram, CAST(tf AS DOUBLE) * idf AS w
-        |       FROM itf JOIN dict USING (gram)),
-        |inorm AS (SELECT doc_id,
-        |  SQRT(CAST(SUM(CAST(w * w AS DECIMAL(30,15))) AS DOUBLE)) AS nrm
-        | FROM iw GROUP BY 1),
-        |atf AS (SELECT doc_id, gram, COUNT(*) AS tf FROM g
-        |        WHERE doc_id % 3 <> 0 AND doc_id % 7 = 2 GROUP BY 1, 2),
-        |aw AS (SELECT doc_id, gram, CAST(tf AS DOUBLE) * idf AS w
-        |       FROM atf JOIN dict USING (gram)),
-        |anorm AS (SELECT doc_id,
-        |  SQRT(CAST(SUM(CAST(w * w AS DECIMAL(30,15))) AS DOUBLE)) AS nrm
-        | FROM aw GROUP BY 1),
-        |post AS (
-        | SELECT doc_id, gram, w / nrm AS wn FROM iw JOIN inorm USING (doc_id)
-        | UNION ALL
-        | SELECT doc_id, gram, w / nrm AS wn FROM aw JOIN anorm USING (doc_id)),
-        |qtf AS (SELECT doc_id AS query_id, gram, COUNT(*) AS tf FROM g
-        |        WHERE doc_id % 3 <> 0 AND doc_id % 7 <> 2 AND doc_id % 97 = 1
-        |        GROUP BY 1, 2),
-        |qwt AS (SELECT query_id, gram, CAST(tf AS DOUBLE) * idf AS qw
-        |        FROM qtf JOIN dict USING (gram)),
-        |qn AS (SELECT query_id,
-        |  SQRT(CAST(SUM(CAST(qw * qw AS DECIMAL(30,15))) AS DOUBLE)) AS qnrm
-        | FROM qwt GROUP BY 1),
-        |dots AS (SELECT query_id, p.doc_id,
-        |  CAST(SUM(CAST(qw * wn AS DECIMAL(30,15))) AS DOUBLE) AS dot
-        | FROM post p JOIN qwt q USING (gram) GROUP BY 1, 2),
-        |rk AS (
-        | SELECT query_id, doc_id, cos,
-        |  CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        |    ORDER BY cos DESC, doc_id) AS BIGINT) AS rank
-        | FROM (SELECT d.query_id, d.doc_id, ROUND(dot / qn.qnrm, 9) AS cos
-        |       FROM dots d JOIN qn ON qn.query_id = d.query_id))
-        |SELECT query_id, doc_id, cos, rank FROM rk WHERE rank <= 10
-        |ORDER BY query_id, rank""".stripMargin,
-
-    // Fusion itself is pure rank arithmetic: each contribution is one
-    // double divide of integral doubles; contributions accumulate in
-    // DECIMAL (the engine's discipline) so union order cannot flip bits.
-    "x_rrf_fuse" ->
-      s"""WITH $tfidfBaseCte,
-        |${tfidfRkCte(2, "g2")},
-        |${tfidfRkCte(3, "g3")},
-        |u AS (
-        | SELECT query_id, doc_id,
-        |  CAST(1 AS DOUBLE) / (CAST(60 AS DOUBLE) + CAST(rank AS DOUBLE)) AS contrib
-        | FROM g2rk WHERE rank <= 10
-        | UNION ALL
-        | SELECT query_id, doc_id,
-        |  CAST(1 AS DOUBLE) / (CAST(60 AS DOUBLE) + CAST(rank AS DOUBLE)) AS contrib
-        | FROM g3rk WHERE rank <= 10),
-        |f AS (SELECT query_id, doc_id,
-        |  CAST(SUM(CAST(contrib AS DECIMAL(30,15))) AS DOUBLE) AS rrf
-        | FROM u GROUP BY 1, 2),
-        |frk AS (SELECT query_id, doc_id, rrf,
-        |  CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        |    ORDER BY rrf DESC, doc_id) AS BIGINT) AS rank FROM f)
-        |SELECT query_id, doc_id, rrf, rank FROM frk WHERE rank <= 10
-        |ORDER BY query_id, rank""".stripMargin,
-
-    // Groups by the token STRING where the engine groups by xxhash64 —
-    // identical counts absent a 64-bit collision. ln only ever sees
-    // integer-valued doubles (counts), mirroring the engine.
-    "x_perplexity" ->
-      """WITH toks AS (
-        | SELECT doc_id, CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |inst AS (SELECT doc_id, unnest(tok) AS t FROM toks),
-        |tf AS (SELECT doc_id, t, COUNT(*) AS tf FROM inst GROUP BY 1, 2),
-        |c AS (SELECT t, CAST(SUM(tf) AS BIGINT) AS cnt FROM tf GROUP BY 1),
-        |n AS (SELECT CAST(SUM(cnt) AS BIGINT) AS N FROM c),
-        |per AS (
-        | SELECT tf.doc_id, CAST(SUM(tf.tf) AS BIGINT) AS n_tokens,
-        |  CAST(SUM(CAST(CAST(tf.tf AS DOUBLE) *
-        |    (ln(CAST(n.N AS DOUBLE)) - ln(CAST(c.cnt AS DOUBLE)))
-        |    AS DECIMAL(30,15))) AS DOUBLE) AS s
-        | FROM tf JOIN c USING (t) CROSS JOIN n GROUP BY 1)
-        |SELECT d.doc_id, COALESCE(per.n_tokens, 0) AS n_tokens,
-        | ROUND(per.s / CAST(per.n_tokens AS DOUBLE), 9) AS avg_nll
-        |FROM documents d LEFT JOIN per USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // The x_perplexity scoring CTEs verbatim, then the grouped
-    // x_qbucket_by_lang convention over the rounded avg_nll doubles
-    // (bit-identical across engines, so rank order matches): tercile
-    // cuts at 1-based ranks (i·n)//3 + 1 per language, bucket = #cuts
-    // ≤ score; zero-token docs (null score) shift no ranks.
-    "x_ppl_buckets" ->
-      """WITH toks AS (
-        | SELECT doc_id, CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |inst AS (SELECT doc_id, unnest(tok) AS t FROM toks),
-        |tf AS (SELECT doc_id, t, COUNT(*) AS tf FROM inst GROUP BY 1, 2),
-        |c AS (SELECT t, CAST(SUM(tf) AS BIGINT) AS cnt FROM tf GROUP BY 1),
-        |n AS (SELECT CAST(SUM(cnt) AS BIGINT) AS N FROM c),
-        |per AS (
-        | SELECT tf.doc_id, CAST(SUM(tf.tf) AS BIGINT) AS n_tokens,
-        |  CAST(SUM(CAST(CAST(tf.tf AS DOUBLE) *
-        |    (ln(CAST(n.N AS DOUBLE)) - ln(CAST(c.cnt AS DOUBLE)))
-        |    AS DECIMAL(30,15))) AS DOUBLE) AS s
-        | FROM tf JOIN c USING (t) CROSS JOIN n GROUP BY 1),
-        |scored AS (
-        | SELECT d.doc_id, d.lang, COALESCE(per.n_tokens, 0) AS n_tokens,
-        |  ROUND(per.s / CAST(per.n_tokens AS DOUBLE), 9) AS avg_nll
-        | FROM documents d LEFT JOIN per USING (doc_id)),
-        |r AS (SELECT lang AS g, avg_nll AS v,
-        |  row_number() OVER (PARTITION BY lang ORDER BY avg_nll) AS rn,
-        |  COUNT(*) OVER (PARTITION BY lang) AS n
-        | FROM scored WHERE avg_nll IS NOT NULL AND NOT isnan(avg_nll)),
-        |cuts AS (SELECT g, v FROM r
-        | WHERE rn IN ((1 * n) // 3 + 1, (2 * n) // 3 + 1))
-        |SELECT sc.doc_id, sc.lang, sc.n_tokens, sc.avg_nll,
-        | CASE WHEN sc.avg_nll IS NOT NULL AND NOT isnan(sc.avg_nll)
-        |       AND EXISTS (SELECT 1 FROM cuts c2
-        |                   WHERE c2.g IS NOT DISTINCT FROM sc.lang)
-        |      THEN (SELECT COUNT(*) FROM cuts c2
-        |            WHERE c2.g IS NOT DISTINCT FROM sc.lang
-        |              AND c2.v <= sc.avg_nll)
-        | END AS ppl_bucket
-        |FROM scored sc ORDER BY doc_id""".stripMargin,
-
-    // Stupid-Backoff chain over STRING-grouped counts (engine groups by
-    // xxhash64 — identical modulo a 64-bit collision). Zipped parallel
-    // unnests extract bigrams positionally; 0.916290731874155 is the
-    // −ln 0.4 discount as an exact literal (same double both engines);
-    // every other ln input is an integral count.
-    "x_bigram_nll" ->
-      """WITH toks AS (
-        | SELECT doc_id, CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |tr AS (SELECT * FROM toks WHERE doc_id % 10 < 8),
-        |c1 AS (SELECT t, COUNT(*) AS c1
-        |  FROM (SELECT unnest(tok) AS t FROM tr) GROUP BY 1),
-        |n AS (SELECT CAST(SUM(c1) AS BIGINT) AS N FROM c1),
-        |c2 AS (SELECT w1, w2, COUNT(*) AS c2 FROM (
-        |  SELECT unnest(tok[1:len(tok)-1]) AS w1,
-        |         unnest(tok[2:len(tok)]) AS w2 FROM tr) GROUP BY 1, 2),
-        |tf AS (SELECT doc_id, w1, w2, COUNT(*) AS tf FROM (
-        |  SELECT doc_id, unnest(tok[1:len(tok)-1]) AS w1,
-        |         unnest(tok[2:len(tok)]) AS w2 FROM toks) GROUP BY 1, 2, 3),
-        |sc AS (
-        | SELECT tf.doc_id, tf.tf, CAST(tf.tf AS DOUBLE) * (
-        |   CASE WHEN c2.c2 IS NOT NULL AND p.c1 IS NOT NULL
-        |     THEN ln(CAST(p.c1 AS DOUBLE)) - ln(CAST(c2.c2 AS DOUBLE))
-        |   WHEN q.c1 IS NOT NULL
-        |     THEN CAST(0.916290731874155 AS DOUBLE)
-        |       + ln(CAST(n.N AS DOUBLE)) - ln(CAST(q.c1 AS DOUBLE))
-        |   ELSE CAST(0.916290731874155 AS DOUBLE) + ln(CAST(n.N AS DOUBLE))
-        |   END) AS nll
-        | FROM tf LEFT JOIN c2 ON tf.w1 = c2.w1 AND tf.w2 = c2.w2
-        |   LEFT JOIN c1 p ON tf.w1 = p.t
-        |   LEFT JOIN c1 q ON tf.w2 = q.t
-        |   CROSS JOIN n),
-        |per AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_bigrams,
-        |  CAST(SUM(CAST(nll AS DECIMAL(30,15))) AS DOUBLE) AS s
-        | FROM sc GROUP BY 1)
-        |SELECT d.doc_id, COALESCE(per.n_bigrams, 0) AS n_bigrams,
-        | ROUND(per.s / CAST(per.n_bigrams AS DOUBLE), 9) AS avg_nll
-        |FROM documents d LEFT JOIN per USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // The same backoff CASE over string-keyed count tables (the engine
-    // groups on xxhash64 keys — collision-free at fixture scale, the
-    // x_bigram_nll convention); zipped unnests build the trigram
-    // positions, both -ln(0.4) terms are the identical literal added
-    // left-to-right as in the engine.
-    "x_trigram_nll" ->
-      """WITH toks AS (
-        | SELECT doc_id, CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |tr AS (SELECT * FROM toks WHERE doc_id % 10 < 8),
-        |c1 AS (SELECT t, COUNT(*) AS c1
-        |  FROM (SELECT unnest(tok) AS t FROM tr) GROUP BY 1),
-        |n AS (SELECT CAST(SUM(c1) AS BIGINT) AS N FROM c1),
-        |c2 AS (SELECT w1, w2, COUNT(*) AS c2 FROM (
-        |  SELECT unnest(tok[1:len(tok)-1]) AS w1,
-        |         unnest(tok[2:len(tok)]) AS w2 FROM tr) GROUP BY 1, 2),
-        |c3 AS (SELECT w1, w2, w3, COUNT(*) AS c3 FROM (
-        |  SELECT unnest(tok[1:len(tok)-2]) AS w1,
-        |         unnest(tok[2:len(tok)-1]) AS w2,
-        |         unnest(tok[3:len(tok)]) AS w3 FROM tr) GROUP BY 1, 2, 3),
-        |tf AS (SELECT doc_id, w1, w2, w3, COUNT(*) AS tf FROM (
-        |  SELECT doc_id, unnest(tok[1:len(tok)-2]) AS w1,
-        |         unnest(tok[2:len(tok)-1]) AS w2,
-        |         unnest(tok[3:len(tok)]) AS w3 FROM toks) GROUP BY 1, 2, 3, 4),
-        |sc AS (
-        | SELECT tf.doc_id, tf.tf, CAST(tf.tf AS DOUBLE) * (
-        |   CASE WHEN t3.c3 IS NOT NULL AND b12.c2 IS NOT NULL
-        |     THEN ln(CAST(b12.c2 AS DOUBLE)) - ln(CAST(t3.c3 AS DOUBLE))
-        |   WHEN b23.c2 IS NOT NULL AND u2.c1 IS NOT NULL
-        |     THEN CAST(0.916290731874155 AS DOUBLE)
-        |       + ln(CAST(u2.c1 AS DOUBLE)) - ln(CAST(b23.c2 AS DOUBLE))
-        |   WHEN u3.c1 IS NOT NULL
-        |     THEN CAST(0.916290731874155 AS DOUBLE)
-        |       + CAST(0.916290731874155 AS DOUBLE)
-        |       + ln(CAST(n.N AS DOUBLE)) - ln(CAST(u3.c1 AS DOUBLE))
-        |   ELSE CAST(0.916290731874155 AS DOUBLE)
-        |     + CAST(0.916290731874155 AS DOUBLE)
-        |     + ln(CAST(n.N AS DOUBLE))
-        |   END) AS nll
-        | FROM tf
-        |   LEFT JOIN c3 t3 ON tf.w1 = t3.w1 AND tf.w2 = t3.w2
-        |     AND tf.w3 = t3.w3
-        |   LEFT JOIN c2 b12 ON tf.w1 = b12.w1 AND tf.w2 = b12.w2
-        |   LEFT JOIN c2 b23 ON tf.w2 = b23.w1 AND tf.w3 = b23.w2
-        |   LEFT JOIN c1 u2 ON tf.w2 = u2.t
-        |   LEFT JOIN c1 u3 ON tf.w3 = u3.t
-        |   CROSS JOIN n),
-        |per AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_trigrams,
-        |  CAST(SUM(CAST(nll AS DECIMAL(30,15))) AS DOUBLE) AS s
-        | FROM sc GROUP BY 1)
-        |SELECT d.doc_id, COALESCE(per.n_trigrams, 0) AS n_trigrams,
-        | ROUND(per.s / CAST(per.n_trigrams AS DOUBLE), 9) AS avg_nll
-        |FROM documents d LEFT JOIN per USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Interpolated Kneser-Ney, the same exact-rational ladder unrolled:
-    // counts over string trigrams (the engine's xxhash64 keys are
-    // collision-free at fixture scale), every A/B computed in DOUBLE
-    // with the engine's exact association order, ln only of those
-    // integral-valued products.
-    "x_kn_nll" ->
-      """WITH toks AS (
-        | SELECT doc_id, CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |tr AS (SELECT * FROM toks WHERE doc_id % 10 < 8),
-        |tri AS (SELECT w1, w2, w3 FROM (
-        |  SELECT unnest(tok[1:len(tok)-2]) AS w1,
-        |         unnest(tok[2:len(tok)-1]) AS w2,
-        |         unnest(tok[3:len(tok)]) AS w3 FROM tr)),
-        |c3 AS (SELECT w1, w2, w3, COUNT(*) AS c3 FROM tri GROUP BY 1, 2, 3),
-        |ctx AS (SELECT w1, w2, COUNT(*) AS c2 FROM tri GROUP BY 1, 2),
-        |ty AS (SELECT DISTINCT w1, w2, w3 FROM tri),
-        |f2 AS (SELECT w1, w2, COUNT(*) AS f2 FROM ty GROUP BY 1, 2),
-        |kn2 AS (SELECT w2, w3, COUNT(*) AS kn2 FROM ty GROUP BY 1, 2),
-        |bt AS (SELECT DISTINCT w2, w3 FROM ty),
-        |mid AS (SELECT w2, COUNT(*) AS mid FROM ty GROUP BY 1),
-        |f1 AS (SELECT w2, COUNT(*) AS f1 FROM bt GROUP BY 1),
-        |kn1 AS (SELECT w3, COUNT(*) AS kn1 FROM bt GROUP BY 1),
-        |sc1 AS (SELECT CAST(COUNT(*) AS BIGINT) AS ncc,
-        |  CAST(COUNT(DISTINCT w3) AS BIGINT) AS v1 FROM bt),
-        |sc2 AS (SELECT CAST(COUNT(DISTINCT t) + 1 AS BIGINT) AS v
-        |  FROM (SELECT unnest(tok) AS t FROM tr)),
-        |tf AS (SELECT doc_id, w1, w2, w3, COUNT(*) AS tf FROM (
-        |  SELECT doc_id, unnest(tok[1:len(tok)-2]) AS w1,
-        |         unnest(tok[2:len(tok)-1]) AS w2,
-        |         unnest(tok[3:len(tok)]) AS w3 FROM toks) GROUP BY 1, 2, 3, 4),
-        |j AS (
-        | SELECT tf.doc_id, tf.tf, t3.c3, ctx.c2, f2.f2, kn2.kn2,
-        |   mid.mid, f1.f1, kn1.kn1, sc1.ncc, sc1.v1, sc2.v
-        | FROM tf
-        |   LEFT JOIN c3 t3 ON tf.w1 = t3.w1 AND tf.w2 = t3.w2
-        |     AND tf.w3 = t3.w3
-        |   LEFT JOIN ctx ON tf.w1 = ctx.w1 AND tf.w2 = ctx.w2
-        |   LEFT JOIN f2 ON tf.w1 = f2.w1 AND tf.w2 = f2.w2
-        |   LEFT JOIN kn2 ON tf.w2 = kn2.w2 AND tf.w3 = kn2.w3
-        |   LEFT JOIN mid ON tf.w2 = mid.w2
-        |   LEFT JOIN f1 ON tf.w2 = f1.w2
-        |   LEFT JOIN kn1 ON tf.w3 = kn1.w3
-        |   CROSS JOIN sc1 CROSS JOIN sc2),
-        |e1 AS (SELECT *,
-        |  GREATEST(COALESCE(CAST(kn1 AS DOUBLE), CAST(0.0 AS DOUBLE))
-        |      * CAST(4.0 AS DOUBLE) - CAST(3.0 AS DOUBLE),
-        |    CAST(0.0 AS DOUBLE)) * CAST(v AS DOUBLE)
-        |    + CAST(3.0 AS DOUBLE) * CAST(v1 AS DOUBLE) AS a1,
-        |  CAST(4.0 AS DOUBLE) * CAST(v AS DOUBLE)
-        |    * CAST(ncc AS DOUBLE) AS b1 FROM j),
-        |e2 AS (SELECT *,
-        |  GREATEST(COALESCE(CAST(kn2 AS DOUBLE), CAST(0.0 AS DOUBLE))
-        |      * CAST(4.0 AS DOUBLE) - CAST(3.0 AS DOUBLE),
-        |    CAST(0.0 AS DOUBLE)) * b1
-        |    + CAST(3.0 AS DOUBLE) * CAST(f1 AS DOUBLE) * a1 AS a2,
-        |  CAST(4.0 AS DOUBLE) * CAST(mid AS DOUBLE) * b1 AS b2 FROM e1),
-        |e3 AS (SELECT *,
-        |  GREATEST(COALESCE(CAST(c3 AS DOUBLE), CAST(0.0 AS DOUBLE))
-        |      * CAST(4.0 AS DOUBLE) - CAST(3.0 AS DOUBLE),
-        |    CAST(0.0 AS DOUBLE)) * b2
-        |    + CAST(3.0 AS DOUBLE) * CAST(f2 AS DOUBLE) * a2 AS a3,
-        |  CAST(4.0 AS DOUBLE) * CAST(c2 AS DOUBLE) * b2 AS b3 FROM e2),
-        |sc AS (SELECT doc_id, tf, CAST(tf AS DOUBLE) * (
-        |   CASE WHEN c2 IS NOT NULL THEN ln(b3) - ln(a3)
-        |        WHEN mid IS NOT NULL THEN ln(b2) - ln(a2)
-        |        ELSE ln(b1) - ln(a1) END) AS nll FROM e3),
-        |per AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_trigrams,
-        |  CAST(SUM(CAST(nll AS DECIMAL(30,15))) AS DOUBLE) AS s
-        | FROM sc GROUP BY 1)
-        |SELECT d.doc_id, COALESCE(per.n_trigrams, 0) AS n_trigrams,
-        | ROUND(per.s / CAST(per.n_trigrams AS DOUBLE), 9) AS avg_nll
-        |FROM documents d LEFT JOIN per USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Modified KN: the x_kn_nll ladder with per-level (Q, d1, d2, d3)
-    // integer discounts re-derived from count-of-counts in HUGEINT —
-    // mirroring the engine's DECIMAL(38,0) cubics, which Long/BIGINT
-    // would wrap past ~10^6 types per count class — (the
-    // estimate-or-fallback CASE transliterated), per-context gamma class
-    // counts (N1/N2/N3+), and the same three-level CASE over integral-
-    // valued doubles in the engine's exact association order.
-    "x_mkn_nll" ->
-      """WITH toks AS (
-        | SELECT doc_id, CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |tr AS (SELECT * FROM toks WHERE doc_id % 10 < 8),
-        |tri AS (SELECT w1, w2, w3 FROM (
-        |  SELECT unnest(tok[1:len(tok)-2]) AS w1,
-        |         unnest(tok[2:len(tok)-1]) AS w2,
-        |         unnest(tok[3:len(tok)]) AS w3 FROM tr)),
-        |c3 AS (SELECT w1, w2, w3, COUNT(*) AS c3 FROM tri GROUP BY 1, 2, 3),
-        |ctx AS (SELECT w1, w2, COUNT(*) AS c2 FROM tri GROUP BY 1, 2),
-        |g3 AS (SELECT w1, w2,
-        |  CAST(SUM(CASE WHEN c3 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS g31,
-        |  CAST(SUM(CASE WHEN c3 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS g32,
-        |  CAST(SUM(CASE WHEN c3 >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS g33
-        | FROM c3 GROUP BY 1, 2),
-        |ty AS (SELECT w1, w2, w3 FROM c3),
-        |kn2 AS (SELECT w2, w3, COUNT(*) AS kn2 FROM ty GROUP BY 1, 2),
-        |mid AS (SELECT w2, COUNT(*) AS mid FROM ty GROUP BY 1),
-        |g2 AS (SELECT w2,
-        |  CAST(SUM(CASE WHEN kn2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS g21,
-        |  CAST(SUM(CASE WHEN kn2 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS g22,
-        |  CAST(SUM(CASE WHEN kn2 >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS g23
-        | FROM kn2 GROUP BY 1),
-        |bt AS (SELECT DISTINCT w2, w3 FROM ty),
-        |kn1 AS (SELECT w3, COUNT(*) AS kn1 FROM bt GROUP BY 1),
-        |sc1 AS (SELECT CAST(COUNT(*) AS BIGINT) AS ncc FROM bt),
-        |vc AS (SELECT
-        |  CAST(SUM(CASE WHEN kn1 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS v1c,
-        |  CAST(SUM(CASE WHEN kn1 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS v2c,
-        |  CAST(SUM(CASE WHEN kn1 >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS v3c
-        | FROM kn1),
-        |sc2 AS (SELECT CAST(COUNT(DISTINCT t) + 1 AS BIGINT) AS v
-        |  FROM (SELECT unnest(tok) AS t FROM tr)),
-        |cc3 AS (SELECT
-        |  CAST(SUM(CASE WHEN c3 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |  CAST(SUM(CASE WHEN c3 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-        |  CAST(SUM(CASE WHEN c3 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n3,
-        |  CAST(SUM(CASE WHEN c3 = 4 THEN 1 ELSE 0 END) AS BIGINT) AS n4
-        | FROM c3),
-        |es3 AS (SELECT (h1 + 2*h2)*h2*h3 AS q, h1*h2*h3 AS d1,
-        |  (2*h2*(h1 + 2*h2) - 3*h1*h3)*h3 AS d2,
-        |  (3*h3*(h1 + 2*h2) - 4*h1*h4)*h2 AS d3, n1, n2, n3, n4
-        | FROM (SELECT CAST(n1 AS HUGEINT) AS h1, CAST(n2 AS HUGEINT) AS h2,
-        |   CAST(n3 AS HUGEINT) AS h3, CAST(n4 AS HUGEINT) AS h4,
-        |   n1, n2, n3, n4 FROM cc3)),
-        |dl3 AS (SELECT
-        |  CASE WHEN n1 > 0 AND n2 > 0 AND n3 > 0 AND n4 > 0 AND d1 > 0
-        |    AND d2 > 0 AND d3 > 0 AND d1 <= q AND d2 <= 2*q AND d3 <= 3*q
-        |   THEN q ELSE 2 END AS q3,
-        |  CASE WHEN n1 > 0 AND n2 > 0 AND n3 > 0 AND n4 > 0 AND d1 > 0
-        |    AND d2 > 0 AND d3 > 0 AND d1 <= q AND d2 <= 2*q AND d3 <= 3*q
-        |   THEN d1 ELSE 1 END AS d31,
-        |  CASE WHEN n1 > 0 AND n2 > 0 AND n3 > 0 AND n4 > 0 AND d1 > 0
-        |    AND d2 > 0 AND d3 > 0 AND d1 <= q AND d2 <= 2*q AND d3 <= 3*q
-        |   THEN d2 ELSE 2 END AS d32,
-        |  CASE WHEN n1 > 0 AND n2 > 0 AND n3 > 0 AND n4 > 0 AND d1 > 0
-        |    AND d2 > 0 AND d3 > 0 AND d1 <= q AND d2 <= 2*q AND d3 <= 3*q
-        |   THEN d3 ELSE 3 END AS d33 FROM es3),
-        |cc2 AS (SELECT
-        |  CAST(SUM(CASE WHEN kn2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |  CAST(SUM(CASE WHEN kn2 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-        |  CAST(SUM(CASE WHEN kn2 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n3,
-        |  CAST(SUM(CASE WHEN kn2 = 4 THEN 1 ELSE 0 END) AS BIGINT) AS n4
-        | FROM kn2),
-        |es2 AS (SELECT (h1 + 2*h2)*h2*h3 AS q, h1*h2*h3 AS d1,
-        |  (2*h2*(h1 + 2*h2) - 3*h1*h3)*h3 AS d2,
-        |  (3*h3*(h1 + 2*h2) - 4*h1*h4)*h2 AS d3, n1, n2, n3, n4
-        | FROM (SELECT CAST(n1 AS HUGEINT) AS h1, CAST(n2 AS HUGEINT) AS h2,
-        |   CAST(n3 AS HUGEINT) AS h3, CAST(n4 AS HUGEINT) AS h4,
-        |   n1, n2, n3, n4 FROM cc2)),
-        |dl2 AS (SELECT
-        |  CASE WHEN n1 > 0 AND n2 > 0 AND n3 > 0 AND n4 > 0 AND d1 > 0
-        |    AND d2 > 0 AND d3 > 0 AND d1 <= q AND d2 <= 2*q AND d3 <= 3*q
-        |   THEN q ELSE 2 END AS q2,
-        |  CASE WHEN n1 > 0 AND n2 > 0 AND n3 > 0 AND n4 > 0 AND d1 > 0
-        |    AND d2 > 0 AND d3 > 0 AND d1 <= q AND d2 <= 2*q AND d3 <= 3*q
-        |   THEN d1 ELSE 1 END AS d21,
-        |  CASE WHEN n1 > 0 AND n2 > 0 AND n3 > 0 AND n4 > 0 AND d1 > 0
-        |    AND d2 > 0 AND d3 > 0 AND d1 <= q AND d2 <= 2*q AND d3 <= 3*q
-        |   THEN d2 ELSE 2 END AS d22,
-        |  CASE WHEN n1 > 0 AND n2 > 0 AND n3 > 0 AND n4 > 0 AND d1 > 0
-        |    AND d2 > 0 AND d3 > 0 AND d1 <= q AND d2 <= 2*q AND d3 <= 3*q
-        |   THEN d3 ELSE 3 END AS d23 FROM es2),
-        |cc1 AS (SELECT
-        |  CAST(SUM(CASE WHEN kn1 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |  CAST(SUM(CASE WHEN kn1 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-        |  CAST(SUM(CASE WHEN kn1 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n3,
-        |  CAST(SUM(CASE WHEN kn1 = 4 THEN 1 ELSE 0 END) AS BIGINT) AS n4
-        | FROM kn1),
-        |es1 AS (SELECT (h1 + 2*h2)*h2*h3 AS q, h1*h2*h3 AS d1,
-        |  (2*h2*(h1 + 2*h2) - 3*h1*h3)*h3 AS d2,
-        |  (3*h3*(h1 + 2*h2) - 4*h1*h4)*h2 AS d3, n1, n2, n3, n4
-        | FROM (SELECT CAST(n1 AS HUGEINT) AS h1, CAST(n2 AS HUGEINT) AS h2,
-        |   CAST(n3 AS HUGEINT) AS h3, CAST(n4 AS HUGEINT) AS h4,
-        |   n1, n2, n3, n4 FROM cc1)),
-        |dl1 AS (SELECT
-        |  CASE WHEN n1 > 0 AND n2 > 0 AND n3 > 0 AND n4 > 0 AND d1 > 0
-        |    AND d2 > 0 AND d3 > 0 AND d1 <= q AND d2 <= 2*q AND d3 <= 3*q
-        |   THEN q ELSE 2 END AS q1,
-        |  CASE WHEN n1 > 0 AND n2 > 0 AND n3 > 0 AND n4 > 0 AND d1 > 0
-        |    AND d2 > 0 AND d3 > 0 AND d1 <= q AND d2 <= 2*q AND d3 <= 3*q
-        |   THEN d1 ELSE 1 END AS d11,
-        |  CASE WHEN n1 > 0 AND n2 > 0 AND n3 > 0 AND n4 > 0 AND d1 > 0
-        |    AND d2 > 0 AND d3 > 0 AND d1 <= q AND d2 <= 2*q AND d3 <= 3*q
-        |   THEN d2 ELSE 2 END AS d12,
-        |  CASE WHEN n1 > 0 AND n2 > 0 AND n3 > 0 AND n4 > 0 AND d1 > 0
-        |    AND d2 > 0 AND d3 > 0 AND d1 <= q AND d2 <= 2*q AND d3 <= 3*q
-        |   THEN d3 ELSE 3 END AS d13 FROM es1),
-        |tf AS (SELECT doc_id, w1, w2, w3, COUNT(*) AS tf FROM (
-        |  SELECT doc_id, unnest(tok[1:len(tok)-2]) AS w1,
-        |         unnest(tok[2:len(tok)-1]) AS w2,
-        |         unnest(tok[3:len(tok)]) AS w3 FROM toks) GROUP BY 1, 2, 3, 4),
-        |j AS (
-        | SELECT tf.doc_id, tf.tf, t3.c3, ctx.c2, g3.g31, g3.g32, g3.g33,
-        |   kn2.kn2, mid.mid, g2.g21, g2.g22, g2.g23, kn1.kn1,
-        |   sc1.ncc, vc.v1c, vc.v2c, vc.v3c, sc2.v,
-        |   dl3.q3, dl3.d31, dl3.d32, dl3.d33,
-        |   dl2.q2, dl2.d21, dl2.d22, dl2.d23,
-        |   dl1.q1, dl1.d11, dl1.d12, dl1.d13
-        | FROM tf
-        |   LEFT JOIN c3 t3 ON tf.w1 = t3.w1 AND tf.w2 = t3.w2
-        |     AND tf.w3 = t3.w3
-        |   LEFT JOIN ctx ON tf.w1 = ctx.w1 AND tf.w2 = ctx.w2
-        |   LEFT JOIN g3 ON tf.w1 = g3.w1 AND tf.w2 = g3.w2
-        |   LEFT JOIN kn2 ON tf.w2 = kn2.w2 AND tf.w3 = kn2.w3
-        |   LEFT JOIN mid ON tf.w2 = mid.w2
-        |   LEFT JOIN g2 ON tf.w2 = g2.w2
-        |   LEFT JOIN kn1 ON tf.w3 = kn1.w3
-        |   CROSS JOIN sc1 CROSS JOIN vc CROSS JOIN sc2
-        |   CROSS JOIN dl3 CROSS JOIN dl2 CROSS JOIN dl1),
-        |e1 AS (SELECT *,
-        |  GREATEST(COALESCE(CAST(kn1 AS DOUBLE), CAST(0.0 AS DOUBLE))
-        |      * CAST(q1 AS DOUBLE)
-        |      - (CASE WHEN kn1 = 1 THEN CAST(d11 AS DOUBLE)
-        |              WHEN kn1 = 2 THEN CAST(d12 AS DOUBLE)
-        |              ELSE CAST(d13 AS DOUBLE) END),
-        |    CAST(0.0 AS DOUBLE)) * CAST(v AS DOUBLE)
-        |    + (CAST(d11 AS DOUBLE) * CAST(v1c AS DOUBLE)
-        |       + CAST(d12 AS DOUBLE) * CAST(v2c AS DOUBLE)
-        |       + CAST(d13 AS DOUBLE) * CAST(v3c AS DOUBLE)) AS a1,
-        |  CAST(ncc AS DOUBLE) * CAST(q1 AS DOUBLE)
-        |    * CAST(v AS DOUBLE) AS b1 FROM j),
-        |e2 AS (SELECT *,
-        |  GREATEST(COALESCE(CAST(kn2 AS DOUBLE), CAST(0.0 AS DOUBLE))
-        |      * CAST(q2 AS DOUBLE)
-        |      - (CASE WHEN kn2 = 1 THEN CAST(d21 AS DOUBLE)
-        |              WHEN kn2 = 2 THEN CAST(d22 AS DOUBLE)
-        |              ELSE CAST(d23 AS DOUBLE) END),
-        |    CAST(0.0 AS DOUBLE)) * b1
-        |    + (CAST(d21 AS DOUBLE) * CAST(g21 AS DOUBLE)
-        |       + CAST(d22 AS DOUBLE) * CAST(g22 AS DOUBLE)
-        |       + CAST(d23 AS DOUBLE) * CAST(g23 AS DOUBLE)) * a1 AS a2,
-        |  CAST(mid AS DOUBLE) * CAST(q2 AS DOUBLE) * b1 AS b2 FROM e1),
-        |e3 AS (SELECT *,
-        |  GREATEST(COALESCE(CAST(c3 AS DOUBLE), CAST(0.0 AS DOUBLE))
-        |      * CAST(q3 AS DOUBLE)
-        |      - (CASE WHEN c3 = 1 THEN CAST(d31 AS DOUBLE)
-        |              WHEN c3 = 2 THEN CAST(d32 AS DOUBLE)
-        |              ELSE CAST(d33 AS DOUBLE) END),
-        |    CAST(0.0 AS DOUBLE)) * b2
-        |    + (CAST(d31 AS DOUBLE) * CAST(g31 AS DOUBLE)
-        |       + CAST(d32 AS DOUBLE) * CAST(g32 AS DOUBLE)
-        |       + CAST(d33 AS DOUBLE) * CAST(g33 AS DOUBLE)) * a2 AS a3,
-        |  CAST(c2 AS DOUBLE) * CAST(q3 AS DOUBLE) * b2 AS b3 FROM e2),
-        |sc AS (SELECT doc_id, tf, CAST(tf AS DOUBLE) * (
-        |   CASE WHEN c2 IS NOT NULL THEN ln(b3) - ln(a3)
-        |        WHEN mid IS NOT NULL THEN ln(b2) - ln(a2)
-        |        ELSE ln(b1) - ln(a1) END) AS nll FROM e3),
-        |per AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_trigrams,
-        |  CAST(SUM(CAST(nll AS DECIMAL(30,15))) AS DOUBLE) AS s
-        | FROM sc GROUP BY 1)
-        |SELECT d.doc_id, COALESCE(per.n_trigrams, 0) AS n_trigrams,
-        | ROUND(per.s / CAST(per.n_trigrams AS DOUBLE), 9) AS avg_nll
-        |FROM documents d LEFT JOIN per USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // DSIR chain: identical md5-prefix feature buckets (2 hex chars =
-    // 256-bucket space), add-1 smoothing over the full space so every ln
-    // input is an integral-valued double; the normalizer term n·(ln(Nr+B)
-    // − ln(Nt+B)) factors out of the bucket sum exactly as the engine
-    // computes it.
-    "x_dsir" ->
-      """WITH toks AS (
-        | SELECT doc_id, source, CASE WHEN LENGTH(TRIM(text)) = 0
-        |   THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |feats AS (
-        | SELECT doc_id, source, substring(md5(g), 1, 2) AS b FROM (
-        |  SELECT doc_id, source, unnest(list_concat(tok,
-        |    list_transform(range(1, len(tok)),
-        |      i -> tok[i] || ' ' || tok[i+1]))) AS g
-        |  FROM toks)),
-        |ct AS (SELECT b, COUNT(*) AS ct FROM feats
-        |  WHERE source IN ('src1', 'src2') GROUP BY 1),
-        |cr AS (SELECT b, COUNT(*) AS cr FROM feats GROUP BY 1),
-        |nt AS (SELECT CAST(SUM(ct) AS BIGINT) AS nt FROM ct),
-        |nr AS (SELECT CAST(SUM(cr) AS BIGINT) AS nr FROM cr),
-        |lam AS (SELECT COALESCE(ct.b, cr.b) AS b,
-        |  ln(CAST(COALESCE(ct.ct, 0) AS DOUBLE) + CAST(1.0 AS DOUBLE)) -
-        |  ln(CAST(COALESCE(cr.cr, 0) AS DOUBLE) + CAST(1.0 AS DOUBLE)) AS lam
-        | FROM ct FULL OUTER JOIN cr ON ct.b = cr.b),
-        |f AS (SELECT doc_id, b, COUNT(*) AS f FROM feats GROUP BY 1, 2),
-        |per AS (SELECT f.doc_id, CAST(SUM(f.f) AS BIGINT) AS n,
-        |  CAST(SUM(CAST(CAST(f.f AS DOUBLE) * lam.lam
-        |    AS DECIMAL(30,15))) AS DOUBLE) AS s
-        | FROM f JOIN lam USING (b) GROUP BY 1)
-        |SELECT d.doc_id, COALESCE(per.n, 0) AS n_feats,
-        | ROUND(COALESCE(per.s, CAST(0.0 AS DOUBLE)) +
-        |   CAST(COALESCE(per.n, 0) AS DOUBLE) *
-        |   (ln(CAST(nr.nr AS DOUBLE) + CAST(256.0 AS DOUBLE)) -
-        |    ln(CAST(nt.nt AS DOUBLE) + CAST(256.0 AS DOUBLE))), 9) AS log_w
-        |FROM documents d LEFT JOIN per USING (doc_id)
-        |CROSS JOIN nt CROSS JOIN nr
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Rebuilds the seed-42 Achlioptas sign matrix from the same md5
-    // formula, mirrors the decimal dot (per-product DECIMAL(30,15), sum,
-    // cast double) and the exact 0.25 scale.
-    "x_rand_project" ->
-      """WITH dgrid AS (SELECT unnest(range(0, 64)) AS d),
-        |jgrid AS (SELECT unnest(range(0, 16)) AS j),
-        |s AS (SELECT j, d,
-        |  CASE WHEN substring(md5('42:' || CAST(j AS VARCHAR)
-        |      || ':' || CAST(d AS VARCHAR)), 1, 1) < '8'
-        |    THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END AS sgn
-        | FROM jgrid CROSS JOIN dgrid),
-        |z AS (SELECT vec_id, g.d,
-        |  CAST(embedding[CAST(g.d AS INT) + 1] AS DOUBLE) AS x
-        | FROM embeddings CROSS JOIN dgrid g),
-        |p AS (SELECT z.vec_id, s.j,
-        |  CAST(SUM(CAST(z.x * s.sgn AS DECIMAL(30,15))) AS DOUBLE)
-        |    * CAST(0.25 AS DOUBLE) AS raw
-        | FROM z JOIN s ON z.d = s.d GROUP BY 1, 2)
-        |SELECT vec_id, CAST(j AS INT) AS dim, ROUND(raw, 9) AS v
-        |FROM p ORDER BY vec_id, dim""".stripMargin,
-
-    // Two power-iteration rounds unrolled: v0 = ones, t = x·v − μ·v via
-    // the decimal dot, w_d = Σ t·x_d − μ_d·Σt, max-abs normalize, round 9
-    // between rounds — the same algebraic split the engine runs.
-    "x_pca_power" ->
-      """WITH dgrid AS (SELECT unnest(range(0, 64)) AS pos),
-        |z AS (SELECT vec_id, g.pos,
-        |  CAST(embedding[CAST(g.pos AS INT) + 1] AS DOUBLE) AS x
-        | FROM embeddings CROSS JOIN dgrid g),
-        |mu AS (SELECT pos, ROUND(CAST(SUM(CAST(x AS DECIMAL(30,15))) AS DOUBLE)
-        |  / CAST(COUNT(*) AS DOUBLE), 9) AS m FROM z GROUP BY 1),
-        |mdv1 AS (SELECT CAST(SUM(CAST(m * CAST(1.0 AS DOUBLE)
-        |  AS DECIMAL(30,15))) AS DOUBLE) AS mdv FROM mu),
-        |t1 AS (SELECT vec_id,
-        |  CAST(SUM(CAST(x * CAST(1.0 AS DOUBLE) AS DECIMAL(30,15))) AS DOUBLE)
-        |    - (SELECT mdv FROM mdv1) AS t
-        | FROM z GROUP BY 1),
-        |s1 AS (SELECT z.pos,
-        |  CAST(SUM(CAST(t1.t * z.x AS DECIMAL(30,15))) AS DOUBLE) AS S,
-        |  CAST(SUM(CAST(t1.t AS DECIMAL(30,15))) AS DOUBLE) AS T
-        | FROM z JOIN t1 USING (vec_id) GROUP BY 1),
-        |w1 AS (SELECT s1.pos, s1.S - mu.m * s1.T AS w
-        | FROM s1 JOIN mu USING (pos)),
-        |m1 AS (SELECT MAX(ABS(w)) AS mx FROM w1),
-        |v1 AS (SELECT pos, CASE WHEN m1.mx = 0 THEN CAST(0.0 AS DOUBLE)
-        |  ELSE ROUND(w / m1.mx, 9) END AS v FROM w1 CROSS JOIN m1),
-        |mdv2 AS (SELECT CAST(SUM(CAST(mu.m * v1.v AS DECIMAL(30,15)))
-        |  AS DOUBLE) AS mdv FROM mu JOIN v1 USING (pos)),
-        |t2 AS (SELECT z.vec_id,
-        |  CAST(SUM(CAST(z.x * v1.v AS DECIMAL(30,15))) AS DOUBLE)
-        |    - (SELECT mdv FROM mdv2) AS t
-        | FROM z JOIN v1 USING (pos) GROUP BY 1),
-        |s2 AS (SELECT z.pos,
-        |  CAST(SUM(CAST(t2.t * z.x AS DECIMAL(30,15))) AS DOUBLE) AS S,
-        |  CAST(SUM(CAST(t2.t AS DECIMAL(30,15))) AS DOUBLE) AS T
-        | FROM z JOIN t2 USING (vec_id) GROUP BY 1),
-        |w2 AS (SELECT s2.pos, s2.S - mu.m * s2.T AS w
-        | FROM s2 JOIN mu USING (pos)),
-        |m2 AS (SELECT MAX(ABS(w)) AS mx FROM w2),
-        |v2 AS (SELECT pos, CASE WHEN m2.mx = 0 THEN CAST(0.0 AS DOUBLE)
-        |  ELSE ROUND(w / m2.mx, 9) END AS v FROM w2 CROSS JOIN m2)
-        |SELECT CAST(v2.pos AS INT) AS dim, mu.m AS mu, v2.v AS loading
-        |FROM v2 JOIN mu USING (pos) ORDER BY dim""".stripMargin,
-
-    // The x_pca_power chain through the final iterate, then every
-    // vector's centered projection: score = x·v − μ·v, decimal dots.
-    "x_pca_scores" ->
-      """WITH dgrid AS (SELECT unnest(range(0, 64)) AS pos),
-        |z AS (SELECT vec_id, g.pos,
-        |  CAST(embedding[CAST(g.pos AS INT) + 1] AS DOUBLE) AS x
-        | FROM embeddings CROSS JOIN dgrid g),
-        |mu AS (SELECT pos, ROUND(CAST(SUM(CAST(x AS DECIMAL(30,15))) AS DOUBLE)
-        |  / CAST(COUNT(*) AS DOUBLE), 9) AS m FROM z GROUP BY 1),
-        |mdv1 AS (SELECT CAST(SUM(CAST(m * CAST(1.0 AS DOUBLE)
-        |  AS DECIMAL(30,15))) AS DOUBLE) AS mdv FROM mu),
-        |t1 AS (SELECT vec_id,
-        |  CAST(SUM(CAST(x * CAST(1.0 AS DOUBLE) AS DECIMAL(30,15))) AS DOUBLE)
-        |    - (SELECT mdv FROM mdv1) AS t
-        | FROM z GROUP BY 1),
-        |s1 AS (SELECT z.pos,
-        |  CAST(SUM(CAST(t1.t * z.x AS DECIMAL(30,15))) AS DOUBLE) AS S,
-        |  CAST(SUM(CAST(t1.t AS DECIMAL(30,15))) AS DOUBLE) AS T
-        | FROM z JOIN t1 USING (vec_id) GROUP BY 1),
-        |w1 AS (SELECT s1.pos, s1.S - mu.m * s1.T AS w
-        | FROM s1 JOIN mu USING (pos)),
-        |m1 AS (SELECT MAX(ABS(w)) AS mx FROM w1),
-        |v1 AS (SELECT pos, CASE WHEN m1.mx = 0 THEN CAST(0.0 AS DOUBLE)
-        |  ELSE ROUND(w / m1.mx, 9) END AS v FROM w1 CROSS JOIN m1),
-        |mdv2 AS (SELECT CAST(SUM(CAST(mu.m * v1.v AS DECIMAL(30,15)))
-        |  AS DOUBLE) AS mdv FROM mu JOIN v1 USING (pos)),
-        |t2 AS (SELECT z.vec_id,
-        |  CAST(SUM(CAST(z.x * v1.v AS DECIMAL(30,15))) AS DOUBLE)
-        |    - (SELECT mdv FROM mdv2) AS t
-        | FROM z JOIN v1 USING (pos) GROUP BY 1),
-        |s2 AS (SELECT z.pos,
-        |  CAST(SUM(CAST(t2.t * z.x AS DECIMAL(30,15))) AS DOUBLE) AS S,
-        |  CAST(SUM(CAST(t2.t AS DECIMAL(30,15))) AS DOUBLE) AS T
-        | FROM z JOIN t2 USING (vec_id) GROUP BY 1),
-        |w2 AS (SELECT s2.pos, s2.S - mu.m * s2.T AS w
-        | FROM s2 JOIN mu USING (pos)),
-        |m2 AS (SELECT MAX(ABS(w)) AS mx FROM w2),
-        |v2 AS (SELECT pos, CASE WHEN m2.mx = 0 THEN CAST(0.0 AS DOUBLE)
-        |  ELSE ROUND(w / m2.mx, 9) END AS v FROM w2 CROSS JOIN m2),
-        |mdvs AS (SELECT CAST(SUM(CAST(mu.m * v2.v AS DECIMAL(30,15)))
-        |  AS DOUBLE) AS mdv FROM mu JOIN v2 USING (pos)),
-        |sc AS (SELECT z.vec_id,
-        |  CAST(SUM(CAST(z.x * v2.v AS DECIMAL(30,15))) AS DOUBLE)
-        |    - (SELECT mdv FROM mdvs) AS score
-        | FROM z JOIN v2 USING (pos) GROUP BY 1)
-        |SELECT vec_id, ROUND(score, 9) AS score FROM sc
-        |ORDER BY vec_id""".stripMargin,
-
-    // x_pca_power's chain extended: component 1 = the same two rounds;
-    // component 2 re-uses round-1's step (both start from ones), deflates
-    // against PC1 via the decimal-dot ratio, steps once more, deflates,
-    // normalizes. Every float op mirrors the engine: decimal sums,
-    // single-op IEEE mul/sub, ROUND 9 at each normalize.
-    "x_pca_top2" ->
-      """WITH dgrid AS (SELECT unnest(range(0, 64)) AS pos),
-        |z AS (SELECT vec_id, g.pos,
-        |  CAST(embedding[CAST(g.pos AS INT) + 1] AS DOUBLE) AS x
-        | FROM embeddings CROSS JOIN dgrid g),
-        |mu AS (SELECT pos, ROUND(CAST(SUM(CAST(x AS DECIMAL(30,15))) AS DOUBLE)
-        |  / CAST(COUNT(*) AS DOUBLE), 9) AS m FROM z GROUP BY 1),
-        |mdv1 AS (SELECT CAST(SUM(CAST(m * CAST(1.0 AS DOUBLE)
-        |  AS DECIMAL(30,15))) AS DOUBLE) AS mdv FROM mu),
-        |t1 AS (SELECT vec_id,
-        |  CAST(SUM(CAST(x * CAST(1.0 AS DOUBLE) AS DECIMAL(30,15))) AS DOUBLE)
-        |    - (SELECT mdv FROM mdv1) AS t
-        | FROM z GROUP BY 1),
-        |s1 AS (SELECT z.pos,
-        |  CAST(SUM(CAST(t1.t * z.x AS DECIMAL(30,15))) AS DOUBLE) AS S,
-        |  CAST(SUM(CAST(t1.t AS DECIMAL(30,15))) AS DOUBLE) AS T
-        | FROM z JOIN t1 USING (vec_id) GROUP BY 1),
-        |w1 AS (SELECT s1.pos, s1.S - mu.m * s1.T AS w
-        | FROM s1 JOIN mu USING (pos)),
-        |m1 AS (SELECT MAX(ABS(w)) AS mx FROM w1),
-        |v1 AS (SELECT pos, CASE WHEN m1.mx = 0 THEN CAST(0.0 AS DOUBLE)
-        |  ELSE ROUND(w / m1.mx, 9) END AS v FROM w1 CROSS JOIN m1),
-        |mdv2 AS (SELECT CAST(SUM(CAST(mu.m * v1.v AS DECIMAL(30,15)))
-        |  AS DOUBLE) AS mdv FROM mu JOIN v1 USING (pos)),
-        |t2 AS (SELECT z.vec_id,
-        |  CAST(SUM(CAST(z.x * v1.v AS DECIMAL(30,15))) AS DOUBLE)
-        |    - (SELECT mdv FROM mdv2) AS t
-        | FROM z JOIN v1 USING (pos) GROUP BY 1),
-        |s2 AS (SELECT z.pos,
-        |  CAST(SUM(CAST(t2.t * z.x AS DECIMAL(30,15))) AS DOUBLE) AS S,
-        |  CAST(SUM(CAST(t2.t AS DECIMAL(30,15))) AS DOUBLE) AS T
-        | FROM z JOIN t2 USING (vec_id) GROUP BY 1),
-        |w2 AS (SELECT s2.pos, s2.S - mu.m * s2.T AS w
-        | FROM s2 JOIN mu USING (pos)),
-        |m2 AS (SELECT MAX(ABS(w)) AS mx FROM w2),
-        |pc1 AS (SELECT pos, CASE WHEN m2.mx = 0 THEN CAST(0.0 AS DOUBLE)
-        |  ELSE ROUND(w / m2.mx, 9) END AS v FROM w2 CROSS JOIN m2),
-        |d11 AS (SELECT CAST(SUM(CAST(v * v AS DECIMAL(30,15))) AS DOUBLE) AS d
-        | FROM pc1),
-        |d1w1 AS (SELECT CAST(SUM(CAST(pc1.v * w1.w AS DECIMAL(30,15)))
-        |  AS DOUBLE) AS d FROM pc1 JOIN w1 USING (pos)),
-        |w1b AS (SELECT w1.pos,
-        |  w1.w - (CASE WHEN d11.d = 0 THEN CAST(0.0 AS DOUBLE)
-        |    ELSE d1w1.d / d11.d END) * pc1.v AS w
-        | FROM w1 JOIN pc1 USING (pos) CROSS JOIN d11 CROSS JOIN d1w1),
-        |m1b AS (SELECT MAX(ABS(w)) AS mx FROM w1b),
-        |u21 AS (SELECT pos, CASE WHEN m1b.mx = 0 THEN CAST(0.0 AS DOUBLE)
-        |  ELSE ROUND(w / m1b.mx, 9) END AS v FROM w1b CROSS JOIN m1b),
-        |mdv3 AS (SELECT CAST(SUM(CAST(mu.m * u21.v AS DECIMAL(30,15)))
-        |  AS DOUBLE) AS mdv FROM mu JOIN u21 USING (pos)),
-        |t3 AS (SELECT z.vec_id,
-        |  CAST(SUM(CAST(z.x * u21.v AS DECIMAL(30,15))) AS DOUBLE)
-        |    - (SELECT mdv FROM mdv3) AS t
-        | FROM z JOIN u21 USING (pos) GROUP BY 1),
-        |s3 AS (SELECT z.pos,
-        |  CAST(SUM(CAST(t3.t * z.x AS DECIMAL(30,15))) AS DOUBLE) AS S,
-        |  CAST(SUM(CAST(t3.t AS DECIMAL(30,15))) AS DOUBLE) AS T
-        | FROM z JOIN t3 USING (vec_id) GROUP BY 1),
-        |w3 AS (SELECT s3.pos, s3.S - mu.m * s3.T AS w
-        | FROM s3 JOIN mu USING (pos)),
-        |d1w3 AS (SELECT CAST(SUM(CAST(pc1.v * w3.w AS DECIMAL(30,15)))
-        |  AS DOUBLE) AS d FROM pc1 JOIN w3 USING (pos)),
-        |w3b AS (SELECT w3.pos,
-        |  w3.w - (CASE WHEN d11.d = 0 THEN CAST(0.0 AS DOUBLE)
-        |    ELSE d1w3.d / d11.d END) * pc1.v AS w
-        | FROM w3 JOIN pc1 USING (pos) CROSS JOIN d11 CROSS JOIN d1w3),
-        |m3b AS (SELECT MAX(ABS(w)) AS mx FROM w3b),
-        |pc2 AS (SELECT pos, CASE WHEN m3b.mx = 0 THEN CAST(0.0 AS DOUBLE)
-        |  ELSE ROUND(w / m3b.mx, 9) END AS v FROM w3b CROSS JOIN m3b)
-        |SELECT 0 AS component, CAST(pos AS INT) AS dim, mu.m AS mu,
-        |  pc1.v AS loading
-        |FROM pc1 JOIN mu USING (pos)
-        |UNION ALL
-        |SELECT 1 AS component, CAST(pos AS INT) AS dim, mu.m AS mu,
-        |  pc2.v AS loading
-        |FROM pc2 JOIN mu USING (pos)
-        |ORDER BY component, dim""".stripMargin,
-
-    // Exact different-label top-k over the quadratic window, decimal
-    // cosine, rank by (rounded cos DESC, id) — the x_knn_join chain with
-    // the label-mismatch predicate in the pair generator.
-    "x_hard_negatives" ->
-      """WITH z AS (
-        | SELECT q.vec_id AS query_id, CAST(q.label AS BIGINT) AS query_label,
-        |  c.vec_id AS neighbor_id, CAST(c.label AS BIGINT) AS neighbor_label,
-        |  CAST(unnest(c.embedding) AS DOUBLE) AS x,
-        |  CAST(unnest(q.embedding) AS DOUBLE) AS y
-        | FROM embeddings q JOIN embeddings c
-        |   ON q.label IS NOT NULL AND c.label IS NOT NULL
-        |     AND q.label <> c.label),
-        |d AS (
-        | SELECT query_id, query_label, neighbor_id, neighbor_label,
-        |  SUM(CAST(x * y AS DECIMAL(30,15))) AS dot,
-        |  SUM(CAST(x * x AS DECIMAL(30,15))) AS nc,
-        |  SUM(CAST(y * y AS DECIMAL(30,15))) AS nq
-        | FROM z GROUP BY 1, 2, 3, 4),
-        |r AS (
-        | SELECT query_id, query_label, neighbor_id, neighbor_label,
-        |  ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(nc AS DOUBLE) * CAST(nq AS DOUBLE)), 9) AS cos,
-        |  ROW_NUMBER() OVER (PARTITION BY query_id
-        |    ORDER BY ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(nc AS DOUBLE) * CAST(nq AS DOUBLE)), 9) DESC,
-        |      neighbor_id) AS rank
-        | FROM d)
-        |SELECT query_id, query_label, neighbor_id, neighbor_label, cos, rank
-        |FROM r WHERE rank <= 3
-        |ORDER BY query_id, rank""".stripMargin,
-
-    // Same gram CTEs as jpairs, pair oriented so the smaller set is the
-    // contained side; filter on unrounded containment like the engine.
-    "x_containment" ->
-      raw"""WITH toks AS (
-         | SELECT doc_id, regexp_split_to_array(TRIM(text), '\s+') AS tok
-         | FROM documents),
-         |g0 AS (
-         | SELECT doc_id, unnest(CASE WHEN len(tok) < 5 THEN [array_to_string(tok, ' ')]
-         |   ELSE list_transform(range(1, len(tok) - 3),
-         |     i -> list_extract(tok, i) || ' ' || list_extract(tok, i + 1) || ' ' || list_extract(tok, i + 2) || ' ' || list_extract(tok, i + 3) || ' ' || list_extract(tok, i + 4)) END) AS gram
-         | FROM toks),
-         |grams AS (SELECT DISTINCT doc_id, gram FROM g0),
-         |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id),
-         |inter AS (
-         | SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-         | FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-         | GROUP BY 1, 2),
-         |o AS (
-         | SELECT CASE WHEN sa.sz <= sb.sz THEN id_a ELSE id_b END AS id_small,
-         |  CASE WHEN sa.sz <= sb.sz THEN id_b ELSE id_a END AS id_big,
-         |  LEAST(sa.sz, sb.sz) AS szs, sa.sz + sb.sz - inter AS uni, inter
-         | FROM inter
-         | JOIN sizes sa ON sa.doc_id = id_a
-         | JOIN sizes sb ON sb.doc_id = id_b)
-         |SELECT id_small, id_big,
-         | ROUND(CAST(inter AS DOUBLE) / CAST(szs AS DOUBLE), 9) AS containment,
-         | ROUND(CAST(inter AS DOUBLE) / CAST(uni AS DOUBLE), 9) AS jaccard
-         |FROM o
-         |WHERE CAST(inter AS DOUBLE) / CAST(szs AS DOUBLE) >= 0.5
-         |ORDER BY id_small, id_big""".stripMargin,
-
-    // jpairs closure, then each component keeps FIRST(doc_id ORDER BY
-    // n_chars DESC, doc_id) — the engine's min-of-(−score, id) struct.
-    "x_dedup_keepbest" ->
-      s"""WITH RECURSIVE ${ngramPairsCte(0.5)},
-         |edges AS (
-         | SELECT id_a AS u, id_b AS v FROM jpairs
-         | UNION
-         | SELECT id_b AS u, id_a AS v FROM jpairs),
-         |reach AS (
-         | SELECT u AS node, u AS lab FROM edges
-         | UNION
-         | SELECT e.v AS node, r.lab AS lab
-         | FROM reach r JOIN edges e ON e.u = r.node),
-         |labels AS (SELECT node, MIN(lab) AS label FROM reach GROUP BY node),
-         |members AS (
-         | SELECT d.doc_id, d.n_chars, l.label
-         | FROM documents d JOIN labels l ON l.node = d.doc_id),
-         |winners AS (
-         | SELECT label, FIRST(doc_id ORDER BY n_chars DESC, doc_id) AS w
-         | FROM members GROUP BY label)
-         |SELECT d.doc_id, d.n_chars FROM documents d
-         |WHERE d.doc_id NOT IN (
-         | SELECT m.doc_id FROM members m
-         | JOIN winners w ON m.label = w.label AND m.doc_id <> w.w)
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // Union of the jpairs text chain and the lang-blocked decimal-cosine
-    // pairs, then the x_dedup_drop recursive closure over BOTH.
-    "x_hybrid_dedup" ->
-      s"""WITH RECURSIVE ${ngramPairsCte(0.5)},
-         |zz AS (
-         | SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         |  CAST(unnest(a.embedding) AS DOUBLE) AS x,
-         |  CAST(unnest(b.embedding) AS DOUBLE) AS y
-         | FROM (SELECT e.*, d.lang FROM embeddings e
-         |        JOIN documents d ON d.doc_id = e.vec_id) a
-         |   JOIN (SELECT e.*, d.lang FROM embeddings e
-         |        JOIN documents d ON d.doc_id = e.vec_id) b
-         |   ON a.lang = b.lang AND a.vec_id < b.vec_id),
-         |dd AS (
-         | SELECT id_a, id_b,
-         |  SUM(CAST(x * y AS DECIMAL(30,15))) AS dot,
-         |  SUM(CAST(x * x AS DECIMAL(30,15))) AS na,
-         |  SUM(CAST(y * y AS DECIMAL(30,15))) AS nb
-         | FROM zz GROUP BY id_a, id_b),
-         |spairs AS (
-         | SELECT id_a, id_b FROM dd
-         | WHERE ROUND(CAST(dot AS DOUBLE) /
-         |   SQRT(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)), 9) >= 0.35),
-         |allp AS (SELECT id_a, id_b FROM jpairs
-         | UNION SELECT id_a, id_b FROM spairs),
-         |edges AS (
-         | SELECT id_a AS u, id_b AS v FROM allp
-         | UNION
-         | SELECT id_b AS u, id_a AS v FROM allp),
-         |reach AS (
-         | SELECT u AS node, u AS lab FROM edges
-         | UNION
-         | SELECT e.v AS node, r.lab AS lab
-         | FROM reach r JOIN edges e ON e.u = r.node),
-         |labels AS (SELECT node, MIN(lab) AS label FROM reach GROUP BY node)
-         |SELECT doc_id, lang FROM documents
-         |WHERE doc_id NOT IN (SELECT node FROM labels WHERE label <> node)
-         |ORDER BY doc_id""".stripMargin,
-
-    // Same α-power chain; POWER's ulp is absorbed by round-9, the
-    // normalizer sums in DECIMAL.
-    "x_temperature" ->
-      """WITH c AS (SELECT lang, COUNT(*) AS n_rows FROM documents GROUP BY 1),
-        |n AS (SELECT CAST(SUM(n_rows) AS BIGINT) AS N FROM c),
-        |wp AS (SELECT lang, n_rows,
-        |  CAST(n_rows AS DOUBLE) / CAST(n.N AS DOUBLE) AS p,
-        |  POWER(CAST(n_rows AS DOUBLE) / CAST(n.N AS DOUBLE),
-        |    CAST(0.5 AS DOUBLE)) AS s
-        | FROM c CROSS JOIN n),
-        |z AS (SELECT CAST(SUM(CAST(s AS DECIMAL(30,15))) AS DOUBLE) AS Z
-        | FROM wp)
-        |SELECT lang, n_rows, ROUND(p, 9) AS p, ROUND(s / z.Z, 9) AS q,
-        | ROUND(s / z.Z / p, 9) AS weight
-        |FROM wp CROSS JOIN z ORDER BY lang""".stripMargin,
-
-    // Distinct space-joined 5-gram strings where the engine counts
-    // distinct xxhash64 gram hashes — identical modulo collision.
-    "x_dup_coverage" ->
-      """WITH toks AS (
-        | SELECT doc_id, CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |g AS (SELECT DISTINCT doc_id, gram FROM (
-        | SELECT doc_id, unnest(list_transform(range(1, len(tok) - 3),
-        |   i -> array_to_string(tok[i:i+4], ' '))) AS gram
-        | FROM toks WHERE len(tok) >= 5)),
-        |dup AS (SELECT gram FROM (
-        | SELECT gram, COUNT(*) AS df FROM g GROUP BY 1) WHERE df >= 2),
-        |nd AS (SELECT doc_id, COUNT(*) AS nd
-        | FROM g JOIN dup USING (gram) GROUP BY 1),
-        |ng AS (SELECT doc_id, COUNT(*) AS ng FROM g GROUP BY 1)
-        |SELECT d.doc_id, COALESCE(ng.ng, 0) AS n_grams,
-        | CASE WHEN ng.ng IS NOT NULL THEN COALESCE(nd.nd, 0) ELSE 0 END AS n_dup,
-        | ROUND(CAST(COALESCE(nd.nd, 0) AS DOUBLE) / CAST(ng.ng AS DOUBLE), 9)
-        |   AS dup_frac
-        |FROM documents d LEFT JOIN ng USING (doc_id) LEFT JOIN nd USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "x_sample" ->
-      """SELECT doc_id, lang FROM documents
-        |WHERE substring(md5(lang || ':' || CAST(doc_id AS VARCHAR)), 1, 1) <
-        |  (CASE WHEN lang = 'en' THEN '8' ELSE '1' END)
-        |ORDER BY doc_id""".stripMargin,
-
-    // Split key hashes through the length-prefixed encoding
-    // (v<len>:<key>); 16-bit cutoffs cccd (0.8) and e666 (0.9).
-    "x_split" ->
-      """SELECT doc_id, lang,
-        | CASE WHEN substring(md5(
-        |        'v' || CAST(length(CAST(doc_id AS VARCHAR)) AS VARCHAR)
-        |        || ':' || CAST(doc_id AS VARCHAR)), 1, 4) < 'cccd'
-        |      THEN 'train'
-        |      WHEN substring(md5(
-        |        'v' || CAST(length(CAST(doc_id AS VARCHAR)) AS VARCHAR)
-        |        || ':' || CAST(doc_id AS VARCHAR)), 1, 4) < 'e666'
-        |      THEN 'val'
-        |      ELSE 'test' END AS split
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // One md5 weight table (the same length-prefixed encoding + '#'
-    // separator), argmax over i < 32 for today's map and over all 33
-    // for tomorrow's — hex strings compare lexicographically ≡
-    // numerically on both engines.
-    "x_shard" ->
-      """WITH k AS (SELECT doc_id,
-        |  'v' || CAST(length(CAST(doc_id AS VARCHAR)) AS VARCHAR)
-        |    || ':' || CAST(doc_id AS VARCHAR) AS ek
-        | FROM documents),
-        |w AS (SELECT doc_id, r.i AS i,
-        |   md5(ek || '#' || CAST(r.i AS VARCHAR)) AS h
-        | FROM k, range(0, 33) r(i)),
-        |s1 AS (SELECT doc_id, CAST(arg_max(i, h) AS BIGINT) AS shard
-        | FROM w WHERE i < 32 GROUP BY doc_id),
-        |s2 AS (SELECT doc_id, CAST(arg_max(i, h) AS BIGINT) AS shard_next
-        | FROM w GROUP BY doc_id)
-        |SELECT s1.doc_id, s1.shard, s2.shard_next,
-        |  s1.shard <> s2.shard_next AS moved
-        |FROM s1 JOIN s2 USING (doc_id) ORDER BY doc_id""".stripMargin,
-
-    // Units are the same 10-word spans (partial tail included) the Spark
-    // side derives via wordSpans(text, 10); df counts DISTINCT docs.
-    "x_line_dedup" ->
-      """WITH toks AS (
-        | SELECT doc_id, regexp_split_to_array(TRIM(text), '\s+') w
-        | FROM documents),
-        |idx AS (
-        | SELECT doc_id, w, unnest(generate_series(1, len(w))) ord FROM toks),
-        |units AS (
-        | SELECT doc_id, CAST(floor((ord-1)/10) AS BIGINT) g,
-        |  string_agg(w[ord], ' ' ORDER BY ord) u
-        | FROM idx GROUP BY doc_id, g),
-        |freq AS (
-        | SELECT u FROM units GROUP BY u HAVING count(DISTINCT doc_id) >= 2),
-        |kept AS (
-        | SELECT doc_id, g, u FROM units WHERE u NOT IN (SELECT u FROM freq)),
-        |rebuilt AS (
-        | SELECT doc_id, string_agg(u, ' ' ORDER BY g) clean_text, count(*) nk
-        | FROM kept GROUP BY doc_id),
-        |tot AS (SELECT doc_id, count(*) nt FROM units GROUP BY doc_id)
-        |SELECT t.doc_id, coalesce(r.clean_text, '') AS clean_text,
-        | CAST(t.nt - coalesce(r.nk, 0) AS BIGINT) AS n_units_removed
-        |FROM tot t LEFT JOIN rebuilt r ON t.doc_id = r.doc_id
-        |ORDER BY t.doc_id""".stripMargin,
-
-    // Same anchor/span/cut skeleton as x_substring_dedup, with the
-    // benchmark slice's distinct anchor grams as the mark set.
-    "x_decontam_spans" ->
-      """WITH train AS (
-        | SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 0),
-        |bench AS (SELECT text FROM documents WHERE doc_id % 10 = 0),
-        |tp AS (
-        | SELECT doc_id, text,
-        |  CAST(UNNEST(range(0, GREATEST(length(text) - 19, 0))) AS INT) AS s
-        | FROM train),
-        |ta AS (
-        | SELECT doc_id, s, substr(text, s + 1, 20) AS w FROM tp
-        | WHERE substr(md5(substr(text, s + 1, 20)), 1, 2) < '10'),
-        |bp AS (
-        | SELECT text,
-        |  CAST(UNNEST(range(0, GREATEST(length(text) - 19, 0))) AS INT) AS s
-        | FROM bench),
-        |bv AS (
-        | SELECT DISTINCT substr(text, s + 1, 20) AS w FROM bp
-        | WHERE substr(md5(substr(text, s + 1, 20)), 1, 2) < '10'),
-        |dup AS (SELECT ta.doc_id, ta.s FROM ta JOIN bv USING (w)),
-        |runs AS (
-        | SELECT doc_id, s,
-        |  SUM(CASE WHEN gap IS NULL OR gap > 100 THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY doc_id ORDER BY s) AS run
-        | FROM (SELECT doc_id, s,
-        |        s - LAG(s) OVER (PARTITION BY doc_id ORDER BY s) AS gap
-        |       FROM dup) g),
-        |spans AS (
-        | SELECT doc_id, run, MIN(s) AS s0, MAX(s) + 20 AS e0, COUNT(*) AS na
-        | FROM runs GROUP BY doc_id, run),
-        |pieces AS (
-        | SELECT doc_id, s0, e0,
-        |  substr(text, COALESCE(LAG(e0) OVER w2, 0) + 1,
-        |         s0 - COALESCE(LAG(e0) OVER w2, 0)) AS piece
-        | FROM spans JOIN train USING (doc_id)
-        | WINDOW w2 AS (PARTITION BY doc_id ORDER BY s0)),
-        |rebuilt AS (
-        | SELECT doc_id, string_agg(piece, '' ORDER BY s0) AS head,
-        |        MAX(e0) AS laste
-        | FROM pieces GROUP BY doc_id),
-        |stats AS (
-        | SELECT doc_id, COUNT(*) AS n_spans, SUM(na) AS n_contam_anchors,
-        |        SUM(e0 - s0) AS contam_chars
-        | FROM spans GROUP BY doc_id)
-        |SELECT d.doc_id,
-        | CAST(COALESCE(st.n_spans, 0) AS BIGINT) AS n_spans,
-        | CAST(COALESCE(st.n_contam_anchors, 0) AS BIGINT) AS n_contam_anchors,
-        | CAST(COALESCE(st.contam_chars, 0) AS BIGINT) AS contam_chars,
-        | CAST(length(d.text) - COALESCE(st.contam_chars, 0) AS BIGINT) AS clean_len,
-        | COALESCE(r.head, '') || substr(d.text, COALESCE(r.laste, 0) + 1)
-        |   AS clean_text
-        |FROM train d
-        |LEFT JOIN stats st USING (doc_id)
-        |LEFT JOIN rebuilt r USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Anchor selection = md5-prefix cutoff, identical in both engines;
-    // spans from the same LAG/run-id merge; clean_text stitched from the
-    // inter-span pieces.
-    "x_substring_dedup" ->
-      """WITH pos AS (
-        | SELECT doc_id, text,
-        |  CAST(UNNEST(range(0, GREATEST(length(text) - 19, 0))) AS INT) AS s
-        | FROM documents),
-        |a AS (
-        | SELECT doc_id, s, substr(text, s + 1, 20) AS w FROM pos
-        | WHERE substr(md5(substr(text, s + 1, 20)), 1, 2) < '10'),
-        |freq AS (SELECT w FROM a GROUP BY w HAVING COUNT(*) >= 2),
-        |dup AS (SELECT a.doc_id, a.s FROM a JOIN freq USING (w)),
-        |runs AS (
-        | SELECT doc_id, s,
-        |  SUM(CASE WHEN gap IS NULL OR gap > 100 THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY doc_id ORDER BY s) AS run
-        | FROM (SELECT doc_id, s,
-        |        s - LAG(s) OVER (PARTITION BY doc_id ORDER BY s) AS gap
-        |       FROM dup) g),
-        |spans AS (
-        | SELECT doc_id, run, MIN(s) AS s0, MAX(s) + 20 AS e0, COUNT(*) AS na
-        | FROM runs GROUP BY doc_id, run),
-        |pieces AS (
-        | SELECT doc_id, s0, e0,
-        |  substr(text, COALESCE(LAG(e0) OVER w2, 0) + 1,
-        |         s0 - COALESCE(LAG(e0) OVER w2, 0)) AS piece
-        | FROM spans JOIN documents USING (doc_id)
-        | WINDOW w2 AS (PARTITION BY doc_id ORDER BY s0)),
-        |rebuilt AS (
-        | SELECT doc_id, string_agg(piece, '' ORDER BY s0) AS head,
-        |        MAX(e0) AS laste
-        | FROM pieces GROUP BY doc_id),
-        |stats AS (
-        | SELECT doc_id, COUNT(*) AS n_spans, SUM(na) AS n_dup_anchors,
-        |        SUM(e0 - s0) AS dup_chars
-        | FROM spans GROUP BY doc_id)
-        |SELECT d.doc_id,
-        | CAST(COALESCE(st.n_spans, 0) AS BIGINT) AS n_spans,
-        | CAST(COALESCE(st.n_dup_anchors, 0) AS BIGINT) AS n_dup_anchors,
-        | CAST(COALESCE(st.dup_chars, 0) AS BIGINT) AS dup_chars,
-        | CAST(length(d.text) - COALESCE(st.dup_chars, 0) AS BIGINT) AS clean_len,
-        | COALESCE(r.head, '') || substr(d.text, COALESCE(r.laste, 0) + 1)
-        |   AS clean_text
-        |FROM documents d
-        |LEFT JOIN stats st USING (doc_id)
-        |LEFT JOIN rebuilt r USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Inclusive running token sum over (quality DESC, doc_id) — DuckDB
-    // runs the plain global window; the Spark side's bucket-decomposed
-    // sum must be bit-identical to it.
-    // DuckDB runs the plain per-language window; the engine's bucket-
-    // decomposed rank must equal it exactly. pct is one IEEE division of
-    // two exact integers.
-    "x_score_calibrate" ->
-      """WITH toks AS (
-        | SELECT doc_id, lang, text,
-        |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |       ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |scored AS (
-        | SELECT doc_id, lang,
-        |  LEAST(1.0, CAST(len(tok) AS DOUBLE) / 100.0) *
-        |   (1.0 - CASE WHEN LENGTH(text) = 0 THEN 0.0
-        |     ELSE CAST(LENGTH(regexp_replace(text, '[^.,!?;:''"()-]', '', 'g')) AS DOUBLE)
-        |          / CAST(LENGTH(text) AS DOUBLE) END) AS quality
-        | FROM toks),
-        |r AS (
-        | SELECT doc_id, lang, quality,
-        |  CAST(ROW_NUMBER() OVER (PARTITION BY lang
-        |    ORDER BY quality, doc_id) AS BIGINT) AS rank_in_group,
-        |  COUNT(*) OVER (PARTITION BY lang) AS n
-        | FROM scored)
-        |SELECT doc_id, lang, quality, rank_in_group,
-        | CASE WHEN n > 1
-        |   THEN CAST(rank_in_group - 1 AS DOUBLE) / CAST(n - 1 AS DOUBLE)
-        |   ELSE 0.0 END AS pct
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    "x_budget_select" ->
-      """WITH toks AS (
-        | SELECT doc_id, text,
-        |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |       ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |scored AS (
-        | SELECT doc_id,
-        |  LEAST(1.0, CAST(len(tok) AS DOUBLE) / 100.0) *
-        |   (1.0 - CASE WHEN LENGTH(text) = 0 THEN 0.0
-        |     ELSE CAST(LENGTH(regexp_replace(text, '[^.,!?;:''"()-]', '', 'g')) AS DOUBLE)
-        |          / CAST(LENGTH(text) AS DOUBLE) END) AS quality,
-        |  CAST(len(tok) AS BIGINT) AS n_tokens
-        | FROM toks),
-        |cum AS (
-        | SELECT doc_id, quality, n_tokens,
-        |  CAST(SUM(n_tokens) OVER (ORDER BY quality DESC, doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_cost
-        | FROM scored)
-        |SELECT doc_id, quality, n_tokens, cum_cost,
-        | cum_cost <= 600 AS selected
-        |FROM cum ORDER BY doc_id""".stripMargin,
-
-    // Oracle runs the plain per-group global window; the engine's
-    // group+bucket decomposition must hash-match it bit-for-bit.
-    "x_budget_by_lang" ->
-      """WITH toks AS (
-        | SELECT doc_id, lang, text,
-        |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |       ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |scored AS (
-        | SELECT doc_id, lang,
-        |  LEAST(1.0, CAST(len(tok) AS DOUBLE) / 100.0) *
-        |   (1.0 - CASE WHEN LENGTH(text) = 0 THEN 0.0
-        |     ELSE CAST(LENGTH(regexp_replace(text, '[^.,!?;:''"()-]', '', 'g')) AS DOUBLE)
-        |          / CAST(LENGTH(text) AS DOUBLE) END) AS quality,
-        |  CAST(len(tok) AS BIGINT) AS n_tokens
-        | FROM toks),
-        |cum AS (
-        | SELECT doc_id, lang, quality, n_tokens,
-        |  CAST(SUM(n_tokens) OVER (PARTITION BY lang
-        |    ORDER BY quality DESC, doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_cost
-        | FROM scored)
-        |SELECT doc_id, lang, quality, n_tokens, cum_cost,
-        | cum_cost <= CASE lang WHEN 'en' THEN 2000 WHEN 'zh' THEN 800
-        |   ELSE 500 END AS selected
-        |FROM cum ORDER BY doc_id""".stripMargin,
-
-    // Unrolled 3-round full-batch GD: w0 = 0 (round 1 residual = −y);
-    // per-round pred/grad sums are double products summed in
-    // DECIMAL(30,15); updates are scalar double w − (1e-4 · g).
-    "x_train_probe" ->
-      """WITH toks AS (
-        | SELECT doc_id, CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |      ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |feat AS (
-        | SELECT doc_id,
-        |  CAST(CAST(CONCAT('0x', substring(md5(t.tok), 1, 4)) AS INTEGER) % 64 AS INTEGER) AS bucket,
-        |  COUNT(*) AS cnt
-        | FROM (SELECT doc_id, unnest(tok) AS tok FROM toks) t
-        | GROUP BY 1, 2),
-        |lab AS (
-        | SELECT doc_id,
-        |  CAST(CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS DOUBLE) AS y
-        | FROM documents),
-        |b AS (SELECT CAST(unnest(range(64)) AS INTEGER) AS bucket),
-        |g1 AS (
-        | SELECT f.bucket,
-        |  CAST(SUM(CAST(CAST(f.cnt AS DOUBLE) * (0.0 - l.y) AS DECIMAL(30,15))) AS DOUBLE) AS g
-        | FROM feat f JOIN lab l USING (doc_id) GROUP BY 1),
-        |w1 AS (
-        | SELECT b.bucket,
-        |  CASE WHEN g1.g IS NULL THEN 0.0 ELSE 0.0 - (1e-4 * g1.g) END AS w
-        | FROM b LEFT JOIN g1 USING (bucket)),
-        |p2 AS (
-        | SELECT f.doc_id,
-        |  CAST(SUM(CAST(w1.w * CAST(f.cnt AS DOUBLE) AS DECIMAL(30,15))) AS DOUBLE) AS pred
-        | FROM feat f JOIN w1 USING (bucket) GROUP BY 1),
-        |r2 AS (
-        | SELECT l.doc_id, COALESCE(p2.pred, 0.0) - l.y AS resid
-        | FROM lab l LEFT JOIN p2 USING (doc_id)),
-        |g2 AS (
-        | SELECT f.bucket,
-        |  CAST(SUM(CAST(CAST(f.cnt AS DOUBLE) * r2.resid AS DECIMAL(30,15))) AS DOUBLE) AS g
-        | FROM feat f JOIN r2 USING (doc_id) GROUP BY 1),
-        |w2 AS (
-        | SELECT w1.bucket,
-        |  CASE WHEN g2.g IS NULL THEN w1.w ELSE w1.w - (1e-4 * g2.g) END AS w
-        | FROM w1 LEFT JOIN g2 USING (bucket)),
-        |p3 AS (
-        | SELECT f.doc_id,
-        |  CAST(SUM(CAST(w2.w * CAST(f.cnt AS DOUBLE) AS DECIMAL(30,15))) AS DOUBLE) AS pred
-        | FROM feat f JOIN w2 USING (bucket) GROUP BY 1),
-        |r3 AS (
-        | SELECT l.doc_id, COALESCE(p3.pred, 0.0) - l.y AS resid
-        | FROM lab l LEFT JOIN p3 USING (doc_id)),
-        |g3 AS (
-        | SELECT f.bucket,
-        |  CAST(SUM(CAST(CAST(f.cnt AS DOUBLE) * r3.resid AS DECIMAL(30,15))) AS DOUBLE) AS g
-        | FROM feat f JOIN r3 USING (doc_id) GROUP BY 1),
-        |w3 AS (
-        | SELECT w2.bucket,
-        |  CASE WHEN g3.g IS NULL THEN w2.w ELSE w2.w - (1e-4 * g3.g) END AS w
-        | FROM w2 LEFT JOIN g3 USING (bucket))
-        |SELECT bucket, ROUND(w, 9) AS weight FROM w3 ORDER BY bucket""".stripMargin,
-
-    // Same unrolled training chain, then w·x scoring with the ROUNDED
-    // published weights (what a consumer of the weight table would use).
-    // fastText inference: the same feature list (unigrams + positional
-    // bigrams), the '0x'-cast md5 bucket, DECIMAL(30,15) weight sums,
-    // and the sign-thresholded label — score exact, prob not oracled.
-    "x_fasttext" ->
-      """WITH toks AS (
-        | SELECT doc_id, CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |wt AS (SELECT list_transform(range(0, 64),
-        |  b -> (CAST((b*37) % 13 AS DOUBLE) - CAST(6.0 AS DOUBLE))
-        |    / CAST(8.0 AS DOUBLE)) AS w),
-        |f AS (SELECT doc_id, list_concat(tok,
-        |   list_transform(range(1, len(tok)),
-        |     i -> tok[i] || ' ' || tok[i+1])) AS feats
-        | FROM toks),
-        |s AS (SELECT doc_id, len(feats) AS n,
-        |  COALESCE(list_sum(list_transform(feats,
-        |    g -> CAST(w[CAST(CAST(CONCAT('0x', substring(md5(g), 1, 4))
-        |      AS INTEGER) % 64 AS INTEGER) + 1] AS DECIMAL(30,15)))),
-        |   CAST(0 AS DECIMAL(30,15))) AS sm
-        | FROM f CROSS JOIN wt),
-        |sc AS (SELECT doc_id, n,
-        |  CASE WHEN n > 0
-        |   THEN CAST(sm AS DOUBLE) / CAST(n AS DOUBLE)
-        |     + CAST(-0.25 AS DOUBLE)
-        |   ELSE CAST(-0.25 AS DOUBLE) END AS score
-        | FROM s)
-        |SELECT doc_id, CAST(n AS BIGINT) AS n_feats,
-        | ROUND(score, 9) AS score,
-        | CASE WHEN score >= 0 THEN 'keep' ELSE 'drop' END AS label
-        |FROM sc ORDER BY doc_id""".stripMargin,
-
-    "x_probe_score" ->
-      ("""WITH toks AS (
-        | SELECT doc_id, CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |      ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |feat AS (
-        | SELECT doc_id,
-        |  CAST(CAST(CONCAT('0x', substring(md5(t.tok), 1, 4)) AS INTEGER) % 64 AS INTEGER) AS bucket,
-        |  COUNT(*) AS cnt
-        | FROM (SELECT doc_id, unnest(tok) AS tok FROM toks) t
-        | GROUP BY 1, 2),
-        |lab AS (
-        | SELECT doc_id,
-        |  CAST(CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS DOUBLE) AS y
-        | FROM documents),
-        |b AS (SELECT CAST(unnest(range(64)) AS INTEGER) AS bucket),
-        |g1 AS (
-        | SELECT f.bucket,
-        |  CAST(SUM(CAST(CAST(f.cnt AS DOUBLE) * (0.0 - l.y) AS DECIMAL(30,15))) AS DOUBLE) AS g
-        | FROM feat f JOIN lab l USING (doc_id) GROUP BY 1),
-        |w1 AS (
-        | SELECT b.bucket,
-        |  CASE WHEN g1.g IS NULL THEN 0.0 ELSE 0.0 - (1e-4 * g1.g) END AS w
-        | FROM b LEFT JOIN g1 USING (bucket)),
-        |p2 AS (
-        | SELECT f.doc_id,
-        |  CAST(SUM(CAST(w1.w * CAST(f.cnt AS DOUBLE) AS DECIMAL(30,15))) AS DOUBLE) AS pred
-        | FROM feat f JOIN w1 USING (bucket) GROUP BY 1),
-        |r2 AS (
-        | SELECT l.doc_id, COALESCE(p2.pred, 0.0) - l.y AS resid
-        | FROM lab l LEFT JOIN p2 USING (doc_id)),
-        |g2 AS (
-        | SELECT f.bucket,
-        |  CAST(SUM(CAST(CAST(f.cnt AS DOUBLE) * r2.resid AS DECIMAL(30,15))) AS DOUBLE) AS g
-        | FROM feat f JOIN r2 USING (doc_id) GROUP BY 1),
-        |w2 AS (
-        | SELECT w1.bucket,
-        |  CASE WHEN g2.g IS NULL THEN w1.w ELSE w1.w - (1e-4 * g2.g) END AS w
-        | FROM w1 LEFT JOIN g2 USING (bucket)),
-        |p3 AS (
-        | SELECT f.doc_id,
-        |  CAST(SUM(CAST(w2.w * CAST(f.cnt AS DOUBLE) AS DECIMAL(30,15))) AS DOUBLE) AS pred
-        | FROM feat f JOIN w2 USING (bucket) GROUP BY 1),
-        |r3 AS (
-        | SELECT l.doc_id, COALESCE(p3.pred, 0.0) - l.y AS resid
-        | FROM lab l LEFT JOIN p3 USING (doc_id)),
-        |g3 AS (
-        | SELECT f.bucket,
-        |  CAST(SUM(CAST(CAST(f.cnt AS DOUBLE) * r3.resid AS DECIMAL(30,15))) AS DOUBLE) AS g
-        | FROM feat f JOIN r3 USING (doc_id) GROUP BY 1),
-        |w3 AS (
-        | SELECT w2.bucket,
-        |  CASE WHEN g3.g IS NULL THEN w2.w ELSE w2.w - (1e-4 * g3.g) END AS w
-        | FROM w2 LEFT JOIN g3 USING (bucket)),
-        |wf AS (SELECT bucket, ROUND(w, 9) AS w FROM w3),
-        |sc AS (
-        | SELECT f.doc_id,
-        |  CAST(SUM(CAST(wf.w * CAST(f.cnt AS DOUBLE) AS DECIMAL(30,15))) AS DOUBLE) AS s
-        | FROM feat f JOIN wf USING (bucket) GROUP BY 1)
-        |SELECT d.doc_id, ROUND(COALESCE(sc.s, 0.0), 9) AS probe_score
-        |FROM documents d LEFT JOIN sc USING (doc_id)
-        |ORDER BY d.doc_id""").stripMargin,
-
-    "x_quantize" ->
-      """WITH s AS (
-        | SELECT vec_id, embedding,
-        |  CASE WHEN GREATEST(ABS(list_max(embedding)), ABS(list_min(embedding))) = 0
-        |       THEN 0.0
-        |       ELSE 127.0 / CAST(GREATEST(ABS(list_max(embedding)),
-        |                                  ABS(list_min(embedding))) AS DOUBLE)
-        |  END AS scale
-        | FROM embeddings),
-        |e AS (
-        | SELECT vec_id, scale,
-        |  unnest(list_transform(range(1, len(embedding) + 1),
-        |    i -> {'dim': i, 'v': embedding[i]})) AS u
-        | FROM s)
-        |SELECT vec_id, CAST(u.dim AS BIGINT) AS dim,
-        | CAST(ROUND(CAST(u.v AS DOUBLE) * scale) AS INTEGER) AS q, scale
-        |FROM e ORDER BY vec_id, dim""".stripMargin,
-
-    // Same decimal-mean centroids as x_centroid, then per-vector decimal
-    // cosine against its own label's centroid.
-    "x_centroid_outlier" ->
-      """WITH ex AS (
-        | SELECT vec_id, label,
-        |  unnest(list_transform(range(1, len(embedding) + 1),
-        |    i -> {'dim': i, 'v': embedding[i]})) AS u
-        | FROM embeddings),
-        |cent AS (
-        | SELECT label, u.dim AS dim,
-        |  ROUND(CAST(SUM(CAST(CAST(u.v AS DOUBLE) AS DECIMAL(30,15))) AS DOUBLE) /
-        |    CAST(COUNT(*) AS DOUBLE), 9) AS c
-        | FROM ex GROUP BY label, dim),
-        |j AS (
-        | SELECT x.vec_id, x.label,
-        |  SUM(CAST(CAST(x.u.v AS DOUBLE) * cent.c AS DECIMAL(30,15))) AS dot,
-        |  SUM(CAST(CAST(x.u.v AS DOUBLE) * CAST(x.u.v AS DOUBLE) AS DECIMAL(30,15))) AS nv,
-        |  SUM(CAST(cent.c * cent.c AS DECIMAL(30,15))) AS nc
-        | FROM ex x JOIN cent ON x.label = cent.label AND x.u.dim = cent.dim
-        | GROUP BY x.vec_id, x.label)
-        |SELECT e.vec_id, e.label,
-        | ROUND(CAST(j.dot AS DOUBLE) /
-        |   SQRT(CAST(j.nv AS DOUBLE) * CAST(j.nc AS DOUBLE)), 9) AS cos_centroid,
-        | COALESCE(ROUND(CAST(j.dot AS DOUBLE) /
-        |   SQRT(CAST(j.nv AS DOUBLE) * CAST(j.nc AS DOUBLE)), 9) < 0.0, FALSE)
-        |   AS is_outlier
-        |FROM embeddings e LEFT JOIN j ON e.vec_id = j.vec_id
-        |ORDER BY e.vec_id""".stripMargin,
-
-    "x_centroid" ->
-      """WITH e AS (
-        | SELECT label,
-        |  unnest(list_transform(range(1, len(embedding) + 1),
-        |    i -> {'dim': i, 'v': embedding[i]})) AS u
-        | FROM embeddings)
-        |SELECT label, CAST(u.dim AS BIGINT) AS dim,
-        | ROUND(CAST(SUM(CAST(CAST(u.v AS DOUBLE) AS DECIMAL(30,15))) AS DOUBLE) /
-        |   CAST(COUNT(*) AS DOUBLE), 9) AS centroid
-        |FROM e GROUP BY label, dim ORDER BY label, dim""".stripMargin,
-
-    // Full unrolled 2-round Lloyd chain — cluster ids AND cosines must
-    // hash-match the engine's bit-for-bit.
-    "x_kmeans" ->
-      s"""WITH $kmeansCte
-         |SELECT vec_id, cluster, cos_to_centroid FROM kassign
-         |ORDER BY vec_id""".stripMargin,
-
-    // Same chain, rolled up per cluster; the mean accumulates the
-    // round-9 cosines in DECIMAL exactly as the engine does.
-    "x_cluster_report" ->
-      s"""WITH $kmeansCte
-         |SELECT cluster, COUNT(*) AS n,
-         | ROUND(CAST(SUM(CAST(cos_to_centroid AS DECIMAL(30,15))) AS DOUBLE) /
-         |   CAST(COUNT(*) AS DOUBLE), 9) AS mean_cos,
-         | MIN(cos_to_centroid) AS min_cos, MAX(cos_to_centroid) AS max_cos
-         |FROM kassign GROUP BY cluster ORDER BY cluster""".stripMargin,
-
-    // Same chain + the exactKPerStratum md5 rank (the x_sample_k
-    // discipline) per cluster.
-    "x_cluster_sample" ->
-      s"""WITH $kmeansCte
-         |SELECT cluster, vec_id FROM (
-         | SELECT cluster, vec_id,
-         |  ROW_NUMBER() OVER (PARTITION BY cluster
-         |    ORDER BY md5(CAST(cluster AS VARCHAR) || ':' ||
-         |                 CAST(vec_id AS VARCHAR)), vec_id) AS rk
-         | FROM kassign)
-         |WHERE rk <= 20 ORDER BY cluster, vec_id""".stripMargin,
-
-    "x_chunk" ->
-      """WITH toks AS (
-        | SELECT doc_id, CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |c AS (
-        | SELECT doc_id, tok,
-        |  CASE WHEN len(tok) = 0 THEN 0
-        |       ELSE GREATEST(CAST(CEIL(CAST(len(tok) - 64 AS DOUBLE) / 48)
-        |              AS BIGINT), 0) + 1 END AS n_chunks
-        | FROM toks)
-        |SELECT doc_id, CAST(u AS INTEGER) AS chunk_idx,
-        | CAST(u * 48 AS BIGINT) AS token_start,
-        | array_to_string(tok[(u * 48 + 1):(u * 48 + 64)], ' ') AS chunk_text
-        |FROM (SELECT doc_id, tok, unnest(range(0, n_chunks)) AS u FROM c)
-        |ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // Recursive CTEs can't aggregate over the recursive table, so the 5
-    // fixed rounds unroll into 5 identical step CTEs. All float ops are
-    // written double-explicit ((1.0 - 0.85) stays a double SUB — DuckDB
-    // would otherwise fold it in exact DECIMAL, a different constant).
-    // Two HITS rounds unrolled: per half-round a DECIMAL contribution
-    // sum over the edge join, an exact-decimal L2 normalizer, and a
-    // round-9 normalized score consumed by the next half-round — every
-    // value a short decimal literal, so hubs AND authorities hash-match.
-    // CTEs MATERIALIZED (each h/a table feeds two consumers).
-    "x_hits" -> {
-      def round(i: Int) =
-        s"""araw$i AS MATERIALIZED (
-           | SELECT n.id, COALESCE(s.ar, CAST(0.0 AS DOUBLE)) AS ar
-           | FROM nodes n LEFT JOIN (
-           |  SELECT e.dst AS dst,
-           |   CAST(SUM(CAST(h.h AS DECIMAL(30,15))) AS DOUBLE) AS ar
-           |  FROM e JOIN h${i - 1} h ON e.src = h.id GROUP BY e.dst) s
-           | ON n.id = s.dst),
-           |an$i AS MATERIALIZED (
-           | SELECT CAST(SUM(CAST(ar * ar AS DECIMAL(30,15))) AS DOUBLE) AS s2
-           | FROM araw$i),
-           |a$i AS MATERIALIZED (
-           | SELECT id, CASE WHEN s2 > 0 THEN ROUND(ar / SQRT(s2), 9)
-           |   ELSE CAST(0.0 AS DOUBLE) END AS a
-           | FROM araw$i, an$i),
-           |hraw$i AS MATERIALIZED (
-           | SELECT n.id, COALESCE(s.hr, CAST(0.0 AS DOUBLE)) AS hr
-           | FROM nodes n LEFT JOIN (
-           |  SELECT e.src AS src,
-           |   CAST(SUM(CAST(a.a AS DECIMAL(30,15))) AS DOUBLE) AS hr
-           |  FROM e JOIN a$i a ON e.dst = a.id GROUP BY e.src) s
-           | ON n.id = s.src),
-           |hn$i AS MATERIALIZED (
-           | SELECT CAST(SUM(CAST(hr * hr AS DECIMAL(30,15))) AS DOUBLE) AS s2
-           | FROM hraw$i),
-           |h$i AS MATERIALIZED (
-           | SELECT id, CASE WHEN s2 > 0 THEN ROUND(hr / SQRT(s2), 9)
-           |   ELSE CAST(0.0 AS DOUBLE) END AS h
-           | FROM hraw$i, hn$i)""".stripMargin
-      s"""WITH e AS MATERIALIZED (
-         | SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-         | FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         |nodes AS MATERIALIZED (
-         | SELECT DISTINCT id FROM
-         |  (SELECT src AS id FROM e UNION ALL SELECT dst AS id FROM e)),
-         |h0 AS (SELECT id, CAST(1.0 AS DOUBLE) AS h FROM nodes),
-         |${(1 to 2).map(round).mkString(",\n")}
-         |SELECT h2.id, h2.h AS hub, a2.a AS authority
-         |FROM h2 JOIN a2 ON a2.id = h2.id ORDER BY h2.id""".stripMargin
-    },
-
-    "x_pagerank" -> {
-      def step(i: Int) =
-        s"""r$i AS (
-           | SELECT n.id, n.deg,
-           |  (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) +
-           |  CAST(0.85 AS DOUBLE) * COALESCE(s.in_sum, CAST(0.0 AS DOUBLE)) AS rank
-           | FROM nodes n LEFT JOIN (
-           |  SELECT e.dst AS dst,
-           |   CAST(SUM(CAST(r.rank / CAST(r.deg AS DOUBLE) AS DECIMAL(30,15)))
-           |     AS DOUBLE) AS in_sum
-           |  FROM e JOIN r${i - 1} r ON e.src = r.id GROUP BY e.dst) s
-           | ON n.id = s.dst)""".stripMargin
-      s"""WITH e AS (
-         | SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-         | FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         |deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
-         |nodes AS (
-         | SELECT n.id, COALESCE(d.deg, 0) AS deg
-         | FROM (SELECT DISTINCT id FROM
-         |   (SELECT src AS id FROM e UNION ALL SELECT dst AS id FROM e)) n
-         | LEFT JOIN deg d ON n.id = d.src),
-         |r0 AS (SELECT id, deg, CAST(1.0 AS DOUBLE) AS rank FROM nodes),
-         |${(1 to 5).map(step).mkString(",\n")}
-         |SELECT id, ROUND(rank, 9) AS rank FROM r5 ORDER BY id""".stripMargin
-    },
-
-    // Unrolled Bellman–Ford: each round re-relaxes from the FULL dist
-    // table (provably equal to the engine's delta-set relaxation after
-    // the same round count — old candidates can't beat applied minima);
-    // converged ⇔ round 4 changed nothing ⇔ d3 ≡ d4 as (id, dist) sets.
-    "x_sssp" -> {
-      def step(i: Int) =
-        s"""d$i AS MATERIALIZED (
-           | SELECT id, MIN(dist) AS dist FROM (
-           |  SELECT id, dist FROM d${i - 1}
-           |  UNION ALL
-           |  SELECT e.dst AS id, d.dist + e.w AS dist
-           |  FROM d${i - 1} d JOIN eu e ON e.src = d.id)
-           | GROUP BY id)""".stripMargin
-      s"""WITH e0 AS (
-         | SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst,
-         |  CAST(l_quantity AS BIGINT) AS w
-         | FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         |eu AS MATERIALIZED (
-         | SELECT src, dst, MIN(w) AS w FROM (
-         |  SELECT src, dst, w FROM e0
-         |  UNION ALL SELECT dst AS src, src AS dst, w FROM e0)
-         | GROUP BY src, dst),
-         |d0 AS (
-         | SELECT id, CAST(0 AS BIGINT) AS dist FROM (
-         |  SELECT DISTINCT id FROM
-         |   (SELECT src AS id FROM eu UNION ALL SELECT dst AS id FROM eu))
-         | WHERE id % 100 = 0),
-         |${(1 to 4).map(step).mkString(",\n")}
-         |SELECT d4.id, d4.dist,
-         | (SELECT COUNT(*) FROM d4) =
-         | (SELECT COUNT(*) FROM d3 JOIN d4
-         |   ON d3.id = d4.id AND d3.dist = d4.dist) AS converged
-         |FROM d4 ORDER BY id""".stripMargin
-    },
-
-    // Bit-exact Morton interleave: sums of disjoint-bit terms == OR.
-    "x_zorder" ->
-      """SELECT event_id, user_id,
-        | CAST(list_sum(list_transform(range(0, 16),
-        |   i -> ((((user_id & 65535) >> i) & 1) << (2 * i)) |
-        |        ((((event_id & 65535) >> i) & 1) << ((2 * i) + 1))))
-        |   AS BIGINT) AS z
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    // The oracle's single global window IS the naive plan the operator
-    // avoids — same arithmetic, different execution shape.
-    "x_pack" ->
-      """WITH d AS (
-        | SELECT doc_id,
-        |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0
-        |       ELSE len(regexp_split_to_array(TRIM(text), '\s+')) END AS nt
-        | FROM documents),
-        |o AS (
-        | SELECT doc_id, CAST(nt AS BIGINT) AS n_tokens,
-        |  CAST(COALESCE(SUM(nt) OVER (ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-        |    AS start_offset
-        | FROM d)
-        |SELECT doc_id, n_tokens, start_offset,
-        | CAST((start_offset - start_offset % 2048) / 2048 AS BIGINT) AS chunk_id
-        |FROM o ORDER BY doc_id""".stripMargin,
-
-    // Oracle runs the plain global cumsum + per-doc span arithmetic; the
-    // engine's bucket-decomposed offsets and bounded explode must match
-    // it bit-for-bit.
-    "x_pack_spans" ->
-      """WITH d AS (
-        | SELECT doc_id,
-        |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0
-        |       ELSE len(regexp_split_to_array(TRIM(text), '\s+')) END AS nt
-        | FROM documents),
-        |o AS (
-        | SELECT doc_id, CAST(nt AS BIGINT) AS n_tokens,
-        |  CAST(COALESCE(SUM(nt) OVER (ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-        |    AS start_offset
-        | FROM d),
-        |spans AS (
-        | SELECT doc_id, n_tokens, start_offset,
-        |  CAST(unnest(range(start_offset // 128,
-        |    (start_offset + n_tokens - 1) // 128 + 1)) AS BIGINT) AS seq_id
-        | FROM o WHERE n_tokens > 0)
-        |SELECT doc_id, n_tokens, seq_id,
-        | CAST(GREATEST(start_offset, seq_id * 128) - seq_id * 128 AS BIGINT) AS seq_start,
-        | CAST(GREATEST(start_offset, seq_id * 128) - start_offset AS BIGINT) AS doc_start,
-        | CAST(LEAST(start_offset + n_tokens, (seq_id + 1) * 128)
-        |   - GREATEST(start_offset, seq_id * 128) AS BIGINT) AS span_len
-        |FROM spans ORDER BY doc_id, seq_id""".stripMargin,
-
-    "x_dedup_incremental" ->
-      """WITH old AS (SELECT * FROM documents WHERE doc_id % 3 = 0),
-        |fresh AS (
-        | SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0
-        | UNION ALL
-        | SELECT doc_id + 20000000 AS doc_id, text FROM old WHERE doc_id % 6 = 0)
-        |SELECT doc_id FROM fresh n
-        |WHERE NOT EXISTS (SELECT 1 FROM old o WHERE o.text = n.text)
-        |ORDER BY doc_id""".stripMargin,
-
-    // Derives the same 10-token lines (every third unpunctuated) and
-    // applies the same substring/size gate rules — list lambdas with
-    // 1-based indices, so (i-1) mirrors Spark's 0-based transform.
-    "x_c4_gate" ->
-      """WITH toks AS (
-        | SELECT doc_id,
-        |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |       ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |lined AS (
-        | SELECT doc_id,
-        |  list_transform(range((len(tok) + 9) // 10), i ->
-        |    array_to_string(tok[i * 10 + 1 : i * 10 + 10], ' ') ||
-        |    CASE WHEN i % 3 = 2 THEN '' ELSE '.' END) AS lines
-        | FROM toks),
-        |gated AS (
-        | SELECT doc_id, lines,
-        |  list_filter(lines, l ->
-        |    right(TRIM(l), 1) IN ('.', '!', '?', '"') AND
-        |    len(regexp_split_to_array(TRIM(l), '\s+')) >= 3) AS kept_lines,
-        |  array_to_string(lines, chr(10)) AS ltext
-        | FROM lined)
-        |SELECT doc_id,
-        | array_to_string(list_transform(kept_lines, l -> TRIM(l)), chr(10)) AS clean_text,
-        | CAST(len(kept_lines) AS BIGINT) AS n_lines_kept,
-        | (len(kept_lines) >= 3 AND NOT contains(ltext, '{')
-        |   AND NOT contains(lower(ltext), 'lorem ipsum')) AS kept
-        |FROM gated ORDER BY doc_id""".stripMargin,
-
-    // The funnel composes the two gate oracles end-to-end: planted
-    // lines → C4 survivors (clean_text) → Gopher(30,1) survivors, each
-    // stage one (docs, tokens) row; token sums CAST to BIGINT.
-    "x_curation_funnel" ->
-      """WITH toks AS (
-        | SELECT doc_id,
-        |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |       ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |lined AS (
-        | SELECT doc_id,
-        |  list_transform(range((len(tok) + 9) // 10), i ->
-        |    array_to_string(tok[i * 10 + 1 : i * 10 + 10], ' ') ||
-        |    CASE WHEN i % 3 = 2 THEN '' ELSE '.' END) AS lines
-        | FROM toks),
-        |gated AS (
-        | SELECT doc_id, lines,
-        |  list_filter(lines, l ->
-        |    right(TRIM(l), 1) IN ('.', '!', '?', '"') AND
-        |    len(regexp_split_to_array(TRIM(l), '\s+')) >= 3) AS kept_lines,
-        |  array_to_string(lines, chr(10)) AS ltext
-        | FROM lined),
-        |c4 AS (
-        | SELECT doc_id,
-        |  array_to_string(list_transform(kept_lines, l -> TRIM(l)), chr(10)) AS ct,
-        |  (len(kept_lines) >= 3 AND NOT contains(ltext, '{')
-        |    AND NOT contains(lower(ltext), 'lorem ipsum')) AS kept
-        | FROM gated),
-        |s1d AS (SELECT doc_id, ct,
-        |  CASE WHEN LENGTH(TRIM(ct)) = 0 THEN []::VARCHAR[]
-        |       ELSE regexp_split_to_array(TRIM(ct), '\s+') END AS tok
-        | FROM c4 WHERE kept),
-        |gm AS (
-        | SELECT doc_id, tok, CAST(len(tok) AS BIGINT) AS n_words,
-        |  COALESCE(list_aggregate(list_transform(tok, w -> LENGTH(w)), 'sum'), 0) AS char_sum,
-        |  len(list_filter(tok, w -> lower(w) <> upper(w))) AS n_alpha,
-        |  LENGTH(ct) - LENGTH(replace(ct, '#', '')) AS n_hash,
-        |  (LENGTH(ct) - LENGTH(replace(ct, '...', ''))) / 3 AS n_ell,
-        |  (CASE WHEN list_contains(tok, 'the') THEN 1 ELSE 0 END +
-        |   CASE WHEN list_contains(tok, 'be') THEN 1 ELSE 0 END +
-        |   CASE WHEN list_contains(tok, 'to') THEN 1 ELSE 0 END +
-        |   CASE WHEN list_contains(tok, 'of') THEN 1 ELSE 0 END +
-        |   CASE WHEN list_contains(tok, 'and') THEN 1 ELSE 0 END +
-        |   CASE WHEN list_contains(tok, 'that') THEN 1 ELSE 0 END +
-        |   CASE WHEN list_contains(tok, 'have') THEN 1 ELSE 0 END +
-        |   CASE WHEN list_contains(tok, 'with') THEN 1 ELSE 0 END) AS n_stop
-        | FROM s1d),
-        |g2 AS (SELECT doc_id, tok, n_words,
-        |  CASE WHEN n_words = 0 THEN 0.0
-        |    ELSE ROUND(CAST(char_sum AS DOUBLE) / CAST(n_words AS DOUBLE), 9) END AS mwl,
-        |  CASE WHEN n_words = 0 THEN 0.0
-        |    ELSE ROUND(CAST(n_hash + n_ell AS DOUBLE) / CAST(n_words AS DOUBLE), 9) END AS sym,
-        |  CASE WHEN n_words = 0 THEN 0.0
-        |    ELSE ROUND(CAST(n_alpha AS DOUBLE) / CAST(n_words AS DOUBLE), 9) END AS af,
-        |  n_stop
-        | FROM gm),
-        |s2d AS (SELECT doc_id, tok FROM g2
-        | WHERE n_words >= 30 AND n_words <= 100000 AND mwl >= 3.0
-        |   AND mwl <= 10.0 AND sym < 0.1 AND af > 0.8 AND n_stop >= 1),
-        |r0 AS (SELECT CAST(0 AS BIGINT) AS stage, 'input' AS gate,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(COALESCE(SUM(len(tok)), 0) AS BIGINT) AS n_tokens FROM toks),
-        |r1 AS (SELECT CAST(1 AS BIGINT) AS stage, 'c4_gate' AS gate,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(COALESCE(SUM(len(tok)), 0) AS BIGINT) AS n_tokens FROM s1d),
-        |r2 AS (SELECT CAST(2 AS BIGINT) AS stage, 'gopher_gate' AS gate,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(COALESCE(SUM(len(tok)), 0) AS BIGINT) AS n_tokens FROM s2d)
-        |SELECT * FROM r0 UNION ALL SELECT * FROM r1 UNION ALL
-        |SELECT * FROM r2 ORDER BY stage""".stripMargin,
-
-    // Planted-recall oracle: the re-crawl list is pure arithmetic on the
-    // eligibility predicate; dropped_by_index is PINNED TRUE — the band
-    // index's recall on real near-duplicates is what the compare checks.
-    "x_neardedup_incremental" ->
-      """SELECT doc_id, doc_id + 30000000 AS copy_id,
-        | TRUE AS dropped_by_index
-        |FROM documents
-        |WHERE doc_id % 6 = 0
-        |  AND len(regexp_split_to_array(TRIM(text), '\s+')) >= 40
-        |ORDER BY doc_id""".stripMargin,
-
-    "x_curation_report" ->
-      """WITH toks AS (
-        | SELECT doc_id, lang, text,
-        |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |       ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |m AS (
-        | SELECT doc_id, lang,
-        |  CAST(len(tok) AS BIGINT) AS n_words,
-        |  COALESCE(list_aggregate(list_transform(tok, w -> LENGTH(w)), 'sum'), 0) AS char_sum,
-        |  len(list_filter(tok, w -> lower(w) <> upper(w))) AS n_alpha,
-        |  LENGTH(text) - LENGTH(replace(text, '#', '')) AS n_hash,
-        |  (LENGTH(text) - LENGTH(replace(text, '...', ''))) / 3 AS n_ell,
-        |  CASE WHEN list_contains(tok, 'the') THEN 1 ELSE 0 END +
-        |  CASE WHEN list_contains(tok, 'be') THEN 1 ELSE 0 END +
-        |  CASE WHEN list_contains(tok, 'to') THEN 1 ELSE 0 END +
-        |  CASE WHEN list_contains(tok, 'of') THEN 1 ELSE 0 END +
-        |  CASE WHEN list_contains(tok, 'and') THEN 1 ELSE 0 END +
-        |  CASE WHEN list_contains(tok, 'that') THEN 1 ELSE 0 END +
-        |  CASE WHEN list_contains(tok, 'have') THEN 1 ELSE 0 END +
-        |  CASE WHEN list_contains(tok, 'with') THEN 1 ELSE 0 END AS n_stop,
-        |  LEAST(1.0, CAST(len(tok) AS DOUBLE) / 100.0) *
-        |   (1.0 - CASE WHEN LENGTH(text) = 0 THEN 0.0
-        |     ELSE CAST(LENGTH(regexp_replace(text, '[^.,!?;:''"()-]', '', 'g')) AS DOUBLE)
-        |          / CAST(LENGTH(text) AS DOUBLE) END) AS quality
-        | FROM toks),
-        |g AS (
-        | SELECT doc_id, lang, n_words, quality,
-        |  (n_words >= 30 AND n_words <= 100000 AND
-        |   (CASE WHEN n_words = 0 THEN 0.0
-        |     ELSE ROUND(CAST(char_sum AS DOUBLE) / CAST(n_words AS DOUBLE), 9) END) >= 3.0 AND
-        |   (CASE WHEN n_words = 0 THEN 0.0
-        |     ELSE ROUND(CAST(char_sum AS DOUBLE) / CAST(n_words AS DOUBLE), 9) END) <= 10.0 AND
-        |   (CASE WHEN n_words = 0 THEN 0.0
-        |     ELSE ROUND(CAST(n_hash + n_ell AS DOUBLE) / CAST(n_words AS DOUBLE), 9) END) < 0.1 AND
-        |   (CASE WHEN n_words = 0 THEN 0.0
-        |     ELSE ROUND(CAST(n_alpha AS DOUBLE) / CAST(n_words AS DOUBLE), 9) END) > 0.8 AND
-        |   n_stop >= 1) AS kept
-        | FROM m)
-        |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        | CAST(SUM(n_words) AS BIGINT) AS n_tokens,
-        | ROUND(CAST(SUM(CAST(quality AS DECIMAL(28,12))) AS DOUBLE)
-        |   / CAST(COUNT(*) AS DOUBLE), 9) AS mean_quality,
-        | CAST(SUM(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-        |FROM g GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "x_gopher_gate" ->
-      """WITH toks AS (
-        | SELECT doc_id, text,
-        |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |       ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |m AS (
-        | SELECT doc_id,
-        |  CAST(len(tok) AS BIGINT) AS n_words,
-        |  COALESCE(list_aggregate(list_transform(tok, w -> LENGTH(w)), 'sum'), 0) AS char_sum,
-        |  len(list_filter(tok, w -> lower(w) <> upper(w))) AS n_alpha,
-        |  LENGTH(text) - LENGTH(replace(text, '#', '')) AS n_hash,
-        |  (LENGTH(text) - LENGTH(replace(text, '...', ''))) / 3 AS n_ell,
-        |  (CASE WHEN list_contains(tok, 'the') THEN 1 ELSE 0 END +
-        |   CASE WHEN list_contains(tok, 'be') THEN 1 ELSE 0 END +
-        |   CASE WHEN list_contains(tok, 'to') THEN 1 ELSE 0 END +
-        |   CASE WHEN list_contains(tok, 'of') THEN 1 ELSE 0 END +
-        |   CASE WHEN list_contains(tok, 'and') THEN 1 ELSE 0 END +
-        |   CASE WHEN list_contains(tok, 'that') THEN 1 ELSE 0 END +
-        |   CASE WHEN list_contains(tok, 'have') THEN 1 ELSE 0 END +
-        |   CASE WHEN list_contains(tok, 'with') THEN 1 ELSE 0 END) AS n_stop
-        | FROM toks),
-        |g AS (
-        | SELECT doc_id, n_words,
-        |  CASE WHEN n_words = 0 THEN 0.0
-        |    ELSE ROUND(CAST(char_sum AS DOUBLE) / CAST(n_words AS DOUBLE), 9) END AS mean_word_len,
-        |  CASE WHEN n_words = 0 THEN 0.0
-        |    ELSE ROUND(CAST(n_hash + n_ell AS DOUBLE) / CAST(n_words AS DOUBLE), 9) END AS symbol_ratio,
-        |  CASE WHEN n_words = 0 THEN 0.0
-        |    ELSE ROUND(CAST(n_alpha AS DOUBLE) / CAST(n_words AS DOUBLE), 9) END AS alpha_frac,
-        |  CAST(n_stop AS BIGINT) AS n_stop
-        | FROM m)
-        |SELECT doc_id, n_words, mean_word_len, symbol_ratio, alpha_frac, n_stop,
-        | (n_words >= 30 AND n_words <= 100000 AND
-        |  mean_word_len >= 3.0 AND mean_word_len <= 10.0 AND
-        |  symbol_ratio < 0.1 AND alpha_frac > 0.8 AND n_stop >= 1) AS kept
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    // In-engine BPE training, 6 rounds unrolled: each round counts
-    // Same planted suffix, same byte rendering: hex(encode(w)) is the
-    // UTF-8 byte sequence in BOTH engines, split into 2-char tokens;
-    // decode(unhex(..)) reverses it, so `lossless` is witnessed, not
-    // assumed.
-    "x_bpe_bytes" ->
-      """WITH d AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 7 = 0 THEN text || ' héllo 漢字🦉'
-        |       ELSE text END AS text
-        | FROM documents),
-        |t AS (SELECT doc_id,
-        |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |       ELSE regexp_split_to_array(TRIM(text), '\s+') END AS ws
-        | FROM d),
-        |e AS (SELECT doc_id, ws,
-        |  list_transform(ws, w -> list_transform(
-        |    range(1, len(hex(encode(w))) // 2 + 1),
-        |    i -> substr(lower(hex(encode(w))), CAST(i AS INT) * 2 - 1, 2)))
-        |    AS wt
-        | FROM t)
-        |SELECT doc_id,
-        | CAST(len(flatten(wt)) AS BIGINT) AS n_tokens,
-        | array_to_string(flatten(wt), ' ') AS tokens_joined,
-        | array_to_string(list_transform(wt,
-        |   ts -> decode(unhex(array_to_string(ts, '')))), ' ') AS decoded,
-        | array_to_string(list_transform(wt,
-        |   ts -> decode(unhex(array_to_string(ts, '')))), ' ')
-        |   = array_to_string(ws, ' ') AS lossless
-        |FROM e ORDER BY doc_id""".stripMargin,
-
-    // Same top-100 vocab, same exact-match coverage; the ppm is the
-    // exact floor rational, BIGINT everywhere per the §2.7 convention.
-    "x_vocab_coverage" ->
-      """WITH tk AS (SELECT doc_id,
-        |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |       ELSE regexp_split_to_array(TRIM(text), '\s+') END AS t
-        | FROM documents),
-        |v AS (SELECT token FROM (
-        |  SELECT unnest(t) AS token FROM tk) z
-        | GROUP BY token ORDER BY COUNT(*) DESC, token LIMIT 100),
-        |e AS (SELECT doc_id, unnest(t) AS tok FROM tk),
-        |j AS (SELECT e.doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-        |  CAST(SUM(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_oov,
-        |  CAST(SUM(LENGTH(e.tok)) AS BIGINT) AS n_token_chars
-        | FROM e LEFT JOIN v ON e.tok = v.token GROUP BY e.doc_id)
-        |SELECT tk.doc_id,
-        | COALESCE(j.n_tokens, 0) AS n_tokens,
-        | COALESCE(j.n_oov, 0) AS n_oov,
-        | CASE WHEN COALESCE(j.n_tokens, 0) > 0
-        |      THEN (COALESCE(j.n_oov, 0) * 1000000) // j.n_tokens
-        | END AS oov_ppm,
-        | COALESCE(j.n_token_chars, 0) AS n_token_chars
-        |FROM tk LEFT JOIN j ON tk.doc_id = j.doc_id
-        |ORDER BY tk.doc_id""".stripMargin,
-
-    // Same planted URLs, same staged canonicalization (regex subset
-    // shared by Java and RE2, list sort/filter for params) — canonical
-    // strings match byte-for-byte.
-    // Same planted URLs and authority extraction (the canon chain's
-    // p1–p5), same regex translation of the wildcard rules (escape the
-    // RE2/Java-shared metacharacters, * → .*, trailing $ → \z), same
-    // longest/allow/pattern window order — precedence decided
-    // identically on both engines.
-    // URL features: the canon chain to p5, then the feature algebra
-    // (path/query split at the first ?, port-stripped host labels,
-    // non-empty-segment counts, the 1-5-alnum extension).
-    "x_url_features" ->
-      (urlCanonOracleChain("doc_id,") +
-        """,f0 AS (SELECT doc_id, u, hs, host,
-          |  CASE WHEN strpos(pathq, '?') > 0
-          |    THEN substring(pathq, 1, strpos(pathq, '?') - 1)
-          |    ELSE pathq END AS pth,
-          |  CASE WHEN strpos(pathq, '?') > 0
-          |    THEN substring(pathq, strpos(pathq, '?') + 1)
-          |    ELSE '' END AS qry,
-          |  regexp_replace(host, ':[0-9]+$', '') AS hnp
-          | FROM p5)
-          |SELECT doc_id, u AS url,
-          | CASE WHEN hs THEN host END AS host,
-          | CASE WHEN hs THEN CAST(len(list_filter(str_split(pth, '/'),
-          |   s -> s <> '')) AS BIGINT) END AS path_depth,
-          | CASE WHEN hs THEN CAST(length(pth) AS BIGINT) END
-          |   AS path_chars,
-          | CASE WHEN hs THEN CAST(len(list_filter(str_split(qry, '&'),
-          |   s -> s <> '')) AS BIGINT) END AS n_params,
-          | CASE WHEN hs THEN CAST(len(str_split(hnp, '.')) AS BIGINT)
-          |   END AS host_labels,
-          | CASE WHEN hs THEN regexp_matches(hnp, '[0-9]') END
-          |   AS host_digits,
-          | CASE WHEN hs THEN regexp_matches(hnp, '(^|\.)xn--') END
-          |   AS is_idn,
-          | CASE WHEN hs THEN
-          |   lower(regexp_extract(pth, '\.([A-Za-z0-9]{1,5})$', 1)) END
-          |   AS ext
-          |FROM f0 ORDER BY doc_id""".stripMargin),
-
-    "x_robots_gate" ->
-      (urlCanonOracleChain("doc_id,") +
-        raw""",tg0 AS (SELECT doc_id, u AS url,
-          |  CASE WHEN hs THEN host END AS host,
-          |  CASE WHEN hs THEN
-          |    CASE WHEN pathq = '' THEN '/'
-          |         WHEN starts_with(pathq, '?') THEN '/' || pathq
-          |         ELSE pathq END
-          |  END AS tgt0
-          | FROM p5),
-          |tgt AS (SELECT doc_id, url, host,
-          |  CASE WHEN tgt0 IS NOT NULL THEN ${pctNormSql("tgt0")} END
-          |    AS target
-          | FROM tg0),
-          |rr(rhost, directive, pattern) AS (VALUES
-          |  ('www.example.com', 'disallow', '/Path/*'),
-          |  ('www.example.com', 'allow', '/Path/Page'),
-          |  ('news.example.co.uk', 'disallow', '/a/*?id=*'),
-          |  ('cdn.static.example.org:8080', 'disallow', '*.js$$'),
-          |  ('cdn.static.example.org:8080', 'disallow', '*fbclid*'),
-          |  ('sub.domain.example.com', 'allow', '/$$'),
-          |  ('sub.domain.example.com', 'disallow', '/'),
-          |  ('sub.domain.example.com', 'allow', '/x%20y/*'),
-          |  ('sub.domain.example.com', 'disallow', '/%78%20y/e*'),
-          |  ('sub.domain.example.com', 'disallow', '/x%2Fy/*')),
-          |rn0 AS (SELECT rhost, directive, pattern,
-          |  ${pctNormSql("pattern")} AS pn
-          | FROM rr WHERE pattern <> ''),
-          |rx AS (SELECT lower(rhost) AS rhost, directive, pattern,
-          |  '^' || replace(
-          |     regexp_replace(
-          |       CASE WHEN pn LIKE '%$$' THEN
-          |         substring(pn, 1, length(pn) - 1)
-          |       ELSE pn END,
-          |       '([\.\^\$$\+\?\(\)\[\]\{\}\|\\])', '\\\1', 'g'),
-          |     '*', '.*')
-          |  || CASE WHEN pn LIKE '%$$' THEN '\z' ELSE '' END AS rxp,
-          |  strlen(pn) AS plen
-          | FROM rn0),
-          |j AS (SELECT t.doc_id, t.url, t.host, t.target,
-          |   r.directive, r.pattern, r.plen,
-          |   COALESCE(regexp_matches(t.target, r.rxp), FALSE) AS m
-          |  FROM tgt t LEFT JOIN rx r ON t.host = r.rhost),
-          |pk AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-          |   ORDER BY m DESC, plen DESC, (directive = 'allow') DESC,
-          |            pattern ASC) AS rn FROM j)
-          |SELECT doc_id, url, host, target AS pathq,
-          |  (NOT m) OR directive = 'allow' AS allowed,
-          |  CASE WHEN m THEN pattern END AS matched_pattern,
-          |  CASE WHEN m THEN directive END AS matched_directive
-          |FROM pk WHERE rn = 1 ORDER BY doc_id""".stripMargin),
-
-    // Same planted bodies (chr(10) newlines — identical spelling on
-    // both engines), same root detection, same block extraction and
-    // per-field regexes over the shared Java/RE2 subset, same
-    // fixed-order entity chain with &amp; LAST, same lenient priority
-    // cast. range(1,3) explodes block indexes (≤ 2 entries per planted
-    // body); blocks[i] + i-1 mirror posexplode.
-    "x_sitemap" ->
-      """WITH d AS (SELECT doc_id,
-        | CASE CAST(doc_id % 3 AS INT)
-        |  WHEN 0 THEN
-        |   '<?xml version="1.0" encoding="UTF-8"?>' || chr(10) ||
-        |   '<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'
-        |   || chr(10) || '  <url>' || chr(10) ||
-        |   '    <loc> https://www.example.com/p?id=' || doc_id ||
-        |   '&amp;ref=home </loc>' || chr(10) ||
-        |   '    <lastmod>2026-0' || (1 + doc_id % 9) || '-15</lastmod>' ||
-        |   chr(10) ||
-        |   '    <changefreq>Daily</changefreq>' || chr(10) ||
-        |   '    <priority>0.' || (doc_id % 10) || '</priority>' || chr(10) ||
-        |   '  </url>' || chr(10) ||
-        |   '  <url><loc>https://www.example.com/' || doc_id ||
-        |   '</loc></url>' || chr(10) || '</urlset>'
-        |  WHEN 1 THEN
-        |   '<sitemapindex xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'
-        |   || '<sitemap><loc>https://maps.example.org/s' || (doc_id % 50) ||
-        |   '.xml.gz</loc><lastmod>2026-07-0' || (1 + doc_id % 9) ||
-        |   '</lastmod></sitemap>' ||
-        |   '<sitemap><loc>https://maps.example.org/news.xml</loc></sitemap>'
-        |   || '</sitemapindex>'
-        |  ELSE '<urlset><url><loc>http://h' || (doc_id % 7) ||
-        |   '.example.net/a&amp;b&apos;c</loc>' ||
-        |   '<changefreq>WEEKLY</changefreq>' ||
-        |   '<priority>high</priority></url></urlset>'
-        | END AS xml FROM documents),
-        |r AS (SELECT doc_id, xml,
-        |  lower(regexp_extract(xml,
-        |    '(?is)<\s*(urlset|sitemapindex)[\s>]', 1)) AS root FROM d),
-        |b AS (SELECT doc_id, root,
-        |  CASE WHEN root = 'urlset' THEN
-        |    regexp_extract_all(xml, '(?is)<url\s*>.*?</url\s*>')
-        |  WHEN root = 'sitemapindex' THEN
-        |    regexp_extract_all(xml, '(?is)<sitemap\s*>.*?</sitemap\s*>')
-        |  ELSE [] END AS blocks FROM r),
-        |e AS (SELECT doc_id, root, i - 1 AS entry_idx, blocks[i] AS blk
-        |  FROM b, (SELECT unnest(range(1, 3)) AS i) ii
-        |  WHERE i <= len(blocks)),
-        |f AS (SELECT doc_id, entry_idx,
-        |  CASE WHEN root = 'urlset' THEN 'url' ELSE 'sitemap' END AS kind,
-        |  NULLIF(regexp_extract(blk,
-        |    '(?is)<loc\s*>\s*(.*?)\s*</loc\s*>', 1), '') AS loc0,
-        |  NULLIF(regexp_extract(blk,
-        |    '(?is)<lastmod\s*>\s*(.*?)\s*</lastmod\s*>', 1), '') AS lastmod,
-        |  lower(NULLIF(regexp_extract(blk,
-        |    '(?is)<changefreq\s*>\s*(.*?)\s*</changefreq\s*>', 1), ''))
-        |    AS changefreq,
-        |  TRY_CAST(regexp_extract(blk,
-        |    '(?is)<priority\s*>\s*(.*?)\s*</priority\s*>', 1) AS DOUBLE)
-        |    AS priority
-        | FROM e)
-        |SELECT doc_id, CAST(entry_idx AS BIGINT) AS entry_idx, kind,
-        |  replace(replace(replace(replace(replace(loc0,
-        |    '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-        |    '&apos;', ''''), '&amp;', '&') AS loc,
-        |  lastmod, changefreq, priority
-        |FROM f WHERE loc0 IS NOT NULL
-        |ORDER BY doc_id, entry_idx""".stripMargin,
-
-    // The oracle replays the FRAMING FORMULAS, not the bytes: shard by
-    // doc_id parity, record index by per-shard doc_id order,
-    // Content-Length as the OCTET length of the UTF-8 payload
-    // (octet_length(encode(..)) — char count would diverge on any
-    // multibyte text), payload roundtripped verbatim. Constant headers
-    // mirror the writer's constants.
-    "x_warc" ->
-      """SELECT doc_id,
-        |  CAST(doc_id % 2 AS INT) AS shard,
-        |  row_number() OVER (PARTITION BY doc_id % 2 ORDER BY doc_id)
-        |    - 1 AS record_idx,
-        |  'response' AS warc_type,
-        |  'https://ex.com/' || doc_id AS target_uri,
-        |  '2026-08-16T00:00:00Z' AS warc_date,
-        |  'text/plain' AS content_type,
-        |  octet_length(encode(COALESCE(text, ''))) AS content_length,
-        |  COALESCE(text, '') AS payload_text
-        |FROM documents WHERE doc_id % 97 = 0
-        |ORDER BY doc_id""".stripMargin,
-
-    "x_url_canon" ->
-      (urlCanonOracleChain("doc_id,") +
-        """SELECT doc_id,
-          | CASE WHEN hs THEN scheme || '://' || host || path ||
-          |   CASE WHEN len(kp) > 0 THEN '?' || array_to_string(kp, '&')
-          |        ELSE '' END
-          | END AS url_canon,
-          | CASE WHEN hs THEN host END AS host,
-          | CASE WHEN hs THEN
-          |   CASE WHEN len(lbl) <= 2 THEN bare
-          |        WHEN length(lbl[-1]) = 2 AND lbl[-2] IN
-          |          ('co','com','net','org','gov','ac','edu')
-          |          THEN lbl[-3] || '.' || lbl[-2] || '.' || lbl[-1]
-          |        ELSE lbl[-2] || '.' || lbl[-1] END
-          | END AS registered_domain,
-          | CASE WHEN hs THEN CAST(len(ap) - len(kp) AS BIGINT)
-          | END AS n_params_stripped
-          |FROM p8 ORDER BY doc_id""".stripMargin),
-
-    // Same planted pages and hrefs; the domain of an absolute URL
-    // reduces to hostport → strip-any-port → strip-www → label rule
-    // (equivalent to the engine's strip-default-then-strip-all since
-    // the domain key never keeps a port); relative hrefs canonicalize
-    // to nothing on both sides.
-    // Domain-level mirror of resolution: an absolute href carries its
-    // own host, a protocol-relative one its own host + base validity,
-    // an opaque scheme dies in canonicalization, and EVERY relative /
-    // rooted href lands on the base authority — so its registered
-    // domain IS the src domain. The full path algebra is pinned
-    // separately by x_resolve_links' recursive-CTE oracle.
-    "x_link_graph" ->
-      """WITH d AS (SELECT doc_id,
-        |  '<p>' || text || '</p>' ||
-        |  '<a href="https://www.example.com/a?utm_source=z&x=1">one</a>' ||
-        |  '<a href=''http://news.example.co.uk:80/b''>two</a>' ||
-        |  '<a href="/relative/path">rel</a>' ||
-        |  '<a href="../up/one">up</a>' ||
-        |  '<a href="//proto.example.io/p">pr</a>' ||
-        |  CASE WHEN doc_id % 3 = 0
-        |       THEN '<a href="https://other.site.io/c">x</a>'
-        |       ELSE '' END AS html,
-        |  CASE CAST(doc_id % 5 AS INT)
-        |   WHEN 0 THEN 'HTTP://WWW.Example.COM:80/Path/Page?utm_source=x&b=2&a=1#frag'
-        |   WHEN 1 THEN 'https://news.example.co.uk/a/' || doc_id ||
-        |     '?id=' || doc_id || '&utm_campaign=z'
-        |   WHEN 2 THEN 'https://cdn.static.example.org:8080/lib.js?v=' ||
-        |     (doc_id % 7) || '&utm_medium=y&fbclid=f'
-        |   WHEN 3 THEN 'http://example.net'
-        |   ELSE 'https://Sub.Domain.Example.com/x%20y/' || lang || '?gclid=abc'
-        |  END AS src_url
-        | FROM documents),
-        |l AS (SELECT doc_id, src_url, unnest(regexp_extract_all(html,
-        |  '(?is)<a\s[^>]*href\s*=\s*["'']([^"'']*)["'']', 1)) AS href
-        | FROM d),
-        |sp AS (SELECT doc_id, href,
-        |  lower(regexp_extract(
-        |     regexp_replace(regexp_replace(TRIM(src_url), '#.*$', ''),
-        |       '^[A-Za-z][A-Za-z0-9+.-]*://', ''),
-        |     '^([^/?]+)', 1)) AS shp
-        | FROM l),
-        |hp AS (SELECT doc_id, shp,
-        |  CASE WHEN regexp_matches(href, '^[A-Za-z][A-Za-z0-9+.-]*://')
-        |   THEN lower(regexp_extract(
-        |     regexp_replace(href, '^[A-Za-z][A-Za-z0-9+.-]*://', ''),
-        |     '^([^/?]+)', 1))
-        |  WHEN regexp_matches(href, '^[A-Za-z][A-Za-z0-9+.-]*:')
-        |   THEN NULL
-        |  WHEN starts_with(href, '//')
-        |   THEN lower(regexp_extract(href, '^//([^/?]+)', 1))
-        |  WHEN shp IS NOT NULL AND shp <> '' THEN shp
-        |  END AS dhp
-        | FROM sp),
-        |bd AS (SELECT doc_id,
-        |  regexp_replace(regexp_replace(dhp, ':[0-9]+$', ''),
-        |    '^www\.', '') AS dbare,
-        |  regexp_replace(regexp_replace(shp, ':[0-9]+$', ''),
-        |    '^www\.', '') AS sbare
-        | FROM hp WHERE dhp IS NOT NULL AND dhp <> ''),
-        |dd AS (SELECT doc_id, dbare, sbare,
-        |  string_split(dbare, '.') AS dl, string_split(sbare, '.') AS sl
-        | FROM bd),
-        |edges AS (SELECT
-        |  CASE WHEN len(sl) <= 2 THEN sbare
-        |       WHEN length(sl[-1]) = 2 AND sl[-2] IN
-        |         ('co','com','net','org','gov','ac','edu')
-        |         THEN sl[-3] || '.' || sl[-2] || '.' || sl[-1]
-        |       ELSE sl[-2] || '.' || sl[-1] END AS src_domain,
-        |  CASE WHEN len(dl) <= 2 THEN dbare
-        |       WHEN length(dl[-1]) = 2 AND dl[-2] IN
-        |         ('co','com','net','org','gov','ac','edu')
-        |         THEN dl[-3] || '.' || dl[-2] || '.' || dl[-1]
-        |       ELSE dl[-2] || '.' || dl[-1] END AS dst_domain
-        | FROM dd)
-        |SELECT src_domain, dst_domain, COUNT(*) AS n_links
-        |FROM edges WHERE src_domain IS NOT NULL AND src_domain <> ''
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // The SAME six-rule dot-segment fixpoint as the engine, iterated
-    // by a recursive CTE; branch selection and base/href parsing
-    // mirror Corpus.resolveLinks op-for-op.
-    "x_resolve_links" ->
-      ("""WITH RECURSIVE d AS (SELECT doc_id,
-        |  CASE CAST(doc_id % 5 AS INT)
-        |   WHEN 0 THEN 'HTTP://WWW.Example.COM:80/Path/Page?utm_source=x&b=2&a=1#frag'
-        |   WHEN 1 THEN 'https://news.example.co.uk/a/' || doc_id ||
-        |     '?id=' || doc_id || '&utm_campaign=z'
-        |   WHEN 2 THEN 'https://cdn.static.example.org:8080/lib.js?v=' ||
-        |     (doc_id % 7) || '&utm_medium=y&fbclid=f'
-        |   WHEN 3 THEN 'http://example.net'
-        |   ELSE 'https://Sub.Domain.Example.com/x%20y/' || lang || '?gclid=abc'
-        |  END AS base
-        | FROM documents),
-        |l AS (SELECT doc_id, base, CAST(x.link_idx AS BIGINT) AS link_idx,
-        |   x.href
-        | FROM d CROSS JOIN (VALUES
-        |   (0, 'g'), (1, './g?y#s'), (2, '../../x'), (3, '/rooted/../x'),
-        |   (4, '//proto.example.io/a/./b'),
-        |   (5, 'https://abs.example.com/a/b/../c?z'),
-        |   (6, '?q=2'), (7, '#frag'), (8, 'g/../h/./'),
-        |   (9, 'mailto:x@example.com'),
-        |   (10, 'cc/./././..'), (11, 'cc/a/../../..'),
-        |   (12, 'x//../y')) AS x(link_idx, href)),
-        |s1 AS (SELECT doc_id, link_idx, href,
-        |  regexp_replace(href, '#.*$', '') AS h,
-        |  regexp_replace(TRIM(base), '#.*$', '') AS b FROM l),
-        |s2 AS (SELECT *,
-        |  regexp_matches(b, '^[A-Za-z][A-Za-z0-9+.-]*://') AS bok,
-        |  regexp_extract(b, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1) AS bscheme,
-        |  regexp_replace(b, '^[A-Za-z][A-Za-z0-9+.-]*://', '') AS brest,
-        |  regexp_matches(h, '^[A-Za-z][A-Za-z0-9+.-]*://') AS habs,
-        |  regexp_matches(h, '^[A-Za-z][A-Za-z0-9+.-]*:') AS hopq
-        | FROM s1),
-        |s3 AS (SELECT *,
-        |  regexp_extract(brest, '^([^/?]+)', 1) AS bhost,
-        |  regexp_replace(brest, '^[^/?]*', '') AS bpathq,
-        |  regexp_extract(h, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1) AS ascheme,
-        |  regexp_replace(h, '^[A-Za-z][A-Za-z0-9+.-]*://', '') AS arest,
-        |  regexp_extract(h, '^//([^/?]+)', 1) AS phost,
-        |  regexp_replace(h, '^//[^/?]*', '') AS ppathq
-        | FROM s2),
-        |s4 AS (SELECT *,
-        |  regexp_extract(bpathq, '^([^?]*)', 1) AS bpath,
-        |  regexp_extract(bpathq, '(\?.*)$', 1) AS bquery,
-        |  bscheme || '://' || bhost AS bpre,
-        |  regexp_extract(h, '^([^?]*)', 1) AS hpath,
-        |  regexp_extract(h, '(\?.*)$', 1) AS hquery,
-        |  regexp_extract(arest, '^([^/?]+)', 1) AS ahost,
-        |  regexp_replace(arest, '^[^/?]*', '') AS apathq,
-        |  regexp_extract(ppathq, '^([^?]*)', 1) AS ppath,
-        |  regexp_extract(ppathq, '(\?.*)$', 1) AS pquery
-        | FROM s3),
-        |s5 AS (SELECT *,
-        |  regexp_extract(apathq, '^([^?]*)', 1) AS apath,
-        |  regexp_extract(apathq, '(\?.*)$', 1) AS aquery,
-        |  CASE WHEN regexp_extract(bpath, '^(.*/)', 1) = '' THEN '/'
-        |       ELSE regexp_extract(bpath, '^(.*/)', 1) END AS bdir
-        | FROM s4),
-        |tri AS (SELECT doc_id, link_idx, href,
-        |  CASE WHEN h IS NOT NULL AND hopq AND NOT habs THEN h
-        |   END AS verbatim,
-        |  CASE WHEN h IS NULL THEN NULL
-        |       WHEN habs THEN ascheme || '://' || ahost
-        |       WHEN hopq THEN NULL
-        |       WHEN NOT bok THEN NULL
-        |       WHEN starts_with(h, '//') THEN bscheme || '://' || phost
-        |       ELSE bpre END AS pre,
-        |  CASE WHEN habs THEN apath
-        |       WHEN hopq OR NOT bok THEN NULL
-        |       WHEN starts_with(h, '//') THEN ppath
-        |       WHEN starts_with(h, '/') THEN hpath
-        |       WHEN h = '' THEN bpath
-        |       WHEN starts_with(h, '?') THEN bpath
-        |       ELSE bdir || hpath END AS p0,
-        |  CASE WHEN habs THEN aquery
-        |       WHEN hopq OR NOT bok THEN NULL
-        |       WHEN starts_with(h, '//') THEN pquery
-        |       WHEN starts_with(h, '/') THEN hquery
-        |       WHEN h = '' THEN bquery
-        |       WHEN starts_with(h, '?') THEN h
-        |       ELSE hquery END AS suf
-        | FROM s5),
-        |rec AS (
-        | SELECT doc_id, link_idx, p0 AS p, """.stripMargin +
-        dotStepSql("p0") + """ AS np
-        | FROM tri WHERE pre IS NOT NULL
-        | UNION ALL
-        | SELECT doc_id, link_idx, np, """.stripMargin +
-        dotStepSql("np") + """
-        | FROM rec WHERE np <> p),
-        |fix AS (SELECT doc_id, link_idx, p FROM rec WHERE np = p)
-        |SELECT t.doc_id, t.link_idx, t.href,
-        |  CASE WHEN t.verbatim IS NOT NULL THEN t.verbatim
-        |       WHEN t.pre IS NOT NULL THEN t.pre || f.p || t.suf
-        |  END AS href_resolved
-        |FROM tri t LEFT JOIN fix f
-        |  ON f.doc_id = t.doc_id AND f.link_idx = t.link_idx
-        |ORDER BY t.doc_id, t.link_idx""".stripMargin),
-
-    // The rollup over the same chain; SUMs cast to BIGINT (DuckDB
-    // SUM(BIGINT) is HUGEINT — the §2.7 convention).
-    "x_domain_stats" ->
-      (urlCanonOracleChain("doc_id, n_chars,") +
-        """,fin AS (SELECT n_chars,
-          | CASE WHEN hs THEN scheme || '://' || host || path ||
-          |   CASE WHEN len(kp) > 0 THEN '?' || array_to_string(kp, '&')
-          |        ELSE '' END
-          | END AS url_canon,
-          | CASE WHEN hs THEN
-          |   CASE WHEN len(lbl) <= 2 THEN bare
-          |        WHEN length(lbl[-1]) = 2 AND lbl[-2] IN
-          |          ('co','com','net','org','gov','ac','edu')
-          |          THEN lbl[-3] || '.' || lbl[-2] || '.' || lbl[-1]
-          |        ELSE lbl[-2] || '.' || lbl[-1] END
-          | END AS registered_domain,
-          | CASE WHEN hs THEN CAST(len(ap) - len(kp) AS BIGINT)
-          | END AS n_params_stripped
-          | FROM p8)
-          |SELECT registered_domain,
-          | CAST(COUNT(*) AS BIGINT) AS n_docs,
-          | CAST(COUNT(DISTINCT url_canon) AS BIGINT) AS n_urls,
-          | CAST(SUM(n_chars) AS BIGINT) AS n_chars,
-          | CAST(SUM(n_params_stripped) AS BIGINT) AS n_params_stripped
-          |FROM fin WHERE registered_domain IS NOT NULL
-          |GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    // The PSL algorithm mirrored: candidate label-suffixes unnested,
-    // plain/exception rules joined on the candidate, wildcard rules on
-    // its after-first-label tail; exception wins, else longest, else
-    // the default rule (bare TLD).
-    "x_psl_domains" ->
-      """WITH d AS (SELECT doc_id,
-        |  CASE CAST(doc_id % 7 AS INT)
-        |   WHEN 0 THEN 'www.example.com'
-        |   WHEN 1 THEN 'news.example.co.uk'
-        |   WHEN 2 THEN 'a.b.github.io'
-        |   WHEN 3 THEN 'Foo.Bar.PLAY'
-        |   WHEN 4 THEN 'x.www.play'
-        |   WHEN 5 THEN 'shop.com.au'
-        |   ELSE 'cdn.static.example.org:8080'
-        |  END AS host
-        | FROM documents),
-        |hh AS (SELECT doc_id, lower(host) AS host,
-        |  string_split(regexp_replace(regexp_replace(lower(host),
-        |    ':[0-9]+$', ''), '\.$', ''), '.') AS labels
-        | FROM d),
-        |hn AS (SELECT doc_id, host, labels, len(labels) AS n FROM hh),
-        |c AS (SELECT doc_id, labels, n,
-        |   unnest(range(1, n + 1)) AS i FROM hn),
-        |cc AS (SELECT doc_id, n, n - i + 1 AS clen,
-        |   array_to_string(labels[CAST(i AS INT):], '.') AS cand FROM c),
-        |rules AS (SELECT * FROM (VALUES
-        |  ('plain','com'),('plain','net'),('plain','org'),('plain','uk'),
-        |  ('plain','co.uk'),('plain','io'),('plain','github.io'),
-        |  ('plain','au'),('plain','com.au'),
-        |  ('wild','play'),('exc','www.play')) r(kind, base)),
-        |m AS (
-        | SELECT cc.doc_id,
-        |   CASE WHEN r.kind = 'exc' THEN cc.clen - 1 ELSE cc.clen END
-        |     AS ps_len,
-        |   r.kind = 'exc' AS is_exc
-        | FROM cc JOIN rules r
-        |   ON r.kind IN ('plain','exc') AND r.base = cc.cand
-        | UNION ALL
-        | SELECT cc.doc_id, cc.clen, FALSE
-        | FROM cc JOIN rules r
-        |   ON r.kind = 'wild' AND cc.cand LIKE '%.%'
-        |  AND r.base = regexp_replace(cc.cand, '^[^.]+\.', '')),
-        |agg AS (SELECT doc_id,
-        |  MAX(CASE WHEN is_exc THEN ps_len END) AS exc_len,
-        |  MAX(CASE WHEN NOT is_exc THEN ps_len END) AS norm_len
-        | FROM m GROUP BY doc_id)
-        |SELECT hn.doc_id, hn.host,
-        | array_to_string(labels[CAST(n - COALESCE(exc_len, norm_len, 1)
-        |   + 1 AS INT):], '.') AS public_suffix,
-        | CASE WHEN n > COALESCE(exc_len, norm_len, 1)
-        |  THEN array_to_string(labels[CAST(n - COALESCE(exc_len,
-        |    norm_len, 1) AS INT):], '.') END AS registered_domain_psl
-        |FROM hn LEFT JOIN agg ON agg.doc_id = hn.doc_id
-        |ORDER BY hn.doc_id""".stripMargin,
-
-    // vocab-weighted adjacent pairs, takes the argmax ((cnt DESC, l, r)
-    // tiebreak), and re-tokenizes with the same greedy left-to-right
-    // merge closed form (runs of overlapping matches merge at odd
-    // positions; consumed tokens drop). MATERIALIZED CTEs keep the
-    // 6-round chain linear - inlined, the re-referenced rounds
-    // re-evaluate exponentially.
-    "x_bpe_train" ->
-      """WITH toks AS (
-        | SELECT CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |      ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |v0 AS (
-        | SELECT w, CAST(COUNT(*) AS BIGINT) AS f,
-        |  list_transform(range(1, LENGTH(w) + 1), j -> substr(w, CAST(j AS INT), 1)) AS t
-        | FROM (SELECT unnest(tok) AS w FROM toks) z GROUP BY w),
-        |t1 AS MATERIALIZED (
-        | SELECT w, f, CAST(u.i AS INT) AS i, u.tk AS tok,
-        |  LEAD(u.tk) OVER (PARTITION BY w ORDER BY u.i) AS nxt
-        | FROM v0, UNNEST(list_transform(range(1, len(t) + 1),
-        |   j -> {'i': j, 'tk': t[CAST(j AS INT)]})) AS z(u)),
-        |m1 AS MATERIALIZED (
-        | SELECT tok AS l, nxt AS r, SUM(f) AS cnt FROM t1 WHERE nxt IS NOT NULL
-        | GROUP BY 1, 2 ORDER BY cnt DESC, l, r LIMIT 1),
-        |g1 AS (
-        | SELECT w, f, i, tok, nxt, mt,
-        |  CASE WHEN mt THEN ROW_NUMBER() OVER (PARTITION BY w, grp, mt ORDER BY i) % 2 = 1
-        |       ELSE FALSE END AS app
-        | FROM (
-        |  SELECT w, f, i, tok, nxt,
-        |   (nxt IS NOT NULL AND tok = (SELECT l FROM m1) AND nxt = (SELECT r FROM m1)) AS mt,
-        |   i - ROW_NUMBER() OVER (PARTITION BY w,
-        |     (nxt IS NOT NULL AND tok = (SELECT l FROM m1) AND nxt = (SELECT r FROM m1))
-        |     ORDER BY i) AS grp
-        |  FROM t1) y),
-        |v1 AS MATERIALIZED (
-        | SELECT w, f, list(CASE WHEN app THEN tok || nxt ELSE tok END ORDER BY i) AS t
-        | FROM (SELECT *, COALESCE(LAG(app) OVER (PARTITION BY w ORDER BY i), FALSE) AS consumed
-        |       FROM g1) z2
-        | WHERE NOT consumed GROUP BY w, f),
-        |t2 AS MATERIALIZED (
-        | SELECT w, f, CAST(u.i AS INT) AS i, u.tk AS tok,
-        |  LEAD(u.tk) OVER (PARTITION BY w ORDER BY u.i) AS nxt
-        | FROM v1, UNNEST(list_transform(range(1, len(t) + 1),
-        |   j -> {'i': j, 'tk': t[CAST(j AS INT)]})) AS z(u)),
-        |m2 AS MATERIALIZED (
-        | SELECT tok AS l, nxt AS r, SUM(f) AS cnt FROM t2 WHERE nxt IS NOT NULL
-        | GROUP BY 1, 2 ORDER BY cnt DESC, l, r LIMIT 1),
-        |g2 AS (
-        | SELECT w, f, i, tok, nxt, mt,
-        |  CASE WHEN mt THEN ROW_NUMBER() OVER (PARTITION BY w, grp, mt ORDER BY i) % 2 = 1
-        |       ELSE FALSE END AS app
-        | FROM (
-        |  SELECT w, f, i, tok, nxt,
-        |   (nxt IS NOT NULL AND tok = (SELECT l FROM m2) AND nxt = (SELECT r FROM m2)) AS mt,
-        |   i - ROW_NUMBER() OVER (PARTITION BY w,
-        |     (nxt IS NOT NULL AND tok = (SELECT l FROM m2) AND nxt = (SELECT r FROM m2))
-        |     ORDER BY i) AS grp
-        |  FROM t2) y),
-        |v2 AS MATERIALIZED (
-        | SELECT w, f, list(CASE WHEN app THEN tok || nxt ELSE tok END ORDER BY i) AS t
-        | FROM (SELECT *, COALESCE(LAG(app) OVER (PARTITION BY w ORDER BY i), FALSE) AS consumed
-        |       FROM g2) z2
-        | WHERE NOT consumed GROUP BY w, f),
-        |t3 AS MATERIALIZED (
-        | SELECT w, f, CAST(u.i AS INT) AS i, u.tk AS tok,
-        |  LEAD(u.tk) OVER (PARTITION BY w ORDER BY u.i) AS nxt
-        | FROM v2, UNNEST(list_transform(range(1, len(t) + 1),
-        |   j -> {'i': j, 'tk': t[CAST(j AS INT)]})) AS z(u)),
-        |m3 AS MATERIALIZED (
-        | SELECT tok AS l, nxt AS r, SUM(f) AS cnt FROM t3 WHERE nxt IS NOT NULL
-        | GROUP BY 1, 2 ORDER BY cnt DESC, l, r LIMIT 1),
-        |g3 AS (
-        | SELECT w, f, i, tok, nxt, mt,
-        |  CASE WHEN mt THEN ROW_NUMBER() OVER (PARTITION BY w, grp, mt ORDER BY i) % 2 = 1
-        |       ELSE FALSE END AS app
-        | FROM (
-        |  SELECT w, f, i, tok, nxt,
-        |   (nxt IS NOT NULL AND tok = (SELECT l FROM m3) AND nxt = (SELECT r FROM m3)) AS mt,
-        |   i - ROW_NUMBER() OVER (PARTITION BY w,
-        |     (nxt IS NOT NULL AND tok = (SELECT l FROM m3) AND nxt = (SELECT r FROM m3))
-        |     ORDER BY i) AS grp
-        |  FROM t3) y),
-        |v3 AS MATERIALIZED (
-        | SELECT w, f, list(CASE WHEN app THEN tok || nxt ELSE tok END ORDER BY i) AS t
-        | FROM (SELECT *, COALESCE(LAG(app) OVER (PARTITION BY w ORDER BY i), FALSE) AS consumed
-        |       FROM g3) z2
-        | WHERE NOT consumed GROUP BY w, f),
-        |t4 AS MATERIALIZED (
-        | SELECT w, f, CAST(u.i AS INT) AS i, u.tk AS tok,
-        |  LEAD(u.tk) OVER (PARTITION BY w ORDER BY u.i) AS nxt
-        | FROM v3, UNNEST(list_transform(range(1, len(t) + 1),
-        |   j -> {'i': j, 'tk': t[CAST(j AS INT)]})) AS z(u)),
-        |m4 AS MATERIALIZED (
-        | SELECT tok AS l, nxt AS r, SUM(f) AS cnt FROM t4 WHERE nxt IS NOT NULL
-        | GROUP BY 1, 2 ORDER BY cnt DESC, l, r LIMIT 1),
-        |g4 AS (
-        | SELECT w, f, i, tok, nxt, mt,
-        |  CASE WHEN mt THEN ROW_NUMBER() OVER (PARTITION BY w, grp, mt ORDER BY i) % 2 = 1
-        |       ELSE FALSE END AS app
-        | FROM (
-        |  SELECT w, f, i, tok, nxt,
-        |   (nxt IS NOT NULL AND tok = (SELECT l FROM m4) AND nxt = (SELECT r FROM m4)) AS mt,
-        |   i - ROW_NUMBER() OVER (PARTITION BY w,
-        |     (nxt IS NOT NULL AND tok = (SELECT l FROM m4) AND nxt = (SELECT r FROM m4))
-        |     ORDER BY i) AS grp
-        |  FROM t4) y),
-        |v4 AS MATERIALIZED (
-        | SELECT w, f, list(CASE WHEN app THEN tok || nxt ELSE tok END ORDER BY i) AS t
-        | FROM (SELECT *, COALESCE(LAG(app) OVER (PARTITION BY w ORDER BY i), FALSE) AS consumed
-        |       FROM g4) z2
-        | WHERE NOT consumed GROUP BY w, f),
-        |t5 AS MATERIALIZED (
-        | SELECT w, f, CAST(u.i AS INT) AS i, u.tk AS tok,
-        |  LEAD(u.tk) OVER (PARTITION BY w ORDER BY u.i) AS nxt
-        | FROM v4, UNNEST(list_transform(range(1, len(t) + 1),
-        |   j -> {'i': j, 'tk': t[CAST(j AS INT)]})) AS z(u)),
-        |m5 AS MATERIALIZED (
-        | SELECT tok AS l, nxt AS r, SUM(f) AS cnt FROM t5 WHERE nxt IS NOT NULL
-        | GROUP BY 1, 2 ORDER BY cnt DESC, l, r LIMIT 1),
-        |g5 AS (
-        | SELECT w, f, i, tok, nxt, mt,
-        |  CASE WHEN mt THEN ROW_NUMBER() OVER (PARTITION BY w, grp, mt ORDER BY i) % 2 = 1
-        |       ELSE FALSE END AS app
-        | FROM (
-        |  SELECT w, f, i, tok, nxt,
-        |   (nxt IS NOT NULL AND tok = (SELECT l FROM m5) AND nxt = (SELECT r FROM m5)) AS mt,
-        |   i - ROW_NUMBER() OVER (PARTITION BY w,
-        |     (nxt IS NOT NULL AND tok = (SELECT l FROM m5) AND nxt = (SELECT r FROM m5))
-        |     ORDER BY i) AS grp
-        |  FROM t5) y),
-        |v5 AS MATERIALIZED (
-        | SELECT w, f, list(CASE WHEN app THEN tok || nxt ELSE tok END ORDER BY i) AS t
-        | FROM (SELECT *, COALESCE(LAG(app) OVER (PARTITION BY w ORDER BY i), FALSE) AS consumed
-        |       FROM g5) z2
-        | WHERE NOT consumed GROUP BY w, f),
-        |t6 AS MATERIALIZED (
-        | SELECT w, f, CAST(u.i AS INT) AS i, u.tk AS tok,
-        |  LEAD(u.tk) OVER (PARTITION BY w ORDER BY u.i) AS nxt
-        | FROM v5, UNNEST(list_transform(range(1, len(t) + 1),
-        |   j -> {'i': j, 'tk': t[CAST(j AS INT)]})) AS z(u)),
-        |m6 AS MATERIALIZED (
-        | SELECT tok AS l, nxt AS r, SUM(f) AS cnt FROM t6 WHERE nxt IS NOT NULL
-        | GROUP BY 1, 2 ORDER BY cnt DESC, l, r LIMIT 1),
-        |g6 AS (
-        | SELECT w, f, i, tok, nxt, mt,
-        |  CASE WHEN mt THEN ROW_NUMBER() OVER (PARTITION BY w, grp, mt ORDER BY i) % 2 = 1
-        |       ELSE FALSE END AS app
-        | FROM (
-        |  SELECT w, f, i, tok, nxt,
-        |   (nxt IS NOT NULL AND tok = (SELECT l FROM m6) AND nxt = (SELECT r FROM m6)) AS mt,
-        |   i - ROW_NUMBER() OVER (PARTITION BY w,
-        |     (nxt IS NOT NULL AND tok = (SELECT l FROM m6) AND nxt = (SELECT r FROM m6))
-        |     ORDER BY i) AS grp
-        |  FROM t6) y),
-        |v6 AS MATERIALIZED (
-        | SELECT w, f, list(CASE WHEN app THEN tok || nxt ELSE tok END ORDER BY i) AS t
-        | FROM (SELECT *, COALESCE(LAG(app) OVER (PARTITION BY w ORDER BY i), FALSE) AS consumed
-        |       FROM g6) z2
-        | WHERE NOT consumed GROUP BY w, f)
-        |SELECT * FROM (
-        |SELECT CAST(1 AS INT) AS merge_rank, l AS lhs, r AS rhs, CAST(cnt AS BIGINT) AS pair_count FROM m1
-        |UNION ALL SELECT CAST(2 AS INT) AS merge_rank, l AS lhs, r AS rhs, CAST(cnt AS BIGINT) AS pair_count FROM m2
-        |UNION ALL SELECT CAST(3 AS INT) AS merge_rank, l AS lhs, r AS rhs, CAST(cnt AS BIGINT) AS pair_count FROM m3
-        |UNION ALL SELECT CAST(4 AS INT) AS merge_rank, l AS lhs, r AS rhs, CAST(cnt AS BIGINT) AS pair_count FROM m4
-        |UNION ALL SELECT CAST(5 AS INT) AS merge_rank, l AS lhs, r AS rhs, CAST(cnt AS BIGINT) AS pair_count FROM m5
-        |UNION ALL SELECT CAST(6 AS INT) AS merge_rank, l AS lhs, r AS rhs, CAST(cnt AS BIGINT) AS pair_count FROM m6)
-        |ORDER BY merge_rank""".stripMargin,
-
-    // Same ln-on-integer-counts + decimal-sum discipline as the engine.
-    "x_char_entropy" ->
-      """WITH ch AS (
-        | SELECT doc_id,
-        |  unnest(list_transform(range(1, LENGTH(text) + 1),
-        |    j -> substr(text, CAST(j AS INT), 1))) AS c
-        | FROM documents),
-        |cnt AS (SELECT doc_id, c, COUNT(*) AS k FROM ch GROUP BY 1, 2),
-        |agg AS (
-        | SELECT doc_id, CAST(SUM(k) AS BIGINT) AS n,
-        |  CAST(SUM(CAST(CAST(k AS DOUBLE) * ln(CAST(k AS DOUBLE))
-        |    AS DECIMAL(30,15))) AS DOUBLE) AS s
-        | FROM cnt GROUP BY doc_id)
-        |SELECT d.doc_id, CAST(COALESCE(a.n, 0) AS BIGINT) AS n_chars,
-        | ROUND(ln(CAST(a.n AS DOUBLE)) - a.s / CAST(a.n AS DOUBLE), 9)
-        |   AS char_entropy
-        |FROM documents d LEFT JOIN agg a USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Entropy rate mirrored: substr char pairs, pair/context rollups,
-    // integral-ln DECIMAL(30,15) ladders, pinned closes.
-    "x_entropy_rate" ->
-      """WITH p AS (
-        | SELECT unnest(list_transform(range(1, LENGTH(text)),
-        |   j -> substr(text, CAST(j AS INT), 2))) AS p
-        | FROM documents WHERE text IS NOT NULL AND LENGTH(text) >= 2),
-        |c2 AS (SELECT p, COUNT(*) AS c2 FROM p GROUP BY 1),
-        |cx AS (SELECT substr(p, 1, 1) AS x, CAST(SUM(c2) AS BIGINT) AS cx
-        | FROM c2 GROUP BY 1),
-        |tot AS (SELECT CAST(SUM(c2) AS BIGINT) AS n,
-        |  COUNT(*) AS n_distinct_bigrams FROM c2),
-        |hc AS (SELECT CAST(SUM(CAST(CAST(c2.c2 AS DOUBLE) *
-        |   (ln(CAST(cx.cx AS DOUBLE)) - ln(CAST(c2.c2 AS DOUBLE)))
-        |  AS DECIMAL(30,15))) AS DOUBLE) AS hc
-        | FROM c2 JOIN cx ON cx.x = substr(c2.p, 1, 1)),
-        |hm AS (SELECT COUNT(*) AS n_contexts,
-        |  CAST(SUM(CAST(CAST(cx.cx AS DOUBLE) *
-        |   (ln(CAST(tot.n AS DOUBLE)) - ln(CAST(cx.cx AS DOUBLE)))
-        |  AS DECIMAL(30,15))) AS DOUBLE) AS hm
-        | FROM cx, tot)
-        |SELECT tot.n AS n_bigrams, hm.n_contexts, tot.n_distinct_bigrams,
-        | ROUND(hc.hc / CAST(tot.n AS DOUBLE), 9) AS h_cond,
-        | ROUND(hm.hm / CAST(tot.n AS DOUBLE), 9) AS h_marginal
-        |FROM tot, hc, hm""".stripMargin,
-
-    // Burrows mirrored ladder-for-ladder: dense source x word grid,
-    // decimal mean/variance sums, IEEE sqrt, sigma=0 guard, pair join.
-    "x_burrows_delta" ->
-      raw"""WITH sw AS (SELECT src, t, COUNT(*) AS c FROM (
-        |  SELECT source AS src, unnest(CASE WHEN text IS NULL
-        |    OR LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |    ELSE regexp_split_to_array(TRIM(text), '\s+') END) AS t
-        |  FROM documents) GROUP BY 1, 2),
-        |topw AS (SELECT t FROM (SELECT t, CAST(SUM(c) AS BIGINT) AS cf
-        |  FROM sw GROUP BY 1 ORDER BY cf DESC, t LIMIT 30)),
-        |st AS (SELECT src, CAST(SUM(c) AS BIGINT) AS n FROM sw GROUP BY 1),
-        |k AS (SELECT CAST(COUNT(*) AS DOUBLE) AS k FROM st),
-        |grid AS (SELECT st.src, topw.t,
-        |  CAST(COALESCE(sw.c, 0) AS DOUBLE) / CAST(st.n AS DOUBLE) AS f
-        | FROM st CROSS JOIN topw
-        | LEFT JOIN sw ON sw.src = st.src AND sw.t = topw.t),
-        |stats AS (SELECT t,
-        |  CAST(SUM(CAST(f AS DECIMAL(30,15))) AS DOUBLE) / k.k AS mu,
-        |  CAST(SUM(CAST(f * f AS DECIMAL(30,15))) AS DOUBLE) AS f2,
-        |  k.k AS k
-        | FROM grid, k GROUP BY t, k.k),
-        |sig AS (SELECT t, mu,
-        |  sqrt(greatest(f2 / k - mu * mu, 0.0)) AS sigma FROM stats),
-        |z AS (SELECT g.src, g.t,
-        |  CASE WHEN s.sigma > 0 THEN (g.f - s.mu) / s.sigma
-        |  ELSE 0.0 END AS z
-        | FROM grid g JOIN sig s USING (t))
-        |SELECT a.src AS src_a, b.src AS src_b, COUNT(*) AS n_words,
-        | ROUND(CAST(SUM(CAST(abs(a.z - b.z) AS DECIMAL(30,15))) AS DOUBLE)
-        |   / CAST(COUNT(*) AS DOUBLE), 9) AS delta
-        |FROM z a JOIN z b ON a.t = b.t AND a.src < b.src
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // Simpson repeat-rate mirrored: exact integer rational + 1 divide.
-    "x_simpson" ->
-      raw"""WITH c AS (SELECT t, COUNT(*) AS c FROM (
-        |  SELECT unnest(CASE WHEN text IS NULL
-        |    OR LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |    ELSE regexp_split_to_array(TRIM(text), '\s+') END) AS t
-        |  FROM documents) GROUP BY 1),
-        |a AS (SELECT CAST(SUM(c) AS BIGINT) AS n_tokens,
-        |  COUNT(*) AS n_types,
-        |  CAST(SUM(c * (c - 1)) AS BIGINT) AS rr_num FROM c)
-        |SELECT n_tokens, n_types, rr_num,
-        | n_tokens * (n_tokens - 1) AS rr_den,
-        | ROUND(CAST(rr_num AS DOUBLE)
-        |   / nullif(CAST(n_tokens * (n_tokens - 1) AS DOUBLE), 0.0), 9)
-        |   AS repeat_rate
-        |FROM a""".stripMargin,
-
-    // JS mirrored: one two-slice count table, the same integral
-    // products inside ln, DECIMAL(30,15) sums, baked 1/ln2 literal.
-    "x_js_div" ->
-      raw"""WITH tk AS (SELECT lang AS s,
-        |  unnest(CASE WHEN text IS NULL OR LENGTH(TRIM(text)) = 0
-        |    THEN []::VARCHAR[]
-        |    ELSE regexp_split_to_array(TRIM(text), '\s+') END) AS t
-        | FROM documents WHERE lang IN ('en', 'zh')),
-        |c AS (SELECT t,
-        |  CAST(SUM(CASE WHEN s = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS a,
-        |  CAST(SUM(CASE WHEN s = 'zh' THEN 1 ELSE 0 END) AS BIGINT) AS b
-        | FROM tk GROUP BY 1),
-        |tot AS (SELECT CAST(SUM(a) AS BIGINT) AS ta,
-        |  CAST(SUM(b) AS BIGINT) AS tb, COUNT(*) AS vocab_union FROM c),
-        |s AS (SELECT ta, tb, vocab_union,
-        |  CAST(SUM(CAST(CASE WHEN a > 0 THEN CAST(a AS DOUBLE) *
-        |    (ln(CAST(2 * a * tb AS DOUBLE))
-        |     - ln(CAST(a * tb + b * ta AS DOUBLE))) ELSE 0.0 END
-        |   AS DECIMAL(30,15))) AS DOUBLE) AS s1,
-        |  CAST(SUM(CAST(CASE WHEN b > 0 THEN CAST(b AS DOUBLE) *
-        |    (ln(CAST(2 * b * ta AS DOUBLE))
-        |     - ln(CAST(a * tb + b * ta AS DOUBLE))) ELSE 0.0 END
-        |   AS DECIMAL(30,15))) AS DOUBLE) AS s2
-        | FROM c, tot GROUP BY 1, 2, 3)
-        |SELECT ta AS n_tokens_a, tb AS n_tokens_b, vocab_union,
-        | ROUND((s1 / CAST(ta AS DOUBLE) + s2 / CAST(tb AS DOUBLE))
-        |   / 2.0, 9) AS js,
-        | ROUND(((s1 / CAST(ta AS DOUBLE) + s2 / CAST(tb AS DOUBLE))
-        |   / 2.0) * 1.4426950408889634, 9) AS js_bits
-        |FROM s""".stripMargin,
-
-    // Keyness mirrored: same count table, the identical four-cell
-    // pinned G2 tree, exact cross-product enrichment.
-    "x_keyness" ->
-      raw"""WITH tk AS (SELECT lang AS s,
-        |  unnest(CASE WHEN text IS NULL OR LENGTH(TRIM(text)) = 0
-        |    THEN []::VARCHAR[]
-        |    ELSE regexp_split_to_array(TRIM(text), '\s+') END) AS t
-        | FROM documents WHERE lang IN ('en', 'zh')),
-        |c AS (SELECT t,
-        |  CAST(SUM(CASE WHEN s = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS a,
-        |  CAST(SUM(CASE WHEN s = 'zh' THEN 1 ELSE 0 END) AS BIGINT) AS b
-        | FROM tk GROUP BY 1),
-        |tot AS (SELECT CAST(SUM(a) AS BIGINT) AS ta,
-        |  CAST(SUM(b) AS BIGINT) AS tb FROM c)
-        |SELECT t AS token, a AS cnt_a, b AS cnt_b,
-        | ROUND(2.0 * (
-        |  ((CASE WHEN a > 0 THEN CAST(a AS DOUBLE) *
-        |     (ln(CAST(a * (ta + tb) AS DOUBLE))
-        |      - ln(CAST((a + b) * ta AS DOUBLE))) ELSE 0.0 END
-        |   + CASE WHEN ta - a > 0 THEN CAST(ta - a AS DOUBLE) *
-        |     (ln(CAST((ta - a) * (ta + tb) AS DOUBLE))
-        |      - ln(CAST(((ta - a) + (tb - b)) * ta AS DOUBLE)))
-        |     ELSE 0.0 END)
-        |  + (CASE WHEN b > 0 THEN CAST(b AS DOUBLE) *
-        |     (ln(CAST(b * (ta + tb) AS DOUBLE))
-        |      - ln(CAST((a + b) * tb AS DOUBLE))) ELSE 0.0 END
-        |   + CASE WHEN tb - b > 0 THEN CAST(tb - b AS DOUBLE) *
-        |     (ln(CAST((tb - b) * (ta + tb) AS DOUBLE))
-        |      - ln(CAST(((ta - a) + (tb - b)) * tb AS DOUBLE)))
-        |     ELSE 0.0 END))), 9) AS g2,
-        | CASE WHEN a * tb > b * ta THEN 'en' ELSE 'zh' END AS enriched_in
-        |FROM c, tot WHERE a + b >= 5
-        |ORDER BY g2 DESC, token LIMIT 30""".stripMargin,
-
-    // Novelty mirrored: the same 3-gram construction, DISTINCT per
-    // doc, min-id first-occurrence, floor-ppm close.
-    "x_novelty" ->
-      raw"""WITH tk AS (SELECT doc_id,
-        |  CASE WHEN text IS NULL OR LENGTH(TRIM(text)) = 0
-        |    THEN []::VARCHAR[]
-        |    ELSE regexp_split_to_array(TRIM(text), '\s+') END AS t
-        | FROM documents),
-        |g AS (SELECT DISTINCT doc_id, g FROM (
-        | SELECT doc_id, unnest(CASE WHEN len(t) < 3 THEN []::VARCHAR[]
-        |   ELSE list_transform(range(1, len(t) - 1), i ->
-        |     t[CAST(i AS INT)] || ' ' || t[CAST(i AS INT) + 1] || ' ' ||
-        |     t[CAST(i AS INT) + 2]) END) AS g
-        | FROM tk)),
-        |f AS (SELECT g, MIN(doc_id) AS fid FROM g GROUP BY 1),
-        |per AS (SELECT gg.doc_id, COUNT(*) AS n_grams,
-        |  CAST(SUM(CASE WHEN f.fid = gg.doc_id THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_novel
-        | FROM g gg JOIN f USING (g) GROUP BY 1)
-        |SELECT d.doc_id, COALESCE(per.n_grams, 0) AS n_grams,
-        | COALESCE(per.n_novel, 0) AS n_novel,
-        | CASE WHEN COALESCE(per.n_grams, 0) > 0
-        |   THEN (COALESCE(per.n_novel, 0) * 1000000) // per.n_grams
-        | END AS novel_ppm
-        |FROM documents d LEFT JOIN per USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    // The x_bpe_train chain through v6 (the vocabulary tokenized by all
-    // six learned merges), then every document re-assembles its words'
-    // token lists in order — the train-to-encode round trip.
-    "x_bpe_encode" ->
-      """WITH toks AS (
-        | SELECT CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |      ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |v0 AS (
-        | SELECT w, CAST(COUNT(*) AS BIGINT) AS f,
-        |  list_transform(range(1, LENGTH(w) + 1), j -> substr(w, CAST(j AS INT), 1)) AS t
-        | FROM (SELECT unnest(tok) AS w FROM toks) z GROUP BY w),
-        |t1 AS MATERIALIZED (
-        | SELECT w, f, CAST(u.i AS INT) AS i, u.tk AS tok,
-        |  LEAD(u.tk) OVER (PARTITION BY w ORDER BY u.i) AS nxt
-        | FROM v0, UNNEST(list_transform(range(1, len(t) + 1),
-        |   j -> {'i': j, 'tk': t[CAST(j AS INT)]})) AS z(u)),
-        |m1 AS MATERIALIZED (
-        | SELECT tok AS l, nxt AS r, SUM(f) AS cnt FROM t1 WHERE nxt IS NOT NULL
-        | GROUP BY 1, 2 ORDER BY cnt DESC, l, r LIMIT 1),
-        |g1 AS (
-        | SELECT w, f, i, tok, nxt, mt,
-        |  CASE WHEN mt THEN ROW_NUMBER() OVER (PARTITION BY w, grp, mt ORDER BY i) % 2 = 1
-        |       ELSE FALSE END AS app
-        | FROM (
-        |  SELECT w, f, i, tok, nxt,
-        |   (nxt IS NOT NULL AND tok = (SELECT l FROM m1) AND nxt = (SELECT r FROM m1)) AS mt,
-        |   i - ROW_NUMBER() OVER (PARTITION BY w,
-        |     (nxt IS NOT NULL AND tok = (SELECT l FROM m1) AND nxt = (SELECT r FROM m1))
-        |     ORDER BY i) AS grp
-        |  FROM t1) y),
-        |v1 AS MATERIALIZED (
-        | SELECT w, f, list(CASE WHEN app THEN tok || nxt ELSE tok END ORDER BY i) AS t
-        | FROM (SELECT *, COALESCE(LAG(app) OVER (PARTITION BY w ORDER BY i), FALSE) AS consumed
-        |       FROM g1) z2
-        | WHERE NOT consumed GROUP BY w, f),
-        |t2 AS MATERIALIZED (
-        | SELECT w, f, CAST(u.i AS INT) AS i, u.tk AS tok,
-        |  LEAD(u.tk) OVER (PARTITION BY w ORDER BY u.i) AS nxt
-        | FROM v1, UNNEST(list_transform(range(1, len(t) + 1),
-        |   j -> {'i': j, 'tk': t[CAST(j AS INT)]})) AS z(u)),
-        |m2 AS MATERIALIZED (
-        | SELECT tok AS l, nxt AS r, SUM(f) AS cnt FROM t2 WHERE nxt IS NOT NULL
-        | GROUP BY 1, 2 ORDER BY cnt DESC, l, r LIMIT 1),
-        |g2 AS (
-        | SELECT w, f, i, tok, nxt, mt,
-        |  CASE WHEN mt THEN ROW_NUMBER() OVER (PARTITION BY w, grp, mt ORDER BY i) % 2 = 1
-        |       ELSE FALSE END AS app
-        | FROM (
-        |  SELECT w, f, i, tok, nxt,
-        |   (nxt IS NOT NULL AND tok = (SELECT l FROM m2) AND nxt = (SELECT r FROM m2)) AS mt,
-        |   i - ROW_NUMBER() OVER (PARTITION BY w,
-        |     (nxt IS NOT NULL AND tok = (SELECT l FROM m2) AND nxt = (SELECT r FROM m2))
-        |     ORDER BY i) AS grp
-        |  FROM t2) y),
-        |v2 AS MATERIALIZED (
-        | SELECT w, f, list(CASE WHEN app THEN tok || nxt ELSE tok END ORDER BY i) AS t
-        | FROM (SELECT *, COALESCE(LAG(app) OVER (PARTITION BY w ORDER BY i), FALSE) AS consumed
-        |       FROM g2) z2
-        | WHERE NOT consumed GROUP BY w, f),
-        |t3 AS MATERIALIZED (
-        | SELECT w, f, CAST(u.i AS INT) AS i, u.tk AS tok,
-        |  LEAD(u.tk) OVER (PARTITION BY w ORDER BY u.i) AS nxt
-        | FROM v2, UNNEST(list_transform(range(1, len(t) + 1),
-        |   j -> {'i': j, 'tk': t[CAST(j AS INT)]})) AS z(u)),
-        |m3 AS MATERIALIZED (
-        | SELECT tok AS l, nxt AS r, SUM(f) AS cnt FROM t3 WHERE nxt IS NOT NULL
-        | GROUP BY 1, 2 ORDER BY cnt DESC, l, r LIMIT 1),
-        |g3 AS (
-        | SELECT w, f, i, tok, nxt, mt,
-        |  CASE WHEN mt THEN ROW_NUMBER() OVER (PARTITION BY w, grp, mt ORDER BY i) % 2 = 1
-        |       ELSE FALSE END AS app
-        | FROM (
-        |  SELECT w, f, i, tok, nxt,
-        |   (nxt IS NOT NULL AND tok = (SELECT l FROM m3) AND nxt = (SELECT r FROM m3)) AS mt,
-        |   i - ROW_NUMBER() OVER (PARTITION BY w,
-        |     (nxt IS NOT NULL AND tok = (SELECT l FROM m3) AND nxt = (SELECT r FROM m3))
-        |     ORDER BY i) AS grp
-        |  FROM t3) y),
-        |v3 AS MATERIALIZED (
-        | SELECT w, f, list(CASE WHEN app THEN tok || nxt ELSE tok END ORDER BY i) AS t
-        | FROM (SELECT *, COALESCE(LAG(app) OVER (PARTITION BY w ORDER BY i), FALSE) AS consumed
-        |       FROM g3) z2
-        | WHERE NOT consumed GROUP BY w, f),
-        |t4 AS MATERIALIZED (
-        | SELECT w, f, CAST(u.i AS INT) AS i, u.tk AS tok,
-        |  LEAD(u.tk) OVER (PARTITION BY w ORDER BY u.i) AS nxt
-        | FROM v3, UNNEST(list_transform(range(1, len(t) + 1),
-        |   j -> {'i': j, 'tk': t[CAST(j AS INT)]})) AS z(u)),
-        |m4 AS MATERIALIZED (
-        | SELECT tok AS l, nxt AS r, SUM(f) AS cnt FROM t4 WHERE nxt IS NOT NULL
-        | GROUP BY 1, 2 ORDER BY cnt DESC, l, r LIMIT 1),
-        |g4 AS (
-        | SELECT w, f, i, tok, nxt, mt,
-        |  CASE WHEN mt THEN ROW_NUMBER() OVER (PARTITION BY w, grp, mt ORDER BY i) % 2 = 1
-        |       ELSE FALSE END AS app
-        | FROM (
-        |  SELECT w, f, i, tok, nxt,
-        |   (nxt IS NOT NULL AND tok = (SELECT l FROM m4) AND nxt = (SELECT r FROM m4)) AS mt,
-        |   i - ROW_NUMBER() OVER (PARTITION BY w,
-        |     (nxt IS NOT NULL AND tok = (SELECT l FROM m4) AND nxt = (SELECT r FROM m4))
-        |     ORDER BY i) AS grp
-        |  FROM t4) y),
-        |v4 AS MATERIALIZED (
-        | SELECT w, f, list(CASE WHEN app THEN tok || nxt ELSE tok END ORDER BY i) AS t
-        | FROM (SELECT *, COALESCE(LAG(app) OVER (PARTITION BY w ORDER BY i), FALSE) AS consumed
-        |       FROM g4) z2
-        | WHERE NOT consumed GROUP BY w, f),
-        |t5 AS MATERIALIZED (
-        | SELECT w, f, CAST(u.i AS INT) AS i, u.tk AS tok,
-        |  LEAD(u.tk) OVER (PARTITION BY w ORDER BY u.i) AS nxt
-        | FROM v4, UNNEST(list_transform(range(1, len(t) + 1),
-        |   j -> {'i': j, 'tk': t[CAST(j AS INT)]})) AS z(u)),
-        |m5 AS MATERIALIZED (
-        | SELECT tok AS l, nxt AS r, SUM(f) AS cnt FROM t5 WHERE nxt IS NOT NULL
-        | GROUP BY 1, 2 ORDER BY cnt DESC, l, r LIMIT 1),
-        |g5 AS (
-        | SELECT w, f, i, tok, nxt, mt,
-        |  CASE WHEN mt THEN ROW_NUMBER() OVER (PARTITION BY w, grp, mt ORDER BY i) % 2 = 1
-        |       ELSE FALSE END AS app
-        | FROM (
-        |  SELECT w, f, i, tok, nxt,
-        |   (nxt IS NOT NULL AND tok = (SELECT l FROM m5) AND nxt = (SELECT r FROM m5)) AS mt,
-        |   i - ROW_NUMBER() OVER (PARTITION BY w,
-        |     (nxt IS NOT NULL AND tok = (SELECT l FROM m5) AND nxt = (SELECT r FROM m5))
-        |     ORDER BY i) AS grp
-        |  FROM t5) y),
-        |v5 AS MATERIALIZED (
-        | SELECT w, f, list(CASE WHEN app THEN tok || nxt ELSE tok END ORDER BY i) AS t
-        | FROM (SELECT *, COALESCE(LAG(app) OVER (PARTITION BY w ORDER BY i), FALSE) AS consumed
-        |       FROM g5) z2
-        | WHERE NOT consumed GROUP BY w, f),
-        |t6 AS MATERIALIZED (
-        | SELECT w, f, CAST(u.i AS INT) AS i, u.tk AS tok,
-        |  LEAD(u.tk) OVER (PARTITION BY w ORDER BY u.i) AS nxt
-        | FROM v5, UNNEST(list_transform(range(1, len(t) + 1),
-        |   j -> {'i': j, 'tk': t[CAST(j AS INT)]})) AS z(u)),
-        |m6 AS MATERIALIZED (
-        | SELECT tok AS l, nxt AS r, SUM(f) AS cnt FROM t6 WHERE nxt IS NOT NULL
-        | GROUP BY 1, 2 ORDER BY cnt DESC, l, r LIMIT 1),
-        |g6 AS (
-        | SELECT w, f, i, tok, nxt, mt,
-        |  CASE WHEN mt THEN ROW_NUMBER() OVER (PARTITION BY w, grp, mt ORDER BY i) % 2 = 1
-        |       ELSE FALSE END AS app
-        | FROM (
-        |  SELECT w, f, i, tok, nxt,
-        |   (nxt IS NOT NULL AND tok = (SELECT l FROM m6) AND nxt = (SELECT r FROM m6)) AS mt,
-        |   i - ROW_NUMBER() OVER (PARTITION BY w,
-        |     (nxt IS NOT NULL AND tok = (SELECT l FROM m6) AND nxt = (SELECT r FROM m6))
-        |     ORDER BY i) AS grp
-        |  FROM t6) y),
-        |v6 AS MATERIALIZED (
-        | SELECT w, f, list(CASE WHEN app THEN tok || nxt ELSE tok END ORDER BY i) AS t
-        | FROM (SELECT *, COALESCE(LAG(app) OVER (PARTITION BY w ORDER BY i), FALSE) AS consumed
-        |       FROM g6) z2
-        | WHERE NOT consumed GROUP BY w, f),
-        |docw AS (
-        | SELECT doc_id, CAST(u.i AS INT) AS wi, u.w AS w FROM (
-        |   SELECT doc_id, CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |        ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        |   FROM documents) d,
-        |   UNNEST(list_transform(range(1, len(tok) + 1),
-        |     j -> {'i': j, 'w': tok[CAST(j AS INT)]})) AS z(u)),
-        |enc AS (
-        | SELECT dw.doc_id, dw.wi, v.t FROM docw dw JOIN v6 v ON dw.w = v.w),
-        |agg AS (
-        | SELECT doc_id, CAST(SUM(len(t)) AS BIGINT) AS n_tokens,
-        |        string_agg(array_to_string(t, ' '), ' ' ORDER BY wi) AS tokens_joined
-        | FROM enc GROUP BY doc_id)
-        |SELECT d.doc_id, CAST(COALESCE(a.n_tokens, 0) AS BIGINT) AS n_tokens,
-        | COALESCE(a.tokens_joined, '') AS tokens_joined
-        |FROM documents d LEFT JOIN agg a USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "x_bpe_pairs" ->
-      """WITH toks AS (
-        | SELECT CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |      ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |vocab AS (
-        | SELECT w, COUNT(*) AS f
-        | FROM (SELECT unnest(tok) AS w FROM toks) GROUP BY w),
-        |pairs AS (
-        | SELECT substr(w, CAST(unnest(range(1, LENGTH(w))) AS INTEGER), 2) AS pair, f
-        | FROM vocab WHERE LENGTH(w) >= 2)
-        |SELECT pair, CAST(SUM(f) AS BIGINT) AS cnt
-        |FROM pairs GROUP BY pair
-        |ORDER BY cnt DESC, pair LIMIT 30""".stripMargin,
-
-    "x_dedup_within" ->
-      """WITH toks AS (
-        | SELECT doc_id,
-        |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |       ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |kept AS (
-        | SELECT doc_id, tok,
-        |  list_filter(tok, (u, i) -> list_position(tok, u) = i) AS k
-        | FROM toks)
-        |SELECT doc_id, array_to_string(k, ' ') AS clean_text,
-        | CAST(len(tok) - len(k) AS BIGINT) AS n_units_removed
-        |FROM kept ORDER BY doc_id""".stripMargin,
-
-    "x_sample_k" ->
-      """SELECT doc_id, lang FROM (
-        | SELECT doc_id, lang, ROW_NUMBER() OVER (PARTITION BY lang
-        |   ORDER BY md5(lang || ':' || CAST(doc_id AS VARCHAR)), doc_id) AS rk
-        | FROM documents)
-        |WHERE rk <= 5 ORDER BY doc_id""".stripMargin,
-
-    // Joins on gram STRINGS here vs xxhash64 on the Spark side —
-    // identical pairs absent a 64-bit collision.
-    "x_decontam" ->
-      """WITH toks AS (
-        | SELECT doc_id, CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |   ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |grams AS (
-        | SELECT DISTINCT doc_id, gram FROM (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(tok) - 1),
-        |    i -> tok[i] || ' ' || tok[i + 1] || ' ' || tok[i + 2])) AS gram
-        |  FROM toks))
-        |SELECT t.doc_id AS train_id, b.doc_id AS bench_id, COUNT(*) AS shared
-        |FROM grams t JOIN grams b ON t.gram = b.gram
-        |WHERE t.doc_id % 40 <> 0 AND b.doc_id % 40 = 0
-        |GROUP BY 1, 2 HAVING COUNT(*) >= 2
-        |ORDER BY train_id, bench_id""".stripMargin,
-
-    "x_range_join" ->
-      """WITH w AS (
-        | SELECT o_orderkey AS w_id,
-        |  date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS ws
-        | FROM orders WHERE o_orderkey % 97 = 0),
-        |p AS (
-        | SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
-        |  date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE)) AS pd
-        | FROM lineitem)
-        |SELECT p.l_orderkey, p.l_linenumber, p.l_partkey, p.l_suppkey,
-        | COUNT(*) AS n_windows
-        |FROM p JOIN w ON p.pd BETWEEN w.ws AND w.ws + 14
-        |GROUP BY 1, 2, 3, 4
-        |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""".stripMargin,
-
-    "x_scrub" ->
-      """WITH dirty AS (
-        | SELECT doc_id, text,
-        |  text || ' Contact user' || CAST(doc_id AS VARCHAR) ||
-        |  '@example.com or 555-867-5309 ref 9400110200881234567890' AS d
-        | FROM documents)
-        |SELECT doc_id,
-        | TRIM(regexp_replace(regexp_replace(LOWER(text), '[\x00-\x1f]', ' ', 'g'),
-        |   '\s+', ' ', 'g')) AS norm,
-        | regexp_replace(regexp_replace(regexp_replace(d,
-        |   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |   '[0-9]{9,}', '<ID>', 'g'),
-        |   '\+?[0-9][0-9() .-]{5,}[0-9]', '<PHONE>', 'g') AS scrubbed
-        |FROM dirty ORDER BY doc_id""".stripMargin,
-
-    // PII census: the same planted text, the same shared-subset shape
-    // regexes, and the precision gates as list lambdas — octet filter
-    // (no octet > 255), card size window on the separator-stripped
-    // digits, and the Luhn fold (reversed digits, odd positions as-is,
-    // even doubled minus 9 over 4) as list_sum over list_transform.
-    // Crawl-delay: the group grammar replayed in SQL — positional line
-    // zip (parallel unnest), lag/sum run detection in two window
-    // stages, exact-else-star group choice, TRY_CAST gate, MAX merge.
-    "x_crawl_delay" ->
-      """WITH d AS (SELECT 'h' || CAST(doc_id AS VARCHAR) ||
-        |   '.example.com' AS host,
-        |  CASE CAST(doc_id % 4 AS INT)
-        |   WHEN 0 THEN 'User-agent: *' || chr(10) ||
-        |    'Crawl-delay: 10' || chr(10) || 'User-agent: graftbot' ||
-        |    chr(10) || 'Disallow: /tmp' || chr(10) || 'Crawl-delay: 2.5'
-        |   WHEN 1 THEN 'User-agent: *' || chr(10) ||
-        |    'Crawl-delay: 1' || chr(10) || 'Crawl-delay: fast' ||
-        |    chr(10) || 'Crawl-delay: 4'
-        |   WHEN 2 THEN 'User-agent: graftbot' || chr(10) ||
-        |    'Disallow: /a' || chr(10) || 'User-agent: *' || chr(10) ||
-        |    'Crawl-delay: 7'
-        |   ELSE 'User-agent: other' || chr(10) ||
-        |    'User-agent: graftbot' || chr(10) || 'Crawl-delay: -3' ||
-        |    chr(10) || 'Crawl-delay: 0.5'
-        |  END AS body
-        | FROM documents WHERE doc_id < 12),
-        |ln AS (SELECT host, unnest(range(1, len(p) + 1)) AS i,
-        |   unnest(p) AS l0
-        | FROM (SELECT host, str_split(body, chr(10)) AS p FROM d)),
-        |lt AS (SELECT host, i,
-        |   trim(regexp_replace(l0, '#.*', '')) AS l FROM ln),
-        |sig AS (SELECT host, i, l,
-        |   starts_with(lower(l), 'user-agent:') AS ua,
-        |   starts_with(lower(l), 'crawl-delay:') AS cd
-        | FROM lt
-        | WHERE starts_with(lower(l), 'user-agent:')
-        |    OR starts_with(lower(l), 'allow:')
-        |    OR starts_with(lower(l), 'disallow:')
-        |    OR starts_with(lower(l), 'crawl-delay:')),
-        |g0 AS (SELECT *, (ua AND NOT COALESCE(
-        |   lag(ua) OVER (PARTITION BY host ORDER BY i), FALSE)) AS gs
-        | FROM sig),
-        |g AS (SELECT *, SUM(CASE WHEN gs THEN 1 ELSE 0 END)
-        |   OVER (PARTITION BY host ORDER BY i) AS grp FROM g0),
-        |uav AS (SELECT host, grp,
-        |   lower(trim(substring(l, strpos(l, ':') + 1))) AS agent
-        | FROM g WHERE ua),
-        |ex AS (SELECT DISTINCT host, grp FROM uav
-        | WHERE agent = 'graftbot'),
-        |st AS (SELECT DISTINCT host, grp FROM uav WHERE agent = '*'),
-        |ch AS (SELECT host, grp FROM ex UNION
-        |       SELECT host, grp FROM st
-        |        WHERE host NOT IN (SELECT host FROM ex)),
-        |dl AS (SELECT host, grp,
-        |   TRY_CAST(trim(substring(l, strpos(l, ':') + 1)) AS DOUBLE)
-        |     AS dsec
-        | FROM g WHERE cd),
-        |ok AS (SELECT dl.host, dsec FROM dl
-        | JOIN ch ON dl.host = ch.host AND dl.grp = ch.grp
-        | WHERE dsec IS NOT NULL AND dsec >= 0)
-        |SELECT host, MAX(dsec) AS crawl_delay_sec
-        |FROM ok GROUP BY 1 ORDER BY host""".stripMargin,
-
-    // Mojibake: the identical planted suffixes and the replace chain
-    // GENERATED from Corpus.mojibakePairs (3-char stage, then 2-char),
-    // counts from the same length deltas.
-    "x_mojibake" -> {
-      val (three, two) = Corpus.mojibakePairs.partition(_._1.length == 3)
-      s"""WITH p AS (SELECT doc_id,
-         |  CASE WHEN doc_id % 3 = 1 THEN text || '$mojiS1'
-         |       WHEN doc_id % 3 = 2 THEN text || '$mojiS2'
-         |       ELSE text END AS t FROM documents),
-         |a AS (SELECT doc_id, t, ${mojiSqlChain("t", three)} AS t3 FROM p),
-         |b AS (SELECT doc_id, t, t3, ${mojiSqlChain("t3", two)} AS t2
-         |  FROM a)
-         |SELECT doc_id, t2 AS repaired,
-         | CAST((length(t) - length(t3)) // 2 AS BIGINT) AS n_fix3,
-         | CAST(length(t3) - length(t2) AS BIGINT) AS n_fix2,
-         | (length(t) - length(t3)) // 2 + (length(t3) - length(t2)) > 0
-         |   AS mojibake
-         |FROM b ORDER BY doc_id""".stripMargin
-    },
-
-    "x_pii_census" ->
-      """WITH src AS (
-        | SELECT doc_id, COALESCE(text, '') || ' Contact: user' ||
-        |  CAST(doc_id AS VARCHAR) || '@mail.example.com ip=10.' ||
-        |  CAST(doc_id % 300 AS VARCHAR) || '.0.1 tel=+1 (555) 01' ||
-        |  CAST(doc_id % 10 AS VARCHAR) || '-2345 card=' ||
-        |  CASE WHEN doc_id % 2 = 0 THEN '4111 1111 1111 1111'
-        |       ELSE '4111 1111 1111 1112' END AS t
-        | FROM documents),
-        |c AS (
-        | SELECT doc_id,
-        |  regexp_extract_all(t,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}') AS emails,
-        |  regexp_extract_all(t,
-        |    '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b') AS ips,
-        |  regexp_extract_all(t, '\+?[0-9][0-9() .-]{5,}[0-9]') AS phones,
-        |  list_filter(list_transform(
-        |    regexp_extract_all(t, '\b[0-9][0-9 -]{11,21}[0-9]\b'),
-        |    x -> regexp_replace(x, '[^0-9]', '', 'g')),
-        |   d -> len(d) >= 13 AND len(d) <= 19) AS sized
-        | FROM src),
-        |v AS (
-        | SELECT doc_id, emails, ips, phones, sized,
-        |  list_filter(sized, d -> list_sum(list_transform(
-        |    range(1, len(d) + 1),
-        |    i -> CASE WHEN i % 2 = 1
-        |      THEN CAST(substring(reverse(d), CAST(i AS INTEGER), 1)
-        |        AS INTEGER)
-        |      ELSE CAST(substring(reverse(d), CAST(i AS INTEGER), 1)
-        |          AS INTEGER) * 2
-        |        - CASE WHEN CAST(substring(reverse(d), CAST(i AS INTEGER),
-        |            1) AS INTEGER) > 4 THEN 9 ELSE 0 END
-        |      END)) % 10 = 0) AS luhn_ok
-        | FROM c)
-        |SELECT doc_id,
-        | CAST(len(emails) AS BIGINT) AS n_email,
-        | CAST(len(list_filter(ips, x -> len(list_filter(
-        |   string_split(x, '.'),
-        |   o -> CAST(o AS INTEGER) > 255)) = 0)) AS BIGINT) AS n_ipv4,
-        | CAST(len(phones) AS BIGINT) AS n_phone,
-        | CAST(len(luhn_ok) AS BIGINT) AS n_card,
-        | CAST(len(sized) - len(luhn_ok) AS BIGINT) AS n_card_like
-        |FROM v ORDER BY doc_id""".stripMargin,
-
-    // Cohen's kappa: the same planted raters, marginals joined on
-    // (lang, label), the exact integer core with the single double
-    // division last — NULLIF guards the degenerate n² = e case.
-    "x_kappa" ->
-      """WITH lab AS (SELECT lang,
-        |  CASE WHEN doc_id % 13 = 0 THEN NULL
-        |       ELSE (doc_id * 7) % 3 END AS r1,
-        |  CASE WHEN doc_id % 17 = 0 THEN NULL
-        |       WHEN doc_id % 4 = 0 THEN ((CASE WHEN doc_id % 13 = 0
-        |         THEN NULL ELSE (doc_id * 7) % 3 END) + 1) % 3
-        |       ELSE CASE WHEN doc_id % 13 = 0 THEN NULL
-        |         ELSE (doc_id * 7) % 3 END END AS r2
-        | FROM documents),
-        |p AS (SELECT * FROM lab WHERE r1 IS NOT NULL AND r2 IS NOT NULL),
-        |base AS (SELECT lang, COUNT(*) AS n,
-        |  SUM(CASE WHEN r1 = r2 THEN 1 ELSE 0 END) AS o
-        | FROM p GROUP BY 1),
-        |m1 AS (SELECT lang, r1 AS l, COUNT(*) AS n1 FROM p GROUP BY 1, 2),
-        |m2 AS (SELECT lang, r2 AS l, COUNT(*) AS n2 FROM p GROUP BY 1, 2),
-        |e AS (SELECT m1.lang, SUM(n1 * n2) AS e FROM m1
-        |  JOIN m2 ON m1.lang = m2.lang AND m1.l = m2.l GROUP BY 1)
-        |SELECT base.lang, CAST(n AS BIGINT) AS n,
-        | CAST(o AS BIGINT) AS n_agree,
-        | ROUND((CAST(n AS DOUBLE) * CAST(o AS DOUBLE) - CAST(e AS DOUBLE))
-        |   / NULLIF(CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-        |     - CAST(e AS DOUBLE), CAST(0.0 AS DOUBLE)), 9) AS kappa
-        |FROM base JOIN e ON base.lang = e.lang
-        |ORDER BY base.lang""".stripMargin,
-
-    // Readability: the same planted lines, sentence runs counted over
-    // the joined text, the per-token vowel-group fold as list lambdas
-    // (COALESCE(list_sum, 0) — DuckDB's empty-list sum is NULL), the
-    // two score polynomials in identical association order.
-    "x_readability" ->
-      """WITH toks AS (
-        | SELECT doc_id,
-        |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-        |       ELSE regexp_split_to_array(TRIM(text), '\s+') END AS tok
-        | FROM documents),
-        |lined AS (
-        | SELECT doc_id,
-        |  array_to_string(list_transform(range((len(tok) + 9) // 10), i ->
-        |    array_to_string(tok[i * 10 + 1 : i * 10 + 10], ' ') ||
-        |    CASE WHEN i % 3 = 2 THEN '' ELSE '.' END),
-        |   chr(10)) AS t
-        | FROM toks),
-        |c AS (
-        | SELECT doc_id,
-        |  CASE WHEN LENGTH(TRIM(t)) = 0 THEN []::VARCHAR[]
-        |       ELSE regexp_split_to_array(TRIM(t), '\s+') END AS wtok,
-        |  CAST(len(regexp_extract_all(t, '[.!?]+')) AS BIGINT) AS sraw
-        | FROM lined),
-        |m AS (
-        | SELECT doc_id, CAST(len(wtok) AS BIGINT) AS w,
-        |  GREATEST(sraw, 1) AS s,
-        |  CAST(COALESCE(list_sum(list_transform(wtok, x ->
-        |    GREATEST(len(regexp_extract_all(lower(x), '[aeiouy]+')), 1))),
-        |    0) AS BIGINT) AS y
-        | FROM c)
-        |SELECT doc_id, w AS n_words,
-        | CASE WHEN w = 0 THEN 0 ELSE s END AS n_sentences,
-        | y AS n_syllables,
-        | CASE WHEN w > 0 THEN ROUND(CAST(206.835 AS DOUBLE)
-        |   - CAST(1.015 AS DOUBLE) * (CAST(w AS DOUBLE) / CAST(s AS DOUBLE))
-        |   - CAST(84.6 AS DOUBLE) * (CAST(y AS DOUBLE) / CAST(w AS DOUBLE)),
-        |   9) END AS reading_ease,
-        | CASE WHEN w > 0 THEN ROUND(
-        |   CAST(0.39 AS DOUBLE) * (CAST(w AS DOUBLE) / CAST(s AS DOUBLE))
-        |   + CAST(11.8 AS DOUBLE) * (CAST(y AS DOUBLE) / CAST(w AS DOUBLE))
-        |   - CAST(15.59 AS DOUBLE), 9) END AS fk_grade
-        |FROM m ORDER BY doc_id""".stripMargin,
-
-    // Fleiss' kappa: the same planted panel unnested, the integer core
-    // (D(A−B) − B(n−1)C) / (B(n−1)(D−C)) in HUGEINT mirroring the
-    // engine's DECIMAL(38,0), NULLIF guarding pe = 1.
-    "x_fleiss" ->
-      """WITH r AS (SELECT lang, doc_id, unnest([
-        |   (doc_id * 3) % 4,
-        |   CASE WHEN doc_id % 5 = 0 THEN ((doc_id * 3) % 4 + 1) % 4
-        |        ELSE (doc_id * 3) % 4 END,
-        |   CASE WHEN doc_id % 7 = 0 THEN ((doc_id * 3) % 4 + 2) % 4
-        |        ELSE (doc_id * 3) % 4 END]) AS label
-        | FROM documents),
-        |c AS (SELECT lang, doc_id, label, COUNT(*) AS c
-        | FROM r GROUP BY 1, 2, 3),
-        |it AS (SELECT lang, doc_id, SUM(c) AS n, SUM(c * c) AS ai
-        | FROM c GROUP BY 1, 2),
-        |pg AS (SELECT lang, COUNT(*) AS nn, MIN(n) AS nr, SUM(ai) AS a
-        | FROM it GROUP BY 1),
-        |mg AS (SELECT lang, label, SUM(c) AS m FROM c GROUP BY 1, 2),
-        |cg AS (SELECT lang,
-        |  SUM(CAST(m AS HUGEINT) * CAST(m AS HUGEINT)) AS cc
-        | FROM mg GROUP BY 1)
-        |SELECT pg.lang, CAST(nn AS BIGINT) AS n_items,
-        | CAST(nr AS BIGINT) AS n_raters,
-        | ROUND(CAST(CAST(nn * nr AS HUGEINT) * CAST(nn * nr AS HUGEINT)
-        |     * CAST(a - nn * nr AS HUGEINT)
-        |   - CAST(nn * nr AS HUGEINT) * CAST(nr - 1 AS HUGEINT) * cc
-        |   AS DOUBLE)
-        |  / NULLIF(CAST(CAST(nn * nr AS HUGEINT) * CAST(nr - 1 AS HUGEINT)
-        |   * (CAST(nn * nr AS HUGEINT) * CAST(nn * nr AS HUGEINT) - cc)
-        |   AS DOUBLE), CAST(0.0 AS DOUBLE)), 9) AS kappa
-        |FROM pg JOIN cg ON pg.lang = cg.lang
-        |ORDER BY pg.lang""".stripMargin,
-
-    // Dir-scoped compaction plan: the dir-keyed running-size window with
-    // explicit ROWS framing, the same floor((cum − bytes)/target) bins.
-    "x_compaction_dirs" ->
-      """WITH f AS (SELECT 'dt=' || CAST(doc_id % 5 AS VARCHAR) AS dir,
-        |  'part-' || lpad(CAST(doc_id AS VARCHAR), 8, '0') AS path,
-        |  (doc_id * 37) % 1400000 + 1000 AS bytes FROM documents),
-        |c AS (SELECT dir, path, CAST(bytes AS BIGINT) AS bytes,
-        |  CASE WHEN bytes < 1000000 THEN 'compact' ELSE 'keep' END
-        |    AS action,
-        |  SUM(CASE WHEN bytes < 1000000 THEN bytes ELSE 0 END) OVER (
-        |    PARTITION BY dir ORDER BY path
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        | FROM f)
-        |SELECT dir, path, bytes, action,
-        | CASE WHEN bytes < 1000000 THEN CAST(FLOOR(
-        |   CAST(cum - bytes AS DOUBLE) / 1000000.0) AS BIGINT)
-        | END AS group_id
-        |FROM c ORDER BY dir, path""".stripMargin,
-
-    // Revisit scheduling: the changefreq→interval CASE, the due
-    // predicate (never-fetched OR non-never past its interval), and the
-    // (tier, overdue desc, url) politeness rank replayed as one window.
-    "x_revisit" ->
-      """WITH f AS (
-        | SELECT 'h' || CAST(doc_id % 37 AS VARCHAR) AS host,
-        |  'https://h' || CAST(doc_id % 37 AS VARCHAR) || '.example.com/p'
-        |    || CAST(doc_id AS VARCHAR) AS url,
-        |  CASE WHEN doc_id % 11 = 0 THEN NULL ELSE list_extract(
-        |    ['always','hourly','daily','weekly','monthly','yearly',
-        |     'never','Sometimes'], CAST(doc_id % 8 AS INTEGER) + 1)
-        |   END AS changefreq,
-        |  CASE WHEN doc_id % 5 = 0 THEN NULL
-        |   ELSE 1700000000 + (doc_id * 7919) % 30000000 END AS last_crawl
-        | FROM documents),
-        |i AS (SELECT *, CASE lower(COALESCE(changefreq, ''))
-        |   WHEN 'always' THEN 0 WHEN 'hourly' THEN 3600
-        |   WHEN 'daily' THEN 86400 WHEN 'weekly' THEN 604800
-        |   WHEN 'monthly' THEN 2592000 WHEN 'yearly' THEN 31536000
-        |   WHEN 'never' THEN NULL ELSE 86400 END AS itv FROM f),
-        |d AS (SELECT host, url, last_crawl,
-        |   CASE WHEN last_crawl IS NOT NULL
-        |    THEN 1730000000 - (last_crawl + itv) END AS overdue_sec
-        |  FROM i
-        |  WHERE last_crawl IS NULL OR (lower(COALESCE(changefreq, ''))
-        |    <> 'never' AND last_crawl + itv <= 1730000000)),
-        |r AS (SELECT host, url, overdue_sec,
-        |   row_number() OVER (PARTITION BY host ORDER BY
-        |     CASE WHEN last_crawl IS NULL THEN 0 ELSE 1 END ASC,
-        |     COALESCE(overdue_sec, 9223372036854775807) DESC,
-        |     url ASC) AS wave
-        |  FROM d)
-        |SELECT host, url, CAST(wave AS BIGINT) AS wave,
-        | CAST(overdue_sec AS BIGINT) AS overdue_sec
-        |FROM r WHERE wave <= 3 ORDER BY host, wave""".stripMargin,
-
-    // Anchor texts: href/inner pairs via list_zip of the two capture
-    // groups (same RE2/Java-shared pattern), the tag-strip + fixed-order
-    // entity chain + whitespace collapse replayed verbatim, then the
-    // count + rank window.
-    "x_anchor_text" ->
-      """WITH src AS (
-        | SELECT doc_id, '<p>intro</p><a href="https://t' ||
-        |  CAST(doc_id % 23 AS VARCHAR) ||
-        |  '.example.com/">Read &amp; learn <b>more</b></a> <a class=''x'' href=''/local/p'
-        |  || CAST(doc_id % 7 AS VARCHAR) || '''>page ' ||
-        |  CAST(doc_id % 7 AS VARCHAR) || ' notes</a>' ||
-        |  CASE WHEN doc_id % 6 = 0 THEN '<a href="https://t' ||
-        |    CAST(doc_id % 23 AS VARCHAR) ||
-        |    '.example.com/"><img src="i.png"/></a>' ELSE '' END AS h
-        | FROM documents),
-        |l AS (SELECT unnest(list_zip(
-        |   regexp_extract_all(h,
-        |    '(?is)<a\s[^>]*href\s*=\s*["'']([^"'']*)["''][^>]*>(.*?)</a\s*>',
-        |    1),
-        |   regexp_extract_all(h,
-        |    '(?is)<a\s[^>]*href\s*=\s*["'']([^"'']*)["''][^>]*>(.*?)</a\s*>',
-        |    2))) AS z
-        |  FROM src),
-        |a AS (SELECT z[1] AS target,
-        |   TRIM(regexp_replace(
-        |     replace(replace(replace(replace(replace(replace(
-        |       regexp_replace(z[2], '(?s)<[^>]*>', ' ', 'g'),
-        |       '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-        |       '&#39;', ''''), '&apos;', ''''), '&amp;', '&'),
-        |     '\s+', ' ', 'g')) AS anchor
-        |  FROM l),
-        |t AS (SELECT target, unnest(
-        |   CASE WHEN LENGTH(TRIM(lower(anchor))) = 0 THEN []::VARCHAR[]
-        |    ELSE regexp_split_to_array(TRIM(lower(anchor)), '\s+')
-        |   END) AS term FROM a),
-        |c AS (SELECT target, term, COUNT(*) AS n FROM t GROUP BY 1, 2),
-        |r AS (SELECT target, term, n, row_number() OVER (
-        |   PARTITION BY target ORDER BY n DESC, term ASC) AS rank FROM c)
-        |SELECT target, term, n, CAST(rank AS BIGINT) AS rank
-        |FROM r WHERE rank <= 2 ORDER BY target, rank""".stripMargin,
-
-    "x_ngram_jaccard" ->
-      s"""WITH ${ngramPairsCte(0.2)}
-         |SELECT id_a, id_b, jaccard FROM jpairs
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // Ground truth = exact pairs at ≥ 0.8; the flag is TRUE by definition
-    // here and only TRUE on the Spark side when the 8×4 banding really
-    // surfaced every high-similarity pair.
-    "x_minhash_neardup" ->
-      s"""WITH ${ngramPairsCte(0.8)}
-         |SELECT id_a, id_b, jaccard, TRUE AS found_by_minhash FROM jpairs
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // Planted-recall oracle: the planted pair list is pure arithmetic on
-    // the eligibility predicate; found_by_simhash is PINNED TRUE — the
-    // engine's banded simhash recall is what the hash compare verifies.
-    "x_simhash" ->
-      """SELECT doc_id, doc_id + 10000000 AS copy_id,
-        | TRUE AS found_by_simhash
-        |FROM documents
-        |WHERE doc_id % 5 = 0
-        |  AND len(regexp_split_to_array(TRIM(text), '\s+')) >= 40
-        |ORDER BY doc_id""".stripMargin,
-
-    // Planted-recall oracle: reproduces the perturbed copy (dim d scaled
-    // by 1 + 0.005·((d%7)−3), rounded to float32 exactly as Spark's
-    // transform+cast) and the exact-decimal cosine; found_by_lsh PINNED
-    // TRUE verifies the 4-table OR-amplified bucketing recall.
-    "x_lsh_ann" ->
-      """WITH p AS (
-        | SELECT vec_id,
-        |  list_transform(embedding, (x, i) ->
-        |    CAST(CAST(x AS DOUBLE) * (1.0 + 0.005 * (((i - 1) % 7) - 3)) AS FLOAT)) AS pemb
-        | FROM embeddings
-        | WHERE vec_id % 20 = 0),
-        |z AS (
-        | SELECT e.vec_id,
-        |  CAST(unnest(e.embedding) AS DOUBLE) AS x,
-        |  CAST(unnest(p.pemb) AS DOUBLE) AS y
-        | FROM embeddings e JOIN p USING (vec_id)),
-        |d AS (
-        | SELECT vec_id,
-        |  SUM(CAST(x * y AS DECIMAL(30,15))) AS dot,
-        |  SUM(CAST(x * x AS DECIMAL(30,15))) AS na,
-        |  SUM(CAST(y * y AS DECIMAL(30,15))) AS nb
-        | FROM z GROUP BY 1)
-        |SELECT vec_id, vec_id + 10000000 AS copy_id,
-        | ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)), 9) AS cos,
-        | TRUE AS found_by_lsh
-        |FROM d ORDER BY vec_id""".stripMargin,
-
-    // Connected components over the exact ≥ 0.5 pairs via recursive
-    // transitive closure (component label = min reachable id), then keep
-    // each component's min-id doc plus all unpaired docs — exactly
-    // Dedup.dropNearDuplicates' semantics, independently reformulated.
-    "x_dedup_drop" ->
-      s"""WITH RECURSIVE ${ngramPairsCte(0.5)},
-         |edges AS (
-         | SELECT id_a AS u, id_b AS v FROM jpairs
-         | UNION
-         | SELECT id_b AS u, id_a AS v FROM jpairs),
-         |reach AS (
-         | SELECT u AS node, u AS lab FROM edges
-         | UNION
-         | SELECT e.v AS node, r.lab AS lab
-         | FROM reach r JOIN edges e ON e.u = r.node),
-         |labels AS (SELECT node, MIN(lab) AS label FROM reach GROUP BY node)
-         |SELECT doc_id FROM documents
-         |WHERE doc_id NOT IN (SELECT node FROM labels WHERE label <> node)
-         |ORDER BY doc_id""".stripMargin,
-
-    "x_cosine_topk" -> cosineTopkOracle,
-
-    "x_embed_neardup" ->
-      """WITH z AS (
-        | SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  CAST(unnest(a.embedding) AS DOUBLE) AS x,
-        |  CAST(unnest(b.embedding) AS DOUBLE) AS y
-        | FROM embeddings a JOIN embeddings b
-        |   ON a.label = b.label AND a.vec_id < b.vec_id),
-        |d AS (
-        | SELECT id_a, id_b,
-        |  SUM(CAST(x * y AS DECIMAL(30,15))) AS dot,
-        |  SUM(CAST(x * x AS DECIMAL(30,15))) AS na,
-        |  SUM(CAST(y * y AS DECIMAL(30,15))) AS nb
-        | FROM z GROUP BY id_a, id_b)
-        |SELECT id_a, id_b,
-        | ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)), 9) AS cos
-        |FROM d
-        |WHERE ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)), 9) >= 0.35
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // Full quadratic per-query rank window; mutual = both directions
-    // rank ≤ 5. cos is direction-independent (decimal accumulation),
-    // so either side's value matches Spark's min-under-group.
-    // The x_knn_graph quadratic chain builds the mutual graph; three
-    // unrolled vote rounds (count majority, smallest-label tiebreak,
-    // clamped labels) replicate the engine's propagation exactly.
-    "x_label_prop" ->
-      """WITH z AS (
-        | SELECT q.vec_id AS qid, c.vec_id AS nid,
-        |  CAST(unnest(c.embedding) AS DOUBLE) AS x,
-        |  CAST(unnest(q.embedding) AS DOUBLE) AS y
-        | FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id),
-        |d AS (
-        | SELECT qid, nid,
-        |  SUM(CAST(x * y AS DECIMAL(30,15))) AS dot,
-        |  SUM(CAST(x * x AS DECIMAL(30,15))) AS nc,
-        |  SUM(CAST(y * y AS DECIMAL(30,15))) AS nq
-        | FROM z GROUP BY 1, 2),
-        |r AS (
-        | SELECT qid, nid,
-        |  ROW_NUMBER() OVER (PARTITION BY qid
-        |    ORDER BY ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(nc AS DOUBLE) * CAST(nq AS DOUBLE)), 9) DESC,
-        |      nid) AS rank
-        | FROM d),
-        |topk AS (SELECT qid, nid FROM r WHERE rank <= 5),
-        |mut AS (
-        | SELECT a.qid AS id_a, a.nid AS id_b
-        | FROM topk a JOIN topk b ON a.qid = b.nid AND a.nid = b.qid
-        | WHERE a.qid < a.nid),
-        |und AS (
-        | SELECT id_a AS src, id_b AS dst FROM mut
-        | UNION ALL SELECT id_b, id_a FROM mut),
-        |l0 AS (
-        | SELECT vec_id AS id, label, 0 AS since FROM embeddings
-        | WHERE vec_id % 5 = 0),
-        |v1 AS (
-        | SELECT e.dst AS id, l.label, COUNT(*) AS nv
-        | FROM und e JOIN l0 l ON e.src = l.id
-        | WHERE e.dst NOT IN (SELECT id FROM l0) GROUP BY 1, 2),
-        |p1 AS (SELECT id, label FROM (
-        |  SELECT id, label, ROW_NUMBER() OVER (PARTITION BY id
-        |    ORDER BY nv DESC, label) AS rk FROM v1) x WHERE rk = 1),
-        |l1 AS (SELECT * FROM l0 UNION ALL SELECT id, label, 1 FROM p1),
-        |v2 AS (
-        | SELECT e.dst AS id, l.label, COUNT(*) AS nv
-        | FROM und e JOIN l1 l ON e.src = l.id
-        | WHERE e.dst NOT IN (SELECT id FROM l1) GROUP BY 1, 2),
-        |p2 AS (SELECT id, label FROM (
-        |  SELECT id, label, ROW_NUMBER() OVER (PARTITION BY id
-        |    ORDER BY nv DESC, label) AS rk FROM v2) x WHERE rk = 1),
-        |l2 AS (SELECT * FROM l1 UNION ALL SELECT id, label, 2 FROM p2),
-        |v3 AS (
-        | SELECT e.dst AS id, l.label, COUNT(*) AS nv
-        | FROM und e JOIN l2 l ON e.src = l.id
-        | WHERE e.dst NOT IN (SELECT id FROM l2) GROUP BY 1, 2),
-        |p3 AS (SELECT id, label FROM (
-        |  SELECT id, label, ROW_NUMBER() OVER (PARTITION BY id
-        |    ORDER BY nv DESC, label) AS rk FROM v3) x WHERE rk = 1),
-        |l3 AS (SELECT * FROM l2 UNION ALL SELECT id, label, 3 FROM p3)
-        |SELECT e.vec_id, l.label, CAST(l.since AS INT) AS since
-        |FROM embeddings e LEFT JOIN l3 l ON e.vec_id = l.id
-        |ORDER BY e.vec_id""".stripMargin,
-
-    "x_knn_graph" ->
-      s"""WITH $mutualKnnCte
-        |SELECT id_a, id_b, cos FROM mutual
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // One stats row per column, ordinal-pinned order; COUNT(DISTINCT)
-    // excludes nulls in both engines.
-    // The oracle IS the full rescan the ritual avoids: moments over
-    // history ∪ arrivals directly — merge ≡ rescan is the claim under
-    // test. Decimal accumulation mirrored at scale 6 (NOT 15: Spark
-    // decimalizes a double via its shortest string, DuckDB via the
-    // exact binary expansion — at scale 15 the two round different
-    // per-value decimals and 10k-value sums drift ~1e-11; at scale 6
-    // both agree for ≤6-fractional-digit values, see momentsBuild);
-    // the v*v product is one double op before the decimal cast on
-    // both engines, double narrowing only at the end.
-    "x_moments_append" ->
-      """WITH base AS (SELECT event_id, user_id,
-        |  CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END AS value
-        | FROM events)
-        |SELECT "column", n_rows, n_nulls, n, sum_v, sum_sq, vmin, vmax
-        |FROM (
-        | SELECT 'user_id' AS "column", COUNT(*) AS n_rows,
-        |  COUNT(*) - COUNT(user_id) AS n_nulls,
-        |  COUNT(CASE WHEN user_id IS NOT NULL
-        |    AND NOT isnan(CAST(user_id AS DOUBLE)) THEN 1 END) AS n,
-        |  CAST(COALESCE(SUM(CAST(CASE WHEN user_id IS NOT NULL
-        |    AND NOT isnan(CAST(user_id AS DOUBLE))
-        |    THEN CAST(user_id AS DOUBLE) END AS DECIMAL(30,6))),
-        |    0) AS DOUBLE) AS sum_v,
-        |  CAST(COALESCE(SUM(CAST(CASE WHEN user_id IS NOT NULL
-        |    AND NOT isnan(CAST(user_id AS DOUBLE))
-        |    THEN CAST(user_id AS DOUBLE) * CAST(user_id AS DOUBLE)
-        |    END AS DECIMAL(30,6))), 0) AS DOUBLE) AS sum_sq,
-        |  MIN(CAST(user_id AS DOUBLE)) AS vmin,
-        |  MAX(CAST(user_id AS DOUBLE)) AS vmax
-        | FROM base
-        | UNION ALL
-        | SELECT 'value', COUNT(*), COUNT(*) - COUNT(value),
-        |  COUNT(CASE WHEN value IS NOT NULL AND NOT isnan(value)
-        |    THEN 1 END),
-        |  CAST(COALESCE(SUM(CAST(CASE WHEN value IS NOT NULL
-        |    AND NOT isnan(value) THEN value END AS DECIMAL(30,6))),
-        |    0) AS DOUBLE),
-        |  CAST(COALESCE(SUM(CAST(CASE WHEN value IS NOT NULL
-        |    AND NOT isnan(value) THEN value * value
-        |    END AS DECIMAL(30,6))), 0) AS DOUBLE),
-        |  MIN(CASE WHEN NOT isnan(value) THEN value END),
-        |  MAX(CASE WHEN NOT isnan(value) THEN value END)
-        | FROM base)
-        |ORDER BY "column"""".stripMargin,
-
-    "x_profile" ->
-      """SELECT "column", n_rows, n_nulls, n_distinct FROM (
-        | SELECT 0 AS ord, 'l_orderkey' AS "column", COUNT(*) AS n_rows,
-        |  COUNT(*) - COUNT(l_orderkey) AS n_nulls,
-        |  COUNT(DISTINCT l_orderkey) AS n_distinct FROM lineitem
-        | UNION ALL SELECT 1, 'l_partkey', COUNT(*), COUNT(*) - COUNT(l_partkey),
-        |  COUNT(DISTINCT l_partkey) FROM lineitem
-        | UNION ALL SELECT 2, 'l_suppkey', COUNT(*), COUNT(*) - COUNT(l_suppkey),
-        |  COUNT(DISTINCT l_suppkey) FROM lineitem
-        | UNION ALL SELECT 3, 'l_returnflag', COUNT(*), COUNT(*) - COUNT(l_returnflag),
-        |  COUNT(DISTINCT l_returnflag) FROM lineitem
-        | UNION ALL SELECT 4, 'l_shipdate', COUNT(*), COUNT(*) - COUNT(l_shipdate),
-        |  COUNT(DISTINCT l_shipdate) FROM lineitem
-        | UNION ALL SELECT 5, 'l_linestatus', COUNT(*), COUNT(*) - COUNT(l_linestatus),
-        |  COUNT(DISTINCT l_linestatus) FROM lineitem)
-        |ORDER BY ord""".stripMargin,
-
-    // Exact counts recomputed; the HLL++ estimates are asserted only
-    // through the within-3·rsd flags (the x_approx_distinct convention).
-    // Presentation order is BY COLUMN NAME (the query joins exact ×
-    // approx, losing the ordinal).
-    "x_profile_approx" ->
-      """SELECT "column", n_rows, n_nulls, n_distinct, TRUE AS within_tol FROM (
-        | SELECT 'l_orderkey' AS "column", COUNT(*) AS n_rows,
-        |  COUNT(*) - COUNT(l_orderkey) AS n_nulls,
-        |  COUNT(DISTINCT l_orderkey) AS n_distinct FROM lineitem
-        | UNION ALL SELECT 'l_partkey', COUNT(*), COUNT(*) - COUNT(l_partkey),
-        |  COUNT(DISTINCT l_partkey) FROM lineitem
-        | UNION ALL SELECT 'l_suppkey', COUNT(*), COUNT(*) - COUNT(l_suppkey),
-        |  COUNT(DISTINCT l_suppkey) FROM lineitem
-        | UNION ALL SELECT 'l_returnflag', COUNT(*), COUNT(*) - COUNT(l_returnflag),
-        |  COUNT(DISTINCT l_returnflag) FROM lineitem)
-        |ORDER BY "column"""".stripMargin,
-
-    // Four peeling rounds unrolled; converged = |kp4| = |kp3| (peeling
-    // is monotone, so count equality is set equality). Round CTEs are
-    // MATERIALIZED — each is referenced several times and DuckDB would
-    // otherwise replay the quadratic mutual-graph chain per reference
-    // (the x_bpe_train lesson; un-materialized this OOMs).
-    "x_kcore" -> {
-      def peel(r: Int) =
-        s"""d$r AS MATERIALIZED (SELECT id, COUNT(*) AS dg FROM (
-           |  SELECT u AS id FROM e${r - 1} UNION ALL SELECT v FROM e${r - 1})
-           | GROUP BY 1),
-           |kp$r AS MATERIALIZED (SELECT id FROM d$r WHERE dg >= 3),
-           |e$r AS MATERIALIZED (SELECT u, v FROM e${r - 1}
-           | WHERE u IN (SELECT id FROM kp$r) AND v IN (SELECT id FROM kp$r))""".stripMargin
-      s"""WITH $mutualKnnCte,
-         |e0 AS MATERIALIZED (SELECT id_a AS u, id_b AS v FROM mutual),
-         |nodes AS (SELECT DISTINCT id FROM (
-         |  SELECT u AS id FROM e0 UNION ALL SELECT v FROM e0)),
-         |${(1 to 4).map(peel).mkString(",\n")},
-         |flag AS (SELECT (SELECT COUNT(*) FROM kp4) = (SELECT COUNT(*) FROM kp3)
-         |  AS converged)
-         |SELECT n.id, (kp.id IS NOT NULL) AS in_core, f.converged
-         |FROM nodes n LEFT JOIN kp4 kp USING (id) CROSS JOIN flag f
-         |ORDER BY n.id""".stripMargin
-    },
-
-    // Same unrolled recurrence as x_pagerank with the teleport term
-    // (1−d)·p — p uniform over in-graph seeds, r0 = p; double ops
-    // mirrored (1.0−0.85 as a DOUBLE subtraction, 1.0/ns DOUBLE divide).
-    "x_ppr" -> {
-      def step(i: Int) =
-        s"""r$i AS (
-           | SELECT n.id, n.deg, n.p,
-           |  (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) * n.p +
-           |  CAST(0.85 AS DOUBLE) * COALESCE(s.in_sum, CAST(0.0 AS DOUBLE)) AS rank
-           | FROM nodes n LEFT JOIN (
-           |  SELECT e.dst AS dst,
-           |   CAST(SUM(CAST(r.rank / CAST(r.deg AS DOUBLE) AS DECIMAL(30,15)))
-           |     AS DOUBLE) AS in_sum
-           |  FROM e JOIN r${i - 1} r ON e.src = r.id GROUP BY e.dst) s
-           | ON n.id = s.dst)""".stripMargin
-      s"""WITH e AS (
-         | SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-         | FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         |deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
-         |nb AS (
-         | SELECT n.id, COALESCE(d.deg, 0) AS deg
-         | FROM (SELECT DISTINCT id FROM
-         |   (SELECT src AS id FROM e UNION ALL SELECT dst AS id FROM e)) n
-         | LEFT JOIN deg d ON n.id = d.src),
-         |ns AS (SELECT COUNT(*) AS ns FROM nb WHERE id % 50 = 0),
-         |nodes AS (
-         | SELECT id, deg,
-         |  CASE WHEN id % 50 = 0
-         |   THEN CAST(1.0 AS DOUBLE) / CAST(ns AS DOUBLE)
-         |   ELSE CAST(0.0 AS DOUBLE) END AS p
-         | FROM nb CROSS JOIN ns),
-         |r0 AS (SELECT id, deg, p, p AS rank FROM nodes),
-         |${(1 to 5).map(step).mkString(",\n")}
-         |SELECT id, ROUND(rank, 9) AS rank FROM r5 ORDER BY id""".stripMargin
-    },
-
-    // Nodes = pair participants only (the engine's component domain);
-    // label = min reachable id via the recursive closure.
-    "x_components" ->
-      s"""WITH RECURSIVE ${ngramPairsCte(0.5)},
-         |edges AS (
-         | SELECT id_a AS u, id_b AS v FROM jpairs
-         | UNION
-         | SELECT id_b AS u, id_a AS v FROM jpairs),
-         |reach AS (
-         | SELECT u AS node, u AS lab FROM edges
-         | UNION
-         | SELECT e.v AS node, r.lab AS lab
-         | FROM reach r JOIN edges e ON e.u = r.node),
-         |labels AS (SELECT node, MIN(lab) AS label FROM reach GROUP BY node)
-         |SELECT node AS id, label FROM labels ORDER BY id""".stripMargin,
-
-    // Triangles + degree + the same double arithmetic: 2T/(d(d−1)),
-    // round 9; degree-1 nodes null.
-    "x_clustering_coef" ->
-      s"""WITH $mutualKnnCte,
-        |e AS (SELECT id_a AS u, id_b AS v FROM mutual),
-        |tri AS (SELECT xy.u AS x, xy.v AS y, xz.v AS z
-        |        FROM e xy JOIN e xz ON xz.u = xy.u AND xz.v > xy.v
-        |        JOIN e yz ON yz.u = xy.v AND yz.v = xz.v),
-        |pernode AS (SELECT id, COUNT(*) AS triangles FROM (
-        |  SELECT x AS id FROM tri UNION ALL SELECT y FROM tri
-        |  UNION ALL SELECT z FROM tri) GROUP BY 1),
-        |deg AS (SELECT id, COUNT(*) AS deg FROM (
-        |  SELECT id_a AS id FROM mutual UNION ALL SELECT id_b FROM mutual)
-        | GROUP BY 1)
-        |SELECT d.id, d.deg,
-        | COALESCE(p.triangles, CAST(0 AS BIGINT)) AS triangles,
-        | CASE WHEN d.deg >= 2 THEN
-        |  ROUND(2.0 * CAST(COALESCE(p.triangles, 0) AS DOUBLE) /
-        |    (CAST(d.deg AS DOUBLE) * (CAST(d.deg AS DOUBLE) - 1.0)), 9)
-        | ELSE NULL END AS coef
-        |FROM deg d LEFT JOIN pernode p USING (id)
-        |ORDER BY id""".stripMargin,
-
-    // Modularity mirrored on the shared mutual-kNN CTE: labeled
-    // subgraph inner joins, cluster rollup, HUGEINT sum narrowed.
-    "x_modularity" ->
-      s"""WITH $mutualKnnCte,
-        |lab AS (SELECT vec_id AS id, label AS l FROM embeddings),
-        |e AS (SELECT DISTINCT LEAST(id_a, id_b) AS u,
-        |   GREATEST(id_a, id_b) AS v
-        |  FROM mutual WHERE id_a <> id_b),
-        |el AS (SELECT e.u, e.v, la.l AS lu, lb.l AS lv FROM e
-        |  JOIN lab la ON la.id = e.u JOIN lab lb ON lb.id = e.v),
-        |deg AS (SELECT id, l, COUNT(*) AS d FROM (
-        |  SELECT u AS id, lu AS l FROM el
-        |  UNION ALL SELECT v, lv FROM el) GROUP BY 1, 2),
-        |dc AS (SELECT l, CAST(SUM(d) AS BIGINT) AS d_c FROM deg GROUP BY 1),
-        |ec AS (SELECT lu AS l, COUNT(*) AS e_c FROM el
-        |  WHERE lu = lv GROUP BY 1),
-        |m AS (SELECT COUNT(*) AS m FROM el),
-        |nn AS (SELECT COUNT(*) AS n_nodes FROM deg),
-        |s AS (SELECT COUNT(*) AS n_clusters,
-        |  CAST(SUM(4 * m.m * COALESCE(ec.e_c, 0) - dc.d_c * dc.d_c)
-        |    AS BIGINT) AS q_num
-        | FROM dc LEFT JOIN ec USING (l), m)
-        |SELECT nn.n_nodes, m.m AS n_edges, s.n_clusters, s.q_num,
-        | 4 * m.m * m.m AS q_den,
-        | ROUND(CAST(s.q_num AS DOUBLE)
-        |   / nullif(CAST(4 * m.m * m.m AS DOUBLE), 0.0), 9) AS modularity
-        |FROM s, m, nn""".stripMargin,
-
-    // Assortativity mirrored on the shared mutual-kNN CTE: canonical
-    // dedup, both orientations, HUGEINT close cast to double.
-    "x_assortativity" ->
-      s"""WITH $mutualKnnCte,
-        |e AS (SELECT DISTINCT LEAST(id_a, id_b) AS u,
-        |   GREATEST(id_a, id_b) AS v
-        |  FROM mutual WHERE id_a <> id_b),
-        |deg AS (SELECT id, COUNT(*) AS d FROM (
-        |  SELECT u AS id FROM e UNION ALL SELECT v FROM e) GROUP BY 1),
-        |op AS (SELECT u AS a, v AS b FROM e
-        |  UNION ALL SELECT v, u FROM e),
-        |j AS (SELECT da.d AS x, db.d AS y FROM op
-        |  JOIN deg da ON da.id = op.a JOIN deg db ON db.id = op.b),
-        |s AS (SELECT COUNT(*) AS m, CAST(SUM(x) AS BIGINT) AS sx,
-        |  CAST(SUM(x * y) AS BIGINT) AS sxy,
-        |  CAST(SUM(x * x) AS BIGINT) AS sxx FROM j)
-        |SELECT (SELECT COUNT(*) FROM deg) AS n_nodes,
-        | (SELECT COUNT(*) FROM e) AS n_edges,
-        | m AS m_pairs, sx AS sum_d, sxy AS sum_dd, sxx AS sum_d2,
-        | ROUND(CAST(CAST(m AS HUGEINT) * sxy
-        |     - CAST(sx AS HUGEINT) * sx AS DOUBLE)
-        |   / nullif(CAST(CAST(m AS HUGEINT) * sxx
-        |     - CAST(sx AS HUGEINT) * sx AS DOUBLE), 0.0), 9)
-        |   AS assortativity
-        |FROM s""".stripMargin,
-
-    // Exact triangle enumeration over the same mutual graph: x < y < z
-    // with all three canonical edges present; per-node membership count.
-    "x_triangles" ->
-      s"""WITH $mutualKnnCte,
-        |e AS (SELECT id_a AS u, id_b AS v FROM mutual),
-        |tri AS (SELECT xy.u AS x, xy.v AS y, xz.v AS z
-        |        FROM e xy JOIN e xz ON xz.u = xy.u AND xz.v > xy.v
-        |        JOIN e yz ON yz.u = xy.v AND yz.v = xz.v),
-        |pernode AS (SELECT id, COUNT(*) AS triangles FROM (
-        |  SELECT x AS id FROM tri UNION ALL SELECT y FROM tri
-        |  UNION ALL SELECT z FROM tri) GROUP BY 1),
-        |nodes AS (SELECT DISTINCT id FROM (
-        |  SELECT id_a AS id FROM mutual UNION ALL SELECT id_b FROM mutual))
-        |SELECT n.id, COALESCE(p.triangles, CAST(0 AS BIGINT)) AS triangles
-        |FROM nodes n LEFT JOIN pernode p USING (id)
-        |ORDER BY id""".stripMargin,
-
-    // Pair CTE mirrors x_embed_neardup (label-blocked exact cosine);
-    // closure mirrors x_dedup_drop's recursive reachability CTE.
-    "x_semdedup" ->
-      """WITH RECURSIVE z AS (
-        | SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  CAST(unnest(a.embedding) AS DOUBLE) AS x,
-        |  CAST(unnest(b.embedding) AS DOUBLE) AS y
-        | FROM embeddings a JOIN embeddings b
-        |   ON a.label = b.label AND a.vec_id < b.vec_id),
-        |d AS (
-        | SELECT id_a, id_b,
-        |  SUM(CAST(x * y AS DECIMAL(30,15))) AS dot,
-        |  SUM(CAST(x * x AS DECIMAL(30,15))) AS na,
-        |  SUM(CAST(y * y AS DECIMAL(30,15))) AS nb
-        | FROM z GROUP BY id_a, id_b),
-        |cpairs AS (
-        | SELECT id_a, id_b FROM d
-        | WHERE ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)), 9) >= 0.35),
-        |edges AS (
-        | SELECT id_a AS u, id_b AS v FROM cpairs
-        | UNION
-        | SELECT id_b AS u, id_a AS v FROM cpairs),
-        |reach AS (
-        | SELECT u AS node, u AS lab FROM edges
-        | UNION
-        | SELECT e.v AS node, r.lab AS lab
-        | FROM reach r JOIN edges e ON e.u = r.node),
-        |comps AS (SELECT node, MIN(lab) AS complabel FROM reach GROUP BY node)
-        |SELECT vec_id, label FROM embeddings
-        |WHERE vec_id NOT IN (SELECT node FROM comps WHERE complabel <> node)
-        |ORDER BY vec_id""".stripMargin,
-
-    // DBSCAN mirrored: the x_semdedup pair CTE at 0.25, neighbor counts
-    // over both pair directions, core = cnt+1 >= 4, min-label closure
-    // over CORE-core edges only, border = min adjacent core cluster.
-    "x_dbscan" ->
-      """WITH RECURSIVE z AS (
-        | SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  CAST(unnest(a.embedding) AS DOUBLE) AS x,
-        |  CAST(unnest(b.embedding) AS DOUBLE) AS y
-        | FROM embeddings a JOIN embeddings b
-        |   ON a.label = b.label AND a.vec_id < b.vec_id),
-        |d AS (
-        | SELECT id_a, id_b,
-        |  SUM(CAST(x * y AS DECIMAL(30,15))) AS dot,
-        |  SUM(CAST(x * x AS DECIMAL(30,15))) AS na,
-        |  SUM(CAST(y * y AS DECIMAL(30,15))) AS nb
-        | FROM z GROUP BY id_a, id_b),
-        |cpairs AS (
-        | SELECT id_a, id_b FROM d
-        | WHERE ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)), 9) >= 0.25),
-        |adj AS (
-        | SELECT id_a AS id, id_b AS nbr FROM cpairs
-        | UNION ALL SELECT id_b, id_a FROM cpairs),
-        |cores AS (
-        | SELECT e.vec_id AS id FROM embeddings e
-        | WHERE 1 + (SELECT COUNT(*) FROM adj WHERE adj.id = e.vec_id) >= 4),
-        |cedges AS (
-        | SELECT p.id_a, p.id_b FROM cpairs p
-        | JOIN cores ca ON ca.id = p.id_a JOIN cores cb ON cb.id = p.id_b),
-        |cadj AS (
-        | SELECT id_a AS u, id_b AS v FROM cedges
-        | UNION SELECT id_b, id_a FROM cedges),
-        |reach AS (
-        | SELECT id AS node, id AS lab FROM cores
-        | UNION
-        | SELECT a.v AS node, r.lab FROM reach r JOIN cadj a ON a.u = r.node),
-        |clab AS (SELECT node AS id, MIN(lab) AS cluster FROM reach GROUP BY node),
-        |blab AS (
-        | SELECT adj.id, MIN(c.cluster) AS bc
-        | FROM adj JOIN clab c ON c.id = adj.nbr
-        |   JOIN cores co ON co.id = adj.nbr
-        | GROUP BY adj.id)
-        |SELECT e.vec_id AS id,
-        | CASE WHEN co.id IS NOT NULL THEN 'core'
-        |      WHEN b.bc IS NOT NULL THEN 'border'
-        |      ELSE 'noise' END AS role,
-        | CASE WHEN co.id IS NOT NULL THEN c.cluster ELSE b.bc END AS cluster
-        |FROM embeddings e
-        |LEFT JOIN cores co ON co.id = e.vec_id
-        |LEFT JOIN clab c ON c.id = e.vec_id
-        |LEFT JOIN blab b ON b.id = e.vec_id
-        |ORDER BY e.vec_id""".stripMargin,
-
-    "x_multimodal_bytes" ->
-      """SELECT doc_id, CAST(strlen(text) AS BIGINT) AS n_bytes, n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "r_asof_broadcast" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events),
-        |p AS (SELECT user_id, epoch_us(ts) AS p_us, MAX(event_id) AS p_event_id
-        |      FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
-        |SELECT e.event_id, e.user_id, p.p_event_id AS prev_purchase_id
-        |FROM e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.us >= p.p_us
-        |ORDER BY e.event_id""".stripMargin,
-
-    "r_asof_join" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events),
-        |p AS (SELECT user_id, epoch_us(ts) AS p_us, MAX(event_id) AS p_event_id
-        |      FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
-        |SELECT e.event_id, e.user_id, p.p_event_id AS prev_purchase_id
-        |FROM e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.us >= p.p_us
-        |ORDER BY e.event_id""".stripMargin,
-
-    "r_asof_tolerance" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events),
-        |p AS (SELECT user_id, epoch_us(ts) AS p_us, MAX(event_id) AS p_event_id
-        |      FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
-        |SELECT e.event_id, e.user_id,
-        | CASE WHEN e.us - p.p_us <= 3600000000 THEN p.p_event_id END
-        |   AS recent_purchase_id
-        |FROM e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.us >= p.p_us
-        |ORDER BY e.event_id""".stripMargin,
-
-    // The x_knn_join quadratic chain + label join + count-based majority
-    // vote (smallest-label tiebreak — float-free, exactly the engine's).
-    "x_knn_classify" ->
-      """WITH z AS (
-        | SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |  CAST(unnest(c.embedding) AS DOUBLE) AS x,
-        |  CAST(unnest(q.embedding) AS DOUBLE) AS y
-        | FROM embeddings q JOIN embeddings c
-        |   ON q.vec_id < 20 AND c.vec_id >= 20),
-        |d AS (
-        | SELECT query_id, neighbor_id,
-        |  SUM(CAST(x * y AS DECIMAL(30,15))) AS dot,
-        |  SUM(CAST(x * x AS DECIMAL(30,15))) AS nc,
-        |  SUM(CAST(y * y AS DECIMAL(30,15))) AS nq
-        | FROM z GROUP BY 1, 2),
-        |r AS (
-        | SELECT query_id, neighbor_id,
-        |  ROW_NUMBER() OVER (PARTITION BY query_id
-        |    ORDER BY ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(nc AS DOUBLE) * CAST(nq AS DOUBLE)), 9) DESC,
-        |      neighbor_id) AS rank
-        | FROM d),
-        |nb AS (SELECT query_id, neighbor_id FROM r WHERE rank <= 5),
-        |v AS (
-        | SELECT nb.query_id, e.label AS lab, COUNT(*) AS nv
-        | FROM nb JOIN embeddings e ON nb.neighbor_id = e.vec_id
-        | GROUP BY 1, 2),
-        |tot AS (
-        | SELECT query_id, CAST(SUM(nv) AS BIGINT) AS n_neighbors
-        | FROM v GROUP BY 1),
-        |pick AS (
-        | SELECT query_id, lab, nv,
-        |  ROW_NUMBER() OVER (PARTITION BY query_id
-        |    ORDER BY nv DESC, lab ASC) AS rk
-        | FROM v)
-        |SELECT p.query_id, p.lab AS pred_label,
-        | CAST(p.nv AS BIGINT) AS n_votes, t.n_neighbors
-        |FROM pick p JOIN tot t USING (query_id)
-        |WHERE p.rk = 1 ORDER BY p.query_id""".stripMargin,
-
-    "x_knn_join" ->
-      """WITH z AS (
-        | SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |  CAST(unnest(c.embedding) AS DOUBLE) AS x,
-        |  CAST(unnest(q.embedding) AS DOUBLE) AS y
-        | FROM embeddings q JOIN embeddings c
-        |   ON q.vec_id < 20 AND c.vec_id >= 20),
-        |d AS (
-        | SELECT query_id, neighbor_id,
-        |  SUM(CAST(x * y AS DECIMAL(30,15))) AS dot,
-        |  SUM(CAST(x * x AS DECIMAL(30,15))) AS nc,
-        |  SUM(CAST(y * y AS DECIMAL(30,15))) AS nq
-        | FROM z GROUP BY 1, 2),
-        |r AS (
-        | SELECT query_id, neighbor_id,
-        |  ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(nc AS DOUBLE) * CAST(nq AS DOUBLE)), 9) AS cos,
-        |  ROW_NUMBER() OVER (PARTITION BY query_id
-        |    ORDER BY ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(nc AS DOUBLE) * CAST(nq AS DOUBLE)), 9) DESC,
-        |      neighbor_id) AS rank
-        | FROM d)
-        |SELECT query_id, neighbor_id, cos, rank FROM r WHERE rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
-
-    // Blocked kNN join (self-kNN graph, every 20th vector as query, self
-    // excluded): the full quadratic window, plus the pinned recall flag.
-    "x_knn_blocked" ->
-      """WITH z AS (
-        | SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |  CAST(unnest(c.embedding) AS DOUBLE) AS x,
-        |  CAST(unnest(q.embedding) AS DOUBLE) AS y
-        | FROM embeddings q JOIN embeddings c
-        |   ON q.vec_id % 20 = 0 AND c.vec_id <> q.vec_id),
-        |d AS (
-        | SELECT query_id, neighbor_id,
-        |  SUM(CAST(x * y AS DECIMAL(30,15))) AS dot,
-        |  SUM(CAST(x * x AS DECIMAL(30,15))) AS nc,
-        |  SUM(CAST(y * y AS DECIMAL(30,15))) AS nq
-        | FROM z GROUP BY 1, 2),
-        |r AS (
-        | SELECT query_id, neighbor_id,
-        |  ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(nc AS DOUBLE) * CAST(nq AS DOUBLE)), 9) AS cos,
-        |  ROW_NUMBER() OVER (PARTITION BY query_id
-        |    ORDER BY ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(nc AS DOUBLE) * CAST(nq AS DOUBLE)), 9) DESC,
-        |      neighbor_id) AS rank
-        | FROM d)
-        |SELECT query_id, neighbor_id, cos, rank, TRUE AS in_exact_topk
-        |FROM r WHERE rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
-
-    "r_sessionize" ->
-      """WITH e AS (
-        | SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-        |g AS (
-        | SELECT user_id,
-        |  CASE WHEN us - LAG(us) OVER (PARTITION BY user_id ORDER BY us, event_id)
-        |       > 1800000000 THEN 1 ELSE 0 END AS new_s
-        | FROM e)
-        |SELECT user_id, CAST(SUM(new_s) + 1 AS BIGINT) AS n_sessions,
-        | COUNT(*) AS n_events
-        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin,
-  )
 }

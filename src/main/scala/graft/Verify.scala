@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -49,18 +48,16 @@ object Verify {
       try {
         val res = fn(spark, sfDir)
         // Gate-type guard (round-10 lesson): the driver's hasher can't
-        // canonicalize int128-class values, so an oracled output with a
+        // canonicalize int128-class values, so an output with a
         // DECIMAL(p>18) column hash-fails even when every value matches
         // its oracle. Fail HERE, by column name, not 9 rounds later.
-        if (SparkEntry.oracleSql.contains(name)) {
-          val wide = res.schema.fields.collect {
-            case f if hasWideDecimal(f.dataType) => s"${f.name}: ${f.dataType.sql}"
-          }
-          require(wide.isEmpty,
-            s"oracled query '$name' emits int128-class column(s) " +
-              s"${wide.mkString(", ")} — narrow to BIGINT at the query edge " +
-              "(SparkEntry.big) and CAST the oracle to BIGINT")
+        val wide = res.schema.fields.collect {
+          case f if hasWideDecimal(f.dataType) => s"${f.name}: ${f.dataType.sql}"
         }
+        require(wide.isEmpty,
+          s"query '$name' emits int128-class column(s) " +
+            s"${wide.mkString(", ")} — narrow to BIGINT at the query edge " +
+            "(board.Helpers.big) and CAST the oracle to BIGINT")
         res.coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         println(f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")

@@ -1,0 +1,1616 @@
+package graft
+package board
+
+import org.apache.spark.sql.functions._
+
+import graft.functions.{Corpus, Dedup, Similarity, TextFunctions => TF}
+import Helpers._
+
+/** Deduplication and nearest-neighbor search over
+  * [[graft.functions.Dedup]] and [[graft.functions.Similarity]]: exact,
+  * n-gram, MinHash and SimHash dedup, embeddings, clustering and ANN
+  * indexes. x_simhash and x_lsh_ann are oracled on PLANTED structure
+  * (simhash's Hamming similarity differs from n-gram Jaccard, and the
+  * corpus' nearest cosine neighbors sit at 0.27-0.33, so natural-structure
+  * recall can't be pinned): the query derives deterministic near-dup
+  * copies in-plan and the oracle pins the found_by_* flag TRUE on each
+  * planted pair.
+  */
+private[graft] object DedupQueries {
+
+  /** The incremental-index chain: k-means TRAINS on the old snapshot
+    * only (`vtrain` = vec_id % 3 ≠ 1) but the final assignment covers
+    * EVERY vector — exactly the state of a stored index built on the old
+    * slice and then appended to with the arrivals under the frozen
+    * centroids. Ends in kassign(vec_id, cluster) over the full corpus
+    * plus the c2/cn/n CTEs the probe tail scores with.
+    */
+  private val ivfAppendCte: String =
+    s"""v AS (SELECT vec_id, embedding FROM embeddings
+       |      WHERE embedding IS NOT NULL),
+       |e0 AS (
+       | SELECT vec_id,
+       |  unnest(list_transform(range(1, len(embedding) + 1),
+       |    i -> {'pos': i - 1, 'x': CAST(embedding[i] AS DOUBLE)})) AS u
+       | FROM v),
+       |e AS (SELECT vec_id, CAST(u.pos AS INT) AS pos, u.x AS x FROM e0),
+       |n AS (
+       | SELECT vec_id,
+       |  CAST(SUM(CAST(x * x AS DECIMAL(30,15))) AS DOUBLE) AS n2
+       | FROM e GROUP BY 1),
+       |vv AS (SELECT vec_id FROM n WHERE n2 > 0),
+       |vtrain AS (SELECT vec_id FROM vv WHERE vec_id % 3 <> 1),
+       |sid AS (
+       | SELECT vec_id, CAST(ROW_NUMBER() OVER (ORDER BY vec_id) AS INT) - 1 AS c
+       | FROM vtrain ORDER BY vec_id LIMIT 8),
+       |c0 AS (
+       | SELECT s.c, e.pos, ROUND(e.x / SQRT(n.n2), 9) AS w
+       | FROM sid s JOIN e ON e.vec_id = s.vec_id JOIN n ON n.vec_id = s.vec_id),
+       |${kmeansRoundCte(1, "c0", "vtrain")},
+       |${kmeansRoundCte(2, "c1", "vtrain")},
+       |dfin AS (
+       | SELECT e.vec_id, c.c,
+       |  CAST(SUM(CAST(e.x * c.w AS DECIMAL(30,15))) AS DOUBLE) AS dot
+       | FROM e JOIN vv USING (vec_id) JOIN c2 c ON c.pos = e.pos
+       | GROUP BY 1, 2),
+       |kassign AS (
+       | SELECT vec_id, c AS cluster FROM (
+       |  SELECT vec_id, c,
+       |   ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dot DESC, c) AS rk
+       |  FROM dfin) WHERE rk = 1)""".stripMargin
+
+  /** Brute-force exact cosine top-10 — shared by x_cosine_topk and
+    * x_ivf_ann (IVF probing every bucket is exhaustive, so its output must
+    * equal brute force).
+    */
+  private val cosineTopkOracle: String =
+    """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
+      |z AS (
+      | SELECT e.vec_id, e.label,
+      |  CAST(unnest(e.embedding) AS DOUBLE) AS a,
+      |  CAST(unnest(q.qe) AS DOUBLE) AS b
+      | FROM embeddings e, q WHERE e.vec_id <> 0),
+      |d AS (
+      | SELECT vec_id, label,
+      |  SUM(CAST(a * b AS DECIMAL(30,15))) AS dot,
+      |  SUM(CAST(a * a AS DECIMAL(30,15))) AS na,
+      |  SUM(CAST(b * b AS DECIMAL(30,15))) AS nb
+      | FROM z GROUP BY vec_id, label)
+      |SELECT vec_id, label,
+      | ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)), 9) AS cos
+      |FROM d ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin
+
+  val queries: Seq[BoardQuery] = Seq(
+
+    // Edit-distance fuzzy self-join (record linkage): exact Levenshtein
+    // pairs via q-gram prefix filtering — candidates key on each string's
+    // globally-rarest grams (boilerplate prefixes like "Supplier#00" are
+    // stop-grams and never join), then exact verify. Output = the
+    // quadratic join's, which is precisely what the oracle computes.
+    BoardQuery("x_fuzzy_join", ((s, dir) =>
+      graft.functions.Dedup.editDistancePairs(
+          t(s, dir, "supplier"), "s_suppkey", "s_name", maxDist = 1, q = 2)
+        .orderBy("id_a", "id_b")),
+      // The prefix filter is lossless and the verify exact, so the oracle is
+      // the naive quadratic join.
+      """WITH s AS (SELECT s_suppkey, s_name FROM supplier)
+        |SELECT a.s_suppkey AS id_a, b.s_suppkey AS id_b,
+        |       CAST(levenshtein(a.s_name, b.s_name) AS BIGINT) AS dist
+        |FROM s a JOIN s b ON a.s_suppkey < b.s_suppkey
+        |WHERE levenshtein(a.s_name, b.s_name) <= 1
+        |ORDER BY id_a, id_b""".stripMargin),
+
+    // Scored record linkage: customers vs a deterministically-corrupted
+    // copy (every 3rd name reversed, every 7th typo'd, every 5th
+    // balance shifted), blocked on (nation, segment) — the composite
+    // blocking key bounds each block's quadratic term — with integer
+    // agreement weights (name 40 w/ edit-tol 1, acctbal 30 exact),
+    // keep-best per left record with smallest-id ties. Exercises true
+    // matches through typos, dropped below-threshold pairs, and
+    // deterministic false positives from near-identical names — all
+    // exact-integer scored.
+    BoardQuery("x_linkage", ((s, dir) => {
+      val c = t(s, dir, "customer")
+        .withColumn("c_blk", concat_ws("|", col("c_nationkey"), col("c_mktsegment")))
+      val dirty = c.select((col("c_custkey") + 1000000L).as("d_id"),
+        col("c_blk").as("d_blk"),
+        when(col("c_custkey") % 3 === 0, reverse(col("c_name")))
+          .when(col("c_custkey") % 7 === 0, concat(col("c_name"), lit("x")))
+          .otherwise(col("c_name")).as("d_name"),
+        when(col("c_custkey") % 5 === 0, col("c_acctbal") + 1.0)
+          .otherwise(col("c_acctbal")).as("d_bal"))
+      graft.functions.Dedup.recordLinkage(c, dirty, "c_custkey", "d_id",
+          "c_blk", "d_blk",
+          Seq(graft.functions.Dedup.LinkField("c_name", "d_name", 40L, 1),
+            graft.functions.Dedup.LinkField("c_acctbal", "d_bal", 30L)),
+          minScore = 40L, keepBest = true)
+        .orderBy("id_a")
+    }),
+      // Linkage mirrored: same corruption, same integer weights, same
+      // (nation, segment) blocking; keep-best = row_number over
+      // (score desc, id_b).
+      """WITH dirty AS (SELECT c_custkey + 1000000 AS d_id,
+        |  c_nationkey || '|' || c_mktsegment AS d_blk,
+        |  CASE WHEN c_custkey % 3 = 0 THEN reverse(c_name)
+        |       WHEN c_custkey % 7 = 0 THEN c_name || 'x'
+        |       ELSE c_name END AS d_name,
+        |  CASE WHEN c_custkey % 5 = 0 THEN c_acctbal + 1.0
+        |       ELSE c_acctbal END AS d_bal
+        | FROM customer),
+        |scored AS (SELECT c.c_custkey AS id_a, d.d_id AS id_b,
+        |  (CASE WHEN levenshtein(c.c_name, d.d_name) <= 1 THEN 40 ELSE 0 END
+        |   + CASE WHEN c.c_acctbal = d.d_bal THEN 30 ELSE 0 END) AS score,
+        |  (CASE WHEN levenshtein(c.c_name, d.d_name) <= 1 THEN 1 ELSE 0 END
+        |   + CASE WHEN c.c_acctbal = d.d_bal THEN 1 ELSE 0 END) AS n_agree
+        | FROM customer c JOIN dirty d
+        |  ON c.c_nationkey || '|' || c.c_mktsegment = d.d_blk),
+        |best AS (SELECT id_a, id_b, score, n_agree,
+        |  row_number() OVER (PARTITION BY id_a
+        |    ORDER BY score DESC, id_b) AS rn
+        | FROM scored WHERE score >= 40)
+        |SELECT id_a, id_b, CAST(score AS BIGINT) AS score,
+        | CAST(n_agree AS BIGINT) AS n_agree
+        |FROM best WHERE rn = 1 ORDER BY id_a""".stripMargin),
+
+    // Leakage-safe split: near-dup clusters (5-gram Jaccard ≥ 0.5,
+    // transitive) split by their min-id representative so no pair
+    // straddles train/test — hashSplit's determinism, cluster-level.
+    BoardQuery("x_leak_split", ((s, dir) => {
+      val docs = t(s, dir, "documents")
+      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 5, 0.5)
+      Corpus.leakSafeSplit(docs, "doc_id", pairs,
+        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
+        .select(col("doc_id"), col("split")).orderBy("doc_id")
+    }),
+      // Same recursive closure as x_dedup_drop (transitive clusters, min-id
+      // label), then the x_split md5 cutoffs applied to the REPRESENTATIVE
+      // id — identical 'cccd'/'e666' boundaries, cluster-level key.
+      s"""WITH RECURSIVE ${ngramPairsCte(0.5)},
+         |edges AS (
+         | SELECT id_a AS u, id_b AS v FROM jpairs
+         | UNION
+         | SELECT id_b AS u, id_a AS v FROM jpairs),
+         |reach AS (
+         | SELECT u AS node, u AS lab FROM edges
+         | UNION
+         | SELECT e.v AS node, r.lab AS lab
+         | FROM reach r JOIN edges e ON e.u = r.node),
+         |labels AS (SELECT node, MIN(lab) AS label FROM reach GROUP BY node),
+         |rep AS (SELECT doc_id, COALESCE(l.label, doc_id) AS r
+         |        FROM documents LEFT JOIN labels l ON l.node = doc_id)
+         |SELECT doc_id,
+         | CASE WHEN substring(md5(
+         |        'v' || CAST(length(CAST(r AS VARCHAR)) AS VARCHAR)
+         |        || ':' || CAST(r AS VARCHAR)), 1, 4) < 'cccd'
+         |      THEN 'train'
+         |      WHEN substring(md5(
+         |        'v' || CAST(length(CAST(r AS VARCHAR)) AS VARCHAR)
+         |        || ':' || CAST(r AS VARCHAR)), 1, 4) < 'e666'
+         |      THEN 'val'
+         |      ELSE 'test' END AS split
+         |FROM rep ORDER BY doc_id""".stripMargin),
+
+    // Johnson–Lindenstrauss random projection 64→16: the map-only shrink
+    // run before ANN indexing / pairwise sweeps. Sign matrix is baked
+    // literals (no broadcast, no shuffle); outDim=16 makes the 1/√outDim
+    // scale exactly 0.25 so the output is bit-reproducible.
+    BoardQuery("x_rand_project", ((s, dir) =>
+      Similarity.randomProject(t(s, dir, "embeddings"), "vec_id", "embedding",
+          inDim = 64, outDim = 16)
+        .orderBy(col("vec_id"), col("dim"))),
+      // Rebuilds the seed-42 Achlioptas sign matrix from the same md5
+      // formula, mirrors the decimal dot (per-product DECIMAL(30,15), sum,
+      // cast double) and the exact 0.25 scale.
+      """WITH dgrid AS (SELECT unnest(range(0, 64)) AS d),
+        |jgrid AS (SELECT unnest(range(0, 16)) AS j),
+        |s AS (SELECT j, d,
+        |  CASE WHEN substring(md5('42:' || CAST(j AS VARCHAR)
+        |      || ':' || CAST(d AS VARCHAR)), 1, 1) < '8'
+        |    THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END AS sgn
+        | FROM jgrid CROSS JOIN dgrid),
+        |z AS (SELECT vec_id, g.d,
+        |  CAST(embedding[CAST(g.d AS INT) + 1] AS DOUBLE) AS x
+        | FROM embeddings CROSS JOIN dgrid g),
+        |p AS (SELECT z.vec_id, s.j,
+        |  CAST(SUM(CAST(z.x * s.sgn AS DECIMAL(30,15))) AS DOUBLE)
+        |    * CAST(0.25 AS DOUBLE) AS raw
+        | FROM z JOIN s ON z.d = s.d GROUP BY 1, 2)
+        |SELECT vec_id, CAST(j AS INT) AS dim, ROUND(raw, 9) AS v
+        |FROM p ORDER BY vec_id, dim""".stripMargin),
+
+    // Distributed PCA: top principal component by 2 power-iteration
+    // rounds — covariance never materializes; per round one data-sized
+    // per-dim aggregation, dim-sized vectors to the driver, iterates
+    // rounded in-engine so both engines step from identical literals.
+    BoardQuery("x_pca_power", ((s, dir) =>
+      Similarity.principalComponent(t(s, dir, "embeddings"), "embedding",
+          dim = 64, rounds = 2)
+        .orderBy(col("dim"))),
+      // Two power-iteration rounds unrolled: v0 = ones, t = x·v − μ·v via
+      // the decimal dot, w_d = Σ t·x_d − μ_d·Σt, max-abs normalize, round 9
+      // between rounds — the same algebraic split the engine runs.
+      """WITH dgrid AS (SELECT unnest(range(0, 64)) AS pos),
+        |z AS (SELECT vec_id, g.pos,
+        |  CAST(embedding[CAST(g.pos AS INT) + 1] AS DOUBLE) AS x
+        | FROM embeddings CROSS JOIN dgrid g),
+        |mu AS (SELECT pos, ROUND(CAST(SUM(CAST(x AS DECIMAL(30,15))) AS DOUBLE)
+        |  / CAST(COUNT(*) AS DOUBLE), 9) AS m FROM z GROUP BY 1),
+        |mdv1 AS (SELECT CAST(SUM(CAST(m * CAST(1.0 AS DOUBLE)
+        |  AS DECIMAL(30,15))) AS DOUBLE) AS mdv FROM mu),
+        |t1 AS (SELECT vec_id,
+        |  CAST(SUM(CAST(x * CAST(1.0 AS DOUBLE) AS DECIMAL(30,15))) AS DOUBLE)
+        |    - (SELECT mdv FROM mdv1) AS t
+        | FROM z GROUP BY 1),
+        |s1 AS (SELECT z.pos,
+        |  CAST(SUM(CAST(t1.t * z.x AS DECIMAL(30,15))) AS DOUBLE) AS S,
+        |  CAST(SUM(CAST(t1.t AS DECIMAL(30,15))) AS DOUBLE) AS T
+        | FROM z JOIN t1 USING (vec_id) GROUP BY 1),
+        |w1 AS (SELECT s1.pos, s1.S - mu.m * s1.T AS w
+        | FROM s1 JOIN mu USING (pos)),
+        |m1 AS (SELECT MAX(ABS(w)) AS mx FROM w1),
+        |v1 AS (SELECT pos, CASE WHEN m1.mx = 0 THEN CAST(0.0 AS DOUBLE)
+        |  ELSE ROUND(w / m1.mx, 9) END AS v FROM w1 CROSS JOIN m1),
+        |mdv2 AS (SELECT CAST(SUM(CAST(mu.m * v1.v AS DECIMAL(30,15)))
+        |  AS DOUBLE) AS mdv FROM mu JOIN v1 USING (pos)),
+        |t2 AS (SELECT z.vec_id,
+        |  CAST(SUM(CAST(z.x * v1.v AS DECIMAL(30,15))) AS DOUBLE)
+        |    - (SELECT mdv FROM mdv2) AS t
+        | FROM z JOIN v1 USING (pos) GROUP BY 1),
+        |s2 AS (SELECT z.pos,
+        |  CAST(SUM(CAST(t2.t * z.x AS DECIMAL(30,15))) AS DOUBLE) AS S,
+        |  CAST(SUM(CAST(t2.t AS DECIMAL(30,15))) AS DOUBLE) AS T
+        | FROM z JOIN t2 USING (vec_id) GROUP BY 1),
+        |w2 AS (SELECT s2.pos, s2.S - mu.m * s2.T AS w
+        | FROM s2 JOIN mu USING (pos)),
+        |m2 AS (SELECT MAX(ABS(w)) AS mx FROM w2),
+        |v2 AS (SELECT pos, CASE WHEN m2.mx = 0 THEN CAST(0.0 AS DOUBLE)
+        |  ELSE ROUND(w / m2.mx, 9) END AS v FROM w2 CROSS JOIN m2)
+        |SELECT CAST(v2.pos AS INT) AS dim, mu.m AS mu, v2.v AS loading
+        |FROM v2 JOIN mu USING (pos) ORDER BY dim""".stripMargin),
+
+    // PCA scores: centered projection of every vector onto the top
+    // component — map-only after the dim-sized basis is in hand.
+    BoardQuery("x_pca_scores", ((s, dir) =>
+      Similarity.pcaScores(t(s, dir, "embeddings"), "vec_id", "embedding",
+          dim = 64, rounds = 2)
+        .orderBy(col("vec_id"))),
+      // The x_pca_power chain through the final iterate, then every
+      // vector's centered projection: score = x·v − μ·v, decimal dots.
+      """WITH dgrid AS (SELECT unnest(range(0, 64)) AS pos),
+        |z AS (SELECT vec_id, g.pos,
+        |  CAST(embedding[CAST(g.pos AS INT) + 1] AS DOUBLE) AS x
+        | FROM embeddings CROSS JOIN dgrid g),
+        |mu AS (SELECT pos, ROUND(CAST(SUM(CAST(x AS DECIMAL(30,15))) AS DOUBLE)
+        |  / CAST(COUNT(*) AS DOUBLE), 9) AS m FROM z GROUP BY 1),
+        |mdv1 AS (SELECT CAST(SUM(CAST(m * CAST(1.0 AS DOUBLE)
+        |  AS DECIMAL(30,15))) AS DOUBLE) AS mdv FROM mu),
+        |t1 AS (SELECT vec_id,
+        |  CAST(SUM(CAST(x * CAST(1.0 AS DOUBLE) AS DECIMAL(30,15))) AS DOUBLE)
+        |    - (SELECT mdv FROM mdv1) AS t
+        | FROM z GROUP BY 1),
+        |s1 AS (SELECT z.pos,
+        |  CAST(SUM(CAST(t1.t * z.x AS DECIMAL(30,15))) AS DOUBLE) AS S,
+        |  CAST(SUM(CAST(t1.t AS DECIMAL(30,15))) AS DOUBLE) AS T
+        | FROM z JOIN t1 USING (vec_id) GROUP BY 1),
+        |w1 AS (SELECT s1.pos, s1.S - mu.m * s1.T AS w
+        | FROM s1 JOIN mu USING (pos)),
+        |m1 AS (SELECT MAX(ABS(w)) AS mx FROM w1),
+        |v1 AS (SELECT pos, CASE WHEN m1.mx = 0 THEN CAST(0.0 AS DOUBLE)
+        |  ELSE ROUND(w / m1.mx, 9) END AS v FROM w1 CROSS JOIN m1),
+        |mdv2 AS (SELECT CAST(SUM(CAST(mu.m * v1.v AS DECIMAL(30,15)))
+        |  AS DOUBLE) AS mdv FROM mu JOIN v1 USING (pos)),
+        |t2 AS (SELECT z.vec_id,
+        |  CAST(SUM(CAST(z.x * v1.v AS DECIMAL(30,15))) AS DOUBLE)
+        |    - (SELECT mdv FROM mdv2) AS t
+        | FROM z JOIN v1 USING (pos) GROUP BY 1),
+        |s2 AS (SELECT z.pos,
+        |  CAST(SUM(CAST(t2.t * z.x AS DECIMAL(30,15))) AS DOUBLE) AS S,
+        |  CAST(SUM(CAST(t2.t AS DECIMAL(30,15))) AS DOUBLE) AS T
+        | FROM z JOIN t2 USING (vec_id) GROUP BY 1),
+        |w2 AS (SELECT s2.pos, s2.S - mu.m * s2.T AS w
+        | FROM s2 JOIN mu USING (pos)),
+        |m2 AS (SELECT MAX(ABS(w)) AS mx FROM w2),
+        |v2 AS (SELECT pos, CASE WHEN m2.mx = 0 THEN CAST(0.0 AS DOUBLE)
+        |  ELSE ROUND(w / m2.mx, 9) END AS v FROM w2 CROSS JOIN m2),
+        |mdvs AS (SELECT CAST(SUM(CAST(mu.m * v2.v AS DECIMAL(30,15)))
+        |  AS DOUBLE) AS mdv FROM mu JOIN v2 USING (pos)),
+        |sc AS (SELECT z.vec_id,
+        |  CAST(SUM(CAST(z.x * v2.v AS DECIMAL(30,15))) AS DOUBLE)
+        |    - (SELECT mdv FROM mdvs) AS score
+        | FROM z JOIN v2 USING (pos) GROUP BY 1)
+        |SELECT vec_id, ROUND(score, 9) AS score FROM sc
+        |ORDER BY vec_id""".stripMargin),
+
+    // PCA top-2 basis: power iteration with per-round Gram–Schmidt
+    // deflation (ratio of exact dots — no √); the whitening /
+    // embedding-diagnostic basis, still covariance-free.
+    BoardQuery("x_pca_top2", ((s, dir) =>
+      Similarity.principalComponents(t(s, dir, "embeddings"), "embedding",
+          dim = 64, nComponents = 2, rounds = 2)
+        .orderBy(col("component"), col("dim"))),
+      // x_pca_power's chain extended: component 1 = the same two rounds;
+      // component 2 re-uses round-1's step (both start from ones), deflates
+      // against PC1 via the decimal-dot ratio, steps once more, deflates,
+      // normalizes. Every float op mirrors the engine: decimal sums,
+      // single-op IEEE mul/sub, ROUND 9 at each normalize.
+      """WITH dgrid AS (SELECT unnest(range(0, 64)) AS pos),
+        |z AS (SELECT vec_id, g.pos,
+        |  CAST(embedding[CAST(g.pos AS INT) + 1] AS DOUBLE) AS x
+        | FROM embeddings CROSS JOIN dgrid g),
+        |mu AS (SELECT pos, ROUND(CAST(SUM(CAST(x AS DECIMAL(30,15))) AS DOUBLE)
+        |  / CAST(COUNT(*) AS DOUBLE), 9) AS m FROM z GROUP BY 1),
+        |mdv1 AS (SELECT CAST(SUM(CAST(m * CAST(1.0 AS DOUBLE)
+        |  AS DECIMAL(30,15))) AS DOUBLE) AS mdv FROM mu),
+        |t1 AS (SELECT vec_id,
+        |  CAST(SUM(CAST(x * CAST(1.0 AS DOUBLE) AS DECIMAL(30,15))) AS DOUBLE)
+        |    - (SELECT mdv FROM mdv1) AS t
+        | FROM z GROUP BY 1),
+        |s1 AS (SELECT z.pos,
+        |  CAST(SUM(CAST(t1.t * z.x AS DECIMAL(30,15))) AS DOUBLE) AS S,
+        |  CAST(SUM(CAST(t1.t AS DECIMAL(30,15))) AS DOUBLE) AS T
+        | FROM z JOIN t1 USING (vec_id) GROUP BY 1),
+        |w1 AS (SELECT s1.pos, s1.S - mu.m * s1.T AS w
+        | FROM s1 JOIN mu USING (pos)),
+        |m1 AS (SELECT MAX(ABS(w)) AS mx FROM w1),
+        |v1 AS (SELECT pos, CASE WHEN m1.mx = 0 THEN CAST(0.0 AS DOUBLE)
+        |  ELSE ROUND(w / m1.mx, 9) END AS v FROM w1 CROSS JOIN m1),
+        |mdv2 AS (SELECT CAST(SUM(CAST(mu.m * v1.v AS DECIMAL(30,15)))
+        |  AS DOUBLE) AS mdv FROM mu JOIN v1 USING (pos)),
+        |t2 AS (SELECT z.vec_id,
+        |  CAST(SUM(CAST(z.x * v1.v AS DECIMAL(30,15))) AS DOUBLE)
+        |    - (SELECT mdv FROM mdv2) AS t
+        | FROM z JOIN v1 USING (pos) GROUP BY 1),
+        |s2 AS (SELECT z.pos,
+        |  CAST(SUM(CAST(t2.t * z.x AS DECIMAL(30,15))) AS DOUBLE) AS S,
+        |  CAST(SUM(CAST(t2.t AS DECIMAL(30,15))) AS DOUBLE) AS T
+        | FROM z JOIN t2 USING (vec_id) GROUP BY 1),
+        |w2 AS (SELECT s2.pos, s2.S - mu.m * s2.T AS w
+        | FROM s2 JOIN mu USING (pos)),
+        |m2 AS (SELECT MAX(ABS(w)) AS mx FROM w2),
+        |pc1 AS (SELECT pos, CASE WHEN m2.mx = 0 THEN CAST(0.0 AS DOUBLE)
+        |  ELSE ROUND(w / m2.mx, 9) END AS v FROM w2 CROSS JOIN m2),
+        |d11 AS (SELECT CAST(SUM(CAST(v * v AS DECIMAL(30,15))) AS DOUBLE) AS d
+        | FROM pc1),
+        |d1w1 AS (SELECT CAST(SUM(CAST(pc1.v * w1.w AS DECIMAL(30,15)))
+        |  AS DOUBLE) AS d FROM pc1 JOIN w1 USING (pos)),
+        |w1b AS (SELECT w1.pos,
+        |  w1.w - (CASE WHEN d11.d = 0 THEN CAST(0.0 AS DOUBLE)
+        |    ELSE d1w1.d / d11.d END) * pc1.v AS w
+        | FROM w1 JOIN pc1 USING (pos) CROSS JOIN d11 CROSS JOIN d1w1),
+        |m1b AS (SELECT MAX(ABS(w)) AS mx FROM w1b),
+        |u21 AS (SELECT pos, CASE WHEN m1b.mx = 0 THEN CAST(0.0 AS DOUBLE)
+        |  ELSE ROUND(w / m1b.mx, 9) END AS v FROM w1b CROSS JOIN m1b),
+        |mdv3 AS (SELECT CAST(SUM(CAST(mu.m * u21.v AS DECIMAL(30,15)))
+        |  AS DOUBLE) AS mdv FROM mu JOIN u21 USING (pos)),
+        |t3 AS (SELECT z.vec_id,
+        |  CAST(SUM(CAST(z.x * u21.v AS DECIMAL(30,15))) AS DOUBLE)
+        |    - (SELECT mdv FROM mdv3) AS t
+        | FROM z JOIN u21 USING (pos) GROUP BY 1),
+        |s3 AS (SELECT z.pos,
+        |  CAST(SUM(CAST(t3.t * z.x AS DECIMAL(30,15))) AS DOUBLE) AS S,
+        |  CAST(SUM(CAST(t3.t AS DECIMAL(30,15))) AS DOUBLE) AS T
+        | FROM z JOIN t3 USING (vec_id) GROUP BY 1),
+        |w3 AS (SELECT s3.pos, s3.S - mu.m * s3.T AS w
+        | FROM s3 JOIN mu USING (pos)),
+        |d1w3 AS (SELECT CAST(SUM(CAST(pc1.v * w3.w AS DECIMAL(30,15)))
+        |  AS DOUBLE) AS d FROM pc1 JOIN w3 USING (pos)),
+        |w3b AS (SELECT w3.pos,
+        |  w3.w - (CASE WHEN d11.d = 0 THEN CAST(0.0 AS DOUBLE)
+        |    ELSE d1w3.d / d11.d END) * pc1.v AS w
+        | FROM w3 JOIN pc1 USING (pos) CROSS JOIN d11 CROSS JOIN d1w3),
+        |m3b AS (SELECT MAX(ABS(w)) AS mx FROM w3b),
+        |pc2 AS (SELECT pos, CASE WHEN m3b.mx = 0 THEN CAST(0.0 AS DOUBLE)
+        |  ELSE ROUND(w / m3b.mx, 9) END AS v FROM w3b CROSS JOIN m3b)
+        |SELECT 0 AS component, CAST(pos AS INT) AS dim, mu.m AS mu,
+        |  pc1.v AS loading
+        |FROM pc1 JOIN mu USING (pos)
+        |UNION ALL
+        |SELECT 1 AS component, CAST(pos AS INT) AS dim, mu.m AS mu,
+        |  pc2.v AS loading
+        |FROM pc2 JOIN mu USING (pos)
+        |ORDER BY component, dim""".stripMargin),
+
+    // Contrastive hard-negative mining: each labeled vector's 3 nearest
+    // DIFFERENT-label neighbors — the mismatch predicate applies before
+    // the bounded top-k' aggregation, so a same-label-dense region
+    // cannot starve the output.
+    BoardQuery("x_hard_negatives", ((s, dir) =>
+      Similarity.hardNegatives(t(s, dir, "embeddings"), "vec_id",
+          "embedding", "label", k = 3)
+        .orderBy(col("query_id"), col("rank"))),
+      // Exact different-label top-k over the quadratic window, decimal
+      // cosine, rank by (rounded cos DESC, id) — the x_knn_join chain with
+      // the label-mismatch predicate in the pair generator.
+      """WITH z AS (
+        | SELECT q.vec_id AS query_id, CAST(q.label AS BIGINT) AS query_label,
+        |  c.vec_id AS neighbor_id, CAST(c.label AS BIGINT) AS neighbor_label,
+        |  CAST(unnest(c.embedding) AS DOUBLE) AS x,
+        |  CAST(unnest(q.embedding) AS DOUBLE) AS y
+        | FROM embeddings q JOIN embeddings c
+        |   ON q.label IS NOT NULL AND c.label IS NOT NULL
+        |     AND q.label <> c.label),
+        |d AS (
+        | SELECT query_id, query_label, neighbor_id, neighbor_label,
+        |  SUM(CAST(x * y AS DECIMAL(30,15))) AS dot,
+        |  SUM(CAST(x * x AS DECIMAL(30,15))) AS nc,
+        |  SUM(CAST(y * y AS DECIMAL(30,15))) AS nq
+        | FROM z GROUP BY 1, 2, 3, 4),
+        |r AS (
+        | SELECT query_id, query_label, neighbor_id, neighbor_label,
+        |  ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(nc AS DOUBLE) * CAST(nq AS DOUBLE)), 9) AS cos,
+        |  ROW_NUMBER() OVER (PARTITION BY query_id
+        |    ORDER BY ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(nc AS DOUBLE) * CAST(nq AS DOUBLE)), 9) DESC,
+        |      neighbor_id) AS rank
+        | FROM d)
+        |SELECT query_id, query_label, neighbor_id, neighbor_label, cos, rank
+        |FROM r WHERE rank <= 3
+        |ORDER BY query_id, rank""".stripMargin),
+
+    // Asymmetric containment pairs (excerpt/quote detection): the
+    // short-inside-long relation Jaccard misses — decontamination's
+    // "benchmark text embedded in a crawl page" case.
+    BoardQuery("x_containment", ((s, dir) =>
+      Dedup.ngramContainmentPairs(t(s, dir, "documents"), "doc_id", "text",
+          shingleN = 5, minContainment = 0.5)
+        .withColumn("containment", round(col("containment"), 9))
+        .withColumn("jaccard", round(col("jaccard"), 9))
+        .orderBy("id_small", "id_big")),
+      // Same gram CTEs as jpairs, pair oriented so the smaller set is the
+      // contained side; filter on unrounded containment like the engine.
+      raw"""WITH toks AS (
+         | SELECT doc_id, regexp_split_to_array(TRIM(text), '\s+') AS tok
+         | FROM documents),
+         |g0 AS (
+         | SELECT doc_id, unnest(CASE WHEN len(tok) < 5 THEN [array_to_string(tok, ' ')]
+         |   ELSE list_transform(range(1, len(tok) - 3),
+         |     i -> list_extract(tok, i) || ' ' || list_extract(tok, i + 1) || ' ' || list_extract(tok, i + 2) || ' ' || list_extract(tok, i + 3) || ' ' || list_extract(tok, i + 4)) END) AS gram
+         | FROM toks),
+         |grams AS (SELECT DISTINCT doc_id, gram FROM g0),
+         |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id),
+         |inter AS (
+         | SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
+         | FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
+         | GROUP BY 1, 2),
+         |o AS (
+         | SELECT CASE WHEN sa.sz <= sb.sz THEN id_a ELSE id_b END AS id_small,
+         |  CASE WHEN sa.sz <= sb.sz THEN id_b ELSE id_a END AS id_big,
+         |  LEAST(sa.sz, sb.sz) AS szs, sa.sz + sb.sz - inter AS uni, inter
+         | FROM inter
+         | JOIN sizes sa ON sa.doc_id = id_a
+         | JOIN sizes sb ON sb.doc_id = id_b)
+         |SELECT id_small, id_big,
+         | ROUND(CAST(inter AS DOUBLE) / CAST(szs AS DOUBLE), 9) AS containment,
+         | ROUND(CAST(inter AS DOUBLE) / CAST(uni AS DOUBLE), 9) AS jaccard
+         |FROM o
+         |WHERE CAST(inter AS DOUBLE) / CAST(szs AS DOUBLE) >= 0.5
+         |ORDER BY id_small, id_big""".stripMargin),
+
+    // Keep-BEST near-dup drop: each Jaccard cluster keeps its longest
+    // copy (n_chars DESC, id ASC) instead of the min id — the real
+    // curation keep policy; winner = one min-of-struct aggregation.
+    BoardQuery("x_dedup_keepbest", ((s, dir) => {
+      val docs = t(s, dir, "documents")
+      Dedup.dropNearDuplicatesKeepBest(docs, "doc_id", "n_chars",
+          Dedup.ngramJaccardPairs(docs, "doc_id", "text", 5, 0.5))
+        .select(col("doc_id"), col("n_chars")).orderBy("doc_id")
+    }),
+      // jpairs closure, then each component keeps FIRST(doc_id ORDER BY
+      // n_chars DESC, doc_id) — the engine's min-of-(−score, id) struct.
+      s"""WITH RECURSIVE ${ngramPairsCte(0.5)},
+         |edges AS (
+         | SELECT id_a AS u, id_b AS v FROM jpairs
+         | UNION
+         | SELECT id_b AS u, id_a AS v FROM jpairs),
+         |reach AS (
+         | SELECT u AS node, u AS lab FROM edges
+         | UNION
+         | SELECT e.v AS node, r.lab AS lab
+         | FROM reach r JOIN edges e ON e.u = r.node),
+         |labels AS (SELECT node, MIN(lab) AS label FROM reach GROUP BY node),
+         |members AS (
+         | SELECT d.doc_id, d.n_chars, l.label
+         | FROM documents d JOIN labels l ON l.node = d.doc_id),
+         |winners AS (
+         | SELECT label, FIRST(doc_id ORDER BY n_chars DESC, doc_id) AS w
+         | FROM members GROUP BY label)
+         |SELECT d.doc_id, d.n_chars FROM documents d
+         |WHERE d.doc_id NOT IN (
+         | SELECT m.doc_id FROM members m
+         | JOIN winners w ON m.label = w.label AND m.doc_id <> w.w)
+         |ORDER BY d.doc_id""".stripMargin),
+
+    // Hybrid text ∪ semantic near-dup drop: n-gram Jaccard pairs UNION
+    // language-blocked cosine pairs feed one transitive clustering —
+    // catches paraphrases (cosine-only) AND template swaps
+    // (Jaccard-only). Pure composition of existing scale shapes.
+    BoardQuery("x_hybrid_dedup", ((s, dir) =>
+      Dedup.hybridNearDupDrop(
+          t(s, dir, "documents"), t(s, dir, "embeddings"),
+          "doc_id", "text", "vec_id", "embedding", "lang",
+          saltBuckets = 4)
+        .select(col("doc_id"), col("lang")).orderBy("doc_id")),
+      // Union of the jpairs text chain and the lang-blocked decimal-cosine
+      // pairs, then the x_dedup_drop recursive closure over BOTH.
+      s"""WITH RECURSIVE ${ngramPairsCte(0.5)},
+         |zz AS (
+         | SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+         |  CAST(unnest(a.embedding) AS DOUBLE) AS x,
+         |  CAST(unnest(b.embedding) AS DOUBLE) AS y
+         | FROM (SELECT e.*, d.lang FROM embeddings e
+         |        JOIN documents d ON d.doc_id = e.vec_id) a
+         |   JOIN (SELECT e.*, d.lang FROM embeddings e
+         |        JOIN documents d ON d.doc_id = e.vec_id) b
+         |   ON a.lang = b.lang AND a.vec_id < b.vec_id),
+         |dd AS (
+         | SELECT id_a, id_b,
+         |  SUM(CAST(x * y AS DECIMAL(30,15))) AS dot,
+         |  SUM(CAST(x * x AS DECIMAL(30,15))) AS na,
+         |  SUM(CAST(y * y AS DECIMAL(30,15))) AS nb
+         | FROM zz GROUP BY id_a, id_b),
+         |spairs AS (
+         | SELECT id_a, id_b FROM dd
+         | WHERE ROUND(CAST(dot AS DOUBLE) /
+         |   SQRT(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)), 9) >= 0.35),
+         |allp AS (SELECT id_a, id_b FROM jpairs
+         | UNION SELECT id_a, id_b FROM spairs),
+         |edges AS (
+         | SELECT id_a AS u, id_b AS v FROM allp
+         | UNION
+         | SELECT id_b AS u, id_a AS v FROM allp),
+         |reach AS (
+         | SELECT u AS node, u AS lab FROM edges
+         | UNION
+         | SELECT e.v AS node, r.lab AS lab
+         | FROM reach r JOIN edges e ON e.u = r.node),
+         |labels AS (SELECT node, MIN(lab) AS label FROM reach GROUP BY node)
+         |SELECT doc_id, lang FROM documents
+         |WHERE doc_id NOT IN (SELECT node FROM labels WHERE label <> node)
+         |ORDER BY doc_id""".stripMargin),
+
+    // Symmetric int8 quantization of embeddings (map-only, inside the
+    // scan projection); exploded to scalar rows for the oracle compare.
+    BoardQuery("x_quantize", ((s, dir) => {
+      val q = Similarity.quantizeInt8(t(s, dir, "embeddings"), "vec_id", "embedding")
+      q.select(col("vec_id"), col("scale"),
+          posexplode(col("q")).as(Seq("pos", "qv")))
+        .select(col("vec_id"), (col("pos") + 1).cast("long").as("dim"),
+          col("qv").as("q"), col("scale"))
+        .orderBy("vec_id", "dim")
+    }),
+      """WITH s AS (
+        | SELECT vec_id, embedding,
+        |  CASE WHEN GREATEST(ABS(list_max(embedding)), ABS(list_min(embedding))) = 0
+        |       THEN 0.0
+        |       ELSE 127.0 / CAST(GREATEST(ABS(list_max(embedding)),
+        |                                  ABS(list_min(embedding))) AS DOUBLE)
+        |  END AS scale
+        | FROM embeddings),
+        |e AS (
+        | SELECT vec_id, scale,
+        |  unnest(list_transform(range(1, len(embedding) + 1),
+        |    i -> {'dim': i, 'v': embedding[i]})) AS u
+        | FROM s)
+        |SELECT vec_id, CAST(u.dim AS BIGINT) AS dim,
+        | CAST(ROUND(CAST(u.v AS DOUBLE) * scale) AS INTEGER) AS q, scale
+        |FROM e ORDER BY vec_id, dim""".stripMargin),
+
+    // Per-label mean embeddings (class centroids / k-means M-step):
+    // shuffles (label, dim, value) triples with map-side partials —
+    // reducer state is O(labels × dim) regardless of corpus size.
+    BoardQuery("x_centroid", ((s, dir) =>
+      Similarity.labelCentroids(t(s, dir, "embeddings"), "label", "embedding")
+        .orderBy("label", "dim")),
+      """WITH e AS (
+        | SELECT label,
+        |  unnest(list_transform(range(1, len(embedding) + 1),
+        |    i -> {'dim': i, 'v': embedding[i]})) AS u
+        | FROM embeddings)
+        |SELECT label, CAST(u.dim AS BIGINT) AS dim,
+        | ROUND(CAST(SUM(CAST(CAST(u.v AS DOUBLE) AS DECIMAL(30,15))) AS DOUBLE) /
+        |   CAST(COUNT(*) AS DOUBLE), 9) AS centroid
+        |FROM e GROUP BY label, dim ORDER BY label, dim""".stripMargin),
+
+    // Embedding-space outlier gate: every vector's exact cosine to its
+    // OWN label centroid; below 0 ⇒ flagged (mislabeled/garbage). The
+    // centroid table is #labels × dim (broadcast); products accumulate
+    // in DECIMAL so the score hash-matches cross-engine.
+    BoardQuery("x_centroid_outlier", ((s, dir) =>
+      Similarity.centroidOutlierScores(t(s, dir, "embeddings"),
+          "vec_id", "embedding", "label", threshold = 0.0)
+        .orderBy("vec_id")),
+      // Same decimal-mean centroids as x_centroid, then per-vector decimal
+      // cosine against its own label's centroid.
+      """WITH ex AS (
+        | SELECT vec_id, label,
+        |  unnest(list_transform(range(1, len(embedding) + 1),
+        |    i -> {'dim': i, 'v': embedding[i]})) AS u
+        | FROM embeddings),
+        |cent AS (
+        | SELECT label, u.dim AS dim,
+        |  ROUND(CAST(SUM(CAST(CAST(u.v AS DOUBLE) AS DECIMAL(30,15))) AS DOUBLE) /
+        |    CAST(COUNT(*) AS DOUBLE), 9) AS c
+        | FROM ex GROUP BY label, dim),
+        |j AS (
+        | SELECT x.vec_id, x.label,
+        |  SUM(CAST(CAST(x.u.v AS DOUBLE) * cent.c AS DECIMAL(30,15))) AS dot,
+        |  SUM(CAST(CAST(x.u.v AS DOUBLE) * CAST(x.u.v AS DOUBLE) AS DECIMAL(30,15))) AS nv,
+        |  SUM(CAST(cent.c * cent.c AS DECIMAL(30,15))) AS nc
+        | FROM ex x JOIN cent ON x.label = cent.label AND x.u.dim = cent.dim
+        | GROUP BY x.vec_id, x.label)
+        |SELECT e.vec_id, e.label,
+        | ROUND(CAST(j.dot AS DOUBLE) /
+        |   SQRT(CAST(j.nv AS DOUBLE) * CAST(j.nc AS DOUBLE)), 9) AS cos_centroid,
+        | COALESCE(ROUND(CAST(j.dot AS DOUBLE) /
+        |   SQRT(CAST(j.nv AS DOUBLE) * CAST(j.nc AS DOUBLE)), 9) < 0.0, FALSE)
+        |   AS is_outlier
+        |FROM embeddings e LEFT JOIN j ON e.vec_id = j.vec_id
+        |ORDER BY e.vec_id""".stripMargin),
+
+    // First-class k-means: deterministic spherical Lloyd with cross-
+    // engine-exact arithmetic (decimal-exact dots and sums, round-9
+    // centroids each round) — cluster ids as data, not just the internal
+    // IVF quantizer. Per round: one map-only assignment pass + one
+    // (k × dim)-grid aggregation with map-side partials. The DuckDB
+    // oracle unrolls both Lloyd rounds and hash-matches cluster ids AND
+    // cosines bit-for-bit.
+    BoardQuery("x_kmeans", ((s, dir) =>
+      Similarity.kmeansAssign(t(s, dir, "embeddings"), "vec_id", "embedding",
+          k = 8, rounds = 2)
+        .orderBy("vec_id")),
+      // Full unrolled 2-round Lloyd chain — cluster ids AND cosines must
+      // hash-match the engine's bit-for-bit.
+      s"""WITH $kmeansCte
+         |SELECT vec_id, cluster, cos_to_centroid FROM kassign
+         |ORDER BY vec_id""".stripMargin),
+
+    // Cluster-balanced selection (the SemDeDup/DataComp curation move:
+    // sample evenly across embedding-space clusters so no topic mode
+    // dominates): k-means clusters → exact deterministic k-per-cluster
+    // by md5 order — repartition/rerun-invariant, like x_sample_k.
+    BoardQuery("x_cluster_sample", ((s, dir) => {
+      val assigned = Similarity.kmeansAssign(t(s, dir, "embeddings"),
+        "vec_id", "embedding", k = 8, rounds = 2)
+      Corpus.exactKPerStratum(
+          assigned.select(col("cluster"), col("vec_id")),
+          "cluster", "vec_id", k = 20)
+        .orderBy("cluster", "vec_id")
+    }),
+      // Same chain + the exactKPerStratum md5 rank (the x_sample_k
+      // discipline) per cluster.
+      s"""WITH $kmeansCte
+         |SELECT cluster, vec_id FROM (
+         | SELECT cluster, vec_id,
+         |  ROW_NUMBER() OVER (PARTITION BY cluster
+         |    ORDER BY md5(CAST(cluster AS VARCHAR) || ':' ||
+         |                 CAST(vec_id AS VARCHAR)), vec_id) AS rk
+         | FROM kassign)
+         |WHERE rk <= 20 ORDER BY cluster, vec_id""".stripMargin),
+
+    // Cluster-quality diagnostics: size + cohesion (mean/min/max cosine
+    // to own centroid) per cluster — the go/no-go report before using a
+    // clustering for topic balancing. #clusters-sized aggregation.
+    BoardQuery("x_cluster_report", ((s, dir) =>
+      Similarity.clusterReport(
+        Similarity.kmeansAssign(t(s, dir, "embeddings"),
+          "vec_id", "embedding", k = 8, rounds = 2))
+        .orderBy("cluster")),
+      // Same chain, rolled up per cluster; the mean accumulates the
+      // round-9 cosines in DECIMAL exactly as the engine does.
+      s"""WITH $kmeansCte
+         |SELECT cluster, COUNT(*) AS n,
+         | ROUND(CAST(SUM(CAST(cos_to_centroid AS DECIMAL(30,15))) AS DOUBLE) /
+         |   CAST(COUNT(*) AS DOUBLE), 9) AS mean_cos,
+         | MIN(cos_to_centroid) AS min_cos, MAX(cos_to_centroid) AS max_cos
+         |FROM kassign GROUP BY cluster ORDER BY cluster""".stripMargin),
+
+    // Incremental dedup — tomorrow's crawl against yesterday's corpus:
+    // the index side is the distinct 8-byte fingerprints of the "old"
+    // corpus (doc_id % 3 = 0), the "new" batch is the rest PLUS planted
+    // re-crawls (old docs under fresh ids) that the anti-join must drop.
+    // New bodies never shuffle; the index is hash-sized and broadcast.
+    // Oracle mirrors with exact text matching (hash engine-side, same
+    // contract as the fingerprint dedup family).
+    BoardQuery("x_dedup_incremental", ((s, dir) => {
+      val docs = t(s, dir, "documents")
+      val old = docs.where(col("doc_id") % 3 === 0)
+      val fresh = docs.where(col("doc_id") % 3 =!= 0)
+        .select(col("doc_id"), col("text"))
+        .unionByName(old.where(col("doc_id") % 6 === 0)
+          .select((col("doc_id") + 20000000L).as("doc_id"), col("text")))
+      Dedup.dedupAgainstIndex(fresh, "text",
+          Dedup.fingerprintIndex(old, "text"))
+        .select(col("doc_id")).orderBy("doc_id")
+    }),
+      """WITH old AS (SELECT * FROM documents WHERE doc_id % 3 = 0),
+        |fresh AS (
+        | SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0
+        | UNION ALL
+        | SELECT doc_id + 20000000 AS doc_id, text FROM old WHERE doc_id % 6 = 0)
+        |SELECT doc_id FROM fresh n
+        |WHERE NOT EXISTS (SELECT 1 FROM old o WHERE o.text = n.text)
+        |ORDER BY doc_id""".stripMargin),
+
+    // Incremental NEAR-dup dedup — the near-dup analogue of
+    // x_dedup_incremental: yesterday's corpus persists a MinHash band
+    // index; today's batch plants mutated re-crawls (one token dropped
+    // from each eligible old doc) that MUST collide with the index in
+    // some band and drop. 16 bands × 2 rows — the recall-heavy regime an
+    // index you dedup AGAINST wants: detection ≥ 0.999 down to Jaccard
+    // 0.55 (short docs with repeated shingles land well below the naive
+    // ≈ 0.86 estimate — measured, 8×4 missed 3 of 553 at sf0.1), and
+    // signatures are xxhash-seeded, so the outcome is deterministic —
+    // the oracle pins dropped TRUE.
+    BoardQuery("x_neardedup_incremental", ((s, dir) => {
+      val docs = t(s, dir, "documents")
+      val toks = split(trim(col("text")), "\\s+")
+      val old = docs.where(col("doc_id") % 3 === 0)
+      val index = Dedup.minhashBandIndex(old, "text",
+        shingleN = 5, numHashes = 32, rowsPerBand = 2)
+      val planted = old
+        .where(col("doc_id") % 6 === 0 && size(toks) >= 40)
+        .select((col("doc_id") + 30000000L).as("doc_id"),
+          array_join(filter(toks, (_, i) => i =!= 16), " ").as("text"))
+      val fresh = docs.where(col("doc_id") % 3 =!= 0)
+        .select(col("doc_id"), col("text"))
+        .unionByName(planted)
+      val survived = Dedup.nearDedupAgainstIndex(fresh, "doc_id", "text",
+          index, shingleN = 5, numHashes = 32, rowsPerBand = 2)
+        .select(col("doc_id").as("copy_id"), lit(true).as("s"))
+      planted.select((col("doc_id") - 30000000L).as("doc_id"),
+          col("doc_id").as("copy_id"))
+        .join(survived, Seq("copy_id"), "left")
+        .select(col("doc_id"), col("copy_id"),
+          coalesce(!col("s"), lit(true)).as("dropped_by_index"))
+        .orderBy("doc_id")
+    }),
+      // Planted-recall oracle: the re-crawl list is pure arithmetic on the
+      // eligibility predicate; dropped_by_index is PINNED TRUE — the band
+      // index's recall on real near-duplicates is what the compare checks.
+      """SELECT doc_id, doc_id + 30000000 AS copy_id,
+        | TRUE AS dropped_by_index
+        |FROM documents
+        |WHERE doc_id % 6 = 0
+        |  AND len(regexp_split_to_array(TRIM(text), '\s+')) >= 40
+        |ORDER BY doc_id""".stripMargin),
+
+    // End-to-end near-dup removal: detect pairs (exact n-gram Jaccard),
+    // cluster (label propagation), keep canonical doc per cluster.
+    // Oracle-checked: the pairs are exact, so DuckDB reproduces the
+    // clustering with a recursive transitive-closure CTE.
+    BoardQuery("x_dedup_drop", ((s, dir) => {
+      val docs = t(s, dir, "documents")
+      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 5, 0.5)
+      Dedup.dropNearDuplicates(docs, "doc_id", pairs)
+        .select(col("doc_id")).orderBy("doc_id")
+    }),
+      // Connected components over the exact ≥ 0.5 pairs via recursive
+      // transitive closure (component label = min reachable id), then keep
+      // each component's min-id doc plus all unpaired docs — exactly
+      // Dedup.dropNearDuplicates' semantics, independently reformulated.
+      s"""WITH RECURSIVE ${ngramPairsCte(0.5)},
+         |edges AS (
+         | SELECT id_a AS u, id_b AS v FROM jpairs
+         | UNION
+         | SELECT id_b AS u, id_a AS v FROM jpairs),
+         |reach AS (
+         | SELECT u AS node, u AS lab FROM edges
+         | UNION
+         | SELECT e.v AS node, r.lab AS lab
+         | FROM reach r JOIN edges e ON e.u = r.node),
+         |labels AS (SELECT node, MIN(lab) AS label FROM reach GROUP BY node)
+         |SELECT doc_id FROM documents
+         |WHERE doc_id NOT IN (SELECT node FROM labels WHERE label <> node)
+         |ORDER BY doc_id""".stripMargin),
+
+    // Exact dedup: group identical texts, keep min id. At scale the
+    // grouping key is the 8-byte fingerprint, not the body (see
+    // x_fingerprint); here the oracle-checkable text-key form.
+    BoardQuery("x_dedup_exact", ((s, dir) =>
+      t(s, dir, "documents")
+        .groupBy(col("text"))
+        .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
+        .select(col("keep_id"), col("n_copies"))
+        .orderBy("keep_id")),
+      """SELECT MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
+        |FROM documents GROUP BY text ORDER BY keep_id""".stripMargin),
+
+    // Winnowing fingerprint dedup: group by (winnow fingerprint set,
+    // byte length) — the native rolling-hash + window-min expression plus
+    // the cheapest possible disambiguator. The set alone is a *content*
+    // sketch: texts differing only in the multiplicity of a repeated
+    // substring ("… dup dup" vs "… dup dup dup") have identical gram
+    // sets at any window width, and length separates exactly those.
+    // Identical texts agree on both components, so — like x_fingerprint —
+    // the ids-only output is exactly text-key dedup, which DuckDB oracles
+    // without reproducing the hash. The set key additionally powers
+    // partial-overlap (containment) joins that a whole-doc hash cannot.
+    // The shuffle key is xxhash64 OF the fingerprint set (+ length), not
+    // the set itself — same keys-first discipline as x_fingerprint: the
+    // exchange moves 8 bytes per doc however long the fingerprint array
+    // is. Honest risk note: unlike the whole-text hash (2^-64), a winnow
+    // SET key is a sketch — two same-length docs differing by one
+    // substitution collide when none of the ~2k changed grams is a window
+    // minimum in either doc (≈(1−2/(w+1))^2k per such pair). That is why
+    // the fingerprint-then-verify pattern runs IN-QUERY here:
+    // Dedup.verifyGroups byte-compares every candidate group and the
+    // oracle pins `verified` TRUE — a winnow-set collision would flip it
+    // red rather than silently merging distinct docs. (The winnow set's
+    // real job is containment/overlap search; this query is its dedup
+    // discipline.)
+    // keepIdCol makes it ONE pass: the survivor pick rides the verify
+    // aggregation, so the (expensive) winnow expression evaluates once.
+    BoardQuery("x_winnow_dedup", ((s, dir) => {
+      val keyed = t(s, dir, "documents").select(
+        col("doc_id"), col("text"),
+        xxhash64(TF.winnowFingerprints(col("text")),
+          octet_length(col("text"))).as("fpkey"))
+      Dedup.verifyGroups(keyed, "fpkey", "text", keepIdCol = Some("doc_id"))
+        .select(col("keep_id"), col("n_members").as("n_copies"), col("verified"))
+        .orderBy("keep_id")
+    }),
+      """SELECT MIN(doc_id) AS keep_id, COUNT(*) AS n_copies,
+        |  TRUE AS verified
+        |FROM documents GROUP BY text ORDER BY keep_id""".stripMargin),
+
+    // Exact n-gram Jaccard near-dup pairs via inverted-index self-join.
+    BoardQuery("x_ngram_jaccard", ((s, dir) =>
+      Dedup.ngramJaccardPairs(t(s, dir, "documents"), "doc_id", "text", 5, 0.2)
+        .orderBy("id_a", "id_b")),
+      s"""WITH ${ngramPairsCte(0.2)}
+         |SELECT id_a, id_b, jaccard FROM jpairs
+         |ORDER BY id_a, id_b""".stripMargin),
+
+    // MinHash + LSH banding near-dup candidates, self-verifying: the
+    // banded candidates LEFT-join the EXACT n-gram Jaccard pairs at
+    // ≥ 0.8 (DuckDB-reproducible ground truth) and the oracle pins
+    // `found_by_minhash` TRUE — a banding recall miss on any
+    // high-similarity pair turns its row red. 8 bands × 4 rows puts the
+    // per-pair miss probability at s = 0.857 (the corpus minimum) at
+    // (1 − s⁴)⁸ ≈ 0.2%, and signatures are xxhash-seeded so the outcome
+    // is deterministic: green stays green.
+    BoardQuery("x_minhash_neardup", ((s, dir) => {
+      val docs = t(s, dir, "documents")
+      val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 5, 0.8)
+      val cand = Dedup.minhashNearDupPairs(docs, "doc_id", "text",
+          shingleN = 5, numHashes = 32, rowsPerBand = 4, minEstJaccard = 0.4)
+        .select(col("id_a"), col("id_b"), lit(true).as("f"))
+      exact.join(cand, Seq("id_a", "id_b"), "left")
+        .select(col("id_a"), col("id_b"), col("jaccard"),
+          coalesce(col("f"), lit(false)).as("found_by_minhash"))
+        .orderBy("id_a", "id_b")
+    }),
+      // Ground truth = exact pairs at ≥ 0.8; the flag is TRUE by definition
+      // here and only TRUE on the Spark side when the 8×4 banding really
+      // surfaced every high-similarity pair.
+      s"""WITH ${ngramPairsCte(0.8)}
+         |SELECT id_a, id_b, jaccard, TRUE AS found_by_minhash FROM jpairs
+         |ORDER BY id_a, id_b""".stripMargin),
+
+    // SimHash near-dup detection, oracled on PLANTED structure (VERDICT
+    // r6 #5): every eligible doc (id % 5 = 0, ≥ 40 tokens) gets a mutated
+    // copy — its 17th token dropped — and the query reports whether the
+    // pigeonhole-banded simhash pipeline (hash equi-joins on disjoint
+    // sketch blocks — never an all-pairs loop) found each planted pair.
+    // The oracle pins found_by_simhash TRUE: a recall miss turns the row
+    // red. A 1-of-≥40-token drop moves each sketch bit's vote tally by
+    // ±1, so only near-tied bits flip; the MEASURED planted hamming
+    // (ProbePlanted, all three fixture scales) tops out at 6, so
+    // maxHamming=7 → 8 disjoint 8-bit blocks detects every planted pair
+    // with margin, deterministically (simhash votes are xxhash-seeded):
+    // green stays green. Scale note: radius 7 means 2^8 buckets/block —
+    // fine at fixture scale, quadratic at corpus scale; the production
+    // web-dedup regime is radius ≤ 3 (2^16 buckets/block, see
+    // simhashNearDupPairs' scaladoc), radius 7 here buys the recall
+    // proof against this corpus's short-doc vote margins.
+    BoardQuery("x_simhash", ((s, dir) => {
+      val docs = t(s, dir, "documents")
+      val toks = split(trim(col("text")), "\\s+")
+      val eligible = docs
+        .where(col("doc_id") % 5 === 0 && size(toks) >= 40)
+      val planted = eligible.select(
+        (col("doc_id") + 10000000L).as("id"),
+        array_join(filter(toks, (_, i) => i =!= 16), " ").as("text"))
+      val corpus = docs.select(col("doc_id").as("id"), col("text"))
+        .unionByName(planted)
+      val found = Dedup
+        .simhashNearDupPairs(corpus, "id", "text", maxHamming = 7)
+        .select(col("id_a").as("doc_id"), col("id_b").as("copy_id"),
+          lit(true).as("f"))
+      eligible
+        .select(col("doc_id"), (col("doc_id") + 10000000L).as("copy_id"))
+        .join(found, Seq("doc_id", "copy_id"), "left")
+        .select(col("doc_id"), col("copy_id"),
+          coalesce(col("f"), lit(false)).as("found_by_simhash"))
+        .orderBy("doc_id")
+    }),
+      // Planted-recall oracle: the planted pair list is pure arithmetic on
+      // the eligibility predicate; found_by_simhash is PINNED TRUE — the
+      // engine's banded simhash recall is what the hash compare verifies.
+      """SELECT doc_id, doc_id + 10000000 AS copy_id,
+        | TRUE AS found_by_simhash
+        |FROM documents
+        |WHERE doc_id % 5 = 0
+        |  AND len(regexp_split_to_array(TRIM(text), '\s+')) >= 40
+        |ORDER BY doc_id""".stripMargin),
+
+    // Brute-force cosine top-k against the vec_id=0 query vector.
+    // Two-phase scoring (the cosineNearDupBlocked pattern): the native
+    // double kernel ranks the whole corpus (~100× cheaper per pair than
+    // the interpreted exact-decimal HOF), a margin-padded top-k′ survives
+    // (k′ = 5k — double-vs-decimal divergence is ~1e-12, so the true
+    // top-10 is certainly inside the native top-50), and only survivors
+    // pay the order-independent exact-decimal rescore that makes the
+    // output bit-equal to the DuckDB oracle.
+    BoardQuery("x_cosine_topk", ((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      val q = e.where(col("vec_id") === 0).select(col("embedding").as("qe"))
+      val pruned = e.where(col("vec_id") =!= 0)
+        .crossJoin(broadcast(q))
+        .select(col("vec_id"), col("label"), col("embedding"), col("qe"),
+          Similarity.cosine(col("embedding"), col("qe")).as("cos_fast"))
+        .orderBy(col("cos_fast").desc, col("vec_id"))
+        .limit(50)
+      pruned.select(col("vec_id"), col("label"),
+          round(Similarity.cosineExact(col("embedding"), col("qe")), 9).as("cos"))
+        .orderBy(col("cos").desc, col("vec_id"))
+        .limit(10)
+    }),
+      cosineTopkOracle),
+
+    // Hyperplane-LSH ANN, oracled on PLANTED structure (VERDICT r6 #5):
+    // every 20th vector gets a near-duplicate copy (each dim scaled by
+    // 1 + 0.005·((d%7)−3), cos ≈ 0.99995) and the query reports whether
+    // 4-table OR-amplified LSH bucketing found each planted pair, plus
+    // the exact-decimal cosine the oracle reproduces bit-for-bit. The
+    // oracle pins found_by_lsh TRUE; per-pair miss probability at this
+    // angle is ~(nBits·θ/π)^4 ≈ 1e-6, and hyperplanes are hash-derived,
+    // so the outcome is deterministic — green stays green.
+    BoardQuery("x_lsh_ann", ((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      // bucket count tracks corpus size (fixed nBits degenerates toward
+      // all-pairs as the corpus grows) — sized from the scan's CATALOG
+      // estimate (file-footer bytes ÷ approx row width: 64 float32 + id/
+      // label/encoding overhead ≈ 400 B), not a count() job: lshBitsFor
+      // is logarithmic, so an order-of-magnitude estimate lands the same
+      // nBits while removing a whole corpus pass from the query
+      val estRows = math.max(1L,
+        (e.queryExecution.optimizedPlan.stats.sizeInBytes / 400).toLong)
+      val nBits = Similarity.lshBitsFor(estRows, targetPerBucket = 8)
+      val perturbed = e.where(col("vec_id") % 20 === 0)
+        .select((col("vec_id") + 10000000L).as("id"),
+          transform(col("embedding"), (x, i) =>
+            (x * (lit(1.0) + lit(0.005) * ((i % 7) - lit(3))))
+              .cast(org.apache.spark.sql.types.FloatType)).as("v"))
+      val corpus = e.select(col("vec_id").as("id"), col("embedding").as("v"))
+        .unionByName(perturbed)
+      val found = Similarity
+        .lshCandidatePairs(corpus, "id", "v", dim = 64, nBits = nBits,
+          nTables = 4)
+        .select(col("id_a").as("vec_id"), col("id_b").as("copy_id"),
+          lit(true).as("f"))
+      e.where(col("vec_id") % 20 === 0)
+        .select(col("vec_id"), (col("vec_id") + 10000000L).as("copy_id"),
+          col("embedding"))
+        .join(perturbed.withColumnRenamed("id", "copy_id"), Seq("copy_id"))
+        .join(found, Seq("vec_id", "copy_id"), "left")
+        .select(col("vec_id"), col("copy_id"),
+          round(Similarity.cosineExact(col("embedding"), col("v")), 9).as("cos"),
+          coalesce(col("f"), lit(false)).as("found_by_lsh"))
+        .orderBy("vec_id")
+    }),
+      // Planted-recall oracle: reproduces the perturbed copy (dim d scaled
+      // by 1 + 0.005·((d%7)−3), rounded to float32 exactly as Spark's
+      // transform+cast) and the exact-decimal cosine; found_by_lsh PINNED
+      // TRUE verifies the 4-table OR-amplified bucketing recall.
+      """WITH p AS (
+        | SELECT vec_id,
+        |  list_transform(embedding, (x, i) ->
+        |    CAST(CAST(x AS DOUBLE) * (1.0 + 0.005 * (((i - 1) % 7) - 3)) AS FLOAT)) AS pemb
+        | FROM embeddings
+        | WHERE vec_id % 20 = 0),
+        |z AS (
+        | SELECT e.vec_id,
+        |  CAST(unnest(e.embedding) AS DOUBLE) AS x,
+        |  CAST(unnest(p.pemb) AS DOUBLE) AS y
+        | FROM embeddings e JOIN p USING (vec_id)),
+        |d AS (
+        | SELECT vec_id,
+        |  SUM(CAST(x * y AS DECIMAL(30,15))) AS dot,
+        |  SUM(CAST(x * x AS DECIMAL(30,15))) AS na,
+        |  SUM(CAST(y * y AS DECIMAL(30,15))) AS nb
+        | FROM z GROUP BY 1)
+        |SELECT vec_id, vec_id + 10000000 AS copy_id,
+        | ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)), 9) AS cos,
+        | TRUE AS found_by_lsh
+        |FROM d ORDER BY vec_id""".stripMargin),
+
+    // Embedding-cosine near-dup pairs, blocked on the label column (the
+    // coarse-quantizer-bucket pattern: exact recall within a block, hash
+    // equi-join plan — the scale path for pairwise embedding dedup).
+    // Exact-decimal cosine → bit-equal to the DuckDB quadratic oracle.
+    BoardQuery("x_embed_neardup", ((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      Similarity.cosineNearDupBlocked(e, "vec_id", "embedding", "label",
+          minCos = 0.35,
+          saltBuckets = 4) // 10 labels alone under-parallelize 32 cores
+        .orderBy("id_a", "id_b")
+    }),
+      """WITH z AS (
+        | SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        |  CAST(unnest(a.embedding) AS DOUBLE) AS x,
+        |  CAST(unnest(b.embedding) AS DOUBLE) AS y
+        | FROM embeddings a JOIN embeddings b
+        |   ON a.label = b.label AND a.vec_id < b.vec_id),
+        |d AS (
+        | SELECT id_a, id_b,
+        |  SUM(CAST(x * y AS DECIMAL(30,15))) AS dot,
+        |  SUM(CAST(x * x AS DECIMAL(30,15))) AS na,
+        |  SUM(CAST(y * y AS DECIMAL(30,15))) AS nb
+        | FROM z GROUP BY id_a, id_b)
+        |SELECT id_a, id_b,
+        | ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)), 9) AS cos
+        |FROM d
+        |WHERE ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)), 9) >= 0.35
+        |ORDER BY id_a, id_b""".stripMargin),
+
+    // Semantic dedup (SemDeDup): cosine near-dup pairs within blocks →
+    // transitive clustering → keep each cluster's min-id member plus all
+    // unpaired rows. Blocked on the label column so DuckDB reproduces
+    // the WHOLE chain exactly (pairs CTE ≡ x_embed_neardup, closure ≡
+    // x_dedup_drop's recursive CTE) — the learned-cluster variant
+    // (semanticDedupClustered) is spec-pinned equal to the brute-force
+    // chain at nCentroids=1 instead.
+    BoardQuery("x_semdedup", ((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      Similarity.semanticDedup(e, "vec_id", "embedding", "label",
+          minCos = 0.35, saltBuckets = 4)
+        .select(col("vec_id"), col("label")).orderBy("vec_id")
+    }),
+      // Pair CTE mirrors x_embed_neardup (label-blocked exact cosine);
+      // closure mirrors x_dedup_drop's recursive reachability CTE.
+      """WITH RECURSIVE z AS (
+        | SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        |  CAST(unnest(a.embedding) AS DOUBLE) AS x,
+        |  CAST(unnest(b.embedding) AS DOUBLE) AS y
+        | FROM embeddings a JOIN embeddings b
+        |   ON a.label = b.label AND a.vec_id < b.vec_id),
+        |d AS (
+        | SELECT id_a, id_b,
+        |  SUM(CAST(x * y AS DECIMAL(30,15))) AS dot,
+        |  SUM(CAST(x * x AS DECIMAL(30,15))) AS na,
+        |  SUM(CAST(y * y AS DECIMAL(30,15))) AS nb
+        | FROM z GROUP BY id_a, id_b),
+        |cpairs AS (
+        | SELECT id_a, id_b FROM d
+        | WHERE ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)), 9) >= 0.35),
+        |edges AS (
+        | SELECT id_a AS u, id_b AS v FROM cpairs
+        | UNION
+        | SELECT id_b AS u, id_a AS v FROM cpairs),
+        |reach AS (
+        | SELECT u AS node, u AS lab FROM edges
+        | UNION
+        | SELECT e.v AS node, r.lab AS lab
+        | FROM reach r JOIN edges e ON e.u = r.node),
+        |comps AS (SELECT node, MIN(lab) AS complabel FROM reach GROUP BY node)
+        |SELECT vec_id, label FROM embeddings
+        |WHERE vec_id NOT IN (SELECT node FROM comps WHERE complabel <> node)
+        |ORDER BY vec_id""".stripMargin),
+
+    // Density clustering with a noise verdict (DBSCAN in cosine space,
+    // label-blocked ε-pairs): core = ≥ minPts ε-neighbors incl. self,
+    // cluster = min core id of the core-core component, border takes
+    // its smallest adjacent cluster — order-free, engine-exact.
+    BoardQuery("x_dbscan", ((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      Similarity.dbscan(e, "vec_id", "embedding", "label",
+          minCos = 0.25, minPts = 4, saltBuckets = 4)
+        .orderBy("id")
+    }),
+      // DBSCAN mirrored: the x_semdedup pair CTE at 0.25, neighbor counts
+      // over both pair directions, core = cnt+1 >= 4, min-label closure
+      // over CORE-core edges only, border = min adjacent core cluster.
+      """WITH RECURSIVE z AS (
+        | SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        |  CAST(unnest(a.embedding) AS DOUBLE) AS x,
+        |  CAST(unnest(b.embedding) AS DOUBLE) AS y
+        | FROM embeddings a JOIN embeddings b
+        |   ON a.label = b.label AND a.vec_id < b.vec_id),
+        |d AS (
+        | SELECT id_a, id_b,
+        |  SUM(CAST(x * y AS DECIMAL(30,15))) AS dot,
+        |  SUM(CAST(x * x AS DECIMAL(30,15))) AS na,
+        |  SUM(CAST(y * y AS DECIMAL(30,15))) AS nb
+        | FROM z GROUP BY id_a, id_b),
+        |cpairs AS (
+        | SELECT id_a, id_b FROM d
+        | WHERE ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)), 9) >= 0.25),
+        |adj AS (
+        | SELECT id_a AS id, id_b AS nbr FROM cpairs
+        | UNION ALL SELECT id_b, id_a FROM cpairs),
+        |cores AS (
+        | SELECT e.vec_id AS id FROM embeddings e
+        | WHERE 1 + (SELECT COUNT(*) FROM adj WHERE adj.id = e.vec_id) >= 4),
+        |cedges AS (
+        | SELECT p.id_a, p.id_b FROM cpairs p
+        | JOIN cores ca ON ca.id = p.id_a JOIN cores cb ON cb.id = p.id_b),
+        |cadj AS (
+        | SELECT id_a AS u, id_b AS v FROM cedges
+        | UNION SELECT id_b, id_a FROM cedges),
+        |reach AS (
+        | SELECT id AS node, id AS lab FROM cores
+        | UNION
+        | SELECT a.v AS node, r.lab FROM reach r JOIN cadj a ON a.u = r.node),
+        |clab AS (SELECT node AS id, MIN(lab) AS cluster FROM reach GROUP BY node),
+        |blab AS (
+        | SELECT adj.id, MIN(c.cluster) AS bc
+        | FROM adj JOIN clab c ON c.id = adj.nbr
+        |   JOIN cores co ON co.id = adj.nbr
+        | GROUP BY adj.id)
+        |SELECT e.vec_id AS id,
+        | CASE WHEN co.id IS NOT NULL THEN 'core'
+        |      WHEN b.bc IS NOT NULL THEN 'border'
+        |      ELSE 'noise' END AS role,
+        | CASE WHEN co.id IS NOT NULL THEN c.cluster ELSE b.bc END AS cluster
+        |FROM embeddings e
+        |LEFT JOIN cores co ON co.id = e.vec_id
+        |LEFT JOIN clab c ON c.id = e.vec_id
+        |LEFT JOIN blab b ON b.id = e.vec_id
+        |ORDER BY e.vec_id""".stripMargin),
+
+    // Batch kNN join: top-5 cosine neighbors for EVERY query vector in
+    // one corpus scan (bounded top-k' aggregator keeps the shuffle
+    // candidate-sized), exact-decimal rescore + rank — oracle is the full
+    // quadratic window in DuckDB.
+    BoardQuery("x_knn_join", ((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      Similarity.knnJoin(
+          e.where(col("vec_id") < 20), e.where(col("vec_id") >= 20),
+          "vec_id", "embedding", "vec_id", "embedding", k = 5)
+        .orderBy("query_id", "rank")
+    }),
+      """WITH z AS (
+        | SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+        |  CAST(unnest(c.embedding) AS DOUBLE) AS x,
+        |  CAST(unnest(q.embedding) AS DOUBLE) AS y
+        | FROM embeddings q JOIN embeddings c
+        |   ON q.vec_id < 20 AND c.vec_id >= 20),
+        |d AS (
+        | SELECT query_id, neighbor_id,
+        |  SUM(CAST(x * y AS DECIMAL(30,15))) AS dot,
+        |  SUM(CAST(x * x AS DECIMAL(30,15))) AS nc,
+        |  SUM(CAST(y * y AS DECIMAL(30,15))) AS nq
+        | FROM z GROUP BY 1, 2),
+        |r AS (
+        | SELECT query_id, neighbor_id,
+        |  ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(nc AS DOUBLE) * CAST(nq AS DOUBLE)), 9) AS cos,
+        |  ROW_NUMBER() OVER (PARTITION BY query_id
+        |    ORDER BY ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(nc AS DOUBLE) * CAST(nq AS DOUBLE)), 9) DESC,
+        |      neighbor_id) AS rank
+        | FROM d)
+        |SELECT query_id, neighbor_id, cos, rank FROM r WHERE rank <= 5
+        |ORDER BY query_id, rank""".stripMargin),
+
+    // kNN classification (weak supervision / label transfer): unlabeled
+    // vectors take the majority label of their 5 nearest labeled
+    // neighbors; the vote is count-based with smallest-label tiebreak —
+    // float-free, so the oracle reproduces it exactly on top of the
+    // quadratic kNN chain.
+    BoardQuery("x_knn_classify", ((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      Similarity.knnClassify(
+          e.where(col("vec_id") < 20), e.where(col("vec_id") >= 20),
+          "vec_id", "embedding", "vec_id", "embedding", "label", k = 5)
+        .orderBy("query_id")
+    }),
+      // The x_knn_join quadratic chain + label join + count-based majority
+      // vote (smallest-label tiebreak — float-free, exactly the engine's).
+      """WITH z AS (
+        | SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+        |  CAST(unnest(c.embedding) AS DOUBLE) AS x,
+        |  CAST(unnest(q.embedding) AS DOUBLE) AS y
+        | FROM embeddings q JOIN embeddings c
+        |   ON q.vec_id < 20 AND c.vec_id >= 20),
+        |d AS (
+        | SELECT query_id, neighbor_id,
+        |  SUM(CAST(x * y AS DECIMAL(30,15))) AS dot,
+        |  SUM(CAST(x * x AS DECIMAL(30,15))) AS nc,
+        |  SUM(CAST(y * y AS DECIMAL(30,15))) AS nq
+        | FROM z GROUP BY 1, 2),
+        |r AS (
+        | SELECT query_id, neighbor_id,
+        |  ROW_NUMBER() OVER (PARTITION BY query_id
+        |    ORDER BY ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(nc AS DOUBLE) * CAST(nq AS DOUBLE)), 9) DESC,
+        |      neighbor_id) AS rank
+        | FROM d),
+        |nb AS (SELECT query_id, neighbor_id FROM r WHERE rank <= 5),
+        |v AS (
+        | SELECT nb.query_id, e.label AS lab, COUNT(*) AS nv
+        | FROM nb JOIN embeddings e ON nb.neighbor_id = e.vec_id
+        | GROUP BY 1, 2),
+        |tot AS (
+        | SELECT query_id, CAST(SUM(nv) AS BIGINT) AS n_neighbors
+        | FROM v GROUP BY 1),
+        |pick AS (
+        | SELECT query_id, lab, nv,
+        |  ROW_NUMBER() OVER (PARTITION BY query_id
+        |    ORDER BY nv DESC, lab ASC) AS rk
+        | FROM v)
+        |SELECT p.query_id, p.lab AS pred_label,
+        | CAST(p.nv AS BIGINT) AS n_votes, t.n_neighbors
+        |FROM pick p JOIN tot t USING (query_id)
+        |WHERE p.rk = 1 ORDER BY p.query_id""".stripMargin),
+
+    // PQ ANN in its PRODUCTION regime, self-verifying: small codebooks
+    // (m=8 subspaces × k=256 codes — the driver holds k·dim doubles,
+    // never corpus-sized state), one Lloyd refinement round, ADC top-400
+    // candidates, exact-decimal rescore of survivors. The candidate
+    // budget is sized to the corpus's geometry, verified at every
+    // shipped SF: these embeddings are near-orthogonal (top-10 cos ≈
+    // 0.31 vs a bulk at 0.25–0.30), the adversarial regime for PQ —
+    // m=4/top-100 and m=8/top-100 each missed one top-10 member at 2000
+    // vectors by < 5e-4 cosine. Recall is proven in-query instead of by
+    // construction: the rescored top-10 left-joins the brute-force exact
+    // top-10 (native two-phase prune, one cheap corpus pass) and emits
+    // `in_exact_topk`, which the oracle pins TRUE — any PQ recall miss
+    // flips the flag (and the rows) red, which is exactly how the
+    // too-small budgets were caught.
+    BoardQuery("x_pq_ann", ((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      val qv = e.where(col("vec_id") === 0).select(col("embedding"))
+        .collect().head.getSeq[Float](0).toArray
+      val corpus = e.where(col("vec_id") =!= 0)
+      val (encoded, books) = Similarity.productQuantize(
+        corpus, "vec_id", "embedding", m = 8, k = 256, lloydIters = 1)
+      val cand = Similarity.pqCandidates(encoded, books, qv, topN = 400)
+      val q = array(qv.map(v => lit(v)): _*)
+      val pqTop = corpus.join(cand.select(col("vec_id")), "vec_id")
+        .select(col("vec_id"), col("label"),
+          round(Similarity.cosineExact(col("embedding"), q), 9).as("cos"))
+        .orderBy(col("cos").desc, col("vec_id"))
+        .limit(10)
+      val bfTop = corpus
+        .select(col("vec_id"), col("embedding"),
+          Similarity.cosine(col("embedding"), q).as("cf"))
+        .orderBy(col("cf").desc, col("vec_id")).limit(50)
+        .select(col("vec_id"),
+          round(Similarity.cosineExact(col("embedding"), q), 9).as("bf_cos"))
+        .orderBy(col("bf_cos").desc, col("vec_id")).limit(10)
+        .select(col("vec_id"), lit(true).as("in_exact_topk"))
+      pqTop.join(bfTop, Seq("vec_id"), "left")
+        .select(col("vec_id"), col("label"), col("cos"),
+          coalesce(col("in_exact_topk"), lit(false)).as("in_exact_topk"))
+        .orderBy(col("cos").desc, col("vec_id"))
+    }),
+      // Same exact top-10 as brute force, plus the recall flag the query
+      // computes by joining its PQ answer against the in-query brute-force
+      // top-10 — TRUE by definition on the oracle side, and only TRUE on
+      // the Spark side when PQ's ADC top-400 really contained the top-10.
+      s"""WITH topk AS ($cosineTopkOracle)
+         |SELECT vec_id, label, cos, TRUE AS in_exact_topk FROM topk
+         |ORDER BY cos DESC, vec_id""".stripMargin),
+
+    // IVF ANN, self-verifying: probing ALL centroid buckets makes IVF
+    // exhaustive (recall = 1), so the output must equal the brute-force
+    // top-k — same oracle as x_cosine_topk. The probe-limited approximate
+    // path is spec-covered (FunctionsSpec "ivfTopK"); this query verifies
+    // the assignment + probe machinery end-to-end against the oracle.
+
+    BoardQuery("x_ivf_ann", ((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      val qv = e.where(col("vec_id") === 0).select(col("embedding"))
+        .collect().head.getSeq[Float](0).toArray
+      val (assigned, centroids) = Similarity.ivfAssign(
+        e.where(col("vec_id") =!= 0), "vec_id", "embedding", nCentroids = 16,
+        kmeansIters = 2) // spherical-Lloyd-refined quantizer, still exhaustive
+      val qd = qv.map(_.toDouble)
+      val probes = centroids.zipWithIndex
+        .map { case (c, i) => (i, c.zip(qd).map { case (a, b) => a * b }.sum) }
+        .sortBy(-_._2).map(_._1) // every bucket, best-first
+      val q = array(qv.map(v => lit(v)): _*)
+      assigned.where(col("ivf_bucket").isin(probes: _*))
+        .select(col("vec_id"), col("label"),
+          round(Similarity.cosineExact(col("embedding"), q), 9).as("cos"))
+        .orderBy(col("cos").desc, col("vec_id"))
+        .limit(10)
+    }),
+      cosineTopkOracle),
+
+    // Persisted dense ANN index — the tfidfIndex/tfidfProbeIndex
+    // convention applied to embeddings: ivfIndex freezes a deterministic
+    // spherical-k-means quantizer (k=8, 2 rounds — the x_kmeans chain)
+    // plus cluster-filed postings, BOTH round-tripped through parquet
+    // (the probe consumes the persisted artifact, not the live plans,
+    // and the postings are partitioned by cluster so probing prunes
+    // unread lists at the scan). The probe is SUB-exhaustive (nProbe =
+    // 3 of 8) and still hash-oracled: probe selection ranks exact-
+    // decimal dots against the round-9 centroid literals, so DuckDB
+    // replays the entire frozen chain — which lists are probed, which
+    // candidates are scored, and the final ranks — bit-for-bit. The
+    // in_exact_topk flag (vs the in-query brute-force top-5) records
+    // the recall trade IN the oracled output.
+    BoardQuery("x_ivf_probe", ((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      val (cents, postings) = Similarity.ivfIndex(
+        e, "vec_id", "embedding", nCentroids = 8, rounds = 2)
+      val tmp = scratchDir("graft-ivfidx")
+      cents.write.mode("overwrite").parquet(s"$tmp/centroids")
+      postings.write.mode("overwrite").partitionBy("cluster")
+        .parquet(s"$tmp/postings")
+      val queries = e.where(col("vec_id") % 125 === 0)
+      val probed = Similarity.ivfProbeIndex(queries, "vec_id", "embedding",
+        s.read.parquet(s"$tmp/centroids"), s.read.parquet(s"$tmp/postings"),
+        k = 5, nProbe = 3, excludeSelf = true)
+      val exact = Similarity.knnJoin(queries, e,
+          "vec_id", "embedding", "vec_id", "embedding",
+          k = 5, excludeSelf = true)
+        .select(col("query_id"), col("neighbor_id"), lit(true).as("in_exact_topk"))
+      probed.join(exact, Seq("query_id", "neighbor_id"), "left")
+        .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"),
+          coalesce(col("in_exact_topk"), lit(false)).as("in_exact_topk"))
+        .orderBy("query_id", "rank")
+    }),
+      // The persisted-IVF probe replayed END-TO-END: the frozen quantizer
+      // is the x_kmeans chain (kmeansCte — smallest-id seeds, 2 exact
+      // Lloyd rounds, round-9 unit centroids), probe selection ranks
+      // decimal-exact (query · centroid) dots with ties to the smaller
+      // cluster, candidates are EXACTLY the nProbe=3 probed lists'
+      // members, and pair scores are decimal-exact round-9 cosines — so
+      // the sub-exhaustive result (including which near-neighbors recall
+      // MISSES) hash-matches. in_exact_topk recomputes the brute-force
+      // top-5 per query; a probe/assignment bug flips rows AND flags.
+      s"""WITH $kmeansCte,
+         |qs AS (
+         | SELECT vec_id AS qid FROM embeddings WHERE vec_id % 125 = 0),
+         |qd AS (
+         | SELECT q.qid, c.c,
+         |  CAST(SUM(CAST(e.x * c.w AS DECIMAL(30,15))) AS DOUBLE) AS dot
+         | FROM qs q JOIN vv ON vv.vec_id = q.qid
+         |  JOIN e ON e.vec_id = q.qid JOIN c2 c ON c.pos = e.pos
+         | GROUP BY 1, 2),
+         |pr AS (
+         | SELECT qid, c FROM (
+         |  SELECT qid, c,
+         |   ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dot DESC, c) AS rk
+         |  FROM qd) WHERE rk <= 3),
+         |cand AS (
+         | SELECT p.qid, a.vec_id
+         | FROM pr p JOIN kassign a ON a.cluster = p.c
+         | WHERE a.vec_id <> p.qid),
+         |pd AS (
+         | SELECT cd.qid, cd.vec_id,
+         |  CAST(SUM(CAST(eq.x * ec.x AS DECIMAL(30,15))) AS DOUBLE) AS dot
+         | FROM cand cd
+         |  JOIN e eq ON eq.vec_id = cd.qid
+         |  JOIN e ec ON ec.vec_id = cd.vec_id AND ec.pos = eq.pos
+         | GROUP BY 1, 2),
+         |ranked AS (
+         | SELECT qid AS query_id, vec_id AS neighbor_id, cos,
+         |  CAST(ROW_NUMBER() OVER (PARTITION BY qid
+         |    ORDER BY cos DESC, vec_id) AS BIGINT) AS rank
+         | FROM (
+         |  SELECT pd.qid, pd.vec_id,
+         |   ROUND(pd.dot / SQRT(nc.n2 * nq.n2), 9) AS cos
+         |  FROM pd JOIN n nq ON nq.vec_id = pd.qid
+         |   JOIN n nc ON nc.vec_id = pd.vec_id)),
+         |bfd AS (
+         | SELECT q.qid, ec.vec_id,
+         |  CAST(SUM(CAST(eq.x * ec.x AS DECIMAL(30,15))) AS DOUBLE) AS dot
+         | FROM qs q JOIN e eq ON eq.vec_id = q.qid
+         |  JOIN e ec ON ec.pos = eq.pos
+         |  JOIN vv ON vv.vec_id = ec.vec_id
+         | WHERE ec.vec_id <> q.qid
+         | GROUP BY 1, 2),
+         |bft AS (
+         | SELECT qid, vec_id FROM (
+         |  SELECT bfd.qid, bfd.vec_id,
+         |   ROW_NUMBER() OVER (PARTITION BY bfd.qid
+         |     ORDER BY ROUND(bfd.dot / SQRT(nc.n2 * nq.n2), 9) DESC,
+         |       bfd.vec_id) AS rk
+         |  FROM bfd JOIN n nq ON nq.vec_id = bfd.qid
+         |   JOIN n nc ON nc.vec_id = bfd.vec_id)
+         | WHERE rk <= 5)
+         |SELECT r.query_id, r.neighbor_id, r.cos, r.rank,
+         | (bft.vec_id IS NOT NULL) AS in_exact_topk
+         |FROM ranked r LEFT JOIN bft
+         | ON bft.qid = r.query_id AND bft.vec_id = r.neighbor_id
+         |WHERE r.rank <= 5
+         |ORDER BY r.query_id, r.rank""".stripMargin),
+
+    // Incremental index maintenance: the quantizer trains on the OLD
+    // snapshot only (vec_id % 3 ≠ 1), the arrival batch files into the
+    // FROZEN centroids with one map pass (ivfIndexAppend), and the new
+    // postings APPEND to the stored cluster-partitioned parquet — the
+    // old index never moves, the batch never trains. The probe then
+    // reads the grown index; the oracle retrains on the old slice but
+    // assigns EVERYTHING, replaying exactly what the engine persisted.
+    BoardQuery("x_ivf_append", ((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      val old = e.where(col("vec_id") % 3 =!= 1)
+      val fresh = e.where(col("vec_id") % 3 === 1)
+      val (cents, post) = Similarity.ivfIndex(old, "vec_id", "embedding",
+        nCentroids = 8, rounds = 2)
+      val tmp = scratchDir("graft-ivfapp")
+      cents.write.parquet(s"$tmp/centroids")
+      post.write.partitionBy("cluster").parquet(s"$tmp/postings")
+      Similarity.ivfIndexAppend(s.read.parquet(s"$tmp/centroids"), fresh,
+          "vec_id", "embedding")
+        .write.mode("append").partitionBy("cluster").parquet(s"$tmp/postings")
+      val queries = e.where(col("vec_id") % 125 === 0)
+      Similarity.ivfProbeIndex(queries, "vec_id", "embedding",
+          s.read.parquet(s"$tmp/centroids"), s.read.parquet(s"$tmp/postings"),
+          k = 5, nProbe = 3, excludeSelf = true)
+        .orderBy("query_id", "rank")
+    }),
+      // The grown index replayed: train-on-old / assign-all (ivfAppendCte),
+      // then the same sub-exhaustive probe chain as x_ivf_probe — any
+      // divergence between the appended parquet state and a from-scratch
+      // frozen-centroid assignment flips rows.
+      s"""WITH $ivfAppendCte,
+         |qs AS (
+         | SELECT vec_id AS qid FROM embeddings WHERE vec_id % 125 = 0),
+         |qd AS (
+         | SELECT q.qid, c.c,
+         |  CAST(SUM(CAST(e.x * c.w AS DECIMAL(30,15))) AS DOUBLE) AS dot
+         | FROM qs q JOIN vv ON vv.vec_id = q.qid
+         |  JOIN e ON e.vec_id = q.qid JOIN c2 c ON c.pos = e.pos
+         | GROUP BY 1, 2),
+         |pr AS (
+         | SELECT qid, c FROM (
+         |  SELECT qid, c,
+         |   ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dot DESC, c) AS rk
+         |  FROM qd) WHERE rk <= 3),
+         |cand AS (
+         | SELECT p.qid, a.vec_id
+         | FROM pr p JOIN kassign a ON a.cluster = p.c
+         | WHERE a.vec_id <> p.qid),
+         |pd AS (
+         | SELECT cd.qid, cd.vec_id,
+         |  CAST(SUM(CAST(eq.x * ec.x AS DECIMAL(30,15))) AS DOUBLE) AS dot
+         | FROM cand cd
+         |  JOIN e eq ON eq.vec_id = cd.qid
+         |  JOIN e ec ON ec.vec_id = cd.vec_id AND ec.pos = eq.pos
+         | GROUP BY 1, 2)
+         |SELECT qid AS query_id, vec_id AS neighbor_id, cos, rank FROM (
+         | SELECT qid, vec_id, cos,
+         |  CAST(ROW_NUMBER() OVER (PARTITION BY qid
+         |    ORDER BY cos DESC, vec_id) AS BIGINT) AS rank
+         | FROM (
+         |  SELECT pd.qid, pd.vec_id,
+         |   ROUND(pd.dot / SQRT(nc.n2 * nq.n2), 9) AS cos
+         |  FROM pd JOIN n nq ON nq.vec_id = pd.qid
+         |   JOIN n nc ON nc.vec_id = pd.vec_id))
+         |WHERE rank <= 5
+         |ORDER BY query_id, rank""".stripMargin),
+
+    // Blocked batch kNN join — knnJoin when the query side does NOT
+    // broadcast (self-kNN-graph shape: queries ⊂ corpus): candidate
+    // generation is the coarse-bucket hash EQUI-join (never a broadcast
+    // nested loop of queries × corpus), candidates reduce through the
+    // bounded top-k′ aggregator, survivors exact-rescore through id
+    // joins. Budget-tested at sf0.01 AND sf0.1 (round-5 discipline):
+    // this corpus is near-orthogonal (top cosines 0.27–0.33) and
+    // IVF-adversarial — sub-exhaustive probing tops out at 94% recall
+    // (nProbe=12/16 → 189/200 exact matches at sf0.1) — so the ORACLED
+    // regime probes every bucket (recall structurally 1, the x_ivf_ann
+    // discipline) and the in-query flag pins it; probe-limited recall is
+    // spec-covered (FunctionsSpec) as the documented trade.
+    BoardQuery("x_knn_blocked", ((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      val queries = e.where(pmod(col("vec_id"), lit(20)) === 0)
+      val blocked = Similarity.knnJoinBlocked(queries, e,
+        "vec_id", "embedding", "vec_id", "embedding",
+        k = 5, nCentroids = 16, nProbe = 16, kmeansIters = 1,
+        margin = 40, saltBuckets = 2, excludeSelf = true)
+      val exact = Similarity.knnJoin(queries, e,
+          "vec_id", "embedding", "vec_id", "embedding",
+          k = 5, excludeSelf = true)
+        .select(col("query_id"), col("neighbor_id"), lit(true).as("in_exact_topk"))
+      blocked.join(exact, Seq("query_id", "neighbor_id"), "left")
+        .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"),
+          coalesce(col("in_exact_topk"), lit(false)).as("in_exact_topk"))
+        .orderBy("query_id", "rank")
+    }),
+      // Blocked kNN join (self-kNN graph, every 20th vector as query, self
+      // excluded): the full quadratic window, plus the pinned recall flag.
+      """WITH z AS (
+        | SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+        |  CAST(unnest(c.embedding) AS DOUBLE) AS x,
+        |  CAST(unnest(q.embedding) AS DOUBLE) AS y
+        | FROM embeddings q JOIN embeddings c
+        |   ON q.vec_id % 20 = 0 AND c.vec_id <> q.vec_id),
+        |d AS (
+        | SELECT query_id, neighbor_id,
+        |  SUM(CAST(x * y AS DECIMAL(30,15))) AS dot,
+        |  SUM(CAST(x * x AS DECIMAL(30,15))) AS nc,
+        |  SUM(CAST(y * y AS DECIMAL(30,15))) AS nq
+        | FROM z GROUP BY 1, 2),
+        |r AS (
+        | SELECT query_id, neighbor_id,
+        |  ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(nc AS DOUBLE) * CAST(nq AS DOUBLE)), 9) AS cos,
+        |  ROW_NUMBER() OVER (PARTITION BY query_id
+        |    ORDER BY ROUND(CAST(dot AS DOUBLE) / SQRT(CAST(nc AS DOUBLE) * CAST(nq AS DOUBLE)), 9) DESC,
+        |      neighbor_id) AS rank
+        | FROM d)
+        |SELECT query_id, neighbor_id, cos, rank, TRUE AS in_exact_topk
+        |FROM r WHERE rank <= 5
+        |ORDER BY query_id, rank""".stripMargin),
+
+    // Mutual-kNN graph over the WHOLE corpus (every row is a query, no
+    // broadcast): edges where each side ranks in the other's top-5.
+    // Exhaustive probing (nProbe = nCentroids) makes the blocked path
+    // exact, so DuckDB reproduces the full graph from the quadratic
+    // rank window — rows+schema+hash, no recall flag needed.
+    BoardQuery("x_knn_graph", ((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      Similarity.mutualKnnEdges(e, "vec_id", "embedding", k = 5,
+          nCentroids = 16, nProbe = 16, kmeansIters = 1,
+          margin = 40, saltBuckets = 2)
+        .orderBy("id_a", "id_b")
+    }),
+      s"""WITH $mutualKnnCte
+        |SELECT id_a, id_b, cos FROM mutual
+        |ORDER BY id_a, id_b""".stripMargin),
+
+    // Connected components surfaced directly: (node, min-id label) over
+    // the near-dup pair graph — the operator underneath every dedup-drop
+    // and the leak-safe split; O(log d) pointer-jumping rounds.
+    BoardQuery("x_components", ((s, dir) => {
+      val docs = t(s, dir, "documents")
+      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 5, 0.5)
+      Dedup.connectedComponents(pairs)
+        .select(col("id"), col("label")).orderBy("id")
+    }),
+      // Nodes = pair participants only (the engine's component domain);
+      // label = min reachable id via the recursive closure.
+      s"""WITH RECURSIVE ${ngramPairsCte(0.5)},
+         |edges AS (
+         | SELECT id_a AS u, id_b AS v FROM jpairs
+         | UNION
+         | SELECT id_b AS u, id_a AS v FROM jpairs),
+         |reach AS (
+         | SELECT u AS node, u AS lab FROM edges
+         | UNION
+         | SELECT e.v AS node, r.lab AS lab
+         | FROM reach r JOIN edges e ON e.u = r.node),
+         |labels AS (SELECT node, MIN(lab) AS label FROM reach GROUP BY node)
+         |SELECT node AS id, label FROM labels ORDER BY id""".stripMargin),
+
+    // Composed IVF→PQ cascade (probe the inverted lists, ADC-rank only
+    // within them, exact-rescore the ADC top-400) in the x_pq_ann
+    // production regime: m=8 × k=256 codebooks, one Lloyd round.
+    // Budget-tested at sf0.1 first: sub-exhaustive probing bottoms out
+    // at 40–60% recall on this near-orthogonal corpus (nProbe=8/16 →
+    // 4/10), so the oracled regime probes all lists — the ADC budget
+    // (proven at sf0.1 in round 5) does the pruning, and the recall
+    // flag pins the whole cascade; probe-limited probing is
+    // spec-covered (FunctionsSpec).
+    BoardQuery("x_ivfpq_ann", ((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      val qv = e.where(col("vec_id") === 0).select(col("embedding"))
+        .collect().head.getSeq[Float](0).toArray
+      val corpus = e.where(col("vec_id") =!= 0)
+      val cascade = Similarity.ivfPqTopK(corpus, "vec_id", "embedding", qv,
+        k = 10, nCentroids = 16, nProbe = 16, kmeansIters = 1,
+        m = 8, codebookK = 256, lloydIters = 1, adcTopN = 400)
+      val q = array(qv.map(v => lit(v)): _*)
+      val bfTop = corpus
+        .select(col("vec_id"), col("embedding"),
+          Similarity.cosine(col("embedding"), q).as("cf"))
+        .orderBy(col("cf").desc, col("vec_id")).limit(50)
+        .select(col("vec_id"),
+          round(Similarity.cosineExact(col("embedding"), q), 9).as("bf_cos"))
+        .orderBy(col("bf_cos").desc, col("vec_id")).limit(10)
+        .select(col("vec_id"), lit(true).as("in_exact_topk"))
+      cascade.join(bfTop, Seq("vec_id"), "left")
+        .select(col("vec_id"), col("cos"),
+          coalesce(col("in_exact_topk"), lit(false)).as("in_exact_topk"))
+        .orderBy(col("cos").desc, col("vec_id"))
+    }),
+      // IVF→PQ cascade with exhaustive probing: exact top-10 + pinned flag
+      // (any probe/ADC recall miss flips rows AND flag red).
+      s"""WITH topk AS ($cosineTopkOracle)
+         |SELECT vec_id, cos, TRUE AS in_exact_topk FROM topk
+         |ORDER BY cos DESC, vec_id""".stripMargin),
+  )
+}

@@ -2,7 +2,9 @@ package graft.tools
 
 /** Dev tool: dump `.explain("formatted")` for named queries to files —
   * the before/after plan evidence an optimization round commits next to
-  * its bench numbers (`plans/r<N>/<query>_{before,after}.txt`).
+  * its bench numbers (`plans/r<N>/<query>_{before,after}.txt`) — and
+  * print each query's one-line plan-shape audit, so a new operator's
+  * plan is inspected, not assumed.
   *
   * Usage: PlanDump <outDir> <suffix> <query>[,query...]
   * (SPARK_GRAFT_SF_DIR picks the scale dir, default sf0.1 so plan
@@ -34,7 +36,23 @@ object PlanDump {
       java.nio.file.Files.write(p,
         plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       println(s"[plandump] $p (${plan.length} chars)")
+      println(summary(q, df.queryExecution.executedPlan.toString))
     }
     spark.stop()
+  }
+
+  /** Exchange and join-strategy counts of an executed plan, with its size
+    * and regex-node count: the x_link_graph round-12 lesson — a collapsed
+    * expensive projection shows up as a plan orders of magnitude bigger
+    * than its peers.
+    */
+  private def summary(q: String, plan: String): String = {
+    def n(p: String) = p.r.findAllIn(plan).length
+    s"$q: exchanges=${n("Exchange")} " +
+      s"broadcastJoins=${n("BroadcastHashJoin")} " +
+      s"sortMergeJoins=${n("SortMergeJoin")} " +
+      s"nestedLoop=${n("BroadcastNestedLoopJoin")} " +
+      s"cartesian=${n("CartesianProduct")} " +
+      s"planChars=${plan.length} regexNodes=${n("regexp_")}"
   }
 }

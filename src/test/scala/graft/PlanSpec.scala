@@ -15,30 +15,26 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
   }
 
-  // A Scala Map LITERAL silently keeps the last entry on a duplicate
-  // key — a new query reusing an existing name shadows the old query
-  // AND can mispair query/oracle (the two maps may resolve the dup in
-  // different positions). The Map itself can't witness this, so parse
-  // the source: every declared key must appear EXACTLY once per map.
-  test("SparkEntry maps declare every query key exactly once") {
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    // count source occurrences of each KNOWN query key: a duplicate
-    // declaration survives into the map (last wins), so counting its
-    // literals exposes the shadowed twin the Map can't show
-    // Pattern.quote the key: a name containing a regex metacharacter
-    // (".", "+") must count literally, not as a pattern, or the gate
-    // itself miscounts
-    val dups = SparkEntry.queries.keySet.toSeq.filter { k =>
-      (java.util.regex.Pattern.quote("\"" + k + "\" ->")).r
-        .findAllMatchIn(src).size != 2
+  // A name declared twice would shadow one query and could pair the
+  // survivor with the other's oracle. The index step is the one place
+  // records meet, so it must refuse the twin by name; a query without an
+  // oracle no longer compiles (BoardQuery's oracle is required).
+  test("board index: a duplicate query name fails loudly, the real board has none") {
+    val q = SparkEntry.board("t1_map")
+    val e = intercept[IllegalArgumentException](SparkEntry.index(
+      Seq(q, SparkEntry.board("a3_count"), q.copy(oracle = "SELECT 1"))))
+    assert(e.getMessage.contains("t1_map") && !e.getMessage.contains("a3_count"),
+      e.getMessage)
+    assert(SparkEntry.index(SparkEntry.records).size == SparkEntry.records.size)
+  }
+
+  // Object vals initialize in source order: an oracle that interpolates
+  // a CTE val declared further down its file splices the word null.
+  test("board oracles splice no uninitialized helper val") {
+    val spliced = SparkEntry.oracleSql.collect {
+      case (n, sql) if "\\bnull\\b".r.findFirstIn(sql).isDefined => n
     }
-    // exactly 2 = one queries entry + one oracleSql entry
-    assert(dups.isEmpty,
-      s"keys not declared exactly twice (query + oracle): ${dups.sorted}")
-    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet,
-      "queries and oracleSql must cover the same names")
+    assert(spliced.isEmpty, s"oracles with a spliced null: ${spliced.toSeq.sorted}")
   }
 
   test("t3_filter: predicate pushdown and column pruning reach the scan") {
@@ -508,7 +504,7 @@ class PlanSpec extends SparkSpec {
   // VERDICT r12 item 1b: the 457 KB-plan / 23.7 s CollapseProject cliff
   // (x_link_graph, round 12) showed up as a plan string an order of
   // magnitude bigger than its peers, stuffed with re-inlined regexp_
-  // nodes. ExplainCheck printed the numbers for a human; this is the
+  // nodes. tools.PlanDump prints the numbers for a human; this is the
   // FAILING gate. Every declared query: no CartesianProduct, plan under
   // a global ceiling; the regex-heavy URL/HTML queries additionally pin
   // tight per-query planChars/regexNodes budgets so a dropped barrier
