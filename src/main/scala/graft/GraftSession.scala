@@ -168,9 +168,7 @@ object GraftSession {
           |  Text:   removeFrequentUnits maxDfRatio, heavyHitters support,
           |          budgetSelect/packOffsets bucket counts
           |  Joins:  spark.graft.rangeJoin.binWidth (range-join rewrite),
-          |          broadcast() hints on probe batches
-          |  Loops:  checkpointInterval on pagerank/ppr/components (lineage
-          |          depth vs write cost — full-suite-measured default 3)"""
+          |          broadcast() hints on probe batches"""
           .stripMargin)
     else if (failFast)
       throw new IllegalStateException(

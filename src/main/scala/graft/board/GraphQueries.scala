@@ -16,18 +16,14 @@ private[graft] object GraphQueries {
     // PageRank authority over the customer->supplier purchase graph
     // (ids disambiguated into one space: cust*2, supp*2+1). 5 damped
     // rounds, decimal-summed contributions — bit-reproducible, so the
-    // unrolled-SQL oracle hash-matches. interval 3, NOT 5: the round-10
-    // full-suite bench recorded 9.99 s at interval 5 vs 6.12 s at 3
-    // (the isolated 6.7-vs-7.0 reading that motivated 5 didn't survive
-    // in-suite; PPR's own measurement, 6.0 vs 10.7 s, predicted this).
-    // Loop-constant decisions trust full-suite numbers only.
+    // unrolled-SQL oracle hash-matches.
     BoardQuery("x_pagerank", ((s, dir) => {
       val e = t(s, dir, "lineitem")
         .join(t(s, dir, "orders"),
           col("l_orderkey") === col("o_orderkey"))
         .select((col("o_custkey") * 2).as("src"),
           (col("l_suppkey") * 2 + 1).as("dst"))
-      graft.functions.Graph.pageRank(e, iterations = 5, checkpointInterval = 3)
+      graft.functions.Graph.pageRank(e, iterations = 5)
         .select(col("id"), round(col("rank"), 9).as("rank"))
         .orderBy("id")
     }),
@@ -219,10 +215,6 @@ private[graft] object GraphQueries {
           col("l_orderkey") === col("o_orderkey"))
         .select((col("o_custkey") * 2).as("src"),
           (col("l_suppkey") * 2 + 1).as("dst"))
-      // interval 3 measured best HERE (10.7 s at interval 5 vs 6.0 s):
-      // unlike x_pagerank, PPR's per-round plan carries the teleport
-      // column through every join, and the 5-round unmaterialized chain
-      // recomputes it per consumer — don't copy the pagerank setting
       graft.functions.Graph.personalizedPageRank(e,
           col("id") % 50 === 0, iterations = 5)
         .select(col("id"), round(col("rank"), 9).as("rank"))

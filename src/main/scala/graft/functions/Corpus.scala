@@ -3730,12 +3730,10 @@ object Corpus {
     def snap(d: DataFrame): DataFrame = Snapshots.snapshot(d)
     val chars = (w: Column) =>
       transform(sequence(lit(1), length(w)), i => w.substr(i, lit(1)))
-    val setup = snap(df
+    var vocab = snap(df
       .select(explode(TextFunctions.tokens(col(textCol))).as("__w"))
       .groupBy(col("__w")).agg(count(lit(1)).as("__f"))
       .select(col("__w"), col("__f"), chars(col("__w")).as("__toks")))
-    var vocab = setup
-    var lastSnap = setup
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
     var r = 1
     var exhausted = false
@@ -3760,15 +3758,11 @@ object Corpus {
         val l = top(0).getString(0)
         val rr = top(0).getString(1)
         merges += ((r, l, rr, top(0).getLong(2)))
-        val s = snap(vocab.withColumn("__toks",
+        vocab = snap(vocab.withColumn("__toks",
           graft.plans.HashExpressions.bpeMergePair(col("__toks"), l, rr)))
-        if (!(lastSnap eq setup)) lastSnap.unpersist(blocking = false)
-        lastSnap = s
-        vocab = s
         r += 1
       }
     }
-    setup.unpersist(blocking = false)
     import spark.implicits._
     merges.toSeq.toDF("merge_rank", "lhs", "rhs", "pair_count")
   }
@@ -3974,7 +3968,6 @@ object Corpus {
       .take(vocabSize).map(_._1).toSet ++ chars
     val fin = cnts.filter { case (p, _) => kept(p) }
     val lnTotal = StrictMath.log(fin.values.sum.toDouble)
-    words.unpersist(blocking = false)
     spark.createDataset(fin.toSeq.sortBy(_._1).map { case (p, c) =>
       (p, c, BigDecimal(StrictMath.log(c.toDouble) - lnTotal)
         .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble)

@@ -196,13 +196,12 @@ object Dedup {
     * resolves in ~20 rounds, not 1M. Output: (id, label), label = min id
     * in the component.
     *
-    * Fault tolerance: with a checkpoint dir set
-    * (`sc.setCheckpointDir`) each round lands on *reliable* storage —
-    * executor loss costs one round, not a recompute storm over the whole
-    * lineage. Without one it falls back to `localCheckpoint` (fine on
-    * local mode; blocks die with an executor on a cluster). The per-round
-    * `changed` count is the action that materializes the eager checkpoint
-    * — it is not an extra pass over the full lineage.
+    * Rounds run through [[RoundLoop]]: on a pair graph past its size
+    * threshold each round lands on a reliable snapshot (executor loss
+    * costs one round, not a recompute storm over the whole lineage);
+    * below it each round is a bounded executor-memory cut that the
+    * per-round `changed` count materializes — not an extra pass over the
+    * full lineage.
     *
     * @param strict throw (instead of logging to stderr) if labels are
     *               still moving after `maxIter` rounds — silent
@@ -210,158 +209,42 @@ object Dedup {
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
                           strict: Boolean = false): DataFrame = {
-    def snap(df: DataFrame): DataFrame = Snapshots.snapshot(df)
-    // pinned loop inputs (the Graph.pageRank discipline): edges hash(dst)
-    // + sorted for the per-round neighbor-min merge-join, labels hash(id)
-    // + sorted — both sides of the frontier join read their snapshots
-    // with zero exchange; AQE is off for the in-loop jobs (static plans,
-    // no per-materialization re-planning) but ON for the setup snapshots,
-    // whose upstream (the caller's pair pipeline) wants its decisions.
-    val edges = snap(
+    // pinned loop inputs ([[RoundLoop]]): edges hash(dst) + sorted for the
+    // per-round neighbor-min merge-join, labels hash(id) + sorted — both
+    // sides of the frontier join read their snapshots with zero exchange
+    val edges = RoundLoop.pin(
       pairs.select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
         .union(pairs.select(col("id_b").cast("long").as("src"), col("id_a").cast("long").as("dst")))
-        .distinct()
-        .repartition(col("dst")).sortWithinPartitions("dst"))
-    var labels = snap(edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .repartition(col("id")).sortWithinPartitions("id"))
-    var prev: DataFrame = null
-    var changed = 1L
-    var iter = 0
-    // size gate (Graph.withLoopConfIf): small graphs keep AQE's broadcast
-    // loop plans; big ones take the pinned static path
-    val big = edges.count() >= Graph.PinnedLoopMinRows
-    Graph.withLoopConfIf(big, pairs.sparkSession) {
-      while (changed > 0 && iter < maxIter) {
-        val neighborMin = edges.join(labels, edges("dst") === labels("id"))
-          .groupBy(col("src")).agg(min(col("label")).as("nlabel"))
-        val prop = labels.join(neighborMin, labels("id") === neighborMin("src"), "left")
-          .select(col("id"), col("label"),
-            least(col("label"), coalesce(col("nlabel"), col("label"))).as("plabel"))
-        // pointer jump: adopt the current label of my label's node (labels
-        // always point at in-component node ids, so the invariant holds)
-        val jumped = prop.as("x").join(prop.as("j"),
-            col("x.plabel") === col("j.id"), "left")
-          .select(col("x.id").as("id"), col("x.label").as("label"),
-            coalesce(col("j.plabel"), col("x.plabel")).as("newlabel"))
-        // big path: reliable round snapshots (losing an executor costs one
-        // round). Small path: the labels table is node-sized and bounded
-        // (the Snapshots.boundedLocal contract, same gate as
-        // Graph.pageRank's small-table rounds) — a LAZY localCheckpoint
-        // whose materializing action IS the convergence count below, so a
-        // round costs ONE job instead of the reliable path's two-job
-        // checkpoint plus the count.
-        val updated =
-          if (big) snap(jumped.repartition(col("id")).sortWithinPartitions("id"))
-          else jumped.localCheckpoint(false)
-        changed = updated.where(col("newlabel") =!= col("label")).count()
-        // free the superseded round's blocks — leaked blocks pile up in
-        // executor storage memory and GC-thrash later queries
-        if (prev != null) prev.unpersist(blocking = false)
-        prev = labels
-        labels = updated.select(col("id"), col("newlabel").as("label"))
-        iter += 1
-      }
+        .distinct(), "dst")
+    val labels0 = RoundLoop.pin(edges.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")), "id")
+    val (labels, changed) = RoundLoop.run(edges, maxIter, (labels0, 1L),
+        until = (s: (DataFrame, Long)) => s._2 == 0L) { case (round, (labels, _)) =>
+      val neighborMin = edges.join(labels, edges("dst") === labels("id"))
+        .groupBy(col("src")).agg(min(col("label")).as("nlabel"))
+      val prop = labels.join(neighborMin, labels("id") === neighborMin("src"), "left")
+        .select(col("id"), col("label"),
+          least(col("label"), coalesce(col("nlabel"), col("label"))).as("plabel"))
+      // pointer jump: adopt the current label of my label's node (labels
+      // always point at in-component node ids, so the invariant holds)
+      val jumped = prop.as("x").join(prop.as("j"),
+          col("x.plabel") === col("j.id"), "left")
+        .select(col("x.id").as("id"), col("x.label").as("label"),
+          coalesce(col("j.plabel"), col("x.plabel")).as("newlabel"))
+      // the bounded cut is LAZY: its materializing action IS the
+      // convergence count, so a small round costs ONE job instead of a
+      // checkpoint job plus the count
+      val updated = round.cut(jumped, "id", eager = false)
+      (updated.select(col("id"), col("newlabel").as("label")),
+        updated.where(col("newlabel") =!= col("label")).count())
     }
     if (changed > 0) {
       val msg = s"connectedComponents: labels still moving after $maxIter rounds " +
         s"($changed changed last round) — components wider than the budget get wrong labels"
-      if (strict) { edges.unpersist(blocking = false); throw new IllegalStateException(msg) }
-      System.err.println(s"[graft] WARN $msg")
-    }
-    // `labels` projects over the final round's (still-persisted) snapshot;
-    // everything else — edges and the penultimate round — is released.
-    edges.unpersist(blocking = false)
-    if (prev != null && !(prev eq labels)) prev.unpersist(blocking = false)
-    labels
-  }
-
-  /** Connected components via alternating large-star / small-star rounds
-    * (the MapReduce-native formulation: Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC'14). Each round is two
-    * edge rewrites:
-    *
-    *  - large-star: every node's strictly-greater neighbors re-attach to
-    *    the minimum of its neighborhood (incl. itself);
-    *  - small-star: every node's smaller-or-equal neighbors re-attach to
-    *    that minimum.
-    *
-    * The edge list contracts toward star graphs rooted at component
-    * minima; rounds are O(log² n) worst-case but typically fewer than
-    * label propagation on chainy graphs, and each round is two
-    * groupBy-join passes over *edges only* (no separate labels table to
-    * re-join) — the shape that wins when edges ≫ nodes. Kept alongside
-    * [[connectedComponents]] (min-label + pointer jumping): same output,
-    * different scale trade; the spec asserts equivalence.
-    *
-    * Output: (id, label) for every node appearing in `pairs`, label = min
-    * node id of the component — identical to [[connectedComponents]].
-    */
-  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 25,
-                              strict: Boolean = false): DataFrame = {
-    def snap(df: DataFrame): DataFrame = Snapshots.snapshot(df)
-    // Every node mentioned in `pairs` must appear in the output — nodes
-    // whose only pair is a self-pair have no proper edge and are re-added
-    // as their own singleton component at the end.
-    val nodes = pairs.select(col("id_a").cast("long").as("id"))
-      .union(pairs.select(col("id_b").cast("long").as("id"))).distinct()
-    // Undirected edge set as canonical (min, max) pairs; self-loops are
-    // dropped here (they carry no connectivity).
-    var edges = snap(
-      pairs.select(col("id_a").cast("long").as("u"), col("id_b").cast("long").as("v"))
-        .union(pairs.select(col("id_b").cast("long").as("u"), col("id_a").cast("long").as("v")))
-        .where(col("u") =!= col("v"))
-        .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-        .distinct())
-    var prev: DataFrame = null
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      // large-star over the symmetric view: attach each node's greater
-      // neighbors to m = min(neighborhood ∪ self)
-      val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-      val mins = sym.groupBy("u")
-        .agg(least(min(col("v")), col("u")).as("m"))
-      val large = sym.join(mins, "u")
-        .where(col("v") > col("u"))
-        .select(least(col("v"), col("m")).as("u"), greatest(col("v"), col("m")).as("v"))
-        .where(col("u") =!= col("v"))
-      // small-star: attach each node's ≤ neighbors (and itself) to m
-      val symL = large.union(large.select(col("v").as("u"), col("u").as("v")))
-      val minsL = symL.groupBy("u")
-        .agg(least(min(col("v")), col("u")).as("m"))
-      val small = symL.join(minsL, "u")
-        .where(col("v") <= col("u"))
-        .select(least(col("v"), col("m")).as("u"), greatest(col("v"), col("m")).as("v"))
-        .union(minsL.select(col("m").as("u"), col("u").as("v")))
-        .where(col("u") =!= col("v"))
-        .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-        .distinct()
-      val next = snap(small)
-      // symmetric-difference size in ONE job: both frames are distinct,
-      // so an edge in exactly one of them groups to count 1
-      changed = next.union(edges).groupBy("u", "v").count()
-        .where(col("count") === 1).count()
-      if (prev != null) prev.unpersist(blocking = false)
-      prev = edges
-      edges = next
-      iter += 1
-    }
-    if (changed > 0) {
-      val msg = s"connectedComponentsStar: edges still moving after $maxIter rounds"
       if (strict) throw new IllegalStateException(msg)
       System.err.println(s"[graft] WARN $msg")
     }
-    // Converged edges form stars (m, v): m is the component min. Emit the
-    // roots themselves, every attached node, and singleton nodes (only
-    // self-paired in the input) as their own component.
-    val starLabels = edges.select(col("v").as("id"), col("u").as("label"))
-      .union(edges.select(col("u").as("id"), col("u").as("label")))
-      .groupBy("id").agg(min(col("label")).as("label"))
-    val out = nodes.join(starLabels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-    if (prev != null) prev.unpersist(blocking = false)
-    out
+    labels
   }
 
   /** Drop near-duplicates: given the corpus and a detected pair list,

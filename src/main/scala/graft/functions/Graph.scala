@@ -7,8 +7,8 @@ import org.apache.spark.sql.types.DecimalType
 /** Iterative graph scoring over edge DataFrames — the authority/quality
   * weighting pass of a curation pipeline (rank sources, weight documents
   * by their source's score). Complements the connectivity algorithms in
-  * [[Dedup]] (label propagation, large/small-star) with a numeric
-  * fixpoint: same edges-only shuffle shape, different convergence math.
+  * [[Dedup.connectedComponents]] with numeric fixpoints: same round
+  * loop ([[RoundLoop]]), different convergence math.
   */
 object Graph {
 
@@ -20,168 +20,80 @@ object Graph {
     * `rank'(v) = (1 - d) + d * Σ_{u→v} rank(u) / outDeg(u)`
     * (the "sum to N" normalization — ranks average 1). Sink nodes (no
     * out-edges) leak their damped mass, the common large-scale
-    * simplification.
+    * simplification. Runs [[personalizedPageRank]]'s loop with teleport
+    * term 1.0 on every node (`(1 - d) * 1.0` is exact in IEEE 754).
     *
     * Scale shape per round: ONE shuffle — the contributions join on
     * `src` then aggregate by `dst` with map-side partials; out-degrees
-    * are computed once and co-shuffled with the rank table. Each round
-    * is checkpointed (reliable when a checkpoint dir is set) so lineage
-    * stays flat over many rounds — same hygiene as
-    * [[Dedup.connectedComponents]].
+    * are computed once and co-shuffled with the rank table. Every
+    * [[RoundLoop.RankCutEvery]]-th round (and the last) is a lineage
+    * cut ([[RoundLoop]]).
     *
     * Determinism: per-node contribution sums accumulate in
     * DECIMAL(30,15) (order-free) and each `rank/outDeg` division is a
     * single double op, so ranks are bit-reproducible across runs,
     * partitionings, and engines.
     */
-  /** `checkpointInterval`: snapshot every N-th round. 1 (default) keeps
-    * each round's plan minimal — right when snapshots are cheap (local,
-    * or small rank tables). Raise it when a reliable checkpoint write
-    * per round dominates (distributed FS, huge node sets); lineage then
-    * stacks up to N rounds deep between materializations.
-    */
-  /** `reliableSnapshotMinRows`: below this node count, per-round
-    * snapshots go to executor memory (`localCheckpoint` — lineage still
-    * truncated every round) instead of the reliable checkpoint dir. A
-    * reliable (filesystem) write per round is exactly right when the rank
-    * table is big — losing an executor then costs one round, not the run
-    * — but on a small table the write itself dominates the round; if an
-    * executor dies mid-run at that size, re-running the job is cheaper
-    * than the durability would have been. The setup snapshot (edges +
-    * initial ranks) stays reliable either way.
-    */
   def pageRank(edges: DataFrame, iterations: Int = 10,
-               damping: Double = 0.85, checkpointInterval: Int = 1,
-               reliableSnapshotMinRows: Long = 4000000L): DataFrame = {
-    require(iterations >= 0 && damping >= 0.0 && damping <= 1.0)
-    require(checkpointInterval > 0)
-    val reliable = edges.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def snap(df: DataFrame): DataFrame = Snapshots.snapshot(df)
+               damping: Double = 0.85): DataFrame =
+    rankLoop(edges, iterations, damping)(_.withColumn("p", lit(1.0)))
 
-    // The loop's join inputs are PINNED: the edge snapshot is hash-
-    // partitioned by src and sorted within partitions, the rank snapshot
-    // by id — a checkpoint preserves both (LogicalRDD keeps the plan's
-    // partitioning/ordering), so every round's contributions merge-join
-    // reads BOTH snapshots with zero exchange and zero edge-side sort.
-    // Without the pin, each round re-shuffled the full edge set; with
-    // AQE on in the loop (see withLoopConf), each materialization also
-    // re-planned the whole in-loop lineage (measured 12.9 s vs 7.9 s at
-    // interval 3, sf0.1 — the re-planning, not the plan, was the cost).
-    // The SETUP snapshots materialize with the caller's AQE setting —
-    // the caller's upstream (often a heavy join/ANN pipeline) wants
-    // AQE's broadcast/skew decisions; only the loop's static, pre-pinned
-    // round jobs run with it off.
-    val e = snap(edges.select(
-        col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .repartition(col("src")).sortWithinPartitions("src"))
+  /** Personalized PageRank: teleport mass restricted to a seed set — the
+    * curation query "which nodes sit close to this TRUSTED set through
+    * the graph" (seed = vetted domains/docs, edges = similarity/links;
+    * rank = proximity-weighted trust). `isSeed` is a predicate over the
+    * node id column `id`. Teleport vector p is uniform over the seeds
+    * present in the graph; r0 = p and each round applies
+    * `r = (1−d)·p + d·Σ in-contribs` — the [[pageRank]] recurrence,
+    * lineage cuts and DECIMAL contribution sums (dangling mass leaks
+    * identically; the oracle unrolls the identical recurrence).
+    */
+  def personalizedPageRank(edges: DataFrame, isSeed: Column,
+                           iterations: Int = 10,
+                           damping: Double = 0.85): DataFrame =
+    rankLoop(edges, iterations, damping) { nodes =>
+      val seedCnt = nodes.where(isSeed).agg(count(lit(1)).as("__ns"))
+      nodes.crossJoin(broadcast(seedCnt))
+        .select(col("id"), col("deg"),
+          when(isSeed, lit(1.0) / col("__ns").cast("double"))
+            .otherwise(lit(0.0)).as("p"))
+    }
+
+  /** The PageRank loop: `teleport` adds the teleport column `p` to the
+    * (id, deg) node table; r0 = p. Both join inputs are pinned (edges
+    * on src, ranks on id), so every round's contributions merge-join
+    * reads both snapshots with zero exchange and zero edge-side sort.
+    */
+  private def rankLoop(edges: DataFrame, iterations: Int, damping: Double)(
+      teleport: DataFrame => DataFrame): DataFrame = {
+    require(iterations >= 0 && damping >= 0.0 && damping <= 1.0)
+    val e = RoundLoop.pin(edges.select(
+      col("src").cast("long").as("src"), col("dst").cast("long").as("dst")), "src")
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // ONE setup materialization: the initial ranks carry (id, deg, rank);
-    // `nodes` is a projection over the same snapshot, not a second
-    // checkpointed copy of near-identical data
-    var ranks = snap(
+    // ONE setup materialization: the initial ranks carry (id, deg, p,
+    // rank); `nodes` is a projection over the same snapshot
+    val setup = RoundLoop.pin(teleport(
       e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()
         .join(outDeg.withColumnRenamed("src", "id"), Seq("id"), "left")
-        .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg"),
-          lit(1.0).as("rank"))
-        .repartition(col("id")).sortWithinPartitions("id"))
-    val nodes = ranks.select(col("id"), col("deg"))
-    // The sizing count (over the just-materialized setup snapshot) only
-    // matters when a reliable dir exists AND rounds will run — without
-    // one, every round localCheckpoints regardless, so don't pay the job.
-    val smallTable = reliable && iterations > 0 &&
-      ranks.count() < reliableSnapshotMinRows
-    // small-table rounds stay in executor memory by deliberate choice
-    // (bounded, node-sized state — the Snapshots.boundedLocal contract);
-    // everything else rides the shared reliable-or-fail-loud path
-    def roundSnap(df: DataFrame): DataFrame =
-      if (smallTable) Snapshots.boundedLocal(df) else Snapshots.snapshot(df)
-    // the snapshot currently backing `ranks`' lineage — only superseded
-    // snapshots are released, never one a live plan still reads through.
-    // The setup snapshot backs `nodes` for EVERY round, so it is excluded
-    // from the release chain and freed only after the loop.
-    val setupSnap: DataFrame = ranks
-    var lastSnap: DataFrame = ranks
-    withLoopConf(edges.sparkSession) {
-      var iter = 0
-      while (iter < iterations) {
-        val contribs = e.join(ranks, e("src") === ranks("id"))
-          .select(col("dst"), (col("rank") / col("deg").cast("double")).as("c"))
-        val sums = contribs.groupBy(col("dst"))
-          .agg(sum(col("c").cast(DecimalType(30, 15))).cast("double").as("in_sum"))
-        // ranks-sized merge join: nodes rides its pinned snapshot, sums is
-        // already hash(dst)-partitioned by its aggregation — the round's
-        // ONE data-sized exchange is the contribution aggregation itself.
-        // `next` keeps the id partitioning/ordering for the next round.
-        val next = nodes.join(sums, nodes("id") === sums("dst"), "left")
-          .select(col("id"), col("deg"),
-            (lit(1.0 - damping) +
-              lit(damping) * coalesce(col("in_sum"), lit(0.0))).as("rank"))
-        // materializing every round costs a job per iteration; snapshotting
-        // every checkpointInterval-th round (and the last) bounds lineage
-        // depth at a fraction of that
-        ranks =
-          if ((iter + 1) % checkpointInterval == 0 || iter == iterations - 1) {
-            val s = roundSnap(next)
-            if (!(lastSnap eq setupSnap)) lastSnap.unpersist(blocking = false)
-            lastSnap = s
-            s
-          } else next
-        iter += 1
-      }
-    }
-    e.unpersist(blocking = false)
-    setupSnap.unpersist(blocking = false)
-    // RETENTION (the PPR convention): the returned frame is backed by
-    // the final round's snapshot, which stays live — releasing it here
-    // would recompute the whole loop on first use, and a defensive
-    // copy-out materialization costs one extra job per call. Long-lived
-    // sessions invoking this repeatedly accumulate one cached snapshot
-    // per call until GC (localCheckpoint RDDs are GC-collected once the
-    // returned frame is unreachable; reliable checkpoint files live
-    // until the checkpoint dir is cleaned).
-    ranks.select(col("id"), col("rank"))
+        .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg")))
+      .withColumn("rank", col("p")), "id")
+    val nodes = setup.select(col("id"), col("deg"), col("p"))
+    RoundLoop.run(setup, iterations, setup, staticPlans = true,
+        cutEvery = RoundLoop.RankCutEvery) { (round, ranks) =>
+      val contribs = e.join(ranks, e("src") === ranks("id"))
+        .select(col("dst"), (col("rank") / col("deg").cast("double")).as("c"))
+      val sums = contribs.groupBy(col("dst"))
+        .agg(sum(col("c").cast(DecimalType(30, 15))).cast("double").as("in_sum"))
+      // ranks-sized merge join: nodes rides its pinned snapshot, sums is
+      // already hash(dst)-partitioned by its aggregation — the round's
+      // ONE data-sized exchange is the contribution aggregation itself.
+      // The result keeps the id partitioning/ordering for the next round.
+      round.cut(nodes.join(sums, nodes("id") === sums("dst"), "left")
+        .select(col("id"), col("deg"), col("p"),
+          (lit(1.0 - damping) * col("p") +
+            lit(damping) * coalesce(col("in_sum"), lit(0.0))).as("rank")))
+    }.select(col("id"), col("rank"))
   }
-
-  /** Run the in-loop jobs of an iterative algorithm with AQE off,
-    * restoring the caller's setting afterwards. Inside a snapshot-per-
-    * round loop AQE is pure tax: every materialization re-plans the
-    * lineage accumulated since the last snapshot (re-optimizing the same
-    * chained join+agg rounds over and over), and its runtime re-planning
-    * can't improve plans whose join inputs are already pinned to
-    * checkpointed, pre-partitioned, pre-sorted snapshots. The static
-    * planner compiles each round once, the pinned partitioning does the
-    * rest. Conf scoping is session-global for the duration of the loop —
-    * the engine's entry points run queries sequentially, and every exit
-    * path restores the previous value.
-    */
-  private[functions] def withLoopConf[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try body finally spark.conf.set(key, prev)
-  }
-
-  /** Size-gated [[withLoopConf]]: static pinned plans win only when the
-    * loop's tables are beyond broadcast scale (the per-round merge joins
-    * then read pre-partitioned snapshots with zero exchange). Below that,
-    * AQE's runtime small-side broadcasts ARE the best plan — a tiny kept-
-    * list/label table broadcast into the edge scan beats any amount of
-    * partition pinning (measured at sf0.1: gating kCore's 4-round peel
-    * this way is ~2.7× faster than forcing the pinned static path on its
-    * few-thousand-row loop tables). Callers gate on a materialized
-    * snapshot's count — one metadata-cheap job against an already-
-    * persisted table.
-    */
-  private[functions] def withLoopConfIf[T](big: Boolean,
-      spark: org.apache.spark.sql.SparkSession)(body: => T): T =
-    if (big) withLoopConf(spark)(body) else body
-
-  /** Loop tables at or above this row count take the pinned static-plan
-    * path; below it, AQE's broadcast loop plans win (see
-    * [[withLoopConfIf]]). ~4M longs ≈ the order where a loop table stops
-    * being comfortably broadcastable.
-    */
-  private[functions] val PinnedLoopMinRows: Long = 4000000L
 
   /** HITS hubs and authorities (Kleinberg 1999) over a directed edge
     * list — the OTHER classic link-analysis fixpoint next to
@@ -204,29 +116,27 @@ object Graph {
     * hash(dst)+sorted for the hub half-round — so neither half-round
     * ever re-shuffles edges; the data-sized exchange per half-round is
     * the contribution aggregation; normalizers are 1-row broadcasts;
-    * AQE is scoped off for the loop jobs ([[withLoopConf]]).
+    * AQE is scoped off for the loop jobs ([[RoundLoop.aqeOff]]).
     *
     * @return (id, hub, authority) for every node, round-9 doubles;
     *         an empty-normalizer round (edgeless graph) pins scores 0
     */
   def hits(edges: DataFrame, rounds: Int = 3): DataFrame = {
     require(rounds >= 1, s"rounds must be positive: $rounds")
-    def snap(df: DataFrame): DataFrame = snapFor(edges)(df)
     // the second layout derives from the FIRST snapshot — the caller's
     // upstream (often a join pipeline) materializes once, not per layout
-    val eSrc = snap(edges.select(
-        col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .repartition(col("src")).sortWithinPartitions("src"))
-    val eDst = snap(eSrc.repartition(col("dst")).sortWithinPartitions("dst"))
+    val eSrc = RoundLoop.pin(edges.select(
+      col("src").cast("long").as("src"), col("dst").cast("long").as("dst")), "src")
+    val eDst = RoundLoop.pin(eSrc, "dst")
     // needed only for the FINAL zero-fill: in-loop score tables stay
     // SPARSE (nodes with no in-/out-edges score 0, and zeros change
     // neither the Σx² normalizer nor any contribution sum — so the
     // per-half-round all-nodes left join + re-pin the earlier shape
     // paid bought nothing; each half-round's aggregation already
     // leaves its output hash-partitioned on the next join's key)
-    val nodes = snap(
+    val nodes = RoundLoop.pin(
       eSrc.select(col("src").as("id")).union(eSrc.select(col("dst").as("id")))
-        .distinct().repartition(col("id")).sortWithinPartitions("id"))
+        .distinct(), "id")
     val dec = DecimalType(30, 15)
     // the raw-score table is CACHED (lazy persist) before the
     // normalizer reads it: the 1-row Σx² aggregate and the normalized
@@ -255,7 +165,7 @@ object Graph {
     var hubs: DataFrame =
       eSrc.select(col("src").as("id")).distinct().withColumn("h", lit(1.0))
     var auth: DataFrame = null
-    withLoopConf(edges.sparkSession) {
+    RoundLoop.aqeOff(edges.sparkSession) {
       for (_ <- 1 to rounds) {
         val aRaw = cache(eSrc.join(hubs, eSrc("src") === hubs("id"))
           .groupBy(eSrc("dst"))
@@ -272,117 +182,12 @@ object Graph {
     // the ONE eager job of the whole fixpoint: materializes every
     // half-round cache inline, zero-fills the nodes the sparse loop
     // never scored, then cuts lineage for the caller
-    val out = snap(nodes
+    val out = Snapshots.snapshot(nodes
       .join(hubs, Seq("id"), "left").join(auth, Seq("id"), "left")
       .select(col("id"), coalesce(col("h"), lit(0.0)).as("hub"),
         coalesce(col("a"), lit(0.0)).as("authority")))
-    eSrc.unpersist(blocking = false)
-    eDst.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
     live.foreach(_.unpersist(blocking = false))
     out
-  }
-
-  /** Semi-supervised label propagation over an undirected graph — the
-    * iterative generalization of kNN classification: a handful of seed
-    * labels spread hop by hop along similarity edges ([[Similarity
-    * .mutualKnnEdges]] is the natural input) until `rounds` hops out.
-    * Each round, every still-unlabeled node adjacent to ≥ 1 labeled
-    * node takes the majority label of its labeled neighbors — count-
-    * based, ties to the smallest label, so every decision is float-free
-    * and engine-reproducible. Labels are CLAMPED once assigned (seeds
-    * and earlier rounds never flip), which makes the unrolled result
-    * well-defined and idempotent past convergence.
-    *
-    * Scale shape per round (the pageRank discipline): ONE data-sized
-    * shuffle — the frontier join keys on edge src, votes aggregate
-    * (node, label) with map-side partials, and the already-labeled
-    * anti-join keys on node id. Each round snapshots (reliable when a
-    * checkpoint dir is set) so lineage stays flat.
-    *
-    * @param edges undirected pair list — each edge once, either
-    *              orientation (both directions are derived)
-    * @return (id, label, since) — `since` = round the label arrived
-    *         (0 for seeds); nodes the labels never reached are absent
-    *         (left-join from your node table to keep them as nulls)
-    */
-  /** Personalized PageRank: teleport mass restricted to a seed set — the
-    * curation query "which nodes sit close to this TRUSTED set through
-    * the graph" (seed = vetted domains/docs, edges = similarity/links;
-    * rank = proximity-weighted trust). `isSeed` is a predicate over the
-    * node id column `id`. Teleport vector p is uniform over the seeds
-    * present in the graph; r0 = p and each round applies
-    * `r = (1−d)·p + d·Σ in-contribs` — the same recurrence, per-round
-    * snapshot discipline (every `checkpointInterval`-th round), and
-    * DECIMAL contribution sums as [[pageRank]] (dangling mass leaks
-    * identically; the oracle unrolls the identical recurrence).
-    */
-  def personalizedPageRank(edges: DataFrame, isSeed: Column,
-                           iterations: Int = 10,
-                           damping: Double = 0.85,
-                           checkpointInterval: Int = 3,
-                           reliableSnapshotMinRows: Long = 4000000L): DataFrame = {
-    require(checkpointInterval > 0)
-    require(iterations >= 0 && damping >= 0.0 && damping <= 1.0)
-    def snap(df: DataFrame): DataFrame = snapFor(edges)(df)
-    // pinned loop inputs + static in-loop plans — the [[pageRank]]
-    // discipline (setup snapshots materialize with the caller's AQE)
-    val e = snap(edges.select(
-        col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .repartition(col("src")).sortWithinPartitions("src"))
-    val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val nodesBase = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .join(outDeg.withColumnRenamed("src", "id"), Seq("id"), "left")
-      .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg"))
-    val seedCnt = nodesBase.where(isSeed).agg(count(lit(1)).as("__ns"))
-    val setup = snap(nodesBase.crossJoin(broadcast(seedCnt))
-      .select(col("id"), col("deg"),
-        when(isSeed, lit(1.0) / col("__ns").cast("double"))
-          .otherwise(lit(0.0)).as("p"))
-      .withColumn("rank", col("p"))
-      .repartition(col("id")).sortWithinPartitions("id"))
-    val nodes = setup.select(col("id"), col("deg"), col("p"))
-    var ranks = setup
-    var lastSnap = setup
-    // the pageRank smallTable discipline: below the reliable-min-rows
-    // cutover, per-round snapshots are bounded node-sized state and live
-    // in executor memory (one job per cut) instead of paying a reliable
-    // filesystem checkpoint per materialized round
-    val reliable = edges.sparkSession.sparkContext.getCheckpointDir.isDefined
-    val smallTable = reliable && iterations > 0 &&
-      ranks.count() < reliableSnapshotMinRows
-    def roundSnap(df: DataFrame): DataFrame =
-      if (smallTable) Snapshots.boundedLocal(df) else Snapshots.snapshot(df)
-    withLoopConf(edges.sparkSession) {
-      var iter = 0
-      while (iter < iterations) {
-        val contribs = e.join(ranks, e("src") === ranks("id"))
-          .select(col("dst"), (col("rank") / col("deg").cast("double")).as("c"))
-        val sums = contribs.groupBy(col("dst"))
-          .agg(sum(col("c").cast(DecimalType(30, 15))).cast("double").as("in_sum"))
-        val next = nodes.join(sums, nodes("id") === sums("dst"), "left")
-          .select(col("id"), col("deg"), col("p"),
-            (lit(1.0 - damping) * col("p") +
-              lit(damping) * coalesce(col("in_sum"), lit(0.0))).as("rank"))
-        ranks =
-          if ((iter + 1) % checkpointInterval == 0 || iter == iterations - 1) {
-            val s = roundSnap(next)
-            if (!(lastSnap eq setup)) lastSnap.unpersist(blocking = false)
-            lastSnap = s
-            s
-          } else next
-        iter += 1
-      }
-    }
-    e.unpersist(blocking = false)
-    // the last round always snapshotted `ranks`, so its lineage is
-    // already cut — a further output snapshot would only buy another
-    // job. `lastSnap` stays live (it backs the returned frame); `setup`
-    // is safe to release because the final snapshot no longer reads it.
-    if (iterations > 0 && !(lastSnap eq setup))
-      setup.unpersist(blocking = false)
-    ranks.select(col("id"), col("rank"))
   }
 
   /** k-core membership after `rounds` peeling passes: repeatedly remove
@@ -394,8 +199,8 @@ object Graph {
     * an unconverged run is visible in the result, not silently wrong.
     *
     * Shuffle profile per round: one degree aggregation + two semi-joins
-    * keyed on 8-byte ids, each round snapshotted (bounded `rounds`, flat
-    * lineage — the [[pageRank]] discipline).
+    * keyed on 8-byte ids, each round a lineage cut (bounded `rounds`,
+    * flat lineage — the [[RoundLoop]] discipline).
     *
     * @return (id, in_core, converged) over every node of the input graph
     */
@@ -403,48 +208,27 @@ object Graph {
             k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be positive: $k")
     require(rounds >= 1, s"rounds must be positive: $rounds")
-    def snap(df: DataFrame): DataFrame = snapFor(edges)(df)
-    // setup snapshots materialize with the caller's AQE (the upstream —
-    // often an ANN pair pipeline — wants its broadcast/skew decisions)
-    val e0 = snap(edges.select(
+    val e0 = RoundLoop.pin(edges.select(
         least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("u"),
         greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("v"))
-      .where(col("u") =!= col("v")).distinct()
-      .repartition(col("u")).sortWithinPartitions("u"))
-    val allNodes = snap(
+      .where(col("u") =!= col("v")).distinct(), "u")
+    val allNodes = Snapshots.snapshot(
       e0.select(col("u").as("id")).union(e0.select(col("v").as("id"))).distinct())
-    var e = e0
-    var kept: DataFrame = allNodes
-    var keptPrev: DataFrame = allNodes
-    // size gate: a small peel loop wants AQE's broadcast semi-joins (the
-    // kept list broadcasts into the edge scan — e never shuffles at all);
-    // a big one wants static plans over re-pinned snapshots
-    val big = e0.count() >= PinnedLoopMinRows
-    // small-loop rounds keep their bounded node-/edge-sized state in
-    // executor memory (one job per cut, the pageRank smallTable
-    // discipline); big loops stay on reliable storage (one lost
-    // executor costs one round, not the run)
-    def roundSnap(df: DataFrame): DataFrame =
-      if (big) snap(df) else Snapshots.boundedLocal(df)
-    withLoopConfIf(big, edges.sparkSession) {
-      for (_ <- 1 to rounds) {
+    // small loop: AQE broadcasts the kept list into the edge scan (e
+    // never shuffles at all); pinned loop: static plans, and the peeled
+    // edge set re-pins on u each round, so both semi-joins start from a
+    // known partitioning (the kept set arrives hash(id)-partitioned from
+    // its aggregation) instead of cascading unknowns
+    val (_, kept, keptPrev) = RoundLoop.run(e0, rounds, (e0, allNodes, allNodes)) {
+      case (round, (e, kept, _)) =>
         val deg = e.select(col("u").as("id")).union(e.select(col("v").as("id")))
           .groupBy("id").agg(count(lit(1)).as("__dg"))
-        val keptNext = roundSnap(deg.where(col("__dg") >= k).select(col("id")))
-        // (big path) re-pin the peeled edge set on u each round: both
-        // semi-joins then start from a known partitioning (the kept set
-        // arrives hash(id)-partitioned from its aggregation) instead of
-        // cascading unknowns
+        val keptNext = round.cut(deg.where(col("__dg") >= k).select(col("id")))
         val peeled = e
           .join(keptNext.withColumnRenamed("id", "u"), Seq("u"), "left_semi")
           .join(keptNext.withColumnRenamed("id", "v"), Seq("v"), "left_semi")
           .select(col("u"), col("v"))
-        e = roundSnap(
-          if (big) peeled.repartition(col("u")).sortWithinPartitions("u")
-          else peeled)
-        keptPrev = kept
-        kept = keptNext
-      }
+        (round.cut(peeled, "u"), keptNext, kept)
     }
     // kept ⊆ keptPrev (peeling is monotone), so count equality ⇔ set
     // equality — the convergence flag costs two 1-row aggregates
@@ -477,27 +261,20 @@ object Graph {
     *
     * @return (id, triangles) for every node with ≥ 1 edge
     */
-  def triangleCount(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val (e, out) = triangleImpl(edges, srcCol, dstCol)
-    val result = snapFor(edges)(out.select(col("id"), col("triangles")))
-    e.unpersist(blocking = false)
-    result
-  }
-
-  private def snapFor(df: DataFrame)(target: DataFrame): DataFrame =
-    Snapshots.snapshot(target)
+  def triangleCount(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    Snapshots.snapshot(
+      triangleImpl(edges, srcCol, dstCol).select(col("id"), col("triangles")))
 
   /** Shared triangle pipeline over a SNAPPED canonical edge set — the
     * edge table is consumed four times (degree, orientation, wedge
     * self-join, closure), and without the snapshot each replay would
     * recompute the caller's entire upstream (e.g. the exhaustive-probe
     * mutual-kNN graph: measured 6.1 s → 2.9 s at sf0.1). Returns the
-    * live snapshot (caller unpersists after materializing its result)
-    * and the per-node (id, deg, triangles) plan.
+    * per-node (id, deg, triangles) plan.
     */
   private def triangleImpl(edges: DataFrame, srcCol: String,
-                           dstCol: String): (DataFrame, DataFrame) = {
-    val e = snapFor(edges)(
+                           dstCol: String): DataFrame = {
+    val e = Snapshots.snapshot(
       edges.select(
           least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("u"),
           greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("v"))
@@ -521,10 +298,9 @@ object Graph {
       .union(tri.select(col("u").as("id")))
       .union(tri.select(col("v").as("id")))
       .groupBy("id").agg(count(lit(1)).as("__t"))
-    val out = deg.join(members, Seq("id"), "left")
+    deg.join(members, Seq("id"), "left")
       .select(col("id"), col("deg"),
         coalesce(col("__t"), lit(0L)).as("triangles"))
-    (e, out)
   }
 
   /** Local clustering coefficient per node: `2·T / (deg·(deg−1))` over
@@ -537,18 +313,14 @@ object Graph {
     * @return (id, deg, triangles, coef)
     */
   def clusteringCoefficient(edges: DataFrame, srcCol: String,
-                            dstCol: String): DataFrame = {
-    val (e, out) = triangleImpl(edges, srcCol, dstCol)
-    val result = snapFor(edges)(
-      out.select(col("id"), col("deg"), col("triangles"),
+                            dstCol: String): DataFrame =
+    Snapshots.snapshot(triangleImpl(edges, srcCol, dstCol)
+      .select(col("id"), col("deg"), col("triangles"),
         when(col("deg") >= 2,
           round(lit(2.0) * col("triangles").cast("double") /
             (col("deg").cast("double") * (col("deg").cast("double") - lit(1.0))),
             9))
           .otherwise(lit(null).cast("double")).as("coef")))
-    e.unpersist(blocking = false)
-    result
-  }
 
   /** Degree assortativity (Newman, PRL 89 2002): the Pearson
     * correlation of endpoint degrees over every ORDERED edge
@@ -588,7 +360,7 @@ object Graph {
     // it is consumed four times below, and without the lineage cut the
     // caller's whole upstream (e.g. the mutual-kNN chain) would inline
     // once per consumer — recompute x4 AND a plan-size blowup
-    val e = snapFor(edges)(edges.select(
+    val e = Snapshots.snapshot(edges.select(
         least(col(srcCol), col(dstCol)).as("u"),
         greatest(col(srcCol), col(dstCol)).as("v"))
       .where(col("u") =!= col("v")).distinct())
@@ -652,7 +424,7 @@ object Graph {
     val lab = labels.select(col(idCol).as("__id"), col(labelCol).as("__l"))
     // snapshot the labeled canonical edge table — consumed three times
     // (degrees, intra-cluster count, m); see degreeAssortativity
-    val e = snapFor(edges)(edges
+    val e = Snapshots.snapshot(edges
       .select(least(col(srcCol), col(dstCol)).as("u"),
         greatest(col(srcCol), col(dstCol)).as("v"))
       .where(col("u") =!= col("v")).distinct()
@@ -703,7 +475,7 @@ object Graph {
     * weight; weights may be any integers (a bounded-walk minimum is
     * well-defined even with negative edges), sources relax from dist 0.
     *
-    * Scale shape (the [[pageRank]] discipline): the deduped edge table
+    * Scale shape (the [[RoundLoop]] discipline): the deduped edge table
     * snapshots once, pinned hash(src)+sorted, so every round's frontier
     * join merge-joins with zero edge-side exchange; the round's ONE
     * data-sized exchange is the min-aggregation of relaxation
@@ -712,11 +484,10 @@ object Graph {
     * whose distance IMPROVED last round — not the whole graph — and the
     * node-sized merge is a full-outer join of the pinned dist snapshot
     * against the aggregation's own hash(dst) partitioning (no extra
-    * exchange). Each round snapshots (id, dist, improved) once; dist
-    * and delta are projections of that single snapshot. AQE is scoped
-    * off only when the edge set is beyond broadcast scale
-    * ([[withLoopConfIf]]): a small frontier wants AQE's broadcast
-    * joins, a big one wants the static pinned plans.
+    * exchange). Each round cuts (id, dist, improved) once; dist and
+    * delta are projections of that single cut. AQE is scoped off only
+    * when the edge set is beyond broadcast scale: a small frontier
+    * wants AQE's broadcast joins, a big one the static pinned plans.
     *
     * @param isSource predicate over the node id column `id` selecting
     *                 the source set (evaluated against the node table
@@ -729,61 +500,35 @@ object Graph {
                        srcCol: String = "src", dstCol: String = "dst",
                        wCol: String = "w"): DataFrame = {
     require(rounds >= 1, s"rounds must be positive: $rounds")
-    def snap(df: DataFrame): DataFrame = snapFor(edges)(df)
-    // setup snapshots materialize with the caller's AQE (upstream often
-    // wants its broadcast/skew decisions); cheapest parallel edge wins
-    val e = snap(edges.select(
+    // cheapest parallel edge wins
+    val e = RoundLoop.pin(edges.select(
         col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"),
         col(wCol).cast("long").as("w"))
-      .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
-      .repartition(col("src")).sortWithinPartitions("src"))
+      .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")), "src")
     // isSource filters BEFORE the distinct (Catalyst pushes it into both
     // union branches), so the dedup aggregation runs over the source
     // sliver, not every endpoint of every edge
-    val setup = snap(
+    val setup = RoundLoop.pin(
       e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
         .where(isSource).distinct()
-        .select(col("id"), lit(0L).as("dist"), lit(true).as("improved"))
-        .repartition(col("id")).sortWithinPartitions("id"))
-    var state = setup // (id, dist, improved-last-round)
-    var lastSnap = setup
-    val big = e.count() >= PinnedLoopMinRows
-    // small-loop rounds: bounded node-sized state in executor memory,
-    // one job per cut (the pageRank smallTable discipline); big loops
-    // keep reliable round snapshots
-    def roundSnap(df: DataFrame): DataFrame =
-      if (big) snap(df) else Snapshots.boundedLocal(df)
-    withLoopConfIf(big, edges.sparkSession) {
-      var r = 1
-      while (r <= rounds) {
-        val delta = state.where(col("improved")).select(col("id"), col("dist"))
-        val cand = e.join(delta, e("src") === delta("id"))
-          .select(col("dst"), (col("dist") + col("w")).as("nd"))
-          .groupBy(col("dst")).agg(min(col("nd")).as("nd"))
-        val dist = state.select(col("id"), col("dist"))
-        // least() skips nulls: an unreached node takes nd, an unrelaxed
-        // one keeps dist; `improved` = strictly better or newly reached
-        val merged = dist.join(cand, dist("id") === cand("dst"), "full_outer")
-          .select(coalesce(dist("id"), cand("dst")).as("id"),
-            least(col("dist"), col("nd")).as("__d"),
-            (col("dist").isNull ||
-              (col("nd").isNotNull && col("nd") < col("dist"))).as("improved"))
-          .withColumnRenamed("__d", "dist")
-          .select(col("id"), col("dist"), col("improved"))
-        val s = roundSnap(
-          if (big) merged.repartition(col("id")).sortWithinPartitions("id")
-          else merged)
-        if (!(lastSnap eq setup)) lastSnap.unpersist(blocking = false)
-        lastSnap = s
-        state = s
-        r += 1
-      }
+        .select(col("id"), lit(0L).as("dist"), lit(true).as("improved")), "id")
+    // state: (id, dist, improved-last-round)
+    val state = RoundLoop.run(e, rounds, setup) { (round, state) =>
+      val delta = state.where(col("improved")).select(col("id"), col("dist"))
+      val cand = e.join(delta, e("src") === delta("id"))
+        .select(col("dst"), (col("dist") + col("w")).as("nd"))
+        .groupBy(col("dst")).agg(min(col("nd")).as("nd"))
+      val dist = state.select(col("id"), col("dist"))
+      // least() skips nulls: an unreached node takes nd, an unrelaxed
+      // one keeps dist; `improved` = strictly better or newly reached
+      round.cut(dist.join(cand, dist("id") === cand("dst"), "full_outer")
+        .select(coalesce(dist("id"), cand("dst")).as("id"),
+          least(col("dist"), col("nd")).as("__d"),
+          (col("dist").isNull ||
+            (col("nd").isNotNull && col("nd") < col("dist"))).as("improved"))
+        .withColumnRenamed("__d", "dist")
+        .select(col("id"), col("dist"), col("improved")), "id")
     }
-    e.unpersist(blocking = false)
-    setup.unpersist(blocking = false)
-    // RETENTION: the returned frame rides the final snapshot (`state`),
-    // which stays live — see pageRank's note; one cached snapshot per
-    // call persists until the result is unreachable.
     // converged ⇔ the final round improved nothing — two 1-row aggregates
     val flag = state.agg(
         sum(when(col("improved"), lit(1L)).otherwise(lit(0L))).as("__imp"))
@@ -792,63 +537,58 @@ object Graph {
       .select(col("id"), col("dist"), col("converged"))
   }
 
+  /** Semi-supervised label propagation over an undirected graph — the
+    * iterative generalization of kNN classification: a handful of seed
+    * labels spread hop by hop along similarity edges ([[Similarity
+    * .mutualKnnEdges]] is the natural input) until `rounds` hops out.
+    * Each round, every still-unlabeled node adjacent to ≥ 1 labeled
+    * node takes the majority label of its labeled neighbors — count-
+    * based, ties to the smallest label, so every decision is float-free
+    * and engine-reproducible. Labels are CLAMPED once assigned (seeds
+    * and earlier rounds never flip), which makes the unrolled result
+    * well-defined and idempotent past convergence.
+    *
+    * Scale shape per round (the [[RoundLoop]] discipline): ONE data-
+    * sized shuffle — the frontier join keys on edge src, votes aggregate
+    * (node, label) with map-side partials, and the already-labeled
+    * anti-join keys on node id. Each round is a lineage cut.
+    *
+    * @param edges undirected pair list — each edge once, either
+    *              orientation (both directions are derived)
+    * @return (id, label, since) — `since` = round the label arrived
+    *         (0 for seeds); nodes the labels never reached are absent
+    *         (left-join from your node table to keep them as nulls)
+    */
   def propagateLabels(edges: DataFrame, srcCol: String, dstCol: String,
                       seeds: DataFrame, idCol: String, labelCol: String,
                       rounds: Int): DataFrame = {
     require(rounds >= 0, s"negative rounds: $rounds")
-    def snap(df: DataFrame): DataFrame = Snapshots.snapshot(df)
-    // pinned loop inputs (the [[pageRank]] discipline): the undirected
-    // edge snapshot rides hash(src)+sorted, the state snapshot hash(id)+
-    // sorted — the frontier merge-join reads both with zero exchange;
-    // per round the state re-pins with one node-sized exchange (the
-    // union with the newly-labeled rows discards partitioning). Setup
-    // snapshots materialize with the caller's AQE; only the loop's
-    // static, pre-pinned round jobs run with it off.
-    val und = snap(
+    // pinned loop inputs: the undirected edge snapshot rides
+    // hash(src)+sorted, the state snapshot hash(id)+sorted — the frontier
+    // merge-join reads both with zero exchange; on the pinned side the
+    // state re-pins each round with one node-sized exchange (the union
+    // with the newly-labeled rows discards partitioning)
+    val und = RoundLoop.pin(
       edges.select(col(srcCol).cast("long").as("src"),
           col(dstCol).cast("long").as("dst"))
         .union(edges.select(col(dstCol).cast("long").as("src"),
-          col(srcCol).cast("long").as("dst")))
-        .repartition(col("src")).sortWithinPartitions("src"))
-    val setup = snap(seeds.select(col(idCol).cast("long").as("id"),
-        col(labelCol).as("label"), lit(0).as("since"))
-      .repartition(col("id")).sortWithinPartitions("id"))
-    var state = setup
-    var lastSnap = setup
-    // size gate (see withLoopConfIf): a small graph's frontier join wants
-    // AQE's broadcasts; a big one wants static plans over pinned snapshots
-    val big = und.count() >= PinnedLoopMinRows
-    // small-loop rounds: bounded node-sized state in executor memory,
-    // one job per cut (the pageRank smallTable discipline)
-    def roundSnap(df: DataFrame): DataFrame =
-      if (big) snap(df) else Snapshots.boundedLocal(df)
-    withLoopConfIf(big, edges.sparkSession) {
-      var r = 1
-      while (r <= rounds) {
-        val votes = und.join(state, und("src") === state("id"))
-          .select(col("dst"), col("label"))
-          .join(state.select(col("id").as("dst")), Seq("dst"), "left_anti")
-          .groupBy(col("dst"), col("label"))
-          .agg(count(lit(1)).as("__nv"))
-        val pick = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("dst"))
-          .orderBy(col("__nv").desc, col("label").asc)
-        val newly = votes
-          .withColumn("__rk", row_number().over(pick))
-          .where(col("__rk") === 1)
-          .select(col("dst").as("id"), col("label"), lit(r).as("since"))
-        val grown = state.union(newly)
-        val s = roundSnap(
-          if (big) grown.repartition(col("id")).sortWithinPartitions("id")
-          else grown)
-        if (!(lastSnap eq setup)) lastSnap.unpersist(blocking = false)
-        lastSnap = s
-        state = s
-        r += 1
-      }
+          col(srcCol).cast("long").as("dst"))), "src")
+    val setup = RoundLoop.pin(seeds.select(col(idCol).cast("long").as("id"),
+      col(labelCol).as("label"), lit(0).as("since")), "id")
+    RoundLoop.run(und, rounds, setup) { (round, state) =>
+      val votes = und.join(state, und("src") === state("id"))
+        .select(col("dst"), col("label"))
+        .join(state.select(col("id").as("dst")), Seq("dst"), "left_anti")
+        .groupBy(col("dst"), col("label"))
+        .agg(count(lit(1)).as("__nv"))
+      val pick = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("dst"))
+        .orderBy(col("__nv").desc, col("label").asc)
+      val newly = votes
+        .withColumn("__rk", row_number().over(pick))
+        .where(col("__rk") === 1)
+        .select(col("dst").as("id"), col("label"), lit(round.i).as("since"))
+      round.cut(state.union(newly), "id")
     }
-    und.unpersist(blocking = false)
-    setup.unpersist(blocking = false)
-    state
   }
 }

@@ -66,7 +66,9 @@ object Snapshots {
     * choice, exempt from the reliable contract. Recomputing such a
     * table after an executor loss is cheaper than a filesystem write
     * per materialization would have been; callers name the bound in
-    * their own doc.
+    * their own doc. `eager = false` defers the materialization to the
+    * caller's next action over the result.
     */
-  def boundedLocal(df: DataFrame): DataFrame = df.localCheckpoint()
+  def boundedLocal(df: DataFrame, eager: Boolean = true): DataFrame =
+    df.localCheckpoint(eager)
 }

@@ -442,15 +442,31 @@ class FunctionsSpec extends SparkSpec {
     assert(got == Map(1L -> 11.0, 2L -> null))
   }
 
-  test("connectedComponentsStar keeps self-pair-only nodes as singletons") {
+  /** Driver-side union-find over a pair list: node -> min id of its
+    * component (union by min root keeps every root its component's min).
+    */
+  private def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(k => k -> find(k)).toMap
+  }
+
+  private def labelMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("connectedComponents keeps self-pair-only nodes as singletons") {
     import spark.implicits._
-    val pairs = Seq((5L, 5L), (1L, 2L)).toDF("id_a", "id_b")
-    val star = Dedup.connectedComponentsStar(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val prop = Dedup.connectedComponents(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star == prop)
-    assert(star == Map(5L -> 5L, 1L -> 1L, 2L -> 1L))
+    val pairs = Seq((5L, 5L), (1L, 2L))
+    val cc = labelMap(Dedup.connectedComponents(pairs.toDF("id_a", "id_b")))
+    assert(cc == unionFind(pairs))
+    assert(cc == Map(5L -> 5L, 1L -> 1L, 2L -> 1L))
   }
 
   test("lshBitsFor tracks corpus size with clamps") {
@@ -535,23 +551,21 @@ class FunctionsSpec extends SparkSpec {
     assert(viaSql == a1)
   }
 
-  test("connectedComponentsStar equals pointer-jumping CC on chains and corpora") {
+  test("connectedComponents equals driver union-find on chains and docs") {
     import spark.implicits._
     // 40-node chain + a triangle + an isolated pair
     val chain = (0L until 39L).map(i => (i, i + 1))
     val extra = Seq((100L, 101L), (101L, 102L), (100L, 102L), (200L, 201L))
-    val pairs = (chain ++ extra).toDF("id_a", "id_b")
-    def labelMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val star = labelMap(Dedup.connectedComponentsStar(pairs))
-    val prop = labelMap(Dedup.connectedComponents(pairs))
-    assert(star == prop)
-    assert(star(39L) == 0L && star(102L) == 100L && star(201L) == 200L)
+    val cc = labelMap(Dedup.connectedComponents((chain ++ extra).toDF("id_a", "id_b")))
+    assert(cc == unionFind(chain ++ extra))
+    assert(cc(39L) == 0L && cc(102L) == 100L && cc(201L) == 200L)
     // real near-dup pairs from the documents table
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
     val docPairs = Dedup.minhashNearDupPairs(docs, "doc_id", "text")
-    assert(labelMap(Dedup.connectedComponentsStar(docPairs)) ==
-      labelMap(Dedup.connectedComponents(docPairs)))
+    val pairs = docPairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(pairs.nonEmpty)
+    assert(labelMap(Dedup.connectedComponents(docPairs)) == unionFind(pairs))
   }
 
   test("cosineNearDupBlocked equals driver-side brute force within blocks") {

@@ -241,4 +241,50 @@ class GraphSpec extends SparkSpec {
       l.where(col("id") =!= 6L), "id", "lab").collect()(0)
     assert(part.getLong(0) == 5L && part.getLong(1) == 5L, part.toString)
   }
+
+  test("graph family: identical rows over 1 / 7 partitions, a joined+aggregated upstream, empty") {
+    import org.apache.spark.sql.DataFrame
+    import spark.implicits._
+    // a 60-node directed graph (parallel edges, a self-loop, weights
+    // 1..5) plus a separate 4-cycle: several components, k-cores, hops
+    val base = ((0L until 60L).flatMap(i =>
+        Seq((i, (i * 7 + 3) % 60, i % 5 + 1), (i, (i * 13 + 1) % 60, (i + 2) % 5 + 1))) ++
+      Seq((1L, 2L, 3L), (1L, 2L, 4L), (5L, 5L, 1L),
+        (100L, 101L, 2L), (101L, 102L, 1L), (102L, 103L, 2L), (103L, 100L, 1L)))
+      .toDF("src", "dst", "w")
+    val seeds = (0L until 104L by 6).map(i => (i, (i % 3).toInt)).toDF("id", "lab")
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    val algos = Seq[(String, DataFrame => DataFrame)](
+      "pageRank" -> (e => Graph.pageRank(e.select("src", "dst"), iterations = 4)),
+      "personalizedPageRank" -> (e =>
+        Graph.personalizedPageRank(e.select("src", "dst"), col("id") % 10 === 0, iterations = 4)),
+      "shortestPathsInt" -> (e => Graph.shortestPathsInt(e, col("id") % 20 === 0, rounds = 3)),
+      "propagateLabels" -> (e =>
+        Graph.propagateLabels(e, "src", "dst", seeds, "id", "lab", rounds = 2)),
+      "kCore" -> (e => Graph.kCore(e, "src", "dst", k = 3, rounds = 3)),
+      "connectedComponents" -> (e =>
+        Dedup.connectedComponents(e.select(col("src").as("id_a"), col("dst").as("id_b")))),
+      "hits" -> (e => Graph.hits(e.select("src", "dst"), rounds = 2)))
+    // joined + aggregated on src keeps every edge row exactly once
+    def upstream(e: DataFrame): DataFrame =
+      e.join(e.groupBy("src").agg(count(lit(1)).as("__n")), "src")
+        .select("src", "dst", "w")
+    algos.foreach { case (name, run) =>
+      val want = rows(run(base))
+      assert(want.nonEmpty, name)
+      Seq[(String, DataFrame => DataFrame)](
+        "repartition(1)" -> (_.repartition(1)),
+        "repartition(7)" -> (_.repartition(7)),
+        "joined+aggregated" -> upstream
+      ).foreach { case (shape, f) =>
+        assert(rows(run(f(base))) == want, s"$name over $shape")
+      }
+      // an empty edge frame: no nodes, so no rows — except the clamped
+      // seeds, which label propagation returns as they came
+      val empty = rows(run(base.where(lit(false))))
+      if (name == "propagateLabels")
+        assert(empty == rows(seeds.select(col("id"), col("lab"), lit(0))), name)
+      else assert(empty.isEmpty, s"$name over an empty edge frame")
+    }
+  }
 }
