@@ -86,16 +86,19 @@ private[functions] object RoundLoop {
   }
 
   /** Run `step` for rounds 1..`rounds`, stopping early once `until`
-    * holds, from `init`. `sized` is the loop table the gate counts (no
-    * count when `rounds` is 0). Rounds cut every `cutEvery`-th round and
-    * the last. `minRows` exists for the contract spec; callers keep the
-    * default.
+    * holds, from `init`. `sized` is the loop table the gate counts; its
+    * session scopes AQE. Rounds cut every `cutEvery`-th round and the
+    * last. No count when `rounds` is 0, nor for a `staticPlans` loop
+    * without a checkpoint dir: the PageRanks cut without a re-pin key,
+    * so there both sides are one `localCheckpoint` under AQE off and the
+    * count would choose nothing.
     */
   def run[S](sized: DataFrame, rounds: Int, init: S,
              staticPlans: Boolean = false, cutEvery: Int = 1,
-             until: S => Boolean = (_: S) => false,
-             minRows: Long = PinnedMinRows)(step: (Round, S) => S): S = {
-    val pinned = rounds > 0 && sized.count() >= minRows
+             until: S => Boolean = (_: S) => false)(step: (Round, S) => S): S = {
+    val gated = rounds > 0 &&
+      !(staticPlans && sized.sparkSession.sparkContext.getCheckpointDir.isEmpty)
+    val pinned = gated && sized.count() >= PinnedMinRows
     def loop(): S = {
       var s = init
       var i = 1
