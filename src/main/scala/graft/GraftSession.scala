@@ -106,18 +106,6 @@ object GraftSession {
         "before AQE can coalesce anything")
   ).flatten
 
-  /** 100 TB preflight — ONE call before a cluster run that turns the
-    * deployment checklist into a loud failure instead of a silent
-    * degradation: reliable checkpoints (directory set AND the
-    * [[graft.functions.Snapshots.RequireReliableKey]] fail-loud
-    * contract armed), AQE + skew-join splitting on, a sane broadcast
-    * threshold, shuffle parallelism at least the cluster's. On
-    * success it prints the per-operator scale levers a deployment
-    * should size deliberately (they all have measured-at-sf0.1
-    * defaults but 100 TB wants explicit choices). `failFast = false`
-    * returns the violation list instead of throwing — the report
-    * form for notebooks.
-    */
   /** Unparseable ≠ disabled: aliasing a malformed
     * autoBroadcastJoinThreshold onto -1 would tell the operator to
     * "enable broadcasting" when the real fix is the typo'd string.
@@ -140,6 +128,18 @@ object GraftSession {
           "unparseable (expected bytes or a size like '32MB')"))
   }
 
+  /** 100 TB preflight — ONE call before a cluster run that turns the
+    * deployment checklist into a loud failure instead of a silent
+    * degradation: reliable checkpoints (directory set AND the
+    * [[graft.functions.Snapshots.RequireReliableKey]] fail-loud
+    * contract armed), AQE + skew-join splitting on, a sane broadcast
+    * threshold, shuffle parallelism at least the cluster's. On
+    * success it prints the per-operator scale levers a deployment
+    * should size deliberately (they all have measured-at-sf0.1
+    * defaults but 100 TB wants explicit choices). `failFast = false`
+    * returns the violation list instead of throwing — the report
+    * form for notebooks.
+    */
   def validateScaleConf(spark: SparkSession,
                         failFast: Boolean = true): Seq[String] = {
     val sc = spark.sparkContext

@@ -256,20 +256,6 @@ final case class GraftFrame(df: DataFrame, opts: GraftOptions = GraftOptions()) 
     df.as(rowEnc(s)).select(Accumulators.asAggregator(acc, s).toColumn).head()
   }
 
-  /** RDD-layer fold variant of [[accumulate]] — for buffers that must not
-    * round-trip through an Encoder (e.g. holding driver-only resources).
-    * Prefer [[accumulate]]: this path abandons codegen and deserializes
-    * every row.
-    */
-  def accumulateFold[B](acc: Accumulator[B])(implicit ct: scala.reflect.ClassTag[B]): B = {
-    val s = schema
-    df.rdd.mapPartitions { it =>
-      var b = acc.zero
-      it.foreach { r => b = acc.add(b, GraftRow.fromRow(r, s)) }
-      Iterator.single(b)
-    }.fold(acc.zero)(acc.merge(_, _))
-  }
-
   /** Closure ops with an error quarantine side-channel — the reference's
     * multierror semantics (internal/partition/partition-operable.go:24-50,
     * cluster/s_execution.go:89-124): failing rows are captured with their

@@ -24,21 +24,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Corpus {
 
-  /** Per-document repetition signals (the Gopher-style quality gates):
-    *
-    *  - `n_tokens`      total whitespace tokens
-    *  - `n_distinct`    distinct tokens
-    *  - `top_token_frac`  fraction of tokens taken by the single most
-    *                      frequent token — boilerplate/spam detector
-    *  - `top_bigram_frac` fraction of adjacent bigrams taken by the most
-    *                      frequent bigram — loop/template detector
-    *
-    * Shuffle profile: two aggregations, both keyed by (doc id [, gram]) —
-    * token rows shuffle once into (id, token) groups, bigram *hashes*
-    * (8 bytes via xxhash64, never the gram string) shuffle once into
-    * (id, hash) groups, then the per-doc rollups co-partition on the id.
-    * Nothing is quadratic and no full document body ever shuffles.
-    */
   /** Per-document lexical diversity census — type-token ratio and
     * distinct-bigram ratio as exact floor-ppm integers (the distinct-n
     * diversity signal: templated/boilerplate docs score low, natural
@@ -76,6 +61,21 @@ object Corpus {
         expr(Stats.ppmSql("n_distinct_bigrams", "n_bigrams")))
   }
 
+  /** Per-document repetition signals (the Gopher-style quality gates):
+    *
+    *  - `n_tokens`      total whitespace tokens
+    *  - `n_distinct`    distinct tokens
+    *  - `top_token_frac`  fraction of tokens taken by the single most
+    *                      frequent token — boilerplate/spam detector
+    *  - `top_bigram_frac` fraction of adjacent bigrams taken by the most
+    *                      frequent bigram — loop/template detector
+    *
+    * Shuffle profile: two aggregations, both keyed by (doc id [, gram]) —
+    * token rows shuffle once into (id, token) groups, bigram *hashes*
+    * (8 bytes via xxhash64, never the gram string) shuffle once into
+    * (id, hash) groups, then the per-doc rollups co-partition on the id.
+    * Nothing is quadratic and no full document body ever shuffles.
+    */
   def repetitionSignals(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val id = col(idCol)
     // Both branches hash via the native NgramHashesAll expression (one
@@ -207,13 +207,8 @@ object Corpus {
     require(ngram >= 1, s"ngram must be positive: $ngram")
     require(maxDfRatio > 0.0 && maxDfRatio < 1.0,
       s"maxDfRatio must be in (0, 1): $maxDfRatio")
-    val id = col(idCol)
-    val tf = df
-      .select(id.cast("long").as("__id"), isQuery.cast("boolean").as("__q"),
-        graft.plans.HashExpressions
-          .ngramHashesAll(TextFunctions.tokens(col(textCol)), ngram).as("__g"))
-      .select(col("__id"), col("__q"), explode(col("__g")).as("__th"))
-      .groupBy("__id", "__q", "__th").agg(count(lit(1)).as("__tf"))
+    val tf = gramTf(df, textCol, ngram,
+      "__id" -> col(idCol).cast("long"), "__q" -> isQuery.cast("boolean"))
     val nDocs = df.agg(count(lit(1)).as("__n"))
     val kept = tf.groupBy("__th").agg(count(lit(1)).as("__df"))
       .crossJoin(broadcast(nDocs))
@@ -224,9 +219,7 @@ object Corpus {
         (col("__tf").cast("double") *
           (log(col("__n").cast("double")) - log(col("__df").cast("double"))))
           .as("__w"))
-    val norms = posting.groupBy("__id").agg(
-      sqrt(sum((col("__w") * col("__w")).cast(DecimalType(30, 15)))
-        .cast("double")).as("__nrm"))
+    val norms = posting.groupBy("__id").agg(l2Norm(col("__w")).as("__nrm"))
     val qp = posting.where(col("__q"))
       .select(col("__id").as("__qid"), col("__th"), col("__w").as("__qw"))
     val dots = posting.join(broadcast(qp), Seq("__th"))
@@ -310,12 +303,7 @@ object Corpus {
     require(ngram >= 1, s"ngram must be positive: $ngram")
     require(maxDfRatio > 0.0 && maxDfRatio < 1.0,
       s"maxDfRatio must be in (0, 1): $maxDfRatio")
-    val tf = df
-      .select(col(idCol).cast("long").as("doc_id"),
-        graft.plans.HashExpressions
-          .ngramHashesAll(TextFunctions.tokens(col(textCol)), ngram).as("__g"))
-      .select(col("doc_id"), explode(col("__g")).as("__th"))
-      .groupBy("doc_id", "__th").agg(count(lit(1)).as("__tf"))
+    val tf = gramTf(df, textCol, ngram, "doc_id" -> col(idCol).cast("long"))
     val nDocs = df.agg(count(lit(1)).as("__n"))
     val dict = tf.groupBy("__th").agg(count(lit(1)).as("__df"))
       .crossJoin(broadcast(nDocs))
@@ -324,15 +312,35 @@ object Corpus {
       .select(col("__th"),
         (log(col("__n").cast("double")) - log(col("__df").cast("double")))
           .as("idf"))
+    (unitPostings(tf, dict), dict)
+  }
+
+  // (doc, gram-hash, __tf) instance counts of one ngram width: the
+  // hashes collapse map-side before any exchange, bodies never shuffle.
+  // `keys` are the (name, column) pairs that identify the doc.
+  private def gramTf(df: DataFrame, textCol: String, ngram: Int,
+                     keys: (String, Column)*): DataFrame = {
+    val names = keys.map(_._1)
+    df.select(keys.map { case (n, c) => c.as(n) } :+ graft.plans.HashExpressions
+        .ngramHashesAll(TextFunctions.tokens(col(textCol)), ngram).as("__g"): _*)
+      .select(names.map(col) :+ explode(col("__g")).as("__th"): _*)
+      .groupBy(names.head, names.tail :+ "__th": _*)
+      .agg(count(lit(1)).as("__tf"))
+  }
+
+  // sqrt of the DECIMAL-accumulated Σ w² (order-free partials)
+  private def l2Norm(w: Column): Column =
+    sqrt(sum((w * w).cast(DecimalType(30, 15))).cast("double"))
+
+  // (doc_id, __th, wn): tf·idf weights under `dict`, each doc scaled to
+  // unit L2 norm — the stored side of the TF-IDF index
+  private def unitPostings(tf: DataFrame, dict: DataFrame): DataFrame = {
     val w = tf.join(dict, "__th")
       .select(col("doc_id"), col("__th"),
         (col("__tf").cast("double") * col("idf")).as("__w"))
-    val norms = w.groupBy("doc_id").agg(
-      sqrt(sum((col("__w") * col("__w")).cast(DecimalType(30, 15)))
-        .cast("double")).as("__nrm"))
-    val postings = w.join(norms, "doc_id")
+    val norms = w.groupBy("doc_id").agg(l2Norm(col("__w")).as("__nrm"))
+    w.join(norms, "doc_id")
       .select(col("doc_id"), col("__th"), (col("__w") / col("__nrm")).as("wn"))
-    (postings, dict)
   }
 
   /** [[tfidfIndex]] as the full persistable artifact with its build
@@ -383,20 +391,9 @@ object Corpus {
                        newDf: DataFrame, idCol: String,
                        textCol: String): DataFrame = {
     val ngram = frozenTfidfNgram(params)
-    val tf = newDf
-      .select(col(idCol).cast("long").as("doc_id"),
-        graft.plans.HashExpressions
-          .ngramHashesAll(TextFunctions.tokens(col(textCol)), ngram).as("__g"))
-      .select(col("doc_id"), explode(col("__g")).as("__th"))
-      .groupBy("doc_id", "__th").agg(count(lit(1)).as("__tf"))
-    val w = tf.join(broadcast(dict), "__th")
-      .select(col("doc_id"), col("__th"),
-        (col("__tf").cast("double") * col("idf")).as("__w"))
-    val norms = w.groupBy("doc_id").agg(
-      sqrt(sum((col("__w") * col("__w")).cast(DecimalType(30, 15)))
-        .cast("double")).as("__nrm"))
-    w.join(norms, "doc_id")
-      .select(col("doc_id"), col("__th"), (col("__w") / col("__nrm")).as("wn"))
+    unitPostings(
+      gramTf(newDf, textCol, ngram, "doc_id" -> col(idCol).cast("long")),
+      broadcast(dict))
   }
 
   // The one-row frozen-scheme read shared by append and probe: the dict
@@ -444,18 +441,12 @@ object Corpus {
                       k: Int, ngram: Int = 2): DataFrame = {
     require(k >= 1, s"k must be positive: $k")
     require(ngram >= 1, s"ngram must be positive: $ngram")
-    val qtf = queries
-      .select(col(idCol).cast("long").as("query_id"),
-        graft.plans.HashExpressions
-          .ngramHashesAll(TextFunctions.tokens(col(textCol)), ngram).as("__g"))
-      .select(col("query_id"), explode(col("__g")).as("__th"))
-      .groupBy("query_id", "__th").agg(count(lit(1)).as("__tf"))
+    val qtf = gramTf(queries, textCol, ngram,
+      "query_id" -> col(idCol).cast("long"))
     val qw = qtf.join(dict, "__th")
       .select(col("query_id"), col("__th"),
         (col("__tf").cast("double") * col("idf")).as("__qw"))
-    val qn = qw.groupBy("query_id").agg(
-      sqrt(sum((col("__qw") * col("__qw")).cast(DecimalType(30, 15)))
-        .cast("double")).as("__qn"))
+    val qn = qw.groupBy("query_id").agg(l2Norm(col("__qw")).as("__qn"))
     val dots = postings.join(broadcast(qw), Seq("__th"))
       .groupBy("query_id", "doc_id")
       .agg(sum((col("__qw") * col("wn")).cast(DecimalType(30, 15)))
@@ -624,28 +615,79 @@ object Corpus {
     */
   def unigramNll(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val id = col(idCol)
-    val tf = df
+    val keyed = df
       .select(id, explode(TextFunctions.tokens(col(textCol))).as("__t"))
       .select(id, xxhash64(col("__t")).as("__th"))
-      .groupBy(id, col("__th")).agg(count(lit(1)).as("__tf"))
-    val cnts = tf.groupBy(col("__th")).agg(sum(col("__tf")).as("__cnt"))
-    val total = cnts.agg(sum(col("__cnt")).as("__N"))
-    val perDoc = tf.join(cnts, "__th")
-      .crossJoin(broadcast(total))
-      .select(id, col("__tf"),
-        // tf · (ln N − ln cnt): both ln inputs are integral doubles
-        (col("__tf").cast("double") *
-          (log(col("__N").cast("double")) - log(col("__cnt").cast("double"))))
-          .as("__nll"))
+    // ln N − ln cnt: both ln inputs are integral doubles
+    nllRollup(df, idCol, keyed, "n_tokens",
+      log(col("__N").cast("double")) - log(col("__cnt").cast("double"))) { tf =>
+      val cnts = tf.groupBy(col("__th")).agg(sum(col("__tf")).as("__cnt"))
+      val total = cnts.agg(sum(col("__cnt")).as("__N"))
+      tf.join(cnts, "__th").crossJoin(broadcast(total))
+    }
+  }
+
+  /** The per-document rollup every n-gram NLL scorer ends in. `keyed`
+    * holds one row per gram instance (the doc id, then the gram's hash
+    * keys); it collapses to (doc, keys, `__tf`), `joins` attaches the
+    * count tables, and each distinct gram pays `__tf · nll`. Per-doc
+    * sums accumulate in DECIMAL(30,15) (shuffle order cannot flip bits)
+    * before the one double divide; every doc of `df` is kept, with
+    * `nCol` = 0 and a null `avg_nll` when it has no gram.
+    */
+  private def nllRollup(df: DataFrame, idCol: String, keyed: DataFrame,
+                        nCol: String, nll: Column)
+                       (joins: DataFrame => DataFrame): DataFrame = {
+    val id = col(idCol)
+    val tf = keyed.groupBy(keyed.columns.map(col): _*)
+      .agg(count(lit(1)).as("__tf"))
+    val scored = joins(tf)
+      .select(id, col("__tf"), (col("__tf").cast("double") * nll).as("__nll"))
       .groupBy(id).agg(
         sum(col("__tf")).as("__n"),
         sum(col("__nll").cast(DecimalType(30, 15))).cast("double").as("__s"))
     df.select(id)
-      .join(perDoc, Seq(idCol), "left")
+      .join(scored, Seq(idCol), "left")
       .select(id,
-        coalesce(col("__n"), lit(0L)).as("n_tokens"),
+        coalesce(col("__n"), lit(0L)).as(nCol),
         round(col("__s") / col("__n").cast("double"), 9).as("avg_nll"))
   }
+
+  /** One row per `n`-gram instance (n ∈ {2, 3}) of `d`'s text: the
+    * `keep` columns, then the gram's `xxhash64` keys — (`__h1`, `__h12`,
+    * `__h2`) for bigrams, (`__h123`, `__h12`, `__h23`, `__h2`, `__h3`)
+    * for trigrams. Map-only: an array transform pairs each position with
+    * its predecessors via the 1-based `element_at` (no posexplode, no
+    * self-join). The text tokenizes ONCE into `__tk` — an `element_at`
+    * over the raw tokens(...) expression inside the lambda would re-split
+    * the text per element if Catalyst declined to CSE it.
+    */
+  private def ngramKeys(d: DataFrame, textCol: String, n: Int,
+                        keep: Column*): DataFrame = {
+    val toks = col("__tk")
+    val g = if (n == 2) "__bg" else "__tg"
+    def w(j: Int) = col(s"$g.w$j")
+    val keys =
+      if (n == 2) Seq(xxhash64(w(1)).as("__h1"),
+        xxhash64(w(1), w(2)).as("__h12"), xxhash64(w(2)).as("__h2"))
+      else Seq(xxhash64(w(1), w(2), w(3)).as("__h123"),
+        xxhash64(w(1), w(2)).as("__h12"), xxhash64(w(2), w(3)).as("__h23"),
+        xxhash64(w(2)).as("__h2"), xxhash64(w(3)).as("__h3"))
+    d.select(keep :+ TextFunctions.tokens(col(textCol)).as("__tk"): _*)
+      .select(keep :+ explode(
+        transform(slice(toks, lit(n), greatest(size(toks) - (n - 1), lit(0))),
+          (t, i) => struct((1 until n).map(j => element_at(toks, i + j).as(s"w$j"))
+            :+ t.as(s"w$n"): _*)))
+        .as(g): _*)
+      .select(keep ++ keys: _*)
+  }
+
+  // train-side unigram counts (`__h` token hash, `__c1`)
+  private def unigramCounts(train: DataFrame, textCol: String): DataFrame =
+    train
+      .select(explode(TextFunctions.tokens(col(textCol))).as("__t"))
+      .select(xxhash64(col("__t")).as("__h"))
+      .groupBy(col("__h")).agg(count(lit(1)).as("__c1"))
 
   /** CCNet-style perplexity bucketing (Wenzek et al. 2020): score every
     * document with [[unigramNll]] and split each group (language) into
@@ -751,57 +793,24 @@ object Corpus {
     */
   def bigramNll(df: DataFrame, train: DataFrame,
                 idCol: String, textCol: String): DataFrame = {
-    val id = col(idCol)
-    // (w1, w2) structs for positions 2..n — slice pairs each token with
-    // its predecessor via the 1-based element_at on the outer array
-    def bigrams(d: DataFrame, keep: Column*): DataFrame = {
-      // tokenize ONCE into a bound column — an element_at over the raw
-      // tokens(...) expression inside the lambda would re-split the text
-      // per element if Catalyst declines to CSE it
-      val toks = col("__tk")
-      d.select(keep :+ TextFunctions.tokens(col(textCol)).as("__tk"): _*)
-        .select(keep :+ explode(
-          transform(slice(toks, lit(2), greatest(size(toks) - 1, lit(0))),
-            (t, i) => struct(element_at(toks, i + 1).as("w1"), t.as("w2"))))
-          .as("__bg"): _*)
-        .select(keep :+ xxhash64(col("__bg.w1")).as("__h1") :+
-          xxhash64(col("__bg.w1"), col("__bg.w2")).as("__h12") :+
-          xxhash64(col("__bg.w2")).as("__h2"): _*)
-    }
-    val trainToks = train
-      .select(explode(TextFunctions.tokens(col(textCol))).as("__t"))
-      .select(xxhash64(col("__t")).as("__h"))
-    val c1 = trainToks.groupBy(col("__h")).agg(count(lit(1)).as("__c1"))
+    val c1 = unigramCounts(train, textCol)
     val n = c1.agg(sum(col("__c1")).as("__N"))
-    val c2 = bigrams(train)
+    val c2 = ngramKeys(train, textCol, 2)
       .groupBy(col("__h12")).agg(count(lit(1)).as("__c2"))
-    val tf = bigrams(df, id)
-      .groupBy(id, col("__h1"), col("__h12"), col("__h2"))
-      .agg(count(lit(1)).as("__tf"))
-    val scored = tf
-      .join(c2, Seq("__h12"), "left")
-      .join(c1.withColumnRenamed("__h", "__h1")
-        .withColumnRenamed("__c1", "__cprev"), Seq("__h1"), "left")
-      .join(c1.withColumnRenamed("__h", "__h2")
-        .withColumnRenamed("__c1", "__ccur"), Seq("__h2"), "left")
-      .crossJoin(broadcast(n))
-      .select(id, col("__tf"),
-        (col("__tf").cast("double") *
-          when(col("__c2").isNotNull && col("__cprev").isNotNull,
-            log(col("__cprev").cast("double")) - log(col("__c2").cast("double")))
-          .when(col("__ccur").isNotNull,
-            lit(-Ln04) + log(col("__N").cast("double")) -
-              log(col("__ccur").cast("double")))
-          .otherwise(lit(-Ln04) + log(col("__N").cast("double"))))
-          .as("__nll"))
-      .groupBy(id).agg(
-        sum(col("__tf")).as("__n"),
-        sum(col("__nll").cast(DecimalType(30, 15))).cast("double").as("__s"))
-    df.select(id)
-      .join(scored, Seq(idCol), "left")
-      .select(id,
-        coalesce(col("__n"), lit(0L)).as("n_bigrams"),
-        round(col("__s") / col("__n").cast("double"), 9).as("avg_nll"))
+    nllRollup(df, idCol, ngramKeys(df, textCol, 2, col(idCol)), "n_bigrams",
+      when(col("__c2").isNotNull && col("__cprev").isNotNull,
+        log(col("__cprev").cast("double")) - log(col("__c2").cast("double")))
+      .when(col("__ccur").isNotNull,
+        lit(-Ln04) + log(col("__N").cast("double")) -
+          log(col("__ccur").cast("double")))
+      .otherwise(lit(-Ln04) + log(col("__N").cast("double")))) {
+      _.join(c2, Seq("__h12"), "left")
+        .join(c1.withColumnRenamed("__h", "__h1")
+          .withColumnRenamed("__c1", "__cprev"), Seq("__h1"), "left")
+        .join(c1.withColumnRenamed("__h", "__h2")
+          .withColumnRenamed("__c1", "__ccur"), Seq("__h2"), "left")
+        .crossJoin(broadcast(n))
+    }
   }
 
   /** Jelinek–Mercer interpolated bigram NLL (Jelinek & Mercer 1980;
@@ -811,20 +820,20 @@ object Corpus {
     *
     *   p(w₂|w₁) = λ·c(w₁w₂)/c(w₁) + (1−λ)·(c(w₂)+1)/(N+V)
     *
-    * with λ = `lambdaNum/lambdaDen` an EXACT rational (default 3/4)
-    * and a Laplace floor on the unigram level (the +1/(N+V) term keeps
+    * with λ = 3/4 pinned as an EXACT rational (not a parameter) and a
+    * Laplace floor on the unigram level (the +1/(N+V) term keeps
     * p > 0 for OOV w₂, so the interpolation is total without a
     * separate OOV branch). Unlike backoff, the lower order contributes
     * on EVERY position — the mixture the classic held-out EM would
     * tune λ for; here λ is a pinned rational so the whole score is the
     * exact integer ratio A/B:
     *
-    *   A = λn·c₁₂·(N+V) + (λd−λn)·c(w₁)·(c(w₂)+1),  B = λd·c(w₁)·(N+V)
+    *   A = 3·c₁₂·(N+V) + 1·c(w₁)·(c(w₂)+1),  B = 4·c(w₁)·(N+V)
     *
     * and nll = ln B − ln A keeps every ln input an integral double
     * (the proven-safe class). OOV HISTORY (c(w₁) = 0) degenerates the
     * mixture to its unigram term: p = (c(w₂)+1)/(N+V). Documented
-    * bound: A and B stay exact while λd·c(w₁)·(N+V) < 2⁵³ (≈9e15 —
+    * bound: A and B stay exact while 4·c(w₁)·(N+V) < 2⁵³ (≈9e15 —
     * beyond any single corpus this library aggregates in one LM).
     *
     * Shuffle profile = [[bigramNll]]: two vocab-sized train counts,
@@ -834,61 +843,30 @@ object Corpus {
     * @return (idCol, n_bigrams, avg_nll)
     */
   def jmNll(df: DataFrame, train: DataFrame,
-            idCol: String, textCol: String,
-            lambdaNum: Long = 3L, lambdaDen: Long = 4L): DataFrame = {
-    require(lambdaNum >= 1L && lambdaNum < lambdaDen,
-      s"need 0 < lambda < 1 as a rational: $lambdaNum/$lambdaDen")
-    val id = col(idCol)
-    def bigrams(d: DataFrame, keep: Column*): DataFrame = {
-      val toks = col("__tk")
-      d.select(keep :+ TextFunctions.tokens(col(textCol)).as("__tk"): _*)
-        .select(keep :+ explode(
-          transform(slice(toks, lit(2), greatest(size(toks) - 1, lit(0))),
-            (t, i) => struct(element_at(toks, i + 1).as("w1"), t.as("w2"))))
-          .as("__bg"): _*)
-        .select(keep :+ xxhash64(col("__bg.w1")).as("__h1") :+
-          xxhash64(col("__bg.w1"), col("__bg.w2")).as("__h12") :+
-          xxhash64(col("__bg.w2")).as("__h2"): _*)
-    }
-    val c1 = train
-      .select(explode(TextFunctions.tokens(col(textCol))).as("__t"))
-      .select(xxhash64(col("__t")).as("__h"))
-      .groupBy(col("__h")).agg(count(lit(1)).as("__c1"))
+            idCol: String, textCol: String): DataFrame = {
+    val c1 = unigramCounts(train, textCol)
     val nv = c1.agg(sum(col("__c1")).as("__N"), count(lit(1)).as("__V"))
-    val c2 = bigrams(train)
+    val c2 = ngramKeys(train, textCol, 2)
       .groupBy(col("__h12")).agg(count(lit(1)).as("__c2"))
-    val tf = bigrams(df, id)
-      .groupBy(id, col("__h1"), col("__h12"), col("__h2"))
-      .agg(count(lit(1)).as("__tf"))
     val nVp = col("__N") + col("__V")
     val uniPlus1 = coalesce(col("__ccur"), lit(0L)) + lit(1L)
     // A and B are exact LONG integers — association order is irrelevant
     // to the value, only the integers must match the oracle's
-    val a = lit(lambdaNum) * coalesce(col("__c2"), lit(0L)) * nVp +
-      lit(lambdaDen - lambdaNum) * col("__cprev") * uniPlus1
-    val b = lit(lambdaDen) * col("__cprev") * nVp
-    val scored = tf
-      .join(c2, Seq("__h12"), "left")
-      .join(c1.withColumnRenamed("__h", "__h1")
-        .withColumnRenamed("__c1", "__cprev"), Seq("__h1"), "left")
-      .join(c1.withColumnRenamed("__h", "__h2")
-        .withColumnRenamed("__c1", "__ccur"), Seq("__h2"), "left")
-      .crossJoin(broadcast(nv))
-      .select(id, col("__tf"),
-        (col("__tf").cast("double") *
-          when(col("__cprev").isNotNull,
-            log(b.cast("double")) - log(a.cast("double")))
-          .otherwise(
-            log(nVp.cast("double")) - log(uniPlus1.cast("double"))))
-          .as("__nll"))
-      .groupBy(id).agg(
-        sum(col("__tf")).as("__n"),
-        sum(col("__nll").cast(DecimalType(30, 15))).cast("double").as("__s"))
-    df.select(id)
-      .join(scored, Seq(idCol), "left")
-      .select(id,
-        coalesce(col("__n"), lit(0L)).as("n_bigrams"),
-        round(col("__s") / col("__n").cast("double"), 9).as("avg_nll"))
+    val a = lit(3L) * coalesce(col("__c2"), lit(0L)) * nVp +
+      lit(1L) * col("__cprev") * uniPlus1
+    val b = lit(4L) * col("__cprev") * nVp
+    nllRollup(df, idCol, ngramKeys(df, textCol, 2, col(idCol)), "n_bigrams",
+      when(col("__cprev").isNotNull,
+        log(b.cast("double")) - log(a.cast("double")))
+      .otherwise(
+        log(nVp.cast("double")) - log(uniPlus1.cast("double")))) {
+      _.join(c2, Seq("__h12"), "left")
+        .join(c1.withColumnRenamed("__h", "__h1")
+          .withColumnRenamed("__c1", "__cprev"), Seq("__h1"), "left")
+        .join(c1.withColumnRenamed("__h", "__h2")
+          .withColumnRenamed("__c1", "__ccur"), Seq("__h2"), "left")
+        .crossJoin(broadcast(nv))
+    }
   }
 
   /** Trigram Stupid-Backoff NLL — the context rung above [[bigramNll]]
@@ -920,75 +898,33 @@ object Corpus {
     */
   def trigramNll(df: DataFrame, train: DataFrame,
                  idCol: String, textCol: String): DataFrame = {
-    val id = col(idCol)
-    val toks = col("__tk")
-    def withToks(d: DataFrame, keep: Column*): DataFrame =
-      d.select(keep :+ TextFunctions.tokens(col(textCol)).as("__tk"): _*)
-    def bigramKeys(d: DataFrame): DataFrame =
-      withToks(d)
-        .select(explode(
-          transform(slice(toks, lit(2), greatest(size(toks) - 1, lit(0))),
-            (t, i) => struct(element_at(toks, i + 1).as("w1"), t.as("w2"))))
-          .as("__bg"))
-        .select(xxhash64(col("__bg.w1"), col("__bg.w2")).as("__h12"))
-    def trigramKeys(d: DataFrame, keep: Column*): DataFrame =
-      withToks(d, keep: _*)
-        .select(keep :+ explode(
-          transform(slice(toks, lit(3), greatest(size(toks) - 2, lit(0))),
-            (t, i) => struct(element_at(toks, i + 1).as("w1"),
-              element_at(toks, i + 2).as("w2"), t.as("w3"))))
-          .as("__tg"): _*)
-        .select(keep
-          :+ xxhash64(col("__tg.w1"), col("__tg.w2"), col("__tg.w3"))
-            .as("__h123")
-          :+ xxhash64(col("__tg.w1"), col("__tg.w2")).as("__h12")
-          :+ xxhash64(col("__tg.w2"), col("__tg.w3")).as("__h23")
-          :+ xxhash64(col("__tg.w2")).as("__h2")
-          :+ xxhash64(col("__tg.w3")).as("__h3"): _*)
-    val trainToks = train
-      .select(explode(TextFunctions.tokens(col(textCol))).as("__t"))
-      .select(xxhash64(col("__t")).as("__h"))
-    val c1 = trainToks.groupBy(col("__h")).agg(count(lit(1)).as("__c1"))
+    val c1 = unigramCounts(train, textCol)
     val n = c1.agg(sum(col("__c1")).as("__N"))
-    val c2 = bigramKeys(train)
+    val c2 = ngramKeys(train, textCol, 2)
       .groupBy(col("__h12")).agg(count(lit(1)).as("__c2"))
-    val c3 = trigramKeys(train)
+    val c3 = ngramKeys(train, textCol, 3)
       .groupBy(col("__h123")).agg(count(lit(1)).as("__c3"))
-    val tf = trigramKeys(df, id)
-      .groupBy(id, col("__h123"), col("__h12"), col("__h23"),
-        col("__h2"), col("__h3"))
-      .agg(count(lit(1)).as("__tf"))
     val backoff1 = lit(-Ln04)
-    val scored = tf
-      .join(c3, Seq("__h123"), "left")
-      .join(c2.withColumnRenamed("__c2", "__c12"), Seq("__h12"), "left")
-      .join(c2.withColumnRenamed("__h12", "__h23")
-        .withColumnRenamed("__c2", "__c23"), Seq("__h23"), "left")
-      .join(c1.withColumnRenamed("__h", "__h2")
-        .withColumnRenamed("__c1", "__cw2"), Seq("__h2"), "left")
-      .join(c1.withColumnRenamed("__h", "__h3")
-        .withColumnRenamed("__c1", "__cw3"), Seq("__h3"), "left")
-      .crossJoin(broadcast(n))
-      .select(id, col("__tf"),
-        (col("__tf").cast("double") *
-          when(col("__c3").isNotNull && col("__c12").isNotNull,
-            log(col("__c12").cast("double")) - log(col("__c3").cast("double")))
-          .when(col("__c23").isNotNull && col("__cw2").isNotNull,
-            backoff1 + log(col("__cw2").cast("double")) -
-              log(col("__c23").cast("double")))
-          .when(col("__cw3").isNotNull,
-            backoff1 + backoff1 + log(col("__N").cast("double")) -
-              log(col("__cw3").cast("double")))
-          .otherwise(backoff1 + backoff1 + log(col("__N").cast("double"))))
-          .as("__nll"))
-      .groupBy(id).agg(
-        sum(col("__tf")).as("__n"),
-        sum(col("__nll").cast(DecimalType(30, 15))).cast("double").as("__s"))
-    df.select(id)
-      .join(scored, Seq(idCol), "left")
-      .select(id,
-        coalesce(col("__n"), lit(0L)).as("n_trigrams"),
-        round(col("__s") / col("__n").cast("double"), 9).as("avg_nll"))
+    nllRollup(df, idCol, ngramKeys(df, textCol, 3, col(idCol)), "n_trigrams",
+      when(col("__c3").isNotNull && col("__c12").isNotNull,
+        log(col("__c12").cast("double")) - log(col("__c3").cast("double")))
+      .when(col("__c23").isNotNull && col("__cw2").isNotNull,
+        backoff1 + log(col("__cw2").cast("double")) -
+          log(col("__c23").cast("double")))
+      .when(col("__cw3").isNotNull,
+        backoff1 + backoff1 + log(col("__N").cast("double")) -
+          log(col("__cw3").cast("double")))
+      .otherwise(backoff1 + backoff1 + log(col("__N").cast("double")))) {
+      _.join(c3, Seq("__h123"), "left")
+        .join(c2.withColumnRenamed("__c2", "__c12"), Seq("__h12"), "left")
+        .join(c2.withColumnRenamed("__h12", "__h23")
+          .withColumnRenamed("__c2", "__c23"), Seq("__h23"), "left")
+        .join(c1.withColumnRenamed("__h", "__h2")
+          .withColumnRenamed("__c1", "__cw2"), Seq("__h2"), "left")
+        .join(c1.withColumnRenamed("__h", "__h3")
+          .withColumnRenamed("__c1", "__cw3"), Seq("__h3"), "left")
+        .crossJoin(broadcast(n))
+    }
   }
 
   /** Interpolated trigram Kneser–Ney NLL (Chen & Goodman 1999, "An
@@ -1043,23 +979,7 @@ object Corpus {
     */
   def knNll(df: DataFrame, train: DataFrame,
             idCol: String, textCol: String): DataFrame = {
-    val id = col(idCol)
-    val toks = col("__tk")
-    def trigramKeys(d: DataFrame, keep: Column*): DataFrame =
-      d.select(keep :+ TextFunctions.tokens(col(textCol)).as("__tk"): _*)
-        .select(keep :+ explode(
-          transform(slice(toks, lit(3), greatest(size(toks) - 2, lit(0))),
-            (t, i) => struct(element_at(toks, i + 1).as("w1"),
-              element_at(toks, i + 2).as("w2"), t.as("w3"))))
-          .as("__tg"): _*)
-        .select(keep
-          :+ xxhash64(col("__tg.w1"), col("__tg.w2"), col("__tg.w3"))
-            .as("__h123")
-          :+ xxhash64(col("__tg.w1"), col("__tg.w2")).as("__h12")
-          :+ xxhash64(col("__tg.w2"), col("__tg.w3")).as("__h23")
-          :+ xxhash64(col("__tg.w2")).as("__h2")
-          :+ xxhash64(col("__tg.w3")).as("__h3"): _*)
-    val raw = trigramKeys(train)
+    val raw = ngramKeys(train, textCol, 3)
     val c3 = raw.groupBy(col("__h123")).agg(count(lit(1)).as("__c3"))
     val ctx = raw.groupBy(col("__h12")).agg(count(lit(1)).as("__c2"))
     // the trigram TYPE set — every continuation count is a group-count
@@ -1095,10 +1015,6 @@ object Corpus {
     // one inner join each and cost the probe side a single lookup
     val ctxT = ctx.join(fwd2, Seq("__h12"))
     val midT = mid.join(fwd1, Seq("__h2"))
-    val tf = trigramKeys(df, id)
-      .groupBy(id, col("__h123"), col("__h12"), col("__h23"),
-        col("__h2"), col("__h3"))
-      .agg(count(lit(1)).as("__tf"))
     def dbl(c: String) = col(c).cast("double")
     val dV = dbl("__v"); val dV1 = dbl("__v1"); val dNcc = dbl("__ncc")
     // explicit COALESCE before GREATEST: Spark's greatest skips nulls
@@ -1112,27 +1028,17 @@ object Corpus {
     val b2 = lit(4.0) * dbl("__mid") * b1
     val a3 = disc("__c3") * b2 + lit(3.0) * dbl("__f2") * a2
     val b3 = lit(4.0) * dbl("__c2") * b2
-    val scored = tf
-      .join(c3, Seq("__h123"), "left")
-      .join(ctxT, Seq("__h12"), "left")
-      .join(kn2, Seq("__h23"), "left")
-      .join(midT, Seq("__h2"), "left")
-      .join(kn1, Seq("__h3"), "left")
-      .crossJoin(broadcast(scal))
-      .select(id, col("__tf"),
-        (col("__tf").cast("double") *
-          when(col("__c2").isNotNull, log(b3) - log(a3))
-            .when(col("__mid").isNotNull, log(b2) - log(a2))
-            .otherwise(log(b1) - log(a1)))
-          .as("__nll"))
-      .groupBy(id).agg(
-        sum(col("__tf")).as("__n"),
-        sum(col("__nll").cast(DecimalType(30, 15))).cast("double").as("__s"))
-    df.select(id)
-      .join(scored, Seq(idCol), "left")
-      .select(id,
-        coalesce(col("__n"), lit(0L)).as("n_trigrams"),
-        round(col("__s") / col("__n").cast("double"), 9).as("avg_nll"))
+    nllRollup(df, idCol, ngramKeys(df, textCol, 3, col(idCol)), "n_trigrams",
+      when(col("__c2").isNotNull, log(b3) - log(a3))
+        .when(col("__mid").isNotNull, log(b2) - log(a2))
+        .otherwise(log(b1) - log(a1))) {
+      _.join(c3, Seq("__h123"), "left")
+        .join(ctxT, Seq("__h12"), "left")
+        .join(kn2, Seq("__h23"), "left")
+        .join(midT, Seq("__h2"), "left")
+        .join(kn1, Seq("__h3"), "left")
+        .crossJoin(broadcast(scal))
+    }
   }
 
   /** Modified Kneser–Ney trigram NLL (Chen & Goodman 1999 §3 — the
@@ -1207,23 +1113,7 @@ object Corpus {
   def mknNll(df: DataFrame, train: DataFrame,
              idCol: String, textCol: String,
              discountFallback: Boolean = false): DataFrame = {
-    val id = col(idCol)
-    val toks = col("__tk")
-    def trigramKeys(d: DataFrame, keep: Column*): DataFrame =
-      d.select(keep :+ TextFunctions.tokens(col(textCol)).as("__tk"): _*)
-        .select(keep :+ explode(
-          transform(slice(toks, lit(3), greatest(size(toks) - 2, lit(0))),
-            (t, i) => struct(element_at(toks, i + 1).as("w1"),
-              element_at(toks, i + 2).as("w2"), t.as("w3"))))
-          .as("__tg"): _*)
-        .select(keep
-          :+ xxhash64(col("__tg.w1"), col("__tg.w2"), col("__tg.w3"))
-            .as("__h123")
-          :+ xxhash64(col("__tg.w1"), col("__tg.w2")).as("__h12")
-          :+ xxhash64(col("__tg.w2"), col("__tg.w3")).as("__h23")
-          :+ xxhash64(col("__tg.w2")).as("__h2")
-          :+ xxhash64(col("__tg.w3")).as("__h3"): _*)
-    val raw = trigramKeys(train)
+    val raw = ngramKeys(train, textCol, 3)
     // level-3 counts keep their context key so the γ₃ class counts fall
     // out of ONE aggregation (no second pass over raw)
     val c3 = raw.groupBy(col("__h123"))
@@ -1318,10 +1208,6 @@ object Corpus {
         col("__q3"), col("__d31"), col("__d32"), col("__d33"),
         col("__q2"), col("__d21"), col("__d22"), col("__d23"),
         col("__q1"), col("__d11"), col("__d12"), col("__d13"))
-    val tf = trigramKeys(df, id)
-      .groupBy(id, col("__h123"), col("__h12"), col("__h23"),
-        col("__h2"), col("__h3"))
-      .agg(count(lit(1)).as("__tf"))
     def dbl(c: String) = col(c).cast("double")
     // count-class discount pick and the clamped top term, one per level;
     // a null count coalesces to 0 so the clamp floors at 0 regardless of
@@ -1345,29 +1231,19 @@ object Corpus {
     val b2 = dbl("__mid") * dbl("__q2") * b1
     val a3 = top("__c3", "3") * b2 + gg3 * a2
     val b3 = dbl("__c2") * dbl("__q3") * b2
-    val scored = tf
-      .join(c3.select(col("__h123"), col("__c3")), Seq("__h123"), "left")
-      .join(ctx, Seq("__h12"), "left")
-      .join(g3, Seq("__h12"), "left")
-      .join(kn2.select(col("__h23"), col("__kn2")), Seq("__h23"), "left")
-      .join(mid, Seq("__h2"), "left")
-      .join(g2, Seq("__h2"), "left")
-      .join(kn1, Seq("__h3"), "left")
-      .crossJoin(broadcast(scal))
-      .select(id, col("__tf"),
-        (col("__tf").cast("double") *
-          when(col("__c2").isNotNull, log(b3) - log(a3))
-            .when(col("__mid").isNotNull, log(b2) - log(a2))
-            .otherwise(log(b1) - log(a1)))
-          .as("__nll"))
-      .groupBy(id).agg(
-        sum(col("__tf")).as("__n"),
-        sum(col("__nll").cast(DecimalType(30, 15))).cast("double").as("__s"))
-    df.select(id)
-      .join(scored, Seq(idCol), "left")
-      .select(id,
-        coalesce(col("__n"), lit(0L)).as("n_trigrams"),
-        round(col("__s") / col("__n").cast("double"), 9).as("avg_nll"))
+    nllRollup(df, idCol, ngramKeys(df, textCol, 3, col(idCol)), "n_trigrams",
+      when(col("__c2").isNotNull, log(b3) - log(a3))
+        .when(col("__mid").isNotNull, log(b2) - log(a2))
+        .otherwise(log(b1) - log(a1))) {
+      _.join(c3.select(col("__h123"), col("__c3")), Seq("__h123"), "left")
+        .join(ctx, Seq("__h12"), "left")
+        .join(g3, Seq("__h12"), "left")
+        .join(kn2.select(col("__h23"), col("__kn2")), Seq("__h23"), "left")
+        .join(mid, Seq("__h2"), "left")
+        .join(g2, Seq("__h2"), "left")
+        .join(kn1, Seq("__h3"), "left")
+        .crossJoin(broadcast(scal))
+    }
   }
 
   /** DSIR — Data Selection via Importance Resampling (Xie et al. 2023,
@@ -1707,37 +1583,6 @@ object Corpus {
       (size(units) - size(kept)).cast("long").as("n_units_removed"))
   }
 
-  /** Crawl-URL canonicalization — the dedup key a web corpus actually
-    * joins on: the same page arrives as `HTTP://WWW.Example.COM:80/a`
-    * and `http://example.com/a?utm_source=x`, and exact-dedup without a
-    * canonical form silently keeps both. One scan projection emits:
-    *
-    *  - `url_canon`: scheme + host lowercased, default port stripped
-    *    (http:80 / https:443; other ports kept), fragment dropped,
-    *    empty path normalized to `/`, tracking params removed
-    *    (`utm_*` prefix + the `extraTracking` set), surviving params
-    *    SORTED (param order is transport noise, not identity) and
-    *    re-joined. Path case and percent-escapes are preserved
-    *    untouched — paths are case-sensitive by spec and %-decoding
-    *    without charset context corrupts more than it canonicalizes.
-    *  - `host`: the lowercased, port-stripped authority.
-    *  - `registered_domain`: eTLD+1 by the documented HEURISTIC (no
-    *    public-suffix list ships here): drop one leading `www.`, then
-    *    take the last two labels — or three when the TLD is 2 chars
-    *    and the 2nd-level label is one of co/com/net/org/gov/ac/edu
-    *    (the common ccTLD second-levels, e.g. `example.co.uk`). The
-    *    grouping key for per-domain curation stats and politeness
-    *    budgets; a real PSL plugs in by replacing this one column.
-    *  - `n_params_stripped`: how many params the cleaner removed —
-    *    the observability column for "is this tracker list earning
-    *    its keep".
-    *
-    * Userinfo (`user@host`) is not parsed (stays in `host` — the
-    * crawl sources this targets never emit it; documented, not
-    * hidden). Null/schemeless urls pass through with null parts.
-    * Map-only, zero shuffles; regex/array primitives from the common
-    * Java/RE2 subset only, so the DuckDB oracle mirrors bit-for-bit.
-    */
   /** The URL-family's shared authority extraction — ONE definition of
     * "scheme / host (lowercased, default port stripped) / path+query"
     * consumed by [[urlCanonicalize]] and [[robotsGate]], so the
@@ -1768,7 +1613,38 @@ object Corpus {
   }
 
 
-  /** @param outputs which derived columns to emit (and therefore
+  /** Crawl-URL canonicalization — the dedup key a web corpus actually
+    * joins on: the same page arrives as `HTTP://WWW.Example.COM:80/a`
+    * and `http://example.com/a?utm_source=x`, and exact-dedup without a
+    * canonical form silently keeps both. One scan projection emits:
+    *
+    *  - `url_canon`: scheme + host lowercased, default port stripped
+    *    (http:80 / https:443; other ports kept), fragment dropped,
+    *    empty path normalized to `/`, tracking params removed
+    *    (`utm_*` prefix + the `extraTracking` set), surviving params
+    *    SORTED (param order is transport noise, not identity) and
+    *    re-joined. Path case and percent-escapes are preserved
+    *    untouched — paths are case-sensitive by spec and %-decoding
+    *    without charset context corrupts more than it canonicalizes.
+    *  - `host`: the lowercased, port-stripped authority.
+    *  - `registered_domain`: eTLD+1 by the documented HEURISTIC (no
+    *    public-suffix list ships here): drop one leading `www.`, then
+    *    take the last two labels — or three when the TLD is 2 chars
+    *    and the 2nd-level label is one of co/com/net/org/gov/ac/edu
+    *    (the common ccTLD second-levels, e.g. `example.co.uk`). The
+    *    grouping key for per-domain curation stats and politeness
+    *    budgets; a real PSL plugs in by replacing this one column.
+    *  - `n_params_stripped`: how many params the cleaner removed —
+    *    the observability column for "is this tracker list earning
+    *    its keep".
+    *
+    * Userinfo (`user@host`) is not parsed (stays in `host` — the
+    * crawl sources this targets never emit it; documented, not
+    * hidden). Null/schemeless urls pass through with null parts.
+    * Map-only, zero shuffles; regex/array primitives from the common
+    * Java/RE2 subset only, so the DuckDB oracle mirrors bit-for-bit.
+    *
+    * @param outputs which derived columns to emit (and therefore
     *   compute): any subset of url_canon / host / registered_domain /
     *   n_params_stripped. The internal barrier that protects consumers
     *   from CollapseProject re-inlining ALSO blocks Catalyst's column
@@ -1782,7 +1658,6 @@ object Corpus {
                       extraTracking: Seq[String] =
                         Seq("gclid", "fbclid", "msclkid"),
                       carryCols: Seq[String] = Nil,
-                      pin: Boolean = true,
                       outputs: Seq[String] = Seq("url_canon", "host",
                         "registered_domain", "n_params_stripped"))
       : DataFrame = {
@@ -1844,9 +1719,8 @@ object Corpus {
     // would otherwise have CollapseProject + predicate pushdown
     // re-inline the 20-regex chain per reference (measured on
     // x_link_graph before pinning: 457 KB plan, codegen fallback,
-    // 23.7 s vs 3.4 s at sf0.1). `pin = false` is the opt-out for a
-    // caller that immediately writes/collects this exact projection.
-    if (pin) Pin.pin(out) else out
+    // 23.7 s vs 3.4 s at sf0.1).
+    Pin.pin(out)
   }
 
   /** Outbound-link extraction — the web-graph edge source: every
@@ -2509,6 +2383,37 @@ object Corpus {
       .where(col("loc").isNotNull)
   }
 
+  /** RFC 3986 §6.2.2 percent-encoding normalization, the [[robotsGate]]
+    * comparison form: hex digits uppercase, triplets encoding
+    * UNRESERVED octets (ALPHA / DIGIT / `-._~`) decode, all other
+    * triplets (including `%2F` and `%2A`) stay encoded — so encoded
+    * slashes never collapse into path structure and an encoded `*`
+    * never becomes a wildcard. A `%` not followed by two hex digits
+    * passes through literally. Pure array ops over a `%`-split —
+    * map-only, mirrored expression-for-expression in the oracle SQL.
+    */
+  private def pctNormalize(c: Column): Column = {
+    val hex = "0123456789abcdef"
+    val parts = split(c, "%", -1)
+    val fixed = transform(
+      slice(parts, lit(2), greatest(size(parts) - 1, lit(0))), p => {
+        val v1 = instr(lit(hex), lower(p.substr(lit(1), lit(1)))) - 1
+        val v2 = instr(lit(hex), lower(p.substr(lit(2), lit(1)))) - 1
+        val v = v1 * 16 + v2
+        val valid = length(p) >= 2 && v1 >= 0 && v2 >= 0
+        val unreserved = (v >= 48 && v <= 57) || (v >= 65 && v <= 90) ||
+          (v >= 97 && v <= 122) || v === 45 || v === 46 || v === 95 ||
+          v === 126
+        val rest = p.substr(lit(3), length(p))
+        when(valid && unreserved,
+          concat(call_function("char", v), rest))
+          .when(valid,
+            concat(lit("%"), upper(p.substr(lit(1), lit(2))), rest))
+          .otherwise(concat(lit("%"), p))
+      })
+    concat(element_at(parts, 1), array_join(fixed, ""))
+  }
+
   /** robots.txt URL gate (RFC 9309 §2.2.2) — flag every crawl URL
     * allowed/disallowed under a per-host rule table (host, directive
     * in {allow, disallow}, pattern): patterns match the URL's
@@ -2552,37 +2457,6 @@ object Corpus {
     * @return (idCol, url, host, pathq, allowed, matched_pattern,
     *         matched_directive) — matched_* null when no rule matched
     */
-  /** RFC 3986 §6.2.2 percent-encoding normalization, the [[robotsGate]]
-    * comparison form: hex digits uppercase, triplets encoding
-    * UNRESERVED octets (ALPHA / DIGIT / `-._~`) decode, all other
-    * triplets (including `%2F` and `%2A`) stay encoded — so encoded
-    * slashes never collapse into path structure and an encoded `*`
-    * never becomes a wildcard. A `%` not followed by two hex digits
-    * passes through literally. Pure array ops over a `%`-split —
-    * map-only, mirrored expression-for-expression in the oracle SQL.
-    */
-  private def pctNormalize(c: Column): Column = {
-    val hex = "0123456789abcdef"
-    val parts = split(c, "%", -1)
-    val fixed = transform(
-      slice(parts, lit(2), greatest(size(parts) - 1, lit(0))), p => {
-        val v1 = instr(lit(hex), lower(p.substr(lit(1), lit(1)))) - 1
-        val v2 = instr(lit(hex), lower(p.substr(lit(2), lit(1)))) - 1
-        val v = v1 * 16 + v2
-        val valid = length(p) >= 2 && v1 >= 0 && v2 >= 0
-        val unreserved = (v >= 48 && v <= 57) || (v >= 65 && v <= 90) ||
-          (v >= 97 && v <= 122) || v === 45 || v === 46 || v === 95 ||
-          v === 126
-        val rest = p.substr(lit(3), length(p))
-        when(valid && unreserved,
-          concat(call_function("char", v), rest))
-          .when(valid,
-            concat(lit("%"), upper(p.substr(lit(1), lit(2))), rest))
-          .otherwise(concat(lit("%"), p))
-      })
-    concat(element_at(parts, 1), array_join(fixed, ""))
-  }
-
   def robotsGate(urls: DataFrame, idCol: String, urlCol: String,
                  rules: DataFrame): DataFrame = {
     // ONE authority definition shared with urlCanonicalize — the
@@ -2747,7 +2621,6 @@ object Corpus {
   def htmlExtract(df: DataFrame, idCol: String, htmlCol: String,
                   minBlockChars: Int = 30,
                   charsPerLink: Int = 10,
-                  pin: Boolean = true,
                   outputs: Seq[String] = Seq("clean_text", "n_blocks",
                     "n_blocks_kept", "kept")): DataFrame = {
     require(minBlockChars >= 1, s"minBlockChars must be positive: $minBlockChars")
@@ -2799,8 +2672,8 @@ object Corpus {
     // contract is `where(kept)` + downstream reads of `clean_text` —
     // exactly the filter-pushdown + multi-reference shape that would
     // re-inline the whole extraction chain per consumer. Barrier inside
-    // the function; `pin = false` opts out for write-immediately callers.
-    if (pin) Pin.pin(out) else out
+    // the function.
+    Pin.pin(out)
   }
 
   /** Stage-by-stage curation funnel — the retention table a 100 TB
@@ -3199,20 +3072,6 @@ object Corpus {
     df.withColumn(outCol, array_max(weights).getField("s"))
   }
 
-  /** Leakage-safe split: [[hashSplit]] keyed on the near-duplicate
-    * CLUSTER instead of the document — a near-dup pair straddling
-    * train/test is evaluation leakage (the model is scored on a
-    * paraphrase of its training data), so every document splits by its
-    * connected-component representative (min id;
-    * [[graft.functions.Dedup.connectedComponents]] over any pair stream
-    * — MinHash, SemDeDup, fingerprints) and whole clusters land on one
-    * side. Documents in no pair represent themselves.
-    *
-    * Deterministic and repartition/rerun-invariant like [[hashSplit]];
-    * the only data-sized stages are the component rounds (O(log d)
-    * pointer-jumping, inherited) and one left join of docs to the
-    * (pair-participant-sized, usually far smaller) label table.
-    */
   /** Purged temporal split — the time-series counterpart of
     * [[leakSafeSplit]] (de Prado's purged walk-forward convention):
     * rows before `cutoffUs` train, rows at/after it evaluate, EXCEPT
@@ -3254,6 +3113,20 @@ object Corpus {
       .drop("__last")
   }
 
+  /** Leakage-safe split: [[hashSplit]] keyed on the near-duplicate
+    * CLUSTER instead of the document — a near-dup pair straddling
+    * train/test is evaluation leakage (the model is scored on a
+    * paraphrase of its training data), so every document splits by its
+    * connected-component representative (min id;
+    * [[graft.functions.Dedup.connectedComponents]] over any pair stream
+    * — MinHash, SemDeDup, fingerprints) and whole clusters land on one
+    * side. Documents in no pair represent themselves.
+    *
+    * Deterministic and repartition/rerun-invariant like [[hashSplit]];
+    * the only data-sized stages are the component rounds (O(log d)
+    * pointer-jumping, inherited) and one left join of docs to the
+    * (pair-participant-sized, usually far smaller) label table.
+    */
   def leakSafeSplit(df: DataFrame, idCol: String, pairs: DataFrame,
                     splits: Seq[(String, Double)]): DataFrame = {
     val comp = graft.functions.Dedup.connectedComponents(pairs)
@@ -4260,6 +4133,23 @@ object Corpus {
           .as("label"))
   }
 
+  /** WHATWG windows-1252 decode: bytes 0x80–0x9F via the standard's
+    * index (undefined positions → the C1 controls), everything else
+    * Latin-1 identity. */
+  def decodeAsCp1252(bytes: Array[Byte]): String = {
+    val specials = Map(0x80 -> 0x20AC, 0x82 -> 0x201A, 0x83 -> 0x192,
+      0x84 -> 0x201E, 0x85 -> 0x2026, 0x86 -> 0x2020, 0x87 -> 0x2021,
+      0x88 -> 0x2C6, 0x89 -> 0x2030, 0x8A -> 0x160, 0x8B -> 0x2039,
+      0x8C -> 0x152, 0x8E -> 0x17D, 0x91 -> 0x2018, 0x92 -> 0x2019,
+      0x93 -> 0x201C, 0x94 -> 0x201D, 0x95 -> 0x2022, 0x96 -> 0x2013,
+      0x97 -> 0x2014, 0x98 -> 0x2DC, 0x99 -> 0x2122, 0x9A -> 0x161,
+      0x9B -> 0x203A, 0x9C -> 0x153, 0x9E -> 0x17E, 0x9F -> 0x178)
+    bytes.map { b =>
+      val v = b & 0xFF
+      specials.getOrElse(v, v).toChar
+    }.mkString
+  }
+
   /** The mojibake artifact table: for every repairable target character
     * `c`, the string that appears when c's UTF-8 bytes are mis-decoded
     * as windows-1252 — "é" (C3 A9) surfaces as "Ã©", "’" (E2 80 99) as
@@ -4283,23 +4173,6 @@ object Corpus {
     * the pinned order makes the engine and any mirror resolve the
     * ambiguity identically.
     */
-  /** WHATWG windows-1252 decode: bytes 0x80–0x9F via the standard's
-    * index (undefined positions → the C1 controls), everything else
-    * Latin-1 identity. */
-  def decodeAsCp1252(bytes: Array[Byte]): String = {
-    val specials = Map(0x80 -> 0x20AC, 0x82 -> 0x201A, 0x83 -> 0x192,
-      0x84 -> 0x201E, 0x85 -> 0x2026, 0x86 -> 0x2020, 0x87 -> 0x2021,
-      0x88 -> 0x2C6, 0x89 -> 0x2030, 0x8A -> 0x160, 0x8B -> 0x2039,
-      0x8C -> 0x152, 0x8E -> 0x17D, 0x91 -> 0x2018, 0x92 -> 0x2019,
-      0x93 -> 0x201C, 0x94 -> 0x201D, 0x95 -> 0x2022, 0x96 -> 0x2013,
-      0x97 -> 0x2014, 0x98 -> 0x2DC, 0x99 -> 0x2122, 0x9A -> 0x161,
-      0x9B -> 0x203A, 0x9C -> 0x153, 0x9E -> 0x17E, 0x9F -> 0x178)
-    bytes.map { b =>
-      val v = b & 0xFF
-      specials.getOrElse(v, v).toChar
-    }.mkString
-  }
-
   val mojibakePairs: Seq[(String, String)] = {
     val specials = Seq(0x152, 0x153, 0x160, 0x161, 0x178, 0x17D, 0x17E,
       0x192, 0x2C6, 0x2DC, 0x2013, 0x2014, 0x2018, 0x2019, 0x201A,

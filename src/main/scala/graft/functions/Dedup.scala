@@ -83,8 +83,8 @@ object Dedup {
     * dedup actually targets.
     *
     * Output: (id_a, id_b, hamming) with id_a < id_b, hamming ≤ maxHamming.
-    */
-  /** Scale contract: the pigeonhole gives maxHamming+1 blocks of
+    *
+    * Scale contract: the pigeonhole gives maxHamming+1 blocks of
     * 64/(maxHamming+1) bits, so bucket cardinality per block is
     * 2^(64/(k+1)) — radius 3 yields 2^16 buckets (the web-dedup
     * production regime; bucket occupancy stays tiny at billions of
@@ -259,9 +259,6 @@ object Dedup {
     df.join(doomed, df(idCol) === col("__doomed_id"), "left_anti")
   }
 
-  /** MinHash-LSH near-duplicate candidate pairs with estimated Jaccard ≥
-    * `minEstJaccard`. Output: (id_a, id_b, est_jaccard), id_a < id_b.
-    */
   /** Banding plan for a target Jaccard threshold: the (bands,
     * rowsPerBand) with `bands·rowsPerBand ≤ numHashes` minimizing the
     * integrated step-function error of the S-curve
@@ -295,6 +292,9 @@ object Dedup {
       .minBy { case (b, r) => (err(b, r), r) }
   }
 
+  /** MinHash-LSH near-duplicate candidate pairs with estimated Jaccard ≥
+    * `minEstJaccard`. Output: (id_a, id_b, est_jaccard), id_a < id_b.
+    */
   def minhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
                           shingleN: Int = 5, numHashes: Int = 32,
                           rowsPerBand: Int = 8,

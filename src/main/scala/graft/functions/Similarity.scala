@@ -322,18 +322,10 @@ object Similarity {
     *         (cos desc, neighbor_id); self-pairs dropped when
     *         `excludeSelf`
     */
-  /** @param broadcastQueries true (default) hints the query side into
-    *   the cluster join — right for the small-arrival-batch regime
-    *   (and what makes the partition-pruning subquery fire on a
-    *   cluster-partitioned index). Pass false when the probe batch is
-    *   itself corpus-sized: the join falls back to a plain hash
-    *   equi-join on `cluster` and AQE picks the strategy.
-    */
   def ivfProbeIndex(queries: DataFrame, qIdCol: String, qVecCol: String,
                     centroids: DataFrame, postings: DataFrame,
                     k: Int, nProbe: Int,
-                    excludeSelf: Boolean = false,
-                    broadcastQueries: Boolean = true): DataFrame = {
+                    excludeSelf: Boolean = false): DataFrame = {
     require(k >= 1 && nProbe >= 1)
     val cents: Array[Array[Double]] = centroids
       .select(col("cluster").cast("int"), col("centroid"))
@@ -350,11 +342,10 @@ object Similarity {
       struct((-dotExact(qv, centArr(i))).as("negd"), lit(i).as("c"))): _*)
     val probes = transform(slice(array_sort(scoredCents), 1, np),
       p => p.getField("c"))
-    val q0 = queries.where(qv.isNotNull && norm2Exact(qv) > 0.0)
+    val q = queries.where(qv.isNotNull && norm2Exact(qv) > 0.0)
       .select(col(qIdCol).cast("long").as("__qid"), qv.as("__qv"),
         norm2Exact(qv).as("__qn2"), explode(probes).as("cluster"))
-    val q = if (broadcastQueries) broadcast(q0) else q0
-    val scored0 = postings.join(q, "cluster")
+    val scored0 = postings.join(broadcast(q), "cluster")
     val scored =
       if (excludeSelf) scored0.where(col("id") =!= col("__qid")) else scored0
     // exact cosine with the per-side norms hoisted: n2 is stored in the
@@ -445,8 +436,7 @@ object Similarity {
   def ivfPqProbeIndex(queries: DataFrame, qIdCol: String, qVecCol: String,
                       centroids: DataFrame, codebooks: DataFrame,
                       postings: DataFrame, k: Int, nProbe: Int,
-                      excludeSelf: Boolean = false,
-                      broadcastQueries: Boolean = true): DataFrame = {
+                      excludeSelf: Boolean = false): DataFrame = {
     require(k >= 1 && nProbe >= 1)
     val cents: Array[Array[Double]] = centroids
       .select(col("cluster").cast("int"), col("centroid"))
@@ -472,12 +462,10 @@ object Similarity {
     // ride as float literals so each term is one native dot
     def bookF(j: Int): Column = array(books(j).map(c =>
       array(c.map(x => lit(x.toFloat)): _*)): _*)
-    val q0 = queries.where(qv.isNotNull && norm2Exact(qv) > 0.0)
+    val q = queries.where(qv.isNotNull && norm2Exact(qv) > 0.0)
       .select(col(qIdCol).cast("long").as("__qid"), qv.as("__qv"),
         dotNative(qv, qv).as("__qn2"), explode(probes).as("cluster"))
-    // the broadcastQueries trade is [[ivfProbeIndex]]'s
-    val q = if (broadcastQueries) broadcast(q0) else q0
-    val scored0 = postings.join(q, "cluster")
+    val scored0 = postings.join(broadcast(q), "cluster")
     val scored =
       if (excludeSelf) scored0.where(col("id") =!= col("__qid")) else scored0
     val adcDot = (0 until m).map(j =>
@@ -812,8 +800,8 @@ object Similarity {
     *
     * Output: (id_a, id_b, cos) with id_a < id_b, cos = exact-decimal
     * cosine rounded to 9 places (cross-engine reproducible), cos ≥ minCos.
-    */
-  /** @param saltBuckets pair-generation parallelism *within* a block.
+    *
+    * @param saltBuckets pair-generation parallelism *within* a block.
     *   A plain block equi-join concentrates each block's quadratic work
     *   in one task — fine when blocks ≫ cores, a straggler when a few
     *   huge blocks dominate. With S > 1 the left side takes salt

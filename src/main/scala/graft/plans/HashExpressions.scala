@@ -9,27 +9,6 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the hash-sketch kernels (MinHash,
-  * SimHash, LSH). These are single-pass, allocation-light kernels: the
-  * Column-function formulation (higher-order `transform`/`aggregate` per
-  * hash function) re-evaluates the shingle array per hash and runs
-  * interpreted — O(numHashes × shingles × tokenize) per row vs
-  * O(shingles × numHashes) tight-loop here.
-  *
-  * Each expression participates in whole-stage codegen: `doGenCode` emits
-  * a call to the expression's own `kernel` method (referenced via
-  * `addReferenceObj`), so the sketch projection fuses into the surrounding
-  * generated stage instead of forcing the whole stage to the interpreted
-  * path the way `CodegenFallback` did. The kernel itself is a tight JVM
-  * loop — the same pattern Spark's own hash expressions use for their
-  * non-inlinable cores.
-  *
-  * Reference capability note: go-sif/sif keys reductions via xxhash64 of
-  * user key bytes (reference operations/transform/reduce.go:112-125,
-  * internal/partition/partition-keyable.go:15-57); these expressions use
-  * the same xxhash64 family (Spark's XXH64) for sketch hashing.
-  */
-
 /** Shared input validation: `array<elem>` or analysis-time failure.
   * Returning TypeCheckFailure (not throwing) keeps SQL-registered misuse —
   * e.g. `lsh_bucket(array<double>)`, which would otherwise read garbage
@@ -1244,6 +1223,27 @@ case class WordpieceEncode(child: Expression, vocab: Seq[String],
   override def prettyName: String = "wordpiece_encode"
 }
 
+/** Column constructors for the native Catalyst expressions above,
+  * the hash-sketch kernels (MinHash, SimHash, LSH) among them. These
+  * are single-pass, allocation-light kernels: the
+  * Column-function formulation (higher-order `transform`/`aggregate` per
+  * hash function) re-evaluates the shingle array per hash and runs
+  * interpreted — O(numHashes × shingles × tokenize) per row vs
+  * O(shingles × numHashes) tight-loop here.
+  *
+  * Each expression participates in whole-stage codegen: `doGenCode` emits
+  * a call to the expression's own `kernel` method (referenced via
+  * `addReferenceObj`), so the sketch projection fuses into the surrounding
+  * generated stage instead of forcing the whole stage to the interpreted
+  * path the way `CodegenFallback` did. The kernel itself is a tight JVM
+  * loop — the same pattern Spark's own hash expressions use for their
+  * non-inlinable cores.
+  *
+  * Reference capability note: go-sif/sif keys reductions via xxhash64 of
+  * user key bytes (reference operations/transform/reduce.go:112-125,
+  * internal/partition/partition-keyable.go:15-57); these expressions use
+  * the same xxhash64 family (Spark's XXH64) for sketch hashing.
+  */
 object HashExpressions {
   def wordpieceEncode(word: Column, vocab: Seq[String], unk: String,
                       maxPieceLen: Int): Column =

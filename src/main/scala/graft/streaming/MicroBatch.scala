@@ -315,21 +315,6 @@ object MicroBatch {
       }
   }
 
-  /** Streaming cohort retention — the incremental counterpart of
-    * [[graft.functions.Events.retention]]: events `(user, epochUs)` key
-    * by user; state = (cohort day = the user's FIRST observed day,
-    * emitted day-offsets). Each batch emits one `(user, cohort_day,
-    * day_offset)` row per NEWLY observed offset — exactly once — so the
-    * (cohort_day, day_offset) → n_users table is a trivial idempotent
-    * rollup of the emitted stream (a foreachBatch upsert; a chained
-    * in-stream aggregation after flatMapGroupsWithState is a Spark
-    * restriction). Grouping the emitted rows equals the batch
-    * [[graft.functions.Events.retention]] on in-order epochs; events
-    * for days BEFORE the known cohort day (out-of-order arrivals) are
-    * dropped — the watermark analog, the same in-order contract as
-    * [[streamingFunnel]]. State per user = 1 + #active-days longs —
-    * bounded by stream duration in days, never by event count.
-    */
   /** Incremental per-key exact trend — the streaming dual of
     * [[graft.functions.Events.trendStats]]: points `(key, x, value)`
     * keep 5 integer accumulators per key (n, Σx, Σy_µ, Σxy_µ, Σx² —
@@ -373,6 +358,21 @@ object MicroBatch {
       }
   }
 
+  /** Streaming cohort retention — the incremental counterpart of
+    * [[graft.functions.Events.retention]]: events `(user, epochUs)` key
+    * by user; state = (cohort day = the user's FIRST observed day,
+    * emitted day-offsets). Each batch emits one `(user, cohort_day,
+    * day_offset)` row per NEWLY observed offset — exactly once — so the
+    * (cohort_day, day_offset) → n_users table is a trivial idempotent
+    * rollup of the emitted stream (a foreachBatch upsert; a chained
+    * in-stream aggregation after flatMapGroupsWithState is a Spark
+    * restriction). Grouping the emitted rows equals the batch
+    * [[graft.functions.Events.retention]] on in-order epochs; events
+    * for days BEFORE the known cohort day (out-of-order arrivals) are
+    * dropped — the watermark analog, the same in-order contract as
+    * [[streamingFunnel]]. State per user = 1 + #active-days longs —
+    * bounded by stream duration in days, never by event count.
+    */
   def streamingRetention(events: org.apache.spark.sql.Dataset[(Long, Long)])
       : org.apache.spark.sql.Dataset[(Long, Long, Long)] = {
     val usPerDay = 86400000000L

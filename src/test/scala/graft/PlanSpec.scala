@@ -37,6 +37,31 @@ class PlanSpec extends SparkSpec {
     assert(spliced.isEmpty, s"oracles with a spliced null: ${spliced.toSeq.sorted}")
   }
 
+  // Shuffle and join counts of the n-gram LM scorers and the TF-IDF
+  // index build/append/probe plans at sf0.001: a change that adds an
+  // Exchange or turns a broadcast into a sort-merge join fails here by
+  // query name, without a plan text dump to diff.
+  test("n-gram LM and TF-IDF index plans: pinned Exchange / BroadcastHashJoin / SortMergeJoin counts") {
+    def nodes(p: String, name: String): Int = p.linesIterator.count { l =>
+      val node = l.dropWhile(" :+-".contains(_)).replaceFirst("^\\*\\(\\d+\\) ", "")
+      node == name || node.startsWith(name + " ")
+    }
+    Seq(
+      "x_bigram_nll" -> ((8, 4, 0)),
+      "x_jm_nll" -> ((8, 4, 0)),
+      "x_trigram_nll" -> ((10, 6, 0)),
+      "x_kn_nll" -> ((23, 8, 0)),
+      "x_mkn_nll" -> ((36, 7, 1)),
+      "x_tfidf_probe" -> ((21, 6, 1)),
+      "x_tfidf_append" -> ((6, 4, 0))
+    ).foreach { case (q, want) =>
+      val p = plan(q)
+      val got = (nodes(p, "Exchange"), nodes(p, "BroadcastHashJoin"),
+        nodes(p, "SortMergeJoin"))
+      assert(got == want, s"$q (Exchange, BroadcastHashJoin, SortMergeJoin):\n$p")
+    }
+  }
+
   test("t3_filter: predicate pushdown and column pruning reach the scan") {
     val p = plan("t3_filter")
     assert(p.contains("PushedFilters: ["), p.linesIterator.take(5).mkString("\n"))

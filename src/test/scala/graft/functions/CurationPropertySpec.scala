@@ -846,21 +846,22 @@ class CurationPropertySpec extends SparkSpec {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
-  test("spread callers: identical rows over 1 / 7 partitions, a joined+aggregated upstream, empty") {
+  // the non-empty input shapes every invariance case runs
+  private val shapes: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "repartition(1)" -> (_.repartition(1)),
+    "repartition(7)" -> (_.repartition(7)),
     // joined + aggregated on the row key keeps every row exactly once
-    def upstream(df: DataFrame): DataFrame = {
+    "joined+aggregated" -> { df =>
       val key = df.columns.head
       df.join(df.groupBy(key).agg(count(lit(1)).as("__n")), key).drop("__n")
         .select(df.columns.map(col): _*)
-    }
+    })
+
+  test("spread callers: identical rows over 1 / 7 partitions, a joined+aggregated upstream, empty") {
     spreadCallers.foreach { case (name, run) =>
       val base = rows(run(identity))
       assert(base.nonEmpty, name)
-      Seq[(String, DataFrame => DataFrame)](
-        "repartition(1)" -> (_.repartition(1)),
-        "repartition(7)" -> (_.repartition(7)),
-        "joined+aggregated" -> upstream
-      ).foreach { case (shape, f) =>
+      shapes.foreach { case (shape, f) =>
         assert(rows(run(f)) == base, s"$name over $shape")
       }
     }
@@ -903,5 +904,38 @@ class CurationPropertySpec extends SparkSpec {
     val sample = jobsDuring(Similarity.ivfAssign(
       corpus.select(col("vec_id"), col("embedding")), "vec_id", "embedding", 16))
     assert(jobsDuring(knn(corpus, corpus)) == sample)
+  }
+
+  // --- LM family: same scores however docs and train arrive -------------
+  // Per-document sums accumulate in DECIMAL and every ln input is a
+  // count, so no partitioning or upstream shape may move a bit. The
+  // scorers train on four fifths of the documents (the board's split)
+  // and score all of them, null texts included.
+  private val lmScorers: Seq[(String, (DataFrame, DataFrame) => DataFrame)] = Seq(
+    "unigramNll" -> ((d, _) => Corpus.unigramNll(d, "doc_id", "text")),
+    "bigramNll" -> ((d, tr) => Corpus.bigramNll(d, tr, "doc_id", "text")),
+    "jmNll" -> ((d, tr) => Corpus.jmNll(d, tr, "doc_id", "text")),
+    "trigramNll" -> ((d, tr) => Corpus.trigramNll(d, tr, "doc_id", "text")),
+    "knNll" -> ((d, tr) => Corpus.knNll(d, tr, "doc_id", "text")),
+    "mknNll" -> ((d, tr) => Corpus.mknNll(d, tr, "doc_id", "text",
+      discountFallback = true)),
+    "perplexityBuckets" -> ((d, _) =>
+      Corpus.perplexityBuckets(d, "doc_id", "text", "lang")))
+
+  test("LM scorers: identical rows over 1 / 7 partitions, a joined+aggregated upstream, empty docs") {
+    val train = docs.where(col("doc_id") % 10 < 8)
+    val nDocs = docs.count()
+    lmScorers.foreach { case (name, run) =>
+      val got = run(docs, train).collect()
+      // every doc kept; a null text scores like an empty one
+      assert(got.length == nDocs, name)
+      assert(got.forall(r => r.getAs[Long]("doc_id") % 5 != 0 ||
+        r.isNullAt(r.fieldIndex("avg_nll"))), s"$name scored a null text")
+      val base = got.map(_.toString).toSeq.sorted
+      shapes.foreach { case (shape, f) =>
+        assert(rows(run(f(docs), f(train))) == base, s"$name over $shape")
+      }
+      assert(run(docs.where(lit(false)), train).isEmpty, s"$name over empty docs")
+    }
   }
 }
