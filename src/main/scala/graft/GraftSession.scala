@@ -469,11 +469,6 @@ object GraftSession {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.GraftSession")
 
-  /** Drop all cached table plans — needed if files under a cached dir are
-    * rewritten mid-session (the cached plan pins its file listing).
-    */
-  def clearTableCache(): Unit = tableCache.clear()
-
   private val tableCache =
     new java.util.concurrent.ConcurrentHashMap[(Int, String, String),
       (SparkSession, DataFrame)]()

@@ -26,9 +26,11 @@ object Accumulators {
       implicit be: org.apache.spark.sql.Encoder[B])
       : org.apache.spark.sql.expressions.Aggregator[org.apache.spark.sql.Row, B, B] =
     new org.apache.spark.sql.expressions.Aggregator[org.apache.spark.sql.Row, B, B] {
+      // one layout per deserialized aggregator, i.e. per task, not per row
+      @transient private lazy val layout = new GraftRow.Layout(schema)
       def zero: B = acc.zero
       def reduce(b: B, r: org.apache.spark.sql.Row): B =
-        acc.add(b, GraftRow.fromRow(r, schema))
+        acc.add(b, layout.fromRow(r))
       def merge(a: B, b: B): B = acc.merge(a, b)
       def finish(b: B): B = b
       def bufferEncoder: org.apache.spark.sql.Encoder[B] = be

@@ -1,8 +1,10 @@
 package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
+import org.apache.spark.unsafe.Platform
 
 /** Row-level operation error with row context — mirrors the reference's
   * safe closure wrappers that attach the offending row to the error
@@ -46,8 +48,9 @@ final case class GraftFrame(df: DataFrame, opts: GraftOptions = GraftOptions()) 
     val s = schema
     val ignore = opts.ignoreRowErrors
     val out = df.mapPartitions { it =>
+      val layout = new GraftRow.Layout(s)
       it.flatMap { r =>
-        try Iterator.single(fn(GraftRow.fromRow(r, s)).toRow)
+        try Iterator.single(fn(layout.fromRow(r)).toRow)
         catch {
           case e: Exception if ignore => Iterator.empty
           case e: Exception => throw new RowOpException(s"map failed on row $r", e)
@@ -64,8 +67,9 @@ final case class GraftFrame(df: DataFrame, opts: GraftOptions = GraftOptions()) 
     val s = schema
     val ignore = opts.ignoreRowErrors
     val out = df.mapPartitions { it =>
+      val layout = new GraftRow.Layout(s)
       it.flatMap { r =>
-        try fn(GraftRow.fromRow(r, s), () => GraftRow.empty(s)).map(_.toRow)
+        try fn(layout.fromRow(r), () => layout.empty()).map(_.toRow)
         catch {
           case e: Exception if ignore => Seq.empty
           case e: Exception => throw new RowOpException(s"flatMap failed on row $r", e)
@@ -82,8 +86,9 @@ final case class GraftFrame(df: DataFrame, opts: GraftOptions = GraftOptions()) 
     val s = schema
     val ignore = opts.ignoreRowErrors
     val out = df.mapPartitions { it =>
+      val layout = new GraftRow.Layout(s)
       it.filter { r =>
-        try fn(GraftRow.fromRow(r, s))
+        try fn(layout.fromRow(r))
         catch {
           case e: Exception if ignore => false
           case e: Exception => throw new RowOpException(s"filter failed on row $r", e)
@@ -115,21 +120,35 @@ final case class GraftFrame(df: DataFrame, opts: GraftOptions = GraftOptions()) 
 
   /** T7 Reduce — the reference's aggregation primitive: key each row to
     * bytes, co-locate equal keys, pairwise-merge rows (reference
-    * reduce.go:94-110). Keys compare by *content* (strictly stronger than
-    * the reference's xxhash64-collision merge, reduce.go:112-125).
-    * Partial (map-side) aggregation comes from reduceGroups' combiner.
+    * reduce.go:94-110), run the way the reference runs it: each partition
+    * first merges its rows into partials in a hash map keyed by the key
+    * bytes (reduce.go:56-93, partition_tree.go:83-114), the partials
+    * shuffle by key, and a sort-then-stream pass merges equal keys. Keys
+    * compare by *content* (strictly stronger than the reference's
+    * xxhash64-collision merge, reduce.go:112-125); a `null` key is a key
+    * of its own. The merge folds the right row into the left and keeps
+    * the result.
+    *
+    * Under `ignoreRowErrors` a row whose keyer throws is dropped and a
+    * merge that throws keeps the left row as the merger left it;
+    * otherwise either fails the job with a [[RowOpException]].
     */
   def reduce(keyFn: GraftRow => Array[Byte],
              mergeFn: (GraftRow, GraftRow) => GraftRow): GraftFrame = {
+    if (df.isStreaming) throw new UnsupportedOperationException(
+      "reduce merges the whole input, which a streaming frame never holds: run it " +
+        "per micro-batch with MicroBatch.runPerBatch(stream, batch => " +
+        "GraftFrame(batch).reduce(...).df, sink)")
     val s = schema
-    implicit val rowE = rowEnc(s)
-    implicit val keyE = Encoders.BINARY
-    implicit val tupE = Encoders.tuple(Encoders.BINARY, rowEnc(s))
-    val out = df.groupByKey(r => keyFn(GraftRow.fromRow(r, s)))
-      .reduceGroups((a: Row, b: Row) =>
-        mergeFn(GraftRow.fromRow(a, s), GraftRow.fromRow(b, s)).toRow)
-      .map(_._2)(rowEnc(s))
-    copy(df = out.toDF())
+    val ignore = opts.ignoreRowErrors
+    val key = Iterator.iterate("__key")(_ + "_")
+      .find(k => !s.fieldNames.exists(_.equalsIgnoreCase(k))).get
+    val partials = df.mapPartitions(
+      GraftFrame.combine(_, s, keyFn, mergeFn, ignore))(
+      rowEnc(StructType(StructField(key, BinaryType) +: s.fields)))
+    val out = partials.repartition(col(key)).sortWithinPartitions(key)
+      .mapPartitions(GraftFrame.mergeSorted(_, s, mergeFn, ignore))(rowEnc(s))
+    copy(df = out)
   }
 
   /** T11 KeyColumns fast path: relational grouping on named columns. */
@@ -177,8 +196,8 @@ final case class GraftFrame(df: DataFrame, opts: GraftOptions = GraftOptions()) 
     * [[collectPartitions]] for the reference's exact granularity).
     */
   def collect(limit: Int): Array[GraftRow] = {
-    val s = schema
-    df.limit(limit).collect().map(GraftRow.fromRow(_, s))
+    val layout = new GraftRow.Layout(schema)
+    df.limit(limit).collect().map(layout.fromRow(_))
   }
 
   /** A1 Collect in the reference's exact granularity: pull at most
@@ -193,13 +212,13 @@ final case class GraftFrame(df: DataFrame, opts: GraftOptions = GraftOptions()) 
     */
   def collectPartitions(numPartitions: Int): Array[Array[GraftRow]] = {
     require(numPartitions >= 0, s"numPartitions must be non-negative: $numPartitions")
-    val s = schema
+    val layout = new GraftRow.Layout(schema)
     val rdd = df.rdd
     val n = math.min(numPartitions, rdd.getNumPartitions)
     if (n <= 0) Array.empty
     else spark.sparkContext
       .runJob(rdd, (it: Iterator[Row]) => it.toArray, 0 until n)
-      .map(_.map(GraftRow.fromRow(_, s)))
+      .map(_.map(layout.fromRow(_)))
   }
 
   /** Run an action over this frame while recording per-stage runtime
@@ -264,25 +283,26 @@ final case class GraftFrame(df: DataFrame, opts: GraftOptions = GraftOptions()) 
     * branch; call [[Quarantined.unpersist]] when both sides are consumed.
     */
   def mapQuarantined(fn: GraftRow => GraftRow): Quarantined =
-    quarantined("map") { (r, s) => Iterator.single(fn(GraftRow.fromRow(r, s)).toRow) }
+    quarantined("map") { (r, layout) => Iterator.single(fn(layout.fromRow(r)).toRow) }
 
   def flatMapQuarantined(fn: (GraftRow, () => GraftRow) => Seq[GraftRow]): Quarantined =
-    quarantined("flatMap") { (r, s) =>
-      fn(GraftRow.fromRow(r, s), () => GraftRow.empty(s)).iterator.map(_.toRow)
+    quarantined("flatMap") { (r, layout) =>
+      fn(layout.fromRow(r), () => layout.empty()).iterator.map(_.toRow)
     }
 
   def filterQuarantined(fn: GraftRow => Boolean): Quarantined =
-    quarantined("filter") { (r, s) =>
-      if (fn(GraftRow.fromRow(r, s))) Iterator.single(r) else Iterator.empty
+    quarantined("filter") { (r, layout) =>
+      if (fn(layout.fromRow(r))) Iterator.single(r) else Iterator.empty
     }
 
   private def quarantined(opName: String)(
-      op: (Row, StructType) => Iterator[Row]): Quarantined = {
+      op: (Row, GraftRow.Layout) => Iterator[Row]): Quarantined = {
     val s = schema
     implicit val tagE = Encoders.tuple(rowEnc(s), org.apache.spark.sql.Encoders.STRING)
     val tagged = df.mapPartitions { it =>
+      val layout = new GraftRow.Layout(s)
       it.flatMap { r =>
-        try op(r, s).map(out => (out, null: String))
+        try op(r, layout).map(out => (out, null: String))
         catch {
           // The failing *input* row rides along to the quarantine output.
           case e: Exception => Iterator.single((r, s"${e.getClass.getName}: ${e.getMessage}"))
@@ -309,6 +329,95 @@ final case class Quarantined(frame: GraftFrame, errors: DataFrame,
 object GraftFrame {
   /** Wrap an existing DataFrame/Dataset lineage. */
   def apply(df: DataFrame): GraftFrame = new GraftFrame(df)
+
+  /** Distinct keys a reduce task holds before it emits its partials and
+    * starts over: bounds the map side's memory whatever the key count.
+    */
+  private val CombineEntries = 65536
+
+  /** A reduce key: the keyer's bytes, hashed with xxhash64 (the
+    * reference's key hash, reduce.go:112-125) and compared by content.
+    */
+  private final class ReduceKey(val bytes: Array[Byte]) {
+    override val hashCode: Int =
+      if (bytes == null) 0
+      else {
+        val h = XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET, bytes.length, 42L)
+        (h ^ (h >>> 32)).toInt
+      }
+    override def equals(o: Any): Boolean = o match {
+      case k: ReduceKey => java.util.Arrays.equals(bytes, k.bytes)
+      case _ => false
+    }
+  }
+
+  private def merge(mergeFn: (GraftRow, GraftRow) => GraftRow, ignore: Boolean)(
+      l: GraftRow, r: GraftRow): GraftRow =
+    try mergeFn(l, r)
+    catch {
+      case e: Exception if ignore => l
+      case e: Exception =>
+        throw new RowOpException(s"reduce merge failed on rows ${l.toRow} and ${r.toRow}", e)
+    }
+
+  /** Reduce's map side: merge a partition's rows into one partial per key
+    * and emit them as (key, row…), every [[CombineEntries]] keys and at
+    * the end.
+    */
+  private def combine(it: Iterator[Row], s: StructType,
+                      keyFn: GraftRow => Array[Byte],
+                      mergeFn: (GraftRow, GraftRow) => GraftRow,
+                      ignore: Boolean): Iterator[Row] = {
+    val layout = new GraftRow.Layout(s)
+    val partials = new java.util.HashMap[ReduceKey, GraftRow]()
+    def fill(): Iterator[Row] = {
+      while (it.hasNext && partials.size < CombineEntries) {
+        val r = it.next()
+        val row = layout.fromRow(r)
+        val key =
+          try new ReduceKey(keyFn(row))
+          catch {
+            case e: Exception if ignore => null
+            case e: Exception => throw new RowOpException(s"reduce keyer failed on row $r", e)
+          }
+        if (key != null) {
+          val prev = partials.get(key)
+          partials.put(key, if (prev == null) row else merge(mergeFn, ignore)(prev, row))
+        }
+      }
+      val out = new Array[Row](partials.size)
+      var i = 0
+      partials.forEach((k, v) => { out(i) = v.toRowWith(k.bytes); i += 1 })
+      partials.clear()
+      out.iterator
+    }
+    new Iterator[Row] {
+      private var out: Iterator[Row] = Iterator.empty
+      def hasNext: Boolean = out.hasNext || (it.hasNext && { out = fill(); out.hasNext })
+      def next(): Row = if (hasNext) out.next() else Iterator.empty.next()
+    }
+  }
+
+  /** Reduce's final side: the partials arrive sorted by key (column 0),
+    * so equal keys are adjacent and merge in one streaming pass.
+    */
+  private def mergeSorted(it: Iterator[Row], s: StructType,
+                          mergeFn: (GraftRow, GraftRow) => GraftRow,
+                          ignore: Boolean): Iterator[Row] = {
+    val layout = new GraftRow.Layout(s)
+    val in = it.buffered
+    new Iterator[Row] {
+      def hasNext: Boolean = in.hasNext
+      def next(): Row = {
+        val first = in.next()
+        val key = first.getAs[Array[Byte]](0)
+        var acc = layout.fromRow(first, 1)
+        while (in.hasNext && java.util.Arrays.equals(key, in.head.getAs[Array[Byte]](0)))
+          acc = merge(mergeFn, ignore)(acc, layout.fromRow(in.next(), 1))
+        acc.toRow
+      }
+    }
+  }
 
   /** Accumulator-buffer Encoder resolution: native (codegen'd, columnar)
     * encoders for primitive buffers — these aggregate as HashAggregate —

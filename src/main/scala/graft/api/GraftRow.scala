@@ -1,7 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.catalyst.expressions.{GenericRow, GenericRowWithSchema}
 import org.apache.spark.sql.types.StructType
 
 /** Mutable row facade for closure-based operations — the analogue of the
@@ -13,9 +13,11 @@ import org.apache.spark.sql.types.StructType
   * facade stages mutations in a local buffer and materializes a fresh Row
   * — semantics identical, Tungsten keeps the memory story.
   */
-final class GraftRow private[api] (val schema: StructType, values: Array[Any]) {
+final class GraftRow private[api] (layout: GraftRow.Layout, values: Array[Any]) {
 
-  private def idx(name: String): Int = schema.fieldIndex(name)
+  def schema: StructType = layout.schema
+
+  private def idx(name: String): Int = layout.indexOf(name)
 
   /** Typed getters ERROR on nil cells (reference row.go getters return an
     * error for unset cells) — silently unboxing null to 0/0.0/false would
@@ -49,19 +51,49 @@ final class GraftRow private[api] (val schema: StructType, values: Array[Any]) {
   def setNil(name: String): GraftRow = set(name, null)
 
   private[api] def toRow: Row = new GenericRowWithSchema(values.clone(), schema)
-  private[api] def copyRow: GraftRow = new GraftRow(schema, values.clone())
+
+  /** The row with `head` prepended as an extra leading column. */
+  private[api] def toRowWith(head: Any): Row = {
+    val arr = new Array[Any](values.length + 1)
+    arr(0) = head
+    System.arraycopy(values, 0, arr, 1, values.length)
+    new GenericRow(arr)
+  }
 }
 
 object GraftRow {
-  def fromRow(r: Row, schema: StructType): GraftRow = {
-    val arr = new Array[Any](schema.length)
-    var i = 0
-    while (i < schema.length) { arr(i) = r.get(i); i += 1 }
-    new GraftRow(schema, arr)
-  }
-  /** Fresh all-nil row of the given schema (the reference's RowFactory,
-    * operation.go:28 / flatmap.go:25-35).
+
+  /** Name → position for one schema, built once per partition (or per
+    * task-side aggregator) and shared by every row it makes: a name
+    * resolves through one `java.util.HashMap` probe instead of
+    * `StructType.fieldIndex`'s Scala map lookup on every get and set.
     */
-  def empty(schema: StructType): GraftRow =
-    new GraftRow(schema, new Array[Any](schema.length))
+  private[api] final class Layout(val schema: StructType) {
+    private val n = schema.length
+    private val index = {
+      val m = new java.util.HashMap[String, Integer](n * 2)
+      schema.fieldNames.zipWithIndex.foreach { case (name, i) => m.put(name, i) }
+      m
+    }
+
+    def indexOf(name: String): Int = {
+      val i = index.get(name)
+      if (i == null) throw new IllegalArgumentException(
+        s"no field '$name' in row (fields: ${schema.fieldNames.mkString(", ")})")
+      i
+    }
+
+    /** A row over `r`'s fields `offset until offset + schema.length`. */
+    def fromRow(r: Row, offset: Int = 0): GraftRow = {
+      val arr = new Array[Any](n)
+      var i = 0
+      while (i < n) { arr(i) = r.get(offset + i); i += 1 }
+      new GraftRow(this, arr)
+    }
+
+    /** Fresh all-nil row (the reference's RowFactory, operation.go:28 /
+      * flatmap.go:25-35).
+      */
+    def empty(): GraftRow = new GraftRow(this, new Array[Any](n))
+  }
 }

@@ -112,22 +112,6 @@ object Similarity {
   def lshBucket(vec: Column, dim: Int, nBits: Int, seed: Int = 42): Column =
     graft.plans.HashExpressions.lshBucketF(vec, nBits, seed.toLong)
 
-  /** LSH-accelerated ANN: bucket every vector, join the query's bucket only.
-    * Returns top-k within the query's bucket (recall < 1 by construction —
-    * that's the scale trade; raise nBits↓/probes↑ for recall).
-    */
-  def lshTopK(df: DataFrame, idCol: String, vecCol: String,
-              query: Array[Float], dim: Int, nBits: Int, k: Int): DataFrame = {
-    val q = array(query.map(v => lit(v)): _*)
-    val bucketed = df.select(col(idCol), col(vecCol),
-      lshBucket(col(vecCol), dim, nBits).as("bucket"))
-    val qBucket = lshBucket(q, dim, nBits)
-    bucketed.where(col("bucket") === qBucket)
-      .select(col(idCol), cosine(col(vecCol), q).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
-  }
-
   /** IVF-style ANN: a deterministic coarse quantizer (centroids =
     * hash-sampled corpus vectors) partitions the space; each vector is
     * assigned to its nearest centroid by one plan-local `ArgMaxDot` map

@@ -49,15 +49,6 @@ object TextFunctions {
         length(regexp_replace(text, "[^.,!?;:'\"()-]", "")).cast("double") /
           length(text).cast("double"))
 
-  /** Mean token length in characters (0 for token-less text). */
-  def meanTokenLen(text: Column): Column = {
-    val tc = tokenCount(text)
-    when(tc === 0, lit(0.0))
-      .otherwise(
-        aggregate(tokens(text), lit(0L), (acc, t) => acc + length(t))
-          .cast("double") / tc.cast("double"))
-  }
-
   /** English-ish stopword ratio — fraction of tokens that are common
     * function words. High-quality prose sits around 0.3–0.6; word salad and
     * boilerplate fall outside.

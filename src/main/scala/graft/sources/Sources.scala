@@ -239,11 +239,6 @@ object Sources {
       csv(spark, glob, rawSchema(cols), delimiter, hasHeader, comment, nilValue).df,
       cols))
 
-  /** Typed jsonl: like [[jsonl]] with [[ColType.Time]] formats honored. */
-  def jsonlTyped(spark: SparkSession, glob: String,
-                 cols: Seq[(String, ColType)]): GraftFrame =
-    GraftFrame(parseTimes(jsonl(spark, glob, rawSchema(cols)).df, cols))
-
   /** Read-side schema: Time columns come in as text, converted after. */
   private def rawSchema(cols: Seq[(String, ColType)]): StructType =
     StructType(cols.map {

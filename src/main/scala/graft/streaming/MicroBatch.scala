@@ -139,14 +139,6 @@ object MicroBatch {
       graft.functions.TextFunctions.fingerprint(col(textCol)) === col("__idx_fp"),
       "left_anti")
 
-  /** Drive a streaming query until `timeoutMs` then stop — deterministic
-    * finite execution for tests and bounded jobs.
-    */
-  def awaitAndStop(q: StreamingQuery, timeoutMs: Long): Unit = {
-    try q.awaitTermination(timeoutMs)
-    finally if (q.isActive) q.stop()
-  }
-
   /** Custom keyed state across micro-batches via mapGroupsWithState — the
     * stateful upgrade over the reference's rebuild-per-cycle model
     * (reference plan_executor.go:108-110 rebuilds all reduce state every

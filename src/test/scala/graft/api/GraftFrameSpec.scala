@@ -251,4 +251,75 @@ class GraftFrameSpec extends SparkSpec {
     val e = intercept[org.apache.spark.sql.AnalysisException] { f.collect(5) }
     assert(e.getMessage.toLowerCase.contains("stream"), e.getMessage)
   }
+
+  private def jobsDuring(build: => Any): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      build
+      // job-start events reach listeners asynchronously
+      Thread.sleep(1000)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
+
+  // sif's Reduce is a map-side merge plus one shuffle by key
+  // (reduce.go:56-93): no typed aggregate, whose object-hash buffer falls
+  // back to sorting every row past 128 keys, and no key-append projection
+  test("reduce plan: one hash Exchange on __key, no aggregate, no build job") {
+    val schema = Sources.schemaOf("k" -> ColType.VarString, "v" -> ColType.Int64)
+    val in = Sources.memory(spark, Seq(Row("a", 1L), Row("b", 2L)), schema)
+    var plan = ""
+    val jobs = jobsDuring {
+      plan = in.reduce(r => r.getString("k").getBytes("UTF-8"),
+        (l, r) => l.set("v", l.getLong("v") + r.getLong("v")))
+        .df.queryExecution.executedPlan.toString
+    }
+    assert(jobs == 0, s"building the reduce ran $jobs job(s)")
+    Seq("ObjectHashAggregate", "SortAggregate", "AppendColumns").foreach { n =>
+      assert(!plan.contains(n), s"$n in reduce plan:\n$plan")
+    }
+    val exchanges = plan.linesIterator.filter(_.contains("Exchange")).toSeq
+    assert(exchanges.size == 1, plan)
+    assert("Exchange hashpartitioning\\(__key#\\d+, \\d+\\)".r
+      .findFirstIn(exchanges.head).isDefined, plan)
+  }
+
+  // ROADMAP's four input shapes: the closure ops give the same rows over
+  // one partition, seven, a joined+aggregated upstream, and no rows
+  test("closure ops: identical rows over 1 / 7 partitions, a joined+aggregated upstream, empty") {
+    val schema = Sources.schemaOf("id" -> ColType.Int32, "v" -> ColType.Int64)
+    val base = Sources.memory(spark, (0 until 60).map(i => Row(i, (i * 7 % 11).toLong)), schema).df
+    val shapes: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      "repartition(1)" -> (_.repartition(1)),
+      "repartition(7)" -> (_.repartition(7)),
+      // joined + aggregated on the row key keeps every row exactly once
+      "joined+aggregated" -> (df => df.join(df.groupBy("id").agg(count(lit(1)).as("__n")), "id")
+        .select("id", "v")))
+    def rows(f: GraftFrame): Seq[String] = f.df.collect().map(_.toString).toSeq
+    val ops: Seq[(String, GraftFrame => Seq[String])] = Seq(
+      "map" -> (f => rows(f.map(r => r.set("v", r.getLong("v") * 2)))),
+      "filter" -> (f => rows(f.filter(_.getLong("v") % 3 != 0))),
+      "flatMap" -> (f => rows(f.flatMap((r, fresh) => (0 until r.getInt("id") % 3)
+        .map(i => fresh().set("id", r.getInt("id")).set("v", i.toLong))))),
+      "reduce" -> (f => rows(f.map(r => r.set("id", r.getInt("id") % 4))
+        .reduce(r => Array(r.getInt("id").toByte),
+          (l, r) => l.set("v", l.getLong("v") + r.getLong("v"))))),
+      "accumulate" -> (f => Seq(f.accumulate(
+        Accumulators.compose(Accumulators.counter, Accumulators.adder("v"))).toString)))
+    ops.foreach { case (name, run) =>
+      val want = run(GraftFrame(base)).sorted
+      assert(want.nonEmpty, name)
+      shapes.foreach { case (shape, f) =>
+        assert(run(GraftFrame(f(base))).sorted == want, s"$name over $shape")
+      }
+    }
+    val empty = GraftFrame(base.where(lit(false)))
+    ops.init.foreach { case (name, run) => assert(run(empty).isEmpty, s"$name over an empty frame") }
+    assert(ops.last._2(empty) == Seq("(0,0.0)"))
+  }
 }
