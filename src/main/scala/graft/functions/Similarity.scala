@@ -1,23 +1,35 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-/** Similarity search over embedding columns (`array<float>`).
+/** Similarity search, clustering and compression over embedding columns
+  * (`array<float>`). The families:
+  *  - Exact scoring: brute-force cosine top-k for one query and the
+  *    broadcast [[knnJoin]] for a small query batch; the exactness baseline
+  *    every approximate path is checked against.
+  *  - IVF (inverted file): a coarse quantizer files every vector under its
+  *    nearest centroid, a query probes its `nProbe` nearest lists, and the
+  *    candidates rank top-k per query (ClusterJoin's partition / probe /
+  *    rank shape). [[ivfTopK]], [[knnJoinBlocked]] and its kNN-graph
+  *    callers train the quantizer per call; [[ivfIndex]] / [[ivfPqIndex]]
+  *    persist it with their postings for [[ivfProbeIndex]] /
+  *    [[ivfPqProbeIndex]]. One set of private helpers holds the shared
+  *    steps: centroid read, filing, probe column, per-query rank, exact
+  *    rescore and the PQ table sum.
+  *  - Blocked and LSH pairs: cosine near-duplicate pairs within a block or
+  *    hyperplane-LSH bucket (hash equi-joins, never a global nested loop),
+  *    and the dedup/DBSCAN steps built on them.
+  *  - Clustering, PQ and PCA: exact-decimal spherical k-means, product
+  *    quantization with ADC scoring, power-iteration principal components
+  *    and random projection.
   *
-  * Two paths:
-  *  - Brute-force cosine top-k — the exactness baseline; O(N·d) per query,
-  *    embarrassingly parallel, no shuffle (query vector broadcast as a
-  *    literal/broadcast join).
-  *  - LSH-bucketed (random hyperplanes) — the 100 TB path: each vector maps
-  *    to a small set of bucket keys; candidate generation is a bucket
-  *    equi-join, so cost is per-bucket quadratic instead of global.
-  *
-  * All arithmetic is expression-level (`zip_with`/`aggregate`) so it stays
-  * codegen'd. Exact-decimal accumulation variants exist for oracle
-  * reproducibility (floating-point sums are order-sensitive; decimal sums
-  * are not).
+  * All arithmetic is expression-level (native kernels or `zip_with`/
+  * `aggregate`) so it stays codegen'd. Exact-decimal accumulation variants
+  * exist for oracle reproducibility (floating-point sums are
+  * order-sensitive; decimal sums are not).
   */
 object Similarity {
 
@@ -139,13 +151,17 @@ object Similarity {
       .orderBy("h").limit(nCentroids)
       .select("v").collect()
       .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-    val dim = sampled.head.length
     val refined =
-      if (kmeansIters > 0) refineCentroids(nonNull, vecCol, sampled, kmeansIters)
+      if (kmeansIters > 0 && sampled.nonEmpty)
+        refineCentroids(nonNull, vecCol, sampled, kmeansIters)
       else sampled
-    val assigned = nonNull.withColumn("ivf_bucket",
-      graft.plans.HashExpressions.argMaxDot(col(vecCol), refined.flatten, dim))
-    (assigned, refined)
+    // an empty or all-null corpus has no centroids: every bucket is null
+    // (kmeansClusterExpr's convention) and every search answers empty
+    val bucket =
+      if (refined.isEmpty) lit(null).cast("int")
+      else graft.plans.HashExpressions.argMaxDot(col(vecCol), refined.flatten,
+        refined.head.length)
+    (nonNull.withColumn("ivf_bucket", bucket), refined)
   }
 
   /** Spherical-Lloyd refinement of the coarse quantizer: each round
@@ -194,15 +210,22 @@ object Similarity {
               nCentroids: Int = 16, nProbe: Int = 4,
               kmeansIters: Int = 0): DataFrame = {
     val (assigned, centroids) = ivfAssign(df, idCol, vecCol, nCentroids, kmeansIters)
-    val qd = query.map(_.toDouble)
-    val probes = centroids.zipWithIndex
-      .map { case (c, i) => (i, c.zip(qd).map { case (a, b) => a * b }.sum) }
-      .sortBy(-_._2).take(nProbe).map(_._1)
     val q = array(query.map(v => lit(v)): _*)
-    assigned.where(col("ivf_bucket").isin(probes: _*))
+    assigned.where(col("ivf_bucket").isin(nearestCentroids(centroids, query, nProbe): _*))
       .select(col(idCol), cosine(col(vecCol), q).as("cos"))
       .orderBy(col("cos").desc, col(idCol))
       .limit(k)
+  }
+
+  /** Driver-side probe choice for one query vector: the `nProbe` centroid
+    * ids by double dot with the query, best first.
+    */
+  private def nearestCentroids(cents: Array[Array[Double]], query: Array[Float],
+                               nProbe: Int): Array[Int] = {
+    val qd = query.map(_.toDouble)
+    cents.zipWithIndex
+      .map { case (c, i) => (i, c.zip(qd).map { case (a, b) => a * b }.sum) }
+      .sortBy(-_._2).take(nProbe).map(_._1)
   }
 
   /** Build the PERSISTABLE state of a dense-vector IVF index — the
@@ -239,13 +262,93 @@ object Similarity {
         case (c, i) => (i, c.toSeq)
       })
       .toDF("cluster", "centroid")
+    (centroids, fileVectors(df, idCol, vecCol, cents))
+  }
+
+  /** Postings rows `(id, cluster, vec, n2)`: each non-null, non-zero vector
+    * filed under its exact-decimal-argmax cluster with its squared norm.
+    */
+  private def fileVectors(df: DataFrame, idCol: String, vecCol: String,
+                          cents: Array[Array[Double]]): DataFrame = {
     val v = col(vecCol)
-    val postings = df.where(v.isNotNull && norm2Exact(v) > 0.0)
+    df.where(v.isNotNull && norm2Exact(v) > 0.0)
       .select(col(idCol).cast("long").as("id"),
         kmeansClusterExpr(v, cents).as("cluster"),
         v.as("vec"), norm2Exact(v).as("n2"))
-    (centroids, postings)
   }
+
+  /** A stored centroid table `(cluster, centroid)` as driver literals,
+    * ordered by cluster id.
+    */
+  private def readCentroids(centroids: DataFrame): Array[Array[Double]] = {
+    val cents = centroids
+      .select(col("cluster").cast("int"), col("centroid"))
+      .orderBy("cluster").collect()
+      .map(_.getSeq[Double](1).toArray)
+    require(cents.nonEmpty, "empty centroid table")
+    cents
+  }
+
+  /** Per-row probe list: the `nProbe` clusters with the largest
+    * `dot(q, centroid)`, as an `array<int>`. `elem` makes the centroid
+    * literals (double for the exact index probes, float for the native
+    * kernel). The (−dot, cluster) structs sort ascending = dot desc, ties
+    * to the smaller cluster id (the oracle's ORDER BY dot DESC, c); nC dots
+    * and one nC-struct sort per row, all inside codegen.
+    */
+  private def probeColumn(q: Column, cents: Array[Array[Double]], nProbe: Int,
+                          dot: (Column, Column) => Column,
+                          elem: Double => Column): Column =
+    if (cents.isEmpty) typedLit(Array.empty[Int]) // no centroids → no probes
+    else {
+      val scored = array(cents.indices.map(i =>
+        struct((-dot(q, array(cents(i).map(elem): _*))).as("negd"),
+          lit(i).as("c"))): _*)
+      transform(slice(array_sort(scored), 1, math.min(nProbe, cents.length)),
+        p => p.getField("c"))
+    }
+
+  /** Rows ranked 1..k per query (`__qid`) by (`score` desc, `id`), the
+    * rank as a long `rank` column. The filter sits directly on the window
+    * output, so InferWindowGroupLimit plans partial (pre-exchange) and
+    * final top-k heaps instead of sorting every scored row.
+    */
+  private def rankPerQuery(df: DataFrame, k: Int, score: String,
+                           id: String): DataFrame =
+    df.withColumn("rank", row_number().over(Window.partitionBy(col("__qid"))
+        .orderBy(col(score).desc, col(id))).cast("long"))
+      .where(col("rank") <= k)
+
+  /** A kNN answer `(query_id, neighbor_id, score, rank)`: the top k per
+    * query of the scored `(__qid, id, score)` rows.
+    */
+  private def neighbors(scored: DataFrame, k: Int, score: String,
+                        id: String): DataFrame =
+    rankPerQuery(scored, k, score, id)
+      .select(col("__qid").as("query_id"), col(id).as("neighbor_id"),
+        col(score), col("rank"))
+
+  /** Exact rescore of `(__qid, __cid)` candidates: join back to the corpus
+    * `(__cid, __cv, …)` and query `(__qid, __qv, …)` sides, keep `cols`
+    * and score the round-9 exact-decimal cosine `cos`. The decimal norms
+    * are hoisted per ROW (one projection on each side), not per candidate
+    * pair, so the pair stage pays one exact dot; sqrt(cn2·qn2) keeps
+    * cosineExact's evaluation order, so the values are bit-identical to it.
+    */
+  private def exactRescore(cand: DataFrame, c: DataFrame, q: DataFrame,
+                           cols: Seq[String]): DataFrame =
+    cand.join(c.withColumn("__cn2", norm2Exact(col("__cv"))), "__cid")
+      .join(q.withColumn("__qn2", norm2Exact(col("__qv"))), "__qid")
+      .select(cols.map(col) :+ round(dotExact(col("__cv"), col("__qv")) /
+        sqrt(col("__cn2") * col("__qn2")), 9).as("cos"): _*)
+
+  /** Σⱼ tab(j)(code_j) over the `pq_codes` column: an m×k table of
+    * per-subspace code terms summed per row (ADC dot or norm).
+    */
+  private def tabSum(tab: Seq[Seq[Double]]): Column =
+    aggregate(zip_with(col("pq_codes"), typedLit(tab),
+        (c, t) => element_at(t, c + 1)),
+      lit(0.0), (acc, x) => acc + x)
 
   /** Incremental [[ivfIndex]] maintenance: file NEW vectors into an
     * existing snapshot's FROZEN quantizer — no retraining, no contact
@@ -265,18 +368,8 @@ object Similarity {
     * centroids ARE).
     */
   def ivfIndexAppend(centroids: DataFrame, df: DataFrame,
-                     idCol: String, vecCol: String): DataFrame = {
-    val cents: Array[Array[Double]] = centroids
-      .select(col("cluster").cast("int"), col("centroid"))
-      .orderBy("cluster").collect()
-      .map(_.getSeq[Double](1).toArray)
-    require(cents.nonEmpty, "empty centroid table")
-    val v = col(vecCol)
-    df.where(v.isNotNull && norm2Exact(v) > 0.0)
-      .select(col(idCol).cast("long").as("id"),
-        kmeansClusterExpr(v, cents).as("cluster"),
-        v.as("vec"), norm2Exact(v).as("n2"))
-  }
+                     idCol: String, vecCol: String): DataFrame =
+    fileVectors(df, idCol, vecCol, readCentroids(centroids))
 
   /** Probe an [[ivfIndex]] snapshot with a query batch: top-k indexed
     * vectors per query by exact cosine, scored ONLY inside each query's
@@ -311,41 +404,31 @@ object Similarity {
                     k: Int, nProbe: Int,
                     excludeSelf: Boolean = false): DataFrame = {
     require(k >= 1 && nProbe >= 1)
-    val cents: Array[Array[Double]] = centroids
-      .select(col("cluster").cast("int"), col("centroid"))
-      .orderBy("cluster").collect()
-      .map(_.getSeq[Double](1).toArray)
-    val nC = cents.length
-    val np = math.min(nProbe, nC)
-    def centArr(i: Int): Column = array(cents(i).map(lit(_)): _*)
     val qv = col(qVecCol)
-    // k-struct probe ranking inside the projection: (−exact dot, cluster)
-    // sorts ascending = dot desc, ties to the smaller cluster id — the
-    // oracle's ORDER BY dot DESC, c
-    val scoredCents = array((0 until nC).map(i =>
-      struct((-dotExact(qv, centArr(i))).as("negd"), lit(i).as("c"))): _*)
-    val probes = transform(slice(array_sort(scoredCents), 1, np),
-      p => p.getField("c"))
+    val probes = probeColumn(qv, readCentroids(centroids), nProbe,
+      dotExact, lit(_))
     val q = queries.where(qv.isNotNull && norm2Exact(qv) > 0.0)
       .select(col(qIdCol).cast("long").as("__qid"), qv.as("__qv"),
         norm2Exact(qv).as("__qn2"), explode(probes).as("cluster"))
-    val scored0 = postings.join(broadcast(q), "cluster")
-    val scored =
-      if (excludeSelf) scored0.where(col("id") =!= col("__qid")) else scored0
+    val scored = probedPostings(postings, q, excludeSelf)
     // exact cosine with the per-side norms hoisted: n2 is stored in the
     // index, __qn2 projected once per query — the pair stage pays one
     // exact dot. sqrt(n2·qn2) keeps cosineExact's evaluation order, so
     // values are bit-identical to the one-shot formulation.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__qid")).orderBy(col("cos").desc, col("id"))
-    scored
-      .select(col("__qid"), col("id"),
+    neighbors(scored.select(col("__qid"), col("id"),
         round(dotExact(col("vec"), col("__qv")) /
-          sqrt(col("n2") * col("__qn2")), 9).as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("__qid").as("query_id"), col("id").as("neighbor_id"),
-        col("cos"), col("rank"))
+          sqrt(col("n2") * col("__qn2")), 9).as("cos")),
+      k, "cos", "id")
+  }
+
+  /** Candidate generation of the index probes: the postings' `cluster`
+    * equi-join with the BROADCAST query side (the posting side never
+    * re-shuffles), self-pairs dropped when `excludeSelf`.
+    */
+  private def probedPostings(postings: DataFrame, q: DataFrame,
+                             excludeSelf: Boolean): DataFrame = {
+    val scored = postings.join(broadcast(q), "cluster")
+    if (excludeSelf) scored.where(col("id") =!= col("__qid")) else scored
   }
 
   /** The PQ-compressed persisted index — [[ivfIndex]] with the raw
@@ -364,20 +447,11 @@ object Similarity {
                  nCentroids: Int = 16, rounds: Int = 2,
                  m: Int = 8, codebookK: Int = 256,
                  lloydIters: Int = 1): (DataFrame, DataFrame, DataFrame) = {
-    require(nCentroids >= 1 && rounds >= 0 && m >= 1 && codebookK >= 1)
+    require(m >= 1 && codebookK >= 1)
     val spark = df.sparkSession
     import spark.implicits._
-    val cents = kmeansTrain(df, idCol, vecCol, nCentroids, rounds)
-    val centroids = spark
-      .createDataset(cents.toIndexedSeq.zipWithIndex.map {
-        case (c, i) => (i, c.toSeq)
-      })
-      .toDF("cluster", "centroid")
-    val v = col(vecCol)
-    val base = df.where(v.isNotNull && norm2Exact(v) > 0.0)
-      .select(col(idCol).cast("long").as("id"),
-        kmeansClusterExpr(v, cents).as("cluster"), v.as("vec"))
-    val (encoded, books) = productQuantize(base, "id", "vec", m, codebookK,
+    val (centroids, filed) = ivfIndex(df, idCol, vecCol, nCentroids, rounds)
+    val (encoded, books) = productQuantize(filed, "id", "vec", m, codebookK,
       lloydIters)
     val codebooks = spark
       .createDataset(for {
@@ -387,15 +461,14 @@ object Similarity {
       .toDF("j", "code", "sub")
     // ‖v̂‖² from the codes alone: Σⱼ ‖bookⱼ[codeⱼ]‖² — per-subspace code
     // norms ship as an m×k literal table
-    val nTab: Seq[Seq[Double]] = books.toIndexedSeq.map(book =>
-      book.toIndexedSeq.map(c => c.map(x => x * x).sum))
-    val reconN2 = aggregate(
-      zip_with(col("pq_codes"), typedLit(nTab), (c, t) => element_at(t, c + 1)),
-      lit(0.0), (acc, x) => acc + x)
     val postings = encoded.select(col("id"), col("cluster"),
-      col("pq_codes"), reconN2.as("recon_n2"))
+      col("pq_codes"), tabSum(codeNorms(books)).as("recon_n2"))
     (centroids, codebooks, postings)
   }
+
+  /** Per-subspace squared norms ‖bookⱼ[c]‖² as an m×k table. */
+  private def codeNorms(books: Array[Array[Array[Double]]]): Seq[Seq[Double]] =
+    books.toIndexedSeq.map(book => book.toIndexedSeq.map(c => c.map(x => x * x).sum))
 
   /** Probe an [[ivfPqIndex]] snapshot with a query batch: ADC-ranked
     * top-k per query over the `nProbe` nearest inverted lists — no
@@ -422,10 +495,6 @@ object Similarity {
                       postings: DataFrame, k: Int, nProbe: Int,
                       excludeSelf: Boolean = false): DataFrame = {
     require(k >= 1 && nProbe >= 1)
-    val cents: Array[Array[Double]] = centroids
-      .select(col("cluster").cast("int"), col("centroid"))
-      .orderBy("cluster").collect()
-      .map(_.getSeq[Double](1).toArray)
     val books: Array[Array[Array[Double]]] = codebooks
       .select(col("j").cast("int"), col("code").cast("int"), col("sub"))
       .collect()
@@ -434,14 +503,9 @@ object Similarity {
       .toArray
     val m = books.length
     val d = books(0)(0).length
-    val nC = cents.length
-    val np = math.min(nProbe, nC)
     val qv = col(qVecCol)
-    def centArr(i: Int): Column = array(cents(i).map(lit(_)): _*)
-    val scoredCents = array((0 until nC).map(i =>
-      struct((-dotExact(qv, centArr(i))).as("negd"), lit(i).as("c"))): _*)
-    val probes = transform(slice(array_sort(scoredCents), 1, np),
-      p => p.getField("c"))
+    val probes = probeColumn(qv, readCentroids(centroids), nProbe,
+      dotExact, lit(_))
     // per-query ADC numerator: Σⱼ ⟨q_j, book_j[code_j]⟩ — the codebooks
     // ride as float literals so each term is one native dot
     def bookF(j: Int): Column = array(books(j).map(c =>
@@ -449,22 +513,13 @@ object Similarity {
     val q = queries.where(qv.isNotNull && norm2Exact(qv) > 0.0)
       .select(col(qIdCol).cast("long").as("__qid"), qv.as("__qv"),
         dotNative(qv, qv).as("__qn2"), explode(probes).as("cluster"))
-    val scored0 = postings.join(broadcast(q), "cluster")
-    val scored =
-      if (excludeSelf) scored0.where(col("id") =!= col("__qid")) else scored0
     val adcDot = (0 until m).map(j =>
       dotNative(slice(col("__qv"), j * d + 1, d),
         element_at(bookF(j), element_at(col("pq_codes"), j + 1) + 1)))
       .reduce(_ + _)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__qid")).orderBy(col("adc_cos").desc, col("id"))
-    scored
-      .select(col("__qid"), col("id"),
-        (adcDot / (sqrt(col("recon_n2")) * sqrt(col("__qn2")))).as("adc_cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("__qid").as("query_id"), col("id").as("neighbor_id"),
-        col("adc_cos"), col("rank"))
+    neighbors(probedPostings(postings, q, excludeSelf).select(col("__qid"), col("id"),
+        (adcDot / (sqrt(col("recon_n2")) * sqrt(col("__qn2")))).as("adc_cos")),
+      k, "adc_cos", "id")
   }
 
   /** Batch k-NN join: for EVERY left (query) row, the top-k right
@@ -521,17 +576,12 @@ object Similarity {
       .toDF("__qid", "cands")
       .select(col("__qid"), explode(col("cands")).as("c"))
       .select(col("__qid"), col("c._2").as("__cid"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__qid")).orderBy(col("cos").desc, col("__cid"))
-    broadcast(cand)              // q·k′ rows — hinted, so the corpus-side
-      .join(c, "__cid")          // rescore join can never re-shuffle N rows
-      .join(broadcast(q), "__qid")
-      .select(col("__qid"), col("__cid"),
-        round(cosineExact(col("__cv"), col("__qv")), 9).as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("__qid").as("query_id"), col("__cid").as("neighbor_id"),
-        col("cos"), col("rank"))
+    neighbors(broadcast(cand)    // q·k′ rows — hinted, so the corpus-side
+        .join(c, "__cid")        // rescore join can never re-shuffle N rows
+        .join(broadcast(q), "__qid")
+        .select(col("__qid"), col("__cid"),
+          round(cosineExact(col("__cv"), col("__qv")), 9).as("cos")),
+      k, "cos", "__cid")
   }
 
   /** Blocked batch k-NN join — [[knnJoin]] when the query side does NOT
@@ -578,14 +628,9 @@ object Similarity {
     require(k >= 1, s"k must be positive: $k")
     require(nProbe >= 1, s"nProbe must be positive: $nProbe")
     require(margin >= 0 && saltBuckets >= 1)
-    val kPrime = k + margin
-    val spark = queries.sparkSession
-    import spark.implicits._
     val (assignedC, cents) = ivfAssign(
       corpus.select(col(cIdCol), col(cVecCol)), cIdCol, cVecCol,
       nCentroids, kmeansIters)
-    val nC = cents.length
-    val np = math.min(nProbe, nC)
     val cBase = assignedC.select(col(cIdCol).cast("long").as("__cid"),
       col(cVecCol).as("__cv"), col("ivf_bucket").as("__b"))
     // Spread BOTH join inputs when their planned parallelism is below the
@@ -597,13 +642,9 @@ object Similarity {
     // by value); at real scale both scans have ≫ cores partitions and
     // neither branch fires.
     val c = graft.GraftSession.spreadScan(cBase)
-    // per-query top-np probe buckets: nC native dots + one nC-length
-    // struct sort per row, all inside codegen — corpus-size independent
-    def centF(i: Int): Column = array(cents(i).map(v => lit(v.toFloat)): _*)
-    val scoredCents = array((0 until nC).map(i =>
-      struct((-dotNative(col("__qv"), centF(i))).as("negd"), lit(i).as("b"))): _*)
-    val probes = transform(slice(array_sort(scoredCents), 1, np),
-      p => p.getField("b"))
+    // per-query probe buckets by native float dots (corpus-size independent)
+    val probes = probeColumn(col("__qv"), cents, nProbe,
+      dotNative, v => lit(v.toFloat))
     // null query vectors have no neighbors — drop them (ivfAssign already
     // dropped null corpus vectors); a null __qv would otherwise probe
     // garbage buckets and emit null-score "neighbors"
@@ -643,31 +684,12 @@ object Similarity {
     // whole stage stays in Tungsten rows/codegen. The Aggregator path
     // pays an encoder round-trip per scored pair, which dominates when
     // the probe fan-out is large (self-kNN: corpus × corpus pairs).
-    val cw = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__qid")).orderBy(col("__s").desc, col("__cid"))
-    val cand = scored
-      .withColumn("__rn", row_number().over(cw))
-      .where(col("__rn") <= kPrime)
+    val cand = rankPerQuery(scored, k + margin, "__s", "__cid")
       .select(col("__qid"), col("__cid"))
-    // Exact rescore with per-VECTOR norms hoisted out of the pair loop:
-    // norm2Exact is a per-row projection on each side (corpus-sized and
-    // query-sized), not per candidate PAIR — the pair stage pays one
-    // exact dot, not three. sqrt(cn·qn) keeps the same double evaluation
-    // order as cosineExact, so values are bit-identical.
     val cFull = corpus.select(col(cIdCol).cast("long").as("__cid"), col(cVecCol).as("__cv"))
-      .withColumn("__cn", norm2Exact(col("__cv")))
     val qFull = queries.select(col(qIdCol).cast("long").as("__qid"), col(qVecCol).as("__qv"))
-      .withColumn("__qn", norm2Exact(col("__qv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__qid")).orderBy(col("cos").desc, col("__cid"))
-    cand.join(cFull, "__cid").join(qFull, "__qid")
-      .select(col("__qid"), col("__cid"),
-        round((dotExact(col("__cv"), col("__qv")) /
-          sqrt(col("__cn") * col("__qn"))), 9).as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("__qid").as("query_id"), col("__cid").as("neighbor_id"),
-        col("cos"), col("rank"))
+    neighbors(exactRescore(cand, cFull, qFull, Seq("__qid", "__cid")),
+      k, "cos", "__cid")
   }
 
   /** Self-kNN graph: top-k neighbors of EVERY corpus row (queries =
@@ -759,23 +781,10 @@ object Similarity {
       .distinct()
   }
 
-  /** All-pairs cosine ≥ threshold via LSH bucketing (embedding near-dup).
-    * Output (id_a, id_b, cos), id_a < id_b.
-    */
-  def cosineNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
-                         dim: Int, nBits: Int, minCos: Double): DataFrame = {
-    val b = df.select(col(idCol).as("id"), col(vecCol).as("v"),
-      lshBucket(col(vecCol), dim, nBits).as("bucket"))
-    b.as("a").join(b.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        cosine(col("a.v"), col("b.v")).as("cos"))
-      .where(col("cos") >= minCos)
-  }
-
   /** Embedding-cosine near-dup pairs within a *blocking column* — the
-    * exact-recall variant of [[cosineNearDupPairs]]: recall is 1 within a
-    * block by construction, and the plan is a hash equi-join on the block
+    * exact-recall counterpart of [[lshCandidatePairs]]' hyperplane buckets:
+    * recall is 1 within a block by construction, and the plan is a hash
+    * equi-join on the block
     * key (never an all-pairs nested loop). At 100 TB the block key is a
     * coarse-quantizer bucket (e.g. [[ivfAssign]]'s `ivf_bucket`, or a
     * shard/domain column); per-block pair cost is quadratic, so block
@@ -979,7 +988,9 @@ object Similarity {
                    k: Int, rounds: Int): DataFrame = {
     val cents = kmeansTrain(df, idCol, vecCol, k, rounds)
     val v = col(vecCol)
-    val centLit = array(cents.map(c => array(c.map(lit(_)): _*)): _*)
+    val centLit =
+      if (cents.isEmpty) lit(null).cast("array<array<double>>") // empty corpus
+      else array(cents.map(c => array(c.map(lit(_)): _*)): _*)
     // project the cluster id ONCE, then score against the selected
     // centroid — referencing the argmax expression twice would pay the
     // k exact-dot kernel twice per row
@@ -1184,28 +1195,13 @@ object Similarity {
     // knnJoin uses for its SMALL broadcast query side would drag the
     // full scored stream through JVM-object serialization — measured 6×
     // slower at sf0.1)
-    val cand = scored
-      .withColumn("__r", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("__qid")).orderBy(col("__s").desc, col("__cid"))))
-      .where(col("__r") <= k + margin)
+    val cand = rankPerQuery(scored, k + margin, "__s", "__cid")
       .select(col("__qid"), col("__cid"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__qid")).orderBy(col("cos").desc, col("__cid"))
-    // exact rescore with the decimal norms hoisted per ROW — identical
-    // bits to cosineExact (same expressions, evaluated once per id
-    // instead of once per candidate pair)
     // no broadcast hints: AQE picks the small side at runtime (a hinted
     // broadcast of the candidate list forces its whole upstream pair
     // scan into the broadcast-build path)
-    cand
-      .join(c.withColumn("__cn2", norm2Exact(col("__cv"))), "__cid")
-      .join(q.withColumn("__qn2", norm2Exact(col("__qv"))), "__qid")
-      .select(col("__qid"), col("__ql"), col("__cid"), col("__cl"),
-        round(dotExact(col("__cv"), col("__qv")) /
-          sqrt(col("__cn2") * col("__qn2")), 9).as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
+    rankPerQuery(exactRescore(cand, c, q, Seq("__qid", "__ql", "__cid", "__cl")),
+        k, "cos", "__cid")
       .select(col("__qid").as("query_id"), col("__ql").as("query_label"),
         col("__cid").as("neighbor_id"), col("__cl").as("neighbor_label"),
         col("cos"), col("rank"))
@@ -1245,17 +1241,7 @@ object Similarity {
     val spark = df.sparkSession
     import spark.implicits._
     val vecs = df.where(col(vecCol).isNotNull)
-    val mu: Array[Double] = {
-      val a = Array.fill(dim)(0.0)
-      vecs.select(posexplode(col(vecCol)).as(Seq("pos", "x")))
-        .groupBy(col("pos"))
-        .agg(round(
-          sum(col("x").cast("double").cast(DecimalType(30, 15))).cast("double") /
-            count(lit(1)).cast("double"), 9).as("m"))
-        .collect().foreach(r => a(r.getInt(0)) = r.getDouble(1))
-      a
-    }
-    val muLit = array(mu.map(lit(_)): _*)
+    val mu = corpusMean(vecs, vecCol, dim)
     val v = powerIterate(vecs, vecCol, dim, rounds, mu, Seq.empty)
     spark.createDataset(
         (0 until dim).map(d => (d, mu(d), v(d))))
@@ -1477,8 +1463,8 @@ object Similarity {
       .join(lab, "neighbor_id")
       .groupBy(col("query_id"), col("__lab"))
       .agg(count(lit(1)).as("n_votes"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-    val pick = org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("query_id"))
+    val pick = Window
       .partitionBy(col("query_id"))
       .orderBy(col("n_votes").desc, col("__lab").asc)
     votes
@@ -1589,7 +1575,12 @@ object Similarity {
       System.err.println(s"[graft] WARN productQuantize: k=$k exceeds any " +
         "sane codebook size (production PQ uses k<=256); codebook init " +
         "collects k distinct subvectors per subspace to the driver")
-    val dim = df.select(size(col(vecCol))).head().getInt(0)
+    // the dimension comes from a non-null vector; with none there is
+    // nothing to train a codebook on
+    val dim = df.where(col(vecCol).isNotNull).select(size(col(vecCol))).head(1)
+      .headOption.map(_.getInt(0))
+      .getOrElse(throw new IllegalArgumentException(
+        s"productQuantize: no non-null vector in column $vecCol"))
     require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
     val d = dim / m
 
@@ -1645,7 +1636,7 @@ object Similarity {
     */
   private[graft] def codebookInit(subs: DataFrame, k: Int): DataFrame =
     subs.distinct()
-      .withColumn("rk", row_number().over(org.apache.spark.sql.expressions.Window
+      .withColumn("rk", row_number().over(Window
         .partitionBy(col("j")).orderBy(xxhash64(col("sub")), col("sub"))))
       .where(col("rk") <= k)
       .select(col("j"), col("rk"), col("sub"))
@@ -1685,16 +1676,9 @@ object Similarity {
       val qj = qd.slice(j * d, (j + 1) * d)
       books(j).map(c => c.zip(qj).map { case (a, b) => a * b }.sum).toSeq
     }
-    val normTab: Seq[Seq[Double]] = (0 until m).map { j =>
-      books(j).map(c => c.map(x => x * x).sum).toSeq
-    }
-    def tabSum(tab: Seq[Seq[Double]]) =
-      aggregate(zip_with(col("pq_codes"), typedLit(tab),
-          (c, t) => element_at(t, c + 1)),
-        lit(0.0), (acc, x) => acc + x)
     val qNorm = math.sqrt(qd.map(x => x * x).sum)
     encoded.select(col(idCol),
-        (tabSum(dotTab) / (sqrt(tabSum(normTab)) * lit(qNorm))).as("adc_cos"))
+        (tabSum(dotTab) / (sqrt(tabSum(codeNorms(books))) * lit(qNorm))).as("adc_cos"))
       .orderBy(col("adc_cos").desc, col(idCol))
       .limit(topN)
   }
@@ -1720,22 +1704,6 @@ object Similarity {
     * unprobed list, or outside the ADC top-N) — pin it with an in-query
     * flag against the brute-force answer, per the x_pq_ann discipline.
     *
-    * `residual = true` is the production encoding: PQ compresses the
-    * RESIDUAL v − c(list) instead of v. When the coarse quantizer
-    * explains real variance, residual norms are a fraction of vector
-    * norms and the same m×k codebook budget spends its resolution on the
-    * unexplained part — ADC fidelity jumps at no storage cost (the
-    * classic IVFADC layout). Measured caveat (tools.RecallProbe): on THIS
-    * near-orthogonal corpus 16 centroids explain almost nothing, so
-    * residual ≈ v and recall@budget is a wash — the option earns its keep
-    * on clustered corpora, not here. The
-    * ADC score reconstructs cosine exactly from per-list lookup tables:
-    * ⟨q,v̂⟩ = ⟨q,c⟩ + Σⱼ⟨qⱼ,bookⱼ[code]⟩ and ‖v̂‖² = ‖c‖² +
-    * 2Σⱼ⟨cⱼ,bookⱼ[code]⟩ + Σⱼ‖bookⱼ[code]‖² — three m×k tables per
-    * probed list, still corpus-size-independent plan literals, and the
-    * per-list ADC scans union into one bounded top-N
-    * (TakeOrderedAndProject, never a global sort).
-    *
     * Output: (id, cos) — ADC-survivor top-k by exact cosine,
     * (cos desc, id) order, 9-place rounding (cross-engine reproducible).
     */
@@ -1743,62 +1711,13 @@ object Similarity {
                 query: Array[Float], k: Int,
                 nCentroids: Int = 16, nProbe: Int = 4, kmeansIters: Int = 0,
                 m: Int = 8, codebookK: Int = 256, lloydIters: Int = 0,
-                adcTopN: Int = 400, residual: Boolean = false): DataFrame = {
+                adcTopN: Int = 400): DataFrame = {
     require(k >= 1 && nProbe >= 1 && adcTopN >= k)
     val (assigned, cents) = ivfAssign(df, idCol, vecCol, nCentroids, kmeansIters)
-    val nC = cents.length
-    val qd = query.map(_.toDouble)
-    val probesIdx = cents.zipWithIndex
-      .map { case (c, i) => (i, c.zip(qd).map { case (a, b) => a * b }.sum) }
-      .sortBy(-_._2).take(math.min(nProbe, nC)).map(_._1)
-    val adc =
-      if (!residual) {
-        val (encoded, books) = productQuantize(assigned, idCol, vecCol, m, codebookK, lloydIters)
-        pqCandidates(encoded.where(col("ivf_bucket").isin(probesIdx: _*)),
-          books, query, adcTopN, idCol)
-      } else {
-        // residual column: v − c(bucket), centroids dispatched as plan
-        // literals (nCentroids × dim floats — at a production nCentroids
-        // you'd join a centroid table instead; the ADC math is identical)
-        def centF(i: Int): Column = array(cents(i).map(v => lit(v.toFloat)): _*)
-        val centOfBucket = (1 until nC).foldLeft(centF(0)) { (acc, i) =>
-          when(col("ivf_bucket") === i, centF(i)).otherwise(acc)
-        }
-        val withRes = assigned.withColumn("__rv",
-          zip_with(col(vecCol), centOfBucket, (x, c) => x - c))
-        val (encoded, books) = productQuantize(withRes, idCol, "__rv", m, codebookK, lloydIters)
-        val d = books(0)(0).length
-        val qNorm = math.sqrt(qd.map(x => x * x).sum)
-        def tabSum(tab: Seq[Seq[Double]]): Column =
-          aggregate(zip_with(col("pq_codes"), typedLit(tab),
-              (c, t) => element_at(t, c + 1)),
-            lit(0.0), (acc, x) => acc + x)
-        val perList = probesIdx.map { li =>
-          val cL = cents(li)
-          val qc = qd.zip(cL).map { case (a, b) => a * b }.sum
-          val cNorm2 = cL.map(x => x * x).sum
-          val qTab: Seq[Seq[Double]] = (0 until m).map { j =>
-            val qj = qd.slice(j * d, (j + 1) * d)
-            books(j).map(c => c.zip(qj).map { case (a, b) => a * b }.sum).toSeq
-          }
-          val cTab: Seq[Seq[Double]] = (0 until m).map { j =>
-            val cj = cL.slice(j * d, (j + 1) * d)
-            books(j).map(c => c.zip(cj).map { case (a, b) => a * b }.sum).toSeq
-          }
-          val nTab: Seq[Seq[Double]] = (0 until m).map { j =>
-            books(j).map(c => c.map(x => x * x).sum).toSeq
-          }
-          encoded.where(col("ivf_bucket") === li)
-            .select(col(idCol),
-              ((lit(qc) + tabSum(qTab)) /
-                (sqrt(greatest(lit(0.0),
-                  lit(cNorm2) + lit(2.0) * tabSum(cTab) + tabSum(nTab))) * lit(qNorm)))
-                .as("adc_cos"))
-        }
-        perList.reduce(_.union(_))
-          .orderBy(col("adc_cos").desc, col(idCol))
-          .limit(adcTopN)
-      }
+    val probes = nearestCentroids(cents, query, nProbe)
+    val (encoded, books) = productQuantize(assigned, idCol, vecCol, m, codebookK, lloydIters)
+    val adc = pqCandidates(encoded.where(col("ivf_bucket").isin(probes: _*)),
+      books, query, adcTopN, idCol)
     val q = array(query.map(v => lit(v)): _*)
     adc.select(col(idCol))
       .join(df.select(col(idCol), col(vecCol)), idCol)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.Similarity
@@ -17,18 +16,18 @@ import graft.functions.Similarity
   * queries run the structurally-exact regime and probe-limited recall is
   * spec-covered instead.
   *
-  * Usage: runMain graft.tools.RecallProbe /root/testdata/sf0.1
+  * Usage: RecallProbe <sfDir> (SPARK_GRAFT_CPUS the master width).
   */
 object RecallProbe {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-recall-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val usage = "RecallProbe <sfDir>"
+    val dir = args match {
+      case Array(d) => d
+      case _ => DevArgs.usage(usage)
+    }
+    val cpus = DevArgs.cpus(usage)
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus)
+      .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
     val n = e.count()
@@ -64,18 +63,6 @@ object RecallProbe {
       val hit = (got intersect bf).size
       println(s"[probe] ivfPqTopK nProbe=$nProbe adcTopN=$adcTopN recall=$hit/10" +
         (if (hit == 10) " OK" else " MISS"))
-    }
-    // ADC-budget fidelity: residual vs plain encoding at exhaustive probe,
-    // small candidate budgets — where codebook resolution is the binding
-    // constraint and residual encoding should dominate
-    for (adcTopN <- Seq(20, 50, 100, 200); res <- Seq(false, true)) {
-      val got = Similarity.ivfPqTopK(e, "vec_id", "embedding", qvec, k = 10,
-        nCentroids = 16, nProbe = 16, kmeansIters = 1,
-        m = 8, codebookK = 256, lloydIters = 1, adcTopN = adcTopN,
-        residual = res)
-        .collect().map(_.getLong(0)).toSet
-      val hit = (got intersect bf).size
-      println(s"[probe] ivfPq ${if (res) "residual" else "plain   "} adcTopN=$adcTopN recall=$hit/10")
     }
     spark.stop()
   }

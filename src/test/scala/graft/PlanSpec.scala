@@ -442,6 +442,52 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"))
   }
 
+  // The Similarity-family facts once read off plan text dumps.
+  test("x_ivf_probe / x_ivf_append: per-query partial+final top-5 heaps, broadcast query side") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    Seq("x_ivf_probe", "x_ivf_append").foreach { q =>
+      val exec = SparkEntry.queries(q)(spark, sf()).queryExecution.executedPlan
+      val p = exec.toString
+      // the per-query rank filter runs as heaps on both sides of the
+      // __qid exchange, never as a sort of every scored candidate
+      Seq("Partial", "Final").foreach { mode =>
+        assert(("WindowGroupLimit \\[__qid#\\d+L\\], \\[cos#\\d+ DESC NULLS LAST, " +
+            s"id#\\d+L ASC NULLS FIRST\\], row_number\\(\\), 5, $mode").r
+          .findFirstIn(p).nonEmpty, s"$q lost its $mode top-5 heap:\n$p")
+      }
+      // the query batch, exploded over its probes, is the broadcast build
+      // side of the cluster join; the postings stream
+      val root = exec match { case a: AdaptiveSparkPlanExec => a.initialPlan; case e => e }
+      val probeJoin = root.collect { case j: BroadcastHashJoinExec => j }.filter { j =>
+        val build = if (j.buildSide == BuildRight) j.right else j.left
+        build.find(_.isInstanceOf[GenerateExec]).nonEmpty
+      }
+      assert(probeJoin.nonEmpty, s"$q: query side not broadcast:\n$p")
+    }
+  }
+
+  test("x_knn_graph, x_semdedup, x_quantize: equi-join candidates, no nested loop; quantize map-only") {
+    def equiJoined(name: String, p: String, key: String): Unit = {
+      assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
+        s"$name candidates fell back to a nested loop:\n$p")
+      assert(s"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin) \\[$key#\\d+".r
+        .findFirstIn(p).nonEmpty, s"$name: no equi-join on $key:\n$p")
+    }
+    equiJoined("x_knn_graph", plan("x_knn_graph"), "__b")
+    // x_semdedup's executed plan starts at the component snapshot, so its
+    // candidate generator is pinned with the query's arguments
+    val e = spark.read.parquet(s"${sf()}/embeddings.parquet")
+    equiJoined("x_semdedup pairs", graft.functions.Similarity.cosineNearDupBlocked(
+        e, "vec_id", "embedding", "label", minCos = 0.35, saltBuckets = 4)
+      .queryExecution.executedPlan.toString, "blk")
+    val exchanges = plan("x_quantize").linesIterator.filter(_.contains("Exchange")).toSeq
+    assert(exchanges.forall(_.contains("rangepartitioning")),
+      s"x_quantize is no longer map-only:\n${exchanges.mkString("\n")}")
+  }
+
   test("x_funnel_deep: one data-sized exchange (the per-user group), histogram tiny") {
     val p = plan("x_funnel_deep")
     // events shuffle ONCE into per-user groups; everything after the

@@ -865,12 +865,13 @@ class CurationPropertySpec extends SparkSpec {
         assert(rows(run(f)) == base, s"$name over $shape")
       }
     }
-    // empty input, empty answer (knnJoinBlocked: no queries over the
-    // full corpus — an empty corpus has no centroids to sample)
+    // empty input, empty answer (knnJoinBlocked: no queries, and an
+    // empty corpus, which has no centroids to sample)
     spreadCallers.init.foreach { case (name, run) =>
       assert(run(_.where(lit(false))).isEmpty, s"$name over an empty frame")
     }
     assert(knn(embs.where(lit(false)), embs).isEmpty)
+    assert(knn(embs, embs.where(lit(false))).isEmpty)
   }
 
   test("spread callers: building over a shuffled input runs no job") {
@@ -937,5 +938,72 @@ class CurationPropertySpec extends SparkSpec {
       }
       assert(run(docs.where(lit(false)), train).isEmpty, s"$name over empty docs")
     }
+  }
+
+  // --- Similarity family: same answer however the embeddings arrive -----
+  // The driver-side seed samples (kmeansTrain's smallest ids, the PQ
+  // codebook's hash rank) and every decimal sum must not depend on the
+  // input's partitioning. About 60 vectors keep the case small; queries
+  // are every third of them.
+  private lazy val smallEmbs = embs.where(col("vec_id") % 8 === 0)
+
+  private val similarityOps: Seq[(String, (DataFrame => DataFrame) => DataFrame)] = Seq(
+    "kmeansAssign" -> (f => Similarity.kmeansAssign(f(smallEmbs),
+      "vec_id", "embedding", k = 4, rounds = 2)),
+    "ivfIndex→ivfProbeIndex" -> { f =>
+      val (cents, postings) = Similarity.ivfIndex(f(smallEmbs),
+        "vec_id", "embedding", nCentroids = 4, rounds = 1)
+      Similarity.ivfProbeIndex(f(smallEmbs.where(col("vec_id") % 3 === 0)),
+        "vec_id", "embedding", cents, postings, k = 3, nProbe = 2,
+        excludeSelf = true)
+    },
+    "ivfPqIndex→ivfPqProbeIndex" -> { f =>
+      val (cents, books, postings) = Similarity.ivfPqIndex(f(smallEmbs),
+        "vec_id", "embedding", nCentroids = 4, rounds = 0, m = 8,
+        codebookK = 16, lloydIters = 0)
+      Similarity.ivfPqProbeIndex(f(smallEmbs.where(col("vec_id") % 3 === 0)),
+        "vec_id", "embedding", cents, books, postings, k = 3, nProbe = 2)
+    },
+    "productQuantize" -> (f => Similarity.productQuantize(f(smallEmbs),
+        "vec_id", "embedding", m = 8, k = 16, lloydIters = 1)._1
+      .select("vec_id", "pq_codes")),
+    "hardNegatives" -> (f => Similarity.hardNegatives(f(smallEmbs),
+      "vec_id", "embedding", "label", k = 3)),
+    "knnJoin" -> (f => Similarity.knnJoin(
+      f(smallEmbs.where(col("vec_id") % 3 === 0)), f(smallEmbs),
+      "vec_id", "embedding", "vec_id", "embedding", k = 3)),
+    "principalComponents" -> (f => Similarity.principalComponents(f(smallEmbs),
+      "embedding", dim = 64, nComponents = 2, rounds = 1)))
+
+  test("Similarity family: identical rows over 1 / 7 partitions, a joined+aggregated upstream, empty") {
+    similarityOps.foreach { case (name, run) =>
+      val base = rows(run(identity))
+      assert(base.nonEmpty, name)
+      shapes.foreach { case (shape, f) =>
+        assert(rows(run(f)) == base, s"$name over $shape")
+      }
+    }
+    // empty input: an empty answer where there is nothing to search, a
+    // loud failure where a model must be trained from the vectors, and
+    // the all-zero mean and loadings for PCA
+    val empty: DataFrame => DataFrame = _.where(lit(false))
+    val op = similarityOps.toMap
+    Seq("kmeansAssign", "hardNegatives", "knnJoin").foreach { name =>
+      assert(op(name)(empty).isEmpty, s"$name over an empty frame")
+    }
+    val (cents, postings) = Similarity.ivfIndex(smallEmbs, "vec_id", "embedding",
+      nCentroids = 4, rounds = 1)
+    assert(Similarity.ivfProbeIndex(smallEmbs.where(lit(false)), "vec_id", "embedding",
+      cents, postings, k = 3, nProbe = 2).isEmpty)
+    val noCentroids = intercept[IllegalArgumentException](
+      op("ivfIndex→ivfProbeIndex")(empty))
+    assert(noCentroids.getMessage.contains("empty centroid table"), noCentroids.getMessage)
+    Seq("ivfPqIndex→ivfPqProbeIndex", "productQuantize").foreach { name =>
+      val e = intercept[IllegalArgumentException](op(name)(empty))
+      assert(e.getMessage.contains("no non-null vector"), s"$name: ${e.getMessage}")
+    }
+    val pca = op("principalComponents")(empty).collect()
+    assert(pca.length == 128 &&
+      pca.forall(r => r.getDouble(2) == 0.0 && r.getDouble(3) == 0.0))
   }
 }

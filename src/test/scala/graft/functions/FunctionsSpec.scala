@@ -1077,15 +1077,6 @@ class FunctionsSpec extends SparkSpec {
       nCentroids = 8, nProbe = 2, m = 8, codebookK = 32, lloydIters = 1,
       adcTopN = 50).collect()
     assert(part.nonEmpty && part.length <= 5)
-    // residual (IVFADC) encoding: same structural-exactness guarantee —
-    // all lists probed + lossless residual codebooks + keep-everything
-    // ADC must reproduce brute force bit-for-bit through the per-list
-    // table reconstruction (⟨q,c⟩ + residual tables)
-    val gotRes = Similarity.ivfPqTopK(e, "vec_id", "embedding", q, k = 5,
-      nCentroids = 8, nProbe = 8, m = 8, codebookK = 512, lloydIters = 0,
-      adcTopN = 500, residual = true)
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(gotRes.toSeq == want.toSeq)
   }
 
   test("knnJoin edges: corpus smaller than k, empty query side") {

@@ -47,4 +47,23 @@ class NullVecSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
     assert(kept.contains(2L))
   }
+
+  // every vector null: no centroids to sample, so the quantizer files
+  // nothing and each search answers empty; PQ has no dimension to read
+  test("an all-null-vector corpus: empty ANN answers, loud PQ failure") {
+    val allNull = df.withColumn("v", lit(null).cast(ArrayType(FloatType)))
+    assert(Similarity.knnJoinBlocked(allNull, allNull, "id", "v", "id", "v", 2,
+      nCentroids = 2, nProbe = 2).isEmpty)
+    assert(Similarity.knnJoinBlocked(df, allNull, "id", "v", "id", "v", 2,
+      nCentroids = 2, nProbe = 2).isEmpty)
+    assert(Similarity.mutualKnnEdges(allNull, "id", "v", 2).isEmpty)
+    assert(Similarity.ivfTopK(allNull, "id", "v", Array(1.0f, 0f, 0f, 0f), 2,
+      nCentroids = 2, nProbe = 2).isEmpty)
+    val kept = Similarity.semanticDedupClustered(allNull, "id", "v", 0.5,
+      nCentroids = 2).collect().map(_.getLong(0)).toSet
+    assert(kept == Set(1L, 2L, 3L))
+    val e = intercept[IllegalArgumentException](
+      Similarity.productQuantize(allNull, "id", "v", m = 2, k = 2))
+    assert(e.getMessage.contains("column v"), e.getMessage)
+  }
 }
