@@ -1303,10 +1303,8 @@ private[graft] object DedupQueries {
       val (assigned, centroids) = Similarity.ivfAssign(
         e.where(col("vec_id") =!= 0), "vec_id", "embedding", nCentroids = 16,
         kmeansIters = 2) // spherical-Lloyd-refined quantizer, still exhaustive
-      val qd = qv.map(_.toDouble)
-      val probes = centroids.zipWithIndex
-        .map { case (c, i) => (i, c.zip(qd).map { case (a, b) => a * b }.sum) }
-        .sortBy(-_._2).map(_._1) // every bucket, best-first
+      // every bucket, best-first
+      val probes = Similarity.nearestCentroids(centroids, qv, centroids.length)
       val q = array(qv.map(v => lit(v)): _*)
       assigned.where(col("ivf_bucket").isin(probes: _*))
         .select(col("vec_id"), col("label"),

@@ -122,10 +122,10 @@ private[graft] object StatsQueries {
     // at zero, per-group exact totals and l1 numerators.
     BoardQuery("x_drift_by_group", ((s, dir) => {
       val d = t(s, dir, "documents")
-      graft.functions.Stats.histogramDriftByGroup(
+      graft.functions.Stats.histogramDrift(
           d.where(pmod(col("doc_id"), lit(3)) =!= 0),
           d.where(pmod(col("doc_id"), lit(2)) === 0),
-          "n_chars", "lang", nBins = 12, lo = 0.0, hi = 600.0)
+          "n_chars", nBins = 12, lo = 0.0, hi = 600.0, groupCols = Seq("lang"))
         .select(col("lang"), col("bin").cast("long").as("bin"),
           col("lo_edge"), col("n_a"), col("n_b"),
           big(col("l1_num"), "l1_num"), col("n_a_tot"), col("n_b_tot"))
@@ -719,11 +719,11 @@ private[graft] object StatsQueries {
     // per-group sort), because a global 0.9 can hide a coin-flip score
     // on one language; finals narrowed to BIGINT per the §2.7 gate.
     BoardQuery("x_auc_by_group", ((s, dir) =>
-      graft.functions.Stats.aucPiecesByGroup(
+      graft.functions.Stats.aucPieces(
           t(s, dir, "documents").select(col("lang"),
             col("n_chars").cast("double").as("score"),
             (pmod(col("doc_id"), lit(2)) === 0).as("label")),
-          "score", "label", "lang")
+          "score", "label", groupCols = Seq("lang"))
         .select(col("lang"), col("n_pos"), col("n_neg"),
           big(col("sum_r2_pos"), "sum_r2_pos"),
           big(col("auc_num"), "auc_num"),
@@ -755,11 +755,11 @@ private[graft] object StatsQueries {
     // per-slice quality gate is monitored in; one group-keyed
     // aggregation with map-side partials.
     BoardQuery("x_confusion_by_group", ((s, dir) =>
-      graft.functions.Stats.confusionStatsByGroup(
+      graft.functions.Stats.confusionStats(
           t(s, dir, "documents").select(col("lang"),
             (col("n_chars") >= 200).as("pred"),
             (pmod(col("doc_id"), lit(2)) === 0).as("label")),
-          "pred", "label", "lang")
+          "pred", "label", groupCols = Seq("lang"))
         .orderBy("lang")),
       // Per-group mirror of x_confusion: same exact counts and floor-ppm
       // rationals, grouped by the slice.
@@ -794,12 +794,13 @@ private[graft] object StatsQueries {
     // slice; full (group × bin) grid emitted for every group with
     // eligible rows.
     BoardQuery("x_reliability_by_group", ((s, dir) =>
-      graft.functions.Stats.reliabilityDiagramByGroup(
+      graft.functions.Stats.reliabilityDiagram(
           t(s, dir, "documents").select(col("lang"),
             (pmod(col("n_chars"), lit(100)).cast("double") / lit(100.0))
               .as("score"),
             (pmod(col("doc_id"), lit(2)) === 0).as("label")),
-          "score", "label", "lang", nBins = 10, lo = 0.0, hi = 1.0)
+          "score", "label", nBins = 10, lo = 0.0, hi = 1.0,
+          groupCols = Seq("lang"))
         .orderBy("lang", "bin")),
       // Per-group mirror of x_reliability: same double-space clamp and
       // floor ppm; the grid is every observed group × all ten bins.

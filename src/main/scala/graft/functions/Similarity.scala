@@ -220,7 +220,7 @@ object Similarity {
   /** Driver-side probe choice for one query vector: the `nProbe` centroid
     * ids by double dot with the query, best first.
     */
-  private def nearestCentroids(cents: Array[Array[Double]], query: Array[Float],
+  private[graft] def nearestCentroids(cents: Array[Array[Double]], query: Array[Float],
                                nProbe: Int): Array[Int] = {
     val qd = query.map(_.toDouble)
     cents.zipWithIndex

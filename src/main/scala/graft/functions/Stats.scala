@@ -439,7 +439,8 @@ object Stats {
     require(probs.nonEmpty && probs.forall(p => p >= 0.0 && p <= 1.0),
       s"probabilities must be in [0,1]: $probs")
     require(buckets >= 2 && maxCollect >= 1)
-    val (vals, n, gLo, gHi) = headStats(df, valueCol)
+    val (vals, n, gLo, gHi) = headPass(df, valueCol)
+    require(n > 0, s"no non-null values in $valueCol")
 
     // 0-based fractional positions; the integer ranks we must materialize.
     val positions = probs.map(p => p * (n - 1))
@@ -469,21 +470,27 @@ object Stats {
     require(ranks.nonEmpty && ranks.forall(_ >= 0L),
       s"ranks must be non-negative: $ranks")
     require(buckets >= 2 && maxCollect >= 1)
-    val (vals, n, gLo, gHi) = headStats(df, valueCol)
+    val (vals, n, gLo, gHi) = headPass(df, valueCol)
+    require(n > 0, s"no non-null values in $valueCol")
     require(ranks.forall(_ < n), s"rank out of range (n=$n): $ranks")
     resolveRanks(vals, n, gLo, gHi, ranks.distinct.sorted, buckets,
       maxCollect).toMap
   }
 
-  private def headStats(df: DataFrame,
-                        valueCol: String): (DataFrame, Long, Double, Double) = {
+  /** The head pass every order-statistic path starts with: the
+    * column's non-null, non-NaN doubles as `v`, their count, and their
+    * min/max (NaN when the count is 0) — ONE scan that both sizes the
+    * rank arithmetic and seeds [[resolveRanks]]' bisection.
+    */
+  private def headPass(df: DataFrame,
+                       valueCol: String): (DataFrame, Long, Double, Double) = {
     val vals = df.select(col(valueCol).cast("double").as("v"))
       .where(col("v").isNotNull && !isnan(col("v")))
     val head = vals.agg(count(lit(1)).as("n"), min(col("v")).as("lo"),
       max(col("v")).as("hi")).head()
     val n = head.getLong(0)
-    require(n > 0, s"no non-null values in $valueCol")
-    (vals, n, head.getDouble(1), head.getDouble(2))
+    if (n == 0L) (vals, 0L, Double.NaN, Double.NaN)
+    else (vals, n, head.getDouble(1), head.getDouble(2))
   }
 
   private def resolveRanks(vals: DataFrame, n: Long, gLo: Double,
@@ -784,64 +791,84 @@ object Stats {
       s"ELSE CAST(raise_error(concat('ppm int64 overflow: ', " +
       s"CAST(($num) AS STRING))) AS BIGINT) END) div ($den) END"
 
-  /** One head pass (count + min + max) shared with the bisection —
+  /** [[headPass]] + [[resolveRanks]] for ranks that depend on n —
     * callers that need n AND rank values pay ONE scan for the head
     * stats instead of a count job plus [[exactValueAtRanks]]'
     * internal recount. Empty input yields (0, empty) instead of
     * throwing, so callers keep their empty-frame semantics.
     */
   private def valueAtFractionRanks(df: DataFrame, valueCol: String,
-                                   ranksOf: Long => Seq[Long],
-                                   buckets: Int = 4096,
-                                   maxCollect: Int = 1 << 20)
+                                   ranksOf: Long => Seq[Long])
       : (Long, Map[Long, Double]) = {
-    val vals = df.select(col(valueCol).cast("double").as("v"))
-      .where(col("v").isNotNull && !isnan(col("v")))
-    val head = vals.agg(count(lit(1)).as("n"), min(col("v")).as("lo"),
-      max(col("v")).as("hi")).head()
-    val n = head.getLong(0)
-    if (n == 0L) return (0L, Map.empty)
+    val (vals, n, lo, hi) = headPass(df, valueCol)
     val ranks = ranksOf(n).distinct.filter(r => r >= 0L && r < n).sorted
     if (ranks.isEmpty) (n, Map.empty)
-    else (n, resolveRanks(vals, n, head.getDouble(1), head.getDouble(2),
-      ranks, buckets, maxCollect).toMap)
+    else (n, resolveRanks(vals, n, lo, hi, ranks, 4096, 1 << 20).toMap)
   }
 
-  /** Doubled average rank (2·avg-rank stays integer through ties) of
-    * every distinct value of `valueCol`, WITHOUT a global sort: values
-    * bucket by ~`buckets` exact order-statistic cuts, the cumsum runs
-    * per bucket over the DISTINCT-value table, and bucket offsets come
-    * from a ≤buckets-row rollup (the packOffsets/calibrateScores
-    * two-level decomposition, applied to the value axis). Returns
-    * (`__v`, `outCol`) for join-back on the value.
+  /** Order-statistic bucket of the double column `__v`: the number of
+    * ~`buckets` exact cuts (the values at ranks `i·n div buckets` of
+    * `df`'s `valueCol`) that are ≤ `__v` — the value axis split into
+    * near-equal-count buckets with no global sort, the first level of
+    * [[avgRank2x]]' and [[ksStatistic]]'s two-level cumsums.
     */
-  private def avgRank2x(df: DataFrame, valueCol: String, outCol: String,
-                        buckets: Int = 32): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
+  private def orderStatBucket(df: DataFrame, valueCol: String,
+                              buckets: Int): Column = {
     val (_, byRank) = valueAtFractionRanks(df, valueCol,
       m => (1 until buckets).map(i => i * m / buckets))
     val cuts = byRank.keys.toSeq.sorted.map(byRank)
-    val bk =
-      if (cuts.isEmpty) lit(0)
-      else size(filter(array(cuts.map(lit(_)): _*),
-        c => c <= col("__v").cast("double")))
-    val vals = df.groupBy(col(valueCol).as("__v")).agg(count(lit(1)).as("__nv"))
-      .withColumn("__bk", bk)
+    if (cuts.isEmpty) lit(0)
+    else size(filter(array(cuts.map(lit(_)): _*),
+      c => c <= col("__v").cast("double")))
+  }
+
+  /** Doubled average rank (2·avg-rank stays integer through ties) of
+    * every distinct value of `valueCol` within its `groupCols` group
+    * (`Nil`: one group, the whole frame), WITHOUT a global or
+    * per-group sort: values bucket by ~`buckets` exact order-statistic
+    * cuts, the cumsum runs per (group, bucket) over the DISTINCT-value
+    * table, and bucket offsets come from a (#groups × ≤buckets)-row
+    * broadcast rollup (the packOffsets/calibrateScores two-level
+    * decomposition, applied to the value axis). The cuts stay GLOBAL —
+    * one shared order-statistic pass; per-group cuts would cost one
+    * bisection per group — so under group↔value correlation they can't
+    * balance every group's buckets, but each window partition is still
+    * bounded by its bucket's distinct values. Grouped use assumes
+    * slice-like group cardinality (languages, sources): the offset
+    * table must broadcast. Returns (`groupCols`…, `__v`, `outCol`) for
+    * join-back on the group and value.
+    */
+  private def avgRank2x(df: DataFrame, valueCol: String, outCol: String,
+                        groupCols: Seq[String] = Nil,
+                        buckets: Int = 32): DataFrame = {
+    val gs = groupCols.map(col)
+    val vals = df.groupBy(gs :+ col(valueCol).as("__v"): _*)
+      .agg(count(lit(1)).as("__nv"))
+      .withColumn("__bk", orderStatBucket(df, valueCol, buckets))
     val smallerInBucket = coalesce(
-      sum(col("__nv")).over(w.partitionBy(col("__bk")).orderBy(col("__v"))
-        .rowsBetween(w.unboundedPreceding, -1)), lit(0L))
-    // ≤buckets rows: the only unpartitioned window is metadata-sized
+      sum(col("__nv")).over(Window.partitionBy(gs :+ col("__bk"): _*)
+        .orderBy(col("__v")).rowsBetween(Window.unboundedPreceding, -1)),
+      lit(0L))
+    // ≤ #groups × buckets rows: the offset window is metadata-sized
     // (the Compaction band-offset precedent)
-    val offs = vals.groupBy(col("__bk")).agg(sum(col("__nv")).as("__bt"))
-      .select(col("__bk"), coalesce(sum(col("__bt")).over(
-        w.orderBy(col("__bk")).rowsBetween(w.unboundedPreceding, -1)),
-        lit(0L)).as("__boff"))
-    vals.join(broadcast(offs), Seq("__bk"))
-      .select(col("__v"),
+    val offs = vals.groupBy(gs :+ col("__bk"): _*)
+      .agg(sum(col("__nv")).as("__bt"))
+      .select(gs ++ Seq(col("__bk"), coalesce(sum(col("__bt")).over(
+        Window.partitionBy(gs: _*).orderBy(col("__bk"))
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("__boff")): _*)
+    vals.join(broadcast(offs), groupCols :+ "__bk")
+      .select(gs ++ Seq(col("__v"),
         // min rank = offset+smaller+1; 2·avg = 2·min + (n_v − 1)
         (lit(2L) * (col("__boff") + smallerInBucket + 1L) +
-          col("__nv") - 1L).as(outCol))
+          col("__nv") - 1L).as(outCol)): _*)
   }
+
+  /** `df` without the rows that have a null in any of `groupCols` —
+    * the grouped metrics' contract (a row that can't name its slice
+    * can't drift it); `Nil` (SQL's `GROUP BY ()`) keeps every row.
+    */
+  private def keyed(df: DataFrame, groupCols: Seq[String]): DataFrame =
+    groupCols.foldLeft(df)((d, g) => d.where(col(g).isNotNull))
 
   /** Exact ROC-AUC pieces via the Mann–Whitney rank-sum identity —
     * the one-number ranking quality of a score against a boolean label
@@ -851,7 +878,7 @@ object Stats {
     * positives' DOUBLED average ranks over the pooled scores (the
     * [[spearmanPieces]] tie convention — average ranks make ties
     * contribute exactly ½, the standard AUC-with-ties definition).
-    * Output is one row of exact integers: `n_pos`, `n_neg`,
+    * Output is one row of exact integers per group: `n_pos`, `n_neg`,
     * `sum_r2_pos`, and the rational `auc_num / auc_den`
     * (`auc_den = 2·n⁺·n⁻`; 0 ⇔ one class is absent, AUC undefined,
     * the row still reports its counts). Rows with null/NaN score or
@@ -860,26 +887,38 @@ object Stats {
     * int64, never this; oracled callers narrow at the query edge per
     * the no-int128 gate convention.
     *
+    * `groupCols` gives one row PER GROUP (language, source, …) with
+    * ranks counted within the group, because quality-gate drift is
+    * per-slice in practice: a corpus-global AUC of 0.9 can hide a
+    * coin-flip score on one language. The group columns lead the
+    * output under their own names; rows with a null group are
+    * excluded. `Nil` is the global form: one row, honest zero counts
+    * on empty input.
+    *
     * Scale shape: ONE ranking via [[avgRank2x]]'s two-level
     * decomposition (distinct-value census + per-bucket cumsum + a
-    * ≤buckets-row offset rollup — no global sort), a value join-back,
-    * one 1-row aggregation.
+    * ≤ #groups × buckets-row offset rollup — no global or per-group
+    * sort), a value join-back, one group-keyed aggregation.
     */
-  def aucPieces(df: DataFrame, scoreCol: String,
-                labelCol: String): DataFrame = {
+  def aucPieces(df: DataFrame, scoreCol: String, labelCol: String,
+                groupCols: Seq[String] = Nil): DataFrame = {
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
+    val gs = groupCols.map(col)
     // base feeds the ranking (head pass + bisection + census) and the
     // final join — snapshot once (the spearmanPieces discipline)
-    val basePlan = df.select(col(scoreCol).cast("double").as("__s"),
-        col(labelCol).cast("boolean").as("__y"))
+    val basePlan = keyed(df, groupCols)
+      .select(gs ++ Seq(col(scoreCol).cast("double").as("__s"),
+        col(labelCol).cast("boolean").as("__y")): _*)
       .where(col("__s").isNotNull && !isnan(col("__s")) &&
         col("__y").isNotNull)
     val base = Snapshots.snapshot(basePlan)
-    val ranks = avgRank2x(base.select(col("__s").as("__v")), "__v", "__r2")
+    val ranks = avgRank2x(base.select(gs :+ col("__s").as("__v"): _*),
+      "__v", "__r2", groupCols)
     val nPosD = col("n_pos").cast(d38)
     // coalesce: an empty eligible set reports honest zeros (den 0 ⇒
     // undefined AUC), not a row of nulls — SUM over nothing is null
-    base.join(ranks.withColumnRenamed("__v", "__s"), Seq("__s"))
+    base.join(ranks.withColumnRenamed("__v", "__s"), groupCols :+ "__s")
+      .groupBy(gs: _*)
       .agg(
         coalesce(sum(when(col("__y"), 1L).otherwise(0L)), lit(0L))
           .as("n_pos"),
@@ -887,17 +926,17 @@ object Stats {
           .as("n_neg"),
         coalesce(sum(when(col("__y"), col("__r2")).otherwise(lit(0L))
           .cast(d38)), lit(0L).cast(d38)).cast(d38).as("sum_r2_pos"))
-      .select(col("n_pos"), col("n_neg"), col("sum_r2_pos"),
+      .select(gs ++ Seq(col("n_pos"), col("n_neg"), col("sum_r2_pos"),
         (col("sum_r2_pos") - nPosD * (nPosD + lit(1L).cast(d38)))
           .cast(d38).as("auc_num"),
         (lit(2L).cast(d38) * nPosD * col("n_neg").cast(d38))
-          .cast(d38).as("auc_den"))
+          .cast(d38).as("auc_den")): _*)
   }
 
   /** Binary-gate confusion report — the deployment-side companion to
     * [[aucPieces]] (AUC evaluates the SCORE; this evaluates the
     * thresholded GATE actually shipped): one row of exact counts
-    * (tp/fp/tn/fn) plus precision/recall/F1 as exact floor
+    * (tp/fp/tn/fn) per group plus precision/recall/F1 as exact floor
     * parts-per-million — `f1_ppm = 2·tp·10⁶ div (2·tp + fp + fn)`, the
     * algebraic form that needs no intermediate ratio. Degenerate
     * denominators (no predicted positives / no actual positives /
@@ -907,18 +946,24 @@ object Stats {
     * exists to catch. Rows with a null on either side are excluded
     * and reported in `n_excluded`.
     *
-    * Scale shape: ONE map-only classification pass reduced to a 1-row
-    * aggregate with map-side partials — nothing shuffles but four
-    * counters.
+    * `groupCols` reports the gate PER GROUP — the form a per-language
+    * quality gate is actually monitored in — with the group columns
+    * first and null groups excluded; `Nil` gives the one global row.
+    *
+    * Scale shape: ONE map-only classification pass reduced to a
+    * group-keyed aggregate with map-side partials — nothing shuffles
+    * but four counters per group.
     */
-  def confusionStats(df: DataFrame, predCol: String,
-                     labelCol: String): DataFrame = {
+  def confusionStats(df: DataFrame, predCol: String, labelCol: String,
+                     groupCols: Seq[String] = Nil): DataFrame = {
     val p = col(predCol).cast("boolean")
     val y = col(labelCol).cast("boolean")
     val both = p.isNotNull && y.isNotNull
+    val gs = groupCols.map(col)
     // coalesce: a fully empty input reports honest zero counts (SUM
     // over nothing is null)
-    df.agg(
+    keyed(df, groupCols).groupBy(gs: _*)
+      .agg(
         coalesce(sum(when(both && p && y, 1L).otherwise(0L)), lit(0L))
           .as("tp"),
         coalesce(sum(when(both && p && !y, 1L).otherwise(0L)), lit(0L))
@@ -929,11 +974,12 @@ object Stats {
           .as("fn"),
         coalesce(sum(when(both, 0L).otherwise(1L)), lit(0L))
           .as("n_excluded"))
-      .select(col("tp"), col("fp"), col("tn"), col("fn"), col("n_excluded"),
+      .select(gs ++ Seq(col("tp"), col("fp"), col("tn"), col("fn"),
+        col("n_excluded"),
         expr(ppmSql("tp", "tp + fp")).as("precision_ppm"),
         expr(ppmSql("tp", "tp + fn")).as("recall_ppm"),
         expr(ppmSql("2L * tp", "2L * tp + fp + fn")).as("f1_ppm"),
-        expr(ppmSql("tp + tn", "tp + fp + tn + fn")).as("accuracy_ppm"))
+        expr(ppmSql("tp + tn", "tp + fp + tn + fn")).as("accuracy_ppm")): _*)
   }
 
   /** Calibration reliability table — [[aucPieces]] tells you the score
@@ -948,198 +994,61 @@ object Stats {
     * reliability curve with silent holes misreads as calibrated).
     * Null/NaN scores and null labels are excluded.
     *
-    * Scale shape: one map-only binning pass + a ≤nBins-keyed
-    * aggregation; the bin grid crossJoins a broadcast 1-row nothing —
-    * it IS the small side.
+    * `groupCols` gives the table PER GROUP — "a 0.7 means 70%" must
+    * hold per language, not just on the corpus average: the group
+    * columns lead, null groups are excluded, and the grid is every
+    * (group, bin) cell of the groups with ≥ 1 eligible row (a group
+    * whose rows are all excluded has nothing to calibrate). `Nil` emits
+    * the full bin grid, even over an empty input.
+    *
+    * Scale shape: one map-only binning pass + a (group, bin)-keyed
+    * aggregation; the grid is the aggregated table's distinct groups ×
+    * nBins — metadata-sized (globally, a broadcast nBins-row range).
     */
   def reliabilityDiagram(df: DataFrame, scoreCol: String, labelCol: String,
-                         nBins: Int, lo: Double, hi: Double): DataFrame = {
+                         nBins: Int, lo: Double, hi: Double,
+                         groupCols: Seq[String] = Nil): DataFrame = {
     require(nBins >= 1, s"need at least one bin: $nBins")
     require(lo < hi, s"need lo < hi: ($lo, $hi)")
     val w = (hi - lo) / nBins
     val dec = org.apache.spark.sql.types.DecimalType(28, 9)
+    val gs = groupCols.map(col)
     // |s| < 10¹⁹ gates the DECIMAL(28,9) mean accumulation the same way
     // NaN is gated: a wilder score would clamp into a boundary bin but
     // its decimal cast would null out of the bin's sum while still
     // counting into n — the silent-skew failure the trendStats gate
     // closes; such a score has no meaningful place on a [lo, hi)
     // calibration axis anyway, so the row is excluded outright
-    val binned = df.select(col(scoreCol).cast("double").as("__s"),
-        col(labelCol).cast("boolean").as("__y"))
+    val binned = keyed(df, groupCols)
+      .select(gs ++ Seq(col(scoreCol).cast("double").as("__s"),
+        col(labelCol).cast("boolean").as("__y")): _*)
       .where(col("__s").isNotNull && !isnan(col("__s")) &&
         abs(col("__s")) < lit(1e19) && col("__y").isNotNull)
       // clamp in DOUBLE space BEFORE floor/cast: a wild-but-gated score
       // (|s| up to 1e19) would overflow any integer cast of the raw
       // floor; least/greatest on the double ratio pins it into
       // [0, nBins-1] first, so floor's long result is always in range
-      .select(floor(least(lit((nBins - 1).toDouble), greatest(lit(0.0),
+      .select(gs ++ Seq(floor(least(lit((nBins - 1).toDouble), greatest(lit(0.0),
         (col("__s") - lit(lo)) / lit(w)))).as("bin"),
-        col("__s"), col("__y"))
-      .groupBy(col("bin"))
+        col("__s"), col("__y")): _*)
+      .groupBy(gs :+ col("bin"): _*)
       .agg(count(lit(1)).as("n"),
         sum(when(col("__y"), 1L).otherwise(0L)).as("n_pos"),
         sum(col("__s").cast(dec)).as("__ssum"))
     val spark = df.sparkSession
     import spark.implicits._
-    spark.createDataset(0 until nBins).toDF("b")
+    val bins = spark.createDataset(0 until nBins).toDF("b")
       .select(col("b").cast("long").as("bin"))
-      .join(binned, Seq("bin"), "left")
-      .select(col("bin"), (lit(lo) + col("bin") * lit(w)).as("lo_edge"),
+    // GROUP BY () has its one group even over no rows: the full grid
+    val grid = if (groupCols.isEmpty) bins
+      else binned.select(gs: _*).distinct().crossJoin(bins)
+    grid.join(binned, groupCols :+ "bin", "left")
+      .select(gs ++ Seq(col("bin"), (lit(lo) + col("bin") * lit(w)).as("lo_edge"),
         coalesce(col("n"), lit(0L)).as("n"),
         coalesce(col("n_pos"), lit(0L)).as("n_pos"),
         expr(ppmSql("coalesce(n_pos, 0L)", "n")).as("frac_pos_ppm"),
         (col("__ssum").cast("double") / col("n").cast("double"))
-          .as("mean_score"))
-  }
-
-  /** [[avgRank2x]] with a group key: doubled average ranks of every
-    * distinct (group, value) pair, ranks counted WITHIN the group.
-    * Same two-level decomposition — the bucket cuts stay GLOBAL (one
-    * shared order-statistic pass; per-group cuts would cost one
-    * bisection per group), the cumsum window partitions by
-    * (group, bucket), and the offset rollup is a (#groups × ≤buckets)-
-    * row broadcast. Global cuts can't balance every group's buckets
-    * under group↔value correlation, but each window partition is still
-    * bounded by that bucket's distinct values — the same guarantee the
-    * ungrouped form gives. Assumes slice-like group cardinality
-    * (languages, sources): the offset table must broadcast.
-    */
-  private def avgRank2xByGroup(df: DataFrame, groupCol: String,
-                               valueCol: String, outCol: String,
-                               buckets: Int = 32): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-    val (_, byRank) = valueAtFractionRanks(df, valueCol,
-      m => (1 until buckets).map(i => i * m / buckets))
-    val cuts = byRank.keys.toSeq.sorted.map(byRank)
-    val bk =
-      if (cuts.isEmpty) lit(0)
-      else size(filter(array(cuts.map(lit(_)): _*),
-        c => c <= col("__v").cast("double")))
-    val vals = df.groupBy(col(groupCol).as("__g"), col(valueCol).as("__v"))
-      .agg(count(lit(1)).as("__nv"))
-      .withColumn("__bk", bk)
-    val smallerInBucket = coalesce(
-      sum(col("__nv")).over(w.partitionBy(col("__g"), col("__bk"))
-        .orderBy(col("__v")).rowsBetween(w.unboundedPreceding, -1)),
-      lit(0L))
-    val offs = vals.groupBy(col("__g"), col("__bk"))
-      .agg(sum(col("__nv")).as("__bt"))
-      .select(col("__g"), col("__bk"), coalesce(sum(col("__bt")).over(
-        w.partitionBy(col("__g")).orderBy(col("__bk"))
-          .rowsBetween(w.unboundedPreceding, -1)), lit(0L)).as("__boff"))
-    vals.join(broadcast(offs), Seq("__g", "__bk"))
-      .select(col("__g"), col("__v"),
-        (lit(2L) * (col("__boff") + smallerInBucket + 1L) +
-          col("__nv") - 1L).as(outCol))
-  }
-
-  /** Per-slice [[aucPieces]] — one Mann–Whitney AUC row PER GROUP
-    * (language, source, …), because quality-gate drift is per-slice in
-    * practice: a corpus-global AUC of 0.9 can hide a coin-flip score
-    * on one language. Same exact algebra, ranks computed within each
-    * group by [[avgRank2xByGroup]]'s decomposition (no global OR
-    * per-group sort). Null groups are excluded like null labels — a
-    * row that can't name its slice can't drift it. Output one row per
-    * group: (groupCol, n_pos, n_neg, sum_r2_pos, auc_num, auc_den),
-    * DECIMAL(38,0) exact; oracled callers narrow at the query edge.
-    */
-  def aucPiecesByGroup(df: DataFrame, scoreCol: String, labelCol: String,
-                       groupCol: String): DataFrame = {
-    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val basePlan = df.select(col(groupCol).as("__g"),
-        col(scoreCol).cast("double").as("__s"),
-        col(labelCol).cast("boolean").as("__y"))
-      .where(col("__g").isNotNull && col("__s").isNotNull &&
-        !isnan(col("__s")) && col("__y").isNotNull)
-    val base = Snapshots.snapshot(basePlan)
-    val ranks = avgRank2xByGroup(
-      base.select(col("__g"), col("__s").as("__v")), "__g", "__v", "__r2")
-    val nPosD = col("n_pos").cast(d38)
-    base.join(ranks.withColumnRenamed("__v", "__s"), Seq("__g", "__s"))
-      .groupBy(col("__g"))
-      .agg(
-        sum(when(col("__y"), 1L).otherwise(0L)).as("n_pos"),
-        sum(when(col("__y"), 0L).otherwise(1L)).as("n_neg"),
-        sum(when(col("__y"), col("__r2")).otherwise(lit(0L)).cast(d38))
-          .cast(d38).as("sum_r2_pos"))
-      .select(col("__g").as(groupCol), col("n_pos"), col("n_neg"),
-        col("sum_r2_pos"),
-        (col("sum_r2_pos") - nPosD * (nPosD + lit(1L).cast(d38)))
-          .cast(d38).as("auc_num"),
-        (lit(2L).cast(d38) * nPosD * col("n_neg").cast(d38))
-          .cast(d38).as("auc_den"))
-  }
-
-  /** Per-slice [[confusionStats]]: the shipped gate's tp/fp/tn/fn and
-    * floor-ppm precision/recall/F1/accuracy PER GROUP — the form a
-    * per-language quality gate is actually monitored in. Same exact
-    * counts and honest-NULL degenerate denominators; null groups
-    * excluded. One group-keyed aggregation with map-side partials.
-    */
-  def confusionStatsByGroup(df: DataFrame, predCol: String,
-                            labelCol: String, groupCol: String): DataFrame = {
-    val p = col(predCol).cast("boolean")
-    val y = col(labelCol).cast("boolean")
-    val both = p.isNotNull && y.isNotNull
-    df.where(col(groupCol).isNotNull)
-      .groupBy(col(groupCol))
-      .agg(
-        sum(when(both && p && y, 1L).otherwise(0L)).as("tp"),
-        sum(when(both && p && !y, 1L).otherwise(0L)).as("fp"),
-        sum(when(both && !p && !y, 1L).otherwise(0L)).as("tn"),
-        sum(when(both && !p && y, 1L).otherwise(0L)).as("fn"),
-        sum(when(both, 0L).otherwise(1L)).as("n_excluded"))
-      .select(col(groupCol), col("tp"), col("fp"), col("tn"), col("fn"),
-        col("n_excluded"),
-        expr(ppmSql("tp", "tp + fp")).as("precision_ppm"),
-        expr(ppmSql("tp", "tp + fn")).as("recall_ppm"),
-        expr(ppmSql("2L * tp", "2L * tp + fp + fn")).as("f1_ppm"),
-        expr(ppmSql("tp + tn", "tp + fp + tn + fn")).as("accuracy_ppm"))
-  }
-
-  /** Per-slice [[reliabilityDiagram]]: the calibration table PER GROUP
-    * — "a 0.7 means 70%" must hold per language, not just on the
-    * corpus average. Same double-space clamp, exact floor-ppm rates
-    * and decimal-summed means; every (group, bin) cell of the grid is
-    * emitted for groups with ≥1 eligible row (a group whose rows are
-    * all excluded has nothing to calibrate). Null groups excluded.
-    * Scale: one (group, bin)-keyed aggregation; the grid is the
-    * aggregated table's distinct groups × nBins — metadata-sized.
-    */
-  def reliabilityDiagramByGroup(df: DataFrame, scoreCol: String,
-                                labelCol: String, groupCol: String,
-                                nBins: Int, lo: Double,
-                                hi: Double): DataFrame = {
-    require(nBins >= 1, s"need at least one bin: $nBins")
-    require(lo < hi, s"need lo < hi: ($lo, $hi)")
-    val w = (hi - lo) / nBins
-    val dec = org.apache.spark.sql.types.DecimalType(28, 9)
-    val binned = df.select(col(groupCol).as("__g"),
-        col(scoreCol).cast("double").as("__s"),
-        col(labelCol).cast("boolean").as("__y"))
-      .where(col("__g").isNotNull && col("__s").isNotNull &&
-        !isnan(col("__s")) && abs(col("__s")) < lit(1e19) &&
-        col("__y").isNotNull)
-      .select(col("__g"), floor(least(lit((nBins - 1).toDouble),
-        greatest(lit(0.0), (col("__s") - lit(lo)) / lit(w)))).as("bin"),
-        col("__s"), col("__y"))
-      .groupBy(col("__g"), col("bin"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("__y"), 1L).otherwise(0L)).as("n_pos"),
-        sum(col("__s").cast(dec)).as("__ssum"))
-    val spark = df.sparkSession
-    import spark.implicits._
-    val grid = binned.select(col("__g")).distinct()
-      .crossJoin(spark.createDataset(0 until nBins).toDF("b")
-        .select(col("b").cast("long").as("bin")))
-    grid.join(binned, Seq("__g", "bin"), "left")
-      .select(col("__g").as(groupCol), col("bin"),
-        (lit(lo) + col("bin") * lit(w)).as("lo_edge"),
-        coalesce(col("n"), lit(0L)).as("n"),
-        coalesce(col("n_pos"), lit(0L)).as("n_pos"),
-        expr(ppmSql("coalesce(n_pos, 0L)", "n")).as("frac_pos_ppm"),
-        (col("__ssum").cast("double") / col("n").cast("double"))
-          .as("mean_score"))
+          .as("mean_score")): _*)
   }
 
   /** Exact Spearman rank-correlation pieces between two numeric
@@ -1207,26 +1116,46 @@ object Stats {
     * consistently, and joinCardinality set the "nulls never join"
     * convention).
     *
-    * Scale shape: one (a, b)-keyed census with map-side partials, two
-    * marginal aggregations OVER the census (#cells-sized, never the
-    * fact table again), a 1-row total broadcast — the fact table is
-    * scanned once and shuffles only its two-column projection.
+    * Scale shape: the [[cellCensus]] (one (a, b)-keyed count with
+    * map-side partials, two #cells-sized marginal rollups of it) and a
+    * 1-row total broadcast — the fact table is scanned once and
+    * shuffles only its two-column projection.
     */
   def contingency(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val cells = df.where(col(aCol).isNotNull && col(bCol).isNotNull)
-      .groupBy(col(aCol), col(bCol)).agg(count(lit(1)).as("n_ab"))
-    val ra = cells.groupBy(col(aCol)).agg(sum(col("n_ab")).as("n_a"))
-    val cb = cells.groupBy(col(bCol)).agg(sum(col("n_ab")).as("n_b"))
-    val tot = cells.agg(sum(col("n_ab")).as("n_total"))
-    cells.join(ra, Seq(aCol)).join(cb, Seq(bCol))
+    val (cells, ra, cb, tot) = cellCensus(df, aCol, bCol)
+    cells.join(ra, Seq("__a")).join(cb, Seq("__b"))
       .crossJoin(broadcast(tot))
-      .select(col(aCol), col(bCol), col("n_ab"),
-        col("n_a").cast("long").as("n_a"),
-        col("n_b").cast("long").as("n_b"),
-        col("n_total").cast("long").as("n_total"),
-        abs(col("n_ab").cast(d38) * col("n_total").cast(d38) -
-          col("n_a").cast(d38) * col("n_b").cast(d38)).cast(d38).as("dep"))
+      .select(col("__a").as(aCol), col("__b").as(bCol), col("__o").as("n_ab"),
+        col("__ra").cast("long").as("n_a"),
+        col("__cb").cast("long").as("n_b"),
+        col("__n").cast("long").as("n_total"),
+        abs(col("__o").cast(d38) * col("__n").cast(d38) -
+          col("__ra").cast(d38) * col("__cb").cast(d38)).cast(d38).as("dep"))
+  }
+
+  /** The categorical census [[contingency]], [[cramersV]] and
+    * [[categoricalMI]] share, as `(cells, rows, columns, total)`: the
+    * (`__a`, `__b`)-keyed cell counts `__o` over the rows where both
+    * columns are non-null (map-side combined — the fact table is
+    * scanned once and shuffles only its two-column projection), the
+    * row and column marginals (`__a`, `__ra`, `__b1`) and (`__b`,
+    * `__cb`, `__a1`) rolled up from the CELL table, never the fact
+    * table again, and the 1-row total `__n`. `__b1`/`__a1` name each
+    * marginal row's first cell, so a pass over the cells can count the
+    * marginal rows without a distinct aggregate.
+    */
+  private def cellCensus(df: DataFrame, aCol: String, bCol: String)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val cells = df.select(col(aCol).as("__a"), col(bCol).as("__b"))
+      .where(col("__a").isNotNull && col("__b").isNotNull)
+      .groupBy(col("__a"), col("__b")).agg(count(lit(1)).as("__o"))
+    (cells,
+      cells.groupBy(col("__a"))
+        .agg(sum(col("__o")).as("__ra"), min(col("__b")).as("__b1")),
+      cells.groupBy(col("__b"))
+        .agg(sum(col("__o")).as("__cb"), min(col("__a")).as("__a1")),
+      cells.agg(sum(col("__o")).as("__n")))
   }
 
   /** Equal-frequency bucketing (quantile discretization): each row gets
@@ -1293,12 +1222,8 @@ object Stats {
     require(nBuckets >= 2, s"nBuckets must be >= 2: $nBuckets")
     val v = col(valueCol).cast("double")
     val eligible = col(valueCol).isNotNull && !isnan(v)
-    val vals = df.where(eligible)
-      .select(col(groupCol).as("__g"), v.as("__x"))
-    val w = Window.partitionBy(col("__g")).orderBy(col("__x").asc)
-    val ranked = vals
-      .withColumn("__rn", row_number().over(w))
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy(col("__g"))))
+    val ranked = rankWithin(df.where(eligible)
+      .select(col(groupCol).as("__g"), v.as("__x")), "__g", "__x")
     // 1-based cut ranks, deduped per group (n < nBuckets collapses
     // neighbouring ranks — fewer, not duplicated, cuts)
     val rankSet = array_distinct(array((1 until nBuckets).map(i =>
@@ -1315,21 +1240,28 @@ object Stats {
       .drop("__g", "__cuts")
   }
 
+  /** `in` + `__rn`, the 1-based position of `v` in ascending order
+    * within its `g` group, and `__n`, the group's row count — the one
+    * group-keyed window pass (values sort within their group's
+    * partitions, never globally) behind every per-group order
+    * statistic here. Ties among equal values may take either position,
+    * but the VALUE at a position is deterministic whatever the tie
+    * order.
+    */
+  private def rankWithin(in: DataFrame, g: String, v: String): DataFrame =
+    in.withColumn("__rn", row_number().over(
+        Window.partitionBy(col(g)).orderBy(col(v))))
+      .withColumn("__n", count(lit(1)).over(Window.partitionBy(col(g))))
+
   /** Per-group lower-median (element at sorted position `(n+1) div 2`)
     * — the exact order statistic [[madOutliers]] and [[imputeByGroup]]
-    * share: one group-keyed window pass reduced to a #groups-sized
-    * table. Ties among equal values leave the selected VALUE
-    * deterministic whatever the tie order.
+    * share: one [[rankWithin]] pass reduced to a #groups-sized table.
     */
   private def lowerMedianBy(in: DataFrame, g: String, v: String,
-                            out: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-    in.withColumn("__rn", row_number().over(
-        w.partitionBy(col(g)).orderBy(col(v))))
-      .withColumn("__n", count(lit(1)).over(w.partitionBy(col(g))))
+                            out: String): DataFrame =
+    rankWithin(in, g, v)
       .where(col("__rn") === expr("(__n + 1) div 2"))
       .select(col(g), col(v).as(out))
-  }
 
   /** Per-group null/NaN imputation — fill each ineligible value with
     * its group's exact statistic: `median` (lower-median order
@@ -1435,12 +1367,8 @@ object Stats {
     require(pLow >= 0.0 && pHigh <= 1.0 && pLow < pHigh,
       s"need 0 <= pLow < pHigh <= 1: ($pLow, $pHigh)")
     val v = col(valueCol).cast("double")
-    val vals = df.select(col(groupCol).as("__g"), v.as("__x"))
-      .where(col("__x").isNotNull && !isnan(col("__x")))
-    val w = Window.partitionBy(col("__g")).orderBy(col("__x").asc)
-    val ranked = vals
-      .withColumn("__rn", row_number().over(w))
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy(col("__g"))))
+    val ranked = rankWithin(df.select(col(groupCol).as("__g"), v.as("__x"))
+      .where(col("__x").isNotNull && !isnan(col("__x"))), "__g", "__x")
     def rank1(p: Double): Column =
       least(col("__n"), greatest(lit(1L), ceil(lit(p) * col("__n")).cast("long")))
     val cuts = ranked
@@ -1474,95 +1402,59 @@ object Stats {
     * with zero counts — a bin present in A and absent in B is exactly
     * the signal.
     *
-    * Scale shape: two map-side-combined aggregations whose exchanges
-    * carry ≤ nBins rows per partition, one nBins-sized outer join —
+    * `groupCols` detects the shift PER GROUP (language, source, domain
+    * bucket): drift is per-slice in practice, and a global histogram
+    * can read flat while one language's distribution walks away. The
+    * group columns lead, the totals are each GROUP's own, null groups
+    * are excluded, and the grid is (groups observed on either side) ×
+    * (all bins); `Nil` emits the full bin grid, even over empty inputs.
+    * The streaming dual is [[graft.streaming.MicroBatch.streamingDrift]]
+    * with side A frozen.
+    *
+    * Scale shape: two (group, bin)-keyed aggregations with map-side
+    * partials (exchanges carry ≤ groups·nBins rows), one grid join and
+    * a groups-sized totals join (globally, a broadcast 1-row total) —
     * corpus size never shuffles.
     */
   def histogramDrift(a: DataFrame, b: DataFrame, valueCol: String,
-                     nBins: Int, lo: Double, hi: Double): DataFrame = {
+                     nBins: Int, lo: Double, hi: Double,
+                     groupCols: Seq[String] = Nil): DataFrame = {
     require(nBins >= 1, s"need at least one bin: $nBins")
     require(lo < hi, s"need lo < hi: ($lo, $hi)")
     val w = (hi - lo) / nBins
+    val gs = groupCols.map(col)
     def binned(df: DataFrame, out: String): DataFrame =
-      df.select(col(valueCol).cast("double").as("__x"))
+      keyed(df, groupCols)
+        .select(gs :+ col(valueCol).cast("double").as("__x"): _*)
         .where(col("__x").isNotNull && !isnan(col("__x")))
-        .select(least(lit(nBins - 1), greatest(lit(0),
-          floor((col("__x") - lit(lo)) / lit(w)).cast("int"))).as("bin"))
-        .groupBy("bin").agg(count(lit(1)).as(out))
-    val spark = a.sparkSession
-    import spark.implicits._
-    val grid = spark.createDataset(0 until nBins).toDF("bin")
-    val joined = grid
-      .join(binned(a, "n_a"), Seq("bin"), "left")
-      .join(binned(b, "n_b"), Seq("bin"), "left")
-      .select(col("bin"), coalesce(col("n_a"), lit(0L)).as("n_a"),
-        coalesce(col("n_b"), lit(0L)).as("n_b"))
-    val totals = joined.agg(sum(col("n_a")).as("n_a_tot"),
-      sum(col("n_b")).as("n_b_tot"))
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    joined.crossJoin(broadcast(totals))
-      .select(col("bin"), (lit(lo) + col("bin") * lit(w)).as("lo_edge"),
-        col("n_a"), col("n_b"),
-        abs(col("n_a").cast(dec) * col("n_b_tot") -
-          col("n_b").cast(dec) * col("n_a_tot")).as("l1_num"),
-        col("n_a_tot"), col("n_b_tot"))
-  }
-
-  /** Per-slice [[histogramDrift]] — corpus-shift detection per group
-    * (language, source, domain bucket): drift is per-slice in practice
-    * exactly like gate confusion is, and a global histogram can read
-    * flat while one language's distribution walks away. Same fixed
-    * reference binning, exact integer counts, and the |p_a − p_b|
-    * numerator `|n_a·n_b_tot − n_b·n_a_tot|` in DECIMAL over each
-    * GROUP's own totals. The grid is (observed groups) × (all bins) —
-    * a group present in either side emits its full bin range, empty
-    * bins at zero (a bin draining to zero in B is the signal); null
-    * groups are excluded (the by-group family's IS NOT NULL contract).
-    *
-    * Scale shape: two (group, bin)-keyed aggregations with map-side
-    * partials (exchanges carry ≤ groups·nBins rows), a groups-sized
-    * distinct, one groups×nBins grid join and a groups-sized totals
-    * join — corpus size never shuffles. The streaming dual is
-    * [[graft.streaming.MicroBatch.streamingDrift]] with side A frozen.
-    */
-  def histogramDriftByGroup(a: DataFrame, b: DataFrame, valueCol: String,
-                            groupCol: String, nBins: Int,
-                            lo: Double, hi: Double): DataFrame = {
-    require(nBins >= 1, s"need at least one bin: $nBins")
-    require(lo < hi, s"need lo < hi: ($lo, $hi)")
-    val w = (hi - lo) / nBins
-    def binned(df: DataFrame, out: String): DataFrame =
-      df.select(col(groupCol).as("__g"),
-          col(valueCol).cast("double").as("__x"))
-        .where(col("__g").isNotNull &&
-          col("__x").isNotNull && !isnan(col("__x")))
-        .select(col("__g"), least(lit(nBins - 1), greatest(lit(0),
-          floor((col("__x") - lit(lo)) / lit(w)).cast("int"))).as("bin"))
-        .groupBy(col("__g"), col("bin")).agg(count(lit(1)).as(out))
+        .select(gs :+ least(lit(nBins - 1), greatest(lit(0),
+          floor((col("__x") - lit(lo)) / lit(w)).cast("int"))).as("bin"): _*)
+        .groupBy(gs :+ col("bin"): _*).agg(count(lit(1)).as(out))
     val spark = a.sparkSession
     import spark.implicits._
     val ga = binned(a, "n_a")
     val gb = binned(b, "n_b")
-    val groups = ga.select(col("__g"))
-      .unionByName(gb.select(col("__g"))).distinct()
-    val grid = groups
-      .crossJoin(spark.createDataset(0 until nBins).toDF("bin"))
+    val bins = spark.createDataset(0 until nBins).toDF("bin")
+    // GROUP BY () has its one group even over no rows: the full grid
+    val grid = if (groupCols.isEmpty) bins
+      else ga.select(gs: _*).unionByName(gb.select(gs: _*)).distinct()
+        .crossJoin(bins)
     val joined = grid
-      .join(ga, Seq("__g", "bin"), "left")
-      .join(gb, Seq("__g", "bin"), "left")
-      .select(col("__g"), col("bin"),
-        coalesce(col("n_a"), lit(0L)).as("n_a"),
-        coalesce(col("n_b"), lit(0L)).as("n_b"))
-    val totals = joined.groupBy(col("__g"))
-      .agg(sum(col("n_a")).as("n_a_tot"), sum(col("n_b")).as("n_b_tot"))
+      .join(ga, groupCols :+ "bin", "left")
+      .join(gb, groupCols :+ "bin", "left")
+      .select(gs ++ Seq(col("bin"), coalesce(col("n_a"), lit(0L)).as("n_a"),
+        coalesce(col("n_b"), lit(0L)).as("n_b")): _*)
+    val totals = joined.groupBy(gs: _*).agg(sum(col("n_a")).as("n_a_tot"),
+      sum(col("n_b")).as("n_b_tot"))
+    val withTotals = if (groupCols.isEmpty) joined.crossJoin(broadcast(totals))
+      else joined.join(totals, groupCols)
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    joined.join(totals, Seq("__g"))
-      .select(col("__g").as(groupCol), col("bin"),
-        (lit(lo) + col("bin") * lit(w)).as("lo_edge"),
+    withTotals
+      .select(gs ++ Seq(col("bin"), (lit(lo) + col("bin") * lit(w)).as("lo_edge"),
         col("n_a"), col("n_b"),
         abs(col("n_a").cast(dec) * col("n_b_tot") -
           col("n_b").cast(dec) * col("n_a_tot")).as("l1_num"),
-        col("n_a_tot"), col("n_b_tot"))
+        col("n_a_tot"), col("n_b_tot")): _*)
   }
 
   /** Winsorization: clamp a numeric column to its [pLow, pHigh]
@@ -1785,7 +1677,8 @@ object Stats {
     * decomposition with two cumsums). Exactness bound: the cross
     * products stay in LONG, exact while n_a·n_b < 2⁶³ (and the double
     * D is one division of integers — correctly rounded anywhere).
-    * Groups with zero rows yield a null D (0/0), not a crash.
+    * A group with zero rows yields a null D (0/0), not a crash; with
+    * no eligible row in either group there is no row at all.
     *
     * @return one row: (n_a, n_b, d_num, d_den, d)
     */
@@ -1800,12 +1693,7 @@ object Stats {
     val vals = base.groupBy(col("__v"))
       .agg(sum(when(col("__g") === groupA, 1L).otherwise(0L)).as("__ca"),
         sum(when(col("__g") === groupB, 1L).otherwise(0L)).as("__cb"))
-    val (_, byRank) = valueAtFractionRanks(base, "__v",
-      m => (1 until buckets).map(i => i * m / buckets))
-    val cuts = byRank.keys.toSeq.sorted.map(byRank)
-    val bk = if (cuts.isEmpty) lit(0)
-      else size(filter(array(cuts.map(lit(_)): _*), c => c <= col("__v")))
-    val bv = vals.withColumn("__bk", bk)
+    val bv = vals.withColumn("__bk", orderStatBucket(base, "__v", buckets))
     def cum(c: String) = sum(col(c)).over(w.partitionBy(col("__bk"))
       .orderBy(col("__v")).rowsBetween(w.unboundedPreceding, 0))
     def off(c: String) = coalesce(sum(col(c)).over(
@@ -1844,20 +1732,15 @@ object Stats {
     * name its cell can't associate). 1×k tables have min(r−1,c−1) = 0:
     * V reads NULL by the nullif convention.
     *
-    * Scale shape: one cell-keyed count (map-side combined), two
-    * marginal rollups of the CELL table broadcast back, a scalar
-    * close. Nothing corpus-sized shuffles twice.
+    * Scale shape: the [[cellCensus]], its two marginal rollups
+    * broadcast back, a scalar close that also counts r and c. Nothing
+    * corpus-sized shuffles twice.
     *
-    * @return one row: (n, r, c, chi2, cramers_v)
+    * @return one row: (n, r, c, chi2, cramers_v); no row when no input
+    *         row names both categories
     */
   def cramersV(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val cells = df.select(col(aCol).as("__a"), col(bCol).as("__b"))
-      .where(col("__a").isNotNull && col("__b").isNotNull)
-      .groupBy(col("__a"), col("__b")).agg(count(lit(1)).as("__o"))
-    val ra = cells.groupBy(col("__a")).agg(sum(col("__o")).as("__ra"))
-    val cb = cells.groupBy(col("__b")).agg(sum(col("__o")).as("__cb"))
-    val tot = cells.agg(sum(col("__o")).as("__n"),
-      countDistinct(col("__a")).as("r"), countDistinct(col("__b")).as("c"))
+    val (cells, ra, cb, tot) = cellCensus(df, aCol, bCol)
     val e = (col("__ra").cast("double") * col("__cb").cast("double")) /
       col("__n").cast("double")
     val term = ((col("__o").cast("double") - e) *
@@ -1865,9 +1748,13 @@ object Stats {
     val chi2 = cells
       .join(broadcast(ra), Seq("__a")).join(broadcast(cb), Seq("__b"))
       .crossJoin(broadcast(tot))
-      .groupBy(col("__n"), col("r"), col("c"))
+      .groupBy(col("__n"))
       .agg(sum(term.cast(org.apache.spark.sql.types.DecimalType(30, 15)))
-        .cast("double").as("__t"))
+          .cast("double").as("__t"),
+        // r and c are the marginal tables' row counts, each row counted
+        // at its first cell — no distinct aggregate, so no Expand
+        count(when(col("__b") === col("__b1"), 1)).as("r"),
+        count(when(col("__a") === col("__a1"), 1)).as("c"))
       .select(col("__n").as("n"), col("r"), col("c"),
         (col("__t") + col("__n").cast("double")).as("__chi2"))
     chi2.select(col("n"), col("r"), col("c"),
@@ -1896,16 +1783,12 @@ object Stats {
     * Scale shape = [[cramersV]]: cell-keyed count, marginal rollups of
     * the cell table, scalar close.
     *
-    * @return one row: (n, mi, h_a, h_b, nmi)
+    * @return one row: (n, mi, h_a, h_b, nmi); no row when no input row
+    *         names both categories
     */
   def categoricalMI(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val d3015 = org.apache.spark.sql.types.DecimalType(30, 15)
-    val cells = df.select(col(aCol).as("__a"), col(bCol).as("__b"))
-      .where(col("__a").isNotNull && col("__b").isNotNull)
-      .groupBy(col("__a"), col("__b")).agg(count(lit(1)).as("__o"))
-    val ra = cells.groupBy(col("__a")).agg(sum(col("__o")).as("__ra"))
-    val cb = cells.groupBy(col("__b")).agg(sum(col("__o")).as("__cb"))
-    val tot = cells.agg(sum(col("__o")).as("__n"))
+    val (cells, ra, cb, tot) = cellCensus(df, aCol, bCol)
     val miTerm = col("__o").cast("double") *
       (log(col("__o").cast("double") * col("__n").cast("double")) -
         log(col("__ra").cast("double") * col("__cb").cast("double")))

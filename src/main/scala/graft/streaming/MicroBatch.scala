@@ -560,7 +560,7 @@ object MicroBatch {
     else Some(n * 1000000L / d)
 
   /** Streaming confusion report — the incremental dual of
-    * [[graft.functions.Stats.confusionStatsByGroup]]: rows
+    * the grouped [[graft.functions.Stats.confusionStats]]: rows
     * `(group, pred, label)` keep 5 long counters per group
     * (tp/fp/tn/fn/n_excluded — a None on either side counts excluded,
     * the batch null contract), and every trigger emits the group's
@@ -614,7 +614,7 @@ object MicroBatch {
   }
 
   /** Streaming calibration table — the incremental dual of
-    * [[graft.functions.Stats.reliabilityDiagramByGroup]]: rows
+    * the grouped [[graft.functions.Stats.reliabilityDiagram]]: rows
     * `(group, score, label)` gate exactly like the batch op
     * (NaN and |s| ≥ 10¹⁹ excluded), clamp-bin in DOUBLE space with the
     * same formula, and key by `(group, bin)`. State per cell =
@@ -671,7 +671,7 @@ object MicroBatch {
   }
 
   /** Streaming BINNED ROC-AUC — the incremental companion to
-    * [[graft.functions.Stats.aucPiecesByGroup]]. Exact streaming AUC
+    * the grouped [[graft.functions.Stats.aucPieces]]. Exact streaming AUC
     * needs every score ever seen (a rank is global); this keeps the
     * state bounded instead by quantizing scores into `nBins` clamp-bins
     * (the [[streamingReliability]] formula) and holding per-group
@@ -681,7 +681,7 @@ object MicroBatch {
     * the doubled average rank `2·below_b + n_b + 1` (ties within a bin
     * contribute exactly ½ — not an approximation OF the binned scores,
     * the exact value for them), so the emitted row after any prefix of
-    * batches is value-identical to batch `aucPiecesByGroup` run on the
+    * batches is value-identical to batch grouped `aucPieces` run on the
     * same rows with the bin INDEX as the score (spec-pinned).
     *
     * THE HONEST CAVEAT: binning is the approximation. AUC of binned

@@ -37,29 +37,74 @@ class PlanSpec extends SparkSpec {
     assert(spliced.isEmpty, s"oracles with a spliced null: ${spliced.toSeq.sorted}")
   }
 
+  // plan nodes named `name` (whole-stage-codegen ids stripped)
+  private def nodes(p: String, name: String): Int = p.linesIterator.count { l =>
+    val node = l.dropWhile(" :+-".contains(_)).replaceFirst("^\\*\\(\\d+\\) ", "")
+    node == name || node.startsWith(name + " ") || node.startsWith(name + "(")
+  }
+
+  private def assertJoinCounts(pins: Seq[(String, (Int, Int, Int))]): Unit =
+    pins.foreach { case (q, want) =>
+      val p = plan(q)
+      val got = (nodes(p, "Exchange"), nodes(p, "BroadcastHashJoin"),
+        nodes(p, "SortMergeJoin"))
+      assert(got == want, s"$q (Exchange, BroadcastHashJoin, SortMergeJoin):\n$p")
+    }
+
   // Shuffle and join counts of the n-gram LM scorers and the TF-IDF
   // index build/append/probe plans at sf0.001: a change that adds an
   // Exchange or turns a broadcast into a sort-merge join fails here by
   // query name, without a plan text dump to diff.
   test("n-gram LM and TF-IDF index plans: pinned Exchange / BroadcastHashJoin / SortMergeJoin counts") {
-    def nodes(p: String, name: String): Int = p.linesIterator.count { l =>
-      val node = l.dropWhile(" :+-".contains(_)).replaceFirst("^\\*\\(\\d+\\) ", "")
-      node == name || node.startsWith(name + " ")
-    }
-    Seq(
+    assertJoinCounts(Seq(
       "x_bigram_nll" -> ((8, 4, 0)),
       "x_jm_nll" -> ((8, 4, 0)),
       "x_trigram_nll" -> ((10, 6, 0)),
       "x_kn_nll" -> ((23, 8, 0)),
       "x_mkn_nll" -> ((36, 7, 1)),
       "x_tfidf_probe" -> ((21, 6, 1)),
-      "x_tfidf_append" -> ((6, 4, 0))
-    ).foreach { case (q, want) =>
+      "x_tfidf_append" -> ((6, 4, 0))))
+  }
+
+  // The Stats family's shuffle and join counts at sf0.001, global and
+  // grouped forms side by side: the rank, census and grid scaffolds
+  // each show up here when they gain an Exchange or lose a broadcast.
+  test("Stats family plans: pinned Exchange / BroadcastHashJoin / SortMergeJoin counts") {
+    assertJoinCounts(Seq(
+      "x_auc" -> ((6, 2, 0)),
+      "x_auc_by_group" -> ((7, 2, 0)),
+      "x_confusion" -> ((1, 0, 0)),
+      "x_confusion_by_group" -> ((2, 0, 0)),
+      "x_reliability" -> ((2, 1, 0)),
+      "x_reliability_by_group" -> ((3, 1, 0)),
+      "x_drift" -> ((6, 4, 0)),
+      "x_drift_by_group" -> ((11, 5, 0)),
+      "x_spearman" -> ((11, 4, 0)),
+      "x_ks_test" -> ((8, 1, 0)),
+      "x_contingency" -> ((8, 2, 0)),
+      "x_mutual_info" -> ((18, 4, 0))))
+    // the rankings and the KS cumsums run per order-statistic bucket:
+    // no global sort
+    Seq("x_auc", "x_spearman", "x_ks_test").foreach { q =>
       val p = plan(q)
-      val got = (nodes(p, "Exchange"), nodes(p, "BroadcastHashJoin"),
-        nodes(p, "SortMergeJoin"))
-      assert(got == want, s"$q (Exchange, BroadcastHashJoin, SortMergeJoin):\n$p")
+      assert(!p.contains("rangepartitioning"), s"$q sorts globally:\n$p")
     }
+  }
+
+  // approx_percentile merges sketches, not values: a partial aggregate
+  // per task, one SinglePartition exchange of the sketch buffers, and
+  // the final merge
+  test("x_approx_quantile: one ObjectHashAggregate pair around one SinglePartition exchange") {
+    val p = plan("x_approx_quantile")
+    assert(nodes(p, "ObjectHashAggregate") == 2, p)
+    assert(nodes(p, "Exchange") == 1 && "Exchange SinglePartition".r.findAllIn(p).size == 1, p)
+  }
+
+  // r and c count the marginal tables' rows: a distinct aggregate would
+  // plan an Expand whose column order changes between runs
+  test("x_cramers_v: no Expand, so the plan text is the same on every run") {
+    val p = plan("x_cramers_v")
+    assert(nodes(p, "Expand") == 0, p)
   }
 
   test("t3_filter: predicate pushdown and column pruning reach the scan") {

@@ -1006,4 +1006,91 @@ class CurationPropertySpec extends SparkSpec {
     assert(pca.length == 128 &&
       pca.forall(r => r.getDouble(2) == 0.0 && r.getDouble(3) == 0.0))
   }
+
+  // --- Stats family: same answer however the documents arrive ----------
+  // Every count, rank and cut is exact and every sum accumulates in
+  // DECIMAL, so no partitioning or upstream shape may move a bit. Each
+  // op derives its inputs from the shaped documents.
+  private lazy val statDocs = spark.read.parquet(s"${sf()}/documents.parquet")
+    .select("doc_id", "lang", "source", "n_chars")
+
+  private def scored(d: DataFrame): DataFrame =
+    d.select(col("lang"), col("n_chars").cast("double").as("score"),
+      (pmod(col("doc_id"), lit(2)) === 0).as("label"),
+      (col("n_chars") >= 200).as("pred"),
+      (pmod(col("n_chars"), lit(100)).cast("double") / lit(100.0)).as("p"))
+
+  private val statsOps: Seq[(String, (DataFrame => DataFrame) => DataFrame)] = {
+    val lang = Seq("lang")
+    def auc(g: Seq[String]): (DataFrame => DataFrame) => DataFrame =
+      f => Stats.aucPieces(scored(f(statDocs)), "score", "label", g)
+    def conf(g: Seq[String]): (DataFrame => DataFrame) => DataFrame =
+      f => Stats.confusionStats(scored(f(statDocs)), "pred", "label", g)
+    def rel(g: Seq[String]): (DataFrame => DataFrame) => DataFrame =
+      f => Stats.reliabilityDiagram(scored(f(statDocs)), "p", "label", 10, 0.0, 1.0, g)
+    def drift(g: Seq[String]): (DataFrame => DataFrame) => DataFrame = { f =>
+      val d = f(statDocs)
+      Stats.histogramDrift(d.where(pmod(col("doc_id"), lit(3)) =!= 0),
+        d.where(pmod(col("doc_id"), lit(2)) === 0), "n_chars", 12, 0.0, 600.0, g)
+    }
+    // a null in every seventh value, so imputation has holes to fill
+    def holes(d: DataFrame): DataFrame = d.withColumn("v",
+      when(pmod(col("doc_id"), lit(7)) =!= 0, col("n_chars").cast("double")))
+    def raters(d: DataFrame): DataFrame = d.select(col("lang"), col("doc_id"),
+      pmod(col("n_chars"), lit(3)).as("r1"), pmod(col("doc_id"), lit(3)).as("r2"))
+    Seq(
+      "aucPieces" -> auc(Nil), "aucPieces by lang" -> auc(lang),
+      "confusionStats" -> conf(Nil), "confusionStats by lang" -> conf(lang),
+      "reliabilityDiagram" -> rel(Nil), "reliabilityDiagram by lang" -> rel(lang),
+      "histogramDrift" -> drift(Nil), "histogramDrift by lang" -> drift(lang),
+      "spearmanPieces" -> (f => Stats.spearmanPieces(f(statDocs), "doc_id", "n_chars")),
+      "quantileBucket" -> (f => Stats.quantileBucket(f(statDocs), "n_chars", 4)),
+      "quantileBucketByGroup" -> (f =>
+        Stats.quantileBucketByGroup(f(statDocs), "n_chars", "lang", 3)),
+      "winsorize" -> (f => Stats.winsorize(f(statDocs), "n_chars", 0.05, 0.95)),
+      "winsorizeByGroup" -> (f =>
+        Stats.winsorizeByGroup(f(statDocs), "n_chars", "lang", 0.05, 0.95)),
+      "madOutliers" -> (f => Stats.madOutliers(f(statDocs), "n_chars", "lang")),
+      "imputeByGroup median" -> (f => Stats.imputeByGroup(holes(f(statDocs)), "v", "lang")),
+      "imputeByGroup mode" -> (f =>
+        Stats.imputeByGroup(holes(f(statDocs)), "v", "lang", strategy = "mode")),
+      "ksStatistic" -> (f => Stats.ksStatistic(f(statDocs), "n_chars", "lang", "en", "de")),
+      "contingency" -> (f => Stats.contingency(f(statDocs), "lang", "source")),
+      "cramersV" -> (f => Stats.cramersV(f(statDocs), "lang", "source")),
+      "categoricalMI" -> (f => Stats.categoricalMI(f(statDocs), "lang", "source")),
+      "cohenKappaByGroup" -> (f =>
+        Stats.cohenKappaByGroup(raters(f(statDocs)), "lang", "r1", "r2")),
+      // a complete three-rater panel per document
+      "fleissKappaByGroup" -> (f => Stats.fleissKappaByGroup(
+        raters(f(statDocs)).select(col("lang"), col("doc_id"),
+          explode(array(col("r1"), col("r2"), pmod(col("r1") + col("r2"), lit(3))))
+            .as("label")),
+        "lang", "doc_id", "label")))
+  }
+
+  test("Stats family: identical rows over 1 / 7 partitions, a joined+aggregated upstream, empty") {
+    statsOps.foreach { case (name, run) =>
+      val base = rows(run(identity))
+      assert(base.nonEmpty, name)
+      shapes.foreach { case (shape, f) =>
+        assert(rows(run(f)) == base, s"$name over $shape")
+      }
+    }
+    // empty input: GROUP BY () keeps its one row (or its full bin grid),
+    // grouped forms and censuses answer nothing, and the two bisection
+    // ops that need a value fail naming the column
+    val empty: DataFrame => DataFrame = _.where(lit(false))
+    val op = statsOps.toMap
+    val oneRow = Seq("aucPieces", "confusionStats", "spearmanPieces")
+    val grids = Map("reliabilityDiagram" -> 10, "histogramDrift" -> 12)
+    val loud = Seq("quantileBucket", "winsorize")
+    statsOps.map(_._1).filterNot(loud.contains).foreach { name =>
+      val want = if (oneRow.contains(name)) 1 else grids.getOrElse(name, 0)
+      assert(op(name)(empty).count() == want, s"$name over an empty frame")
+    }
+    loud.foreach { name =>
+      val e = intercept[IllegalArgumentException](op(name)(empty))
+      assert(e.getMessage.contains("no non-null values in n_chars"), s"$name: ${e.getMessage}")
+    }
+  }
 }

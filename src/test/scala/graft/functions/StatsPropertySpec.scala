@@ -142,7 +142,7 @@ class StatsPropertySpec extends SparkSpec {
     }
   }
 
-  // --- aucPiecesByGroup ≡ the O(n²) Mann–Whitney pair count -------------
+  // --- grouped aucPieces ≡ the O(n²) Mann–Whitney pair count -------------
   // auc_num doubles the pair statistic: 2·#{score⁺ > score⁻} + #{ties},
   // so a brute-force pair walk is an exact independent oracle. Heavy tie
   // pools, null/NaN rows, one-class and single-row groups included.
@@ -169,7 +169,7 @@ class StatsPropertySpec extends SparkSpec {
         spark.sparkContext.parallelize(rows.map { case (g, s, y) =>
           Row(g, s.map(Double.box).orNull, y.map(Boolean.box).orNull) }, 3),
         schema)
-      val got = Stats.aucPiecesByGroup(df, "s", "y", "g")
+      val got = Stats.aucPieces(df, "s", "y", groupCols = Seq("g"))
         .collect().map(r => r.getString(0) ->
           ((r.getLong(1), r.getLong(2),
             r.getDecimal(4).longValueExact, r.getDecimal(5).longValueExact)))

@@ -226,8 +226,8 @@ class StatsSpec extends SparkSpec {
       ("de", 99.0), (null.asInstanceOf[String], 7.0)).toDF("g", "x")
     val b = Seq(("en", 5.0), ("en", 35.0), ("fr", 12.0),
       (null.asInstanceOf[String], 1.0)).toDF("g", "x")
-    val got = Stats.histogramDriftByGroup(a, b, "x", "g",
-        nBins = 4, lo = 0.0, hi = 40.0)
+    val got = Stats.histogramDrift(a, b, "x",
+        nBins = 4, lo = 0.0, hi = 40.0, groupCols = Seq("g"))
       .collect().map(r => (r.getString(0), r.getInt(1)) ->
         ((r.getDouble(2), r.getLong(3), r.getLong(4),
           r.getDecimal(5).longValueExact(), r.getLong(6), r.getLong(7))))
@@ -819,12 +819,12 @@ class StatsSpec extends SparkSpec {
       schema)
     val key = (r: Row) => r.getString(0)
 
-    val aucG = Stats.aucPiecesByGroup(df, "s", "y", "g")
+    val aucG = Stats.aucPieces(df, "s", "y", groupCols = Seq("g"))
       .collect().map(r => key(r) -> r.toSeq.tail).toMap
-    val confG = Stats.confusionStatsByGroup(df, "pred", "y", "g")
+    val confG = Stats.confusionStats(df, "pred", "y", groupCols = Seq("g"))
       .collect().map(r => key(r) -> r.toSeq.tail).toMap
-    val relG = Stats.reliabilityDiagramByGroup(df, "s", "y", "g",
-        nBins = 4, lo = 0.0, hi = 1.0)
+    val relG = Stats.reliabilityDiagram(df, "s", "y",
+        nBins = 4, lo = 0.0, hi = 1.0, groupCols = Seq("g"))
       .collect().groupBy(key).map { case (g, rs) =>
         g -> rs.sortBy(_.getLong(1)).map(_.toSeq.tail).toSeq }
     assert(aucG.keySet == Set("a", "b", "c"))

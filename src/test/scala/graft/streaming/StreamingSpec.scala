@@ -295,8 +295,9 @@ class StreamingSpec extends SparkSpec {
       .map { case (g, vs) =>
         g -> vs.maxBy(v => v._2 + v._3 + v._4 + v._5 + v._6) }
     q.stop()
-    val batch = graft.functions.Stats.confusionStatsByGroup(
-        spark.createDataset(rows).toDF("g", "pred", "y"), "pred", "y", "g")
+    val batch = graft.functions.Stats.confusionStats(
+        spark.createDataset(rows).toDF("g", "pred", "y"), "pred", "y",
+        groupCols = Seq("g"))
       .collect().map(r => r.getString(0) ->
         ((r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
           r.getLong(4), r.getLong(5), opt(r, 6), opt(r, 7), opt(r, 8),
@@ -324,9 +325,9 @@ class StreamingSpec extends SparkSpec {
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5))))
       .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).maxBy(_._1) }
     q.stop()
-    val batch = graft.functions.Stats.reliabilityDiagramByGroup(
-        spark.createDataset(rows).toDF("g", "s", "y"), "s", "y", "g",
-        nBins = 10, lo = 0.0, hi = 1.0)
+    val batch = graft.functions.Stats.reliabilityDiagram(
+        spark.createDataset(rows).toDF("g", "s", "y"), "s", "y",
+        nBins = 10, lo = 0.0, hi = 1.0, groupCols = Seq("g"))
       .where(col("n") > 0) // the stream has no empty-grid rows by design
       .collect().map(r => ((r.getString(0), r.getLong(1)),
         (r.getLong(3), r.getLong(4), r.getLong(5), r.getDouble(6)))).toMap
@@ -367,8 +368,9 @@ class StreamingSpec extends SparkSpec {
         .map { case (g, vs) =>
           g -> vs.maxBy(v => v._2 + v._3 + v._4 + v._5 + v._6) }
       q.stop()
-      val batch = graft.functions.Stats.confusionStatsByGroup(
-          spark.createDataset(rows).toDF("g", "pred", "y"), "pred", "y", "g")
+      val batch = graft.functions.Stats.confusionStats(
+          spark.createDataset(rows).toDF("g", "pred", "y"), "pred", "y",
+          groupCols = Seq("g"))
         .collect().map(r => r.getString(0) ->
           ((r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
             r.getLong(4), r.getLong(5), opt(r, 6), opt(r, 7), opt(r, 8),
@@ -378,7 +380,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   // VERDICT r12 item 5: after ANY prefix of batches the latest emitted
-  // pieces per group must equal batch aucPiecesByGroup over the same
+  // pieces per group must equal batch grouped aucPieces over the same
   // rows with the bin INDEX as the score — the binned distribution's
   // Mann–Whitney statistics are exact by construction (ties-within-bin
   // = the standard ½ convention), the binning itself is the documented
@@ -413,11 +415,11 @@ class StreamingSpec extends SparkSpec {
           r.getDecimal(5).longValueExact))
         .groupBy(_._1)
         .map { case (g, vs) => g -> vs.maxBy(v => v._2 + v._3) }
-      val batch = graft.functions.Stats.aucPiecesByGroup(
+      val batch = graft.functions.Stats.aucPieces(
           spark.createDataset(rows.take(cut))
             .filter(v => !v._2.isNaN)
             .map(v => (v._1, binOf(v._2).toLong, v._3))
-            .toDF("g", "s", "y"), "s", "y", "g")
+            .toDF("g", "s", "y"), "s", "y", groupCols = Seq("g"))
         .collect().map(r => r.getString(0) ->
           ((r.getString(0), r.getLong(1), r.getLong(2),
             r.getDecimal(3).longValueExact, r.getDecimal(4).longValueExact,
